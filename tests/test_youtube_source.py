@@ -30,9 +30,32 @@ def test_playlist_pagination_threads_tokens():
 
 
 def test_playlist_partition_per_playlist():
+    # without a slot count, one partition per playlist
     reader = YouTubeReader({"table": "playlist_items", "playlist_ids": "P1,P2,P3"})
     parts = reader.partitions()
-    assert [p.payload for p in parts] == ["P1", "P2", "P3"]
+    assert [p.payload for p in parts] == [["P1"], ["P2"], ["P3"]]
+
+
+def test_playlists_pack_to_slots():
+    pids = [f"P{i}" for i in range(12)]
+    reader = YouTubeReader({"table": "playlist_items", "playlist_ids": ",".join(pids),
+                            "slots": "4", "videos_per_playlist": "120"})
+    parts = reader.partitions()
+    assert len(parts) == 4
+    assert sorted(p for part in parts for p in part.payload) == sorted(pids)
+    for part in parts:
+        pages: dict[str, list[int]] = {}
+        for pid, _, page in reader.read(part):
+            pages.setdefault(pid, []).append(page)
+        assert set(pages) == set(part.payload)
+        for seen in pages.values():
+            assert seen == sorted(seen) and set(seen) == {0, 1, 2}
+    # more slots than playlists: one partition each; none: one empty one
+    wide = YouTubeReader({"table": "playlist_items", "playlist_ids": "P1,P2", "slots": "8"})
+    assert [p.payload for p in wide.partitions()] == [["P1"], ["P2"]]
+    empty = YouTubeReader({"table": "playlist_items", "playlist_ids": "", "slots": "4"})
+    [part] = empty.partitions()
+    assert list(empty.read(part)) == []
 
 
 def test_video_chunking_50():
@@ -179,6 +202,42 @@ def test_full_etl_incremental_semantics(spark, tmp_path):
 
     # channel dimension rebuilt (overwrite) on both branches
     assert spark.read.parquet(f"{wh}/channel_stats").count() == 3
+
+
+def test_etl_counts_candidates_after_distinct(spark, tmp_path):
+    """A channel listed twice is fetched twice, so its playlist is scanned
+    twice; the candidate count is observed after distinct()."""
+    wh = str(tmp_path / "warehouse")
+    c = run_etl(spark, ["UC0", "UC0"], wh)
+    assert c["channels"] == 2
+    assert c["candidate_ids"] == c["new_videos"] == c["loaded"] == 120
+    sink = spark.read.parquet(f"{wh}/video_stats")
+    assert sink.count() == sink.select("videoId").distinct().count() == 120
+
+
+def _etl_jobs(spark, group: str, *args) -> tuple[dict[str, int], int]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_etl job-count pin")
+    try:
+        counts = run_etl(spark, *args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return counts, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_etl_job_count(spark, tmp_path):
+    """Spark jobs per run_etl call, counted from its job group: a fresh
+    warehouse, an incremental day (which also reads the sink's keys), and
+    a replay that stops at the empty-delta gate after the staging write.
+    The candidate and delta counts are observed on that write, so neither
+    runs a job of its own."""
+    wh = str(tmp_path / "warehouse")
+    first, first_jobs = _etl_jobs(spark, "etl_pin_first", ["UC0", "UC1"], wh)
+    day, day_jobs = _etl_jobs(spark, "etl_pin_day", ["UC2"], wh)
+    replay, replay_jobs = _etl_jobs(spark, "etl_pin_replay", ["UC2"], wh)
+    assert (first["loaded"], day["loaded"], replay["loaded"]) == (240, 120, 0)
+    assert (first_jobs, day_jobs, replay_jobs) == (10, 13, 7)
 
 
 def test_etl_grows_with_new_channel(spark, tmp_path):

@@ -7,11 +7,15 @@ Flow parity (SURVEY.md §3.1):
   L2 dimension overwrite.
 
 Differences by design: every stage is a lazy DataFrame plan; the only eager
-points are (a) collecting the *playlist* ids for source control — the
-reference's own driver-side step (P3, :149), bounded by channel count —
-(b) the empty-delta gate, and (c) staging the delta *video* ids to parquet
-(the reference collects these to the driver, :160; at backfill scale that
-list is unbounded, so here it never leaves the executors).
+points are (a) snapshotting the channel rows and collecting their
+*playlist* ids for source control — the reference's own driver-side step
+(P3, :149), bounded by channel count, whose length is also the channel
+count — (b) staging the delta *video* ids to parquet (the reference
+collects these to the driver, :160; at backfill scale that list is
+unbounded, so here it never leaves the executors), (c) the idempotent
+append and (d) the dimension overwrite. The candidate and delta counts are
+``observe()`` points on the staging write, not jobs of their own, and the
+empty-delta gate reads the delta count after that write.
 State lives in partitioned Parquet, not JDBC; the append re-checks keys at
 write time so retries are idempotent (SURVEY.md §7.4 item 2).
 """
@@ -20,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.incremental import append_delta, overwrite_dim, select_new, sink_exists
@@ -57,12 +61,20 @@ def _read(spark: SparkSession, table: str, **options: str) -> DataFrame:
 IDS_PER_STAGED_FILE = 2_500
 
 
-def _stage_ids(new_ids: DataFrame, warehouse: str, n_new: int) -> str:
-    """Write the delta-id relation to the warehouse staging area, sized so
-    each parquet file (= one source task) carries a bounded id batch."""
+def _observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count observation point; the count is read from
+    the returned Observation after whichever action runs the plan."""
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _stage_ids(new_ids: DataFrame, warehouse: str) -> str:
+    """Write the delta-id relation to the warehouse staging area. Files are
+    capped at IDS_PER_STAGED_FILE rows (each file is one source task's id
+    batch), so the write needs no row count up front."""
     ids_dir = os.path.join(warehouse, "_staging", "new_video_ids")
-    n_files = max(1, -(-n_new // IDS_PER_STAGED_FILE))
-    new_ids.repartition(n_files).write.mode("overwrite").parquet(ids_dir)
+    (new_ids.write.mode("overwrite")
+     .option("maxRecordsPerFile", IDS_PER_STAGED_FILE).parquet(ids_dir))
     return ids_dir
 
 
@@ -75,25 +87,25 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
     counts: dict[str, int] = {}
 
     # E1 — channel dimension (always rebuilt, :146/:198). localCheckpoint:
-    # the relation is consumed three times (count, playlist-id collect,
-    # the L2 dimension overwrite) and each ACTION would otherwise
-    # re-fetch from the API — triple quota burn, and three fetches of a
-    # non-snapshot source can disagree, so the ids collected, the count
-    # reported, and the rows written could come from different snapshots
-    # (r6 review). One fetch, one snapshot.
+    # the relation is consumed twice (the playlist-id collect and the L2
+    # dimension overwrite) and each ACTION would otherwise re-fetch from
+    # the API — double quota burn, and two fetches of a non-snapshot
+    # source can disagree, so the ids collected, the count reported, and
+    # the rows written could come from different snapshots (r6 review).
+    # One fetch, one snapshot; the count is the collect's length.
     channels = _read(
         spark, "channels", channel_ids=",".join(channel_ids), **opts
     ).localCheckpoint()
-    counts["channels"] = channels.count()
 
     # E2 — playlist scan; playlist ids are source control (P3 — the one
-    # sanctioned driver-side collect), partition-per-playlist underneath.
-    # Same snapshot rule: candidate_ids feeds the count AND the delta
-    # anti-join below.
+    # sanctioned driver-side collect). The scan packs playlists into at
+    # most one partition per task slot (see sources/youtube_api.py).
     playlist_ids = [r.playlistId for r in channels.select("playlistId").collect()]
-    items = _read(spark, "playlist_items", playlist_ids=",".join(playlist_ids), **opts)
-    candidate_ids = items.select("videoId").distinct().localCheckpoint()  # A1 (:103)
-    counts["candidate_ids"] = candidate_ids.count()
+    counts["channels"] = len(playlist_ids)
+    items = _read(spark, "playlist_items", playlist_ids=",".join(playlist_ids),
+                  slots=str(spark.sparkContext.defaultParallelism), **opts)
+    candidate_ids, candidates_obs = _observed(
+        items.select("videoId").distinct(), "candidate_ids")  # A1 (:103)
 
     # State read + J1 anti-join (key-only scan of the sink, :154-160).
     # S5 sink-exists probe is a real FS check, not try/except around the
@@ -104,21 +116,25 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
         existing = spark.read.parquet(video_sink).select("videoId")
     else:
         existing = spark.createDataFrame([], "videoId string")
-    new_ids = select_new(candidate_ids, existing, "videoId")
-    counts["new_videos"] = new_ids.count()
+    new_ids, new_obs = _observed(
+        select_new(candidate_ids, existing, "videoId"), "new_videos")
+
+    # E3 staging — the delta ids are STAGED to parquet and the video source
+    # reads them per (file, row-group) partition: unlike the reference's
+    # driver-side id list (fetch_youtube_data.py:160), a million-id
+    # backfill never materializes on the driver or in the plan. This write
+    # is the one action over the playlist scan, so the scan runs once and
+    # both counts below come from the same snapshot as the staged ids.
+    ids_dir = _stage_ids(new_ids, warehouse)
+    counts["candidate_ids"] = candidates_obs.get["rows"]
+    counts["new_videos"] = new_obs.get["rows"]
 
     # P5 — empty-delta gate (:164-165): skip fetch/transform/load entirely.
     if counts["new_videos"] == 0:
         counts["loaded"] = 0
     else:
-        # E3 — chunked video fetch. The delta ids are STAGED to parquet and
-        # the source reads them per (file, row-group) partition — unlike the
-        # reference's driver-side id list (fetch_youtube_data.py:160), a
-        # million-id backfill never materializes on the driver or in the
-        # plan; only the playlist-id collect above (13 rows, the reference's
-        # own P3) stays driver-side. Each staged file bounds one source
-        # task's batch (IDS_PER_STAGED_FILE ids ≈ that many /50 API calls).
-        ids_dir = _stage_ids(new_ids, warehouse, counts["new_videos"])
+        # E3 — chunked video fetch, one source task per staged row group
+        # (IDS_PER_STAGED_FILE ids ≈ that many /50 API calls).
         videos_raw = _read(spark, "videos", video_ids_path=ids_dir, **opts)
         # T — the 11→19 column transform block (:171-190), one Project
         video_stats = enrich_videos(videos_raw)

@@ -99,11 +99,13 @@ except ImportError:  # golden not generated yet → honest rows-only check
 def reference_etl_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE daily ETL (fetch_youtube_data.py:143-200) run
     end-to-end over the custom API-shaped DataSource: channel extract →
-    partition-per-playlist scan → anti-join delta → 11→19-column enrich →
-    idempotent append → dimension overwrite. Returns a per-channel rollup
-    of the loaded video_stats table WITH a content fingerprint: md5 over
-    the sorted, delimiter-joined rendering of every row's 19 columns — any
-    changed cell anywhere in the table flips its channel's fingerprint.
+    playlist scan (13 playlists packed into at most one partition per task
+    slot: each partition is a Python task with ~0.3 s of fixed worker CPU)
+    → anti-join delta → 11→19-column enrich → idempotent append →
+    dimension overwrite. Returns a per-channel rollup of the loaded
+    video_stats table WITH a content fingerprint: md5 over the sorted,
+    delimiter-joined rendering of every row's 19 columns — any changed
+    cell anywhere in the table flips its channel's fingerprint.
 
     r2 upgrade from rows-only to a GOLDEN-VALUES oracle: the fake
     transport is a pure function of ids+seed (sources/youtube_api.py:93),

@@ -447,8 +447,8 @@ def _filter_report_oracle() -> str:
              THEN CAST(list_sum(list_transform(toks, w -> length(w)))
                        AS DOUBLE) / nw ELSE 0.0 END AS mean_len,
         length(txt) - length(replace(txt, '#', ''))
-          + length(regexp_replace(txt, '\.\.\.', '…', 'g'))
-          - length(replace(regexp_replace(txt, '\.\.\.', '…', 'g'),
+          + length(regexp_replace(txt, '\\.\\.\\.', '…', 'g'))
+          - length(replace(regexp_replace(txt, '\\.\\.\\.', '…', 'g'),
                            '…', '')) AS n_sym,
         len(lns) AS n_lines,
         len(list_filter(lns, l -> starts_with(trim(l), '•')
@@ -494,7 +494,7 @@ def _filter_report_oracle() -> str:
                      OR ends_with(trim(l), '?')
                      OR ends_with(trim(l), '"')
                      OR ends_with(trim(l), '”'))
-                    AND len(regexp_split_to_array(trim(l), '\s+')) >= 5
+                    AND len(regexp_split_to_array(trim(l), '\\s+')) >= 5
                     AND NOT contains(lower(l), 'javascript')
                     AND NOT contains(lower(l), 'terms of use')
                     AND NOT contains(lower(l), 'privacy policy')

@@ -9,11 +9,19 @@ The reference drives the YouTube Data API v3 with three access patterns:
   ``videos().list`` per chunk (:113-119).
 
 Spark-first restatement: a PySpark DataSource whose *partitioning* encodes
-the reference's batching — one partition per playlist (pagination is
-inherently serial per playlist but playlists fan out across executors, the
-parallelism the reference leaves on the table, SURVEY.md §3.3) and one
-partition per 50-id chunk for video lookups. Page/chunk loops live inside
-``read(partition)``, so no pagination state ever crosses partitions.
+the reference's batching. Playlists fan out across executors (the
+parallelism the reference leaves on the table, SURVEY.md §3.3) in
+``min(#playlists, slots)`` partitions, each paging its playlists serially;
+without a ``slots`` option that is one partition per playlist. Packing to
+the slot count matters because every partition is one Python task, and a
+Python task pays ~0.3 s of worker CPU before it reads a row (measured on 4
+vCPUs with PySpark 4.1: a job of one 1-row ``mapInArrow`` task costs
+~0.35 s of CPU, one of four such tasks ~1.0 s; the worker's per-task
+``importlib.invalidate_caches()`` re-reads ``pyspark.zip`` once per cached
+zipimporter). Playlists beyond the slot count add that cost, not
+parallelism. Video lookups get one partition per 50-id chunk.
+Page/chunk loops live inside ``read(partition)``, so no pagination state
+ever crosses partitions.
 
 Transport is injectable by name so the source is testable hermetically:
 ``transport=fake`` is a deterministic in-process YouTube API emulator (the
@@ -25,6 +33,11 @@ Usage::
     spark.dataSource.register(YouTubeDataSource)
     spark.read.format("youtube_api").option("table", "videos")
          .option("transport", "fake").option("video_ids", "v1,v2").load()
+
+Options: ``table`` (channels | playlist_items | videos), ``transport``,
+``seed``; ``channel_ids``; ``playlist_ids`` and ``slots`` (the most
+playlist partitions to plan, normally the session's default parallelism);
+``video_ids`` or ``video_ids_path``.
 """
 
 from __future__ import annotations
@@ -450,17 +463,21 @@ class YouTubeReader(DataSourceReader):
                 for i in range(0, len(ids), API_PAGE_SIZE)
             ] or [_Partition("channels", [])]
         if self.table == "playlist_items":
-            # S2: partition-per-playlist; pagination stays inside a partition.
+            # S2: playlists dealt round-robin over min(#playlists, slots)
+            # partitions (one per playlist without ``slots``); each
+            # partition pages its playlists one after another, so
+            # pagination never crosses partitions.
             pids = [p for p in self.options.get("playlist_ids", "").split(",") if p]
-            return [_Partition("playlist", p) for p in pids] or [_Partition("playlist", None)]
+            n = max(1, min(len(pids), int(self.options.get("slots", len(pids)))))
+            return [_Partition("playlist", pids[i::n]) for i in range(n)]
         if "video_ids_path" in self.options:
             # S3 at scale: ids staged as parquet (pipeline.py stages the
             # anti-join delta there). Planning touches FILE METADATA only —
             # one partition per (file, row group), so a million-id backfill
             # never flows through the driver, the options map, or the plan.
             # Each task reads its own row group's id column and chunks it
-            # into ≤50-id API calls; parallelism = staged file count, which
-            # the writer sizes to the delta (see pipeline._stage_ids).
+            # into ≤50-id API calls; parallelism = staged file count, and
+            # the writer caps each file's rows (see pipeline._stage_ids).
             return self._staged_id_partitions(self.options["video_ids_path"])
         # S3: partition per 50-id chunk (inline option — small deltas only;
         # the reference's own shape, fetch_youtube_data.py:113-119).
@@ -530,20 +547,19 @@ class YouTubeReader(DataSourceReader):
                     item["contentDetails"]["relatedPlaylists"]["uploads"],
                 )
         elif partition.kind == "playlist":
-            if partition.payload is None:
-                return
-            # Serial nextPageToken loop — the reference's :86-100, per
-            # partition instead of per process.
-            token = None
-            page = 0
-            while True:
-                resp = transport.playlist_items_list(partition.payload, token)
-                for item in resp.get("items", []):
-                    yield (partition.payload, item["contentDetails"]["videoId"], page)
-                token = resp.get("nextPageToken")
-                if not token:
-                    break
-                page += 1
+            # Serial nextPageToken loop per playlist — the reference's
+            # :86-100, per partition instead of per process.
+            for pid in partition.payload:
+                token = None
+                page = 0
+                while True:
+                    resp = transport.playlist_items_list(pid, token)
+                    for item in resp.get("items", []):
+                        yield (pid, item["contentDetails"]["videoId"], page)
+                    token = resp.get("nextPageToken")
+                    if not token:
+                        break
+                    page += 1
         elif partition.kind == "videos_staged":
             import pyarrow.parquet as pq
 
