@@ -1,5 +1,5 @@
 """Incremental-semantics tests (SURVEY.md §5 item 3): delta-only append,
-idempotent re-run, empty-delta gate, dimension overwrite."""
+idempotent re-run, dimension overwrite."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.incremental import (
     append_delta,
-    is_empty,
     overwrite_dim,
     select_new,
 )
@@ -33,12 +32,6 @@ def test_select_new_dedups_existing_side(spark):
     ]
 
 
-def test_empty_delta_gate(spark):
-    cands = _orders(spark, 0, 50)
-    assert is_empty(select_new(cands, cands, "videoId"))
-    assert not is_empty(select_new(_orders(spark, 0, 51), cands, "videoId"))
-
-
 def test_append_delta_idempotent(spark, tmp_path):
     sink = str(tmp_path / "sink")
     # The return value is the rows ACTUALLY written (what run_etl reports
@@ -62,27 +55,6 @@ def test_overwrite_dim(spark, tmp_path):
     overwrite_dim(_orders(spark, 100, 105), sink)
     got = sorted(r.videoId for r in spark.read.parquet(sink).collect())
     assert got == list(range(100, 105))
-
-
-def test_merge_upsert(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.incremental import merge_upsert
-
-    sink = str(tmp_path / "merge_sink")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k long, name string, v long"
-    )
-    merge_upsert(base, sink, "k")
-    # Update k=2, insert k=4; k=1/3 untouched.
-    upd = spark.createDataFrame(
-        [(2, "B", 200), (4, "d", 40)], "k long, name string, v long"
-    )
-    merge_upsert(upd, sink, "k")
-    got = {r["k"]: (r["name"], r["v"]) for r in spark.read.parquet(sink).collect()}
-    assert got == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30), 4: ("d", 40)}
-    # Idempotent re-merge of the same updates changes nothing.
-    merge_upsert(upd, sink, "k")
-    again = {r["k"]: (r["name"], r["v"]) for r in spark.read.parquet(sink).collect()}
-    assert again == got
 
 
 def test_sink_exists_probe(spark, tmp_path):
@@ -135,67 +107,6 @@ def test_jdbc_overwrite_dim(spark, tmp_path):
     assert got == list(range(100, 105))
 
 
-def test_incremental_agg_matches_full_recompute(spark, tmp_path):
-    """Folding two delta batches into the aggregate state must equal the
-    single-pass aggregate over their union — bit-identical (decimal sums),
-    regardless of batch boundaries."""
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        incremental_agg,
-    )
-    from youtube_api_data_etl_automation_spark.sources.tables import load_table
-
-    from .conftest import SF_DIR
-
-    orders = load_table(spark, SF_DIR, "orders")
-    b1 = orders.filter(F.col("o_orderkey") % 3 != 0)
-    b2 = orders.filter(F.col("o_orderkey") % 3 == 0)
-    state_path = str(tmp_path / "agg_state")
-
-    incremental_agg(b1, state_path, keys=["o_orderpriority"], sum_cols=["o_totalprice"])
-    incremental_agg(b2, state_path, keys=["o_orderpriority"], sum_cols=["o_totalprice"])
-
-    got = spark.read.parquet(state_path)
-    want = orders.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum(F.col("o_totalprice").cast("decimal(28,6)"))
-        .cast("decimal(28,6)")
-        .alias("sum_o_totalprice"),
-    )
-    assert got.exceptAll(want).union(want.exceptAll(got)).count() == 0
-
-
-def test_incremental_agg_new_keys_in_later_batch(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        incremental_agg,
-    )
-
-    b1 = spark.createDataFrame([("x", 1.0), ("x", 2.0)], "k string, v double")
-    b2 = spark.createDataFrame([("y", 5.0), ("x", 3.0)], "k string, v double")
-    state_path = str(tmp_path / "s")
-    incremental_agg(b1, state_path, keys=["k"], sum_cols=["v"])
-    state = incremental_agg(b2, state_path, keys=["k"], sum_cols=["v"])
-    rows = {r["k"]: (r["cnt"], float(r["sum_v"])) for r in state.collect()}
-    assert rows == {"x": (3, 6.0), "y": (1, 5.0)}
-
-
-def test_incremental_agg_batch_id_makes_retry_a_noop(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        incremental_agg,
-    )
-
-    b1 = spark.createDataFrame([("x", 1.0), ("x", 2.0)], "k string, v double")
-    state_path = str(tmp_path / "s")
-    incremental_agg(b1, state_path, keys=["k"], sum_cols=["v"], batch_id="b1")
-    # Retry of the same batch: state unchanged.
-    state = incremental_agg(b1, state_path, keys=["k"], sum_cols=["v"], batch_id="b1")
-    rows = {r["k"]: (r["cnt"], float(r["sum_v"])) for r in state.collect()}
-    assert rows == {"x": (2, 3.0)}
-    # A new batch id still folds.
-    state = incremental_agg(b1, state_path, keys=["k"], sum_cols=["v"], batch_id="b2")
-    rows = {r["k"]: (r["cnt"], float(r["sum_v"])) for r in state.collect()}
-    assert rows == {"x": (4, 6.0)}
-
-
 def test_null_key_append_stays_idempotent(spark, tmp_path):
     """r6: the anti-join key match is NULL-safe, so a NULL-key row appends
     once and a retry of the same delta appends nothing — previously the
@@ -211,73 +122,3 @@ def test_null_key_append_stays_idempotent(spark, tmp_path):
     assert append_delta(delta, sink, "key") == 0
     rows = spark.read.parquet(sink).collect()
     assert len(rows) == 2
-
-
-def test_merge_upsert_null_key_replaces_not_accumulates(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        merge_upsert,
-    )
-
-    sink = str(tmp_path / "null_dim")
-    merge_upsert(
-        spark.createDataFrame([("a", 1), (None, 10)], "key string, v int"),
-        sink,
-        "key",
-    )
-    for v in (20, 30):
-        merge_upsert(
-            spark.createDataFrame([(None, v)], "key string, v int"), sink, "key"
-        )
-    got = {(r.key, r.v) for r in spark.read.parquet(sink).collect()}
-    assert got == {("a", 1), (None, 30)}  # replaced, not accumulated
-
-
-def test_merge_upsert_recovers_stranded_stage(spark, tmp_path):
-    """r6 staged overwrite: a crash between the sink delete and the stage
-    rename leaves the complete stage on disk; the next call promotes it
-    instead of treating the sink as first-run."""
-    import shutil
-
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        _stage_path,
-        merge_upsert,
-    )
-
-    sink = str(tmp_path / "dim")
-    merge_upsert(
-        spark.createDataFrame([("a", 1), ("b", 2)], "key string, v int"),
-        sink,
-        "key",
-    )
-    # Simulate the crash window: full new state sits in the stage, sink gone.
-    spark.createDataFrame(
-        [("a", 9), ("b", 2)], "key string, v int"
-    ).write.parquet(_stage_path(sink))
-    shutil.rmtree(sink)
-    merge_upsert(
-        spark.createDataFrame([("c", 3)], "key string, v int"), sink, "key"
-    )
-    got = {(r.key, r.v) for r in spark.read.parquet(sink).collect()}
-    assert got == {("a", 9), ("b", 2), ("c", 3)}  # staged state recovered
-
-
-def test_stale_sidecar_voided_by_batchless_rebuild(spark, tmp_path):
-    """r6: rebuilding a deleted state WITHOUT a batch_id must still void
-    the applied-batch sidecar, else later replays of previously-applied
-    ids are silently skipped against the rebuilt state."""
-    import shutil
-
-    from youtube_api_data_etl_automation_spark.operators.incremental import (
-        incremental_agg,
-    )
-
-    state = str(tmp_path / "agg_state")
-    b1 = spark.createDataFrame([("k", 1.0)], "g string, x double")
-    incremental_agg(b1, state, ["g"], ["x"], batch_id="b1")
-    shutil.rmtree(state)
-    # rebuild WITHOUT a batch id — previously left the sidecar in place
-    incremental_agg(b1, state, ["g"], ["x"], batch_id=None)
-    # replay of 'b1' must fold (the sidecar was voided), not be skipped
-    incremental_agg(b1, state, ["g"], ["x"], batch_id="b1")
-    [row] = spark.read.parquet(state).collect()
-    assert row.cnt == 2 and float(row.sum_x) == 2.0

@@ -286,46 +286,6 @@ def test_runtime_bloom_filter_reaches_fact_scan(spark):
         )
 
 
-def test_clustered_layout_files_are_disjoint_and_complete(spark):
-    """write_clustered: each day directory's files own non-overlapping
-    sort-key ranges (parquet min/max stats can then skip whole files), the
-    file count stays ~num_files (no tasks×days small-file blowup), and the
-    round-trip loses nothing."""
-    from collections import defaultdict
-
-    from youtube_api_data_etl_automation_spark.operators.layout import (
-        write_clustered,
-    )
-
-    out = tempfile.mkdtemp(prefix="clustered_events_")
-    events = load_table(spark, SF_DIR, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    write_clustered(events, out, "day", "user_id", num_files=16)
-
-    back = spark.read.parquet(out)
-    assert back.count() == events.count()
-
-    # Per (day directory, file): the user_id ranges must not overlap.
-    spans = (
-        back.groupBy(
-            F.col("day"), F.input_file_name().alias("f")
-        )
-        .agg(F.min("user_id").alias("lo"), F.max("user_id").alias("hi"))
-        .collect()
-    )
-    per_day = defaultdict(list)
-    for r in spans:
-        per_day[r.day].append((r.lo, r.hi))
-    for day, ranges in per_day.items():
-        ranges.sort()
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 <= lo2, (day, ranges)
-    # Range clustering bounds total files near num_files.
-    n_files = len({r.f for r in spans})
-    assert n_files <= 16 + len(per_day), n_files
-
-
 def test_cap_under_cap_rows_skip_the_window_sort(spark):
     """Per-group cap (r4): the under-cap path must reach the output through
     a broadcast anti-join with NO Window operator on it — only over-cap
@@ -390,123 +350,6 @@ def test_scd2_single_key_shuffle(spark):
     ]
     assert len(exchanges) == 1, plan
     assert "o_custkey" in exchanges[0]
-
-
-def test_zorder_bounds_both_dimensions(spark, tmp_path):
-    """Z-order layout (r4): every output file covers a bounded slice of
-    BOTH predicate columns, so min-max file skipping works for either —
-    a single-key range cluster leaves the second column spanning ~the full
-    range in every file (measured ~0.99 here)."""
-    import statistics
-
-    from youtube_api_data_etl_automation_spark.operators.layout import write_zordered
-
-    orders = load_table(spark, SF_DIR, "orders")
-    out = str(tmp_path / "z")
-    write_zordered(orders, out, "o_custkey", "o_totalprice", num_files=8)
-
-    df = spark.read.parquet(out).withColumn("f", F.input_file_name())
-    assert df.count() == orders.count()
-    g = df.agg(
-        F.min("o_custkey"), F.max("o_custkey"),
-        F.min("o_totalprice"), F.max("o_totalprice"),
-    ).first()
-    ga, gb = g[1] - g[0], g[3] - g[2]
-    spans = df.groupBy("f").agg(
-        F.min("o_custkey").alias("alo"), F.max("o_custkey").alias("ahi"),
-        F.min("o_totalprice").alias("blo"), F.max("o_totalprice").alias("bhi"),
-    ).collect()
-    a_mean = statistics.mean((r["ahi"] - r["alo"]) / ga for r in spans)
-    b_mean = statistics.mean((r["bhi"] - r["blo"]) / gb for r in spans)
-    # Measured ~0.58 / ~0.34 with 8 files; thresholds leave slack for the
-    # z-curve's boundary files while still refuting a stripe layout.
-    assert a_mean < 0.75, a_mean
-    assert b_mean < 0.60, b_mean
-
-
-def test_zorder_key_interleaves_bits(spark):
-    from youtube_api_data_etl_automation_spark.operators.layout import zorder_key
-
-    df = spark.range(1).select(
-        zorder_key(F.lit(0b101).cast("long"), F.lit(0b011).cast("long"), bits=3).alias("z")
-    )
-    # a=101, b=011 → interleaved (b2 a2 b1 a1 b0 a0) = 0 1 1 0 1 1 = 27.
-    assert df.first()["z"] == 0b011011
-
-
-def test_compact_small_files_roundtrip(spark, tmp_path):
-    """Compaction (r4): a fragmented sink collapses to the target file
-    count with byte-identical content; the sorted variant additionally
-    leaves disjoint per-file sort-key spans."""
-    from youtube_api_data_etl_automation_spark.operators.layout import (
-        compact_small_files,
-    )
-
-    orders = load_table(spark, SF_DIR, "orders")
-    frag = str(tmp_path / "frag")
-    orders.repartition(64).write.parquet(frag)
-
-    stats = compact_small_files(spark, frag, target_mb=128)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 1  # sf0.001 orders ≪ 128 MB
-    got = spark.read.parquet(frag)
-    assert got.exceptAll(orders).union(orders.exceptAll(got)).count() == 0
-
-    # Sorted variant: re-fragment, compact clustered on o_orderkey.
-    frag2 = str(tmp_path / "frag2")
-    orders.repartition(64).write.parquet(frag2)
-    compact_small_files(spark, frag2, target_mb=1, sort_col="o_orderkey")
-    df = spark.read.parquet(frag2).withColumn("f", F.input_file_name())
-    spans = df.groupBy("f").agg(
-        F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-    ).orderBy("lo").collect()
-    if len(spans) > 1:
-        for prev, cur in zip(spans, spans[1:]):
-            assert prev["hi"] <= cur["lo"]
-    got2 = spark.read.parquet(frag2)
-    assert got2.count() == orders.count()
-
-
-def test_clustered_write_orc_roundtrip(spark, tmp_path):
-    """ORC sink variant of the clustered layout (r4): same layout story on
-    ORC-standardized warehouses — content round-trips and partition
-    pruning works through the ORC scan too."""
-    from youtube_api_data_etl_automation_spark.operators.layout import (
-        write_clustered,
-    )
-
-    orders = load_table(spark, SF_DIR, "orders").withColumn(
-        "status", F.col("o_orderstatus")
-    )
-    out = str(tmp_path / "orc")
-    write_clustered(orders, out, "status", "o_orderkey", num_files=4,
-                    file_format="orc")
-    back = spark.read.orc(out)
-    assert back.count() == orders.count()
-    pruned = back.filter(F.col("status") == "F")
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "status" in plan
-
-
-def test_dataset_manifest_proves_disjoint_spans(spark, tmp_path):
-    """Manifest (r4): per-file stats match the data, totals are complete,
-    and over a range-clustered write the sort-key spans are disjoint —
-    the file-skipping property, proven from the manifest itself."""
-    from youtube_api_data_etl_automation_spark.operators.layout import (
-        dataset_manifest,
-    )
-
-    orders = load_table(spark, SF_DIR, "orders")
-    out = str(tmp_path / "clustered")
-    orders.repartitionByRange(4, F.col("o_orderkey")).sortWithinPartitions(
-        "o_orderkey"
-    ).write.parquet(out)
-
-    m = dataset_manifest(spark, out, "o_orderkey").collect()
-    assert sum(r["n_rows"] for r in m) == orders.count()
-    spans = sorted((r["min_o_orderkey"], r["max_o_orderkey"]) for r in m)
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2, spans
 
 
 def test_window_suite_shares_one_exchange(spark):

@@ -1,6 +1,6 @@
 """Versioned sink protocol (operators/versioned.py): commit atomicity,
 reader snapshot isolation across overlapping swaps, crash-debris recovery,
-GC horizon, and the merge/compact twins' semantics."""
+GC horizon, and merge/compact/fold semantics."""
 
 from __future__ import annotations
 
@@ -178,14 +178,34 @@ def test_schema_diff_sees_nested_and_decimal_changes(spark):
 
 
 def test_merge_upsert_versioned_semantics(spark, tmp_path):
-    """Mirror of test_incremental.py::test_merge_upsert over the versioned
-    store: update wins on matched keys, unmatched kept, inserts land."""
+    """MERGE semantics over the versioned store: update wins on matched
+    keys, unmatched kept, inserts land."""
     base = str(tmp_path / "sink")
     merge_upsert_versioned(_df(spark, [("a", 1), ("b", 2), ("c", 3)]), base, "k")
     merge_upsert_versioned(_df(spark, [("b", 20), ("d", 40)]), base, "k")
     got = {(r.k, r.v) for r in read_current(spark, base).collect()}
     assert got == {("a", 1), ("b", 20), ("c", 3), ("d", 40)}
     assert current_version(spark, base) == 2
+    # Re-merging the same updates commits a version with the same rows.
+    merge_upsert_versioned(_df(spark, [("b", 20), ("d", 40)]), base, "k")
+    assert {(r.k, r.v) for r in read_current(spark, base).collect()} == got
+
+
+def test_merge_upsert_null_key_replaces_not_accumulates(spark, tmp_path):
+    """The key match is NULL-safe: a NULL-key update replaces the stored
+    NULL-key row instead of adding one more per merge."""
+    base = str(tmp_path / "null_dim")
+    merge_upsert_versioned(
+        spark.createDataFrame([("a", 1), (None, 10)], "key string, v int"),
+        base,
+        "key",
+    )
+    for v in (20, 30):
+        merge_upsert_versioned(
+            spark.createDataFrame([(None, v)], "key string, v int"), base, "key"
+        )
+    got = {(r.key, r.v) for r in read_current(spark, base).collect()}
+    assert got == {("a", 1), (None, 30)}  # replaced, not accumulated
 
 
 def test_reader_overlapping_swap_sees_complete_old_version(spark, tmp_path):

@@ -11,9 +11,6 @@ Spark-first restatement (SURVEY.md §2.3 J1, §2.2 P5, §7.1 item 5):
   existing-keys side is small we broadcast it, which is exactly the
   reference's set-probe strategy distributed: no shuffle of the candidate
   side at all. At 100 TB the candidate side never moves — only keys do.
-- ``is_empty`` keeps the reference's eager gate: it's the one place the
-  engine deliberately materializes early, because it decides whether the
-  expensive downstream fetch/transform runs at all.
 - ``append_delta`` re-checks keys *inside* the write (anti-join against the
   sink at write time) so re-runs after partial failure stay idempotent —
   fixing the reference's non-transactional append (SURVEY.md §7.4 item 2).
@@ -63,11 +60,6 @@ def select_new(candidates: DataFrame, existing: DataFrame, key: str,
     )
 
 
-def is_empty(df: DataFrame) -> bool:
-    """Empty-delta gate (eager by design — it gates the downstream job)."""
-    return df.isEmpty()
-
-
 def append_delta(delta: DataFrame, sink_path: str, key: str) -> int:
     """Idempotent append: re-filter against current sink keys, then append.
     Returns the number of rows actually written — on a retry after partial
@@ -96,168 +88,3 @@ def overwrite_dim(dim: DataFrame, sink_path: str) -> None:
     """Full-replace dimension write (reference's channel_stats at :198)."""
     dim.write.mode("overwrite").parquet(sink_path)
 
-
-def _stage_path(path: str) -> str:
-    return path.rstrip("/") + ".__stage__"
-
-
-def _recover_stage(spark, path: str) -> None:
-    """Crash recovery for :func:`_staged_overwrite`: if the target is
-    missing but a fully-written stage sibling exists (crash between the
-    delete and the rename), promote the stage — the data was never lost,
-    only un-renamed."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(P(path)) and fs.exists(P(_stage_path(path))):
-        fs.rename(P(_stage_path(path)), P(path))
-
-
-def _staged_overwrite(df: DataFrame, path: str) -> None:
-    """Crash-safe replace: write the FULL result to a stage sibling while
-    the current data stays untouched (the df may read from ``path`` —
-    that's fine, nothing overwrites what is being read, so no
-    localCheckpoint materialization is needed), then delete + rename.
-
-    At every instant a complete copy of either the old or the new data
-    exists on disk: a crash before the delete leaves the old sink (plus
-    reclaimable stage debris, overwritten by the next attempt); a crash
-    between delete and rename leaves the complete stage, which
-    :func:`_recover_stage` promotes on the next call. This closes the
-    r6-review window where ``mode("overwrite")`` had deleted the sink
-    before the job committed and a driver death lost BOTH copies (the
-    checkpointed merge result dies with the application). Readers racing
-    the swap can still see a partial listing — for always-on readers use
-    the operators/versioned.py twins."""
-    spark = df.sparkSession
-    stage = _stage_path(path)
-    df.write.mode("overwrite").parquet(stage)
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(P(path), True)
-    if not fs.rename(P(stage), P(path)):
-        raise IOError(f"staged overwrite of {path}: rename from stage failed")
-
-
-def _applied_batches_path(state_path: str) -> str:
-    return state_path.rstrip("/") + ".__applied__"
-
-
-def incremental_agg(delta: DataFrame, state_path: str, keys: list[str],
-                    sum_cols: list[str],
-                    batch_id: str | None = None) -> DataFrame:
-    """Incremental materialized-aggregate maintenance: keep per-key
-    (count, sums…) state current by folding in each delta batch WITHOUT
-    rescanning history — the scale answer to 'recompute the daily rollup
-    over 100 TB every night'. Algebraic aggregates only (count/sum — and
-    anything derivable from them: avg = sum/cnt); their partial states
-    merge by addition, so
-
-        new_state = reaggregate(old_state ∪ partial_agg(delta))
-
-    touches |state| + |delta| rows, never the full history. Decimal-exact
-    sums keep the folded state bit-identical to a from-scratch recompute
-    (double addition would drift with batch order).
-
-    Same staged-overwrite protocol as merge_upsert (crash never loses the
-    state: old or new always exists complete on disk); returns the new
-    state DataFrame. State schema: keys + ``cnt`` + one ``sum_<c>`` per
-    sum column.
-
-    Retry safety: unlike append_delta (whose key filter makes re-runs
-    no-ops), a fold has no per-row identity to re-check — so pass a
-    ``batch_id``. Applied ids are recorded in a sidecar
-    (``<state>.__applied__``); re-folding an already-applied batch is
-    skipped and returns the current state unchanged. Without a batch_id
-    the fold is NOT idempotent under retries. The crash window between
-    the state write and the marker write (see the comment at the marker
-    below) is CLOSED by operators/versioned.py::incremental_agg_versioned,
-    which commits state + applied ids under one atomic marker."""
-    spark = delta.sparkSession
-    applied_path = _applied_batches_path(state_path)
-    _recover_stage(spark, state_path)
-    state_present = sink_exists(spark, state_path)
-    if not state_present and sink_exists(spark, applied_path):
-        # The state was deleted/rebuilt but its marker sidecar survived:
-        # stale ids would silently skip legitimate re-folds (or crash
-        # reading the absent state). A missing state voids the markers —
-        # drop the sidecar and fold fresh. This runs REGARDLESS of this
-        # call's batch_id (r6 review: a batch_id=None rebuild used to
-        # leave the stale sidecar in place, permanently skipping later
-        # replays of previously-applied ids).
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(applied_path)
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-    elif batch_id is not None and sink_exists(spark, applied_path):
-        applied = spark.read.parquet(applied_path)
-        if applied.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-            return spark.read.parquet(state_path)
-    aggs = [F.count(F.lit(1)).cast("long").alias("cnt")] + [
-        F.sum(F.col(c).cast("decimal(28,6)")).cast("decimal(28,6)").alias(f"sum_{c}")
-        for c in sum_cols
-    ]
-    part = delta.groupBy(*keys).agg(*aggs)
-    if state_present:
-        old = spark.read.parquet(state_path)
-        merge_aggs = [F.sum("cnt").cast("long").alias("cnt")] + [
-            F.sum(f"sum_{c}").cast("decimal(28,6)").alias(f"sum_{c}")
-            for c in sum_cols
-        ]
-        part = old.unionByName(part).groupBy(*keys).agg(*merge_aggs)
-    _staged_overwrite(part, state_path)
-    state = spark.read.parquet(state_path)
-    if batch_id is not None:
-        # Marker AFTER the state write. This narrows the unsafe window to
-        # the instant between the two writes (crash there → the retry
-        # re-folds once) but does not eliminate it — recording the marker
-        # FIRST would be worse (crash after marker, before state → batch
-        # silently dropped forever). Closing the window fully needs an
-        # atomic commit of state+marker: a table format's transactional
-        # MERGE, which this protocol maps onto directly.
-        spark.createDataFrame([(batch_id,)], "batch_id string").write.mode(
-            "append"
-        ).parquet(applied_path)
-    return state
-
-
-def merge_upsert(updates: DataFrame, sink_path: str, key: str) -> None:
-    """MERGE-style upsert over the parquet state: matched keys take the
-    incoming row, unmatched sink rows are kept, new keys are inserted —
-    `WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT` semantics without a
-    table format (SURVEY.md §7.4 item 2's scale path; on Delta/Iceberg
-    this becomes a real transactional MERGE with file-level pruning).
-
-    Write protocol (r6: staged overwrite): the merged result is written in
-    full to a stage sibling while the sink stays untouched (lazy reads of
-    the sink are safe — nothing overwrites what is being read), then
-    delete + rename. A complete copy of old-or-new data exists on disk at
-    every instant, so a crash anywhere (including driver death mid-write,
-    which used to lose the sink under a plain ``mode("overwrite")``)
-    leaves a recoverable sink; ``_recover_stage`` promotes a stranded
-    stage on the next call. Updates with duplicate keys keep an arbitrary
-    row (dropDuplicates), matching the reference's dedup policy
-    (SURVEY.md §2.6 item 8). The key match is NULL-SAFE like select_new's
-    (a NULL-key update REPLACES an existing NULL-key row instead of
-    accumulating one more per run).
-
-    LIMITATION: still not reader-safe — a CONCURRENT reader racing the
-    swap can observe a partial file listing (the reference's Postgres
-    sink is transactional here, :194/:198). With always-on readers use
-    operators/versioned.py::merge_upsert_versioned — identical semantics
-    published as a committed version directory, old-or-new visibility
-    guaranteed.
-    """
-    spark = updates.sparkSession
-    updates = updates.dropDuplicates([key])
-    _recover_stage(spark, sink_path)
-    if not sink_exists(spark, sink_path):
-        updates.write.mode("overwrite").parquet(sink_path)  # first run
-        return
-    existing = spark.read.parquet(sink_path)
-    upd_keys = F.broadcast(updates.select(F.col(key).alias("__upd_key")))
-    kept = existing.join(
-        upd_keys, existing[key].eqNullSafe(F.col("__upd_key")), "left_anti"
-    )
-    merged = kept.unionByName(updates)
-    _staged_overwrite(merged, sink_path)

@@ -765,8 +765,8 @@ def _hist_drift_frags(psi_threshold: float, epsilon: float) -> tuple:
 # the whole table. At 100 TB with daily appends that is the wrong shape:
 # the table was already scanned once per batch when it was written, and a
 # nightly full-table profile re-reads everything ever ingested. These three
-# operators close that gap the same way incremental_agg closes it for
-# keyed aggregates — the per-column stats block is re-expressed as an
+# operators close that gap the same way incremental_agg_versioned closes
+# it for keyed aggregates — the per-column stats block is re-expressed as an
 # ALGEBRAIC state (counts, decimal-exact sums, order-preserving min/max
 # encodings, a DataSketches HLL sketch for cardinality) that merges
 # associatively: profile_state(batch) per delta, merge_profile_states to

@@ -93,10 +93,10 @@ def train_quality_clf(
     round, so across rounds the full corpus contributes.
 
     Determinism: gradient and loss sums are decimal-exact (the same
-    fixed-point discipline as incremental_agg / k-means), so the learned
-    weights are bit-identical across partitionings and retries. The token
-    relation is persisted for the duration of training (n_rounds
-    consumers) and released before returning.
+    fixed-point discipline as incremental_agg_versioned / k-means), so
+    the learned weights are bit-identical across partitionings and
+    retries. The token relation is persisted for the duration of training
+    (n_rounds consumers) and released before returning.
 
     ``weight_grid`` (e.g. 2**20) snaps weights and bias to the dyadic
     grid 1/weight_grid after every round's update. With dyadic weights

@@ -2,13 +2,15 @@
 
 The reference's Postgres sink gives overwrite-style operations transactional
 visibility for free (fetch_youtube_data.py:194,:198 — a reader sees the
-table before or after the transaction, never mid-replace). The engine's
-plain-parquet twins (operators/incremental.py::merge_upsert,
-operators/layout.py::compact_small_files) use materialize-then-swap: crash
-safe, but a reader racing the directory delete+rename can observe a partial
-listing. At 100 TB with always-on readers that window is real.
+table before or after the transaction, never mid-replace). A parquet
+directory rewritten in place does not: a crash between the delete and the
+write can lose the state, and a reader racing the swap can observe a
+partial listing. At 100 TB with always-on readers that window is real, so
+every merge, compaction and aggregate/profile fold in the package goes
+through this module (the daily ETL's own append and dimension overwrite
+stay plain parquet: operators/incremental.py).
 
-This module closes it with the minimal table-format idea — an append-only
+It closes that window with the minimal table-format idea — an append-only
 sequence of immutable version directories plus a commit marker:
 
     <base>/v=000000001/  part-*.parquet  _COMMITTED
@@ -38,10 +40,9 @@ Exactly one of two racing writers wins the slot; the loser gets a clean
 silent interleave (the pre-r6 hazard: two writers ``mode("overwrite")``-ing
 the same shared ``v=N`` dir). Crashed-writer debris (a marker-less ``v=N``
 from a crash inside the rename→marker window, or an abandoned staging dir)
-is reclaimed automatically by the next committer. A further bonus over the
-in-place twins: the writer reads the old version lazily while writing the
-new one — no localCheckpoint materialization is needed because nothing
-overwrites what is being read.
+is reclaimed automatically by the next committer. The writer reads the old
+version lazily while writing the new one — no localCheckpoint
+materialization is needed because nothing overwrites what is being read.
 """
 
 from __future__ import annotations
@@ -52,6 +53,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .incremental import select_new
 
 _COMMITTED = "_COMMITTED"
 _VERSION_RE = re.compile(r"^v=(\d{9})$")
@@ -416,30 +419,29 @@ def overwrite_versioned(df: DataFrame, base_path: str,
 def merge_upsert_versioned(updates: DataFrame, base_path: str, key: str,
                            keep_versions: int = 2,
                            broadcast_updates: bool = True) -> int:
-    """Reader-safe MERGE upsert: same semantics as
-    operators/incremental.py::merge_upsert (matched keys take the incoming
-    row, unmatched sink rows kept, new keys inserted, duplicate update keys
-    collapse to one arbitrary row) but published as a new committed
-    version — a concurrent reader observes the pre- or post-merge state,
-    never a partial directory. No localCheckpoint: the old version stays
-    immutable while the new one is written, so the merge plan may read it
-    lazily.
+    """Reader-safe MERGE upsert (`WHEN MATCHED UPDATE / WHEN NOT MATCHED
+    INSERT`): matched keys take the incoming row, unmatched sink rows are
+    kept, new keys are inserted, and duplicate update keys collapse to one
+    arbitrary row (the reference's dedup policy, SURVEY.md §2.6 item 8).
+    The result is published as a new committed version — a concurrent
+    reader observes the pre- or post-merge state, never a partial
+    directory. No localCheckpoint: the old version stays immutable while
+    the new one is written, so the merge plan may read it lazily.
+
+    The key match is select_new's NULL-safe anti-join: a NULL-key update
+    replaces the stored NULL-key row instead of adding one more per merge.
 
     ``broadcast_updates`` (default True — the reference's small daily
     delta) broadcasts the update KEY SET into the anti-join. Set False for
     large upsert deltas where a broadcast would OOM the executors: the
     anti-join then takes the shuffle-hash/sort-merge path on the key —
-    the same escape hatch as incremental.select_new's
-    ``broadcast_existing``."""
+    passed through as select_new's ``broadcast_existing``."""
     spark = updates.sparkSession
     updates = updates.dropDuplicates([key])
     if current_version(spark, base_path) is None:
         return commit_version(updates, base_path, keep_versions)
     existing = read_current(spark, base_path)
-    upd_keys = updates.select(key)
-    if broadcast_updates:
-        upd_keys = F.broadcast(upd_keys)
-    kept = existing.join(upd_keys, on=key, how="left_anti")
+    kept = select_new(existing, updates, key, broadcast_existing=broadcast_updates)
     merged = kept.unionByName(updates)
     return commit_version(merged, base_path, keep_versions)
 
@@ -448,9 +450,9 @@ def compact_versioned(spark: SparkSession, base_path: str,
                       target_mb: int = 128, sort_col: str | None = None,
                       compression: str = "zstd",
                       keep_versions: int = 2) -> dict:
-    """Reader-safe small-file compaction: the maintenance rewrite of
-    operators/layout.py::compact_small_files, published as a new committed
-    version instead of a delete+rename swap. Without ``sort_col`` the
+    """Reader-safe small-file compaction, published as a new committed
+    version: a reader sees the fragmented files or the compacted ones,
+    never a mix. Without ``sort_col`` the
     rewrite is a narrow coalesce; with it, a range-cluster + sort so
     compaction doubles as re-clustering. Returns
     {files_before, files_after, bytes, version}."""
@@ -475,8 +477,8 @@ def compact_versioned(spark: SparkSession, base_path: str,
         out = df.repartitionByRange(n_out, F.col(sort_col)).sortWithinPartitions(
             sort_col
         )
-    # commit_version writes uncompressed-option parquet; keep codec parity
-    # with the layout writers by setting it on the session write below.
+    # commit_version writes with the session's parquet codec; switch it to
+    # ``compression`` for this one write.
     spark_conf_key = "spark.sql.parquet.compression.codec"
     prev_codec = spark.conf.get(spark_conf_key)
     spark.conf.set(spark_conf_key, compression)
@@ -517,16 +519,24 @@ def read_agg_state(spark: SparkSession, base_path: str) -> DataFrame:
 def incremental_agg_versioned(delta: DataFrame, base_path: str,
                               keys: list[str], sum_cols: list[str],
                               batch_id: str, keep_versions: int = 2) -> DataFrame:
-    """operators/incremental.py::incremental_agg with its one documented
-    unsafe window CLOSED: that protocol writes the folded state, THEN the
-    applied-batch marker — a crash between the two makes the retry re-fold
-    the batch once (double-count). Here the new state AND the full
-    applied-batch-id set are written into the same ``v=N`` directory and
-    committed by the single atomic ``_COMMITTED`` create, so state and
-    markers can never disagree: a crash anywhere pre-marker leaves the old
-    version current and the retry folds exactly once. This is the atomic
-    state+marker commit the in-place docstring says needs a table format —
-    the versioned layout IS that commit.
+    """Incremental materialized-aggregate maintenance: keep per-key
+    (count, sums…) state current by folding in each delta batch WITHOUT
+    rescanning history — the scale answer to 'recompute the daily rollup
+    over 100 TB every night'. Count/sum partial states (and anything
+    derivable from them: avg = sum/cnt) merge by addition, so
+
+        new_state = reaggregate(old_state ∪ partial_agg(delta))
+
+    touches |state| + |delta| rows, never the full history. State schema:
+    keys + ``cnt`` + one ``sum_<c>`` per sum column.
+
+    Exactly-once: the new state AND the full applied-batch-id set are
+    written into the same ``v=N`` directory and committed by the single
+    atomic ``_COMMITTED`` create, so state and markers can never disagree:
+    a crash anywhere pre-marker leaves the old version current and the
+    retry folds exactly once. Writing the marker separately, before or
+    after the state, would either drop or double-count the batch on a
+    crash between the two writes.
 
     ``batch_id`` is mandatory (the whole point is exactly-once folding).
     Re-folding an applied batch returns the current state, no new version.
@@ -646,8 +656,6 @@ def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
     and since manifests only ever grow, every batch a live manifest lists
     is listed by the current one too. A losing/crashed writer's orphan
     batch dir is unlisted by every manifest, hence invisible forever."""
-    from .incremental import select_new
-
     spark = delta.sparkSession
     cur = current_version(spark, base_path)
     old_batches: list[str] = [] if cur is None else _read_manifest(

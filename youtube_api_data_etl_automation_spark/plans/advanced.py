@@ -294,35 +294,6 @@ def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def percentile_prices_approx(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10_000
-) -> DataFrame:
-    """The 100 TB form of percentile_prices — the swap its docstring
-    prescribes, as a real tested operator: percentile_approx keeps a
-    bounded Greenwald–Khanna summary per group (mergeable partial
-    aggregates, O(accuracy·log n) state) instead of materializing the full
-    per-group value list, with guaranteed rank error ≤ 1/accuracy. Same
-    shape and column names, so a caller flips one function at the scale
-    threshold. Deliberately NOT an oracle row (approximate answers cannot
-    hash-match DuckDB); tests/test_sketches.py pins the per-group
-    rank-error bound against the exact query at the driver's gate scale."""
-    orders = load_table(spark, sf_dir, "orders")
-    pct = F.percentile_approx(
-        F.col("o_totalprice"), F.lit([0.25, 0.50, 0.75, 0.99]), F.lit(accuracy)
-    )
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(pct.alias("p"))
-        .select(
-            "o_orderpriority",
-            round6(F.col("p")[0]).alias("p25"),
-            round6(F.col("p")[1]).alias("p50"),
-            round6(F.col("p")[2]).alias("p75"),
-            round6(F.col("p")[3]).alias("p99"),
-        )
-    )
-
-
 @query(
     "window_distribution_stats",
     oracle=f"""
@@ -874,8 +845,8 @@ def events_time_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver loop) left-joined to the per-day aggregate, zeros where no
     events; the aggregate side broadcasts, so the only fact shuffle is
     its own group-by; per-day exact COUNT DISTINCT rides the same
-    aggregate (at 100 TB swap in the HLL sketches,
-    functions/sketches.py::daily_distinct_rollup). `funnel` (late r8,
+    aggregate (at 100 TB swap in approx_count_distinct's HLL sketch).
+    `funnel` (late r8,
     operators/funnel.py): the greedy-earliest behavioral funnel
     signup → click → purchase — per-user step-completion chain built
     from user-keyed joins + mins (no arrays, no collect), rolled up to

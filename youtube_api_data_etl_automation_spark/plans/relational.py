@@ -57,9 +57,9 @@ def anti_join_new_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     `delta`: the 'existing sink keys' side is simulated as every third
     orderkey; existing side is key-only + broadcast →
     BroadcastHashJoin(LeftAnti): the 100 TB candidate side never shuffles.
-    `empty_gate`: 100% overlap → provably empty delta (the engine's
-    is_empty() short-circuit consumes this; the driver verifies the delta
-    relation itself is empty — the section contributes zero rows)."""
+    `empty_gate`: 100% overlap → provably empty delta (the shape
+    `pipeline.run_etl`'s empty-delta gate skips on; the section contributes
+    zero rows, so the oracle check proves the delta relation is empty)."""
     orders = load_table(spark, sf_dir, "orders")
     existing = orders.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey")
     # No dedup on the keys side: anti-join results are unaffected by
@@ -265,8 +265,8 @@ def groupby_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # A2 exact COUNT DISTINCT per group (expand+two-phase agg in Spark) is
 # driver-verified inside `date_spine_gapfill` (daily distinct users);
-# approx_count_distinct / HLL sketches are the 100 TB variant — see
-# functions/sketches.py (error-bound-tested, not oracle-comparable).
+# approx_count_distinct (an HLL sketch) is the 100 TB variant; its answers
+# are approximate, so it has no oracle row.
 
 
 # ---------------------------------------------------------------------------

@@ -118,6 +118,3 @@ def _rebalance(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     except Exception:
         return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
