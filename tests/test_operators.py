@@ -941,6 +941,33 @@ def test_simhash_properties(spark):
     assert [(p.doc_a, p.doc_b, p.hamming) for p in pairs] == [(1, 2, 0)]
 
 
+def test_simhash_pairs_match_brute_force(spark):
+    """Without an oracle: on the sf0.001 documents the band join returns
+    exactly the pairs a < b that share the low or the high byte of their
+    signatures and differ in at most 4 bits, each pair once."""
+    from youtube_api_data_etl_automation_spark.sources.tables import load_table
+
+    from .conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    sig = sorted((r.doc_id, r.simhash) for r in simhash(docs).collect())
+    want, bands = set(), set()
+    for i, (a, x) in enumerate(sig):
+        for b, y in sig[i + 1:]:
+            d = (x ^ y).bit_count()
+            lo, hi = x % 256 == y % 256, x // 256 == y // 256
+            if (lo or hi) and d <= 4:
+                want.add((a, b, d))
+                bands.add((lo, hi))
+    got = [(r.doc_a, r.doc_b, r.hamming)
+           for r in simhash_pairs(docs, max_hamming=4).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    # The data has pairs found by only the low band, only the high band,
+    # and by both (identical signatures, which distinct must keep once).
+    assert bands == {(True, False), (False, True), (True, True)}
+
+
 def test_brute_force_topk_finds_identical_vector(spark):
     rows = [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.9, 0.1, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -1045,8 +1072,9 @@ def test_variant_path_matches_from_json(spark):
 
 
 def test_connected_components_string_ids(spark):
-    """r6: non-numeric node ids use the join-based convergence probe (the
-    numeric sum probe would throw under ANSI); min-label propagates
+    """r6: non-numeric node ids take the same path as numeric ones (the
+    observed count_if(label < own) probe only compares ids, where a
+    sum(label) probe would throw under ANSI); min-label propagates
     lexicographically across a >2-hop chain."""
     from youtube_api_data_etl_automation_spark.operators.dedup import (
         connected_components,
@@ -1059,6 +1087,79 @@ def test_connected_components_string_ids(spark):
     )
     got = {r.doc_id: r.canonical_id for r in connected_components(pairs).collect()}
     assert got == {f"x{i}": "x1" for i in range(1, 6)} | {"y1": "y1", "y2": "y1"}
+
+
+def _cc(pairs, **kw):
+    from youtube_api_data_etl_automation_spark.operators.dedup import (
+        connected_components,
+    )
+
+    return {r.doc_id: r.canonical_id
+            for r in connected_components(pairs, **kw).collect()}
+
+
+def test_connected_components_numeric_chain(spark):
+    """A 30-node chain needs many rounds (its diameter is 29); every node
+    ends on label 1, and a separate pair keeps its own component."""
+    rows = [(i, i + 1) for i in range(1, 30)] + [(100, 101)]
+    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    assert _cc(pairs) == {i: 1 for i in range(1, 31)} | {100: 100, 101: 100}
+
+
+def test_connected_components_empty_pairs(spark):
+    """No pairs: an empty frame, and neither observed count (edges, changed
+    labels) may leave Observation.get waiting for metrics that never come."""
+    import threading
+
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = {}
+    t = threading.Thread(target=lambda: out.setdefault("cc", _cc(pairs)), daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "connected_components hung on empty pairs"
+    assert out["cc"] == {}
+
+
+def test_connected_components_one_round_is_two_hops(spark):
+    """max_iter=1 stops after one round; on a 10-node chain node k holds
+    the min over its 2-hop neighborhood, max(1, k - 2)."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 10)], "doc_a long, doc_b long"
+    )
+    assert _cc(pairs, max_iter=1) == {k: max(1, k - 2) for k in range(1, 11)}
+
+
+def test_connected_components_job_count(spark):
+    """Spark jobs per connected_components call on a fixed graph (a 5-node
+    chain and a pair: three rounds, the last changes nothing), counted
+    from its job group: one eager checkpoint of the edges plus one per
+    round. The edge count and each round's convergence probe are observed
+    on those checkpoints, so neither runs a job of its own. AQE is off for
+    the count: with it on, every shuffle stage is a job too, and the order
+    in which AQE re-plans them varied the total between 30 and 33 over 25
+    calls (the count()/sum-probe version: 36-37)."""
+    from youtube_api_data_etl_automation_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)], "doc_a long, doc_b long"
+    )
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("cc_pin", "connected_components job-count pin")
+    try:
+        cc = connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_pin"))
+    assert {r.doc_id: r.canonical_id for r in cc.collect()} == (
+        {i: 1 for i in range(1, 6)} | {7: 7, 8: 7}
+    )
+    assert n_jobs == 1 + 3
 
 
 def test_quantize_int8_nan_element_does_not_crash(spark):

@@ -165,6 +165,25 @@ def test_neardup_pairs_has_no_nested_loop_join(spark):
     assert "Join" in plan
 
 
+def test_simhash_pairs_one_band_join_and_no_persist(spark):
+    """SimHash candidates come from ONE equi-join on the folded band key
+    (never a nested-loop or cartesian join), and forcing the pairs leaves
+    nothing in the session's cache manager."""
+    from youtube_api_data_etl_automation_spark.operators.simhash import (
+        simhash_pairs,
+    )
+
+    spark.catalog.clearCache()
+    df = simhash_pairs(load_table(spark, SF_DIR, "documents"), max_hamming=4)
+    plan = _plan(df)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert len(joins) == 1 and "band" in joins[0], plan
+    df.write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_ngram_jaccard_hot_shingles_filtered_by_broadcast_anti_join(spark):
     """The stop-shingle cap must distribute as a broadcast anti-join of the
     (tiny) hot set — not shuffle the full shingle relation a second time."""

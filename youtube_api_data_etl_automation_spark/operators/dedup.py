@@ -20,7 +20,7 @@ reproducible across engines — which is exactly what the DuckDB oracle checks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round6
@@ -131,91 +131,71 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     graph by iterative min-label propagation. Output: (doc_id, canonical_id)
     for every doc appearing in ≥1 pair; canonical_id = min id in component.
 
-    The iterative Spark shape: each round is one equi-join + min-aggregate
-    (both shuffles keyed on the node id, so the partitioning is reused);
-    the driver only runs the O(1) convergence probe. Rounds needed = graph
-    diameter — near-dup clusters are shallow (stars/cliques), so 2-4 rounds
-    in practice. Each round's frame is localCheckpoint'ed: without lineage
-    truncation the logical plan doubles per iteration (labels appears twice
-    in the round's plan) and analysis itself blows up long before the data
-    does — the canonical iterative-on-Spark trap."""
+    The iterative Spark shape: each hop is one equi-join + min-aggregate
+    (both shuffles keyed on the node id, so the partitioning is reused),
+    and a round is two hops ending in ONE eager localCheckpoint. The
+    convergence probe rides on that checkpoint's job as an observed
+    ``count_if(label < own)``, where ``own`` is the node's label before
+    the round's second hop: a hop that changes no label means the labels
+    are the fixpoint. Only ``min`` and ``<`` touch the ids, so any
+    orderable id type (numbers, strings) takes the same path. Rounds
+    needed ≈ graph diameter / 2, the last one changing nothing in its
+    second hop — near-dup clusters are shallow (stars/cliques): 3-5
+    rounds on the query graphs from sf0.001 to sf0.1. The checkpoint
+    also truncates lineage: without it the logical plan doubles per hop
+    (labels appears twice in each hop's plan) and analysis itself blows
+    up long before the data does — the canonical iterative-on-Spark
+    trap."""
     e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    # LAZY checkpoints throughout the setup (r14): the count() below is
-    # the one action that materializes the pair computation, and the
-    # repartitioned-edges + labels checkpoints both materialize inside
-    # the first convergence probe — two driver-synchronized jobs before
-    # the loop instead of the former five (each eager checkpoint ran its
-    # own job; at fixture scale the fixed per-job cost dominated).
-    edges = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
-    # Size the loop to the graph: per-round task count tracks edge volume
-    # instead of the global shuffle setting, so small graphs don't pay
-    # dozens of empty-task launches per round and huge graphs still fan
-    # out. (~100k edges per partition.)
-    n_edges = edges.count()
+    # One eager job materializes the pair computation; its edge count,
+    # observed inside that job, sizes the loop to the graph: per-round task
+    # count tracks edge volume instead of the global shuffle setting, so
+    # small graphs don't pay dozens of empty-task launches per round and
+    # huge graphs still fan out. (~100k edges per partition.)
+    n_obs = Observation()
+    edges = (
+        e.union(e.selectExpr("b AS a", "a AS b"))
+        .observe(n_obs, F.expr("count(1) AS n"))
+        .localCheckpoint()
+    )
     target = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parts = max(1, min(target, n_edges // 100_000 + 1))
+    parts = max(1, min(target, n_obs.get["n"] // 100_000 + 1))
+    # Lazy: both materialize inside the first round's checkpoint job.
     edges = edges.repartition(parts, "a").localCheckpoint(eager=False)
     labels = (
-        edges.select(F.col("a").alias("node"))
+        edges.selectExpr("a AS node")
         .repartition(parts, "node")
         .distinct()
-        .withColumn("label", F.col("node"))
+        .selectExpr("node", "node AS label")
         .localCheckpoint(eager=False)
     )
-    # Convergence probe. For numeric ids: labels only decrease
-    # (min-propagation), so sum(label) is strictly decreasing until the
-    # fixpoint — a one-number aggregate over the checkpointed frame. For
-    # NON-numeric ids (string keys are a legal input — min propagates
-    # lexicographically), sum(label) would either throw under ANSI or
-    # return NULL and fake instant convergence (r6 review), so the probe
-    # becomes an any-label-changed join: both frames are checkpointed and
-    # hash-partitioned on node, so the join is co-located — one extra
-    # narrow job per round, no extra exchange.
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(labels.schema["label"].dataType, NumericType)
-
-    prev_sum = labels.agg(F.sum("label")).first()[0] if numeric_ids else None
     for _ in range(max_iter):
         # Two propagation hops per materialized round: labels reach 2-hop
-        # neighborhoods before the checkpoint+probe roundtrip, halving the
-        # number of driver-synchronized rounds (plan depth stays bounded at
-        # 2 hops — the exponential-growth trap needs unbounded nesting).
-        new_labels = labels
+        # neighborhoods before the checkpoint, halving the number of
+        # driver-synchronized rounds (plan depth stays bounded at 2 hops —
+        # the exponential-growth trap needs unbounded nesting). The union
+        # carries each node's current label as ``own``; the propagated
+        # rows carry NULL, which min() skips.
         for _hop in range(2):
-            prop = edges.join(new_labels, edges.a == new_labels.node).select(
-                F.col("b").alias("node"), "label"
+            prop = edges.join(labels, F.expr("a = node")).selectExpr(
+                "b AS node", "label", "NULL AS own"
             )
             # repartition-then-groupBy on the same key: one sized exchange
             # (the aggregate reuses the partitioning).
-            new_labels = (
-                new_labels.union(prop)
+            labels = (
+                labels.selectExpr("node", "label", "label AS own")
+                .union(prop)
                 .repartition(parts, "node")
                 .groupBy("node")
-                .agg(F.min("label").alias("label"))
+                .agg(F.expr("min(label) AS label"), F.expr("min(own) AS own"))
             )
-        # Lazy checkpoint: the convergence probe below is the action that
-        # materializes it — one job per round, not two.
-        new_labels = new_labels.localCheckpoint(eager=False)
-        if numeric_ids:
-            new_sum = new_labels.agg(F.sum("label")).first()[0]
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            old = labels.select(
-                F.col("node"), F.col("label").alias("_old_label")
-            )
-            converged = (
-                new_labels.join(old, "node")
-                .filter(~F.col("label").eqNullSafe(F.col("_old_label")))
-                .isEmpty()
-            )
-        labels = new_labels
-        if converged:
+        changed = Observation()
+        labels = labels.observe(
+            changed, F.expr("count_if(label < own) AS n")
+        ).localCheckpoint()
+        if changed.get["n"] == 0:
             break
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("canonical_id"))
+    return labels.selectExpr("node AS doc_id", "label AS canonical_id")
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",

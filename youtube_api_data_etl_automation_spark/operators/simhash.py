@@ -6,9 +6,12 @@ DuckDB oracle reproduces it digit-for-digit). A document's bit j is the sign
 of the sum of contributions (±1) across its distinct tokens.
 
 Scale shape: one explode (doc → distinct tokens), one groupBy(doc) computing
-all 16 bit-sums in a single shuffle, then near-dup candidates come from an
-equi-join on byte-halves of the signature (Hamming-LSH banding), scored by
-exact bit_count(xor).
+all 16 bit-sums in a single shuffle, then near-dup candidates come from ONE
+equi-join on a band key that folds the band index into its value (low byte
+as 0-255, high byte as 256-511: Hamming-LSH banding in one exchange per
+side), scored by exact bit_count(xor). The bit sums, the signature fold and
+the band key are SQL text built once at import: one parsed string per
+column instead of one py4j round-trip per Column node.
 
 Recall bound (pigeonhole, 2 bands of 8 bits): a pair is GUARANTEED to share
 an exact half only when total Hamming distance ≤ 1. At distance d ≥ 2 the
@@ -38,11 +41,18 @@ from ..functions.text import tokens
 
 N_BITS = 16
 
-
-def _digit_parity(hx: F.Column, j: int) -> F.Column:
-    """Parity of hex digit j of a pre-computed md5 hex digest → ±1."""
-    digit = F.conv(F.substring(hx, j + 1, 1), 16, 10).cast("int") % 2
-    return digit * 2 - 1
+# Bit j of a token's contribution: parity of hex digit j of the projected
+# md5 digest, mapped to ±1; bit j of the signature: sign of its sum.
+_BIT_SUMS = [
+    f"sum((CAST(conv(substring(hx, {j + 1}, 1), 16, 10) AS INT) % 2) * 2 - 1) AS b{j}"
+    for j in range(N_BITS)
+]
+_SIGNATURE = " + ".join(
+    f"CAST(b{j} > 0 AS BIGINT) * {1 << j}" for j in range(N_BITS)
+) + " AS simhash"
+# Band key: the low byte as 0-255 and the high byte as 256-511, so one
+# equi-join on it is the union of the two per-band joins.
+_BANDS = "explode(array(simhash % 256, floor(simhash / 256) + 256)) AS band"
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -53,53 +63,40 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     # repartition, duplicating the tokenize tree in a pre-exchange Filter.
     toks = (
         docs.select(F.col(id_col).alias("doc_id"), F.explode_outer(tokens(text_col)).alias("tok"))
-        .filter(F.col("tok").isNotNull())
+        .filter("tok IS NOT NULL")
         .distinct()
     )
     # md5 projected ONCE per (doc, token); the 16 per-bit aggregates read
     # hex digits of the projected digest (inlining md5 into each aggregate
     # expression would hash every row 16x).
-    hashed = toks.select("doc_id", F.md5("tok").alias("hx"))
-    sums = hashed.groupBy("doc_id").agg(
-        *[F.sum(_digit_parity(F.col("hx"), j)).alias(f"b{j}") for j in range(N_BITS)]
-    )
-    sig = None
-    for j in range(N_BITS):
-        bit = (F.col(f"b{j}") > 0).cast("long") * F.lit(1 << j)
-        sig = bit if sig is None else sig + bit
-    return sums.select("doc_id", sig.alias("simhash"))
+    hashed = toks.selectExpr("doc_id", "md5(tok) AS hx")
+    sums = hashed.groupBy("doc_id").agg(*[F.expr(b) for b in _BIT_SUMS])
+    return sums.selectExpr("doc_id", _SIGNATURE)
 
 
 def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   max_hamming: int = 4) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share a signature half
-    (Hamming-LSH band join), scored by exact Hamming distance.
+    (Hamming-LSH banding: one equi-join on the band key, never a cross
+    join), scored by exact Hamming distance.
 
     Recall is guaranteed only for pairs at Hamming distance ≤ 1 (see module
     docstring); with the default ``max_hamming=4``, pairs whose differing
     bits split across both halves are (deliberately) missed — the oracle
-    mirrors the same banding, so parity holds by construction."""
-    sig = simhash(docs, text_col, id_col)
-    halves = sig.select(
-        "doc_id",
-        "simhash",
-        (F.col("simhash") % 256).alias("lo"),
-        F.floor(F.col("simhash") / 256).cast("long").alias("hi"),
-    ).persist()  # reused by both band joins and both sides of each
-
-    def band_join(band: str) -> DataFrame:
-        # Equi-join per band (an OR across bands would force a nested-loop
-        # cross join; the union-of-equi-joins form stays hash-partitioned).
-        a, b = halves.alias("a"), halves.alias("b")
-        return a.join(
-            b,
-            (F.col(f"a.{band}") == F.col(f"b.{band}"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+    mirrors the same banding, so parity holds by construction. A pair that
+    shares both halves is an identical signature; ``distinct`` keeps it
+    once."""
+    bands = simhash(docs, text_col, id_col).selectExpr("doc_id", "simhash", _BANDS)
+    # Both join sides are the same relation, so the signature aggregate's
+    # exchange runs once and the other side reuses it.
+    return (
+        bands.alias("a")
+        .join(bands.alias("b"), F.expr("a.band = b.band AND a.doc_id < b.doc_id"))
+        .selectExpr(
+            "a.doc_id AS doc_a",
+            "b.doc_id AS doc_b",
+            "bit_count(a.simhash ^ b.simhash) AS hamming",
         )
-
-    cand = band_join("lo").unionByName(band_join("hi")).distinct()
-    return cand.filter(F.col("hamming") <= max_hamming)
+        .filter(f"hamming <= {max_hamming}")
+        .distinct()
+    )

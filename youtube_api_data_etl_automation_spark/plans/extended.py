@@ -337,9 +337,9 @@ def neardup_pairs_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, so a tag-union verifies every sub-quadratic candidate plan side
     by side).
 
-    `simhash`: Hamming-LSH banding on signature halves (union of
-    equi-joins — never a cross join), exact bit_count rescore; score =
-    Hamming distance. `embedding`: most-similar cosine pairs within a
+    `simhash`: Hamming-LSH banding on signature halves (ONE equi-join
+    on a band key that folds the band index into its value — never a
+    cross join), exact bit_count rescore; score = Hamming distance. `embedding`: most-similar cosine pairs within a
     deterministic sample, candidates from the sign-LSH bucket equi-join
     (near-identical vectors share every hyperplane sign); score = cosine.
     `fuzzy_name`: edit-distance ≤ 1 entity resolution over customer names
@@ -460,7 +460,8 @@ _CC_CTES_H = """
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assembly: SimHash near-dup pairs → connected
     components by iterative min-label propagation (the iterative-algorithm
-    shape: per-round join+aggregate, driver-side O(1) convergence probe).
+    shape: per-hop join+aggregate, convergence observed inside each
+    round's checkpoint job).
     Oracle = DuckDB recursive CTE over the identical pair graph."""
     from ..operators.dedup import connected_components
 
