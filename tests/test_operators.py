@@ -370,6 +370,44 @@ def test_decode_png_malformed_refuses_with_valueerror():
         )
 
 
+def test_decode_png_checks_sizes_before_allocating():
+    """A header that declares 2^31 rows over a few IDAT bytes, and a small
+    deflate bomb behind a 4x3 header, are both refused with a DECODE_ERRORS
+    class without allocating the declared size: the inflate is capped one
+    byte past the header's size, and the pixel buffer is allocated only
+    after the inflated length matches."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    ok = _png([[(1, 2, 3)] * 4] * 3)
+    ihdr_at = ok.index(b"IHDR")
+    idat_at = ok.index(b"IDAT")
+
+    def with_chunk(png, at, ctype, body):
+        # replace the chunk whose type starts at ``at`` (keeps the rest)
+        (length,) = struct.unpack(">I", png[at - 4:at])
+        chunk = struct.pack(">I", len(body)) + ctype + body \
+            + struct.pack(">I", zlib.crc32(ctype + body))
+        return png[:at - 4] + chunk + png[at + 8 + length:]
+
+    ihdr = bytearray(ok[ihdr_at + 4:ihdr_at + 17])
+    ihdr[4:8] = struct.pack(">I", 1 << 31)
+    tall = with_chunk(ok, ihdr_at, b"IHDR", bytes(ihdr))
+    bomb = with_chunk(ok, idat_at, b"IDAT",
+                      zlib.compress(b"\x00" * (64 << 20), 9))
+    assert len(bomb) < 100_000
+    for payload in (tall, bomb):
+        tracemalloc.start()
+        try:
+            with pytest.raises(multimodal.DECODE_ERRORS, match="expected"):
+                multimodal._decode_rgb(payload)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 4 << 20, peak
+
+
 def test_decode_png_slow_filter_budget(spark):
     """The Average/Paeth recurrence is the one pure-Python loop in PNG
     decode; a wide wall-to-wall-Paeth image must (a) still decode
@@ -1073,9 +1111,8 @@ def test_variant_path_matches_from_json(spark):
 
 def test_connected_components_string_ids(spark):
     """r6: non-numeric node ids take the same path as numeric ones (the
-    observed count_if(label < own) probe only compares ids, where a
-    sum(label) probe would throw under ANSI); min-label propagates
-    lexicographically across a >2-hop chain."""
+    solver ranks ids by sort order, so only comparisons touch them); the
+    minimum id labels a >2-hop chain lexicographically."""
     from youtube_api_data_etl_automation_spark.operators.dedup import (
         connected_components,
     )
@@ -1089,26 +1126,26 @@ def test_connected_components_string_ids(spark):
     assert got == {f"x{i}": "x1" for i in range(1, 6)} | {"y1": "y1", "y2": "y1"}
 
 
-def _cc(pairs, **kw):
+def _cc(pairs):
     from youtube_api_data_etl_automation_spark.operators.dedup import (
         connected_components,
     )
 
     return {r.doc_id: r.canonical_id
-            for r in connected_components(pairs, **kw).collect()}
+            for r in connected_components(pairs).collect()}
 
 
 def test_connected_components_numeric_chain(spark):
-    """A 30-node chain needs many rounds (its diameter is 29); every node
-    ends on label 1, and a separate pair keeps its own component."""
+    """A 30-node chain (diameter 29): every node ends on label 1, and a
+    separate pair keeps its own component."""
     rows = [(i, i + 1) for i in range(1, 30)] + [(100, 101)]
     pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
     assert _cc(pairs) == {i: 1 for i in range(1, 31)} | {100: 100, 101: 100}
 
 
 def test_connected_components_empty_pairs(spark):
-    """No pairs: an empty frame, and neither observed count (edges, changed
-    labels) may leave Observation.get waiting for metrics that never come."""
+    """No pairs: an empty frame, and the observed edge count may not leave
+    Observation.get waiting for metrics that never come."""
     import threading
 
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
@@ -1120,46 +1157,96 @@ def test_connected_components_empty_pairs(spark):
     assert out["cc"] == {}
 
 
-def test_connected_components_one_round_is_two_hops(spark):
-    """max_iter=1 stops after one round; on a 10-node chain node k holds
-    the min over its 2-hop neighborhood, max(1, k - 2)."""
+@pytest.mark.parametrize("n", [40, 43, 60, 100, 10_000])
+def test_connected_components_long_chain(spark, n):
+    """Exact at any diameter: a chain of n nodes, its edges in shuffled
+    order and orientation, is one component labelled 1 (40 to 100 nodes
+    straddle the 40-hop reach of a 20-round two-hop label propagation)."""
+    import random
+
+    rng = random.Random(n)
+    rows = [(i, i + 1) if rng.random() < 0.5 else (i + 1, i) for i in range(1, n)]
+    rng.shuffle(rows)
+    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    assert _cc(pairs) == {i: 1 for i in range(1, n + 1)}
+
+
+def test_connected_components_many_rounds_match_union_find(spark, monkeypatch):
+    """With the edges-per-task budget patched low, a random graph runs
+    through several halving rounds (one mapInArrow per round in the plan)
+    and still equals a plain union-find, self-loops included."""
+    import random
+
+    from youtube_api_data_etl_automation_spark.operators import dedup
+
+    rng = random.Random(11)
+    rows = [(rng.randrange(2500), rng.randrange(2500)) for _ in range(2000)]
+    rows += [(9000, 9000), (9001, 9001), (9001, 9002)]
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+
+    monkeypatch.setattr(dedup, "_EDGES_PER_TASK", 200)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        cc = dedup.connected_components(
+            spark.createDataFrame(rows, "doc_a long, doc_b long"))
+    finally:
+        spark.conf.set(key, prev)
+    rounds = cc._jdf.queryExecution().analyzed().toString().count("MapInArrow")
+    assert rounds == 5  # 11 -> 6 -> 3 -> 2 -> 1 partitions
+    assert {r.doc_id: r.canonical_id for r in cc.collect()} == want
+
+
+def test_connected_components_drops_null_ended_pairs(spark):
+    """NULL is not a doc id: a pair with a NULL end is dropped, so it
+    neither adds a NULL node nor joins its other end to anything."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 10)], "doc_a long, doc_b long"
+        [(1, 2), (2, None), (None, 3), (3, 4), (None, None)],
+        "doc_a long, doc_b long",
     )
-    assert _cc(pairs, max_iter=1) == {k: max(1, k - 2) for k in range(1, 11)}
+    assert _cc(pairs) == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
-def test_connected_components_job_count(spark):
-    """Spark jobs per connected_components call on a fixed graph (a 5-node
-    chain and a pair: three rounds, the last changes nothing), counted
-    from its job group: one eager checkpoint of the edges plus one per
-    round. The edge count and each round's convergence probe are observed
-    on those checkpoints, so neither runs a job of its own. AQE is off for
-    the count: with it on, every shuffle stage is a job too, and the order
-    in which AQE re-plans them varied the total between 30 and 33 over 25
-    calls (the count()/sum-probe version: 36-37)."""
+@pytest.mark.parametrize("n", [5, 10_000])
+def test_connected_components_construction_is_one_job(spark, n):
+    """Building the lazy result runs exactly one Spark job, the eager
+    edges checkpoint whose observed count sizes the rounds; the rounds
+    themselves run inside the caller's action. Counted from a job group
+    with AQE on (the session default)."""
     from youtube_api_data_etl_automation_spark.operators.dedup import (
         connected_components,
     )
 
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(1, n)] + [(n + 10, n + 11)],
+        "doc_a long, doc_b long",
     )
     sc = spark.sparkContext
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("cc_pin", "connected_components job-count pin")
+    group = f"cc_pin_{n}"
+    sc.setJobGroup(group, "connected_components job-count pin")
     try:
         cc = connected_components(pairs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_pin"))
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert {r.doc_id: r.canonical_id for r in cc.collect()} == (
-        {i: 1 for i in range(1, 6)} | {7: 7, 8: 7}
+        {i: 1 for i in range(1, n + 1)} | {n + 10: n + 10, n + 11: n + 10}
     )
-    assert n_jobs == 1 + 3
+    assert n_jobs == 1
 
 
 def test_quantize_int8_nan_element_does_not_crash(spark):

@@ -190,8 +190,8 @@ def curate_corpus(
     (the text that actually ships) at this estimated-Jaccard threshold,
     clusters assembled by connected components, min-id survivor per
     cluster. The scale shape is the operators' own: banded equi-join
-    candidates (never all-pairs), label propagation shuffling only
-    (id, label), and the final drop-list applied as a broadcast anti-join
+    candidates (never all-pairs), connected components shuffling only
+    (id, id) edges, and the final drop-list applied as a broadcast anti-join
     so document bodies never enter an exchange for this stage (the drop
     list is the non-survivors of near-dup clusters — a small fraction of
     any sane corpus; for a pathological mostly-duplicates corpus flip to

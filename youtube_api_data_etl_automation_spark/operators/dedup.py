@@ -1,7 +1,7 @@
 """Deduplication operator family for LLM-data pipelines (north-star ops).
 
-All variants are pure DataFrame compositions — no Python UDFs — so they run
-JVM-side and scale by partitioning on the dedup key:
+The pair variants are pure DataFrame compositions — no Python UDFs — so they
+run JVM-side and scale by partitioning on the dedup key:
 
 - exact:        md5 content fingerprint → groupBy. Shuffles only
                 (fingerprint, doc_id) pairs, never document bodies.
@@ -13,6 +13,7 @@ JVM-side and scale by partitioning on the dedup key:
                 permutations (a groupBy, fully parallel); banding turns
                 near-dup search into an equi-join on (band, band_hash) —
                 the classic sub-quadratic candidate generation at 100 TB.
+- clusters:     connected components: per-partition union-find rounds.
 
 Hashes are md5 hex strings (not engine-native ``hash()``) so results are
 reproducible across engines — which is exactly what the DuckDB oracle checks.
@@ -125,77 +126,75 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     )
 
 
-def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
-                         max_iter: int = 20) -> DataFrame:
-    """Duplicate-cluster assembly: connected components over a near-dup pair
-    graph by iterative min-label propagation. Output: (doc_id, canonical_id)
-    for every doc appearing in ≥1 pair; canonical_id = min id in component.
+_EDGES_PER_TASK = 100_000
 
-    The iterative Spark shape: each hop is one equi-join + min-aggregate
-    (both shuffles keyed on the node id, so the partitioning is reused),
-    and a round is two hops ending in ONE eager localCheckpoint. The
-    convergence probe rides on that checkpoint's job as an observed
-    ``count_if(label < own)``, where ``own`` is the node's label before
-    the round's second hop: a hop that changes no label means the labels
-    are the fixpoint. Only ``min`` and ``<`` touch the ids, so any
-    orderable id type (numbers, strings) takes the same path. Rounds
-    needed ≈ graph diameter / 2, the last one changing nothing in its
-    second hop — near-dup clusters are shallow (stars/cliques): 3-5
-    rounds on the query graphs from sf0.001 to sf0.1. The checkpoint
-    also truncates lineage: without it the logical plan doubles per hop
-    (labels appears twice in each hop's plan) and analysis itself blows
-    up long before the data does — the canonical iterative-on-Spark
-    trap."""
-    e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    # One eager job materializes the pair computation; its edge count,
-    # observed inside that job, sizes the loop to the graph: per-round task
-    # count tracks edge volume instead of the global shuffle setting, so
-    # small graphs don't pay dozens of empty-task launches per round and
-    # huge graphs still fan out. (~100k edges per partition.)
+
+def _spanning_forest(final: bool):
+    """``mapInArrow`` union-find over one partition of ``(a, b)`` edges; it
+    imports only numpy and pyarrow, so it ships by value. Roots hook onto
+    their smallest neighbouring root (ids ranked by sort order) and
+    pointers jump to the roots; a root left a singleton has only smaller
+    neighbours next pass, so roots halve every two passes. Emits ``(node,
+    root)`` per non-root or self-loop-only node, or per node if ``final``."""
+
+    def solve(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = [rb for rb in batches if rb.num_rows]
+        if not batches:
+            return
+        a, b = pa.Table.from_batches(batches).columns
+        ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, a.type))
+        ids = ids.take(pc.sort_indices(ids))
+        ia, ib = (pc.index_in(c, value_set=ids).to_numpy() for c in (a, b))
+        node = np.arange(len(ids))
+        parent = node.copy()
+        while True:
+            ra, rb = parent[ia], parent[ib]
+            cross = ra != rb
+            if not cross.any():
+                break
+            ia, ib, ra, rb = ia[cross], ib[cross], ra[cross], rb[cross]
+            np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+            jumped = parent[parent]
+            while (jumped != parent).any():
+                parent, jumped = jumped, jumped[jumped]
+        sizes = np.bincount(parent, minlength=len(ids))
+        keep = (parent != node) | (sizes == 1) | final
+        yield pa.RecordBatch.from_arrays(
+            [ids.take(node[keep]), ids.take(parent[keep])], names=["a", "b"]
+        )
+
+    return solve
+
+
+def connected_components(pairs: DataFrame, a_col: str = "doc_a",
+                         b_col: str = "doc_b") -> DataFrame:
+    """Duplicate clusters by spanning-forest reduction: (doc_id, canonical_id
+    = min id in component) for every doc in ≥1 pair of one orderable id
+    type; a pair with a NULL end is dropped. The eager edges checkpoint is
+    the only construction job; its observed count sizes the first round at
+    ``P = min(shuffle partitions, edges // 100k + 1)``. A round is
+    ``repartition(P, "a")`` plus one :func:`_spanning_forest` task per
+    partition, which writes its spanning forest (never more edges than it
+    read). ``P`` halves per round and the one-partition round emits every
+    node with its root: ``ceil(log2 P) + 1`` lazy rounds at any diameter.
+    That task holds the input when ``P`` starts at 1, else the last
+    round's ≤ 2 forests: ≤ 2 × (nodes − components) edges."""
+    edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).dropna()
     n_obs = Observation()
-    edges = (
-        e.union(e.selectExpr("b AS a", "a AS b"))
-        .observe(n_obs, F.expr("count(1) AS n"))
-        .localCheckpoint()
-    )
+    edges = edges.observe(n_obs, F.expr("count(1) AS n")).localCheckpoint()
     target = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parts = max(1, min(target, n_obs.get["n"] // 100_000 + 1))
-    # Lazy: both materialize inside the first round's checkpoint job.
-    edges = edges.repartition(parts, "a").localCheckpoint(eager=False)
-    labels = (
-        edges.selectExpr("a AS node")
-        .repartition(parts, "node")
-        .distinct()
-        .selectExpr("node", "node AS label")
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
-        # Two propagation hops per materialized round: labels reach 2-hop
-        # neighborhoods before the checkpoint, halving the number of
-        # driver-synchronized rounds (plan depth stays bounded at 2 hops —
-        # the exponential-growth trap needs unbounded nesting). The union
-        # carries each node's current label as ``own``; the propagated
-        # rows carry NULL, which min() skips.
-        for _hop in range(2):
-            prop = edges.join(labels, F.expr("a = node")).selectExpr(
-                "b AS node", "label", "NULL AS own"
-            )
-            # repartition-then-groupBy on the same key: one sized exchange
-            # (the aggregate reuses the partitioning).
-            labels = (
-                labels.selectExpr("node", "label", "label AS own")
-                .union(prop)
-                .repartition(parts, "node")
-                .groupBy("node")
-                .agg(F.expr("min(label) AS label"), F.expr("min(own) AS own"))
-            )
-        changed = Observation()
-        labels = labels.observe(
-            changed, F.expr("count_if(label < own) AS n")
-        ).localCheckpoint()
-        if changed.get["n"] == 0:
-            break
-    return labels.selectExpr("node AS doc_id", "label AS canonical_id")
+    parts = min(target, n_obs.get["n"] // _EDGES_PER_TASK + 1)
+    while True:
+        edges = edges.repartition(parts, "a").mapInArrow(
+            _spanning_forest(parts == 1), edges.schema
+        )
+        if parts == 1:
+            return edges.selectExpr("a AS doc_id", "b AS canonical_id")
+        parts = (parts + 1) // 2
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -359,7 +359,7 @@ def dedup_images(blobs: DataFrame, max_hamming: int = 4,
     (corpus.curate_corpus's neardup stage):
 
     decode+hash (probe-budgeted, quarantine) → banded Hamming pairs
-    (exact recall at the radius) → connected components (min-label
+    (exact recall at the radius) → connected components (min-id
     clusters, operators/dedup.py) → survivors = every unclustered image
     plus each cluster's canonical (min-id) member.
 
@@ -368,8 +368,9 @@ def dedup_images(blobs: DataFrame, max_hamming: int = 4,
     DataFrame(doc_id, error, error_kind), "audit": DataFrame(stage,
     n)}`` — the audit counts each stage so a curation report can show
     where images went. Plan: one decode pass, one band-key shuffle for
-    pairs, diameter-bounded CC rounds; re-encoded copies of the same
-    pixels collapse by construction (the hash sees pixels, not bytes)."""
+    pairs, log-round CC (one round under 100k pairs); re-encoded copies of
+    the same pixels collapse by construction (the hash sees pixels, not
+    bytes)."""
     from .dedup import connected_components
 
     hashed = image_hashes(blobs, errors="quarantine",

@@ -316,6 +316,7 @@ def _decode_png(payload: bytes,
     NotImplementedError left is the Average/Paeth byte budget
     (recoverable 'unsupported'). Returns an HxWx3 RGB uint8 array."""
     import struct
+    import sys
     import zlib
 
     import numpy as np
@@ -366,10 +367,6 @@ def _decode_png(payload: bytes,
         pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
     if not idat:
         raise ValueError("malformed PNG: no IDAT data")
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as e:
-        raise ValueError(f"malformed PNG: IDAT inflate failed ({e})") from None
 
     bpp_bits = depth * ch
     bpp = max(1, bpp_bits // 8)
@@ -377,7 +374,6 @@ def _decode_png(payload: bytes,
     def stride_of(width):
         return (width * bpp_bits + 7) // 8
 
-    samples = np.zeros((h, w, ch), dtype=np.uint8)
     passes = (
         [(0, 0, 1, 1)] if interlace == 0 else _ADAM7
     )
@@ -391,12 +387,21 @@ def _decode_png(payload: bytes,
         pass_dims.append((pw, ph))
         if pw and ph:
             expected += ph * (stride_of(pw) + 1)
+    # Check sizes before allocating: the inflate stops one byte past what
+    # the header declares (a deflate bomb expands no further), and the pixel
+    # buffer is allocated only once the stream matches the header exactly.
+    try:
+        raw = zlib.decompressobj().decompress(
+            bytes(idat), min(expected + 1, sys.maxsize))
+    except zlib.error as e:
+        raise ValueError(f"malformed PNG: IDAT inflate failed ({e})") from None
     if len(raw) != expected:
         raise ValueError(
             f"malformed PNG: decompressed stream is {len(raw)} bytes, "
             f"expected {expected} for {w}x{h} depth={depth} "
             f"color={color} interlace={interlace}"
         )
+    samples = np.zeros((h, w, ch), dtype=np.uint8)
     for (x0, y0, dx, dy), (pw, ph) in zip(passes, pass_dims):
         if not pw or not ph:
             continue

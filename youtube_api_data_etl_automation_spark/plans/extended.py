@@ -459,9 +459,9 @@ _CC_CTES_H = """
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assembly: SimHash near-dup pairs → connected
-    components by iterative min-label propagation (the iterative-algorithm
-    shape: per-hop join+aggregate, convergence observed inside each
-    round's checkpoint job).
+    components by spanning-forest reduction (one eager edges checkpoint,
+    then one union-find ``mapInArrow`` task per partition per halving
+    round; one round below 100k edges).
     Oracle = DuckDB recursive CTE over the identical pair graph."""
     from ..operators.dedup import connected_components
 
@@ -510,9 +510,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup endgame: near-dup pairs → duplicate clusters (CC) → keep
-    the highest-quality member per cluster. Composes SimHash LSH, iterative
-    connected components, and the quality heuristic into the op a training-
-    data pipeline actually runs: 'which copy survives'. Survivor selection
+    the highest-quality member per cluster. Composes SimHash LSH,
+    spanning-forest connected components, and the quality heuristic into
+    the op a training-data pipeline actually runs: 'which copy survives'. Survivor selection
     is ONE aggregation (count + min_by argmax with the (-q, doc_id)
     ordering struct == q DESC, doc_id ASC) instead of two windows — partial
     aggregation, no per-cluster sort."""
