@@ -78,6 +78,27 @@ def _blob_df(spark, rows):
         "doc_id long, payload binary")
 
 
+def _warc_documents(blobs):
+    """Crawl responses as (doc_id, text, source) document rows: markup
+    stripped off each response body, the target URI as the source."""
+    from pyspark.sql import functions as F
+
+    from youtube_api_data_etl_automation_spark.functions.markup import (
+        strip_markup,
+    )
+
+    return (
+        archives.warc_records(blobs)
+        .filter((F.col("warc_type") == "response")
+                & F.col("body_text").isNotNull())
+        .select(
+            F.xxhash64("doc_id", "record_idx").alias("doc_id"),
+            strip_markup(F.col("body_text")).alias("text"),
+            F.col("target_uri").alias("source"),
+        )
+    )
+
+
 def test_archive_meta_probe(spark):
     gz = gzip.compress(b"hello " * 100, mtime=123)
     # add an FNAME member for the detail field
@@ -149,34 +170,19 @@ def test_warc_refusals(spark):
                               errors="raise").collect()
 
 
-def test_unpack_gzip_text(spark):
-    text = "olá mundo " * 50
-    out = archives.unpack_gzip_text(_blob_df(
-        spark, [(1, gzip.compress(text.encode()))])).collect()[0]
-    assert out["text"] == text
-    assert out["n_bytes"] == len(text.encode())
-    small = archives.unpack_gzip_text(
-        _blob_df(spark, [(1, gzip.compress(text.encode()))]),
-        byte_budget=16).collect()[0]
-    assert small["error_kind"] == "unsupported"
-    bad = archives.unpack_gzip_text(
-        _blob_df(spark, [(1, b"plain")])).collect()[0]
-    assert bad["error_kind"] == "corrupt"
-
-
 def test_zip_members(spark):
     payload = _zip()
-    rows = archives.zip_members(_blob_df(spark, [(1, payload)])).collect()
+    rows = archives.archive_members(
+        _blob_df(spark, [(1, payload)])).collect()
     assert [(r["name"], r["size"]) for r in rows] == \
         [("a.txt", 5), ("dir/b.bin", 100)]
     assert bytes(rows[0]["body"]) == b"alpha"
     assert bytes(rows[1]["body"]) == b"\x00" * 100
-    assert rows[1]["compressed_size"] < 100  # deflate really ran
     # declared-size budget refuses BEFORE inflating anything
-    out = archives.zip_members(_blob_df(spark, [(1, payload)]),
-                               byte_budget=50).collect()[0]
+    out = archives.archive_members(_blob_df(spark, [(1, payload)]),
+                                   byte_budget=50).collect()[0]
     assert out["error_kind"] == "unsupported"
-    out = archives.zip_members(
+    out = archives.archive_members(
         _blob_df(spark, [(1, b"PK\x03\x04garbage")])).collect()[0]
     assert out["error_kind"] == "corrupt"
 
@@ -186,7 +192,8 @@ def test_zip_duplicate_member_names_keep_both_bodies(spark):
     entry wins), so duplicate member names would both yield the LAST
     member's bytes — reading by ZipInfo preserves each body."""
     payload = _zip(members=(("same.txt", b"first"), ("same.txt", b"second")))
-    rows = archives.zip_members(_blob_df(spark, [(1, payload)])).collect()
+    rows = archives.archive_members(
+        _blob_df(spark, [(1, payload)])).collect()
     assert [bytes(r["body"]) for r in rows] == [b"first", b"second"]
     members = archives._iter_archive_members(payload, budget=None)
     assert members == [("same.txt", b"first"), ("same.txt", b"second")]
@@ -224,10 +231,10 @@ def test_warc_body_text_and_malformed_bytes(spark):
 
 
 def test_warc_to_documents_composition(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        warc_to_documents,
-    )
-
+    """Mixed crawl records: the 200 text response carries its decoded
+    body and URI, the 404 and the image keep the status / binary-body
+    signals a caller filters on, a broken payload quarantines, and the
+    response text feeds curate_corpus."""
     html = (b"<html><body><h1>Title</h1><p>This is the kind of page "
             b"that the crawler keeps: it has enough plain English "
             b"words for the language heuristic and the quality "
@@ -246,32 +253,35 @@ def test_warc_to_documents_composition(spark):
         extra=(b"Content-Type: application/http;msgtype=response",))
     info = _warc_record("warcinfo", b"software: test\r\n")
     payload = info + ok + notfound + png
-    docs = warc_to_documents(
-        _blob_df(spark, [(7, payload), (8, b"broken")])).collect()
-    assert len(docs) == 1
-    d = docs[0]
-    assert d["source"] == "https://x.example/page"
-    assert "crawler keeps" in d["text"] and "<p>" not in d["text"]
-    assert d["lang"] is None and d["n_chars"] == len(d["text"])
-    # doc_id is stable across re-ingestion
-    again = warc_to_documents(
-        _blob_df(spark, [(7, payload)])).collect()[0]
-    assert again["doc_id"] == d["doc_id"]
-    # and the result feeds curate_corpus directly
+    rows = archives.warc_records(
+        _blob_df(spark, [(7, payload), (8, b"broken")]),
+        errors="quarantine").collect()
+    by_uri = {r["target_uri"]: r for r in rows if r["doc_id"] == 7}
+    assert [r["warc_type"] for r in rows if r["doc_id"] == 7] == \
+        ["warcinfo", "response", "response", "response"]
+    assert by_uri["https://x.example/page"]["http_status"] == 200
+    assert "crawler keeps" in by_uri["https://x.example/page"]["body_text"]
+    assert by_uri["https://x.example/missing"]["http_status"] == 404
+    assert by_uri["https://x.example/img"]["body_text"] is None
+    assert [r["error_kind"] for r in rows if r["doc_id"] == 8] == \
+        ["corrupt"]
+    # the 200 response's stripped text feeds curate_corpus directly
+    from pyspark.sql import functions as F
+
     from youtube_api_data_etl_automation_spark.corpus import curate_corpus
-    out = curate_corpus(
-        warc_to_documents(_blob_df(spark, [(7, payload)])),
-        min_tokens=1, max_tokens=100, quality_min=0.0, audit=True)
+    docs = _warc_documents(_blob_df(spark, [(7, payload)])).filter(
+        F.col("source") == "https://x.example/page")
+    d = docs.collect()[0]
+    assert "crawler keeps" in d["text"] and "<p>" not in d["text"]
+    out = curate_corpus(docs, min_tokens=1, max_tokens=100,
+                        quality_min=0.0, audit=True)
     assert out["documents"].count() == 1
 
 
 def test_wet_conversion_records_decode_text(spark):
     """WET-shaped files: 'conversion' records carry pre-extracted
     text/plain content with no HTTP envelope — warc_records must decode
-    their text, and warc_to_documents ingests them when asked."""
-    from youtube_api_data_etl_automation_spark.corpus import (
-        warc_to_documents,
-    )
+    their text."""
     from youtube_api_data_etl_automation_spark.operators.archives import (
         warc_records,
     )
@@ -286,50 +296,7 @@ def test_wet_conversion_records_decode_text(spark):
             warc_records(_blob_df(spark, [(3, payload)])).collect()}
     assert recs["conversion"]["body_text"] == "Extracted plain text wörds."
     assert recs["conversion"]["http_status"] is None
-    # default record_types: conversion records are NOT documents
-    assert warc_to_documents(_blob_df(spark, [(3, payload)])).count() == 0
-    docs = warc_to_documents(
-        _blob_df(spark, [(3, payload)]),
-        record_types=("response", "conversion"), strip_html=False,
-    ).collect()
-    assert len(docs) == 1
-    assert docs[0]["text"] == "Extracted plain text wörds."
-    assert docs[0]["source"] == "https://x.example/page"
-
-
-def test_warc_pdf_to_documents_composition(spark):
-    """application/pdf crawl responses route through the PDF extractor
-    with the URI riding along; non-PDF and broken-PDF responses drop."""
-    from tests.test_pdf import one_page
-
-    from youtube_api_data_etl_automation_spark.corpus import (
-        warc_pdf_to_documents,
-    )
-
-    pdf_body = one_page(b"BT /F1 11 Tf (A PDF fetched from the crawl) "
-                        b"Tj ET")
-    ok = _warc_record(
-        "response", _http_response(pdf_body, ctype="application/pdf"),
-        uri="https://x.example/paper.pdf",
-        extra=(b"Content-Type: application/http;msgtype=response",))
-    html = _warc_record(
-        "response", _http_response(b"<html>not pdf</html>"),
-        uri="https://x.example/page",
-        extra=(b"Content-Type: application/http;msgtype=response",))
-    broken = _warc_record(
-        "response", _http_response(b"%PDF-1.4 truncated",
-                                   ctype="application/pdf; v=1"),
-        uri="https://x.example/bad.pdf",
-        extra=(b"Content-Type: application/http;msgtype=response",))
-    payload = ok + html + broken
-    docs = warc_pdf_to_documents(_blob_df(spark, [(5, payload)])).collect()
-    assert len(docs) == 1
-    d = docs[0]
-    assert d["text"] == "A PDF fetched from the crawl"
-    assert d["source"] == "https://x.example/paper.pdf"
-    again = warc_pdf_to_documents(
-        _blob_df(spark, [(5, payload)])).collect()[0]
-    assert again["doc_id"] == d["doc_id"]
+    assert recs["conversion"]["target_uri"] == "https://x.example/page"
 
 
 def test_archive_members_zip_tar_gzip(spark):
@@ -462,23 +429,6 @@ def test_docx_budget_refuses_from_central_directory(spark):
                              byte_budget=100).collect()[0]
     assert row["error_kind"] == "unsupported"
     assert "budget" in row["error"]
-
-
-def test_docx_to_documents_composition(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        docx_to_documents,
-    )
-
-    xml = (b"<w:p><w:r><w:t>Plenty of plain English words make this "
-           b"document pass any downstream funnel stage</w:t></w:r></w:p>")
-    df = _blob_df(spark, [(11, _docx(xml)), (12, b"broken")])
-    docs = docx_to_documents(df).collect()
-    assert len(docs) == 1
-    d = docs[0]
-    assert d["source"] == "docx:11" and "funnel stage" in d["text"]
-    assert d["n_chars"] == len(d["text"]) and d["lang"] is None
-    again = docx_to_documents(df).collect()[0]
-    assert again["doc_id"] == d["doc_id"]
 
 
 def test_bzip2_xz_archives(spark):

@@ -762,7 +762,7 @@ def test_multipage_tiff_pages_decode_independently():
     img1 = _rand_img(rng, 4, 17)
     payload = _two_page_tiff(img0, img1)
 
-    assert tiff.tiff_page_count(payload) == 2
+    assert len(tiff.extract_tiff_pages(payload)) == 2
     for page, img in ((0, img0), (1, img1)):
         out = tiff.decode_tiff(payload, page=page)
         expect = np.repeat(((1 - img) * 255).astype(np.uint8)
@@ -781,7 +781,7 @@ def test_multipage_tiff_pages_decode_independently():
     looped = bytearray(payload)
     looped[nxt_at:nxt_at + 4] = struct.pack("<I", 8)
     with pytest.raises(ValueError, match="loop"):
-        tiff.tiff_page_count(bytes(looped))
+        tiff.extract_tiff_pages(bytes(looped))
 
 
 def test_tiff_page_images_bridge(spark):
@@ -793,7 +793,6 @@ def test_tiff_page_images_bridge(spark):
     )
     from youtube_api_data_etl_automation_spark.operators.tiff import (
         tiff_page_images,
-        tiff_pages_as_payloads,
     )
 
     rng = random.Random(51)
@@ -817,9 +816,10 @@ def test_tiff_page_images_bridge(spark):
         head = b"P6\n%d %d\n255\n" % (img.shape[1], img.shape[0])
         assert bytes(by_page[page]["payload"]) == head + expect
 
-    # the payload bridge feeds decode_image with exact pixel stats
+    # the page payloads feed decode_image directly
     decoded = decode_image(
-        tiff_pages_as_payloads(pages), errors="quarantine").collect()
+        pages.filter("payload IS NOT NULL").select("doc_id", "payload"),
+        errors="quarantine").collect()
     assert len(decoded) == 2
     assert all(r["error"] is None and r["format"] == "ppm"
                for r in decoded)

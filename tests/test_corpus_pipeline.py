@@ -228,75 +228,6 @@ def test_write_training_shards_replayable(spark, corpus, bench_docs, tmp_path):
     assert all(r["n_gaps"] == 0 for s, r in hrep.items() if s != 0)
 
 
-def test_curate_stream_incremental_dedup(spark, tmp_path):
-    """Two streamed batches with overlapping content: the second drain
-    appends only genuinely-new documents (fingerprint-keyed idempotent
-    append), and filtered docs never reach the sink."""
-    import os
-
-    from youtube_api_data_etl_automation_spark.corpus import curate_stream
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    b1 = [(i, f"{GOOD} stream{i}") for i in range(10)] + [(90, "too short")]
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(src)
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        curate_stream(stream, ckpt, sink)
-
-    drain()
-    assert spark.read.parquet(sink).count() == 10
-
-    # Batch 2: 5 duplicates of batch-1 text (same fingerprint) + 3 new.
-    b2 = [(100 + i, f"{GOOD} stream{i}") for i in range(5)] + [
-        (200 + i, f"{GOOD} fresh{i}") for i in range(3)
-    ]
-    spark.createDataFrame(b2, schema).write.mode("append").parquet(src)
-    drain()
-    out = spark.read.parquet(sink)
-    assert out.count() == 13
-    assert out.groupBy("fingerprint").count().filter("count > 1").count() == 0
-    assert os.path.isdir(ckpt)
-
-
-def test_curate_stream_normalize_dedups_cross_batch_mojibake(spark, tmp_path):
-    """normalize_unicode=True in the streaming path: a mojibake twin
-    arriving in a LATER micro-batch canonicalizes to the committed
-    document's surface form and is dropped by the fingerprint-keyed
-    append — the cross-batch dedup guarantee survives unicode damage."""
-    from youtube_api_data_etl_automation_spark.corpus import curate_stream
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    spark.createDataFrame(
-        [(1, GOOD + " don't")], schema
-    ).write.mode("append").parquet(src)
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        curate_stream(stream, ckpt, sink, normalize_unicode=True)
-
-    drain()
-    assert spark.read.parquet(sink).count() == 1
-
-    # batch 2: the cp1252-mojibake/fullwidth twin + one genuinely new doc
-    dmg = (GOOD + " donâ€™t").replace("fox", "ｆｏｘ")
-    spark.createDataFrame(
-        [(2, dmg), (3, GOOD + " truly new tail")], schema
-    ).write.mode("append").parquet(src)
-    drain()
-    out = spark.read.parquet(sink)
-    assert out.count() == 2
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
-
-
 def test_bpe_merges_inline_cap_raises_actionably(spark):
     """One merge past the inline cap must fail at the API edge with a
     message routing callers to bpe_encode_corpus — not deep inside
@@ -487,46 +418,6 @@ def test_curate_corpus_bloom_decontam_identical(spark, corpus, bench_docs):
     assert ids(base) == ids(bloom)
 
 
-def test_ingest_stream_cross_batch_near_dedup(spark, tmp_path):
-    """Streaming ingest through commit_deduped_batch: the second drained
-    batch is near-dup-checked against the FIRST batch's committed state —
-    the cross-batch guarantee curate_stream (exact-fingerprint only)
-    cannot give — and replaying the source adds nothing."""
-    from youtube_api_data_etl_automation_spark.corpus import ingest_stream
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        read_appended,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    schema = "doc_id long, text string"
-    b1 = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "one two three four five six seven eight nine"),
-    ]
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(src)
-
-    def drain(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src)
-        ingest_stream(stream, str(tmp_path / ckpt), sink, threshold=0.25)
-
-    drain("ckpt")
-    assert {r.doc_id for r in read_appended(spark, sink).collect()} == {1, 2}
-
-    b2 = [
-        (10, "ALPHA beta gamma delta epsilon zeta eta theta"),  # exact dup of 1
-        (11, "one two three four five six seven eight NINE ten"),  # near-dup of 2
-        (12, "fresh unrelated content that should be kept"),
-    ]
-    spark.createDataFrame(b2, schema).write.mode("append").parquet(src)
-    drain("ckpt")
-    assert {r.doc_id for r in read_appended(spark, sink).collect()} == {1, 2, 12}
-
-    # a fresh checkpoint replays the whole source: nothing new lands
-    drain("ckpt2")
-    assert {r.doc_id for r in read_appended(spark, sink).collect()} == {1, 2, 12}
-
-
 def test_dsir_stage_selects_target_like_docs(spark):
     """Stage 5b: with a physics-flavored target, DSIR must keep the
     physics-flavored survivors over the cooking-flavored ones — the
@@ -609,11 +500,8 @@ def test_warc_robots_to_curate_composition(spark):
     governs which of the WARC's documents survive curation."""
     import sys
     sys.path.insert(0, "tests")
-    from test_archives import _http_response, _warc_record
+    from test_archives import _http_response, _warc_documents, _warc_record
 
-    from youtube_api_data_etl_automation_spark.corpus import (
-        warc_to_documents,
-    )
     from youtube_api_data_etl_automation_spark.operators.robots import (
         warc_robots_rules,
     )
@@ -637,7 +525,7 @@ def test_warc_robots_to_curate_composition(spark):
     ]
     blobs = spark.createDataFrame(
         [(1, bytearray(b"".join(recs)))], "doc_id long, payload binary")
-    docs = warc_to_documents(blobs)
+    docs = _warc_documents(blobs)
     out = curate_corpus(
         docs, robots_rules=warc_robots_rules(blobs),
         min_tokens=1, quality_min=0.0, n_shards=1)

@@ -267,35 +267,3 @@ def test_pii_planted_entities_property(spark):
             assert not any(ch.isdigit() for ch in tok.replace("555", "")) or tok in (
                 "[EMAIL]", "[IP]", "[PHONE]"
             ), r.r
-
-
-def test_contamination_attribution_names_the_benchmark_doc(spark):
-    """Attribution pairs each contaminated doc with the benchmark doc(s)
-    it overlaps and the shared-gram count; clean docs and clean pairs are
-    absent; a doc overlapping two benchmarks gets two rows."""
-    from youtube_api_data_etl_automation_spark.operators.decontam import (
-        contamination_attribution,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps high"),   # overlaps bench 100
-            (2, "all new words nothing shared here"),
-            (3, "the quick brown fox and lazy gray dog sits"),  # overlaps both
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [
-            (100, "prompt the quick brown fox question"),
-            (200, "lazy gray dog sits benchmark item"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {
-        (r.corpus_id, r.bench_id): r.n_shared_ngrams
-        for r in contamination_attribution(corpus, bench, n=3).collect()
-    }
-    assert set(rows) == {(1, 100), (3, 100), (3, 200)}
-    assert rows[(1, 100)] == 2  # 'the quick brown', 'quick brown fox'
-    assert rows[(3, 200)] == 2  # 'lazy gray dog', 'gray dog sits'

@@ -6,10 +6,9 @@ coverage-audit properties, and the no-nested-loop plan pin."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from youtube_api_data_etl_automation_spark.operators.diversity import (
-    coverage_report,
     diversity_sample,
 )
 
@@ -130,38 +129,6 @@ def test_n_larger_than_corpus_returns_all(spark):
     assert sorted(r["draw"] for r in out) == [1, 2, 3]
     with pytest.raises(ValueError):
         diversity_sample(corpus, cents, n=0)
-
-
-def test_coverage_report_flags_concentrated_sample(spark):
-    """Top-n-by-quality concentrates (share_ratio far from 1 on the
-    starved clusters); the diversity sample tracks shares closely on
-    even clusters."""
-    corpus = spark.createDataFrame(_corpus_rows({0: 20, 1: 20, 2: 20, 3: 20}))
-    cents = spark.createDataFrame(CENTROIDS)
-
-    div = diversity_sample(corpus, cents, n=20)
-    rep = {r["cluster_id"]: r for r in
-           coverage_report(div, corpus, cents).collect()}
-    assert all(abs(rep[c]["share_ratio"] - 1.0) < 1e-9 for c in rep)
-    assert all(rep[c]["n_sample"] == 5 for c in rep)
-
-    # top-n by quality ignores clusters: with cluster 0's quality
-    # systematically higher, the top 20 all land there and starve the
-    # rest — exactly the pathology the report must surface
-    skewed = corpus.withColumn(
-        "quality",
-        F.col("quality") + F.when(F.col("cluster") == 0, F.lit(100.0)).otherwise(0.0),
-    )
-    top = skewed.orderBy(F.desc("quality"), "vec_id").limit(20)
-    trep = {r["cluster_id"]: r for r in
-            coverage_report(top, skewed, cents).collect()}
-    assert trep[0]["n_sample"] == 20
-    assert all(trep[c]["n_sample"] == 0 for c in trep if c != 0)
-    # while diversity_sample on the SAME skewed scores stays balanced
-    div2 = diversity_sample(skewed, cents, n=20, score_col="quality")
-    drep = {r["cluster_id"]: r for r in
-            coverage_report(div2, skewed, cents).collect()}
-    assert all(drep[c]["n_sample"] == 5 for c in drep)
 
 
 def test_no_nested_loop_in_selection_plan(spark):

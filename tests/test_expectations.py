@@ -125,11 +125,10 @@ def test_satisfies_cross_column_null_skip_and_one_scan(spark):
 
 
 def test_satisfies_enforce_quarantines_only_false_rows(spark):
-    """satisfies is row-level, so enforce_checks can quarantine on it —
-    and the COALESCE makes NULL evaluations KEEP (pass), matching the
-    audit count exactly."""
+    """satisfies is row-level: its violation predicate flags exactly the
+    false rows — the COALESCE makes NULL evaluations KEEP (pass) — and
+    matches the audit count exactly."""
     from youtube_api_data_etl_automation_spark.operators.expectations import (
-        enforce_checks,
         satisfies,
     )
 
@@ -137,10 +136,11 @@ def test_satisfies_enforce_quarantines_only_false_rows(spark):
         [Row(lo=1, hi=2), Row(lo=5, hi=3), Row(lo=None, hi=7)],
         "lo long, hi long",
     )
-    good, quarantined = enforce_checks(df, [satisfies("hi >= lo")])
-    assert {(r["lo"], r["hi"]) for r in good.collect()} == {(1, 2), (None, 7)}
-    bad = quarantined.collect()
+    check = satisfies("hi >= lo")
+    bad = df.filter(check.violation).collect()
     assert [(r["lo"], r["hi"]) for r in bad] == [(5, 3)]
+    audit = run_checks(df, [check]).collect()[0]
+    assert audit["n_violations"] == 1 and audit["n_rows"] == 3
 
 
 def test_satisfies_rides_fused_profile(spark):
@@ -175,23 +175,3 @@ def test_satisfies_rides_fused_profile(spark):
 def test_empty_checks_raise(spark):
     with pytest.raises(ValueError, match="no checks"):
         run_checks(_facts(spark), [])
-
-
-def test_enforce_checks_quarantines_with_first_fail_attribution(spark):
-    from youtube_api_data_etl_automation_spark.operators.expectations import (
-        enforce_checks,
-    )
-
-    good, bad = enforce_checks(
-        _facts(spark),
-        [not_null("k"), in_range("amt", 0, 100), accepted_values("status", ["A", "B"])],
-    )
-    assert {r["k"] for r in good.collect()} == {1}
-    reasons = {r["status"]: r["quarantine_reason"] for r in bad.collect()}
-    # row (2,B,-5): range; row (2,C,20): status; row NULL-k: not_null first
-    assert reasons["B"] == "in_range[0,100](amt)"
-    assert reasons["C"] == "accepted_values[A,B](status)"
-    assert "not_null(k)" in reasons.values()
-    # relation-level checks can't row-attribute: loud error, not silence
-    with pytest.raises(ValueError, match="relation-level"):
-        enforce_checks(_facts(spark), [not_null("k"), unique("k")])

@@ -1,14 +1,10 @@
-"""Incremental funnel/retention state (operators/funnel.py r9 folds +
-streaming/funnel.py drains): folds match the batch operators, the
-streaming path is exactly-once across drains AND across checkpoint loss
-(applied-batch markers), and readouts come off the committed state with
-zero event rescans."""
+"""Incremental funnel/retention state (operators/funnel.py r9 folds):
+folds match the batch operators, and readouts come off the folded state
+with zero event rescans."""
 
 from __future__ import annotations
 
 from datetime import datetime
-
-from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.funnel import (
     fold_funnel_state,
@@ -92,59 +88,3 @@ def test_retention_fold_exact_under_any_order(spark):
     got = _sorted(retention_from_state(s))
     want = _sorted(retention_cohorts(_df(spark, rows)))
     assert got == want and len(got) > 0
-
-
-def test_funnel_stream_two_drains_replay_and_state_readout(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        read_agg_state,
-    )
-    from youtube_api_data_etl_automation_spark.streaming.funnel import (
-        funnel_stream_to_state,
-    )
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-
-    def drain(ckpt):
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
-        funnel_stream_to_state(stream, state, ckpt, STEPS)
-
-    _df(spark, BATCH1).write.mode("append").parquet(src)
-    drain(str(tmp_path / "ckpt1"))
-    mid = read_agg_state(spark, state)
-    assert _sorted(mid) == _sorted(
-        funnel_users(_df(spark, BATCH1), STEPS)
-    )
-
-    _df(spark, BATCH2).write.mode("append").parquet(src)
-    drain(str(tmp_path / "ckpt1"))
-    got = read_agg_state(spark, state)
-    want = funnel_users(_df(spark, BATCH1 + BATCH2), STEPS)
-    assert _sorted(got) == _sorted(want)
-
-    # checkpoint loss: replaying the WHOLE source from a fresh
-    # checkpoint re-presents batch ids whose applied markers exist —
-    # the state must not change (no double-fold, no regression of
-    # completion times)
-    drain(str(tmp_path / "ckpt2"))
-    assert _sorted(read_agg_state(spark, state)) == _sorted(want)
-
-
-def test_retention_stream_matches_batch(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        read_agg_state,
-    )
-    from youtube_api_data_etl_automation_spark.streaming.funnel import (
-        retention_stream_to_state,
-    )
-
-    rows = [(u, "e", _ts(d)) for u, d in
-            [(1, 1), (1, 2), (2, 1), (2, 5), (3, 2), (3, 3)]]
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    _df(spark, rows[:3]).write.mode("append").parquet(src)
-    _df(spark, rows[3:]).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    retention_stream_to_state(stream, state, str(tmp_path / "ckpt"))
-    got = _sorted(retention_from_state(read_agg_state(spark, state)))
-    assert got == _sorted(retention_cohorts(_df(spark, rows)))

@@ -1,6 +1,6 @@
-"""pagerank: differential vs a pure-Python power iteration on a real graph
-(orders->customer bipartite-ish edges at sf0.001), mass conservation, and
-known-structure sanity."""
+"""pagerank_fixedpoint: differential vs a pure-Python float power
+iteration on a real graph (orders->customer bipartite-ish edges at
+sf0.001), mass conservation, and known-structure sanity."""
 
 from __future__ import annotations
 
@@ -8,7 +8,9 @@ from collections import defaultdict  # noqa: F401 (used by mass accumulation)
 
 from pyspark.sql import functions as F
 
-from youtube_api_data_etl_automation_spark.operators.graphrank import pagerank
+from youtube_api_data_etl_automation_spark.operators.graphrank import (
+    pagerank_fixedpoint,
+)
 from youtube_api_data_etl_automation_spark.sources.tables import load_table
 
 from .conftest import SF_DIR
@@ -44,55 +46,63 @@ def _edges(spark):
     )
 
 
+SCALE = 10**12
+
+
+def _ranks(edges, iterations):
+    """Fixed-point ranks as floats (units of 1/SCALE)."""
+    return {
+        r.node: r.rank_fp / SCALE
+        for r in pagerank_fixedpoint(
+            edges, iterations=iterations, scale=SCALE
+        ).collect()
+    }
+
+
 def test_matches_python_power_iteration(spark):
+    """The fixed-point ranks track the float power iteration to within
+    the flooring budget: each round floors at most ~3 integer divisions
+    per node; 1e-9 is orders of magnitude above the accumulated loss."""
     edges = _edges(spark)
-    got = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
+    got = _ranks(edges, 8)
     py = py_pagerank(
         [(r.src, r.dst) for r in edges.collect()], iterations=8
     )
     assert set(got) == set(py)
     for v, r in py.items():
-        assert abs(got[v] - r) < 1e-9, (v, got[v], r)
+        assert abs(got[v] - r) < 1e-9 + 20.0 / SCALE, (v, got[v], r)
 
 
 def test_mass_conserved_and_sinks_outrank_sources(spark):
     edges = _edges(spark)
-    ranks = pagerank(edges, iterations=6).collect()
-    total = sum(r.rank for r in ranks)
-    assert abs(total - 1.0) < 1e-9
+    ranks = _ranks(edges, 6)
+    # flooring only ever loses mass, a few units per node and edge per
+    # round: far below 1e-6 at this scale
+    total = sum(ranks.values())
+    assert 1.0 - 1e-6 < total <= 1.0
     # Customers (sinks with in-links) must outrank order nodes (pure
     # sources, which only hold the teleport share).
-    custs = [r.rank for r in ranks if r.node < 1_000_000]
-    orders = [r.rank for r in ranks if r.node >= 1_000_000]
+    custs = [r for v, r in ranks.items() if v < 1_000_000]
+    orders = [r for v, r in ranks.items() if v >= 1_000_000]
     assert min(custs) > max(orders) * 0.99
 
 
 def test_fixedpoint_matches_float_within_quantization(spark):
-    """The fixed-point variant tracks the float variant to within the
-    flooring budget (< iterations+1 scale-units per node, plus the float
-    variant's own rounding), and is bit-stable across repartitionings."""
-    from youtube_api_data_etl_automation_spark.operators.graphrank import (
-        pagerank_fixedpoint,
-    )
-
+    """Integer arithmetic makes the ranks bit-stable across
+    repartitionings, and they track the float iteration at 6 rounds."""
     edges = _edges(spark)
-    scale = 10**12
     fp = {
         r.node: r.rank_fp
-        for r in pagerank_fixedpoint(edges, iterations=6, scale=scale).collect()
+        for r in pagerank_fixedpoint(edges, iterations=6, scale=SCALE).collect()
     }
-    fl = {r.node: r.rank for r in pagerank(edges, iterations=6).collect()}
-    assert set(fp) == set(fl)
-    n = len(fp)
-    for v, r in fl.items():
-        # Each round floors at most ~3 integer divisions per node; 1e-9
-        # relative is orders of magnitude above the accumulated loss.
-        assert abs(fp[v] / scale - r) < 1e-9 + 20.0 / scale, (v, fp[v], r)
-
+    py = py_pagerank([(r.src, r.dst) for r in edges.collect()], iterations=6)
+    assert set(fp) == set(py)
+    for v, r in py.items():
+        assert abs(fp[v] / SCALE - r) < 1e-9 + 20.0 / SCALE, (v, fp[v], r)
     again = {
         r.node: r.rank_fp
         for r in pagerank_fixedpoint(
-            edges.repartition(7), iterations=6, scale=scale
+            edges.repartition(7), iterations=6, scale=SCALE
         ).collect()
     }
     assert again == fp

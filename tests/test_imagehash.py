@@ -196,39 +196,6 @@ def test_pixel_budget_probe_first(spark):
     assert rows2[1]["error_kind"] == "corrupt"
 
 
-def test_dedup_images_end_to_end(spark):
-    """The image-dedup capstone: re-encoded copies of the same pixels
-    collapse to one survivor; distinct images and broken payloads route
-    to their own outputs; the audit accounts for every input."""
-    from tests.test_gif import PAL4, _gif
-    from tests.test_operators import _bmp24, _png
-
-    px = [[((x * x * 7 + y * 13) % 256, (x * 29 + y * y) % 256,
-            (x * y * 3 + 40) % 256) for x in range(20)]
-          for y in range(14)]
-    other = [[(255 - r, g, b) for (r, g, b) in row] for row in px]
-    rows = [
-        (1, _png(px)),            # original
-        (2, _bmp24(px)),          # same pixels, different container
-        (3, _png(other)),         # a different image
-        (4, _gif([[0, 1, 2, 3]] * 4, PAL4)),  # unrelated
-        (5, b"broken"),           # quarantine
-    ]
-    df = spark.createDataFrame([(i, bytearray(p)) for i, p in rows],
-                               "doc_id long, payload binary")
-    out = IH.dedup_images(df, max_hamming=2)
-    survivors = sorted(r["doc_id"] for r in out["survivors"].collect())
-    clusters = {r["doc_id"]: r["canonical_id"]
-                for r in out["clusters"].collect()}
-    assert clusters == {1: 1, 2: 1}       # the re-encoded pair
-    assert survivors == [1, 3, 4]         # canonical + singletons
-    q = out["quarantined"].collect()
-    assert [r["doc_id"] for r in q] == [5]
-    audit = {r["stage"]: r["n"] for r in out["audit"].collect()}
-    assert audit == {"input": 5, "hashed": 4, "quarantined": 1,
-                     "near_dup_pairs": 1, "survivors": 3}
-
-
 def test_image_thumbnails_exact_and_stable(spark):
     """Thumbnail bytes are the exact area averages (hand-checkable on a
     block image), identical across containers, quarantine-contracted."""

@@ -16,13 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.similarity import (
+    append_ivf_index_versioned,
     brute_force_topk,
-    current_ivf_index_path,
+    current_ivf_index_dirs,
     ivf_cell_report,
-    ivf_topk_from_index,
     read_ivf_centroids,
     rebalance_ivf_index,
-    write_ivf_index,
     write_ivf_index_versioned,
 )
 from youtube_api_data_etl_automation_spark.operators.versioned import (
@@ -61,6 +60,17 @@ def _axes(spark, ids):
     )
 
 
+def _index_topk(spark, dirs, queries):
+    """Exact top-3 over the vectors an index version holds."""
+    from youtube_api_data_etl_automation_spark.operators.similarity import (
+        _read_index,
+    )
+
+    index = _read_index(spark, dirs).select("vec_id", "embedding")
+    return sorted(map(tuple, brute_force_topk(
+        index, queries, top_k=3).collect()))
+
+
 def test_cell_report_flags_planted_skewed_appends(spark, tmp_path):
     """A balanced 4-cell index passes the band check; appending a batch
     that all lands in one cell pushes that cell past 2x target and ONLY
@@ -69,9 +79,10 @@ def test_cell_report_flags_planted_skewed_appends(spark, tmp_path):
     path = str(tmp_path / "ivf_plain")
     base = _corpus(spark, blobs=range(4), per_blob=40)  # 40 per cell
     cent = _axes(spark, [0, 1, 2, 3])
-    write_ivf_index(base, cent, path)
+    write_ivf_index_versioned(base, cent, path)
 
-    pre = ivf_cell_report(spark, path, target_cell_size=40)
+    pre = ivf_cell_report(spark, current_ivf_index_dirs(spark, path),
+                          target_cell_size=40)
     assert pre.filter(F.col("flagged")).count() == 0
     # scan reads only the partition column
     plan = pre._jdf.queryExecution().executedPlan().toString()
@@ -82,15 +93,16 @@ def test_cell_report_flags_planted_skewed_appends(spark, tmp_path):
         [(10_000 + j, _blob_vec(0, j)) for j in range(120)],
         "vec_id long, embedding array<float>",
     )
-    write_ivf_index(extra, cent, path, mode="append")
+    append_ivf_index_versioned(extra, path)
+    dirs = current_ivf_index_dirs(spark, path)
     post = {r["cluster_id"]: r for r in ivf_cell_report(
-        spark, path, target_cell_size=40
+        spark, dirs, target_cell_size=40
     ).collect()}
     assert post[0].flagged and post[0].n_vecs == 160 and post[0].ratio == 4.0
     assert not any(post[c].flagged for c in (1, 2, 3))
     # observed-mean mode (no design size) catches the same skew
     mean_mode = {r["cluster_id"]: r["flagged"] for r in ivf_cell_report(
-        spark, path
+        spark, dirs
     ).collect()}
     assert mean_mode[0]
 
@@ -102,35 +114,32 @@ def test_rebalance_restores_band_and_preserves_probes(spark, tmp_path):
     v1 = write_ivf_index_versioned(corpus, coarse, base_path)
     assert v1 == 1
 
-    path1 = current_ivf_index_path(spark, base_path)
+    path1 = current_ivf_index_dirs(spark, base_path)
+    assert len(path1) == 1
     rep1 = ivf_cell_report(spark, path1, target_cell_size=PER_BLOB)
     assert rep1.filter(F.col("flagged")).count() == 2  # every cell over
+    assert read_ivf_centroids(spark, base_path).count() == 2
 
     queries = corpus.filter(F.col("vec_id") < 3)
-    pre_probe = sorted(map(tuple, ivf_topk_from_index(
-        spark, path1, queries, read_ivf_centroids(spark, base_path),
-        top_k=3, nprobe=2,  # nprobe = k: full probe == exact
-    ).collect()))
+    pre_probe = _index_topk(spark, path1, queries)
 
     out = rebalance_ivf_index(
         spark, base_path, target_cell_size=PER_BLOB, n_iter=3
     )
     assert out == {"version": 2, "k": 8, "n_vectors": 360}
 
-    path2 = current_ivf_index_path(spark, base_path)
-    assert path2 != path1
+    path2 = current_ivf_index_dirs(spark, base_path)
+    assert len(path2) == 1 and path2 != path1
+    assert read_ivf_centroids(spark, base_path).count() == 8
     rep2 = ivf_cell_report(spark, path2, target_cell_size=PER_BLOB)
     rows2 = rep2.collect()
     assert len(rows2) == 8
     assert all(not r["flagged"] for r in rows2), rows2
     assert all(r["n_vecs"] == PER_BLOB for r in rows2), rows2
 
-    # content unchanged -> full probe identical pre/post, and both equal
-    # the brute-force answer
-    post_probe = sorted(map(tuple, ivf_topk_from_index(
-        spark, path2, queries, read_ivf_centroids(spark, base_path),
-        top_k=3, nprobe=8,
-    ).collect()))
+    # content unchanged -> neighbors identical pre/post, and both equal
+    # the brute-force answer over the source corpus
+    post_probe = _index_topk(spark, path2, queries)
     assert post_probe == pre_probe
     exact = sorted(map(tuple, brute_force_topk(
         corpus, queries, top_k=3
@@ -149,21 +158,18 @@ def test_rebalance_restores_band_and_preserves_probes(spark, tmp_path):
 
 def test_maintenance_errors(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="no committed IVF index"):
-        current_ivf_index_path(spark, str(tmp_path / "nope"))
+        current_ivf_index_dirs(spark, str(tmp_path / "nope"))
     with pytest.raises(FileNotFoundError, match="no committed IVF index"):
         read_ivf_centroids(spark, str(tmp_path / "nope"))
 
 
 def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
     """r9 manifest appends: the write cost is the batch (old dirs are
-    listed, never rewritten), probes over the multi-dir snapshot still
-    partition-prune and match brute force, the cell report sees the
-    union, rebalance compacts the manifest back to one cells dir, and
-    gc_ivf_batches reclaims batch dirs once no retained manifest lists
-    them."""
+    listed, never rewritten), the multi-dir snapshot holds every vector,
+    the cell report sees the union, rebalance compacts the manifest back
+    to one cells dir, and gc_ivf_batches reclaims batch dirs once no
+    retained manifest lists them."""
     from youtube_api_data_etl_automation_spark.operators.similarity import (
-        append_ivf_index_versioned,
-        current_ivf_index_dirs,
         gc_ivf_batches,
     )
 
@@ -180,13 +186,6 @@ def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
     assert append_ivf_index_versioned(batch1, base) == 2
     dirs = current_ivf_index_dirs(spark, base)
     assert len(dirs) == 2 and any("/batches/" in d for d in dirs)
-    # single-path accessor refuses on a manifest version, loudly
-    with pytest.raises(ValueError, match="append-based"):
-        from youtube_api_data_etl_automation_spark.operators.similarity import (
-            current_ivf_index_path as _p,
-        )
-
-        _p(spark, base)
 
     batch2 = spark.createDataFrame(
         [(20_000 + j, _blob_vec(1, j)) for j in range(15)],
@@ -204,13 +203,11 @@ def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
     assert rep[1].n_vecs == 45 and not rep[1].flagged  # 1.5x: in band
     assert rep[2].n_vecs == 30 and rep[3].n_vecs == 30
 
-    # probes over the multi-dir snapshot == brute force at full probe
+    # the multi-dir snapshot holds every vector: same neighbors as the
+    # brute force over the source batches
     all_vecs = corpus.unionByName(batch1).unionByName(batch2)
     queries = all_vecs.filter(F.col("vec_id") < 2)
-    got = sorted(map(tuple, ivf_topk_from_index(
-        spark, dirs, queries, read_ivf_centroids(spark, base),
-        top_k=3, nprobe=4,
-    ).collect()))
+    got = _index_topk(spark, dirs, queries)
     want = sorted(map(tuple, brute_force_topk(
         all_vecs, queries, top_k=3
     ).collect()))
@@ -229,18 +226,12 @@ def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
     rebalance_ivf_index(spark, base, target_cell_size=30, n_iter=1)
     deleted = gc_ivf_batches(spark, base, max_age_ms=0)
     assert len(deleted) == 3  # v1's full-write dir + the two append dirs
-    probe_after = sorted(map(tuple, ivf_topk_from_index(
-        spark, current_ivf_index_dirs(spark, base), queries,
-        read_ivf_centroids(spark, base), top_k=3, nprobe=out["k"],
-    ).collect()))
+    probe_after = _index_topk(spark, current_ivf_index_dirs(spark, base),
+                              queries)
     assert probe_after == want
 
 
 def test_append_requires_initial_index(spark, tmp_path):
-    from youtube_api_data_etl_automation_spark.operators.similarity import (
-        append_ivf_index_versioned,
-    )
-
     batch = _corpus(spark, blobs=[0], per_blob=3)
     with pytest.raises(FileNotFoundError, match="write the initial"):
         append_ivf_index_versioned(batch, str(tmp_path / "none"))

@@ -1,14 +1,16 @@
-"""IVF multi-cell probing (operators/similarity.py::probe_cells / ivf_topk
-nprobe): nprobe=1 equals the own-cell assignment; raising nprobe recovers
-recall lost at cell borders and never loses it."""
+"""IVF multi-cell probing (operators/similarity.py::probe_cells /
+ivf_scored_candidates nprobe): nprobe=1 equals the own-cell assignment;
+raising nprobe recovers recall lost at cell borders and never loses it."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.similarity import (
+    _rank_topk,
+    assign_clusters,
     brute_force_topk,
-    ivf_topk,
+    ivf_scored_candidates,
     probe_cells,
 )
 from youtube_api_data_etl_automation_spark.sources.tables import load_table
@@ -21,6 +23,13 @@ def _fixtures(spark):
     centroids = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") <= 17))
     queries = emb.filter(F.col("vec_id") < 5)
     return emb, centroids, queries
+
+
+def _ivf_topk(emb, queries, centroids, top_k, nprobe):
+    scored = ivf_scored_candidates(
+        assign_clusters(emb, centroids), queries, centroids, nprobe=nprobe
+    )
+    return _rank_topk(scored.drop("cell_rank"), top_k)
 
 
 def _result_pairs(df):
@@ -46,7 +55,7 @@ def test_nprobe1_unchanged_and_recall_monotone(spark):
 
     def recall(nprobe):
         got = _result_pairs(
-            ivf_topk(emb, queries, centroids, top_k=3, nprobe=nprobe)
+            _ivf_topk(emb, queries, centroids, top_k=3, nprobe=nprobe)
         )
         return len(got & truth) / len(truth)
 
@@ -84,7 +93,9 @@ def test_each_candidate_scored_once(spark):
     """A neighbor lives in exactly one cell, so multi-cell probing must not
     duplicate (query, neighbor) rows."""
     emb, centroids, queries = _fixtures(spark)
-    out = ivf_topk(emb, queries, centroids, top_k=50, nprobe=3)
+    out = ivf_scored_candidates(
+        assign_clusters(emb, centroids), queries, centroids, nprobe=3
+    )
     assert (
         out.groupBy("query_id", "neighbor_id").count().filter("count > 1").count()
         == 0

@@ -142,16 +142,13 @@ def test_latex_math_ignores_comment_dollars():
 
 
 def test_latex_to_documents_bridge_and_cli(spark, capsys):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
     doc = _doc(b"Visible prose body that survives curation.")
-    got = office_to_documents(
-        _blob_df(spark, [(41, doc), (42, b"junk")]), kind="latex"
-    ).collect()
-    assert len(got) == 1 and got[0]["source"] == "latex:41"
-    assert got[0]["text"] == "Visible prose body that survives curation."
+    got = {r["doc_id"]: r for r in L.latex_text(
+        _blob_df(spark, [(41, doc), (42, b"junk")]), errors="quarantine"
+    ).collect()}
+    assert got[41]["error"] is None
+    assert got[41]["text"] == "Visible prose body that survives curation."
+    assert got[42]["error_kind"] == "corrupt"
 
     # the media CLI routes op=latextext
     import json as _json

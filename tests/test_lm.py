@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.lm import (
-    perplexity_filter,
     score_docs,
     train_bigram_lm,
 )
@@ -81,14 +80,6 @@ def test_fluent_text_scores_below_gibberish(spark, lm):
     docs = spark.createDataFrame(EVAL, "doc_id long, text string")
     ppl = {r["doc_id"]: r["ppl"] for r in score_docs(docs, lm).collect()}
     assert ppl[10] < ppl[11]
-
-
-def test_perplexity_filter_keeps_head(spark, lm):
-    docs = spark.createDataFrame(EVAL, "doc_id long, text string")
-    ppl = {r["doc_id"]: r["ppl"] for r in score_docs(docs, lm).collect()}
-    cut = (ppl[10] + ppl[11]) / 2
-    kept = perplexity_filter(docs, lm, max_ppl=cut)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [10]
 
 
 def test_training_docs_score_well_under_own_lm(spark, lm):

@@ -90,15 +90,12 @@ def test_markdown_never_refuses_text():
 
 
 def test_markdown_to_documents_bridge(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
-    got = office_to_documents(
+    got = {r["doc_id"]: r for r in M.markdown_text(
         _blob_df(spark, [(61, b"# H\n\nBody prose."), (62, b"")]),
-        kind="markdown").collect()
-    assert len(got) == 1 and got[0]["source"] == "markdown:61"
-    assert got[0]["text"] == "H\n\nBody prose."
+        errors="quarantine").collect()}
+    assert got[61]["error"] is None
+    assert got[61]["text"] == "H\n\nBody prose."
+    assert got[62]["error"] is not None and got[62]["text"] is None
 
 
 def test_markdown_review_fixes_r14():

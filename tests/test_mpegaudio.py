@@ -300,8 +300,6 @@ def test_refusals():
         mpegaudio.decode_layer1(b"\x00\x11\x22\x33")
     with pytest.raises(NotImplementedError, match="sample budget"):
         mpegaudio.decode_layer1(good, sample_budget=100)
-    with pytest.raises(NotImplementedError, match="Table 3-B.3"):
-        mpegaudio.synthesize_pcm(np.zeros((12, 1, 32)))
 
 
 def test_forbidden_scalefactor():
@@ -345,51 +343,6 @@ def test_audio_subband_features_operator(spark):
         float((e * np.arange(32)).sum() / e.sum()))
     assert out[2]["error_kind"] == "unsupported"
     assert out[3]["error_kind"] == "corrupt"
-
-
-def test_synthesize_pcm_structure():
-    """The filterbank STRUCTURE with a caller-supplied window: a delta
-    window isolates single FIFO taps, making the expected output a
-    direct cosine-matrix evaluation (independent of the implementation's
-    V/U bookkeeping)."""
-    rng = np.random.default_rng(13)
-    sb = rng.uniform(-1, 1, size=(3, 1, 32))
-    # refusal without the table
-    with pytest.raises(NotImplementedError, match="Table 3-B.3"):
-        mpegaudio.synthesize_pcm(sb)
-    with pytest.raises(ValueError, match="512"):
-        mpegaudio.synthesize_pcm(sb, window=np.ones(100))
-    with pytest.raises(ValueError, match="groups, channels"):
-        mpegaudio.synthesize_pcm(np.zeros((3, 32)), window=np.ones(512))
-    # delta window at index 0: out[0] of group g = V[0] right after
-    # the matrixing = sum_k cos(16*(2k+1)*pi/64) * S_g[k]; all other
-    # output samples zero
-    d0 = np.zeros(512)
-    d0[0] = 1.0
-    out = mpegaudio.synthesize_pcm(sb, window=d0)
-    assert out.shape == (96, 1)
-    for g in range(3):
-        want = sum(
-            math.cos(16 * (2 * k + 1) * math.pi / 64) * sb[g, 0, k]
-            for k in range(32)
-        )
-        assert out[g * 32, 0] == pytest.approx(want)
-        assert np.abs(out[g * 32 + 1 : (g + 1) * 32, 0]).max() < 1e-12
-    # delta window at index 64 reads the 128-offset FIFO block: group
-    # g's output sees group g-1's matrixed V (the 64-shift x2 history)
-    d64 = np.zeros(512)
-    d64[64] = 1.0
-    out = mpegaudio.synthesize_pcm(sb, window=d64)
-    for g in range(1, 3):
-        want = sum(
-            math.cos((16 + 0) * (2 * k + 1) * math.pi / 64)
-            * sb[g - 2, 0, k] for k in range(32)
-        ) if g >= 2 else None
-        # V[128] after g shifts holds the matrixing output V[0] from
-        # two groups ago
-        if g >= 2:
-            assert out[g * 32, 0] == pytest.approx(want)
-    assert np.abs(out[:32, 0]).max() < 1e-12  # no history yet
 
 
 def test_triage_decode_audio_routes(spark):

@@ -114,17 +114,14 @@ def test_ipynb_missing_nbformat_defaults_to_cells():
 
 
 def test_ipynb_to_documents_bridge_and_cli(spark, capsys):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
     nb = _nb4([{"cell_type": "markdown", "source": "Notebook prose."}],
               kernelspec={"language": "python"})
-    got = office_to_documents(
-        _blob_df(spark, [(51, nb), (52, b"{bad")]), kind="ipynb"
-    ).collect()
-    assert len(got) == 1 and got[0]["source"] == "ipynb:51"
-    assert got[0]["text"] == "Notebook prose."
+    got = {r["doc_id"]: r for r in N.ipynb_text(
+        _blob_df(spark, [(51, nb), (52, b"{bad")]), errors="quarantine"
+    ).collect()}
+    assert got[51]["error"] is None
+    assert got[51]["text"] == "Notebook prose."
+    assert got[52]["error"] is not None and got[52]["text"] is None
 
     import tempfile
 

@@ -146,24 +146,18 @@ def test_office_budget_refuses_before_inflation(spark):
 
 
 def test_office_to_documents_kinds(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
     pp = _pptx([b"<a:p><a:r><a:t>Deck text body here</a:t></a:r></a:p>"])
     xl = _xlsx([b'<row><c t="inlineStr"><is><t>cell text</t></is></c>'
                 b"</row>"])
-    got_p = office_to_documents(
-        _blob_df(spark, [(21, pp), (22, b"junk")]), kind="pptx"
-    ).collect()
-    assert len(got_p) == 1 and got_p[0]["source"] == "pptx:21"
-    assert got_p[0]["text"] == "Deck text body here"
-    got_x = office_to_documents(
-        _blob_df(spark, [(31, xl)]), kind="xlsx").collect()
-    assert got_x[0]["source"] == "xlsx:31"
+    got_p = {r["doc_id"]: r for r in archives.pptx_text(
+        _blob_df(spark, [(21, pp), (22, b"junk")]), errors="quarantine"
+    ).collect()}
+    assert got_p[21]["text"] == "Deck text body here"
+    assert got_p[22]["error"] is not None and got_p[22]["text"] is None
+    got_x = archives.xlsx_text(
+        _blob_df(spark, [(31, xl)]), errors="quarantine").collect()
+    assert got_x[0]["error"] is None
     assert got_x[0]["text"] == "cell text"
-    with pytest.raises(ValueError, match="kind="):
-        office_to_documents(_blob_df(spark, [(1, pp)]), kind="odt")
 
 
 def test_xlsx_negative_shared_index_is_malformed():
@@ -223,19 +217,15 @@ def test_odf_text_extraction(spark):
 
 
 def test_odf_budget_and_documents_bridge(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
     big = _odf(b"<text:p>" + b"z" * 5000 + b"</text:p>")
     row = archives.odf_text(_blob_df(spark, [(1, big)]),
                             byte_budget=100).collect()[0]
     assert row["error_kind"] == "unsupported"
     assert "budget" in row["error"]
     ok = _odf(b"<text:p>OpenDocument body text</text:p>")
-    got = office_to_documents(
-        _blob_df(spark, [(41, ok)]), kind="odf").collect()
-    assert got[0]["source"] == "odf:41"
+    got = archives.odf_text(
+        _blob_df(spark, [(41, ok)]), errors="quarantine").collect()
+    assert got[0]["error"] is None
     assert got[0]["text"] == "OpenDocument body text"
 
 
@@ -293,10 +283,6 @@ def test_epub_text_extraction(spark):
 
 
 def test_epub_structure_errors_and_bridge(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        office_to_documents,
-    )
-
     # spine idref pointing at a missing member is malformed
     broken = _epub([b"<p>x</p>"],
                    spine_extra=b'<itemref idref="gone"/>',
@@ -310,10 +296,10 @@ def test_epub_structure_errors_and_bridge(spark):
                manifest_extra=b'<item id="img" href="cover.png" '
                b'media-type="image/png"/>')
     assert archives._epub_extract_text(ok, None) == (1, "body")
-    got = office_to_documents(
+    got = archives.epub_text(
         _blob_df(spark, [(51, _epub([b"<p>ebook body text</p>"]))]),
-        kind="epub").collect()
-    assert got[0]["source"] == "epub:51"
+        errors="quarantine").collect()
+    assert got[0]["error"] is None
     assert got[0]["text"] == "ebook body text"
 
 

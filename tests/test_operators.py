@@ -1,5 +1,5 @@
 """Operator-level tests: multimodal plumbing, SimHash, dedup family,
-similarity search, streaming ingest."""
+similarity search."""
 
 from __future__ import annotations
 
@@ -24,14 +24,16 @@ def test_multimodal_attach_and_features(spark):
     docs = _docs(spark, [(1, "hello"), (2, ""), (3, "ab")])
     blobs = multimodal.attach_binary(docs)
     assert [f.name for f in blobs.schema.fields] == ["doc_id", "payload", "meta"]
-    feats = {r.doc_id: r for r in multimodal.extract_features(blobs).collect()}
-    assert feats[1].byte_len == 5 and feats[1].first_byte == ord("h") and feats[1].last_byte == ord("o")
-    assert feats[2].byte_len == 0 and feats[2].first_byte == -1
+    feats = {r.doc_id: r for r in
+             multimodal.frame_features(blobs, frame_bytes=1024).collect()}
+    assert feats[1].frame_len == 5 and feats[1].first_byte == ord("h") and feats[1].last_byte == ord("o")
+    assert feats[3].frame_len == 2 and feats[3].last_byte == ord("b")
+    assert 2 not in feats  # an empty payload has no frames
 
 
 def test_multimodal_frame_sample(spark):
     docs = _docs(spark, [(1, "x" * 33), (2, "y" * 16), (3, "")])
-    frames = multimodal.frame_sample(multimodal.attach_binary(docs), frame_bytes=16).collect()
+    frames = multimodal.frame_features(multimodal.attach_binary(docs), frame_bytes=16).collect()
     by_doc = {}
     for r in frames:
         by_doc.setdefault(r.doc_id, []).append((r.frame_idx, r.frame_len))
@@ -464,12 +466,6 @@ def test_decode_compressed_formats_still_stubbed(spark):
     jp2_magic = b"\x00\x00\x00\x0cjP  \r\n\x87\n" + b"\x00" * 16
     with pytest.raises(Exception, match="PIL|compressed"):
         multimodal.decode_image(_blob_df(spark, jp2_magic)).collect()
-
-
-def test_fake_decode_shapes(spark):
-    docs = _docs(spark, [(1, "x" * 10)])
-    r = multimodal.fake_decode_features(multimodal.attach_binary(docs)).collect()[0]
-    assert (r.width, r.height) == (11, 11)
 
 
 def _wav(rate, frames, bits=16, fmt_code=1, pre_data_chunk=None,
@@ -1012,49 +1008,6 @@ def test_brute_force_topk_finds_identical_vector(spark):
     out = brute_force_topk(emb, emb.filter(F.col("vec_id") == 0), top_k=2).collect()
     assert [(r.neighbor_id, r.rank) for r in out] == [(1, 1), (3, 2)]
     assert out[0].cosine == 1.0
-
-
-def test_streaming_incremental_ingest(spark, tmp_path):
-    """Streaming incremental protocol: two availableNow drains over a growing
-    directory append only the delta (same semantics as the daily batch)."""
-    from youtube_api_data_etl_automation_spark.streaming.ingest import incremental_ingest
-
-    src = tmp_path / "src"
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    df1 = spark.range(0, 100).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") * 1000000000).alias("ts"),
-        F.col("id").alias("user_id"),
-        F.lit("click").alias("event_type"),
-        F.lit(1.0).alias("value"),
-        F.lit("{}").alias("props"),
-    )
-    df1.write.mode("append").parquet(str(src))
-
-    from youtube_api_data_etl_automation_spark.streaming.ingest import EVENTS_RAW_SCHEMA
-
-    def stream():
-        raw = spark.readStream.schema(EVENTS_RAW_SCHEMA).format("parquet").load(str(src))
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-    incremental_ingest(stream(), ckpt, sink, "event_id")
-    assert spark.read.parquet(sink).count() == 100
-    # second batch: overlapping ids (files re-listed only for new files;
-    # overlap dedup is handled by the write-time anti-join)
-    df2 = spark.range(50, 150).select(
-        F.col("id").alias("event_id"),
-        (F.col("id") * 1000000000).alias("ts"),
-        F.col("id").alias("user_id"),
-        F.lit("view").alias("event_type"),
-        F.lit(2.0).alias("value"),
-        F.lit("{}").alias("props"),
-    )
-    df2.write.mode("append").parquet(str(src))
-    incremental_ingest(stream(), ckpt, sink, "event_id")
-    out = spark.read.parquet(sink)
-    assert out.count() == 150
-    assert out.groupBy("event_id").count().filter("count > 1").count() == 0
 
 
 def test_kmeans_deterministic_and_total(spark):

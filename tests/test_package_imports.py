@@ -1,9 +1,13 @@
 """Every package module imports cleanly: no module left importing a deleted
-one, and no SyntaxWarning or DeprecationWarning raised at import time."""
+one, and no SyntaxWarning or DeprecationWarning raised at import time. And
+every public package definition has a use outside the tests."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
+import re
 import subprocess
 import sys
 
@@ -43,3 +47,116 @@ def test_every_package_module_imports_without_warnings(tmp_path):
     count, _, failed = proc.stdout.partition("\n")
     assert int(count) > 0
     assert not failed.strip(), failed
+
+
+# Kept without a caller in the system: the reference's Postgres sink
+# (PAPER.md L1/L2), and the one state-rewrite API of the versioned sink.
+_UNUSED_ALLOWED_MODULES = {"operators/jdbc.py"}
+_UNUSED_ALLOWED = {
+    ("operators/versioned.py", name)
+    for name in ("commit_version", "read_current", "overwrite_versioned",
+                 "merge_upsert_versioned")
+}
+_PKG = "youtube_api_data_etl_automation_spark"
+_WORD = re.compile(r"\w+\Z")
+
+
+def _names(node) -> set[str]:
+    """Every identifier ``node`` names: Name and Attribute ids, import
+    aliases, and word-shaped string constants (registry keys, getattr)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rpartition(".")[2])
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and _WORD.match(n.value)):
+            out.add(n.value)
+    return out
+
+
+def _targets(stmt) -> list:
+    return stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+
+
+def _is_query(deco) -> bool:
+    return (isinstance(deco, ast.Call) and isinstance(deco.func, ast.Name)
+            and deco.func.id == "query")
+
+
+def _unused_definitions() -> list[str]:
+    """Public top-level package definitions that nothing the system runs
+    uses: the package's own code (not ``__init__`` re-exports, not a
+    definition's own body), ``__spark_entry__.py``, ``bench.py``,
+    ``tools/`` and ``perfbench/`` (not its tests). Uses inside an unused
+    definition do not count, so whatever only dead code calls is dead
+    too (fixed point)."""
+    defs: dict[tuple[str, str], set[str]] = {}
+    live: set[str] = set()
+    pkg_dir = os.path.join(ROOT, _PKG)
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"),
+                                 recursive=True)):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        rel = os.path.relpath(path, pkg_dir)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                body: set[str] = set()
+                for part in ast.iter_child_nodes(stmt):
+                    if part not in stmt.decorator_list:
+                        body |= _names(part)
+                defs[(rel, stmt.name)] = body - {stmt.name}
+                for deco in stmt.decorator_list:
+                    live |= _names(deco)
+                    if _is_query(deco):  # registered: QUERIES reaches it
+                        live.add(stmt.name)
+            elif (isinstance(stmt, (ast.Assign, ast.AnnAssign))
+                  and all(isinstance(t, ast.Name) for t in _targets(stmt))):
+                for t in _targets(stmt):
+                    defs[(rel, t.id)] = (
+                        _names(stmt.value) if stmt.value else set())
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                # a module-level import is a use only through the name it
+                # binds; an alias links the two names
+                for a in stmt.names:
+                    if a.asname and a.asname != a.name:
+                        defs[(rel, a.asname)] = {a.name.rpartition(".")[2]}
+            else:
+                live |= _names(stmt)
+    entries = [os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py")]
+    entries += glob.glob(os.path.join(ROOT, "tools", "*.py"))
+    entries += [p for p in glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
+                if not os.path.basename(p).startswith("test_")]
+    for path in entries:
+        with open(path, encoding="utf-8") as f:
+            live |= _names(ast.parse(f.read()))
+    roots = {k for k in defs
+             if k[0] in _UNUSED_ALLOWED_MODULES or k in _UNUSED_ALLOWED}
+    used: set[tuple[str, str]] = set()
+    while True:
+        names = set(live)
+        for k in used | roots:
+            names |= defs[k]
+        now = {k for k in defs if k[1] in names}
+        if now == used:
+            break
+        used = now
+    return sorted(
+        f"{rel}::{name}" for rel, name in defs
+        if not name.startswith("_") and (rel, name) not in used | roots
+    )
+
+
+def test_every_public_definition_has_a_non_test_use():
+    """Package code that only tests reach is dead weight: each public
+    top-level function, class and constant must be reached from the query
+    registry, the CLI, bench.py, tools/ or perfbench/ (allowlist above)."""
+    unused = _unused_definitions()
+    assert not unused, "no non-test use:\n" + "\n".join(unused)

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from youtube_api_data_etl_automation_spark.functions.text import tokens
 from youtube_api_data_etl_automation_spark.operators.packing import (
     pack_sequences,
-    packing_stats,
 )
 from youtube_api_data_etl_automation_spark.sources.tables import load_table
 
@@ -51,16 +50,3 @@ def test_packing_is_deterministic_across_partitionings(spark):
         for r in pack_sequences(docs, budget=BUDGET, n_shards=SHARDS).collect()
     }
     assert a == b
-
-
-def test_packing_stats_account_for_every_token(spark):
-    packed = _packed(spark)
-    stats = packing_stats(packed, budget=BUDGET)
-    rows = stats.collect()
-    assert {r.shard for r in rows} <= set(range(SHARDS))
-    total_docs = packed.count()
-    assert sum(r.n_docs for r in rows) == total_docs
-    for r in rows:
-        # every non-tail sequence is exactly full by construction
-        assert r.n_sequences * BUDGET - r.total_tokens == r.tail_waste_tokens
-        assert 0 <= r.tail_waste_tokens < BUDGET

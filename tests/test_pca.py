@@ -1,19 +1,13 @@
-"""Distributed PCA (operators/pca.py): both sufficient-statistics paths,
-the driver-side fit, and the map-side projection — against numpy as the
-ground truth on collected data (the fit IS numpy.eigh over distributed
-statistics, so the meaningful checks are that the statistics are right,
-deterministic, and that projection/whitening match the model)."""
+"""PCA sufficient statistics (operators/pca.py::second_moments) against
+numpy as the ground truth on collected data: the statistics are right
+and deterministic under repartitioning, in both summation modes."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.pca import (
-    gram_matrix_pandas,
-    pca_fit,
-    pca_project,
     second_moments,
 )
 
@@ -52,81 +46,6 @@ def test_second_moments_exact_and_repartition_stable(spark, vectors):
         for r in second_moments(df.repartition(7, "vec_id")).collect()
     }
     assert rows == rows2
-
-
-def test_gram_pandas_matches_exact_path(spark, vectors):
-    df, x = vectors
-    got = {int(r["pos"]): float(r["s"]) for r in gram_matrix_pandas(df).collect()}
-    assert got.pop(-1) == N  # count row; NULL vector excluded
-    exact = {int(r["pos"]): float(r["s"]) for r in second_moments(df).collect()}
-    for pos, v in exact.items():
-        assert got[pos] == pytest.approx(v, rel=1e-9, abs=1e-9)
-
-
-def test_pca_fit_matches_numpy_and_is_sign_fixed(spark, vectors):
-    df, x = vectors
-    model = pca_fit(df, k=5)
-    assert model["n"] == N and model["dim"] == D
-    cov = np.cov(x, rowvar=False)
-    ev = np.sort(np.linalg.eigvalsh(cov))[::-1][:5]
-    np.testing.assert_allclose(model["eigenvalues"], ev, rtol=1e-8)
-    comps = np.array(model["components"])
-    # orthonormal rows, each sign-fixed on its largest |coefficient|
-    np.testing.assert_allclose(comps @ comps.T, np.eye(5), atol=1e-9)
-    for row in comps:
-        assert row[int(np.argmax(np.abs(row)))] > 0
-    # exact-mode fit agrees
-    m2 = pca_fit(df, k=5, exact=True)
-    np.testing.assert_allclose(m2["eigenvalues"], model["eigenvalues"], rtol=1e-8)
-    np.testing.assert_allclose(m2["components"], model["components"], atol=1e-7)
-
-
-def test_pca_project_and_whiten_properties(spark, vectors):
-    df, x = vectors
-    k = 4
-    model = pca_fit(df, k=k)
-    out = pca_project(df, model).orderBy("vec_id").collect()
-    assert out[-1]["pca"] is None  # NULL in → NULL out
-    y = np.array([r["pca"] for r in out[:-1]])
-    assert y.shape == (N, k)
-    # projected variance per component = the eigenvalue
-    np.testing.assert_allclose(
-        y.var(axis=0, ddof=1), model["eigenvalues"], rtol=1e-6
-    )
-    # components are uncorrelated
-    c = np.cov(y, rowvar=False)
-    np.testing.assert_allclose(c - np.diag(np.diag(c)), 0, atol=1e-6)
-    # whitened: unit variance everywhere
-    w = np.array(
-        [
-            r["pca"]
-            for r in pca_project(df, model, whiten=True)
-            .orderBy("vec_id")
-            .collect()[:-1]
-        ]
-    )
-    np.testing.assert_allclose(w.var(axis=0, ddof=1), 1.0, rtol=1e-6)
-
-
-def test_pca_projection_plan_is_map_side(spark, vectors):
-    df, _ = vectors
-    model = pca_fit(df, k=3)
-    plan = (
-        pca_project(df, model)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan  # no shuffle: literal-array dot products
-
-
-def test_pca_fit_validates(spark, vectors):
-    df, _ = vectors
-    with pytest.raises(ValueError, match="1 <= k <= dim"):
-        pca_fit(df, k=0)
-    with pytest.raises(ValueError, match="1 <= k <= dim"):
-        pca_fit(df, k=D + 1)
-    tiny = df.limit(1)
-    with pytest.raises(ValueError, match="at least 2 vectors"):
-        pca_fit(tiny, k=2)
 
 
 def test_second_moments_grid6_fixture_mode(spark, vectors):

@@ -12,6 +12,7 @@ import random
 import zlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators import pdf as P
 
@@ -442,11 +443,10 @@ def test_pdf_text_quarantine_rows(spark):
 
 
 def test_pdf_to_documents_composition(spark):
-    """PDF payloads → documents-shaped rows that curate_corpus accepts:
-    broken payloads drop, page breaks become newlines, ids are stable."""
-    from youtube_api_data_etl_automation_spark.corpus import (
-        curate_corpus, pdf_to_documents,
-    )
+    """Two-page PDF text joins its pages on a form feed, a broken payload
+    quarantines instead of failing the batch, and the extracted text
+    feeds curate_corpus."""
+    from youtube_api_data_etl_automation_spark.corpus import curate_corpus
 
     c1 = zlib.compress(b"BT (The quick brown fox jumps over the lazy "
                        b"dog today) Tj ET")
@@ -465,14 +465,14 @@ def test_pdf_to_documents_composition(spark):
     df = spark.createDataFrame(
         [(7, bytearray(doc)), (8, bytearray(b"broken"))],
         "doc_id long, payload binary")
-    docs = pdf_to_documents(df)
-    rows = docs.collect()
-    assert len(rows) == 1
-    row = rows[0]
-    assert "\f" not in row["text"] and "Second page" in row["text"]
-    assert row["source"] == "pdf:7" and row["n_chars"] == len(row["text"])
-    again = pdf_to_documents(df).collect()[0]
-    assert again["doc_id"] == row["doc_id"]  # stable across re-ingestion
+    extracted = P.pdf_text(df, errors="quarantine")
+    rows = {r["doc_id"]: r for r in extracted.collect()}
+    assert rows[7]["text"].split("\f") == [
+        "The quick brown fox jumps over the lazy dog today",
+        "Second page keeps plenty of words for the funnel",
+    ]
+    assert rows[8]["error"] is not None and rows[8]["text"] is None
+    docs = extracted.filter(F.col("error").isNull()).select("doc_id", "text")
     result = curate_corpus(docs, min_tokens=5, max_tokens=1000,
                            quality_min=0.0)
     assert result["documents"].count() == 1

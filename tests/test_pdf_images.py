@@ -3,8 +3,8 @@ the image pipeline — DCTDecode streams pass through as standalone
 JPEGs, decodable chains unpack to PNM, refusals quarantine per image.
 
 VERDICT r11 item 2: a DCTDecode image XObject IS a JPEG the in-repo
-decoder already handles; this bridges PDF figures into
-image_hashes/dedup_images the way members_as_payloads bridges tarballs.
+decoder already handles; this bridges PDF figures into image_hashes and
+decode_image.
 """
 
 from __future__ import annotations
@@ -165,8 +165,8 @@ def test_form_xobject_recursion_and_cycles():
 
 
 def test_spark_operator_and_payload_bridge(spark):
-    """pdf_images → pdf_images_as_payloads → decode_image: the PDF
-    figure decodes to the same pixels as its standalone encoding."""
+    """pdf_images → decode_image: the PDF figure payload decodes to the
+    same pixels as its standalone encoding."""
     from tests.test_jpeg import (
         FLAT_Q, _encode_jpeg, _expected_pixels, _rng_image,
     )
@@ -198,16 +198,16 @@ def test_spark_operator_and_payload_bridge(spark):
     assert [r for r in rows if r["doc_id"] == 2][0]["error_kind"] \
         == "corrupt"
 
-    payloads = P.pdf_images_as_payloads(images)
-    src_by_id = {r["doc_id"]: r["source"] for r in
-                 payloads.select("doc_id", "source").collect()}
-    decoded = {src_by_id[r["doc_id"]]: r for r in decode_image(
-        payloads.select("doc_id", "payload"), errors="quarantine")
-        .collect()}
-    ppm_row = decoded["0/Raw"]
+    good = [r for r in rows if r["payload"] is not None]
+    payloads = spark.createDataFrame(
+        [(i, r["payload"]) for i, r in enumerate(good)],
+        "doc_id long, payload binary")
+    decoded = {good[r["doc_id"]]["name"]: r for r in decode_image(
+        payloads, errors="quarantine").collect()}
+    ppm_row = decoded["Raw"]
     assert (ppm_row["width"], ppm_row["height"]) == (5, 4)
     assert ppm_row["mean_r"] == pytest.approx(px[:, :, 0].mean())
-    jp_row = decoded["0/Jp"]
+    jp_row = decoded["Jp"]
     assert (jp_row["width"], jp_row["height"]) == (8, 8)
     # the bridged JPEG decodes to the reference model's pixels
     want = _expected_pixels(blocks, sampling, FLAT_Q, 8, 8)
@@ -225,9 +225,8 @@ def test_raise_mode_propagates_image_errors(spark):
 
 
 def test_corpus_pdf_to_images_composition(spark):
-    """corpus.pdf_to_images: PDF figures land in the standard image
-    payload shape and dedup_images collapses re-used figures."""
-    from youtube_api_data_etl_automation_spark.corpus import pdf_to_images
+    """PDF figures come out as standalone image payloads, and a figure
+    re-used across documents hashes identically."""
     from youtube_api_data_etl_automation_spark.operators.imagehash import (
         image_hashes,
     )
@@ -248,12 +247,17 @@ def test_corpus_pdf_to_images_composition(spark):
         [(1, bytearray(doc_a)), (2, bytearray(doc_b)),
          (3, bytearray(b"broken"))],
         "doc_id long, payload binary")
-    images = pdf_to_images(blobs)
-    rows = images.collect()
-    # refused image + broken doc dropped; two good figures remain
-    assert len(rows) == 2
-    assert {r["source"] for r in rows} == {"0/Fig", "0/Cover"}
-    assert len({r["doc_id"] for r in rows}) == 2  # distinct stable ids
+    extracted = P.pdf_images(blobs, errors="quarantine")
+    rows = extracted.collect()
+    # refused image + broken doc quarantine; two good figures remain
+    assert sorted(r["error_kind"] for r in rows if r["error"]) == \
+        ["corrupt", "unsupported"]
+    good = [r for r in rows if r["error"] is None]
+    assert {(r["doc_id"], r["name"]) for r in good} == \
+        {(1, "Fig"), (2, "Cover")}
+    images = spark.createDataFrame(
+        [(r["doc_id"], r["payload"]) for r in good],
+        "doc_id long, payload binary")
     hashes = image_hashes(images, errors="quarantine").collect()
     assert len({(h["dhash"], h["ahash"]) for h in hashes}) == 1
 

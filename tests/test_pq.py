@@ -1,6 +1,6 @@
 """Product quantization (operators/pq.py): encode correctness vs a numpy
-reference, ADC scoring vs exact reconstruction scoring, training
-determinism + error descent, and the map-side plan pins."""
+reference, ADC scoring vs exact reconstruction scoring, and the map-side
+plan pins."""
 
 from __future__ import annotations
 
@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.pq import (
     pq_encode,
-    pq_quantization_error,
-    pq_reconstruct,
     pq_topk,
-    train_pq,
 )
 
 M, K, DIM = 4, 8, 64
@@ -54,17 +51,6 @@ def test_pq_encode_matches_numpy_argmin(spark, corpus):
     want = d2.argmin(axis=2)
     for i in range(len(vecs)):
         assert got[i] == list(want[i]), f"vec {i}: {got[i]} != {list(want[i])}"
-
-
-def test_pq_reconstruct_concatenates_codebook_rows(spark, corpus):
-    df, _ = corpus
-    cbs = _np_codebooks()
-    enc = pq_encode(df.limit(5), cbs)
-    out = enc.select("vec_id", pq_reconstruct("codes", cbs).alias("r")).collect()
-    for r in out:
-        codes = enc.filter(F.col("vec_id") == r["vec_id"]).first()["codes"]
-        want = [v for s in range(M) for v in cbs[s][codes[s]]]
-        assert r["r"] == pytest.approx(want)
 
 
 def test_pq_topk_equals_scoring_through_reconstruction(spark, corpus):
@@ -114,77 +100,3 @@ def test_pq_topk_plan_broadcasts_queries_only(spark, corpus):
     assert "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("Exchange hashpartitioning") == 1  # the rank window only
-
-
-def test_train_pq_is_deterministic_and_descends(spark, corpus):
-    df, _ = corpus
-    cbs0 = train_pq(spark, df, m=M, k=K, n_iter=2)
-    cbs1 = train_pq(spark, df.repartition(7), m=M, k=K, n_iter=2)
-    assert cbs0 == cbs1, "training must not depend on partitioning"
-    init = [
-        [[float(x) for x in r["embedding"]][s * DSUB:(s + 1) * DSUB]
-         for r in df.orderBy("vec_id").limit(K).collect()]
-        for s in range(M)
-    ]
-    e_init = pq_quantization_error(df, init)
-    e_trained = pq_quantization_error(df, cbs0)
-    assert e_trained < e_init, (e_trained, e_init)
-
-
-def test_train_pq_empty_cluster_keeps_previous_centroid(spark):
-    # 8 identical vectors + k=2: one centroid wins everything, the other
-    # must survive as its init value instead of vanishing.
-    rows = [(i, [1.0] * DIM) for i in range(7)] + [(7, [0.0] * DIM)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cbs = train_pq(spark, df, m=M, k=2, n_iter=2)
-    for s in range(M):
-        assert len(cbs[s]) == 2
-        assert all(len(cv) == DSUB for cv in cbs[s])
-
-
-def test_ivf_pq_index_prunes_and_matches_full_probe(spark, tmp_path):
-    """write_ivf_pq_index / ivf_pq_topk_from_index: the at-rest IVF-PQ —
-    PartitionFilters prune to the probed cells, raw vectors never appear
-    in the scan schema, and probing EVERY cell reproduces pq_topk over
-    the full code relation exactly (same ADC Column by construction)."""
-    import re
-
-    from youtube_api_data_etl_automation_spark.operators.pq import (
-        ivf_pq_topk_from_index,
-        pq_encode,
-        pq_topk,
-        train_pq,
-        write_ivf_pq_index,
-    )
-    from youtube_api_data_etl_automation_spark.sources.tables import load_table
-
-    from .conftest import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings", rebalance=True)
-    cent = emb.filter(F.col("vec_id").between(10, 13)).select(
-        (F.col("vec_id") - 10).alias("vec_id"), "embedding"
-    )
-    cbs = train_pq(spark, emb, m=4, k=4, n_iter=1)
-    queries = emb.filter(F.col("vec_id") < 2)
-    path = str(tmp_path / "ivfpq")
-    write_ivf_pq_index(emb, cent, cbs, path)
-
-    # full probe (nprobe = #cells) == flat pq_topk over all codes
-    at_rest = ivf_pq_topk_from_index(
-        spark, path, queries, cent, cbs, top_k=3, nprobe=4
-    )
-    flat = pq_topk(pq_encode(emb, cbs), queries, cbs, top_k=3)
-    assert sorted(map(tuple, at_rest.collect())) == sorted(
-        map(tuple, flat.collect())
-    )
-
-    # pruned probe: PartitionFilters carries cluster_id; codes-only scan
-    pruned = ivf_pq_topk_from_index(
-        spark, path, queries, cent, cbs, top_k=3, nprobe=1
-    )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    m_ = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m_ and "cluster_id" in m_.group(1)
-    scan = [ln for ln in plan.splitlines() if "Scan parquet" in ln and "codes" in ln]
-    assert scan and all("embedding" not in ln for ln in scan)
-    assert pruned.count() > 0

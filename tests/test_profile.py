@@ -489,7 +489,7 @@ def test_fused_profile_empty_relation(spark):
 
 
 # ---------------------------------------------------------------------------
-# Semantic drift (operators/clustering.py::cluster_occupancy/embedding_drift)
+# Semantic drift (operators/clustering.py::_occupancy_counts/embedding_drift)
 # ---------------------------------------------------------------------------
 
 
@@ -517,12 +517,21 @@ def _cent_df(spark, k=4, dim=4):
     return spark.createDataFrame(rows, "cluster_id long, cv array<double>")
 
 
-def test_cluster_occupancy_counts_every_vector_once(spark):
+def _occupancy(corpus, centroids):
+    """Occupancy histogram of ``corpus`` over a centroid relation."""
     from youtube_api_data_etl_automation_spark.operators.clustering import (
-        cluster_occupancy,
+        _occupancy_counts,
+    )
+    from youtube_api_data_etl_automation_spark.operators.similarity import (
+        _collect_centroids,
     )
 
-    occ = cluster_occupancy(_emb_df(spark), _cent_df(spark)).collect()
+    cids, cvs, id_dt = _collect_centroids(centroids, "cluster_id", "cv")
+    return _occupancy_counts(corpus, cids, cvs, id_dt, "embedding")
+
+
+def test_cluster_occupancy_counts_every_vector_once(spark):
+    occ = _occupancy(_emb_df(spark), _cent_df(spark)).collect()
     assert sum(r["n"] for r in occ) == 60
     assert all(0 <= r["cluster_id"] <= 3 for r in occ)
 
@@ -550,7 +559,6 @@ def test_embedding_drift_composition_matches_manual_psi(spark):
     """embedding_drift == histogram_drift over the occupancy relations —
     the composition introduces no arithmetic of its own."""
     from youtube_api_data_etl_automation_spark.operators.clustering import (
-        cluster_occupancy,
         embedding_drift,
     )
     from youtube_api_data_etl_automation_spark.operators.profile import (
@@ -561,7 +569,7 @@ def test_embedding_drift_composition_matches_manual_psi(spark):
     cur, prev = _emb_df(spark, negate=True), _emb_df(spark)
 
     def hist(df):
-        return cluster_occupancy(df, cent).select(
+        return _occupancy(df, cent).select(
             F.col("cluster_id").cast("int").alias("bucket"),
             F.col("cluster_id").cast("double").alias("bucket_lo"),
             (F.col("cluster_id") + 1).cast("double").alias("bucket_hi"),
@@ -580,12 +588,8 @@ def test_embedding_drift_corpus_never_shuffles_vectors(spark):
     embedding column never appears in an exchange. (embedding_drift's
     OWN plan does contain one SortMergeJoin: histogram_drift's ≤k-row
     full-outer bucket join, documented there.)"""
-    from youtube_api_data_etl_automation_spark.operators.clustering import (
-        cluster_occupancy,
-    )
-
     plan = (
-        cluster_occupancy(_emb_df(spark), _cent_df(spark))
+        _occupancy(_emb_df(spark), _cent_df(spark))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from youtube_api_data_etl_automation_spark.operators.quality_clf import (
     N_BUCKETS,
     learned_logit_t,
-    learned_score_t,
     train_quality_clf,
 )
 
@@ -45,9 +44,10 @@ def test_loss_decreases_and_separates(spark, labeled):
     hist = model["loss_history"]
     assert hist[-1] < hist[0] * 0.3  # real descent, not noise
     scored = labeled.select(
-        "y", learned_score_t("tok", model["weights"], model["bias"]).alias("p")
+        "y", learned_logit_t("tok", model["weights"], model["bias"]).alias("z")
     ).collect()
-    acc = sum(1 for r in scored if (r.p >= 0.5) == (r.y == 1)) / len(scored)
+    # keep-probability sigmoid(z) >= 0.5 exactly when z >= 0
+    acc = sum(1 for r in scored if (r.z >= 0) == (r.y == 1)) / len(scored)
     assert acc == 1.0  # linearly separable planted signal
     # the signal tokens carry the sign
     w = model["weights"]
@@ -166,9 +166,9 @@ def test_minibatch_matches_fullbatch_separation(spark, labeled):
     assert mini["bias"] == mini2["bias"]
     # same separation on the planted signal
     scored = labeled.select(
-        "y", learned_score_t("tok", mini["weights"], mini["bias"]).alias("p")
+        "y", learned_logit_t("tok", mini["weights"], mini["bias"]).alias("z")
     ).collect()
-    acc = sum(1 for r in scored if (r.p >= 0.5) == (r.y == 1)) / len(scored)
+    acc = sum(1 for r in scored if (r.z >= 0) == (r.y == 1)) / len(scored)
     assert acc == 1.0
     assert mini["weights"][_bucket("good")] > 0 > mini["weights"][_bucket("spam")]
     # bounded drift from the full-batch weights on this convex problem —

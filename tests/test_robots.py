@@ -220,16 +220,12 @@ def test_plan_no_corpus_shuffle(spark):
 
 
 def test_composition_with_warc_ingestion(spark):
-    """The intended pipeline seam: warc_to_documents rows carry the
-    crawl URI in `source`; robots filtering applies retroactively at
-    curation time via url_col='source'."""
+    """The intended pipeline seam: documents built from WARC responses
+    carry the crawl URI in `source`; robots filtering applies
+    retroactively at curation time via url_col='source'."""
     import sys
     sys.path.insert(0, "tests")
-    from test_archives import _http_response, _warc_record
-
-    from youtube_api_data_etl_automation_spark.corpus import (
-        warc_to_documents,
-    )
+    from test_archives import _http_response, _warc_documents, _warc_record
 
     recs = []
     for uri, body in (
@@ -242,7 +238,7 @@ def test_composition_with_warc_ingestion(spark):
     warc = b"".join(recs)
     blobs = spark.createDataFrame([(1, bytearray(warc))],
                                   "doc_id long, payload binary")
-    docs = warc_to_documents(blobs)
+    docs = _warc_documents(blobs)
     assert docs.count() == 2
     rules = _rules(spark)
     kept = R.filter_robots_allowed(docs, rules, url_col="source") \

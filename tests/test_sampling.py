@@ -8,7 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.sampling import (
-    aes_key,
+    aes_log_key,
     stable_uniform,
     weighted_sample_per_group,
 )
@@ -91,16 +91,17 @@ def test_nonpositive_weights_never_beat_positive(spark):
 
 
 def test_key_monotone_in_weight_for_same_u(spark):
-    """u fixed ⇒ key strictly increases with weight (u^(1/w) → 1)."""
+    """u fixed ⇒ key strictly increases with weight (ln(u)/w → 0)."""
     df = spark.createDataFrame([(7,)], "id long").select(
-        aes_key(F.col("id"), F.lit(1.0)).alias("k1"),
-        aes_key(F.col("id"), F.lit(5.0)).alias("k5"),
-        aes_key(F.col("id"), F.lit(50.0)).alias("k50"),
+        aes_log_key(F.col("id"), F.lit(1.0)).alias("k1"),
+        aes_log_key(F.col("id"), F.lit(5.0)).alias("k5"),
+        aes_log_key(F.col("id"), F.lit(50.0)).alias("k50"),
+        aes_log_key(F.col("id"), F.lit(0.0)).alias("k0"),
     )
     r = df.first()
-    assert r["k1"] < r["k5"] < r["k50"]
-    assert all(0 < v < 1 for v in (r["k1"], r["k5"], r["k50"]))
+    assert r["k1"] < r["k5"] < r["k50"] < 0
     assert not math.isnan(r["k1"])
+    assert r["k0"] == float("-inf")  # non-positive weight: always last
 
 
 def test_grouped_split_leakage_safe(spark):

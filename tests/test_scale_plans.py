@@ -420,48 +420,6 @@ def test_staged_video_ids_plan_is_metadata_only(spark, tmp_path):
         assert "v1" not in str(part.payload)  # payload carries no ids
 
 
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
-    """The persistent IVF index (operators/similarity.py::write_ivf_index)
-    must turn a probe into PLANNING-time partition pruning: the scan's
-    PartitionFilters carries the cluster_id membership filter, and the
-    in-memory and at-rest forms return identical top-k."""
-    from youtube_api_data_etl_automation_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings", rebalance=True)
-    # centroids in the raw (vec_id, embedding) form assign_clusters /
-    # probe_cells expect (they rename internally)
-    cent = emb.filter(F.col("vec_id").between(10, 17)).select(
-        (F.col("vec_id") - 10).alias("vec_id"), "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 3)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, cent, path)
-
-    at_rest = ivf_topk_from_index(
-        spark, path, queries, cent, top_k=3, nprobe=2
-    )
-    plan = _plan(at_rest)
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "cluster_id" in m.group(1), plan[:2000]
-    in_memory = ivf_topk(emb, queries, cent, top_k=3, nprobe=2)
-    assert sorted(map(tuple, at_rest.collect())) == sorted(
-        map(tuple, in_memory.collect())
-    )
-    # appending a batch under the same centroids extends the index
-    extra = emb.filter(F.col("vec_id").between(490, 499)).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding", "label"
-    )
-    write_ivf_index(extra, cent, path, mode="append")
-    n = spark.read.parquet(path).count()
-    assert n == emb.count() + 10
-
-
 def test_frontier_delay_join_broadcasts(spark):
     """r14: crawl_frontier's crawl_delay_sec join is a BROADCAST hash
     join of the rules-sized delays relation — a refactor that lets it
@@ -517,9 +475,9 @@ def test_cluster_assignment_is_map_side_literal(spark):
     kind — the former broadcast-join + groupBy(id).max_by shape
     re-shuffled every corpus row WITH its vector payload for an
     aggregate that had nothing left to merge. At 100 TB that exchange
-    was the operator's entire cost; kmeans_lloyd and train_pq
-    iterations share the same literal-argmax shape (their only
-    remaining exchange is the k·dim partial-sum aggregate)."""
+    was the operator's entire cost; kmeans_lloyd iterations share the
+    same literal-argmax shape (their only remaining exchange is the
+    k·dim partial-sum aggregate)."""
     from youtube_api_data_etl_automation_spark.operators.similarity import (
         assign_clusters,
     )

@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.scd import (
-    asof_lookup,
     scd2_history,
 )
 
@@ -71,17 +70,6 @@ def test_tie_breaker_makes_same_day_changes_deterministic(spark):
     ]
     # Version 2 opens on the same d its predecessor opened.
     assert out[1]["valid_from"] == 1
-
-
-def test_asof_lookup_selects_covering_version(spark):
-    rows = [(1, "A", 1, 0), (1, "B", 5, 0), (1, "C", 9, 0)]
-    hist = _hist(spark, rows)
-    assert asof_lookup(hist, key_cols=["k"], as_of=F.lit(4)).first()["attr"] == "A"
-    assert asof_lookup(hist, key_cols=["k"], as_of=F.lit(5)).first()["attr"] == "B"
-    # Open current version covers any later point.
-    assert asof_lookup(hist, key_cols=["k"], as_of=F.lit(99)).first()["attr"] == "C"
-    # Before history begins: no version.
-    assert asof_lookup(hist, key_cols=["k"], as_of=F.lit(0)).count() == 0
 
 
 def test_partitioning_invariance(spark):

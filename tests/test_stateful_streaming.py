@@ -218,7 +218,7 @@ def test_session_window_drain_equals_batch(spark):
     name = f"sw_drain_{uuid.uuid4().hex[:8]}"
     run_session_window_sessions(
         spark, SF_DIR, tempfile.mkdtemp(prefix="ckpt_"), name
-    )
+    ).awaitTermination()
     idx_w = Window.partitionBy("user_id").orderBy("session_start_us")
     native = (
         spark.table(name)
@@ -231,144 +231,3 @@ def test_session_window_drain_equals_batch(spark):
     expected = session_stats(load_table(spark, SF_DIR, "events"), gap_minutes=30)
     diff = native.exceptAll(expected).union(expected.exceptAll(native))
     assert diff.count() == 0, diff.limit(10).collect()
-
-
-def test_monitor_stream_drift_flags_shifted_batch(spark, tmp_path):
-    """Per-micro-batch PSI against a fixed baseline: an in-distribution
-    batch scores quiet, a x10-scaled batch flags, and a resumed drain
-    does not re-score processed batches."""
-    from youtube_api_data_etl_automation_spark.operators.profile import (
-        numeric_histogram,
-    )
-    from youtube_api_data_etl_automation_spark.streaming.monitor import (
-        monitor_stream_drift,
-    )
-
-    grid = dict(col="v", lo=0.0, hi=100.0, bins=10)
-    base_df = spark.createDataFrame(
-        [(i, float(i % 100)) for i in range(1000)], "id long, v double"
-    )
-    baseline = numeric_histogram(base_df, **grid)
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "id long, v double"
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(src)
-        monitor_stream_drift(stream, baseline, ckpt, sink, **grid)
-
-    # batch 1: same uniform shape — quiet
-    spark.createDataFrame(
-        [(i, float((i * 7) % 100)) for i in range(500)], schema
-    ).write.mode("append").parquet(src)
-    drain()
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 1 and not rows[0]["flagged"]
-    assert rows[0]["cur_total"] == 500
-
-    # batch 2: everything clamps into the top bucket — flagged
-    spark.createDataFrame(
-        [(i, float(900 + i % 10)) for i in range(500)], schema
-    ).write.mode("append").parquet(src)
-    drain()
-    rows = {r["batch_id"]: r for r in spark.read.parquet(sink).collect()}
-    assert len(rows) == 2
-    assert any(r["flagged"] for r in rows.values())
-    # resume with nothing new: no extra verdict rows
-    drain()
-    assert spark.read.parquet(sink).count() == 2
-
-
-def test_monitor_stream_drift_from_committed_state(spark, tmp_path):
-    """The always-on monitor reads its baseline (and grid) straight off a
-    committed profile-state sink: one shape baseline shared by the batch
-    gate and the stream monitor."""
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        incremental_profile_versioned,
-    )
-    from youtube_api_data_etl_automation_spark.streaming.monitor import (
-        monitor_stream_drift_from_state,
-    )
-
-    state = str(tmp_path / "state")
-    base_df = spark.createDataFrame(
-        [(i, float(i % 100)) for i in range(1000)], "id long, v double"
-    )
-    incremental_profile_versioned(
-        base_df, state, ["v"], batch_id="seed",
-        hist_specs=[("v", 0.0, 100.0, 10)],
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "id long, v double"
-    spark.createDataFrame(
-        [(i, float(95.0)) for i in range(400)], schema  # one-bucket collapse
-    ).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    monitor_stream_drift_from_state(stream, state, ckpt, sink, col="v")
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 1 and rows[0]["flagged"] and rows[0]["psi"] > 0.2
-    # untracked column is explicit
-    stream2 = spark.readStream.schema(schema).parquet(src)
-    with pytest.raises(KeyError):
-        monitor_stream_drift_from_state(
-            stream2, state, ckpt + "2", sink + "2", col="id"
-        )
-
-
-def test_profile_stream_to_state_exactly_once_even_without_checkpoint(
-    spark, tmp_path
-):
-    """Streaming profile maintenance: micro-batches fold into the
-    committed state; a replay from a FRESH checkpoint (simulated
-    checkpoint loss) refolds nothing because the applied-batch markers
-    carry the idempotence, not just the checkpoint."""
-    from youtube_api_data_etl_automation_spark.operators.profile import (
-        stats_from_state,
-    )
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        read_profile_state,
-    )
-    from youtube_api_data_etl_automation_spark.streaming.monitor import (
-        profile_stream_to_state,
-    )
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    schema = "id long, v double"
-    spark.createDataFrame(
-        [(i, float(i % 10)) for i in range(100)], schema
-    ).write.mode("append").parquet(src)
-
-    def drain(ckpt):
-        stream = spark.readStream.schema(schema).parquet(src)
-        profile_stream_to_state(stream, state, ckpt, ["v"])
-
-    drain(str(tmp_path / "ckpt1"))
-    n1 = {
-        r["column_name"]: r["n_rows"]
-        for r in stats_from_state(read_profile_state(spark, state)).collect()
-    }
-    assert n1 == {"v": 100}
-    # replay the WHOLE source from a fresh checkpoint: same micro-batch
-    # ids => applied markers skip every fold
-    drain(str(tmp_path / "ckpt2"))
-    n2 = {
-        r["column_name"]: r["n_rows"]
-        for r in stats_from_state(read_profile_state(spark, state)).collect()
-    }
-    assert n2 == {"v": 100}
-    # genuinely new data folds in on the next drain
-    spark.createDataFrame(
-        [(100 + i, float(i % 10)) for i in range(50)], schema
-    ).write.mode("append").parquet(src)
-    drain(str(tmp_path / "ckpt1"))
-    n3 = {
-        r["column_name"]: r["n_rows"]
-        for r in stats_from_state(read_profile_state(spark, state)).collect()
-    }
-    assert n3 == {"v": 150}

@@ -9,7 +9,6 @@ from youtube_api_data_etl_automation_spark.operators.substring import (
     duplicated_spans,
     kgram_occurrences,
     repeated_span_profile,
-    span_mask_expr,
 )
 
 
@@ -102,18 +101,6 @@ def test_gram_positions_are_one_based_and_contiguous(spark):
     docs = _docs(spark, [(1, "a b c d e f")])
     occ = kgram_occurrences(docs, k=5).orderBy("pos").collect()
     assert [r["pos"] for r in occ] == [1, 2]
-
-
-def test_span_mask_removes_exact_token_range(spark):
-    docs = _docs(spark, [(1, "a b c d e f g")])
-    from youtube_api_data_etl_automation_spark.functions.text import tokens
-
-    out = (
-        docs.select(tokens("text").alias("tok"))
-        .select(span_mask_expr("tok", F.lit(3), F.lit(5)).alias("kept"))
-        .first()["kept"]
-    )
-    assert out == ["a", "b", "f", "g"]
 
 
 def test_partitioning_invariance(spark):

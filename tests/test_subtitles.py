@@ -134,17 +134,10 @@ def test_fuzz_quarantine_contract():
 
 
 def test_subtitles_to_documents_composition(spark):
-    from youtube_api_data_etl_automation_spark.corpus import (
-        subtitles_to_documents,
-    )
-
     df = spark.createDataFrame(
         [(21, bytearray(SRT)), (22, bytearray(b"nope"))],
         "doc_id long, payload binary")
-    docs = subtitles_to_documents(df).collect()
-    assert len(docs) == 1
-    d = docs[0]
-    assert d["source"] == "srt:21" and "Second cue" in d["text"]
-    assert d["n_chars"] == len(d["text"])
-    again = subtitles_to_documents(df).collect()[0]
-    assert again["doc_id"] == d["doc_id"]
+    rows = {r["doc_id"]: r for r in S.subtitles_text(df).collect()}
+    assert rows[21]["error"] is None and rows[21]["format"] == "srt"
+    assert "Second cue" in rows[21]["text"]
+    assert rows[22]["error"] is not None and rows[22]["text"] is None

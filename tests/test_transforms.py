@@ -9,9 +9,36 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import types as T
 
-from youtube_api_data_etl_automation_spark.schemas import CHANNELS_RAW, VIDEOS_RAW, VIDEO_STATS
-from youtube_api_data_etl_automation_spark.transforms import curate_channels, enrich_videos
+from youtube_api_data_etl_automation_spark.sources.youtube_api import VIDEOS_SCHEMA
+from youtube_api_data_etl_automation_spark.transforms import enrich_videos
+
+# video_stats — the 19-column enriched output, column order as materialized
+# by the reference write (fetch_youtube_data.py:194; FIXTURES.md §5).
+VIDEO_STATS = T.StructType(
+    [
+        T.StructField("videoId", T.StringType(), False),
+        T.StructField("channel", T.StringType(), True),
+        T.StructField("video_title", T.StringType(), True),
+        T.StructField("description", T.StringType(), True),
+        T.StructField("tags", T.ArrayType(T.StringType()), True),
+        T.StructField("publishedAt", T.TimestampType(), True),
+        T.StructField("likes", T.LongType(), True),
+        T.StructField("views", T.LongType(), True),  # NULL policy per SURVEY §2.6 item 4
+        T.StructField("comments", T.LongType(), True),
+        T.StructField("favourites", T.LongType(), True),
+        T.StructField("duration", T.StringType(), True),
+        T.StructField("tag_count", T.IntegerType(), False),
+        T.StructField("description_length", T.IntegerType(), False),
+        T.StructField("publish_year", T.IntegerType(), True),
+        T.StructField("publish_time", T.StringType(), True),
+        T.StructField("published_dayofweek", T.StringType(), True),
+        T.StructField("duration_sec", T.DoubleType(), True),
+        T.StructField("comment_view_ratio", T.DoubleType(), True),
+        T.StructField("like_view_ratio", T.DoubleType(), True),
+    ]
+)
 
 
 def _video(videoId, **kw):
@@ -29,7 +56,7 @@ def _video(videoId, **kw):
         duration="PT1M40S",
     )
     base.update(kw)
-    return tuple(base[f.name] for f in VIDEOS_RAW.fields)
+    return tuple(base[f.name] for f in VIDEOS_SCHEMA.fields)
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +73,7 @@ def enriched(spark):
         _video("v_bad_ts", publishedAt="not-a-timestamp"),
         _video("v_null_likes", likes=None, comments=None, favourites=None),
     ]
-    df = enrich_videos(spark.createDataFrame(rows, VIDEOS_RAW))
+    df = enrich_videos(spark.createDataFrame(rows, VIDEOS_SCHEMA))
     return {r.videoId: r for r in df.collect()}, df
 
 
@@ -109,10 +136,3 @@ def test_fillna_zero_counters(enriched):
     r = enriched[0]["v_null_likes"]
     assert r.likes == 0 and r.comments == 0 and r.favourites == 0
     assert r.comment_view_ratio == 0.0  # 0/100*1000
-
-
-def test_curate_channels(spark):
-    rows = [("c1", "2020-01-01T00:00:00Z", None, "123", "456", "7", "pl1")]
-    out = curate_channels(spark.createDataFrame(rows, CHANNELS_RAW)).collect()[0]
-    assert out.subscribers == 123 and out.views == 456 and out.totalVideos == 7
-    assert out.country is None

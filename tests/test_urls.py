@@ -115,44 +115,6 @@ def test_host_suffixes_label_aligned(spark):
     assert rows[3] == []
 
 
-def test_filter_blocked_domains(spark):
-    docs = spark.createDataFrame(
-        [(1, "https://sub.example.com/a"),      # blocked via suffix
-         (2, "https://example.com/b"),          # blocked exactly
-         (3, "https://notexample.com/c"),       # NOT blocked (aligned)
-         (4, "https://ok.org/d"),
-         (5, "https://deep.tracker.evil.org/e"),  # blocked via suffix
-         (6, "not a url")],                     # empty host survives
-        "doc_id long, url string")
-    blocked = spark.createDataFrame(
-        [("Example.COM",), ("tracker.evil.org",)], "domain string")
-    kept = sorted(r["doc_id"] for r in
-                  U.filter_blocked_domains(docs, blocked).collect())
-    assert kept == [3, 4, 6]
-    # one-row broadcast (sanctioned BNLJ: the blocklist folds to a
-    # single array row) — the corpus side must NOT shuffle
-    plan = U.filter_blocked_domains(docs, blocked)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
-    # every Exchange is either the broadcast itself or the
-    # single-partition fold of the (small) blocklist side
-    non_broadcast = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert non_broadcast == plan.count("Exchange SinglePartition")
-
-
-def test_filter_blocked_domains_keeps_null_urls(spark):
-    """r12 (ADVICE): arrays_overlap over an all-NULL suffix array is
-    NULL, not false — a NULL url matches no blocklist entry and must
-    survive the filter."""
-    docs = spark.createDataFrame(
-        [(1, "https://blocked.com/a"), (2, None), (3, "https://ok.org/b")],
-        "doc_id long, url string")
-    blocked = spark.createDataFrame([("blocked.com",)], "domain string")
-    kept = sorted(r["doc_id"] for r in
-                  U.filter_blocked_domains(docs, blocked).collect())
-    assert kept == [2, 3]
-
-
 PSL_RULES = [
     "// ===BEGIN ICANN DOMAINS===",  # comment line, ignored
     "com", "org", "uk", "co.uk", "jp",

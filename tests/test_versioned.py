@@ -1,6 +1,6 @@
 """Versioned sink protocol (operators/versioned.py): commit atomicity,
 reader snapshot isolation across overlapping swaps, crash-debris recovery,
-GC horizon, and merge/compact/fold semantics."""
+GC horizon, and merge/fold semantics."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from youtube_api_data_etl_automation_spark.operators.versioned import (
     ConcurrentWriteError,
     commit_version,
-    compact_versioned,
     current_version,
+    incremental_state_versioned,
     list_versions,
     merge_upsert_versioned,
     overwrite_versioned,
@@ -24,6 +24,29 @@ from youtube_api_data_etl_automation_spark.operators.versioned import (
 
 def _df(spark, pairs):
     return spark.createDataFrame(pairs, "k string, v long")
+
+
+def _fold(delta, base, keys, sum_cols, batch_id):
+    """An exactly-once count + decimal-sum fold through
+    incremental_state_versioned (state schema: keys, cnt, sum_<c>)."""
+
+    def sums(src):
+        return [F.sum(src(c)).cast("decimal(28,6)").alias(f"sum_{c}")
+                for c in sum_cols]
+
+    def fold(old_state, batch):
+        part = batch.groupBy(*keys).agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+            *sums(lambda c: F.col(c).cast("decimal(28,6)")),
+        )
+        if old_state is None:
+            return part
+        return old_state.unionByName(part).groupBy(*keys).agg(
+            F.sum("cnt").cast("long").alias("cnt"),
+            *sums(lambda c: F.col(f"sum_{c}")),
+        )
+
+    return incremental_state_versioned(delta, base, batch_id, fold)
 
 
 def test_commit_and_read_roundtrip(spark, tmp_path):
@@ -292,24 +315,6 @@ def test_gc_keeps_retention_horizon(spark, tmp_path):
     assert read_current(spark, base).collect()[0].v == 4
 
 
-def test_compact_versioned_reduces_files_preserving_data(spark, tmp_path):
-    base = str(tmp_path / "sink")
-    many = spark.range(2000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
-    ).repartition(37)
-    commit_version(many, base)
-    before = read_current(spark, base)
-    n_before = before.count()
-
-    stats = compact_versioned(spark, base, target_mb=128)
-    assert stats["files_before"] == 37
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["version"] == 2
-    after = read_current(spark, base)
-    assert after.count() == n_before
-    assert after.exceptAll(before).union(before.exceptAll(after)).count() == 0
-
-
 def test_read_fresh_sink_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         read_current(spark, str(tmp_path / "nope"))
@@ -322,7 +327,6 @@ def test_incremental_agg_versioned_matches_full_recompute(spark, tmp_path):
     from decimal import Decimal
 
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        incremental_agg_versioned,
         read_agg_state,
     )
 
@@ -331,8 +335,8 @@ def test_incremental_agg_versioned_matches_full_recompute(spark, tmp_path):
         [("a", 1.5), ("a", 2.25), ("b", 3.0)], "k string, x double"
     )
     b2 = spark.createDataFrame([("a", 0.25), ("c", 7.0)], "k string, x double")
-    incremental_agg_versioned(b1, base, ["k"], ["x"], batch_id="b1")
-    incremental_agg_versioned(b2, base, ["k"], ["x"], batch_id="b2")
+    _fold(b1, base, ["k"], ["x"], batch_id="b1")
+    _fold(b2, base, ["k"], ["x"], batch_id="b2")
 
     got = {r.k: (r.cnt, r.sum_x) for r in read_agg_state(spark, base).collect()}
     full = (
@@ -353,16 +357,15 @@ def test_incremental_agg_versioned_matches_full_recompute(spark, tmp_path):
 def test_incremental_agg_versioned_refold_is_noop(spark, tmp_path):
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         current_version,
-        incremental_agg_versioned,
         read_agg_state,
     )
 
     base = str(tmp_path / "agg")
     b1 = spark.createDataFrame([("a", 1.0)], "k string, x double")
-    incremental_agg_versioned(b1, base, ["k"], ["x"], batch_id="b1")
+    _fold(b1, base, ["k"], ["x"], batch_id="b1")
     v_after_first = current_version(spark, base)
     # retry of the SAME batch: no fold, no new version
-    incremental_agg_versioned(b1, base, ["k"], ["x"], batch_id="b1")
+    _fold(b1, base, ["k"], ["x"], batch_id="b1")
     assert current_version(spark, base) == v_after_first
     [row] = read_agg_state(spark, base).collect()
     assert (row.k, row.cnt) == ("a", 1)
@@ -377,14 +380,13 @@ def test_incremental_agg_versioned_crash_pre_marker_refolds_once(spark, tmp_path
 
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         current_version,
-        incremental_agg_versioned,
         read_agg_state,
         version_path,
     )
 
     base = str(tmp_path / "agg")
     b1 = spark.createDataFrame([("a", 1.0)], "k string, x double")
-    incremental_agg_versioned(b1, base, ["k"], ["x"], batch_id="b1")
+    _fold(b1, base, ["k"], ["x"], batch_id="b1")
 
     # fake a crashed b2 fold: state+applied written, marker never created
     b2 = spark.createDataFrame([("a", 5.0)], "k string, x double")
@@ -402,7 +404,7 @@ def test_incremental_agg_versioned_crash_pre_marker_refolds_once(spark, tmp_path
     # the retry (after the debris ages past the horizon) reclaims slot 2
     # and folds b2 exactly once
     _backdate(debris)
-    incremental_agg_versioned(b2, base, ["k"], ["x"], batch_id="b2")
+    _fold(b2, base, ["k"], ["x"], batch_id="b2")
     [row] = read_agg_state(spark, base).collect()
     assert row.cnt == 2 and float(row.sum_x) == 6.0
 
@@ -570,30 +572,27 @@ def test_racing_incremental_agg_loser_refolds_exactly_once(
     commit, so its batch is still unapplied; the retry folds it once and
     the final state equals the from-scratch aggregate of all batches."""
     import youtube_api_data_etl_automation_spark.operators.versioned as V
-    from youtube_api_data_etl_automation_spark.operators.versioned import (
-        incremental_agg_versioned,
-    )
 
     base = str(tmp_path / "agg")
 
     def batch(rows):
         return spark.createDataFrame(rows, "g string, x long")
 
-    incremental_agg_versioned(
+    _fold(
         batch([("a", 1)]), base, keys=["g"], sum_cols=["x"], batch_id="b1"
     )
     _race_once(
         monkeypatch, V,
-        lambda: incremental_agg_versioned(
+        lambda: _fold(
             batch([("a", 10)]), base, keys=["g"], sum_cols=["x"], batch_id="b2"
         ),
     )
     with pytest.raises(V.ConcurrentWriteError):
-        incremental_agg_versioned(
+        _fold(
             batch([("a", 100)]), base, keys=["g"], sum_cols=["x"], batch_id="b3"
         )
     monkeypatch.undo()
-    state = incremental_agg_versioned(
+    state = _fold(
         batch([("a", 100)]), base, keys=["g"], sum_cols=["x"], batch_id="b3"
     )
     rows = {(r.g, r.cnt, int(r.sum_x)) for r in state.collect()}

@@ -8,18 +8,16 @@ import pytest
 from pyspark.sql import Row
 
 from youtube_api_data_etl_automation_spark.operators.vocab import (
-    vocab_coverage,
     vocab_coverage_from_counts,
 )
 
 
 def test_coverage_curve_hand_computed(spark):
     # occurrences: a×6, b×3, c×1 → total 10, 3 types
-    docs = spark.createDataFrame(
-        [Row(text="a a a b"), Row(text="a b c"), Row(text="a a b")]
-    )
+    counts = spark.createDataFrame([("a", 6), ("b", 3), ("c", 1)],
+                                   "term string, c long")
     out = {r["vocab_size"]: r for r in
-           vocab_coverage(docs, vocab_sizes=(1, 2, 5)).collect()}
+           vocab_coverage_from_counts(counts, vocab_sizes=(1, 2, 5)).collect()}
     assert out[1]["covered_tokens"] == 6 and out[1]["coverage"] == 0.6
     assert out[2]["covered_tokens"] == 9 and out[2]["coverage"] == 0.9
     # budget past the inventory: full coverage, n_types says why
@@ -44,11 +42,16 @@ def test_tie_break_is_term_order(spark):
 
 
 def test_from_counts_matches_full_scan(spark):
-    docs = spark.createDataFrame(
-        [Row(text=("w%d " % (i % 7)) * (i % 5 + 1)) for i in range(40)]
-    )
-    full = {(r["vocab_size"], r["covered_tokens"], r["coverage"])
-            for r in vocab_coverage(docs, vocab_sizes=(2, 4, 8)).collect()}
+    """Counts folded from the documents' tokens give the coverage a
+    Python count over the same text gives."""
+    from collections import Counter
+
+    texts = [("w%d " % (i % 7)) * (i % 5 + 1) for i in range(40)]
+    docs = spark.createDataFrame([Row(text=t) for t in texts])
+    occ = Counter(w for t in texts for w in t.split())
+    ranked = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))
+    total = sum(occ.values())
+    full = {v: sum(c for _, c in ranked[:v]) for v in (2, 4, 8)}
     from youtube_api_data_etl_automation_spark.functions.text import tokens
     from pyspark.sql import functions as F
 
@@ -57,10 +60,12 @@ def test_from_counts_matches_full_scan(spark):
         .filter(F.col("term").isNotNull())
         .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     )
-    pre = {(r["vocab_size"], r["covered_tokens"], r["coverage"])
-           for r in vocab_coverage_from_counts(
-               counts, vocab_sizes=(2, 4, 8)).collect()}
-    assert full == pre
+    pre = {r["vocab_size"]: r for r in vocab_coverage_from_counts(
+        counts, vocab_sizes=(2, 4, 8)).collect()}
+    assert {v: r["covered_tokens"] for v, r in pre.items()} == full
+    for v, r in pre.items():
+        assert r["total_tokens"] == total
+        assert r["coverage"] == pytest.approx(full[v] / total, abs=1e-6)
 
 
 def test_invalid_sizes_raise(spark):

@@ -34,7 +34,7 @@ SANCTIONED_BNLJ = {
     "semantic_neardup": "cluster assignment: 8 centroids broadcast vs vectors",
     "profile_drift_report": (
         "semantic section: 8 fixture centroids broadcast vs both "
-        "occupancy sides (clustering.cluster_occupancy)"
+        "occupancy sides (clustering.embedding_drift)"
     ),
     "mixing_temperature": "rate table: 1-row total-weight broadcast vs source counts",
     "sampling_audits": (
@@ -49,8 +49,8 @@ SANCTIONED_BNLJ = {
     ),
     "url_compliance_docs": (
         "PSL rule map: 1-row suffix->bitmask map broadcast vs corpus "
-        "(functions/urls.py registrable_domain_psl — the "
-        "filter_blocked_domains shape; r13: the section moved here off "
+        "(functions/urls.py registrable_domain_psl; r13: the section "
+        "moved here off "
         "lang_cap_docs). The folded ivf recall section's sanctioned "
         "k-centroid broadcasts live under ivf_ann_topk"
     ),

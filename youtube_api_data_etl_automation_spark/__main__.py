@@ -1160,7 +1160,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--url-col",
         default="source",
         help="column carrying each document's URL (default 'source', "
-        "the warc_to_documents output)",
+        "the crawl URI of WARC-sourced documents)",
     )
     cur.set_defaults(fn=_cmd_curate)
 

@@ -26,7 +26,7 @@ except the optional audit counts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.pii import redact_pii
@@ -288,7 +288,7 @@ def curate_corpus(
         if url_col not in docs.columns:
             raise ValueError(
                 f"robots_rules/domain_cap need url_col={url_col!r} in "
-                "the input (warc_to_documents emits it as 'source')")
+                "the input (e.g. a crawl document's 'source' URI)")
         base_cols.append(F.col(url_col).alias("__url"))
     if carry_lang:
         base_cols.append(F.col("lang").alias("__lang"))
@@ -585,256 +585,6 @@ def curate_corpus(
     return {"documents": packed, "report": report}
 
 
-def warc_to_documents(
-    payloads: DataFrame,
-    *,
-    statuses: tuple[int, ...] = (200,),
-    record_types: tuple[str, ...] = ("response",),
-    strip_html: bool = True,
-    min_chars: int = 1,
-    byte_budget: int | None = None,
-) -> DataFrame:
-    """WARC payload table → ``documents``-shaped rows — the crawl
-    ingestion composition: :func:`operators.archives.warc_records`
-    splits records in one in-partition pass, HTTP ``response`` records
-    with an allowed status and a texty Content-Type survive, markup
-    strips JVM-side (functions/markup.py Column expressions — no
-    second Python pass), and the output matches the corpus tables'
-    shape (doc_id, text, lang NULL — language-ID is a downstream
-    curation stage, source = the target URI, n_chars) so
-    :func:`curate_corpus` consumes it directly.
-
-    ``doc_id`` is ``xxhash64(payload id, record index)`` — stable
-    across re-ingestion of the same WARC, so the incremental dedup /
-    idempotent-append machinery (commit_deduped_batch) works on
-    re-crawled files.
-
-    ``record_types``: which WARC record types count as documents.
-    The default ingests HTTP ``response`` records (raw crawl WARCs);
-    add ``"conversion"`` for WET-shaped files, whose records carry
-    pre-extracted text/plain content with no HTTP envelope — the
-    status filter applies only to ``response`` records."""
-    from .functions.markup import strip_markup
-    from .operators.archives import ARCHIVE_BYTE_BUDGET, warc_records
-
-    records = warc_records(
-        payloads, errors="quarantine",
-        byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
-    )
-    text = strip_markup(F.col("body_text")) if strip_html         else F.col("body_text")
-    return (
-        records
-        .filter(F.col("error").isNull())
-        .filter(F.col("warc_type").isin(*record_types))
-        .filter((F.col("warc_type") != "response")
-                | F.col("http_status").isin(*statuses))
-        .filter(F.col("body_text").isNotNull())
-        .select(
-            F.xxhash64(F.col("doc_id"), F.col("record_idx"))
-            .alias("doc_id"),
-            text.alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.col("target_uri").alias("source"),
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def pdf_to_documents(
-    payloads: DataFrame,
-    *,
-    min_chars: int = 1,
-    inflate_budget: int | None = None,
-    text_budget: int | None = None,
-) -> DataFrame:
-    """PDF payload table → ``documents``-shaped rows — the document
-    ingestion composition, twin of :func:`warc_to_documents` for the
-    second-biggest crawl document format: :func:`operators.pdf.pdf_text`
-    extracts per-page text (form feeds between pages become newlines
-    here — curation stages treat a document as one text), failures are
-    dropped (route them separately via pdf_text(errors='quarantine')
-    when the quarantine population matters), and the output matches the
-    corpus tables' shape (doc_id, text, lang NULL, source, n_chars) so
-    :func:`curate_corpus` consumes it directly.
-
-    ``doc_id`` is ``xxhash64(payload doc_id)`` of the source id — stable
-    across re-ingestion, so incremental dedup / idempotent append work
-    on re-crawls. One mapInPandas, no shuffle."""
-    from .operators.pdf import (
-        PDF_INFLATE_BUDGET, PDF_TEXT_BUDGET, pdf_text,
-    )
-
-    extracted = pdf_text(
-        payloads, errors="quarantine",
-        inflate_budget=inflate_budget or PDF_INFLATE_BUDGET,
-        text_budget=text_budget or PDF_TEXT_BUDGET,
-    )
-    return (
-        extracted
-        .filter(F.col("error").isNull())
-        .select(
-            F.xxhash64(F.col("doc_id")).alias("doc_id"),
-            F.translate(F.col("text"), "\f", "\n").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.concat(F.lit("pdf:"), F.col("doc_id").cast("string"))
-            .alias("source"),
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def pdf_to_images(
-    payloads: DataFrame,
-    *,
-    inflate_budget: int | None = None,
-) -> DataFrame:
-    """PDF payload table → standard image-payload rows ``(doc_id,
-    payload, source)`` — the figure-ingestion composition (r12): each
-    document's image XObjects extract in-partition
-    (:func:`operators.pdf.pdf_images` — DCTDecode streams pass through
-    as standalone JPEGs, decodable chains unpack to PNM) and land in
-    the shape every image operator consumes, so PDF figures flow into
-    ``image_hashes`` / ``dedup_images`` / ``triage_decode_images``
-    exactly like archive members do via ``members_as_payloads``.
-    Refused images (JPX/JBIG2/CCITT, masks) and malformed documents
-    drop here — run pdf_images(errors='quarantine') directly when the
-    quarantine population matters. ``doc_id`` is xxhash64 over
-    (document id, page, image index) — stable across re-ingestion;
-    ``source`` carries ``page/XObject-name`` provenance. One
-    mapInPandas plus a projection, no shuffle."""
-    from .operators.pdf import (
-        PDF_INFLATE_BUDGET, pdf_images, pdf_images_as_payloads,
-    )
-
-    return pdf_images_as_payloads(pdf_images(
-        payloads, errors="quarantine",
-        inflate_budget=inflate_budget or PDF_INFLATE_BUDGET,
-    ))
-
-
-def office_to_documents(
-    payloads: DataFrame,
-    *,
-    kind: str = "docx",
-    min_chars: int = 1,
-    byte_budget: int | None = None,
-) -> DataFrame:
-    """Document payload table → ``documents``-shaped rows — the
-    single-payload-extractor twin of :func:`pdf_to_documents` (the
-    name is historical: it grew past office formats). ``kind`` picks
-    the extractor (``docx``/``pptx``/``xlsx``/``odf`` in
-    operators/archives.py; r14 added all but the first — VERDICT r13
-    item 4 plus the OpenDocument twin — and late r14 added ``latex``
-    and ``ipynb`` for scientific/code corpora); failures drop —
-    run the extractor with ``errors='quarantine'`` separately when the
-    quarantine population matters. The output matches the corpus
-    tables' shape so :func:`curate_corpus` consumes it directly.
-    ``doc_id`` is ``xxhash64`` of the source id — stable across
-    re-ingestion. One mapInPandas, no shuffle."""
-    from .operators.archives import (
-        ARCHIVE_BYTE_BUDGET,
-        docx_text,
-        epub_text,
-        odf_text,
-        pptx_text,
-        xlsx_text,
-    )
-    from .operators.latex import latex_text
-    from .operators.markdown import markdown_text
-    from .operators.notebooks import ipynb_text
-    from .operators.rtf import rtf_text
-
-    extractors = {"docx": docx_text, "pptx": pptx_text,
-                  "xlsx": xlsx_text, "odf": odf_text,
-                  "epub": epub_text, "rtf": rtf_text,
-                  "latex": latex_text, "ipynb": ipynb_text,
-                  "markdown": markdown_text}
-    if kind not in extractors:
-        raise ValueError(
-            f"office_to_documents: kind={kind!r} not in "
-            f"{sorted(extractors)}")
-    extracted = extractors[kind](
-        payloads, errors="quarantine",
-        byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
-    )
-    return (
-        extracted
-        .filter(F.col("error").isNull())
-        .select(
-            F.xxhash64(F.col("doc_id")).alias("doc_id"),
-            F.col("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.concat(F.lit(kind + ":"), F.col("doc_id").cast("string"))
-            .alias("source"),
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def mail_to_documents(
-    payloads: DataFrame,
-    *,
-    mbox: bool = False,
-    min_chars: int = 1,
-    byte_budget: int | None = None,
-) -> DataFrame:
-    """Mail payloads → ``documents``-shaped rows (r14): .eml messages
-    (or, with ``mbox=True``, whole mailboxes split per message first)
-    through :func:`operators.mail.eml_text`; the subject line joins
-    the body (``Subject: …`` as the first line — the form a reader
-    sees and dedup should key on). Failures drop — run the extractors
-    with ``errors='quarantine'`` separately when the quarantine
-    population matters. ``doc_id`` is ``xxhash64`` of the source id
-    (and message index for mbox) — stable across re-ingestion."""
-    from .operators.archives import ARCHIVE_BYTE_BUDGET
-    from .operators.mail import (
-        eml_text,
-        mbox_messages_as_payloads,
-        mbox_split,
-    )
-
-    if mbox:
-        payloads = mbox_messages_as_payloads(mbox_split(payloads))
-    extracted = eml_text(
-        payloads, errors="quarantine",
-        byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
-    )
-    return (
-        extracted
-        .filter(F.col("error").isNull())
-        .select(
-            F.xxhash64(F.col("doc_id")).alias("doc_id"),
-            F.concat_ws(
-                "\n",
-                F.concat(F.lit("Subject: "),
-                         F.coalesce(F.col("subject"), F.lit("-"))),
-                F.col("text"),
-            ).alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.concat(F.lit("eml:"), F.col("doc_id").cast("string"))
-            .alias("source"),
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def docx_to_documents(
-    payloads: DataFrame,
-    *,
-    min_chars: int = 1,
-    byte_budget: int | None = None,
-) -> DataFrame:
-    """.docx → ``documents`` rows; the original office bridge, now a
-    :func:`office_to_documents` alias (kept for API stability)."""
-    return office_to_documents(payloads, kind="docx",
-                               min_chars=min_chars,
-                               byte_budget=byte_budget)
-
-
 def code_files_to_documents(
     files: DataFrame,
     *,
@@ -969,223 +719,6 @@ def repo_archive_to_code_documents(
         .withColumn("n_chars", F.length("text"))
         .filter(F.col("n_chars") >= min_chars)
     )
-
-
-def subtitles_to_documents(
-    payloads: DataFrame,
-    *,
-    min_chars: int = 1,
-    cue_budget: int | None = None,
-) -> DataFrame:
-    """SRT/WebVTT caption payloads → ``documents``-shaped rows — the
-    caption twin of :func:`pdf_to_documents`
-    (:func:`operators.subtitles.subtitles_text`; failures drop). Same
-    stable-id/source contract; one mapInPandas, no shuffle."""
-    from .operators.subtitles import SUBTITLE_CUE_BUDGET, subtitles_text
-
-    extracted = subtitles_text(
-        payloads, errors="quarantine",
-        cue_budget=cue_budget or SUBTITLE_CUE_BUDGET,
-    )
-    return (
-        extracted
-        .filter(F.col("error").isNull())
-        .select(
-            F.xxhash64(F.col("doc_id")).alias("doc_id"),
-            F.col("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.concat(F.col("format"), F.lit(":"),
-                     F.col("doc_id").cast("string")).alias("source"),
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def warc_pdf_to_documents(
-    payloads: DataFrame,
-    *,
-    statuses: tuple[int, ...] = (200,),
-    min_chars: int = 1,
-    byte_budget: int | None = None,
-    inflate_budget: int | None = None,
-    text_budget: int | None = None,
-) -> DataFrame:
-    """Crawl WARCs → PDF-response bodies → ``documents`` rows, in one
-    shuffle-free composition: :func:`operators.archives.warc_records`
-    splits records in-partition, ``application/pdf`` HTTP responses
-    route into :func:`operators.pdf.pdf_text` (the target URI rides
-    through pdf_text's ``source`` passthrough — no join-back), and
-    survivors land in the corpus shape (doc_id, text, lang NULL,
-    source=URI, n_chars). Non-PDF responses are someone else's row
-    (:func:`warc_to_documents`); failed extractions drop here.
-
-    ``doc_id`` is ``xxhash64(payload id, record index)`` — the same
-    stability contract as warc_to_documents, so re-crawled WARCs
-    dedup/append idempotently."""
-    from .operators.archives import ARCHIVE_BYTE_BUDGET, warc_records
-    from .operators.pdf import (
-        PDF_INFLATE_BUDGET, PDF_TEXT_BUDGET, pdf_text,
-    )
-
-    records = warc_records(
-        payloads, errors="quarantine",
-        byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
-    )
-    pdf_blobs = (
-        records
-        .filter(F.col("error").isNull())
-        .filter(F.col("warc_type") == "response")
-        .filter(F.col("http_status").isin(*statuses))
-        .filter(F.trim(F.split(F.col("http_content_type"), ";")
-                       .getItem(0)) == "application/pdf")
-        .select(
-            F.xxhash64(F.col("doc_id"), F.col("record_idx"))
-            .alias("doc_id"),
-            F.col("body").alias("payload"),
-            F.col("target_uri").alias("source"),
-        )
-    )
-    extracted = pdf_text(
-        pdf_blobs, errors="quarantine",
-        inflate_budget=inflate_budget or PDF_INFLATE_BUDGET,
-        text_budget=text_budget or PDF_TEXT_BUDGET,
-    )
-    return (
-        extracted
-        .filter(F.col("error").isNull())
-        .select(
-            "doc_id",
-            F.translate(F.col("text"), "\f", "\n").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            "source",
-        )
-        .withColumn("n_chars", F.length("text"))
-        .filter(F.col("n_chars") >= min_chars)
-    )
-
-
-def curate_stream(stream_docs: DataFrame, checkpoint_dir: str, sink_path: str,
-                  *, id_col: str = "doc_id", text_col: str = "text",
-                  min_tokens: int = 10, max_tokens: int = 1000,
-                  quality_min: float = 0.55,
-                  strip_html: bool = False,
-                  normalize_unicode: bool = False) -> None:
-    """Streaming corpus curation: drain available document batches
-    (``trigger(availableNow=True)``), apply the funnel + PII scrub +
-    content fingerprint per micro-batch, and append ONLY new-fingerprint
-    docs to the sink (operators/incremental.py::append_delta keyed on the
-    fingerprint — the same idempotent anti-join-at-write protocol as the
-    reference ETL, so retried batches and cross-batch duplicates both
-    land exactly once). The batch and streaming paths share every
-    operator, so a corpus can be bootstrapped with curate_corpus and kept
-    current with this. Near-dup dedup is deliberately batch-only:
-    cross-batch LSH needs the full signature history as state, so the
-    streaming guarantee is exact-fingerprint dedup — run the batch
-    near-dup stage periodically over the accumulated sink instead."""
-    from .operators.incremental import append_delta
-
-    def handle_batch(batch: DataFrame, _batch_id: int) -> None:
-        # Same optional markup strip + unicode canonicalization as the
-        # batch path (visible, normalized text before any signal — a
-        # mojibake twin arriving in a LATER micro-batch still dedups
-        # against the committed fingerprint), same single-projection fold.
-        src = F.col(text_col)
-        if strip_html:
-            from .functions.markup import strip_markup
-
-            src = strip_markup(src)
-        if normalize_unicode:
-            from .functions.unicodefns import normalize_unicode as _nu
-
-            src = _nu(src)
-        toks = batch.select(
-            F.col(id_col).alias("doc_id"),
-            src.alias("text"),
-        ).select(
-            "doc_id", "text", redact_pii(F.col("text")).alias("clean_text")
-        ).withColumn("tok", tokens("text"))
-        # n_tokens on the REDACTED text — same contract as curate_corpus.
-        feat = toks.select(
-            "doc_id",
-            lang_id_t("tok").alias("lang"),
-            token_count("clean_text").alias("n_tokens"),
-            quality_score_t("text", "tok").alias("quality"),
-            "clean_text",
-            doc_fingerprint("text").alias("fingerprint"),
-        )
-        kept = feat.filter(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
-            & (F.col("lang") != "und")
-            & (F.col("quality") >= quality_min)
-        )
-        # Same deterministic min-id survivor rule as the batch path (a
-        # dropDuplicates here would keep a scheduling-dependent row and
-        # replays of the same source would produce different sinks).
-        append_delta(_min_id_survivors(kept), sink_path, "fingerprint")
-
-    q = (
-        stream_docs.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def ingest_stream(
-    stream_docs: DataFrame,
-    checkpoint_dir: str,
-    sink_path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    threshold: float = 0.5,
-    keep_versions: int = 2,
-) -> None:
-    """Streaming continuous-ingest dedup: drain available document batches
-    (``trigger(availableNow=True)``) and push each micro-batch through
-    :func:`commit_deduped_batch` — so unlike :func:`curate_stream` (whose
-    cross-batch guarantee is exact-fingerprint only), every batch is also
-    NEAR-dup-checked against everything the sink has ever committed: the
-    sink's inline fingerprint+signature columns ARE the cross-batch LSH
-    state, read back column-pruned each batch, with per-batch work
-    O(delta × committed-index) through broadcast probes only.
-
-    Failure semantics: a crash after a partial commit replays the
-    micro-batch; commit_deduped_batch's verdicts plus append_versioned's
-    id-keyed anti-join land the replay exactly once (the same run-twice
-    property test_commit_deduped_batch_end_to_end pins for the batch
-    path). Writes are strictly sequential inside one query, so the
-    versioned sink's single-writer CAS never trips in normal streaming
-    operation."""
-
-    def handle_batch(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        commit_deduped_batch(
-            batch,
-            sink_path,
-            id_col=id_col,
-            text_col=text_col,
-            k=k,
-            num_hashes=num_hashes,
-            band_size=band_size,
-            threshold=threshold,
-            keep_versions=keep_versions,
-        )
-
-    q = (
-        stream_docs.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def write_training_shards(packed: DataFrame, path: str,

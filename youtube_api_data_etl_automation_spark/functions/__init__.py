@@ -9,20 +9,16 @@ from .nullsafe import null_safe_length, null_safe_size, safe_ratio, to_long_or_z
 from .datetimefns import day_name, time_of_day, ts_parse_utc
 from .text import (
     doc_fingerprint,
-    lang_id,
     lang_id_t,
-    marker_count,
     marker_count_t,
     normalize_text,
     punct_count,
     quality_score,
     quality_score_t,
-    stopword_count,
     stopword_count_t,
     token_count,
     token_count_t,
     tokens,
-    word_shingles,
     word_shingles_t,
 )
 from .vectors import cosine_similarity, dot_product, l2_norm
@@ -37,15 +33,11 @@ __all__ = [
     "time_of_day",
     "ts_parse_utc",
     "normalize_text",
-    "lang_id",
-    "marker_count",
     "tokens",
     "token_count",
     "punct_count",
-    "stopword_count",
     "quality_score",
     "doc_fingerprint",
-    "word_shingles",
     "word_shingles_t",
     "lang_id_t",
     "marker_count_t",

@@ -38,7 +38,7 @@ def tokens(col: Column | str) -> Column:
     """Whitespace tokens of the *normalized* text (empty OR NULL text →
     empty array — r6: NULL used to propagate, making the token-derived
     metrics disagree on the same row: token_count coalesced NULL→0 while
-    stopword_count returned NULL and quality_score mixed the two; a NULL
+    the stopword count returned NULL and quality_score mixed the two; a NULL
     document now behaves as an empty document across every text metric).
 
     PERF: higher-order functions (filter/transform) are interpreted, not
@@ -83,12 +83,6 @@ def stopword_count_t(tok: Column | str, stopwords: tuple[str, ...] = EN_STOPWORD
 
 
 @name_memo
-def stopword_count(col: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    """Number of tokens that are English stopwords."""
-    return stopword_count_t(tokens(col), stopwords)
-
-
-@name_memo
 def marker_count_t(tok: Column | str, markers: tuple[str, ...]) -> Column:
     """Marker-vocabulary token count from a pre-projected token array."""
     t = F.col(tok) if isinstance(tok, str) else tok
@@ -97,14 +91,11 @@ def marker_count_t(tok: Column | str, markers: tuple[str, ...]) -> Column:
 
 
 @name_memo
-def marker_count(col: Column | str, markers: tuple[str, ...]) -> Column:
-    """Number of tokens in a marker vocabulary (language-ID building block)."""
-    return marker_count_t(tokens(col), markers)
-
-
-@name_memo
 def lang_id_t(tok: Column | str) -> Column:
-    """Language guess from a pre-projected token array (see lang_id)."""
+    """Marker-vocabulary language guess from a pre-projected token array,
+    with deterministic tie-breaking: highest marker count wins; ties
+    resolve in LANG_MARKERS insertion order; zero markers everywhere →
+    'und'."""
     counts = {lang: marker_count_t(tok, mks) for lang, mks in LANG_MARKERS.items()}
     best = F.greatest(*counts.values())
     expr = F.lit("und")
@@ -112,14 +103,6 @@ def lang_id_t(tok: Column | str) -> Column:
     for lang in reversed(list(LANG_MARKERS)):
         expr = F.when((best > 0) & (counts[lang] == best), F.lit(lang)).otherwise(expr)
     return expr
-
-
-@name_memo
-def lang_id(col: Column | str) -> Column:
-    """Marker-vocabulary language guess with deterministic tie-breaking:
-    highest marker count wins; ties resolve in LANG_MARKERS insertion order;
-    zero markers everywhere → 'und'."""
-    return lang_id_t(tokens(col))
 
 
 @name_memo
@@ -171,14 +154,6 @@ def clf_logit_t(tok: Column | str) -> Column:
         ),
     )
     return wsum / (F.lit(1.0) + F.size(t).cast("double"))
-
-
-@name_memo
-def clf_score_t(tok: Column | str) -> Column:
-    """Sigmoid of 4×logit — the keep-probability a trained quality
-    classifier would emit. Round at the query edge."""
-    z = clf_logit_t(tok)
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(-4.0) * z))
 
 
 @name_memo
@@ -260,14 +235,6 @@ def word_shingles_t(tok: Column | str, k: int = 3) -> Column:
     return F.when(n >= k, F.transform(idx, shingle)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-@name_memo
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Array of k-word shingles of the normalized text (for MinHash / Jaccard
-    dedup). Fewer than k tokens → empty array. Prefer projecting tokens()
-    first and calling word_shingles_t (see tokens() perf note)."""
-    return word_shingles_t(tokens(col), k)
 
 
 @name_memo

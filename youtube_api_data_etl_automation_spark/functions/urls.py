@@ -227,7 +227,7 @@ def registrable_domain_psl(df, psl, url_col: str = "url",
     the map with its label-aligned host suffixes (bounded at
     ``_MAX_SUFFIX_LABELS`` = 8, like :func:`host_suffixes`) via
     ``transform``/``aggregate`` Column math. Map-side only: the corpus
-    never shuffles, exactly the :func:`filter_blocked_domains` shape.
+    never shuffles.
     """
     from pyspark.sql import functions as _F
 
@@ -299,38 +299,4 @@ def registrable_domain_psl(df, psl, url_col: str = "url",
         df.join(_F.broadcast(rules_row))
         .withColumn(out_col, dom)
         .drop("_psl")
-    )
-
-
-def filter_blocked_domains(df, blocked, url_col: str = "url"):
-    """Drop rows whose URL host matches a domain blocklist entry,
-    subdomain-aware: an entry ``example.com`` blocks ``example.com``
-    and every ``*.example.com`` (suffix matching is label-aligned — see
-    :func:`host_suffixes`).
-
-    ``blocked`` is a one-column DataFrame of domain strings (column
-    ``domain``) — the standard curation blocklist shape. Plan: the
-    blocklist folds to ONE broadcast row holding the deduped domain
-    array; the corpus cross-joins that single row (a broadcast, not a
-    shuffle) and filters with ``arrays_overlap`` against each row's
-    bounded suffix array — the whole operation is map-side, the corpus
-    never shuffles, and the filter sits where Catalyst can push other
-    predicates around it. Blocklists are small (≤ a few million short
-    strings fits a broadcast row comfortably); a corpus-sized "blocklist"
-    is a join-based dedup problem, not this operator."""
-    from pyspark.sql import functions as _F
-
-    blocked_row = blocked.agg(
-        _F.collect_set(_F.lower(_F.col("domain"))).alias("_blocked"))
-    # arrays_overlap is NULL (not false) when the suffix array holds
-    # only NULLs — which is what a NULL url produces — so the predicate
-    # must coalesce to "keep": a NULL url matches no blocklist entry.
-    overlaps = _F.coalesce(
-        _F.arrays_overlap(host_suffixes(_F.col(url_col)),
-                          _F.col("_blocked")),
-        _F.lit(False))
-    return (
-        df.join(_F.broadcast(blocked_row))
-        .filter(~overlaps)
-        .drop("_blocked")
     )

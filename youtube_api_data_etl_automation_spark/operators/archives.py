@@ -23,10 +23,6 @@ executor):
   (concatenated gzip members), with a decompressed-byte budget; texty
   response bodies additionally decode to a ``body_text`` column
   (utf-8, replacement chars — total over crawl garbage).
-- ``unpack_gzip_text``: bare .gz document → utf-8 text row, budgeted.
-- ``zip_members``: one row per zip member (name, size, bytes),
-  stored/deflate entries via stdlib zipfile, per-member and total
-  byte budgets.
 - ``archive_members`` (late r11): UNIFORM member extraction across
   zip / tar / gzip / .tar.gz — and, late r14, bzip2 and xz (both
   stdlib) with their tarballs — one row per member, header-derived
@@ -75,13 +71,6 @@ WARC_RECORDS_SCHEMA = (
     "warc_date string, content_type string, content_length bigint, "
     "http_status int, http_content_type string, body binary, "
     "body_text string"
-)
-
-GZIP_TEXT_SCHEMA = "doc_id bigint, text string, n_bytes bigint"
-
-ZIP_MEMBERS_SCHEMA = (
-    "doc_id bigint, member_idx int, name string, compressed_size bigint, "
-    "size bigint, body binary"
 )
 
 
@@ -394,7 +383,7 @@ def warc_records(blobs: DataFrame, errors: str = "quarantine",
     into one row per record. Response records additionally parse the
     HTTP status line and Content-Type and carry the HTTP body bytes;
     other record types carry their raw content. Fan-out stays inside
-    the partition (mapInPandas) — no shuffle, like frame_sample."""
+    the partition (mapInPandas) — no shuffle."""
     from .multimodal import (
         DECODE_ERRORS,
         _check_errors_mode,
@@ -480,115 +469,6 @@ def warc_records(blobs: DataFrame, errors: str = "quarantine",
 
     schema = WARC_RECORDS_SCHEMA + ", error string, error_kind string" \
         if quarantine else WARC_RECORDS_SCHEMA
-    return blobs.mapInPandas(batches, schema)
-
-
-def unpack_gzip_text(blobs: DataFrame, errors: str = "quarantine",
-                     byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                     ) -> DataFrame:
-    """Bare .gz document → ``(doc_id, text, n_bytes)`` utf-8 row
-    (invalid sequences replaced), budget-capped."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        payload = payload or b""
-        if payload[:2] != b"\x1f\x8b":
-            raise ValueError("not a gzip payload")
-        data = _gunzip_all(payload, byte_budget)
-        return {"text": data.decode("utf-8", "replace"),
-                "n_bytes": len(data)}
-
-    schema = GZIP_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else GZIP_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(one, ("text", "n_bytes"), quarantine),
-        schema,
-    )
-
-
-def zip_members(blobs: DataFrame, errors: str = "quarantine",
-                byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                ) -> DataFrame:
-    """One row per zip member: ``(doc_id, member_idx, name,
-    compressed_size, size, body)`` via stdlib zipfile. The declared
-    total uncompressed size is checked against the budget BEFORE any
-    member inflates (zip-bomb posture: the central directory is the
-    probe)."""
-    import io
-    import zipfile
-
-    from .multimodal import (
-        DECODE_ERRORS,
-        _check_errors_mode,
-        _error_kind,
-        _error_text,
-    )
-
-    quarantine = _check_errors_mode(errors)
-    cols = ("doc_id", "member_idx", "name", "compressed_size", "size",
-            "body", "error", "error_kind")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {c: [] for c in cols}
-
-            def emit(doc_id, idx=None, name=None, csize=None,
-                     size=None, body=None, err=None, kind=None):
-                for c, v in zip(cols, (doc_id, idx, name, csize, size,
-                                       body, err, kind)):
-                    out[c].append(v)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    meta = _parse_zip_meta(raw)
-                    if byte_budget is not None and \
-                            meta["uncompressed_hint"] > byte_budget:
-                        raise NotImplementedError(
-                            f"zip declares {meta['uncompressed_hint']} "
-                            f"bytes over the {byte_budget}-byte budget"
-                        )
-                    zf = zipfile.ZipFile(io.BytesIO(raw))
-                    infos = zf.infolist()
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, err=_error_text(e), kind=_error_kind(e))
-                    continue
-                except zipfile.BadZipFile as e:
-                    if not quarantine:
-                        raise ValueError(f"malformed zip: {e}") from None
-                    emit(doc_id, err=f"malformed zip: {e}",
-                         kind="corrupt")
-                    continue
-                for i, info in enumerate(infos):
-                    try:
-                        # read by ZipInfo, not name: duplicate member
-                        # names resolve to the LAST entry via NameToInfo
-                        body = zf.read(info)
-                    except Exception as e:  # noqa: BLE001 zlib/zipfile
-                        if not quarantine:
-                            raise ValueError(
-                                f"malformed zip member: {e}"
-                            ) from None
-                        emit(doc_id, i, info.filename,
-                             info.compress_size, info.file_size,
-                             err=f"malformed zip member: {e}",
-                             kind="corrupt")
-                        continue
-                    emit(doc_id, i, info.filename, info.compress_size,
-                         info.file_size, bytearray(body))
-            yield pd.DataFrame(
-                {c: pd.Series(v, dtype="object")
-                 for c, v in out.items()
-                 if quarantine or c not in ("error", "error_kind")}
-            )
-
-    schema = ZIP_MEMBERS_SCHEMA + ", error string, error_kind string" \
-        if quarantine else ZIP_MEMBERS_SCHEMA
     return blobs.mapInPandas(batches, schema)
 
 
@@ -726,8 +606,8 @@ def members_as_payloads(members: DataFrame) -> DataFrame:
     """Archive-member rows → a standard ``(doc_id, payload, source)``
     payload table for any decode operator (triage_decode_images,
     pdf_text, decode_audio, …). ``doc_id = xxhash64(archive id, member
-    index)`` — stable across re-ingestion of the same archive, the same
-    contract as warc_to_documents; ``source`` carries the member name
+    index)`` — stable across re-ingestion of the same archive;
+    ``source`` carries the member name
     for provenance (pdf_text passes it through)."""
     from pyspark.sql import functions as F
 

@@ -54,7 +54,7 @@ def kmeans_lloyd(spark: SparkSession, corpus: DataFrame, init_centroids: DataFra
     avg_cos_to_centroid) — deterministic given the init (decimal-exact
     accumulation). With ``return_centroids=True`` returns
     ``(stats, centroids_df)`` so the TRAINED centroids can feed
-    assign_clusters / ivf_topk / semantic_neardup (r6: they were computed
+    assign_clusters / semantic_neardup (r6: they were computed
     and then dropped, forcing callers onto the unrefined init).
 
     A cluster that wins zero vectors in an iteration KEEPS its previous
@@ -156,37 +156,16 @@ def kmeans_lloyd(spark: SparkSession, corpus: DataFrame, init_centroids: DataFra
     return stats
 
 
-def cluster_occupancy(corpus: DataFrame, centroids: DataFrame,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
-    """Cluster-occupancy histogram of an embedding relation: assign every
-    vector to its nearest centroid (broadcast argmax — the corpus never
-    shuffles its vectors; the one exchange carries (id, cluster) pairs)
-    and count per cluster. ``(cluster_id, n)`` — at most k rows.
-
-    This is the semantic analogue of ``profile.numeric_histogram``: the
-    centroids are the fixed grid, occupancy is the bucket mass. Built for
-    :func:`embedding_drift`, useful alone as a corpus-composition readout
-    (which semantic regions a crawl actually filled).
-
-    r14: the assignment is the map-side literal argmax of
-    ``similarity.assign_clusters`` (the centroids fold into k literal
-    score expressions via an O(k) collect), so the ONLY exchange left
-    is the ≤k-per-partition count partials — the former per-row
-    ``groupBy(id).max_by`` exchange carried every (id, cluster) pair
-    [pinned in tests/test_profile.py]."""
-    from .similarity import _collect_centroids
-
-    cids, cvs, id_dt = _collect_centroids(centroids, "cluster_id", "cv")
-    return _occupancy_counts(corpus, cids, cvs, id_dt, vec_col)
-
-
 def _occupancy_counts(corpus: DataFrame, cids: list, cvs: list,
                       id_dt: str, vec_col: str) -> DataFrame:
-    """:func:`cluster_occupancy`'s plan over an already-collected
-    centroid list — split out (r15) so :func:`embedding_drift` collects
-    the shared centroid relation ONCE for its two occupancy sides
-    instead of running the O(k) control-plane job per side."""
+    """Cluster-occupancy histogram ``(cluster_id, n)`` — at most k rows —
+    of an embedding relation over an already-collected centroid list:
+    every vector's nearest centroid as the map-side literal argmax of
+    ``similarity.assign_clusters``, so the ONLY exchange is the
+    ≤k-per-partition count partials (the corpus never shuffles its
+    vectors) [pinned in tests/test_profile.py]. The centroid list is
+    collected once by the caller, so :func:`embedding_drift` runs the
+    O(k) control-plane job once for its two occupancy sides."""
     from .similarity import _nearest_centroid_struct
 
     if not cids:
@@ -228,9 +207,8 @@ def embedding_drift(cur: DataFrame, prev: DataFrame, centroids: DataFrame,
     from .similarity import _collect_centroids
 
     # ONE O(k) control-plane read of the shared centroid relation for
-    # both occupancy sides (r15 — cluster_occupancy per side collected
-    # the identical k rows twice, a whole extra driver-synchronized job
-    # at build time)
+    # both occupancy sides (a read per side would add a whole
+    # driver-synchronized job at build time)
     cids, cvs, id_dt = _collect_centroids(centroids, "cluster_id", "cv")
 
     def occ_hist(df: DataFrame) -> DataFrame:

@@ -208,35 +208,3 @@ def ngram_contamination(
             .alias("contaminated"),
         )
     )
-
-
-def contamination_attribution(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """WHICH benchmark doc a contaminated corpus doc overlaps, and by how
-    much: ``(corpus_id, bench_id, n_shared_ngrams)``, one row per
-    (corpus doc, benchmark doc) pair sharing ≥1 n-gram — the report a
-    human reads when deciding whether a hit is a real leak (whole prompt
-    verbatim) or a boilerplate collision (one common phrase), and the
-    evidence trail :func:`ngram_contamination`'s per-doc counts
-    deliberately aggregate away.
-
-    Scale shape: the benchmark side now broadcasts (bench_id, gram) pairs
-    instead of distinct grams — a benchmark-sized constant factor, still
-    fixed-size by construction; the corpus side is unchanged (per-doc
-    unique grams, no corpus gram ever shuffles) and the only exchange
-    carries MATCHING (corpus_id, bench_id) pairs into the count."""
-    bench_grams = word_ngrams(
-        benchmark, text_col, id_col, n, unique=True
-    ).select(F.col(id_col).alias("bench_id"), "g")
-    return (
-        word_ngrams(corpus, text_col, id_col, n, unique=True)
-        .join(F.broadcast(bench_grams), "g")
-        .groupBy(F.col(id_col).alias("corpus_id"), "bench_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared_ngrams"))
-    )

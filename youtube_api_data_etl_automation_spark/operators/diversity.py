@@ -123,50 +123,3 @@ def diversity_sample(
             .cast("int"),
         )
     return picked.drop("_pref", "_rr")
-
-
-def coverage_report(
-    sample: DataFrame,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-cluster audit of how a sample covers the corpus: corpus share
-    vs sample share and their ratio. Top-n-by-score selections show
-    ratios far from 1 on most clusters; :func:`diversity_sample` pulls
-    every cluster's ratio toward 1. Two grouped counts joined on
-    cluster_id — O(k) result, one shuffle each. A frame that already
-    carries ``cluster_id`` (e.g. :func:`diversity_sample` output) is
-    counted as-is instead of being re-scored against the centroids."""
-
-    def _clustered(df: DataFrame) -> DataFrame:
-        if "cluster_id" in df.columns:
-            return df
-        return assign_clusters(df, centroids, id_col=id_col, vec_col=vec_col)
-
-    c = _clustered(corpus).groupBy("cluster_id").agg(
-        F.count("*").alias("n_corpus")
-    )
-    s = _clustered(sample).groupBy("cluster_id").agg(
-        F.count("*").alias("n_sample")
-    )
-    tot_c = F.sum("n_corpus").over(Window.partitionBy())  # k-row window
-    tot_s = F.sum("n_sample").over(Window.partitionBy())
-    return (
-        c.join(s, "cluster_id", "left")
-        .na.fill({"n_sample": 0})
-        .select(
-            "cluster_id",
-            "n_corpus",
-            "n_sample",
-            (F.col("n_corpus") / tot_c).alias("corpus_share"),
-            (F.col("n_sample") / tot_s).alias("sample_share"),
-        )
-        .withColumn(
-            "share_ratio",
-            F.when(F.col("corpus_share") > 0,
-                   F.col("sample_share") / F.col("corpus_share")),
-        )
-    )

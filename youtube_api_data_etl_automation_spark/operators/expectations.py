@@ -91,7 +91,7 @@ def satisfies(expr: str, column: str = "*") -> Check:
     is skipped, not violated — consistent with the module's NULL policy
     that each expectation attributes a NULL exactly once (to
     ``not_null``); the COALESCE also keeps the predicate two-valued, so
-    :func:`enforce_checks` quarantines exactly the rows this counts.
+    filtering on ``violation`` selects exactly the rows this counts.
     ``column`` names the column the violation is attributed to in
     reports (default ``*`` — relation-level).
 
@@ -129,31 +129,6 @@ def violation_agg(c: Check) -> Column:
         return F.count(_ref(c.column)) - F.count_distinct(_ref(c.column))
     # SUM over zero rows is NULL; an empty relation has zero violations.
     return F.coalesce(F.sum(F.when(c.violation, 1).otherwise(0)), F.lit(0))
-
-
-def enforce_checks(
-    df: DataFrame, checks: list[Check]
-) -> tuple[DataFrame, DataFrame]:
-    """Row-level ENFORCEMENT of a contract: returns (good, quarantined)
-    via operators/quarantine.py::quarantine_split — rows violating any
-    row-level check route to quarantine with the FIRST failed check's
-    name as the attribution (check order = attribution order), and the
-    job never dies on data.
-
-    Only row-level checks qualify: ``unique`` and ``foreign_key`` are
-    relation-level (which copy of a duplicate is "the extra one" depends
-    on global order; an FK verdict needs the dimension), so passing one
-    here raises — audit those with :func:`run_checks` and repair at the
-    relation level (dedup operators / anti-join backfill)."""
-    relation_level = [c for c in checks if c.violation is None]
-    if relation_level:
-        raise ValueError(
-            "relation-level checks cannot row-quarantine: "
-            f"{[c.name for c in relation_level]}; audit via run_checks"
-        )
-    from .quarantine import quarantine_split
-
-    return quarantine_split(df, [(c.name, ~c.violation) for c in checks])
 
 
 def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:

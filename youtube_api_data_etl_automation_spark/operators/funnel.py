@@ -197,9 +197,8 @@ def retention_cohorts(
 # history per micro-batch is O(history) per batch. These folds maintain
 # the same outputs at O(delta + |touched users|) per batch, committed
 # through the versioned-sink CAS (operators/versioned.py) with
-# applied-batch markers — the exactly-once contract
-# incremental_agg_versioned established, applied to behavioral state.
-# streaming/funnel.py rides them under foreachBatch.
+# applied-batch markers — the exactly-once contract of
+# incremental_state_versioned, applied to behavioral state.
 # ---------------------------------------------------------------------------
 
 

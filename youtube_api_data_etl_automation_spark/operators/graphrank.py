@@ -16,79 +16,14 @@ connected components (operators/dedup.py) and k-means
 - the driver holds only O(1) scalars (round index, dangling mass).
 
 Fixed iteration count keeps runs engine-portable and deterministic
-(sums accumulate in decimal) — convergence-threshold stopping would put
-a float comparison on the control path.
+(ranks are fixed-point integers) — convergence-threshold stopping would
+put a float comparison on the control path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_DEC = "decimal(28,18)"
-
-
-def pagerank(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Ranks over a directed graph; returns (node, rank), Σrank = 1.
-
-    ``edges``: one row per directed edge. Nodes appearing only as
-    destinations still receive rank (they contribute dangling mass)."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # (src, dst, deg) — the static per-round join input, materialized once.
-    links = e.join(out_deg, "src").localCheckpoint()
-
-    ranks = nodes.select(
-        "node", (F.lit(1.0) / F.lit(float(n_nodes))).cast(_DEC).alias("rank")
-    ).localCheckpoint()
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iterations):
-        # Dangling mass: rank sitting on nodes with no out-edges, spread
-        # uniformly this round (one scalar to the driver, no extra join).
-        dangling = (
-            ranks.join(out_deg, ranks.node == out_deg.src, "left_anti")
-            .agg(F.sum("rank"))
-            .first()[0]
-        )
-        dangling_share = float(dangling or 0.0) / n_nodes
-        contribs = (
-            links.join(ranks, links.src == ranks.node)
-            .select("dst", (F.col("rank") / F.col("deg")).cast(_DEC).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_mass"), F.lit(0).cast(_DEC))
-                        + F.lit(dangling_share)
-                    )
-                ).cast(_DEC).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select("node", F.col("rank").cast("double").alias("rank"))
 
 
 def pagerank_fixedpoint(
@@ -113,11 +48,11 @@ def pagerank_fixedpoint(
     same floor runs on any mirroring engine, which is what makes this
     variant DuckDB-oracle-checkable CTE-for-CTE (plans/graph_queries.py).
 
-    Same Spark shape as :func:`pagerank`: per-round ONE equi-join (ranks ⋈
-    out-degree links) + ONE key-aggregate reusing the node partitioning,
-    lazy localCheckpoint lineage truncation (one job/round), dangling mass
-    as a single driver scalar. Differential-tested against the float
-    variant in tests/test_graphrank.py."""
+    Per round: ONE equi-join (ranks ⋈ out-degree links) + ONE
+    key-aggregate reusing the node partitioning, lazy localCheckpoint
+    lineage truncation (one job/round), dangling mass as a single driver
+    scalar. Differential-tested against a float power iteration in
+    tests/test_graphrank.py."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()

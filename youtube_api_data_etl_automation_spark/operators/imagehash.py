@@ -348,57 +348,3 @@ def near_dup_image_pairs(hashes: DataFrame, max_hamming: int = 4,
         .distinct()
     )
     return pairs
-
-
-def dedup_images(blobs: DataFrame, max_hamming: int = 4,
-                 hash_col: str = "dhash",
-                 max_pixels: int | None = IMAGE_HASH_PIXEL_BUDGET,
-                 ) -> dict:
-    """The image near-dup pipeline in one composition — the multimodal
-    twin of the text corpus's MinHash→CC→survivor ladder
-    (corpus.curate_corpus's neardup stage):
-
-    decode+hash (probe-budgeted, quarantine) → banded Hamming pairs
-    (exact recall at the radius) → connected components (min-id
-    clusters, operators/dedup.py) → survivors = every unclustered image
-    plus each cluster's canonical (min-id) member.
-
-    Returns ``{"survivors": DataFrame(doc_id, dhash, ahash, width,
-    height), "clusters": DataFrame(doc_id, canonical_id), "quarantined":
-    DataFrame(doc_id, error, error_kind), "audit": DataFrame(stage,
-    n)}`` — the audit counts each stage so a curation report can show
-    where images went. Plan: one decode pass, one band-key shuffle for
-    pairs, log-round CC (one round under 100k pairs); re-encoded copies of
-    the same pixels collapse by construction (the hash sees pixels, not
-    bytes)."""
-    from .dedup import connected_components
-
-    hashed = image_hashes(blobs, errors="quarantine",
-                          max_pixels=max_pixels)
-    good = hashed.filter(F.col("error").isNull()) \
-        .select("doc_id", "dhash", "ahash", "width", "height")
-    quarantined = hashed.filter(F.col("error").isNotNull()) \
-        .select("doc_id", "error", "error_kind")
-    pairs = near_dup_image_pairs(good, max_hamming=max_hamming,
-                                 hash_col=hash_col)
-    clusters = connected_components(pairs, a_col="doc_id_a",
-                                    b_col="doc_id_b")
-    survivors = (
-        good.join(clusters, on="doc_id", how="left")
-        .filter(F.col("canonical_id").isNull()
-                | (F.col("canonical_id") == F.col("doc_id")))
-        .select("doc_id", "dhash", "ahash", "width", "height")
-    )
-    def stage_count(df, name):
-        return df.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit(name).alias("stage"), "n")
-
-    audit = (
-        stage_count(blobs, "input")
-        .unionByName(stage_count(good, "hashed"))
-        .unionByName(stage_count(quarantined, "quarantined"))
-        .unionByName(stage_count(pairs, "near_dup_pairs"))
-        .unionByName(stage_count(survivors, "survivors"))
-    )
-    return {"survivors": survivors, "clusters": clusters,
-            "quarantined": quarantined, "audit": audit}

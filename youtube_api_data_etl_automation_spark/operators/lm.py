@@ -84,9 +84,8 @@ def score_docs(docs: DataFrame, lm: dict, *, text_col: str = "text",
     """Per-document mean bigram log-probability and perplexity under the
     LM. Documents with <2 tokens produce NO output row (no bigram
     evidence — the pair explode is inner); callers needing the complete
-    corpus shape should LEFT-join the scores back onto their doc relation
-    (perplexity_filter's semi-join drops them, per its documented
-    no-signal policy). ``tok_col`` reuses a pre-projected token array
+    corpus shape should LEFT-join the scores back onto their doc
+    relation. ``tok_col`` reuses a pre-projected token array
     (see _tok_bigrams). Output: (id, n_bigrams, avg_logp, ppl)."""
     k, v = lm["k"], lm["v"]
     bg = _tok_bigrams(docs, id_col, text_col, tok_col)
@@ -211,14 +210,3 @@ def pmi_collocations(lm: dict, *, min_count: int = 5,
         .orderBy(F.desc("pmi"), F.asc("a"), F.asc("b"))
     )
     return out.limit(top_k) if top_k is not None else out
-
-
-def perplexity_filter(docs: DataFrame, lm: dict, max_ppl: float, *,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Keep documents whose perplexity under the reference LM is ≤
-    max_ppl — the CCNet-style 'head' cut. Docs without bigram evidence
-    are dropped (no signal ⇒ can't vouch)."""
-    scores = score_docs(docs, lm, text_col=text_col, id_col=id_col)
-    keep = scores.filter(F.col("ppl") <= max_ppl).select(id_col)
-    return docs.join(keep, id_col, "left_semi")

@@ -230,22 +230,3 @@ def mbox_split(blobs: DataFrame, errors: str = "quarantine",
                               schema.split(", ")])
 
     return blobs.mapInPandas(gen, schema)
-
-
-def mbox_messages_as_payloads(msgs: DataFrame) -> DataFrame:
-    """mbox_split rows → the standard ``(doc_id, payload, source)``
-    payload table (the members_as_payloads contract): ``doc_id =
-    xxhash64(mailbox id, msg_idx)`` — stable across re-ingestion."""
-    from pyspark.sql import functions as F
-
-    return (
-        msgs
-        .filter(F.col("payload").isNotNull())
-        .select(
-            F.xxhash64(F.col("doc_id"), F.col("msg_idx"))
-            .alias("doc_id"),
-            F.col("payload"),
-            F.concat(F.lit("msg/"), F.col("msg_idx").cast("string"))
-            .alias("source"),
-        )
-    )

@@ -64,8 +64,6 @@ IMAGE_META_SCHEMA = (
 IMAGE_META_QUARANTINE_SCHEMA = IMAGE_META_SCHEMA + \
     ", error string, error_kind string"
 
-_BMFF_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
 
 def _boxes(payload: bytes, start: int, end: int):
     """Yield (type, body_start, body_end) for the boxes in [start, end);
@@ -1904,8 +1902,7 @@ def sniff_format(blobs: DataFrame,
     bare text, latex's ``\\documentclass`` may sit after arbitrary
     comment lines); guessing would misroute ordinary text/JSON.
     Those formats route by extension/Content-Type, which crawl
-    pipelines carry anyway (see corpus.office_to_documents kinds and
-    code_quality.lang_from_path)."""
+    pipelines carry anyway (see code_quality.lang_from_path)."""
     fmt, family = _sniff_frags(payload_col)
     out = blobs.withColumn("sniff_format", fmt)
     return out.withColumn("sniff_family", family)

@@ -32,36 +32,14 @@ def _norm_source(source_col: str):
     return F.coalesce(F.col(source_col).cast("string"), F.lit(_NULL_SOURCE))
 
 
-def mixture_rates(
-    df: DataFrame, source_col: str, alpha: float, target_rows: int
-) -> DataFrame:
-    """Per-source sampling rate so expected output ≈ target_rows with
-    p(source) ∝ n_source^alpha. Returns (source, n_rows, rate); rate may
-    exceed 1 (repeat small sources). NULL sources count as one stratum
-    (sentinel key) rather than silently vanishing from the mix."""
-    counts = df.groupBy(_norm_source(source_col).alias(source_col)).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    total_w = counts.agg(
-        F.sum(F.pow(F.col("n_rows").cast("double"), F.lit(alpha))).alias("tw")
-    )
-    return counts.crossJoin(F.broadcast(total_w)).select(
-        source_col,
-        "n_rows",
-        (
-            F.lit(float(target_rows))
-            * F.pow(F.col("n_rows").cast("double"), F.lit(alpha))
-            / F.col("tw")
-            / F.col("n_rows")
-        ).alias("rate"),
-    )
-
-
 def mixture_rates_sqrt(
     df: DataFrame, source_col: str, target_rows: int, weight_scale: int = 10**6
 ) -> DataFrame:
-    """Alpha=0.5 mixture rates with engine-portable exactness (the
-    oracle-checkable twin of ``mixture_rates(..., alpha=0.5)``).
+    """Alpha=0.5 mixture rates with engine-portable exactness: per-source
+    rate so expected output ≈ target_rows with p(source) ∝ sqrt(n_source).
+    Returns (source, n_rows, rate); rate may exceed 1 (repeat small
+    sources). NULL sources count as one stratum (sentinel key) rather
+    than silently vanishing from the mix.
 
     ``pow(n, alpha)`` is only faithfully-rounded, so two engines' libm can
     disagree in the last bit and a summed total weight diverges; sqrt is
@@ -70,8 +48,7 @@ def mixture_rates_sqrt(
     is then an exact bigint sum (order-independent), and the rate is a
     double derived from exact integers via a fixed operation order
     (target·w / tw / n) — bit-identical on any IEEE engine, which is what
-    lets a DuckDB oracle reproduce the fractional-draw boundary exactly.
-    Differential-tested against the pow() form in tests/test_mixing.py."""
+    lets a DuckDB oracle reproduce the fractional-draw boundary exactly."""
     counts = df.groupBy(_norm_source(source_col).alias(source_col)).agg(
         F.count(F.lit(1)).alias("n_rows")
     )

@@ -12,7 +12,7 @@ corpus. The essence layers split by what is honestly recallable:
   symmetric midtread quantizer with ``2**nb - 1`` used codes — the
   all-ones code is the unused one). One frame = 12 samples x 32 bands
   per channel = 384 PCM-equivalent samples.
-- **PCM synthesis is an honest stub.** The polyphase matrixing
+- **No PCM synthesis.** The polyphase matrixing
   ``N[i][k] = cos((16 + i) * (2k + 1) * pi / 64)`` is closed-form, but
   the 512-coefficient synthesis window (Table 3-B.3) is tabulated,
   not derivable. Recalling it wrong and pairing it with a same-table
@@ -620,59 +620,3 @@ def decode_layer1(payload: bytes,
     if not frames:
         raise ValueError("malformed MPEG audio: no frames decoded")
     return rate, np.concatenate(frames, axis=0)
-
-
-def synthesize_pcm(subbands: np.ndarray,
-                   window: np.ndarray | None = None) -> np.ndarray:
-    """Polyphase synthesis filterbank (ISO 11172-3 §2.4.3.2) with a
-    CALLER-SUPPLIED window.
-
-    The filterbank STRUCTURE is closed-form and implemented for real:
-    per 32-sample group, shift the 1024-entry V FIFO by 64, matrix
-    ``V[i] = sum_k cos((16+i)(2k+1)·pi/64) · S[k]`` (i = 0..63), gather
-    the 512-entry U vector (``U[j*64+i] = V[j*128+i]``,
-    ``U[j*64+32+i] = V[j*128+96+i]``), window ``W = U·D``, and emit
-    ``out[j] = sum_i W[j+32i]`` (j = 0..31, i = 0..15).
-
-    What is NOT here is the window itself: Table 3-B.3's 512
-    coefficients are tabulated spec data with no derivation. Recalling
-    them wrong and pairing them with the in-repo test encoder would
-    mask nonconformance (the arithmetic-JPEG policy), so ``window=None``
-    refuses with the honest stub message; a caller who has the spec
-    text passes the table and gets conformant PCM. Returns
-    ``(frames, channels)`` float64."""
-    if window is None:
-        raise NotImplementedError(
-            "Layer I PCM synthesis needs the 512-coefficient window of "
-            "ISO 11172-3 Table 3-B.3 (tabulated, not derivable); pass "
-            "window= from the spec text, use the exact subband features, "
-            "or route to a codec-library executor image"
-        )
-    d = np.asarray(window, dtype=np.float64)
-    if d.shape != (512,):
-        raise ValueError(
-            f"synthesis window must have 512 coefficients, got {d.shape}"
-        )
-    sb = np.asarray(subbands, dtype=np.float64)
-    if sb.ndim != 3 or sb.shape[2] != 32:
-        raise ValueError(
-            f"subbands must be (groups, channels, 32), got {sb.shape}"
-        )
-    n_groups, n_ch, _ = sb.shape
-    i_idx = np.arange(64)[:, None]
-    k_idx = np.arange(32)[None, :]
-    matrix = np.cos((16 + i_idx) * (2 * k_idx + 1) * np.pi / 64)
-    # U gathers these V-FIFO positions (each shift block is 64 wide)
-    u_src = np.empty(512, dtype=np.int64)
-    for j in range(8):
-        u_src[j * 64 : j * 64 + 32] = j * 128 + np.arange(32)
-        u_src[j * 64 + 32 : j * 64 + 64] = j * 128 + 96 + np.arange(32)
-    out = np.empty((n_groups * 32, n_ch), dtype=np.float64)
-    for ch in range(n_ch):
-        v = np.zeros(1024, dtype=np.float64)
-        for g in range(n_groups):
-            v[64:] = v[:-64]
-            v[:64] = matrix @ sb[g, ch]
-            w = v[u_src] * d
-            out[g * 32 : (g + 1) * 32, ch] = w.reshape(16, 32).sum(axis=0)
-    return out

@@ -24,13 +24,12 @@ palette via operators/tiff.py — r10/r11).
 IEEE-float 32/64, G.711, IMA + Microsoft ADPCM (the matrix completed in
 r9), and — r10 — FLAC via operators/flac.py (pure-integer LPC + Rice).
 MPEG-1 Layer I essence decodes to exact SUBBAND samples (r11,
-operators/mpegaudio.py; ``audio_subband_features`` below) — PCM
-synthesis stays stubbed on the unrecallable Table 3-B.3 window. Every
+operators/mpegaudio.py; ``audio_subband_features`` below) — no PCM
+synthesis without the unrecallable Table 3-B.3 window. Every
 remaining compressed format (arithmetic JPEG, lossy-VP8 WebP, Layer
 II/III, AAC) raises an explicit NotImplementedError from inside the
 same mapInPandas shape — or becomes a quarantine ROW under
-``errors='quarantine'``. ``fake_decode_features`` remains the
-deterministic stand-in for pipeline tests that don't care about pixels.
+``errors='quarantine'``.
 """
 
 from __future__ import annotations
@@ -40,9 +39,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_SCHEMA = "doc_id bigint, byte_len bigint, first_byte int, last_byte int"
-FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_len int"
 
 
 def attach_binary(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -55,58 +51,6 @@ def attach_binary(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         F.octet_length(payload).alias("n_bytes"),
     )
     return docs.select(F.col(id_col).alias("doc_id"), payload.alias("payload"), meta.alias("meta"))
-
-
-def extract_features(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads via mapInPandas.
-
-    Features are deliberately deterministic (length, boundary bytes) so the
-    Spark-side plumbing is oracle-checkable; a real pipeline swaps the inner
-    function for image EXIF / audio duration / etc.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            # NULL payload (a NULL source column) reads as empty bytes —
-            # len(None) used to kill the whole job on one bad row (r6
-            # review); an empty payload already has defined features.
-            payloads = pdf["payload"].map(lambda b: b if b is not None else b"")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(lambda b: b[0] if len(b) else -1).astype("int32"),
-                    "last_byte": payloads.map(lambda b: b[-1] if len(b) else -1).astype("int32"),
-                }
-            )
-
-    return blobs.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def frame_sample(blobs: DataFrame, frame_bytes: int = 16) -> DataFrame:
-    """Fixed-stride frame sampling of a binary payload (the video-frame /
-    audio-chunk access pattern): one output row per frame with its length.
-    mapInPandas keeps the fan-out inside the partition — no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, lens = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload) if payload is not None else 0
-                n_frames = (n + frame_bytes - 1) // frame_bytes
-                for i in range(n_frames):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    lens.append(min(frame_bytes, n - i * frame_bytes))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_len": pd.Series(lens, dtype="int32"),
-                }
-            )
-
-    return blobs.mapInPandas(batches, FRAME_SCHEMA)
 
 
 FRAME_FEATURES_SCHEMA = (
@@ -664,7 +608,7 @@ def _decode_rgb(payload: bytes,
     raise NotImplementedError(
         "compressed/unknown image format (magic "
         f"{payload[:2]!r}) requires PIL/opencv, not available in this "
-        "container; use fake_decode_features() for pipeline testing"
+        "container; route the payload to a codec-library executor"
     )
 
 
@@ -792,13 +736,12 @@ def decode_image(
     failures become ROWS instead of task failures; the schema gains an
     ``error`` column (NULL on success, the decode error's message on
     failure, feature columns NULL) so callers split with
-    ``filter(col('error').isNull())`` — the same quarantine split as
-    operators/quarantine.py, attributed by the decoder's own message —
-    plus an ``error_kind`` column ('unsupported' vs 'corrupt', see
-    :func:`_error_kind`) so the two failure populations route differently
-    (arithmetic-coded JPEG and WebP are 'unsupported', not broken;
-    baseline AND progressive JPEG — the dominant web-corpus cases — and
-    first-frame GIF really decode since r9)."""
+    ``filter(col('error').isNull())``, each failure attributed by the
+    decoder's own message — plus an ``error_kind`` column ('unsupported'
+    vs 'corrupt', see :func:`_error_kind`) so the two failure populations
+    route differently (arithmetic-coded JPEG and WebP are 'unsupported', not
+    broken; baseline AND progressive JPEG — the dominant web-corpus cases —
+    and first-frame GIF really decode since r9)."""
     quarantine = _check_errors_mode(errors)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1412,21 +1355,3 @@ def audio_subband_features(blobs: DataFrame,
         ),
         schema,
     )
-
-
-def fake_decode_features(blobs: DataFrame) -> DataFrame:
-    """Deterministic stand-in for decode: derives fake width/height from the
-    byte length. Same mapInPandas shape a real decoder would have."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = pdf["payload"].map(len).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": (n % 64 + 1).astype("int32"),
-                    "height": (n % 48 + 1).astype("int32"),
-                }
-            )
-
-    return blobs.mapInPandas(batches, "doc_id bigint, width int, height int")

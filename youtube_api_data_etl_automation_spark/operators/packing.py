@@ -69,19 +69,3 @@ def pack_sequences(docs: DataFrame, token_col: str = "n_tokens",
         .withColumn("spans_cut", F.col("bin_last") > F.col("bin_first"))
         .drop("_cum")
     )
-
-
-def packing_stats(packed: DataFrame, token_col: str = "n_tokens",
-                  budget: int = 2048) -> DataFrame:
-    """Per-shard packing audit: total tokens, sequences produced, docs
-    split by a cut, and the tail waste (the only underfull sequence).
-    One aggregation — no second pass over the docs."""
-    return packed.groupBy("shard").agg(
-        F.sum(token_col).alias("total_tokens"),
-        F.ceil(F.sum(token_col) / F.lit(budget)).cast("long").alias("n_sequences"),
-        F.sum(F.col("spans_cut").cast("long")).alias("n_docs_split"),
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.ceil(F.sum(token_col) / F.lit(budget)) * F.lit(budget) - F.sum(token_col))
-        .cast("long")
-        .alias("tail_waste_tokens"),
-    )

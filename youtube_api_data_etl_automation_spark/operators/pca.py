@@ -1,46 +1,22 @@
-"""Distributed PCA / whitening over an embedding column.
+"""Distributed PCA sufficient statistics over an embedding column.
 
-The LLM-pipeline use: decorrelate + variance-normalize embeddings before
-cosine-based dedup/ANN (SemDeDup-style pipelines whiten so one dominant
-axis can't drown the rest), or cut storage by projecting to the top-k
-components. The reference has no vector surface at all; this follows the
-standard big-data PCA decomposition:
-
-1. **Sufficient statistics, distributed** — PCA needs only the d-vector of
-   per-dimension sums and the d×d second-moment (Gram) matrix Σ xxᵀ. Both
-   are one pass over the data with an O(d²) result, tiny for embedding
-   dims (64 here ⇒ 4096 doubles). Two interchangeable implementations:
-
-   - :func:`second_moments` — the EXACT relational path: per-row outer
-     products via nested ``transform`` (pure codegen, no join), exploded
-     to (pos, value) and summed as DECIMAL(38,30) so the total is
-     bit-identical under any partitioning/retry. (Cross-ENGINE identity
-     needs the ``grid6`` fixture mode instead — see its docstring: Spark
-     and DuckDB convert double→decimal differently at digit 30.)
-   - :func:`gram_matrix_pandas` — the SCALE path: per-Arrow-batch
-     ``X.T @ X`` in numpy (BLAS) inside ``mapInPandas``, one partial
-     (d² floats) per batch, summed. ~100× less per-row work than the
-     exploded form, at the cost of float-addition order sensitivity at
-     the last ulp (tests pin agreement to 1e-9 against the exact path).
-
-2. **Eigendecomposition, control-plane** — the d×d matrix collects to the
-   driver (O(d²), same sanction as the k-means centroids) and
-   ``numpy.linalg.eigh`` runs in microseconds. Determinism: components
-   are ordered by descending eigenvalue and sign-fixed so each
-   component's largest-|coefficient| entry is positive (eigh's sign is
-   otherwise arbitrary).
-
-3. **Projection, map-side** — y = Wᵀ(x − μ) as k codegen'd
-   ``aggregate``/``zip_with`` dot products against literal arrays; with
-   ``whiten=True`` each component also scales by 1/√λ. No shuffle, no
-   UDF.
+PCA needs only the d-vector of per-dimension sums and the d×d
+second-moment (Gram) matrix Σ xxᵀ. Both are one pass over the data with
+an O(d²) result, tiny for embedding dims (64 here ⇒ 4096 doubles); the
+eigendecomposition of that matrix is O(d²) driver numpy.
+:func:`second_moments` is the EXACT relational path: per-row outer
+products via nested ``transform`` (pure codegen, no join), exploded to
+(pos, value) and summed as DECIMAL(38,30) so the total is bit-identical
+under any partitioning/retry. (Cross-ENGINE identity needs the ``grid6``
+fixture mode instead — see its docstring: Spark and DuckDB convert
+double→decimal differently at digit 30.)
 
 Reference: SURVEY.md §7 north-star (similarity-search support op).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Exact-sum cast for the relational path: float32 inputs make every
@@ -101,121 +77,4 @@ def second_moments(
         .select(F.posexplode(both).alias("pos", "x"))
         .groupBy("pos")
         .agg(F.sum(summand).alias("s"))
-    )
-
-
-def gram_matrix_pandas(df: DataFrame, col: str = "embedding", dim: int | None = None) -> DataFrame:
-    """SCALE path for the same statistics: one numpy ``X.T @ X`` per Arrow
-    batch inside mapInPandas (payload vectors never shuffle; each batch
-    emits d + d² partial sums + a count), reduced by a tiny grouped sum.
-    Output: ``(pos, s double)`` with the same pos layout as
-    :func:`second_moments` plus ``pos = -1`` carrying the row count.
-    Float-sum order varies with partitioning at the last ulp — use
-    :func:`second_moments` when bit-stability matters more than speed."""
-    d = dim if dim is not None else _dim(df, col)
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            vecs = [v for v in pdf[col] if v is not None]
-            if not vecs:
-                continue
-            x = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-            sums = x.sum(axis=0)
-            gram = x.T @ x
-            pos = np.concatenate(
-                ([-1], np.arange(d), d + np.arange(d * d))
-            ).astype("int64")
-            val = np.concatenate(([float(len(vecs))], sums, gram.reshape(-1)))
-            yield pd.DataFrame({"pos": pos, "s": val})
-
-    partials = df.select(col).mapInPandas(batches, "pos long, s double")
-    return partials.groupBy("pos").agg(F.sum("s").alias("s"))
-
-
-def pca_fit(
-    df: DataFrame,
-    col: str = "embedding",
-    k: int = 8,
-    *,
-    exact: bool = False,
-) -> dict:
-    """Fit PCA over the embedding column. Returns a plain-Python model
-    ``{"mean": [d], "components": [k][d], "eigenvalues": [k], "n": int,
-    "dim": int}`` — O(d²) control-plane state, like the k-means
-    centroids. ``exact=True`` routes the sufficient statistics through
-    the decimal relational path (bit-stable, slower); default is the
-    numpy Gram path. Covariance uses the n−1 denominator."""
-    import numpy as np
-
-    d = _dim(df, col)
-    if not 1 <= k <= d:
-        raise ValueError(f"need 1 <= k <= dim={d}, got k={k}")
-    n = df.filter(F.col(col).isNotNull()).count()
-    if n < 2:
-        raise ValueError(f"need at least 2 vectors to fit PCA, got {n}")
-    if exact:
-        rows = second_moments(df, col, dim=d).collect()
-        stats = {int(r["pos"]): float(r["s"]) for r in rows}
-    else:
-        rows = gram_matrix_pandas(df, col, dim=d).collect()
-        stats = {int(r["pos"]): float(r["s"]) for r in rows if r["pos"] >= 0}
-    sums = np.array([stats[i] for i in range(d)])
-    moment = np.array([[stats[d + i * d + j] for j in range(d)] for i in range(d)])
-    mean = sums / n
-    cov = (moment - n * np.outer(mean, mean)) / (n - 1)
-    eigvals, eigvecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(eigvals)[::-1][:k]
-    comps = eigvecs[:, order].T  # k × d
-    # sign convention: largest-|coefficient| entry positive per component
-    for row in comps:
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1
-    return {
-        "mean": mean.tolist(),
-        "components": [c.tolist() for c in comps],
-        "eigenvalues": [float(eigvals[i]) for i in order],
-        "n": int(n),
-        "dim": d,
-    }
-
-
-def _lit_vec(vals: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in vals])
-
-
-def pca_project(
-    df: DataFrame,
-    model: dict,
-    col: str = "embedding",
-    out_col: str = "pca",
-    *,
-    whiten: bool = False,
-    eps: float = 1e-12,
-) -> DataFrame:
-    """Append ``out_col`` = the k-vector Wᵀ(x − μ) (per-component
-    1/√(λ+eps) scaling when ``whiten=True``) as array<double>. Pure
-    codegen'd higher-order expressions over literal arrays — map-side,
-    no shuffle, no UDF; NULL vectors project to NULL."""
-    centered = F.zip_with(
-        F.transform(F.col(col), lambda x: x.cast("double")),
-        _lit_vec(model["mean"]),
-        lambda x, m: x - m,
-    )
-    comps = []
-    for w, lam in zip(model["components"], model["eigenvalues"]):
-        dot = F.aggregate(
-            F.zip_with(centered, _lit_vec(w), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        if whiten:
-            dot = dot / F.lit(float((lam + eps) ** 0.5))
-        comps.append(dot)
-    return df.withColumn(
-        out_col,
-        F.when(F.col(col).isNotNull(), F.array(*comps)),
     )

@@ -1708,11 +1708,9 @@ def pdf_images(blobs: DataFrame, errors: str = "raise",
                ) -> DataFrame:
     """PDF payloads → one row per embedded image XObject, as a payload
     the image pipeline decodes directly: DCTDecode streams pass through
-    as standalone JPEGs, fully-decodable chains unpack to P5/P6 PNM.
-    Feed the output through :func:`pdf_images_as_payloads` and PDF
-    figures reach ``image_hashes`` / ``dedup_images`` /
-    ``decode_image`` exactly like archive members do via
-    ``members_as_payloads`` (archives.py).
+    as standalone JPEGs, fully-decodable chains unpack to P5/P6 PNM,
+    so the ``payload`` column feeds ``image_hashes`` / ``decode_image``
+    directly.
 
     Quarantine is two-level: a malformed DOCUMENT yields one row with
     NULL page_idx; a refused IMAGE (JPX/arithmetic-JBIG2, ImageMask,
@@ -1726,23 +1724,3 @@ def pdf_images(blobs: DataFrame, errors: str = "raise",
         ("doc_id", "page_idx", "image_idx", "name", "format",
          "width", "height", "payload", "error", "error_kind"),
         PDF_IMAGES_SCHEMA, PDF_IMAGES_QUARANTINE_SCHEMA, errors)
-
-
-def pdf_images_as_payloads(images: DataFrame) -> DataFrame:
-    """pdf_images rows → the standard ``(doc_id, payload, source)``
-    payload table (the members_as_payloads contract, archives.py:628):
-    ``doc_id = xxhash64(document id, page, image)`` — stable across
-    re-ingestion; ``source`` carries ``page/XObject-name`` provenance."""
-    from pyspark.sql import functions as F
-
-    return (
-        images
-        .filter(F.col("payload").isNotNull())
-        .select(
-            F.xxhash64(F.col("doc_id"), F.col("page_idx"),
-                       F.col("image_idx")).alias("doc_id"),
-            F.col("payload"),
-            F.concat_ws("/", F.col("page_idx").cast("string"),
-                        F.col("name")).alias("source"),
-        )
-    )

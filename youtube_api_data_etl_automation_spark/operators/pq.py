@@ -11,14 +11,9 @@ ladder: brute force (exact) → sign-LSH / IVF (candidate pruning) → PQ
 Why PQ matters at 100 TB: a float32 d=64 corpus is 256 B/vector; PQ with
 m=4 subspaces and k=8 centroids stores 4 small codes (< 4 B) — a ~64×
 working-set reduction, so the scored relation carries codes, never raw
-vectors. All three stages are Spark-shaped:
+vectors. The caller supplies the codebooks (plain Python floats); both
+stages are Spark-shaped:
 
-- ``train_pq``: per-subspace Lloyd's k-means run as ONE distributed job
-  per round over the exploded (id, subspace, subvector) relation — the
-  compound (subspace, cluster_id) key trains all m codebooks
-  simultaneously instead of m sequential jobs. Decimal-exact recompute
-  (order-independent), broadcast assignment; the corpus never shuffles
-  for assignment, only (subspace, cluster, component) partial sums do.
 - ``pq_encode``: codebooks enter as LITERAL nested arrays (m·k·d/m
   doubles — broadcast via the plan itself), so encoding is a pure
   map-side Column expression: no join, no shuffle, no Python. Cost is
@@ -40,7 +35,7 @@ index on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round6
@@ -173,8 +168,8 @@ def pq_encode(corpus: DataFrame, codebooks: Codebooks,
 
     Output: (id_col, codes array<int> length m [, *keep]). The raw vector
     column is dropped — the point of PQ is that downstream scoring never
-    touches it; ``keep`` carries extra columns through (e.g. the IVF
-    ``cluster_id`` for :func:`write_ivf_pq_index`).
+    touches it; ``keep`` carries extra columns through (e.g. an IVF
+    ``cluster_id``).
     """
     m = len(codebooks)
     k = len(codebooks[0])
@@ -193,17 +188,6 @@ def pq_encode(corpus: DataFrame, codebooks: Codebooks,
             ]
         )
     return corpus.select(F.col(id_col), codes.alias("codes"), *keep)
-
-
-def pq_reconstruct(codes_col: str | F.Column, codebooks: Codebooks) -> F.Column:
-    """Reconstructed vector x̂ = concat_s codebooks[s][codes[s]] as
-    array<double> — for recall / reconstruction-error audits."""
-    codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    parts = []
-    for s, cb in enumerate(codebooks):
-        lut = F.array(*[lit_double_array(cv) for cv in cb])
-        parts.append(F.element_at(lut, F.element_at(codes, s + 1) + 1))
-    return F.concat(*parts)
 
 
 def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: Codebooks,
@@ -241,9 +225,7 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: Codebooks,
 
 def _adc_cosine(codebooks: Codebooks) -> F.Column:
     """The ADC approximate-cosine Column over a relation carrying
-    ``codes`` and ``query_vec`` — shared by :func:`pq_topk` and the
-    at-rest :func:`ivf_pq_topk_from_index` so the two forms are
-    arithmetic-identical by construction."""
+    ``codes`` and ``query_vec``."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     adc_terms, n2_terms = [], []
@@ -273,191 +255,6 @@ def _adc_cosine(codebooks: Codebooks) -> F.Column:
         f"{adc} / nullif(sqrt({qq}) * sqrt({n2}), 0.0D)"))
 
 
-def train_pq(spark: SparkSession, corpus: DataFrame, m: int, k: int,
-             n_iter: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             init_codebooks: Codebooks | None = None) -> Codebooks:
-    """Train m per-subspace codebooks of k centroids each with Lloyd's
-    k-means — ALL subspaces in one distributed job per round, keyed by the
-    compound (subspace, cluster_id): the corpus explodes once to
-    (id, subspace, subvector) (m× rows, d/m-wide each — same total bytes
-    as the input), assignment is a broadcast m·k-row codebook join
-    collapsed map-side by max_by (the clustering.py argument: the exchange
-    carries |corpus|·m unsorted rows, not the k-fanned scored relation),
-    and the recompute shuffles only (subspace, cluster, component) decimal
-    partial sums. Driver state is the m·k·(d/m) codebook floats — O(d·k).
-
-    Default init: the k lowest-id vectors' subvectors (deterministic; the
-    fixture convention the IVF/semantic oracles use). Empty clusters keep
-    their previous centroid, as in clustering.kmeans_lloyd. Returns plain
-    Python codebooks, ready for pq_encode/pq_topk's literal plans.
-    """
-    if init_codebooks is None:
-        # the seed collect doubles as the dim probe (r14: the former
-        # separate corpus.first() job is gone; with explicit init no
-        # probe job runs at all — dim comes from the codebooks)
-        seed = [
-            [float(x) for x in r[0]]
-            for r in corpus.select(vec_col).orderBy(F.col(id_col)).limit(k).collect()
-        ]
-        assert len(seed) == k, f"corpus has < k={k} vectors"
-        dim = len(seed[0])
-        assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-        dsub = dim // m
-        cbs: Codebooks = [
-            [v[s * dsub:(s + 1) * dsub] for v in seed] for s in range(m)
-        ]
-    else:
-        cbs = [[list(map(float, cv)) for cv in cb] for cb in init_codebooks]
-        dsub = len(cbs[0][0])
-        dim = dsub * m
-
-    # r14: assignment is pq_encode's map-side literal argmax — the
-    # codebooks are already driver-side floats each round, so the former
-    # per-round createDataFrame + broadcast join + full groupBy(_id,
-    # subspace) re-shuffle of the exploded corpus is gone; the only
-    # exchange per round is the (subspace, cluster, component)
-    # partial-sum aggregate (≤ m·k·dsub rows per partition, map-side
-    # combined). Scoring arithmetic (_assign_score) and the lowest-j
-    # tie-break (_argmax_code) are expression-identical to the former
-    # join+max_by — the ann_topk pq_adc oracle pins them. The projected
-    # double vector is persisted across the n_iter passes (iterative
-    # reuse; released before returning).
-    src = corpus.select(
-        F.transform(
-            F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-            lambda x: x.cast("double"),
-        ).alias("_v")
-    )
-    if n_iter > 0:
-        src = src.persist()
-    try:
-        for _ in range(n_iter):
-            codes = F.expr(_codes_sql("_v", cbs))
-            # codes and posexplode in separate selects (the generator
-            # re-analysis quirk clustering.kmeans_lloyd documents)
-            comp = src.select(codes.alias("_codes"), F.col("_v")) \
-                .select("_codes", F.posexplode("_v"))
-            comp = comp.select(
-                F.floor(F.col("pos") / F.lit(dsub)).cast("int")
-                .alias("subspace"),
-                (F.col("pos") % F.lit(dsub)).alias("pos_in"),
-                "col",
-                "_codes",
-            ).select(
-                "subspace",
-                F.element_at(F.col("_codes"), F.col("subspace") + 1)
-                .alias("cluster_id"),
-                F.col("pos_in").alias("pos"),
-                "col",
-            )
-            means = (
-                comp.groupBy("subspace", "cluster_id", "pos")
-                .agg(
-                    (
-                        F.sum(F.col("col").cast("decimal(28,12)")).cast("double")
-                        / F.count(F.lit(1))
-                    ).alias("mval")
-                )
-                .groupBy("subspace", "cluster_id")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "mval"))).alias("pm"))
-                .select(
-                    "subspace",
-                    "cluster_id",
-                    F.transform(F.col("pm"), lambda t: t["mval"]).alias("cv"),
-                )
-            )
-            new = {
-                (int(r["subspace"]), int(r["cluster_id"])): [float(x) for x in r["cv"]]
-                for r in means.collect()
-            }
-            cbs = [
-                [new.get((s, j), cbs[s][j]) for j in range(k)] for s in range(m)
-            ]
-    finally:
-        if n_iter > 0:
-            src.unpersist()
-    return cbs
-
-
-def pq_quantization_error(corpus: DataFrame, codebooks: Codebooks,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> float:
-    """Mean squared reconstruction error over the corpus (decimal-exact
-    mean) — the train_pq convergence / recall-budget audit."""
-    enc = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
-    joined = corpus.select(F.col(id_col), F.col(vec_col)).join(enc, id_col)
-    recon = pq_reconstruct("codes", codebooks)
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    se = F.aggregate(
-        F.zip_with(vd, recon, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    row = joined.agg(
-        (
-            F.sum(se.cast("decimal(28,12)")).cast("double") / F.count(F.lit(1))
-        ).alias("mse")
-    ).first()
-    return float(row["mse"])
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ at rest: cell-partitioned CODES — pruned I/O times compressed I/O
 # ---------------------------------------------------------------------------
-
-
-def write_ivf_pq_index(corpus: DataFrame, centroids: DataFrame,
-                       codebooks: Codebooks, path: str, *,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       mode: str = "overwrite") -> None:
-    """The full FAISS-shaped IVF-PQ index as a parquet layout: assign each
-    vector to its IVF cell (broadcast argmax), PQ-encode it (map-only
-    literal codebooks), and write ``(id, codes)`` partitioned BY
-    ``cluster_id``. A probe then multiplies the two savings —
-    partition pruning reads ~nprobe/k of the files, and those files hold
-    codes, not vectors (~64× narrower at m=4, d=64) — which is the
-    standard architecture for billion-scale ANN. ``mode="append"`` adds
-    a batch under the SAME centroids and codebooks (both are the index's
-    fixed grid; retrain ⇒ rebuild)."""
-    from .similarity import assign_clusters
-
-    assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    codes = pq_encode(
-        assigned, codebooks, id_col=id_col, vec_col=vec_col,
-        keep=("cluster_id",),
-    )
-    codes.write.mode(mode).partitionBy("cluster_id").parquet(path)
-
-
-def ivf_pq_topk_from_index(spark: SparkSession, path: str,
-                           queries: DataFrame, centroids: DataFrame,
-                           codebooks: Codebooks, *, top_k: int = 3,
-                           nprobe: int = 1, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """ADC top-k against a :func:`write_ivf_pq_index` layout: the probe
-    list prunes the scan to the probed cells at PLANNING time (the same
-    PartitionFilters pin as similarity.ivf_topk_from_index), each query
-    scores ONLY against its own probed cells (equi-join on cluster_id,
-    not the union of all queries' cells), and scoring is the identical
-    ADC Column :func:`pq_topk` uses — so results match pq_topk exactly
-    whenever the probe covers the true neighbors. Raw vectors are never
-    read: the scan is (id, codes, cluster_id)."""
-    from .similarity import probe_cells
-
-    q = probe_cells(queries, centroids, nprobe=nprobe,
-                    id_col=id_col, vec_col=vec_col)
-    cells = [
-        r["cluster_id"] for r in q.select("cluster_id").distinct().collect()
-    ]
-    idx = spark.read.parquet(path).filter(F.col("cluster_id").isin(cells))
-    scored = (
-        idx.select(
-            F.col(id_col).alias("neighbor_id"), "codes", "cluster_id"
-        )
-        .join(F.broadcast(q), "cluster_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_cosine(codebooks).alias("cosine"))
-    )
-    return _rank_topk(scored, top_k)

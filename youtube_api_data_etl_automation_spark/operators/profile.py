@@ -56,18 +56,6 @@ from ..functions.rounding import round6
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL = (T.FloatType, T.DoubleType)
 
-STATS_FIELDS = (
-    "column_name",
-    "dtype",
-    "n_rows",
-    "n_nulls",
-    "n_distinct",
-    "min_value",
-    "max_value",
-    "avg_value",
-    "avg_len",
-)
-
 
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, _INTEGRAL + _FRACTIONAL) or isinstance(dt, T.DecimalType)
@@ -765,10 +753,11 @@ def _hist_drift_frags(psi_threshold: float, epsilon: float) -> tuple:
 # the whole table. At 100 TB with daily appends that is the wrong shape:
 # the table was already scanned once per batch when it was written, and a
 # nightly full-table profile re-reads everything ever ingested. These three
-# operators close that gap the same way incremental_agg_versioned closes
-# it for keyed aggregates — the per-column stats block is re-expressed as an
-# ALGEBRAIC state (counts, decimal-exact sums, order-preserving min/max
-# encodings, a DataSketches HLL sketch for cardinality) that merges
+# operators close that gap the same way a keyed-aggregate fold through
+# incremental_state_versioned does — the per-column stats block is
+# re-expressed as an ALGEBRAIC state (counts, decimal-exact sums,
+# order-preserving min/max encodings, a DataSketches HLL sketch for
+# cardinality) that merges
 # associatively: profile_state(batch) per delta, merge_profile_states to
 # fold, stats_from_state to materialize the exact column_stats relation —
 # all without touching stored data again. The only non-algebraic
@@ -972,8 +961,9 @@ def merge_profile_states(*states: DataFrame) -> DataFrame:
 
 
 def stats_from_state(state: DataFrame) -> DataFrame:
-    """Materialize the :func:`column_stats` relation (:data:`STATS_FIELDS`
-    schema) from a (merged) profile state — zero scans of the profiled
+    """Materialize the :func:`column_stats` relation (column_name, dtype,
+    n_rows, n_nulls, n_distinct, min_value, max_value, avg_value,
+    avg_len) from a (merged) profile state — zero scans of the profiled
     data. Every metric except ``n_distinct`` is bit-identical to a
     full-table ``column_stats`` run by the algebra in the section note;
     ``n_distinct`` is the HLL estimate (NULL when the state was built with
@@ -1246,14 +1236,6 @@ def quantiles_from_state(
 # The merge therefore reports [n_min, n_max] bounds
 # (classic distributed top-k semantics) instead of pretending exactness —
 # n_min == n_max exactly when the value survived every batch's cut.
-
-TOPK_STATE_FIELDS = (
-    "batch_id",
-    "column_name",
-    "value",
-    "value_n",
-    "batch_min_kept",
-)
 
 
 def topk_state(

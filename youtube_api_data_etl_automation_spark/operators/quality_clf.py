@@ -56,12 +56,6 @@ def learned_logit_t(tok: Column | str, weights: list[float], bias: float) -> Col
     return wsum / (F.lit(1.0) + F.size(t).cast("double")) + F.lit(float(bias))
 
 
-def learned_score_t(tok: Column | str, weights: list[float], bias: float) -> Column:
-    """Keep-probability from the trained model: sigmoid(logit)."""
-    z = learned_logit_t(tok, weights, bias)
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
 def train_quality_clf(
     docs: DataFrame,
     *,
@@ -93,7 +87,7 @@ def train_quality_clf(
     round, so across rounds the full corpus contributes.
 
     Determinism: gradient and loss sums are decimal-exact (the same
-    fixed-point discipline as incremental_agg_versioned / k-means), so
+    fixed-point discipline as the versioned state folds / k-means), so
     the learned weights are bit-identical across partitionings and
     retries. The token relation is persisted for the duration of training
     (n_rounds consumers) and released before returning.

@@ -26,7 +26,8 @@ semantics) as DataFrame ops:
 
 Reference anchor: the reference pipeline consumes a public API
 (fetch_youtube_data.py:74-96) and never crawls, but the north-star
-corpus this engine curates is crawl-shaped (corpus.warc_to_documents);
+corpus this engine curates is crawl-shaped (operators/archives.py
+warc_records);
 robots compliance is the provenance filter that corpus needs.
 
 Scale: parsing is linear in robots bytes (tiny next to any corpus);

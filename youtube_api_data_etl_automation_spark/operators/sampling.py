@@ -42,20 +42,12 @@ def stable_uniform(col: Column | str, salt: str = "aes:") -> Column:
     return (bits + F.lit(1.0)) / F.lit(_U_DENOM)
 
 
-def aes_key(id_col: Column | str, weight: Column, salt: str = "aes:") -> Column:
-    """A-ES sampling key u^(1/w); non-positive weights get key 0 (never
-    sampled ahead of any positive weight). NOTE: u^(1/w) underflows to
-    0.0 for tiny weights (exp(ln(u)/0.001) ≈ e^-2400) — RANKING must use
-    aes_log_key, which is order-equivalent and never underflows; this
-    form exists for inspection/tests of the textbook key."""
-    u = stable_uniform(id_col, salt)
-    return F.when(weight > 0, F.exp(F.log(u) / weight)).otherwise(F.lit(0.0))
-
-
 def aes_log_key(id_col: Column | str, weight: Column, salt: str = "aes:") -> Column:
-    """ln(u)/w — the monotone-equivalent ranking key (exp is strictly
-    increasing, so ordering by ln(u)/w desc == ordering by u^(1/w) desc)
-    with no underflow at any weight ratio: ln(u) ∈ [-36, 0], so the
+    """ln(u)/w — the A-ES sampling key in log form (exp is strictly
+    increasing, so ordering by ln(u)/w desc == ordering by the textbook
+    key u^(1/w) desc). The log form has no underflow at any weight
+    ratio — u^(1/w) underflows to 0.0 for tiny weights
+    (exp(ln(u)/0.001) ≈ e^-2400) — ln(u) ∈ [-36, 0], so the
     quotient stays a normal double for any w > 1e-300. Non-positive
     weights map to -inf (always last)."""
     u = stable_uniform(id_col, salt)

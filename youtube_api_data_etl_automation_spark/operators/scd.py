@@ -72,15 +72,3 @@ def scd2_history(observations: DataFrame, *, key_cols: Sequence[str],
         "n_observations",
         F.lead("_from").over(w2).isNull().cast("int").alias("is_current"),
     )
-
-
-def asof_lookup(history: DataFrame, *, key_cols: Sequence[str],
-                as_of: Column) -> DataFrame:
-    """Filter an SCD2 history to the version valid at ``as_of`` — the
-    dimension side of a point-in-time fact join:
-    ``facts.join(asof_lookup(dim, key_cols=[...], as_of=F.lit(d)), keys)``.
-    Interval predicate only — no window, no shuffle beyond the join's."""
-    return history.filter(
-        (F.col("valid_from") <= as_of)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > as_of))
-    )

@@ -273,42 +273,6 @@ def probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int = 1,
                          F.col("_cr").alias(keep_rank))
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-             top_k: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding", nprobe: int = 1,
-             assigned: DataFrame | None = None) -> DataFrame:
-    """IVF (inverted-file) ANN: partition the corpus into centroid cells,
-    probe the query's ``nprobe`` nearest cells. The scale path when the
-    corpus is too large even for LSH bucketing: the cell equi-join touches
-    ~nprobe·N/k vectors per query instead of N. nprobe=1 is the fastest/
-    lowest-recall point; raising it buys back the recall lost at cell
-    borders without changing the plan shape (the probe list is still a
-    broadcast equi-join on cluster_id).
-
-    ``assigned`` lets a caller reuse a precomputed (and typically
-    persisted) cluster assignment across several probes — the assignment
-    is the corpus-scale term, and replaying it per nprobe setting is the
-    waste ivf_recall_report used to pay (r6 review).
-
-    Output: (query_id, neighbor_id, rank, cosine)."""
-    if assigned is None:
-        assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    q = probe_cells(queries, centroids, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec"), "cluster_id"
-    )
-    scored = (
-        c.join(F.broadcast(q), "cluster_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(sql_cosine6("query_vec", "vec")).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, top_k)
-
-
 def ivf_scored_candidates(assigned: DataFrame, queries: DataFrame,
                           centroids: DataFrame, *, nprobe: int,
                           id_col: str = "vec_id",
@@ -320,7 +284,7 @@ def ivf_scored_candidates(assigned: DataFrame, queries: DataFrame,
     of the candidate's cell in the query's cell ordering (r15).
 
     Because per-query cell sets are NESTED in cell rank, filtering
-    ``rank_col <= m`` and ranking reproduces ``ivf_topk(nprobe=m)``
+    ``rank_col <= m`` and ranking reproduces the ``nprobe=m`` top-k
     exactly for every ``m <= nprobe`` — so a recall ladder scores the
     corpus-side join ONCE instead of once per probed setting (the
     per-arm joins were the dominant replay in the combined IVF row;
@@ -352,7 +316,7 @@ def ivf_recall_report(corpus: DataFrame, queries: DataFrame,
     """Recall@k of the IVF index against exact brute force, per nprobe —
     the tuning artifact an ANN operator owes its user: pick the smallest
     nprobe whose recall clears the application bar, since candidate cost
-    scales ~linearly with it (ivf_topk touches ~nprobe·N/k vectors per
+    scales ~linearly with it (a probe touches ~nprobe·N/k vectors per
     query).
 
     Output: (nprobe, n_hits, n_truth, recall_at_k), one row per probed
@@ -524,77 +488,11 @@ def semantic_neardup(corpus: DataFrame, centroids: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
-# Persistent IVF index: cell-partitioned layout, partition-pruned probes
-# ---------------------------------------------------------------------------
-
-
-def write_ivf_index(corpus: DataFrame, centroids: DataFrame, path: str,
-                    *, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    mode: str = "overwrite") -> None:
-    """Materialize the IVF index AT REST: assign every vector to its cell
-    and write the corpus parquet-partitioned BY ``cluster_id``. This
-    turns cell selection from a filter Spark applies after scanning into
-    a PLANNING-time decision — a probe of ``nprobe`` cells lists and
-    reads only those ``cluster_id=N`` directories, so query I/O is
-    ~nprobe/k of the corpus, which is the entire point of IVF on 100 TB
-    of vectors (the in-memory :func:`ivf_topk` still scans everything
-    and filters). ``mode="append"`` adds a new batch to an existing
-    index (same centroids — the grid discipline again); the layout is a
-    plain partitioned dir, so reader-safe versioning composes by
-    pointing `path` inside a versioned sink's staging."""
-    assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    (
-        assigned.select(id_col, vec_col, "cluster_id")
-        .write.mode(mode)
-        .partitionBy("cluster_id")
-        .parquet(path)
-    )
-
-
-def ivf_topk_from_index(spark, path, queries: DataFrame,
-                        centroids: DataFrame, *, top_k: int = 3,
-                        nprobe: int = 1, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k against a :func:`write_ivf_index` layout, reading ONLY
-    the probed cells: the probe list (queries × nprobe cells — control-
-    plane-sized, same O(q·k) sanction as every centroid scoring) prunes
-    the scan via an IN filter on the PARTITION column, so the files of
-    unprobed cells are never opened [pinned in tests/test_scale_plans.py:
-    PartitionFilters carries the cluster_id filter]. Scoring then
-    proceeds exactly like :func:`ivf_topk` (broadcast probe equi-join on
-    cluster_id), and results are identical to the in-memory form on the
-    same corpus/centroids/nprobe."""
-    q = probe_cells(queries, centroids, nprobe=nprobe,
-                    id_col=id_col, vec_col=vec_col)
-    cells = [r["cluster_id"] for r in q.select("cluster_id").distinct().collect()]
-    # path may be a single compacted dir or the manifest's batch-dir
-    # list (append-based versions) — the membership filter prunes
-    # partitions inside every union arm either way
-    index = _read_index(spark, path).filter(F.col("cluster_id").isin(cells))
-    c = index.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        "cluster_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), "cluster_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(sql_cosine6("query_vec", "vec")).alias("cosine"),
-        )
-    )
-    return _rank_topk(scored, top_k)
-
-
-# ---------------------------------------------------------------------------
 # IVF index maintenance: versioned commits, cell-size health, rebalance
 # ---------------------------------------------------------------------------
 #
 # An at-rest IVF index degrades silently: appends under FIXED centroids
-# (write_ivf_index mode="append") keep working, but as the corpus drifts the
+# (append_ivf_index_versioned) keep working, but as the corpus drifts the
 # cell sizes leave the k ∝ N band that makes probe cost ~nprobe/k of the
 # data (SCALE.md's rule — the same one that fixed semantic_neardup's
 # super-linear term). These operators close the loop: commit the partitioned
@@ -607,17 +505,18 @@ def write_ivf_index_versioned(corpus: DataFrame, centroids: DataFrame,
                               base_path: str, *, id_col: str = "vec_id",
                               vec_col: str = "embedding",
                               keep_versions: int = 2) -> int:
-    """:func:`write_ivf_index`'s layout published as a committed version
-    under ``base_path`` (CAS commit marker, crash-safe, old version
-    retained for in-flight readers — the operators/versioned.py
-    contract). Data lands in a writer-private ``batches/b=N-uuid``
-    cell-partitioned dir OUTSIDE the version dirs; the version commits a
-    MANIFEST listing it plus the centroid grid (``_centroids`` subdir) —
-    version dirs never own data, so version GC can never strand a
-    manifest (data dirs are reclaimed separately by
-    :func:`gc_ivf_batches` once no retained manifest lists them). An
-    index whose grid travels with it can always be probed, appended to,
-    and health-checked without a side channel."""
+    """Materialize the IVF index AT REST: assign every vector to its cell
+    and write the corpus parquet-partitioned BY ``cluster_id``, published
+    as a committed version under ``base_path`` (CAS commit marker,
+    crash-safe, old version retained for in-flight readers — the
+    operators/versioned.py contract). Data lands in a writer-private
+    ``batches/b=N-uuid`` cell-partitioned dir OUTSIDE the version dirs; the
+    version commits a MANIFEST listing it plus the centroid grid
+    (``_centroids`` subdir) — version dirs never own data, so version GC can
+    never strand a manifest (data dirs are reclaimed separately by
+    :func:`gc_ivf_batches` once no retained manifest lists them). An index
+    whose grid travels with it can always be probed, appended to, and
+    health-checked without a side channel."""
     assigned = assign_clusters(corpus, centroids, id_col, vec_col)
     return _commit_ivf_version(
         assigned.select(id_col, vec_col, "cluster_id"),
@@ -672,20 +571,6 @@ def _commit_ivf_version(assigned: DataFrame, cent_kv: DataFrame,
         raise
     _gc_versions(spark, base_path, new_v, keep_versions)
     return new_v
-
-
-def current_ivf_index_path(spark, base_path: str) -> str:
-    """Single data-dir path of the current committed index version (feed
-    to :func:`ivf_topk_from_index` / :func:`ivf_cell_report`). Raises
-    for an append-extended version, whose data spans several dirs — use
-    :func:`current_ivf_index_dirs` there (it also covers this case)."""
-    dirs = current_ivf_index_dirs(spark, base_path)
-    if len(dirs) != 1:
-        raise ValueError(
-            f"current version under {base_path} is append-based "
-            f"({len(dirs)} data dirs); use current_ivf_index_dirs"
-        )
-    return dirs[0]
 
 
 def read_ivf_centroids(spark, base_path: str, *, id_col: str = "vec_id",
@@ -812,7 +697,7 @@ def current_ivf_index_dirs(spark, base_path: str) -> list[str]:
     version — the manifest's list (one dir after a full write or
     rebalance; one per append since). Every dir is a
     cluster_id-partitioned parquet layout; feed the list to
-    :func:`ivf_topk_from_index` / :func:`ivf_cell_report`."""
+    :func:`ivf_cell_report`."""
     from .versioned import _read_manifest, current_version
 
     v = current_version(spark, base_path)

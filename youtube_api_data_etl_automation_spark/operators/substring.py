@@ -27,7 +27,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_shingles_t
@@ -119,14 +119,3 @@ def repeated_span_profile(docs: DataFrame, *, id_col: str = "doc_id",
         F.sum("span_tokens").cast("long").alias("dup_tokens"),
         F.max("span_tokens").cast("int").alias("max_span_tokens"),
     )
-
-
-def span_mask_expr(tok: Column | str, start: Column, end: Column) -> Column:
-    """Tokens of ``tok`` outside [start, end] — the removal step an
-    exact-substring dedup applies to the LONGER copy of a repeated span.
-    Kept as a Column helper (slice + concat) so removal composes into the
-    same projection that re-serializes the document."""
-    t = F.col(tok) if isinstance(tok, str) else tok
-    before = F.slice(t, F.lit(1), start - 1)
-    after = F.slice(t, end + 1, F.greatest(F.size(t) - end, F.lit(0)))
-    return F.concat(before, after)

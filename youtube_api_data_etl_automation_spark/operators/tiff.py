@@ -392,23 +392,13 @@ def _ifd_chain(payload: bytes, lt: str, stop_after: int | None = None,
     return offs
 
 
-def tiff_page_count(payload: bytes) -> int:
-    """Number of pages (IFDs) — multi-page TIFF is the normal shape of
-    scanned/fax documents (r13)."""
-    payload = bytes(payload)
-    if payload[:4] not in (b"II*\x00", b"MM\x00*"):
-        raise ValueError("malformed TIFF: bad magic")
-    lt = "<" if payload[:2] == b"II" else ">"
-    return len(_ifd_chain(payload, lt))
-
-
 def decode_tiff(payload: bytes,
                 pixel_budget: int | None = TIFF_PIXEL_BUDGET,
                 page: int = 0) -> np.ndarray:
     """Decode a baseline TIFF payload to an (h, w, 3) uint8 RGB array.
     ``page`` selects the IFD in the page chain (r13: multi-page TIFFs
     are the normal container for scanned/fax documents — enumerate
-    with :func:`tiff_page_count`; page 0 never validates the rest of
+    with :func:`extract_tiff_pages`; page 0 never validates the rest of
     the chain, so junk trailing next-IFD pointers stay decodable)."""
     if payload[:4] not in (b"II*\x00", b"MM\x00*"):
         raise ValueError("malformed TIFF: bad magic")
@@ -702,8 +692,8 @@ def tiff_page_images(blobs, errors: str = "raise",
     with pdf_images): a malformed CONTAINER yields one row with NULL
     page_idx; a refused PAGE (unsupported compression, pixel budget)
     yields its own error row while sibling pages extract. Arrow-batched
-    mapInPandas, no shuffle — feed :func:`tiff_pages_as_payloads` into
-    image_hashes / dedup_images exactly like pdf_images_as_payloads."""
+    mapInPandas, no shuffle; the ``(doc_id, payload)`` columns feed
+    decode_image / image_hashes directly."""
     from .multimodal import _extract_rows_op
 
     return _extract_rows_op(
@@ -712,23 +702,3 @@ def tiff_page_images(blobs, errors: str = "raise",
         ("doc_id", "page_idx", "format", "width", "height",
          "payload", "error", "error_kind"),
         TIFF_PAGES_SCHEMA, TIFF_PAGES_QUARANTINE_SCHEMA, errors)
-
-
-def tiff_pages_as_payloads(pages):
-    """tiff_page_images rows → the standard ``(doc_id, payload,
-    source)`` payload table (the members_as_payloads contract):
-    ``doc_id = xxhash64(document id, page)`` — stable across
-    re-ingestion; ``source`` carries the page index."""
-    from pyspark.sql import functions as F
-
-    return (
-        pages
-        .filter(F.col("payload").isNotNull())
-        .select(
-            F.xxhash64(F.col("doc_id"), F.col("page_idx"))
-            .alias("doc_id"),
-            F.col("payload"),
-            F.concat(F.lit("page/"), F.col("page_idx").cast("string"))
-            .alias("source"),
-        )
-    )

@@ -6,7 +6,7 @@ table before or after the transaction, never mid-replace). A parquet
 directory rewritten in place does not: a crash between the delete and the
 write can lose the state, and a reader racing the swap can observe a
 partial listing. At 100 TB with always-on readers that window is real, so
-every merge, compaction and aggregate/profile fold in the package goes
+every merge and aggregate/profile fold in the package goes
 through this module (the daily ETL's own append and dimension overwrite
 stay plain parquet: operators/incremental.py).
 
@@ -446,60 +446,6 @@ def merge_upsert_versioned(updates: DataFrame, base_path: str, key: str,
     return commit_version(merged, base_path, keep_versions)
 
 
-def compact_versioned(spark: SparkSession, base_path: str,
-                      target_mb: int = 128, sort_col: str | None = None,
-                      compression: str = "zstd",
-                      keep_versions: int = 2) -> dict:
-    """Reader-safe small-file compaction, published as a new committed
-    version: a reader sees the fragmented files or the compacted ones,
-    never a mix. Without ``sort_col`` the
-    rewrite is a narrow coalesce; with it, a range-cluster + sort so
-    compaction doubles as re-clustering. Returns
-    {files_before, files_after, bytes, version}."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
-    vpath = version_path(base_path, v)
-    jvm, hpath, fs = _fs(spark, vpath)
-    total_bytes = fs.getContentSummary(hpath).getLength()
-    files_before = sum(
-        1
-        for f in fs.listStatus(hpath)
-        if f.isFile() and f.getPath().getName().endswith(".parquet")
-    )
-    chunk = target_mb * 1024 * 1024
-    n_out = max(1, int(total_bytes // chunk) + (1 if total_bytes % chunk else 0))
-
-    df = spark.read.parquet(vpath)
-    if sort_col is None:
-        out = df.coalesce(n_out)
-    else:
-        out = df.repartitionByRange(n_out, F.col(sort_col)).sortWithinPartitions(
-            sort_col
-        )
-    # commit_version writes with the session's parquet codec; switch it to
-    # ``compression`` for this one write.
-    spark_conf_key = "spark.sql.parquet.compression.codec"
-    prev_codec = spark.conf.get(spark_conf_key)
-    spark.conf.set(spark_conf_key, compression)
-    try:
-        new_v = commit_version(out, base_path, keep_versions)
-    finally:
-        spark.conf.set(spark_conf_key, prev_codec)
-    _, new_hpath, _ = _fs(spark, version_path(base_path, new_v))
-    files_after = sum(
-        1
-        for f in fs.listStatus(new_hpath)
-        if f.isFile() and f.getPath().getName().endswith(".parquet")
-    )
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "bytes": int(total_bytes),
-        "version": new_v,
-    }
-
-
 # ---------------------------------------------------------------------------
 # Versioned incremental-aggregate state: fold + applied-marker in ONE commit
 # ---------------------------------------------------------------------------
@@ -509,81 +455,11 @@ _APPLIED_SUB = "applied"
 
 
 def read_agg_state(spark: SparkSession, base_path: str) -> DataFrame:
-    """Current committed aggregate state (see incremental_agg_versioned)."""
+    """Current committed fold state (see incremental_state_versioned)."""
     v = current_version(spark, base_path)
     if v is None:
         raise FileNotFoundError(f"no committed version under {base_path}")
     return spark.read.parquet(f"{version_path(base_path, v)}/{_STATE_SUB}")
-
-
-def incremental_agg_versioned(delta: DataFrame, base_path: str,
-                              keys: list[str], sum_cols: list[str],
-                              batch_id: str, keep_versions: int = 2) -> DataFrame:
-    """Incremental materialized-aggregate maintenance: keep per-key
-    (count, sums…) state current by folding in each delta batch WITHOUT
-    rescanning history — the scale answer to 'recompute the daily rollup
-    over 100 TB every night'. Count/sum partial states (and anything
-    derivable from them: avg = sum/cnt) merge by addition, so
-
-        new_state = reaggregate(old_state ∪ partial_agg(delta))
-
-    touches |state| + |delta| rows, never the full history. State schema:
-    keys + ``cnt`` + one ``sum_<c>`` per sum column.
-
-    Exactly-once: the new state AND the full applied-batch-id set are
-    written into the same ``v=N`` directory and committed by the single
-    atomic ``_COMMITTED`` create, so state and markers can never disagree:
-    a crash anywhere pre-marker leaves the old version current and the
-    retry folds exactly once. Writing the marker separately, before or
-    after the state, would either drop or double-count the batch on a
-    crash between the two writes.
-
-    ``batch_id`` is mandatory (the whole point is exactly-once folding).
-    Re-folding an applied batch returns the current state, no new version.
-    Algebraic aggregates only; decimal-exact sums keep the folded state
-    bit-identical to a from-scratch recompute. Returns the new (or
-    current) state DataFrame."""
-    spark = delta.sparkSession
-    cur = current_version(spark, base_path)
-    old_state = old_applied = None
-    if cur is not None:
-        vdir = version_path(base_path, cur)
-        old_state = spark.read.parquet(f"{vdir}/{_STATE_SUB}")
-        old_applied = spark.read.parquet(f"{vdir}/{_APPLIED_SUB}")
-        if (
-            old_applied.filter(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        ):
-            return old_state
-
-    aggs = [F.count(F.lit(1)).cast("long").alias("cnt")] + [
-        F.sum(F.col(c).cast("decimal(28,6)"))
-        .cast("decimal(28,6)")
-        .alias(f"sum_{c}")
-        for c in sum_cols
-    ]
-    part = delta.groupBy(*keys).agg(*aggs)
-    if old_state is not None:
-        merge_aggs = [F.sum("cnt").cast("long").alias("cnt")] + [
-            F.sum(f"sum_{c}").cast("decimal(28,6)").alias(f"sum_{c}")
-            for c in sum_cols
-        ]
-        part = old_state.unionByName(part).groupBy(*keys).agg(*merge_aggs)
-    new_applied = spark.createDataFrame([(batch_id,)], "batch_id string")
-    if old_applied is not None:
-        new_applied = old_applied.unionByName(new_applied)
-
-    new_v = (cur or 0) + 1
-    staging = _staging_path(base_path)
-    # Old version stays immutable while both legs write — the fold may read
-    # it lazily; no localCheckpoint materialization needed. Both legs land
-    # in this writer's private staging; the rename+marker publish is the
-    # ONE commit point for both.
-    part.write.mode("overwrite").parquet(f"{staging}/{_STATE_SUB}")
-    new_applied.write.mode("overwrite").parquet(f"{staging}/{_APPLIED_SUB}")
-    _publish_version(spark, base_path, new_v, staging)
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return read_agg_state(spark, base_path)
 
 
 # ---------------------------------------------------------------------------
@@ -753,15 +629,16 @@ def incremental_profile_versioned(
     HLL-estimated ``n_distinct``), so the nightly 100 TB profile job
     becomes a per-batch delta profile plus a k-row fold.
 
-    Exactly-once by the same construction as :func:`incremental_agg_versioned`:
-    the folded state AND the applied-batch-id set commit under ONE atomic
-    ``_COMMITTED`` marker, so a crash anywhere pre-marker leaves the old
-    state current and the retry folds the batch exactly once. Re-folding
-    an applied ``batch_id`` returns the current state unchanged. The
-    profile parameters (``cols``, ``track_distinct``, ``lgk``) must be
-    held constant across batches — states fold by (column_name, dtype),
-    so a changed column set merges per-column histories, and a changed
-    ``lgk`` raises in the sketch union. Returns the committed state.
+    Exactly-once by the same construction as
+    :func:`incremental_state_versioned`: the folded state AND the
+    applied-batch-id set commit under ONE atomic ``_COMMITTED`` marker, so a
+    crash anywhere pre-marker leaves the old state current and the retry
+    folds the batch exactly once. Re-folding an applied ``batch_id`` returns
+    the current state unchanged. The profile parameters (``cols``,
+    ``track_distinct``, ``lgk``) must be held constant across batches —
+    states fold by (column_name, dtype), so a changed column set merges
+    per-column histories, and a changed ``lgk`` raises in the sketch union.
+    Returns the committed state.
 
     ``hist_specs`` additionally maintains the SHAPE half of the baseline:
     per-spec bucket counts (``profile.histogram_state`` — one more scan
@@ -987,12 +864,16 @@ def incremental_state_versioned(
     fold_fn,
     keep_versions: int = 2,
 ) -> DataFrame:
-    """Generic exactly-once state fold (r9): the
-    :func:`incremental_agg_versioned` protocol — state AND the
-    applied-batch-id set committed under ONE atomic ``_COMMITTED``
-    marker, replayed batch ids fold nothing — with the FOLD ITSELF
-    supplied by the caller: ``fold_fn(old_state_or_None, delta) ->
-    new_state DataFrame``. This is what the behavioral state folds
+    """Generic exactly-once state fold (r9): the new state AND the full
+    applied-batch-id set are written into the same ``v=N`` directory and
+    committed by the single atomic ``_COMMITTED`` create, so state and
+    markers can never disagree: a crash anywhere pre-marker leaves the
+    old version current and the retry folds exactly once. Writing the
+    marker separately, before or after the state, would either drop or
+    double-count the batch on a crash between the two writes. A replayed
+    batch id folds nothing and returns the current state. The FOLD
+    ITSELF is supplied by the caller: ``fold_fn(old_state_or_None,
+    delta) -> new_state DataFrame``. This is what the behavioral state folds
     (operators/funnel.py::fold_funnel_state / fold_retention_state) and
     any future algebraic state ride instead of re-implementing the
     commit dance. ``fold_fn`` must be deterministic and full-state (its

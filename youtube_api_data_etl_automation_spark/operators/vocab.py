@@ -5,7 +5,7 @@ table size, a pipeline needs the coverage curve: what fraction of the
 corpus' token OCCURRENCES does a top-V type vocabulary cover, and what
 OOV rate does the budget buy. The classic Zipf planning readout — each
 candidate V maps to (covered occurrences, coverage, oov_rate), computed
-from one corpus token pass.
+from the corpus' (term → occurrences) relation.
 
 Scale shape (100 TB): the corpus contributes ONE (term → occurrences)
 aggregate (map-side combined; the token explode never shuffles raw text,
@@ -25,25 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round6
-from ..functions.text import tokens
-
-
-def vocab_coverage(
-    docs: DataFrame,
-    *,
-    vocab_sizes: tuple[int, ...] = (1_000, 4_000, 16_000, 64_000),
-    text_col: str = "text",
-) -> DataFrame:
-    """Coverage curve over ``docs``: one row per candidate vocab size V —
-    ``(vocab_size, n_types, covered_tokens, total_tokens, coverage,
-    oov_rate)``. Tokenization is the engine-wide whitespace contract
-    (functions/text.py::tokens). See :func:`vocab_coverage_from_counts`
-    to reuse an existing term-count relation instead of re-scanning."""
-    toks = docs.select(F.explode_outer(tokens(text_col)).alias("term")).filter(
-        F.col("term").isNotNull()
-    )
-    counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    return vocab_coverage_from_counts(counts, vocab_sizes=vocab_sizes)
 
 
 def vocab_coverage_from_counts(

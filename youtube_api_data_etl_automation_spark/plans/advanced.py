@@ -18,7 +18,6 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round6, sql_round6
 from ..operators.sessionize import session_stats
-from ..operators.similarity import ivf_topk
 from ..sources.tables import load_table
 from .registry import query
 
@@ -110,7 +109,7 @@ def sessionize_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.9-2.4 s at sf0.1 (min 3.19 vs 1.94, -39%). The adaptive
     # partition count is set ONCE before both queries plan (both drains
     # read the same input, so they share the value) and restored after
-    # — the blocking per-drain set/restore would race under overlap.
+    # — a per-drain set/restore would race under overlap.
     from ..streaming.stateful import _drain_partitions
 
     _conf_key = "spark.sql.shuffle.partitions"
@@ -118,11 +117,9 @@ def sessionize_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set(_conf_key, str(_drain_partitions(spark, sf_dir)))
     try:
         q1 = run_stateful_sessions(
-            spark, sf_dir, tempfile.mkdtemp(prefix="ckpt_"), name,
-            block=False)
+            spark, sf_dir, tempfile.mkdtemp(prefix="ckpt_"), name)
         q2 = run_session_window_sessions(
-            spark, sf_dir, tempfile.mkdtemp(prefix="ckpt_"), sw_name,
-            block=False)
+            spark, sf_dir, tempfile.mkdtemp(prefix="ckpt_"), sw_name)
         q1.awaitTermination()
         q2.awaitTermination()
     finally:

@@ -118,10 +118,10 @@ CODEC_FIXTURE_PATH = os.path.join(
     "codec_payloads.parquet",
 )
 
-# One schema for every family: fmt/width/height where the op yields them,
-# everything else folded into the fp string (exact ints, %.6f floats —
-# deterministic: the decoders are pure byte math).
-CODEC_STATS_COLUMNS = ("doc_id", "fmt", "width", "height", "fp")
+# One schema for every family, (doc_id, fmt, width, height, fp):
+# fmt/width/height where the op yields them, everything else folded into
+# the fp string (exact ints, %.6f floats — deterministic: the decoders are
+# pure byte math).
 
 
 def _err_fp():

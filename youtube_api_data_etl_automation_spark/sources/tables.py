@@ -38,8 +38,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
                rebalance: bool = False) -> DataFrame:
@@ -117,4 +115,3 @@ def _rebalance(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
         return df.repartition(target)
     except Exception:
         return df
-

@@ -50,6 +50,19 @@ from pyspark.sql import types as T
 
 API_PAGE_SIZE = 50  # YouTube API max (fetch_youtube_data.py:90, :113-114)
 
+# The one schema definition per raw ETL table. The reference infers every
+# schema dynamically (pd.DataFrame at fetch_youtube_data.py:71,:136; to_sql
+# DDL inference at :194,:198); the engine pins them, and nullability encodes
+# exactly which reference fields were read with ``.get()`` (nullable) versus
+# hard ``[...]`` access (non-null). FIXTURES.md gives the rationale per
+# column.
+#
+# channels — API-shaped channel rows, post-projection
+# (fetch_youtube_data.py:62-68), plus the channel_id key. Counter columns
+# stay strings on purpose: the YouTube API returns statistics counts as JSON
+# strings and the reference never casts them (SURVEY.md §2.6 item 6).
+# published_date is never parsed (:63); country is read with .get() (:64).
+# channel_stats is written from these rows, overwrite mode (:198).
 CHANNELS_SCHEMA = T.StructType(
     [
         T.StructField("channel_id", T.StringType(), False),
@@ -63,6 +76,8 @@ CHANNELS_SCHEMA = T.StructType(
     ]
 )
 
+# playlist_items — (playlist, video) membership emitted by the paginated scan
+# (fetch_youtube_data.py:86-100). page_index is synthetic provenance.
 PLAYLIST_ITEMS_SCHEMA = T.StructType(
     [
         T.StructField("playlistId", T.StringType(), False),
@@ -71,6 +86,8 @@ PLAYLIST_ITEMS_SCHEMA = T.StructType(
     ]
 )
 
+# videos — the exact 11-column pre-transform shape built at
+# fetch_youtube_data.py:122-133 (everything below videoId uses .get()).
 VIDEOS_SCHEMA = T.StructType(
     [
         T.StructField("videoId", T.StringType(), False),

@@ -7,9 +7,8 @@ drains whatever new files/rows exist, exactly once per record via
 checkpointing — the same cadence semantics, but state is engine-managed
 (checkpoint + dropDuplicates watermark) instead of a hand-probed sink.
 
-Scale notes: watermarked dedup keeps per-key state bounded; foreachBatch
-applies the same idempotent anti-join append protocol as the batch path, so
-retried micro-batches cannot duplicate rows.
+Scale notes: the watermark bounds per-window state in update/append
+output modes (see :func:`tumbling_event_counts`).
 """
 
 from __future__ import annotations
@@ -17,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..operators.incremental import append_delta
 
 EVENTS_RAW_SCHEMA = T.StructType(
     [
@@ -97,38 +94,6 @@ def run_available_now(stream_df: DataFrame, checkpoint_dir: str, table_name: str
         .outputMode("complete")
         .format("memory")
         .queryName(table_name)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def incremental_ingest(stream_df: DataFrame, checkpoint_dir: str, sink_path: str,
-                       key: str) -> None:
-    """Streaming version of the incremental-load protocol: per micro-batch,
-    watermark-free exact dedup against the sink via the same idempotent
-    anti-join append used by the batch path (J1 at write time).
-
-    The within-batch dedup keeps a DETERMINISTIC survivor — the row-wise
-    minimum struct per key — not dropDuplicates, which keeps whichever
-    row partition scheduling happens to deliver first (r6 review: replays
-    of the same source from a fresh checkpoint would write different rows
-    for a duplicated key; corpus.py's curate_stream documents the same
-    rejected pattern)."""
-
-    def handle_batch(batch: DataFrame, _batch_id: int) -> None:
-        others = [c for c in batch.columns if c != key]
-        deduped = (
-            batch.groupBy(key)
-            .agg(F.min(F.struct(*others)).alias("_row"))
-            .select(key, *[F.col(f"_row.{c}").alias(c) for c in others])
-            .select(*batch.columns)
-        )
-        append_delta(deduped, sink_path, key)
-
-    q = (
-        stream_df.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
         .start()
     )
     q.awaitTermination()

@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-GAP_US_DEFAULT = 30 * 60 * 1_000_000
 
 # (last_ts_us, session_idx, n_events, start_us, n_vals, sum_micros)
 _STATE_SCHEMA = (
@@ -159,51 +158,36 @@ def _drain_partitions(spark, sf_dir: str) -> int:
 
 
 def _drain(spark, sf_dir, checkpoint_dir, table_name, sessions_builder,
-           output_mode: str, block: bool):
-    """Shared availableNow drain: the adaptive partition count is set
-    while the query PLANS its first batch and restored after the drain
-    (blocking callers only — a non-blocking caller keeps the session
-    setting untouched, since restoring under a still-planning query
-    would race)."""
+           output_mode: str):
+    """Shared availableNow drain into a memory sink; returns the started
+    StreamingQuery. The caller awaits it — Spark runs concurrent
+    streaming queries natively, so independent drains overlap their fixed
+    stream-init/state-store setup instead of paying it serially. The
+    state partitioning is whatever ``spark.sql.shuffle.partitions`` holds
+    when the query plans its first batch (see :func:`_drain_partitions`
+    for the input-sized value)."""
     from .ingest import read_events_stream
 
     stream = read_events_stream(spark, sf_dir)
-    sessions = sessions_builder(stream)
-    conf_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf_key)
-    if block:
-        spark.conf.set(conf_key, str(_drain_partitions(spark, sf_dir)))
-    try:
-        q = (
-            sessions.writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode(output_mode)
-            .format("memory")
-            .queryName(table_name)
-            .start()
-        )
-        if not block:
-            return q
-        q.awaitTermination()
-    finally:
-        if block:
-            spark.conf.set(conf_key, prev)
+    return (
+        sessions_builder(stream).writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+        .format("memory")
+        .queryName(table_name)
+        .start()
+    )
 
 
 def run_stateful_sessions(spark, sf_dir: str, checkpoint_dir: str,
-                          table_name: str, gap_minutes: int = 30,
-                          block: bool = True):
+                          table_name: str, gap_minutes: int = 30):
     """Drain the events table through the stateful operator into a memory
-    sink (update mode: one row per touched session per batch).
-
-    ``block=False`` returns the started StreamingQuery instead of awaiting
-    it — Spark runs concurrent streaming queries natively, so independent
-    drains (e.g. this and the session_window twin) should overlap their
-    fixed stream-init/state-store setup rather than paying it serially."""
+    sink (update mode: one row per touched session per batch). Returns
+    the started StreamingQuery (see :func:`_drain`)."""
     return _drain(
         spark, sf_dir, checkpoint_dir, table_name,
         lambda stream: stateful_sessionize(stream, gap_minutes),
-        "update", block,
+        "update",
     )
 
 
@@ -259,17 +243,17 @@ def session_window_stats(events: DataFrame, gap_minutes: int = 30,
 
 def run_session_window_sessions(spark, sf_dir: str, checkpoint_dir: str,
                                 table_name: str,
-                                gap_minutes: int = 30,
-                                block: bool = True):
+                                gap_minutes: int = 30):
     """Drain the events table through the native session_window aggregate
     into a memory sink. Complete mode: session windows don't support update
     mode, and append would hold back every session newer than the watermark
     horizon — complete emits the full rollup, which is exactly what a
     one-shot availableNow drain wants (same trade as the tumbling demo
     runner in ingest.py; an always-on deployment would use append + a real
-    sink and accept watermark-delayed finalization)."""
+    sink and accept watermark-delayed finalization). Returns the started
+    StreamingQuery (see :func:`_drain`)."""
     return _drain(
         spark, sf_dir, checkpoint_dir, table_name,
         lambda stream: session_window_stats(stream, gap_minutes),
-        "complete", block,
+        "complete",
     )

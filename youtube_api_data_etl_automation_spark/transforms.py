@@ -3,8 +3,6 @@
 ``enrich_videos`` reimplements fetch_youtube_data.py:171-190 (11 → 19 cols)
 entirely with Column expressions — Catalyst sees a single Project, so the
 whole block is one whole-stage-codegen span with zero Python in the loop.
-``curate_channels`` adds the numeric casts the reference never did
-(SURVEY.md §2.6 item 6).
 
 Deliberate semantic policies vs pandas (SURVEY.md §2.6):
 - ÷0 ratios → NULL (pandas: inf/NaN)            [items 1]
@@ -31,7 +29,8 @@ from .functions import (
 
 
 def enrich_videos(videos_raw: DataFrame) -> DataFrame:
-    """11-column videos_raw → 19-column video_stats (schemas.VIDEO_STATS)."""
+    """11-column videos_raw (sources/youtube_api.py::VIDEOS_SCHEMA) →
+    19-column video_stats, in the reference write's column order."""
     ts = ts_parse_utc("publishedAt")
     # DELIBERATELY strict (T1): the reference's astype at :171 throws on a
     # malformed count, and so does this cast under the session's ANSI
@@ -59,18 +58,4 @@ def enrich_videos(videos_raw: DataFrame) -> DataFrame:
         iso8601_duration_seconds("duration").alias("duration_sec"),
         safe_ratio(to_long_or_zero("comments"), views, 1000.0).alias("comment_view_ratio"),
         safe_ratio(to_long_or_zero("likes"), views, 1000.0).alias("like_view_ratio"),
-    )
-
-
-def curate_channels(channels_raw: DataFrame) -> DataFrame:
-    """channel_stats curated view: counters cast string→long (raw table keeps
-    the API's string fidelity; fetch_youtube_data.py:65-67 never casts)."""
-    return channels_raw.select(
-        "channel_title",
-        "published_date",
-        "country",
-        F.col("subscribers").cast("long").alias("subscribers"),
-        F.col("views").cast("long").alias("views"),
-        F.col("totalVideos").cast("long").alias("totalVideos"),
-        "playlistId",
     )
