@@ -25,8 +25,10 @@ from youtube_api_data_etl_automation_spark.operators.similarity import (
     write_ivf_index_versioned,
 )
 from youtube_api_data_etl_automation_spark.operators.versioned import (
-    _read_manifest,
+    ConcurrentWriteError,
+    gc_batches,
     list_versions,
+    read_manifest,
 )
 
 DIM = 8
@@ -152,7 +154,7 @@ def test_rebalance_restores_band_and_preserves_probes(spark, tmp_path):
         (v, ok) for v, ok in list_versions(spark, base_path)
     ]
     assert spark.read.parquet(
-        *_read_manifest(spark, base_path, 1)
+        *read_manifest(spark, base_path, 1)
     ).count() == 360
 
 
@@ -169,10 +171,6 @@ def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
     the cell report sees the union, rebalance compacts the manifest back
     to one cells dir, and gc_ivf_batches reclaims batch dirs once no
     retained manifest lists them."""
-    from youtube_api_data_etl_automation_spark.operators.similarity import (
-        gc_ivf_batches,
-    )
-
     base = str(tmp_path / "ivf_append")
     corpus = _corpus(spark, blobs=range(4), per_blob=30)
     cent = _axes(spark, [0, 1, 2, 3])
@@ -222,13 +220,55 @@ def test_append_ivf_index_versioned_odelta_and_full_cycle(spark, tmp_path):
 
     # batch dirs are still listed by the retained v3 manifest — gc keeps
     # them; after one more commit retires v3, gc reclaims all three
-    assert gc_ivf_batches(spark, base, max_age_ms=0) == []
+    assert gc_batches(spark, base, max_age_ms=0) == []
     rebalance_ivf_index(spark, base, target_cell_size=30, n_iter=1)
-    deleted = gc_ivf_batches(spark, base, max_age_ms=0)
+    deleted = gc_batches(spark, base, max_age_ms=0)
     assert len(deleted) == 3  # v1's full-write dir + the two append dirs
     probe_after = _index_topk(spark, current_ivf_index_dirs(spark, base),
                               queries)
     assert probe_after == want
+
+
+def test_append_during_rebalance_is_not_lost(spark, tmp_path, monkeypatch):
+    """Lost-update regression: an append that commits while the
+    rebalance trains its grid owns the slot after the version the
+    rebalance read, so the rebalance must raise ConcurrentWriteError
+    (its batch dir reclaimed) instead of committing a rewrite that drops
+    the appended vectors."""
+    import os
+
+    from youtube_api_data_etl_automation_spark.operators import clustering
+
+    base = str(tmp_path / "ivf_race")
+    corpus = _corpus(spark, blobs=range(4), per_blob=30)  # 120 vectors
+    write_ivf_index_versioned(corpus, _axes(spark, [0, 1, 2, 3]), base)
+    batch = spark.createDataFrame(
+        [(50_000 + j, _blob_vec(2, j)) for j in range(7)],
+        "vec_id long, embedding array<float>",
+    )
+
+    real_lloyd = clustering.kmeans_lloyd
+
+    def lloyd_with_racing_append(*args, **kwargs):
+        assert append_ivf_index_versioned(batch, base) == 2
+        return real_lloyd(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "kmeans_lloyd", lloyd_with_racing_append)
+    with pytest.raises(ConcurrentWriteError):
+        rebalance_ivf_index(spark, base, target_cell_size=30, n_iter=1)
+    monkeypatch.undo()
+
+    assert [v for v, ok in list_versions(spark, base) if ok] == [1, 2]
+    from youtube_api_data_etl_automation_spark.operators.similarity import (
+        _read_index,
+    )
+
+    assert _read_index(spark, current_ivf_index_dirs(spark, base)).count() == 127
+    # only the full write's and the append's batch dirs remain
+    assert len(os.listdir(os.path.join(base, "batches"))) == 2
+    # and a retried rebalance compacts all 127
+    out = rebalance_ivf_index(spark, base, target_cell_size=30, n_iter=1)
+    assert out["version"] == 3 and out["n_vectors"] == 127
 
 
 def test_append_requires_initial_index(spark, tmp_path):
@@ -245,16 +285,11 @@ def test_gc_ivf_batches_relative_base_path_keeps_live_dirs(spark, tmp_path):
     fully-qualified URIs."""
     import os
 
-    from youtube_api_data_etl_automation_spark.operators.similarity import (
-        current_ivf_index_dirs,
-        gc_ivf_batches,
-    )
-
     rel = os.path.relpath(str(tmp_path / "ivf_rel"), os.getcwd())
     corpus = _corpus(spark, blobs=range(2), per_blob=10)
     assert write_ivf_index_versioned(corpus, _axes(spark, [0, 1]), rel) == 1
     # nothing is orphaned: the one batch dir is listed by v1's manifest
-    assert gc_ivf_batches(spark, rel, max_age_ms=0) == []
+    assert gc_batches(spark, rel, max_age_ms=0) == []
     dirs = current_ivf_index_dirs(spark, rel)
     assert spark.read.parquet(*dirs).count() == 20
     # a second commit retires v1 under keep_versions=1; the orphaned v1
@@ -263,7 +298,7 @@ def test_gc_ivf_batches_relative_base_path_keeps_live_dirs(spark, tmp_path):
     assert write_ivf_index_versioned(
         corpus, _axes(spark, [0, 1]), rel, keep_versions=1
     ) == 2
-    deleted = gc_ivf_batches(spark, rel, max_age_ms=0)
+    deleted = gc_batches(spark, rel, max_age_ms=0)
     assert len(deleted) == 1
     assert spark.read.parquet(
         *current_ivf_index_dirs(spark, rel)

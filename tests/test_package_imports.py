@@ -1,6 +1,7 @@
 """Every package module imports cleanly: no module left importing a deleted
-one, and no SyntaxWarning or DeprecationWarning raised at import time. And
-every public package definition has a use outside the tests."""
+one, and no SyntaxWarning or DeprecationWarning raised at import time.
+Every public package definition has a use outside the tests, and no module
+reaches into the versioned-sink commit protocol's private names."""
 
 from __future__ import annotations
 
@@ -54,8 +55,7 @@ def test_every_package_module_imports_without_warnings(tmp_path):
 _UNUSED_ALLOWED_MODULES = {"operators/jdbc.py"}
 _UNUSED_ALLOWED = {
     ("operators/versioned.py", name)
-    for name in ("commit_version", "read_current", "overwrite_versioned",
-                 "merge_upsert_versioned")
+    for name in ("commit_version", "read_current", "merge_upsert_versioned")
 }
 _PKG = "youtube_api_data_etl_automation_spark"
 _WORD = re.compile(r"\w+\Z")
@@ -160,3 +160,27 @@ def test_every_public_definition_has_a_non_test_use():
     registry, the CLI, bench.py, tools/ or perfbench/ (allowlist above)."""
     unused = _unused_definitions()
     assert not unused, "no non-test use:\n" + "\n".join(unused)
+
+
+def test_no_module_imports_private_versioned_names():
+    """operators/versioned.py owns the commit protocol (staging, publish,
+    GC, manifest format): every other package module goes through its
+    public API, so a second copy of the protocol cannot creep back in."""
+    pkg_dir = os.path.join(ROOT, _PKG)
+    own = os.path.join(pkg_dir, "operators", "versioned.py")
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"),
+                                 recursive=True)):
+        if path == own:
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.ImportFrom)
+                    and (node.module or "").rpartition(".")[2] == "versioned"):
+                offenders += [
+                    f"{os.path.relpath(path, pkg_dir)}:{node.lineno} {a.name}"
+                    for a in node.names if a.name.startswith("_")
+                ]
+    assert not offenders, "private versioned.py names imported:\n" + \
+        "\n".join(offenders)

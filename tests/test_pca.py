@@ -1,8 +1,11 @@
 """PCA sufficient statistics (operators/pca.py::second_moments) against
-numpy as the ground truth on collected data: the statistics are right
-and deterministic under repartitioning, in both summation modes."""
+numpy as the ground truth on collected data: every sum equals the exact
+total of the 6-decimal-grid summands, and is deterministic under
+repartitioning."""
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 import numpy as np
 import pytest
@@ -31,38 +34,39 @@ def vectors(spark):
     return df, x32.astype(np.float64)
 
 
+def _grid_sums(x: np.ndarray) -> list[Decimal]:
+    """numpy reference: the d sums then the d*d products, each summand
+    snapped to the 6-decimal grid with round6's double arithmetic
+    (floor(v * 1e6 + 0.5)), summed exactly as integer micro-units."""
+    prods = (x[:, :, None] * x[:, None, :]).reshape(len(x), -1)
+    summands = np.concatenate([x, prods], axis=1)
+    micro = np.floor(summands * 1e6 + 0.5).astype(np.int64)
+    return [Decimal(int(t)).scaleb(-6) for t in micro.sum(axis=0)]
+
+
 def test_second_moments_exact_and_repartition_stable(spark, vectors):
     df, x = vectors
-    rows = {int(r["pos"]): float(r["s"]) for r in second_moments(df).collect()}
-    assert len(rows) == D + D * D
-    np.testing.assert_allclose(
-        [rows[i] for i in range(D)], x.sum(axis=0), rtol=0, atol=1e-9
-    )
-    gram = np.array([[rows[D + i * D + j] for j in range(D)] for i in range(D)])
-    np.testing.assert_allclose(gram, x.T @ x, rtol=1e-12)
+    got = {int(r["pos"]): r["s"] for r in second_moments(df).collect()}
+    want = _grid_sums(x)
+    assert len(got) == D + D * D
+    assert [got[p] for p in range(len(want))] == want
     # decimal sums: bit-identical under a different partitioning
-    rows2 = {
-        int(r["pos"]): float(r["s"])
+    again = {
+        int(r["pos"]): r["s"]
         for r in second_moments(df.repartition(7, "vec_id")).collect()
     }
-    assert rows == rows2
+    assert again == got
 
 
 def test_second_moments_grid6_fixture_mode(spark, vectors):
-    """The oracle-fixture mode (summands snapped to the 6-decimal grid,
-    decimal(18,6) sums) tracks the full-precision path to within the
-    grid's accumulation error and stays repartition-stable."""
+    """The 6-decimal grid (what makes the sums mirrorable by the DuckDB
+    oracle) tracks the full-precision sums and Gram matrix to within the
+    grid's accumulation error."""
     df, x = vectors
-    full = {int(r["pos"]): float(r["s"]) for r in second_moments(df).collect()}
-    grid = {
-        int(r["pos"]): float(r["s"])
-        for r in second_moments(df, grid6=True).collect()
-    }
-    assert set(grid) == set(full)
-    for pos, v in full.items():
-        assert grid[pos] == pytest.approx(v, abs=N * 5e-7 + 1e-9)
-    grid2 = {
-        int(r["pos"]): float(r["s"])
-        for r in second_moments(df.repartition(5, "vec_id"), grid6=True).collect()
-    }
-    assert grid == grid2
+    got = {int(r["pos"]): float(r["s"]) for r in second_moments(df).collect()}
+    tol = N * 5e-7 + 1e-9
+    np.testing.assert_allclose(
+        [got[i] for i in range(D)], x.sum(axis=0), rtol=0, atol=tol
+    )
+    gram = np.array([[got[D + i * D + j] for j in range(D)] for i in range(D)])
+    np.testing.assert_allclose(gram, x.T @ x, rtol=0, atol=tol)

@@ -204,7 +204,7 @@ def test_profile_state_is_one_aggregate_scan(spark):
 def test_incremental_profile_versioned_exactly_once(spark, tmp_path):
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         incremental_profile_versioned,
-        read_profile_state,
+        read_agg_state,
     )
 
     base = str(tmp_path / "prof_state")
@@ -220,7 +220,7 @@ def test_incremental_profile_versioned_exactly_once(spark, tmp_path):
         _df(spark, 50, 120), base, cols, batch_id="b2"
     )
     got = _stats_map(
-        stats_from_state(read_profile_state(spark, base))
+        stats_from_state(read_agg_state(spark, base))
     )
     want = _stats_map(column_stats(_df(spark), cols))
     for c, w in want.items():
@@ -385,7 +385,7 @@ def test_versioned_hist_state_and_psi_gate(spark, tmp_path):
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         incremental_profile_versioned,
         psi_vs_hist_state,
-        read_hist_state,
+        read_state_part,
     )
 
     base = str(tmp_path / "hist_state")
@@ -398,7 +398,7 @@ def test_versioned_hist_state_and_psi_gate(spark, tmp_path):
     )
     got = sorted(
         tuple(r)
-        for r in hist_from_state(read_hist_state(spark, base), "u").collect()
+        for r in hist_from_state(read_state_part(spark, base, "hist"), "u").collect()
     )
     want = sorted(
         tuple(r)
@@ -574,7 +574,7 @@ def test_versioned_topk_state_accumulates_per_batch(spark, tmp_path):
     )
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         incremental_profile_versioned,
-        read_topk_state,
+        read_state_part,
     )
 
     base = str(tmp_path / "topk_state")
@@ -587,7 +587,7 @@ def test_versioned_topk_state_accumulates_per_batch(spark, tmp_path):
         _zipf_df(spark, 200, 400), base, ["s"], batch_id="b2",
         topk_specs=specs,
     )
-    state = read_topk_state(spark, base)
+    state = read_state_part(spark, base, "topk")
     assert {r["batch_id"] for r in state.select("batch_id").distinct().collect()} \
         == {"b1", "b2"}
     got = topk_from_state(merge_topk_states(state), "s", k=3).collect()

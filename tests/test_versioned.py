@@ -16,7 +16,6 @@ from youtube_api_data_etl_automation_spark.operators.versioned import (
     incremental_state_versioned,
     list_versions,
     merge_upsert_versioned,
-    overwrite_versioned,
     read_current,
     version_path,
 )
@@ -309,7 +308,7 @@ def test_uncommitted_debris_is_invisible_and_reclaimed(spark, tmp_path):
 def test_gc_keeps_retention_horizon(spark, tmp_path):
     base = str(tmp_path / "sink")
     for i in range(1, 5):
-        overwrite_versioned(_df(spark, [("n", i)]), base, keep_versions=2)
+        commit_version(_df(spark, [("n", i)]), base, keep_versions=2)
     vs = list_versions(spark, base)
     assert [v for v, ok in vs if ok] == [3, 4]  # only the horizon survives
     assert read_current(spark, base).collect()[0].v == 4
@@ -423,10 +422,13 @@ def test_append_versioned_accumulates_and_is_idempotent(spark, tmp_path):
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {("a", 1), ("b", 2), ("c", 3)}
 
-    # full replay of an already-landed delta: nothing appended, NO new version
+    # full replay of an already-landed delta: nothing appended, NO new
+    # version, and no new (empty) batch dir left behind
     v_before = current_version(spark, base)
+    dirs_before = sorted(os.listdir(os.path.join(base, "batches")))
     assert append_versioned(_df(spark, [("a", 1)]), base, key="k") == 0
     assert current_version(spark, base) == v_before
+    assert sorted(os.listdir(os.path.join(base, "batches"))) == dirs_before
 
 
 def test_append_versioned_reader_snapshot_survives_append(spark, tmp_path):
@@ -533,6 +535,45 @@ def test_racing_commits_exactly_one_wins(spark, tmp_path, monkeypatch):
     assert commit_version(_df(spark, [("loser", 2)]), base) == 3
 
 
+def test_racing_merge_loses_instead_of_dropping_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Lost-update regression: a merge that lands while another merge is
+    between its read and its commit must make the second one lose — it
+    read v1, so it may only publish v2 — never publish a v3 computed
+    from v1 that silently drops the racer's row. A retry on the fresh
+    snapshot then lands both merges' rows."""
+    import youtube_api_data_etl_automation_spark.operators.versioned as V
+
+    base = str(tmp_path / "merge_race")
+    merge_upsert_versioned(_df(spark, [("a", 1)]), base, "k")
+
+    real_select_new = V.select_new
+    raced = {"done": False}
+
+    def racy_select_new(*args, **kwargs):
+        if not raced["done"]:
+            raced["done"] = True
+            merge_upsert_versioned(_df(spark, [("z", 9)]), base, "k")
+        return real_select_new(*args, **kwargs)
+
+    monkeypatch.setattr(V, "select_new", racy_select_new)
+    with pytest.raises(V.ConcurrentWriteError):
+        merge_upsert_versioned(_df(spark, [("b", 2)]), base, "k")
+    assert raced["done"]
+    assert current_version(spark, base) == 2
+    assert {(r.k, r.v) for r in read_current(spark, base).collect()} == {
+        ("a", 1), ("z", 9),
+    }
+    assert _staging_children(base) == []
+
+    monkeypatch.undo()
+    assert merge_upsert_versioned(_df(spark, [("b", 2)]), base, "k") == 3
+    assert {(r.k, r.v) for r in read_current(spark, base).collect()} == {
+        ("a", 1), ("b", 2), ("z", 9),
+    }
+
+
 def test_racing_appends_loser_cleans_batch_debris(spark, tmp_path, monkeypatch):
     """Append-family race: the losing append's manifest never commits, so
     its batch dir is unlisted debris — it must be deleted with the staging,
@@ -609,8 +650,8 @@ def test_model_based_random_op_sequences(spark, tmp_path):
 
     from youtube_api_data_etl_automation_spark.operators.versioned import (
         append_versioned,
+        commit_version,
         merge_upsert_versioned,
-        overwrite_versioned,
         read_appended,
         read_current,
     )
@@ -624,7 +665,7 @@ def test_model_based_random_op_sequences(spark, tmp_path):
                 (f"k{rng.randrange(6)}", rng.randrange(100)) for _ in range(3)
             ]
             if rng.random() < 0.4:
-                overwrite_versioned(_df(spark, rows), base)
+                commit_version(_df(spark, rows), base)
                 model = dict(rows)  # later dup key wins? no: dict(rows)
                 # match merge semantics for in-batch dups: LAST wins in
                 # dict(); overwrite writes all rows — so force unique keys
@@ -650,7 +691,7 @@ def test_model_based_random_op_sequences(spark, tmp_path):
         def racy(sp, bp, new_v, staging):
             if not raced["done"]:
                 raced["done"] = True
-                overwrite_versioned(_df(spark, winner_rows), base)
+                commit_version(_df(spark, winner_rows), base)
             return real_publish(sp, bp, new_v, staging)
 
         V._publish_version = racy

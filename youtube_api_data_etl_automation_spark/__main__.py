@@ -167,38 +167,24 @@ def _cmd_ivf(args: argparse.Namespace) -> int:
     from .operators.similarity import (
         append_ivf_index_versioned,
         current_ivf_index_dirs,
-        gc_ivf_batches,
         ivf_cell_report,
         rebalance_ivf_index,
+        train_ivf_grid,
         write_ivf_index_versioned,
     )
+    from .operators.versioned import gc_batches
 
     try:
         if args.init:
             if not args.input or not args.k:
                 raise ValueError("--init requires --input and --k")
-            from pyspark.sql import functions as F
-            from pyspark.sql.window import Window
-
-            from .operators.clustering import kmeans_lloyd
-
             corpus = spark.read.parquet(args.input).select(
                 args.id_col, args.vec_col
             )
-            init = corpus.orderBy(args.id_col).limit(args.k).select(
-                (F.row_number().over(Window.orderBy(args.id_col)) - 1)
-                .alias("cluster_id"),
-                F.col(args.vec_col).cast("array<double>").alias("cv"),
-            )
-            _, cent = kmeans_lloyd(
-                spark, corpus, init, n_iter=args.n_iter,
-                id_col=args.id_col, vec_col=args.vec_col,
-                return_centroids=True,
-            )
             v = write_ivf_index_versioned(
                 corpus,
-                cent.select(F.col("cluster_id").alias(args.id_col),
-                            F.col("cv").alias(args.vec_col)),
+                train_ivf_grid(corpus, args.k, n_iter=args.n_iter,
+                               id_col=args.id_col, vec_col=args.vec_col),
                 args.base, id_col=args.id_col, vec_col=args.vec_col,
             )
             print(json.dumps({"status": "ok", "action": "init",
@@ -224,7 +210,7 @@ def _cmd_ivf(args: argparse.Namespace) -> int:
             print(json.dumps({"status": "ok", "action": "rebalance", **out}))
             return 0
         if args.gc:
-            deleted = gc_ivf_batches(spark, args.base)
+            deleted = gc_batches(spark, args.base)
             print(json.dumps({"status": "ok", "action": "gc",
                               "deleted": deleted}))
             return 0
@@ -594,9 +580,9 @@ def _profile_state_mode(args, spark, df, cols) -> int:
             print(json.dumps({"status": "error", "error": str(e)}))
             return 1
     else:
-        from .operators.versioned import read_profile_state
+        from .operators.versioned import read_agg_state
 
-        state = read_profile_state(spark, args.state_dir)
+        state = read_agg_state(spark, args.state_dir)
     cumulative = [r.asDict() for r in stats_from_state(state).collect()]
     print(json.dumps({
         "status": "drift_flagged" if flags else "ok",
@@ -621,13 +607,9 @@ def _profile_report_mode(args, spark) -> int:
         stats_from_state,
         topk_from_state,
     )
-    from .operators.versioned import (
-        read_hist_state,
-        read_profile_state,
-        read_topk_state,
-    )
+    from .operators.versioned import read_agg_state, read_state_part
 
-    state = read_profile_state(spark, args.state_dir)
+    state = read_agg_state(spark, args.state_dir)
     out: dict = {
         "status": "ok",
         "cumulative_profile": [
@@ -636,7 +618,7 @@ def _profile_report_mode(args, spark) -> int:
         ],
     }
     try:
-        hist = read_hist_state(spark, args.state_dir)
+        hist = read_state_part(spark, args.state_dir, "hist")
         tracked = [
             r["column_name"]
             for r in hist.select("column_name").distinct().collect()
@@ -659,7 +641,9 @@ def _profile_report_mode(args, spark) -> int:
     except FileNotFoundError:
         pass
     try:
-        topk = merge_topk_states(read_topk_state(spark, args.state_dir))
+        topk = merge_topk_states(
+            read_state_part(spark, args.state_dir, "topk")
+        )
         cols = [
             r["column_name"]
             for r in topk.select("column_name").distinct().collect()
@@ -776,8 +760,8 @@ def _cmd_shards(args: argparse.Namespace) -> int:
 
 def _cmd_drift(args: argparse.Namespace) -> int:
     from .operators.versioned import (
-        _resolve_version_pair,
         drift_between_versions,
+        resolve_version_pair,
         schema_diff_between_versions,
     )
     from .session import get_spark
@@ -788,7 +772,7 @@ def _cmd_drift(args: argparse.Namespace) -> int:
     # section below — otherwise a commit landing between the value-drift,
     # schema-diff, and PSI calls would make the sections of one report
     # describe different version pairs.
-    versions = _resolve_version_pair(spark, args.sink, args.versions)
+    versions = resolve_version_pair(spark, args.sink, args.versions)
     rows = drift_between_versions(
         spark,
         args.sink,

@@ -22,6 +22,12 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round6
 from ..functions.vectors import cosine_similarity, sql_cosine6
+from .versioned import (
+    commit_manifest,
+    current_version,
+    read_manifest,
+    version_path,
+)
 
 
 def _rename_query(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -501,87 +507,64 @@ def semantic_neardup(corpus: DataFrame, centroids: DataFrame, *,
 # retrain/rewrite when the report flags.
 
 
+def _index_version(spark, base_path: str) -> int:
+    """The IVF index's current committed version, or raise."""
+    v = current_version(spark, base_path)
+    if v is None:
+        raise FileNotFoundError(
+            f"no committed IVF index under {base_path}; write the initial "
+            "index with write_ivf_index_versioned first (appends assign "
+            "under its committed centroids)"
+        )
+    return v
+
+
+def _write_cells(vectors: DataFrame, centroids: DataFrame, base_path: str,
+                  snapshot: int | None, listed: list[str], *, id_col: str,
+                  vec_col: str, keep_versions: int) -> int:
+    """Assign ``vectors`` under ``centroids`` and commit them as one
+    cluster_id-partitioned batch dir of the index read at ``snapshot``:
+    the new manifest lists ``listed`` plus that dir, and the grid travels
+    with the version as its ``_centroids`` part (copied on append — it is
+    k rows). Data dirs live outside the version dirs, so version GC can
+    never strand a manifest."""
+    assigned = assign_clusters(
+        vectors.select(id_col, vec_col), centroids, id_col, vec_col
+    )
+    grid = centroids.select(
+        F.col(id_col).alias("cluster_id"), F.col(vec_col).alias("cv")
+    ).coalesce(1)
+    return commit_manifest(
+        assigned.select(id_col, vec_col, "cluster_id"), base_path, snapshot,
+        listed=listed, parts={"_centroids": grid}, partition_by="cluster_id",
+        keep_versions=keep_versions,
+    )[0]
+
+
 def write_ivf_index_versioned(corpus: DataFrame, centroids: DataFrame,
                               base_path: str, *, id_col: str = "vec_id",
                               vec_col: str = "embedding",
                               keep_versions: int = 2) -> int:
     """Materialize the IVF index AT REST: assign every vector to its cell
     and write the corpus parquet-partitioned BY ``cluster_id``, published
-    as a committed version under ``base_path`` (CAS commit marker,
-    crash-safe, old version retained for in-flight readers — the
-    operators/versioned.py contract). Data lands in a writer-private
-    ``batches/b=N-uuid`` cell-partitioned dir OUTSIDE the version dirs; the
-    version commits a MANIFEST listing it plus the centroid grid
-    (``_centroids`` subdir) — version dirs never own data, so version GC can
-    never strand a manifest (data dirs are reclaimed separately by
-    :func:`gc_ivf_batches` once no retained manifest lists them). An index
-    whose grid travels with it can always be probed, appended to, and
-    health-checked without a side channel."""
-    assigned = assign_clusters(corpus, centroids, id_col, vec_col)
-    return _commit_ivf_version(
-        assigned.select(id_col, vec_col, "cluster_id"),
-        centroids.select(
-            F.col(id_col).alias("cluster_id"), F.col(vec_col).alias("cv")
-        ),
-        base_path,
-        keep_versions=keep_versions,
+    as a committed version of a manifest sink under ``base_path``
+    (operators/versioned.py::commit_manifest — crash-safe, old version
+    retained for in-flight readers) whose manifest lists that one data
+    dir and whose ``_centroids`` part is the grid. An index whose grid
+    travels with it can always be probed, appended to, and health-checked
+    without a side channel. Returns the committed version."""
+    return _write_cells(
+        corpus, centroids, base_path,
+        current_version(corpus.sparkSession, base_path), [],
+        id_col=id_col, vec_col=vec_col, keep_versions=keep_versions,
     )
-
-
-def _commit_ivf_version(assigned: DataFrame, cent_kv: DataFrame,
-                        base_path: str, *, keep_versions: int) -> int:
-    """Shared CAS commit for full writes and rebalances: one new
-    partitioned data dir under ``batches/`` + a single-entry manifest +
-    the (cluster_id, cv) grid, published atomically."""
-    import json
-
-    from .versioned import (
-        ConcurrentWriteError,
-        _batch_dir,
-        _fs,
-        _gc_versions,
-        _publish_version,
-        _staging_path,
-        current_version,
-    )
-
-    spark = assigned.sparkSession
-    new_v = (current_version(spark, base_path) or 0) + 1
-    bdir = _batch_dir(base_path, new_v)
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(bdir)
-    )
-    staging = _staging_path(base_path)
-    cent_kv.coalesce(1).write.mode("overwrite")         .parquet(f"{staging}/_centroids")
-    jvm, _, fs = _fs(spark, base_path)
-    manifest = json.dumps({"batches": [bdir]}).encode("utf-8")
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{staging}/manifest.json"), True
-    )
-    try:
-        out.write(manifest)
-    finally:
-        out.close()
-    try:
-        _publish_version(spark, base_path, new_v, staging)
-    except ConcurrentWriteError:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(bdir), True)
-        raise
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return new_v
 
 
 def read_ivf_centroids(spark, base_path: str, *, id_col: str = "vec_id",
                        vec_col: str = "embedding") -> DataFrame:
     """The committed index's own centroid grid, shaped like every other
     centroid relation ((id, vector) — assign/probe rename internally)."""
-    from .versioned import current_version, version_path
-
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed IVF index under {base_path}")
+    v = _index_version(spark, base_path)
     cent = spark.read.parquet(version_path(base_path, v) + "/_centroids")
     return cent.select(
         F.col("cluster_id").alias(id_col), F.col("cv").alias(vec_col)
@@ -642,6 +625,29 @@ def ivf_cell_report(spark, path, *, target_cell_size: int | None = None,
     )
 
 
+def train_ivf_grid(corpus: DataFrame, k: int, *, n_iter: int,
+                   id_col: str = "vec_id",
+                   vec_col: str = "embedding") -> DataFrame:
+    """k-cell centroid grid for an IVF index: the k lowest-id vectors
+    (deterministic, content-stable; TakeOrdered of k rows) seed
+    ``n_iter`` Lloyd iterations (operators/clustering.py — decimal-exact,
+    bounded driver state of k·dim). Returns the centroids as
+    ``(id_col, vec_col)``."""
+    from .clustering import kmeans_lloyd
+
+    init = corpus.orderBy(id_col).limit(k).select(
+        (F.row_number().over(Window.orderBy(id_col)) - 1).alias("cluster_id"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
+    )
+    _, cent = kmeans_lloyd(
+        corpus.sparkSession, corpus, init, n_iter=n_iter, id_col=id_col,
+        vec_col=vec_col, return_centroids=True,
+    )
+    return cent.select(
+        F.col("cluster_id").alias(id_col), F.col("cv").alias(vec_col)
+    )
+
+
 def rebalance_ivf_index(spark, base_path: str, *, target_cell_size: int,
                         n_iter: int = 3, keep_versions: int = 2,
                         id_col: str = "vec_id",
@@ -649,45 +655,31 @@ def rebalance_ivf_index(spark, base_path: str, *, target_cell_size: int,
     """Retrain the grid to the design cell size and rewrite the index as
     a NEW committed version (readers on the old version are undisturbed;
     the content — the vector set — is unchanged, only the cell layout
-    moves, so a full probe returns identical neighbors pre/post).
+    moves, so a full probe returns identical neighbors pre/post). The
+    rewrite commits the version after the one it read, so an append that
+    lands while the grid trains makes the rebalance raise
+    ConcurrentWriteError instead of dropping the appended vectors.
 
     k is re-derived from the data: ``ceil(n_vectors / target_cell_size)``
     — the k ∝ N rule applied at maintenance time instead of frozen at
-    first build. Init centroids are the k lowest-id vectors
-    (deterministic, content-stable; TakeOrdered of k rows), refined with
-    ``n_iter`` Lloyd iterations (operators/clustering.py — decimal-exact,
-    bounded driver state of k·dim). Returns ``{"version", "k",
-    "n_vectors"}``."""
+    first build — and the grid comes from :func:`train_ivf_grid`.
+    Returns ``{"version", "k", "n_vectors"}``."""
     import math
 
-    from .clustering import kmeans_lloyd
-
+    snapshot = _index_version(spark, base_path)
     corpus = _read_index(
-        spark, current_ivf_index_dirs(spark, base_path)
+        spark, read_manifest(spark, base_path, snapshot)
     ).select(id_col, vec_col)
     n = corpus.count()
     if n == 0:
         raise ValueError(f"IVF index under {base_path} is empty")
     k = max(1, math.ceil(n / target_cell_size))
-    init = (
-        corpus.orderBy(id_col).limit(k)
-        .select(
-            (F.row_number().over(
-                Window.orderBy(id_col)
-            ) - 1).alias("cluster_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
+    centroids = train_ivf_grid(
+        corpus, k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
     )
-    _, cent_df = kmeans_lloyd(
-        spark, corpus, init, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-        return_centroids=True,
-    )
-    centroids = cent_df.select(
-        F.col("cluster_id").alias(id_col), F.col("cv").alias(vec_col)
-    )
-    v = write_ivf_index_versioned(
-        corpus, centroids, base_path, id_col=id_col, vec_col=vec_col,
-        keep_versions=keep_versions,
+    v = _write_cells(
+        corpus, centroids, base_path, snapshot, [], id_col=id_col,
+        vec_col=vec_col, keep_versions=keep_versions,
     )
     return {"version": v, "k": k, "n_vectors": n}
 
@@ -698,12 +690,7 @@ def current_ivf_index_dirs(spark, base_path: str) -> list[str]:
     rebalance; one per append since). Every dir is a
     cluster_id-partitioned parquet layout; feed the list to
     :func:`ivf_cell_report`."""
-    from .versioned import _read_manifest, current_version
-
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed IVF index under {base_path}")
-    return _read_manifest(spark, base_path, v)
+    return read_manifest(spark, base_path, _index_version(spark, base_path))
 
 
 def _read_index(spark, path) -> DataFrame:
@@ -723,133 +710,28 @@ def append_ivf_index_versioned(batch: DataFrame, base_path: str, *,
                                vec_col: str = "embedding",
                                keep_versions: int = 2) -> int:
     """O(delta) append to a versioned IVF index: assign the batch under
-    the index's OWN committed centroid grid, land it in a writer-private
-    ``batches/b=N-uuid`` dir (cluster_id-partitioned like every index
-    dir), and commit a new version whose MANIFEST lists the previous
-    dirs plus the new one — the table-format snapshot+added-files idea
-    (same protocol as versioned.append_versioned), applied to the index
-    layout. Write cost is the batch, never the index; readers on the
-    old version are undisturbed; a racing append loses cleanly
-    (ConcurrentWriteError, its batch dir reclaimed).
+    the grid of the version it reads, land it in a writer-private
+    cluster_id-partitioned batch dir, and commit the next version whose
+    manifest lists the previous dirs plus the new one (the same manifest
+    commit as versioned.append_versioned). Write cost is the batch, never
+    the index; readers on the old version are undisturbed; a racing
+    writer makes it lose cleanly (ConcurrentWriteError, its batch dir
+    reclaimed). An empty batch commits nothing. Returns the current
+    version after the call.
 
     Appends keep the grid FIXED, so cell sizes drift as the corpus
     grows — that is exactly what :func:`ivf_cell_report` watches and
     :func:`rebalance_ivf_index` repairs (the rebalance compacts the
-    manifest back to one ``cells`` dir; :func:`gc_ivf_batches` then
-    reclaims batch dirs no retained manifest lists)."""
-    import json
-
-    from .versioned import (
-        ConcurrentWriteError,
-        _batch_dir,
-        _fs,
-        _gc_versions,
-        _publish_version,
-        _staging_path,
-        current_version,
-        version_path,
-    )
-
+    manifest back to one dir; versioned.gc_batches then reclaims batch
+    dirs no retained manifest lists)."""
     spark = batch.sparkSession
-    cur = current_version(spark, base_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no committed IVF index under {base_path}; write the initial "
-            "index with write_ivf_index_versioned first (appends assign "
-            "under its committed centroids)"
-        )
-    cent = read_ivf_centroids(spark, base_path, id_col=id_col,
+    snapshot = _index_version(spark, base_path)
+    # the grid is read at or after the snapshot: a newer grid means a
+    # newer commit owns slot snapshot + 1, and this append then loses
+    grid = read_ivf_centroids(spark, base_path, id_col=id_col,
                               vec_col=vec_col)
-    dirs = current_ivf_index_dirs(spark, base_path)
-    assigned = assign_clusters(
-        batch.select(id_col, vec_col), cent, id_col, vec_col
+    return _write_cells(
+        batch, grid, base_path, snapshot,
+        read_manifest(spark, base_path, snapshot),
+        id_col=id_col, vec_col=vec_col, keep_versions=keep_versions,
     )
-    new_v = cur + 1
-    bdir = _batch_dir(base_path, new_v)
-    (
-        assigned.select(id_col, vec_col, "cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(bdir)
-    )
-    jvm, _, fs = _fs(spark, base_path)
-    staging = _staging_path(base_path)
-    # the centroid grid travels with every version (copy, not reference:
-    # the old version dir is GC-fodder; data dirs are not, but the grid
-    # is k rows — copying is cheaper than special-casing)
-    spark.read.parquet(version_path(base_path, cur) + "/_centroids") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{staging}/_centroids")
-    manifest = json.dumps({"batches": dirs + [bdir]}).encode("utf-8")
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{staging}/manifest.json"), True
-    )
-    try:
-        out.write(manifest)
-    finally:
-        out.close()
-    try:
-        _publish_version(spark, base_path, new_v, staging)
-    except ConcurrentWriteError:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(bdir), True)
-        raise
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return new_v
-
-
-def gc_ivf_batches(spark, base_path: str, *,
-                   max_age_ms: int | None = None) -> list[str]:
-    """Reclaim batch dirs no RETAINED committed manifest lists (orphans
-    from version GC after a rebalance compaction, or from crashed
-    writers). Age-guarded like staging GC: a dir younger than the
-    horizon may belong to a live appender mid-commit and is never
-    touched (pass ``max_age_ms=0`` only in tests). Returns deleted
-    paths."""
-    from .versioned import (
-        _STAGING_MAX_AGE_MS,
-        _fs,
-        _read_manifest,
-        list_versions,
-    )
-
-    horizon = _STAGING_MAX_AGE_MS if max_age_ms is None else max_age_ms
-    jvm, _, fs = _fs(spark, base_path)
-    # Manifests store the caller's verbatim path strings (possibly
-    # relative, possibly scheme-qualified: hdfs://, s3a://); listStatus
-    # returns fully-qualified Paths. Compare fully-qualified URIs on
-    # BOTH sides — a raw-string mismatch here would GC live data dirs.
-    # URI.normalize() resolves the '..' segments a relative base path
-    # leaves behind (Hadoop Path keeps them lexically); rebuilding from
-    # (scheme, authority, path) collapses the file:/x vs file:///x
-    # authority-presence split so equal locations compare equal.
-    def _qualify(path_str: str) -> str:
-        u = fs.makeQualified(
-            jvm.org.apache.hadoop.fs.Path(path_str)
-        ).toUri().normalize()
-        auth = u.getAuthority() or ""
-        return f"{u.getScheme()}://{auth}{u.getPath()}"
-
-    referenced: set[str] = set()
-    for v, committed in list_versions(spark, base_path):
-        if not committed:
-            continue
-        referenced.update(
-            _qualify(d) for d in _read_manifest(spark, base_path, v)
-        )
-    broot = jvm.org.apache.hadoop.fs.Path(
-        f"{base_path.rstrip('/')}/batches"
-    )
-    if not fs.exists(broot):
-        return []
-    deleted = []
-    now = jvm.java.lang.System.currentTimeMillis()
-    for st in fs.listStatus(broot):
-        p = st.getPath()
-        full = _qualify(p.toString())
-        if full in referenced:
-            continue
-        if now - st.getModificationTime() <= horizon:
-            continue
-        fs.delete(p, True)
-        deleted.append(full)
-    return deleted

@@ -6,7 +6,7 @@ table before or after the transaction, never mid-replace). A parquet
 directory rewritten in place does not: a crash between the delete and the
 write can lose the state, and a reader racing the swap can observe a
 partial listing. At 100 TB with always-on readers that window is real, so
-every merge and aggregate/profile fold in the package goes
+every merge, append, state fold and IVF index write in the package goes
 through this module (the daily ETL's own append and dimension overwrite
 stay plain parquet: operators/incremental.py).
 
@@ -17,41 +17,45 @@ sequence of immutable version directories plus a commit marker:
     <base>/v=000000002/  part-*.parquet  _COMMITTED
     <base>/v=000000003/  part-*.parquet              <- crashed, unreadable
 
-- A WRITER never mutates a committed version: it writes the full new state
-  into the next ``v=N`` directory, then atomically creates the empty
-  ``_COMMITTED`` marker (single-file create — the commit point).
+- A WRITER never mutates a committed version. A version holds either the
+  full state (root files) or named parts (``state``/``applied`` of a fold,
+  ``_centroids`` of an IVF index) plus, for manifest sinks, a
+  ``manifest.json`` listing immutable ``batches/`` dirs that live outside
+  the version dirs.
 - A READER lists the version dirs ONCE, picks the highest committed one,
   and reads only immutable files from it. Old-or-new, never in-between.
-- A crash before the marker leaves an uncommitted dir that readers skip
-  and the next writer reclaims (its ``mode("overwrite")`` clears it).
 - Old versions are garbage-collected after ``keep_versions`` newer commits
   land; the default keeps the previous version alive so in-flight readers
   that resolved it finish safely (size the retention to reader runtime,
   exactly like table-format VACUUM horizons).
 
-Single-writer-at-a-time per sink, like the reference's one daily ETL; for
-sustained concurrent writers use a real table format (this layout is
-deliberately the same shape, so migration is mechanical). The commit is
-still CAS-guarded (r6): every writer materializes into its own unique
-``_staging/tx-*`` directory and publishes with an atomic directory RENAME
-into the ``v=N`` slot followed by a create-exclusive ``_COMMITTED`` marker.
-Exactly one of two racing writers wins the slot; the loser gets a clean
-:class:`ConcurrentWriteError` and its staging debris is deleted — never a
-silent interleave (the pre-r6 hazard: two writers ``mode("overwrite")``-ing
-the same shared ``v=N`` dir). Crashed-writer debris (a marker-less ``v=N``
-from a crash inside the rename→marker window, or an abandoned staging dir)
-is reclaimed automatically by the next committer. The writer reads the old
-version lazily while writing the new one — no localCheckpoint
-materialization is needed because nothing overwrites what is being read.
+**The snapshot rule.** Every writer resolves the committed version it
+reads its inputs from (its snapshot; None for a fresh sink) and commits
+exactly slot ``snapshot + 1`` through :func:`_commit`, the one commit
+path: stage into a private ``_staging/tx-*`` dir, publish with an atomic
+no-clobber directory RENAME into the slot plus a create-exclusive
+``_COMMITTED`` marker, then GC. Any commit that landed since the read owns
+that slot, so the writer loses with :class:`ConcurrentWriteError` — its
+staging and its batch dir are deleted and the store keeps the winner's
+commit intact; a writer never overwrites an update it did not read.
+Crashed-writer debris (a marker-less ``v=N`` older than the staging
+horizon, an abandoned staging dir) is reclaimed by the next committer.
+Single-writer-at-a-time per sink is still the design point, like the
+reference's one daily ETL; for sustained concurrent writers use a real
+table format (this layout is deliberately the same shape, so migration is
+mechanical). The writer reads the old version lazily while writing the
+new one — nothing overwrites what is being read.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .incremental import select_new
@@ -59,6 +63,9 @@ from .incremental import select_new
 _COMMITTED = "_COMMITTED"
 _VERSION_RE = re.compile(r"^v=(\d{9})$")
 _STAGING_SUB = "_staging"
+_MANIFEST = "manifest.json"
+_STATE_SUB = "state"
+_APPLIED_SUB = "applied"
 # Abandoned-staging / crashed-debris reclaim horizon. MUST exceed the
 # longest plausible single write into a staging dir: a Spark parquet job
 # leaves the tx-* dir's mtime at job start (task files land under
@@ -192,6 +199,45 @@ def _gc_versions(spark: SparkSession, base_path: str, new_v: int,
                 fs.delete(st.getPath(), True)
 
 
+def _commit(spark: SparkSession, base_path: str, snapshot: int | None,
+            parts: dict[str, DataFrame], *, keep_versions: int,
+            batch_dir: str | None = None, listed: list[str] = ()) -> int:
+    """THE commit path of every versioned sink: publish slot
+    ``snapshot + 1``, where ``snapshot`` is the committed version the
+    caller read its inputs from (None for a fresh sink). Each of
+    ``parts`` is staged under its name (``""`` = the version root); with
+    ``batch_dir`` — the caller's already-written batch — the version
+    also commits a manifest listing ``listed`` plus that dir. A commit
+    that landed since the caller's read owns the slot, so the caller
+    loses with :class:`ConcurrentWriteError` (staging and ``batch_dir``
+    deleted) instead of overwriting an update it never read. Older
+    versions past ``keep_versions`` and aged staging are GC'd after the
+    commit. Returns the committed version."""
+    new_v = (snapshot or 0) + 1
+    staging = _staging_path(base_path)
+    for name, df in parts.items():
+        df.write.mode("overwrite").parquet(f"{staging}/{name}".rstrip("/"))
+    jvm, _, fs = _fs(spark, base_path)
+    if batch_dir is not None:
+        out = fs.create(
+            jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}"), True
+        )
+        try:
+            out.write(json.dumps({"batches": [*listed, batch_dir]})
+                      .encode("utf-8"))
+        finally:
+            out.close()
+    try:
+        _publish_version(spark, base_path, new_v, staging)
+    except ConcurrentWriteError:
+        # the manifest never committed, so the batch is unlisted debris
+        if batch_dir is not None:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(batch_dir), True)
+        raise
+    _gc_versions(spark, base_path, new_v, keep_versions)
+    return new_v
+
+
 def version_path(base_path: str, version: int) -> str:
     return f"{base_path.rstrip('/')}/v={version:09d}"
 
@@ -223,16 +269,80 @@ def current_version(spark: SparkSession, base_path: str) -> int | None:
     return max(committed) if committed else None
 
 
-def read_current(spark: SparkSession, base_path: str) -> DataFrame:
-    """Snapshot-consistent read: resolve the committed version once, then
-    scan only its immutable files. Raises on a sink with no commits."""
+def _committed(spark: SparkSession, base_path: str) -> int:
+    """:func:`current_version` for readers: raises on a sink with no
+    commits."""
     v = current_version(spark, base_path)
     if v is None:
         raise FileNotFoundError(f"no committed version under {base_path}")
+    return v
+
+
+def read_current(spark: SparkSession, base_path: str) -> DataFrame:
+    """Snapshot-consistent read: resolve the committed version once, then
+    scan only its immutable files. Raises on a sink with no commits."""
+    v = _committed(spark, base_path)
     return spark.read.parquet(version_path(base_path, v))
 
 
-def _resolve_version_pair(
+def read_state_part(spark: SparkSession, base_path: str,
+                    part: str) -> DataFrame:
+    """One named part of the current committed version: ``state`` (see
+    :func:`read_agg_state`), or the ``hist``/``topk`` parts
+    :func:`incremental_profile_versioned` keeps under ``hist_specs`` /
+    ``topk_specs``. Feed ``hist`` to ``profile.hist_from_state`` →
+    ``profile.histogram_drift`` for PSI with zero rescans, and ``topk``
+    (per-BATCH rows: merged bounds are not re-mergeable) to
+    ``profile.merge_topk_states`` → ``profile.topk_from_state``."""
+    v = _committed(spark, base_path)
+    path = f"{version_path(base_path, v)}/{part}"
+    _, hpath, fs = _fs(spark, path)
+    if not fs.exists(hpath):
+        raise FileNotFoundError(
+            f"version v={v} has no {part} state; pass {part}_specs= to "
+            "incremental_profile_versioned to start tracking it"
+        )
+    return spark.read.parquet(path)
+
+
+def read_agg_state(spark: SparkSession, base_path: str) -> DataFrame:
+    """Current committed fold state (see incremental_state_versioned and
+    incremental_profile_versioned). A profile state feeds
+    ``profile.stats_from_state`` for the column_stats relation, or
+    ``profile.profile_drift`` via that derivation — neither touches the
+    profiled data."""
+    return read_state_part(spark, base_path, _STATE_SUB)
+
+
+def read_manifest(spark: SparkSession, base_path: str,
+                  version: int) -> list[str]:
+    """The batch dirs committed ``version`` of a manifest sink lists."""
+    jvm, _, fs = _fs(spark, base_path)
+    mpath = jvm.org.apache.hadoop.fs.Path(
+        f"{version_path(base_path, version)}/{_MANIFEST}"
+    )
+    stream = fs.open(mpath)
+    try:
+        # py4j passes byte[] by value, so a Python-side read loop can't
+        # fill a buffer — let commons-io (on every Hadoop classpath) drain
+        # the stream JVM-side and hand back the bytes.
+        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    return json.loads(data.decode("utf-8"))["batches"]
+
+
+def read_appended(spark: SparkSession, base_path: str) -> DataFrame:
+    """Snapshot read of a versioned-APPEND sink: resolve the committed
+    manifest once, scan exactly the batch directories it lists. A batch
+    mid-write (or from a crashed append) is listed by no manifest and is
+    invisible — the append-side twin of read_current's guarantee."""
+    return spark.read.parquet(
+        *read_manifest(spark, base_path, _committed(spark, base_path))
+    )
+
+
+def resolve_version_pair(
     spark: SparkSession, base_path: str, versions: tuple[int, int] | None
 ) -> tuple[int, int]:
     """(prev, cur) committed versions to diff: the latest two by default,
@@ -283,7 +393,7 @@ def drift_between_versions(
     drift"."""
     from .profile import column_stats, profile_drift
 
-    v_prev, v_cur = _resolve_version_pair(spark, base_path, versions)
+    v_prev, v_cur = resolve_version_pair(spark, base_path, versions)
     prev = spark.read.parquet(version_path(base_path, v_prev))
     cur = spark.read.parquet(version_path(base_path, v_cur))
     report = profile_drift(
@@ -347,7 +457,7 @@ def schema_diff_between_versions(
     result means the schemas are identical. The companion
     :func:`drift_between_versions` runs the VALUE drift over the shared
     columns; this reports the columns it had to exclude."""
-    v_prev, v_cur = _resolve_version_pair(spark, base_path, versions)
+    v_prev, v_cur = resolve_version_pair(spark, base_path, versions)
     prev = spark.read.parquet(version_path(base_path, v_prev))
     cur = spark.read.parquet(version_path(base_path, v_cur))
     return schema_diff(spark, cur, prev).select(
@@ -377,7 +487,7 @@ def psi_between_versions(
     relation stamped with ``prev_version``/``cur_version``."""
     from .profile import histogram_drift, numeric_histogram
 
-    v_prev, v_cur = _resolve_version_pair(spark, base_path, versions)
+    v_prev, v_cur = resolve_version_pair(spark, base_path, versions)
     prev = spark.read.parquet(version_path(base_path, v_prev))
     cur = spark.read.parquet(version_path(base_path, v_cur))
     report = histogram_drift(
@@ -394,26 +504,16 @@ def psi_between_versions(
 
 
 def commit_version(df: DataFrame, base_path: str, keep_versions: int = 2) -> int:
-    """Write ``df`` as the next version and commit it. Returns the new
-    version number. ``keep_versions`` committed versions are retained
+    """Write ``df`` as the next version (a reader-safe full replace, the
+    dimension-overwrite shape, reference :198) and commit it. Returns the
+    new version number. ``keep_versions`` committed versions are retained
     (current included); older ones are deleted AFTER the new commit, so a
     reader that resolved version N-1 before this commit still reads it in
     full with the default retention. Raises :class:`ConcurrentWriteError`
     (and cleans its own debris) if a racing writer wins the slot."""
     spark = df.sparkSession
-    new_v = (current_version(spark, base_path) or 0) + 1
-    staging = _staging_path(base_path)
-    df.write.mode("overwrite").parquet(staging)
-    _publish_version(spark, base_path, new_v, staging)
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return new_v
-
-
-def overwrite_versioned(df: DataFrame, base_path: str,
-                        keep_versions: int = 2) -> int:
-    """Reader-safe full replace (the dimension-overwrite shape,
-    reference :198). Alias of commit_version with intent in the name."""
-    return commit_version(df, base_path, keep_versions)
+    return _commit(spark, base_path, current_version(spark, base_path),
+                   {"": df}, keep_versions=keep_versions)
 
 
 def merge_upsert_versioned(updates: DataFrame, base_path: str, key: str,
@@ -423,10 +523,12 @@ def merge_upsert_versioned(updates: DataFrame, base_path: str, key: str,
     INSERT`): matched keys take the incoming row, unmatched sink rows are
     kept, new keys are inserted, and duplicate update keys collapse to one
     arbitrary row (the reference's dedup policy, SURVEY.md §2.6 item 8).
-    The result is published as a new committed version — a concurrent
-    reader observes the pre- or post-merge state, never a partial
-    directory. No localCheckpoint: the old version stays immutable while
-    the new one is written, so the merge plan may read it lazily.
+    The result is published as the version after the one the merge read —
+    a concurrent reader observes the pre- or post-merge state, never a
+    partial directory, and a merge that lands in between makes this one
+    raise :class:`ConcurrentWriteError` rather than drop its rows. No
+    localCheckpoint: the old version stays immutable while the new one is
+    written, so the merge plan may read it lazily.
 
     The key match is select_new's NULL-safe anti-join: a NULL-key update
     replaces the stored NULL-key row instead of adding one more per merge.
@@ -437,76 +539,53 @@ def merge_upsert_versioned(updates: DataFrame, base_path: str, key: str,
     anti-join then takes the shuffle-hash/sort-merge path on the key —
     passed through as select_new's ``broadcast_existing``."""
     spark = updates.sparkSession
-    updates = updates.dropDuplicates([key])
-    if current_version(spark, base_path) is None:
-        return commit_version(updates, base_path, keep_versions)
-    existing = read_current(spark, base_path)
-    kept = select_new(existing, updates, key, broadcast_existing=broadcast_updates)
-    merged = kept.unionByName(updates)
-    return commit_version(merged, base_path, keep_versions)
+    merged = updates = updates.dropDuplicates([key])
+    snapshot = current_version(spark, base_path)
+    if snapshot is not None:
+        existing = spark.read.parquet(version_path(base_path, snapshot))
+        kept = select_new(existing, updates, key,
+                          broadcast_existing=broadcast_updates)
+        merged = kept.unionByName(updates)
+    return _commit(spark, base_path, snapshot, {"": merged},
+                   keep_versions=keep_versions)
 
 
 # ---------------------------------------------------------------------------
-# Versioned incremental-aggregate state: fold + applied-marker in ONE commit
+# Manifest sinks: immutable batch dirs listed by a committed manifest
 # ---------------------------------------------------------------------------
 
-_STATE_SUB = "state"
-_APPLIED_SUB = "applied"
 
-
-def read_agg_state(spark: SparkSession, base_path: str) -> DataFrame:
-    """Current committed fold state (see incremental_state_versioned)."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
-    return spark.read.parquet(f"{version_path(base_path, v)}/{_STATE_SUB}")
-
-
-# ---------------------------------------------------------------------------
-# Versioned APPEND: manifest-listed immutable batches, O(delta) write cost
-# ---------------------------------------------------------------------------
-
-_MANIFEST = "manifest.json"
-
-
-def _batch_dir(base_path: str, version: int) -> str:
-    # Unique per writer (r6 CAS): two racing appends targeting the same
-    # version slot must not interleave files in one batch dir. The manifest
-    # records full paths, so readers never parse the name; the uuid suffix
-    # only guarantees writer-privacy of the directory.
-    return (
-        f"{base_path.rstrip('/')}/batches/"
-        f"b={version:09d}-{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _read_manifest(spark: SparkSession, base_path: str, version: int) -> list[str]:
-    import json
-
-    jvm, _, fs = _fs(spark, base_path)
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        f"{version_path(base_path, version)}/{_MANIFEST}"
-    )
-    stream = fs.open(mpath)
-    try:
-        # py4j passes byte[] by value, so a Python-side read loop can't
-        # fill a buffer — let commons-io (on every Hadoop classpath) drain
-        # the stream JVM-side and hand back the bytes.
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))["batches"]
-
-
-def read_appended(spark: SparkSession, base_path: str) -> DataFrame:
-    """Snapshot read of a versioned-APPEND sink: resolve the committed
-    manifest once, scan exactly the batch directories it lists. A batch
-    mid-write (or from a crashed append) is listed by no manifest and is
-    invisible — the append-side twin of read_current's guarantee."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
-    return spark.read.parquet(*_read_manifest(spark, base_path, v))
+def commit_manifest(batch: DataFrame, base_path: str, snapshot: int | None,
+                    *, listed: list[str] = (),
+                    parts: dict[str, DataFrame] | None = None,
+                    partition_by: str | None = None,
+                    keep_versions: int = 2) -> tuple[int | None, int]:
+    """Land ``batch`` in a writer-private ``batches/b=N-uuid`` dir
+    (partitioned by ``partition_by`` if given) and commit the version
+    after ``snapshot`` whose manifest lists ``listed`` plus that dir, with
+    ``parts`` staged beside it — the table-format snapshot + added-files
+    commit at O(batch) write cost. The row count is an observation on the
+    batch write itself; a batch with no rows commits nothing and its dir
+    is deleted. Returns ``(version, rows)``: the committed version, or
+    ``snapshot`` when nothing was committed."""
+    spark = batch.sparkSession
+    # writer-private: racing writers never interleave files in one dir;
+    # the manifest records full paths, so readers never parse the name
+    bdir = (f"{base_path.rstrip('/')}/batches/"
+            f"b={(snapshot or 0) + 1:09d}-{uuid.uuid4().hex[:8]}")
+    obs = Observation()
+    writer = batch.observe(obs, F.count(F.lit(1)).alias("n")).write
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.mode("overwrite").parquet(bdir)
+    n = obs.get["n"]
+    if n == 0:
+        jvm, _, fs = _fs(spark, base_path)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(bdir), True)
+        return snapshot, 0
+    v = _commit(spark, base_path, snapshot, parts or {},
+                keep_versions=keep_versions, batch_dir=bdir, listed=listed)
+    return v, n
 
 
 def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
@@ -515,97 +594,139 @@ def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
     rewrite the full state per commit; an incremental sink can't afford
     that, and a plain ``mode("append")`` exposes racing readers to a
     half-written batch's files. This does neither: the delta lands in an
-    immutable ``batches/b=N`` directory, and a new version commits a
-    MANIFEST = previous manifest + the new batch — atomic visibility at
-    O(delta) write cost, the same idea as a table format's snapshot +
-    added-files commit.
+    immutable batch directory, and a new version commits a MANIFEST =
+    previous manifest + the new batch (:func:`commit_manifest`).
 
     With ``key``, re-applies append_delta's idempotence protocol against
-    the CURRENT snapshot (anti-join at write time), so retries and
+    the snapshot it reads (anti-join at write time), so retries and
     replayed batches land exactly once. Returns rows actually appended
-    (0 ⇒ no new version committed). Raises :class:`ConcurrentWriteError`
-    (cleaning its own batch + staging debris) if a racing append wins the
-    slot — the loser's delta is NOT lost semantically: retry on the fresh
-    snapshot and the key-based anti-join lands it exactly once. Read
-    through :func:`read_appended`. GC removes expired version (manifest)
-    dirs only; batch dirs stay while any retained manifest lists them —
-    and since manifests only ever grow, every batch a live manifest lists
-    is listed by the current one too. A losing/crashed writer's orphan
-    batch dir is unlisted by every manifest, hence invisible forever."""
+    (0 ⇒ no new version committed, no batch dir left). Raises
+    :class:`ConcurrentWriteError` (cleaning its own batch + staging
+    debris) if a racing append wins the slot — the loser's delta is NOT
+    lost semantically: retry on the fresh snapshot and the key-based
+    anti-join lands it exactly once. Read through :func:`read_appended`.
+    GC removes expired version (manifest) dirs only; batch dirs stay while
+    any retained manifest lists them — and since manifests only ever
+    grow, every batch a live manifest lists is listed by the current one
+    too. A losing/crashed writer's orphan batch dir is unlisted by every
+    manifest, hence invisible forever (:func:`gc_batches` reclaims it)."""
     spark = delta.sparkSession
-    cur = current_version(spark, base_path)
-    old_batches: list[str] = [] if cur is None else _read_manifest(
-        spark, base_path, cur
-    )
-    if key is not None and old_batches:
-        delta = select_new(delta, read_appended(spark, base_path), key)
-    delta = delta.localCheckpoint()
-    n = delta.count()
-    if n == 0:
-        return 0
+    snapshot = current_version(spark, base_path)
+    listed = ([] if snapshot is None
+              else read_manifest(spark, base_path, snapshot))
+    if key is not None and listed:
+        delta = select_new(delta, spark.read.parquet(*listed), key)
+    return commit_manifest(delta, base_path, snapshot, listed=listed,
+                           keep_versions=keep_versions)[1]
 
-    new_v = (cur or 0) + 1
-    bdir = _batch_dir(base_path, new_v)  # writer-private (uuid suffix)
-    delta.write.mode("overwrite").parquet(bdir)
 
-    import json
-
+def gc_batches(spark: SparkSession, base_path: str, *,
+               max_age_ms: int | None = None) -> list[str]:
+    """Reclaim batch dirs no RETAINED committed manifest lists (orphans
+    from version GC after a rewrite such as an IVF rebalance, or from
+    crashed writers). Age-guarded like staging GC: a dir younger than the
+    horizon may belong to a live writer mid-commit and is never touched
+    (pass ``max_age_ms=0`` only in tests). Returns deleted paths."""
+    horizon = _STAGING_MAX_AGE_MS if max_age_ms is None else max_age_ms
     jvm, _, fs = _fs(spark, base_path)
-    staging = _staging_path(base_path)
-    manifest = json.dumps({"batches": old_batches + [bdir]}).encode("utf-8")
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}"), True
-    )
-    try:
-        out.write(manifest)
-    finally:
-        out.close()
-    try:
-        _publish_version(spark, base_path, new_v, staging)
-    except ConcurrentWriteError:
-        # the manifest never committed, so the batch is unlisted debris —
-        # reclaim it before surfacing the clean loss
-        fs.delete(jvm.org.apache.hadoop.fs.Path(bdir), True)
-        raise
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return n
+    # Manifests store the caller's verbatim path strings (possibly
+    # relative, possibly scheme-qualified: hdfs://, s3a://); listStatus
+    # returns fully-qualified Paths. Compare fully-qualified URIs on
+    # BOTH sides — a raw-string mismatch here would GC live data dirs.
+    # URI.normalize() resolves the '..' segments a relative base path
+    # leaves behind (Hadoop Path keeps them lexically); rebuilding from
+    # (scheme, authority, path) collapses the file:/x vs file:///x
+    # authority-presence split so equal locations compare equal.
+    def _qualify(path_str: str) -> str:
+        u = fs.makeQualified(
+            jvm.org.apache.hadoop.fs.Path(path_str)
+        ).toUri().normalize()
+        auth = u.getAuthority() or ""
+        return f"{u.getScheme()}://{auth}{u.getPath()}"
+
+    referenced: set[str] = set()
+    for v, committed in list_versions(spark, base_path):
+        if committed:
+            referenced.update(
+                _qualify(d) for d in read_manifest(spark, base_path, v)
+            )
+    broot = jvm.org.apache.hadoop.fs.Path(f"{base_path.rstrip('/')}/batches")
+    if not fs.exists(broot):
+        return []
+    deleted = []
+    now = jvm.java.lang.System.currentTimeMillis()
+    for st in fs.listStatus(broot):
+        full = _qualify(st.getPath().toString())
+        if full in referenced or now - st.getModificationTime() <= horizon:
+            continue
+        fs.delete(st.getPath(), True)
+        deleted.append(full)
+    return deleted
 
 
 # ---------------------------------------------------------------------------
-# Versioned incremental PROFILING: fold per-delta profile states exactly once
+# Exactly-once state folds: state + applied-batch ids in ONE commit
 # ---------------------------------------------------------------------------
 
+_HIST_SUB = "hist"
+_TOPK_SUB = "topk"
 
-def read_profile_state(spark: SparkSession, base_path: str) -> DataFrame:
-    """Current committed profile state (see incremental_profile_versioned).
-    Feed to ``profile.stats_from_state`` for the column_stats relation, or
-    to ``profile.profile_drift`` via that derivation for drift checks —
-    neither touches the profiled data."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
+
+def _fold_once(delta: DataFrame, base_path: str, batch_id: str, fold,
+               keep_versions: int) -> DataFrame:
+    """The exactly-once fold: one applied-batch check against the
+    snapshot, then ONE commit of ``fold(old_parts, delta)`` (a dict of
+    parts that includes ``state``) plus the grown applied-batch-id set.
+    ``old_parts`` maps each part name of the snapshot (``state``,
+    ``applied``, ...) to its lazy read; empty for a fresh sink. Returns
+    the committed state (the snapshot's for a replayed batch)."""
+    spark = delta.sparkSession
+    snapshot = current_version(spark, base_path)
+    old: dict[str, DataFrame] = {}
+    if snapshot is not None:
+        vdir = version_path(base_path, snapshot)
+        _, hpath, fs = _fs(spark, vdir)
+        old = {
+            st.getPath().getName(): spark.read.parquet(st.getPath().toString())
+            for st in fs.listStatus(hpath) if st.isDirectory()
+        }
+    applied = spark.createDataFrame([(batch_id,)], "batch_id string")
+    if _APPLIED_SUB in old:
+        seen = old[_APPLIED_SUB].filter(F.col("batch_id") == batch_id)
+        if seen.limit(1).count():
+            return old[_STATE_SUB]
+        applied = old[_APPLIED_SUB].unionByName(applied)
+    parts = {**fold(old, delta), _APPLIED_SUB: applied}
+    v = _commit(spark, base_path, snapshot, parts, keep_versions=keep_versions)
     return spark.read.parquet(f"{version_path(base_path, v)}/{_STATE_SUB}")
 
 
-_HIST_SUB = "hist"
-
-
-def read_hist_state(spark: SparkSession, base_path: str) -> DataFrame:
-    """Current committed histogram state (the ``hist_specs`` side of
-    :func:`incremental_profile_versioned`). Feed one column's slice to
-    ``profile.hist_from_state`` → ``profile.histogram_drift`` for PSI
-    between the committed shape and anything else, zero rescans."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
-    path = f"{version_path(base_path, v)}/{_HIST_SUB}"
-    _, hpath, fs = _fs(spark, path)
-    if not fs.exists(hpath):
-        raise FileNotFoundError(
-            f"version v={v} has no histogram state; pass hist_specs= to "
-            "incremental_profile_versioned to start tracking shapes"
-        )
-    return spark.read.parquet(path)
+def incremental_state_versioned(
+    delta: DataFrame,
+    base_path: str,
+    batch_id: str,
+    fold_fn,
+    keep_versions: int = 2,
+) -> DataFrame:
+    """Generic exactly-once state fold (r9): the new state AND the full
+    applied-batch-id set are written into the same ``v=N`` directory and
+    committed by the single atomic ``_COMMITTED`` create, so state and
+    markers can never disagree: a crash anywhere pre-marker leaves the
+    old version current and the retry folds exactly once. Writing the
+    marker separately, before or after the state, would either drop or
+    double-count the batch on a crash between the two writes. A replayed
+    batch id folds nothing and returns the current state. The FOLD
+    ITSELF is supplied by the caller: ``fold_fn(old_state_or_None,
+    delta) -> new_state DataFrame``. This is what the behavioral state folds
+    (operators/funnel.py::fold_funnel_state / fold_retention_state) and
+    any future algebraic state ride instead of re-implementing the
+    commit dance. ``fold_fn`` must be deterministic and full-state (its
+    return REPLACES the state); read back via :func:`read_agg_state`."""
+    return _fold_once(
+        delta, base_path, batch_id,
+        lambda old, d: {_STATE_SUB: fold_fn(old.get(_STATE_SUB), d)},
+        keep_versions,
+    )
 
 
 def incremental_profile_versioned(
@@ -629,7 +750,7 @@ def incremental_profile_versioned(
     HLL-estimated ``n_distinct``), so the nightly 100 TB profile job
     becomes a per-batch delta profile plus a k-row fold.
 
-    Exactly-once by the same construction as
+    Exactly-once by the same machinery as
     :func:`incremental_state_versioned`: the folded state AND the
     applied-batch-id set commit under ONE atomic ``_COMMITTED`` marker, so a
     crash anywhere pre-marker leaves the old state current and the retry
@@ -643,21 +764,20 @@ def incremental_profile_versioned(
     ``hist_specs`` additionally maintains the SHAPE half of the baseline:
     per-spec bucket counts (``profile.histogram_state`` — one more scan
     of the delta, all specs in one pass) folded by exact integer sums
-    under the same atomic commit, read back via :func:`read_hist_state`
-    → ``profile.hist_from_state`` → ``profile.histogram_drift`` for PSI
-    with zero rescans. Grids are part of the fold key, so a changed spec
-    starts separate rows (and histogram_drift raises at compare time)
-    rather than silently mixing. Once tracking starts, pass the same
-    ``hist_specs`` on every fold — a fold WITHOUT them drops the shape
-    state from the new version (the commit is all-or-nothing per
-    version), and that fold raises to prevent the silent drop.
+    as the ``hist`` part of the same commit, read back via
+    :func:`read_state_part` → ``profile.hist_from_state`` →
+    ``profile.histogram_drift`` for PSI with zero rescans. Grids are part
+    of the fold key, so a changed spec starts separate rows (and
+    histogram_drift raises at compare time) rather than silently mixing.
+    Once tracking starts, pass the same ``hist_specs`` on every fold — a
+    fold WITHOUT them would drop the shape state from the new version
+    (the commit is all-or-nothing per version), so that fold raises.
 
     ``topk_specs`` (``[(col, k_track), ...]``) likewise maintains the
-    value-skew half: per-BATCH exact top-k_track rows
+    value-skew half as the ``topk`` part: per-BATCH exact top-k_track rows
     (``profile.topk_state`` — one more grouped scan of the delta per
     spec'd column) accumulate under the same commit; they are stored
-    per batch (not merged) because merged bounds don't re-merge — read
-    via :func:`read_topk_state` → ``profile.merge_topk_states``. The
+    per batch (not merged) because merged bounds don't re-merge. The
     same drop-protection raise applies."""
     from .profile import (
         histogram_state,
@@ -667,69 +787,34 @@ def incremental_profile_versioned(
         topk_state,
     )
 
-    spark = delta.sparkSession
-    cur = current_version(spark, base_path)
-    old_state = old_applied = old_hist = old_topk = None
-    if cur is not None:
-        vdir = version_path(base_path, cur)
-        old_state = spark.read.parquet(f"{vdir}/{_STATE_SUB}")
-        old_applied = spark.read.parquet(f"{vdir}/{_APPLIED_SUB}")
-        for sub, specs, what, arg in (
-            (_HIST_SUB, hist_specs, "histogram", "hist_specs"),
-            (_TOPK_SUB, topk_specs, "heavy-hitters", "topk_specs"),
-        ):
-            _, hpath, fs = _fs(spark, f"{vdir}/{sub}")
-            if fs.exists(hpath):
-                if specs is None:
-                    raise ValueError(
-                        f"{base_path} tracks {what} state; folding without "
-                        f"{arg} would silently drop it — pass the same "
-                        f"{arg}, or rebuild the state dir"
-                    )
-                if sub == _HIST_SUB:
-                    old_hist = spark.read.parquet(f"{vdir}/{sub}")
-                else:
-                    old_topk = spark.read.parquet(f"{vdir}/{sub}")
-        if (
-            old_applied.filter(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        ):
-            return old_state
+    def fold(old: dict[str, DataFrame], delta: DataFrame) -> dict:
+        for sub, specs, what in ((_HIST_SUB, hist_specs, "histogram"),
+                                 (_TOPK_SUB, topk_specs, "heavy-hitters")):
+            if sub in old and specs is None:
+                raise ValueError(
+                    f"{base_path} tracks {what} state; folding without "
+                    f"{sub}_specs would silently drop it — pass the same "
+                    f"{sub}_specs, or rebuild the state dir"
+                )
+        parts = {_STATE_SUB: profile_state(
+            delta, cols, track_distinct=track_distinct, lgk=lgk)}
+        if hist_specs is not None:
+            parts[_HIST_SUB] = histogram_state(delta, hist_specs)
+        if topk_specs is not None:
+            parts[_TOPK_SUB] = functools.reduce(DataFrame.unionByName, [
+                topk_state(delta, c, k_track=kt)
+                .withColumn("batch_id", F.lit(batch_id))
+                for c, kt in topk_specs
+            ])
+        merge = {
+            _STATE_SUB: merge_profile_states,
+            _HIST_SUB: merge_histogram_states,
+            _TOPK_SUB: DataFrame.unionByName,
+        }
+        return {name: merge[name](old[name], df) if name in old else df
+                for name, df in parts.items()}
 
-    part = profile_state(
-        delta, cols, track_distinct=track_distinct, lgk=lgk
-    )
-    if old_state is not None:
-        part = merge_profile_states(old_state, part)
-    part_hist = None
-    if hist_specs is not None:
-        part_hist = histogram_state(delta, hist_specs)
-        if old_hist is not None:
-            part_hist = merge_histogram_states(old_hist, part_hist)
-    part_topk = None
-    if topk_specs is not None:
-        for c, kt in topk_specs:
-            one = topk_state(delta, c, k_track=kt).withColumn(
-                "batch_id", F.lit(batch_id)
-            )
-            part_topk = one if part_topk is None else part_topk.unionByName(one)
-        if old_topk is not None:
-            part_topk = old_topk.unionByName(part_topk)
-    new_applied = spark.createDataFrame([(batch_id,)], "batch_id string")
-    if old_applied is not None:
-        new_applied = old_applied.unionByName(new_applied)
-
-    new_v = (cur or 0) + 1
-    staging = _staging_path(base_path)
-    part.write.mode("overwrite").parquet(f"{staging}/{_STATE_SUB}")
-    if part_hist is not None:
-        part_hist.write.mode("overwrite").parquet(f"{staging}/{_HIST_SUB}")
-    if part_topk is not None:
-        part_topk.write.mode("overwrite").parquet(f"{staging}/{_TOPK_SUB}")
-    new_applied.write.mode("overwrite").parquet(f"{staging}/{_APPLIED_SUB}")
-    _publish_version(spark, base_path, new_v, staging)
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return read_profile_state(spark, base_path)
+    return _fold_once(delta, base_path, batch_id, fold, keep_versions)
 
 
 def drift_vs_profile_state(
@@ -774,7 +859,7 @@ def drift_vs_profile_state(
     )
 
     committed = stats_from_state(
-        read_profile_state(delta.sparkSession, base_path)
+        read_agg_state(delta.sparkSession, base_path)
     )
     batch = stats_from_state(
         # single-state "merge" so the estimate comes from the same
@@ -810,7 +895,7 @@ def psi_vs_hist_state(
     twin of :func:`drift_vs_profile_state`'s moment gate."""
     from .profile import hist_from_state, histogram_drift, numeric_histogram
 
-    state = read_hist_state(delta.sparkSession, base_path)
+    state = read_state_part(delta.sparkSession, base_path, _HIST_SUB)
     grid = (
         state.filter(F.col("column_name") == col)
         .select("grid_lo", "grid_hi", "grid_bins")
@@ -833,73 +918,3 @@ def psi_vs_hist_state(
         psi_threshold=psi_threshold,
         epsilon=epsilon,
     )
-
-
-_TOPK_SUB = "topk"
-
-
-def read_topk_state(spark: SparkSession, base_path: str) -> DataFrame:
-    """Current committed per-batch heavy-hitters state rows (the
-    ``topk_specs`` side of :func:`incremental_profile_versioned`). Feed to
-    ``profile.merge_topk_states`` → ``profile.topk_from_state`` for the
-    skew readout; the per-BATCH rows are what is stored because merged
-    bounds are not re-mergeable (profile.merge_topk_states docstring)."""
-    v = current_version(spark, base_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {base_path}")
-    path = f"{version_path(base_path, v)}/{_TOPK_SUB}"
-    _, hpath, fs = _fs(spark, path)
-    if not fs.exists(hpath):
-        raise FileNotFoundError(
-            f"version v={v} has no heavy-hitters state; pass topk_specs= "
-            "to incremental_profile_versioned to start tracking skew"
-        )
-    return spark.read.parquet(path)
-
-
-def incremental_state_versioned(
-    delta: DataFrame,
-    base_path: str,
-    batch_id: str,
-    fold_fn,
-    keep_versions: int = 2,
-) -> DataFrame:
-    """Generic exactly-once state fold (r9): the new state AND the full
-    applied-batch-id set are written into the same ``v=N`` directory and
-    committed by the single atomic ``_COMMITTED`` create, so state and
-    markers can never disagree: a crash anywhere pre-marker leaves the
-    old version current and the retry folds exactly once. Writing the
-    marker separately, before or after the state, would either drop or
-    double-count the batch on a crash between the two writes. A replayed
-    batch id folds nothing and returns the current state. The FOLD
-    ITSELF is supplied by the caller: ``fold_fn(old_state_or_None,
-    delta) -> new_state DataFrame``. This is what the behavioral state folds
-    (operators/funnel.py::fold_funnel_state / fold_retention_state) and
-    any future algebraic state ride instead of re-implementing the
-    commit dance. ``fold_fn`` must be deterministic and full-state (its
-    return REPLACES the state); read back via :func:`read_agg_state`."""
-    spark = delta.sparkSession
-    cur = current_version(spark, base_path)
-    old_state = old_applied = None
-    if cur is not None:
-        vdir = version_path(base_path, cur)
-        old_state = spark.read.parquet(f"{vdir}/{_STATE_SUB}")
-        old_applied = spark.read.parquet(f"{vdir}/{_APPLIED_SUB}")
-        if (
-            old_applied.filter(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        ):
-            return old_state
-
-    new_state = fold_fn(old_state, delta)
-    new_applied = spark.createDataFrame([(batch_id,)], "batch_id string")
-    if old_applied is not None:
-        new_applied = old_applied.unionByName(new_applied)
-
-    new_v = (cur or 0) + 1
-    staging = _staging_path(base_path)
-    new_state.write.mode("overwrite").parquet(f"{staging}/{_STATE_SUB}")
-    new_applied.write.mode("overwrite").parquet(f"{staging}/{_APPLIED_SUB}")
-    _publish_version(spark, base_path, new_v, staging)
-    _gc_versions(spark, base_path, new_v, keep_versions)
-    return read_agg_state(spark, base_path)

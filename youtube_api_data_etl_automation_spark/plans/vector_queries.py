@@ -287,8 +287,8 @@ def semantic_neardup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM qe
     GROUP BY label
     UNION ALL
-    -- PCA sufficient statistics (operators/pca.py::second_moments grid6
-    -- fixture mode) over the label-0 slice: pos < 64 are the
+    -- PCA sufficient statistics (operators/pca.py::second_moments,
+    -- 6-decimal-grid summands) over the label-0 slice: pos < 64 are the
     -- per-dimension sums, pos >= 64 flatten the second-moment matrix at
     -- 64 + i*64 + j; every summand snaps to the exact 6-decimal grid
     -- first so the decimal(18,6) totals are bit-identical cross-engine
@@ -354,8 +354,8 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("quant_err").alias("section"), "label", "n_vecs", "avg_v")
     )
     # moment2 (r8): the distributed core of PCA — operators/pca.py's
-    # exact sufficient-statistics relation in its grid6 oracle-fixture
-    # mode over the label-0 slice (the eigendecomposition itself is O(d²)
+    # exact sufficient-statistics relation (6-decimal-grid summands)
+    # over the label-0 slice (the eigendecomposition itself is O(d²)
     # driver numpy and not SQL-expressible; what CAN silently break at
     # scale — the outer-product explode layout, the grouping, the
     # order-independent decimal summation — is exactly what this section
@@ -363,7 +363,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pca import second_moments
 
     moments = second_moments(
-        emb.filter(F.col("label") == 0), "embedding", dim=64, grid6=True
+        emb.filter(F.col("label") == 0), "embedding"
     ).select(
         F.lit("moment2").alias("section"),
         F.col("pos").cast("int").alias("label"),
