@@ -29,7 +29,7 @@ TEXTS = [
 
 def _tok_df(spark, texts=TEXTS):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    return df.select(tokens("text").alias("tok"))
+    return df.select(F.expr(tokens("text")).alias("tok"))
 
 
 # ---- Python reference implementation -------------------------------------
@@ -119,7 +119,7 @@ def test_merged_pair_with_separator_stays_unambiguous(spark):
     exactly (struct pair key, not string concat)."""
     texts = ["x y z", "x y z", "x y q"]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    toks = df.select(tokens("text").alias("tok"))
+    toks = df.select(F.expr(tokens("text")).alias("tok"))
     merges = train_merges(toks, n_merges=2)
     expected = _py_train([t.split() for t in texts], 2)
     assert merges == expected

@@ -282,7 +282,7 @@ def test_bpe_merges_drive_pack_token_counts(spark):
         for r in spark.createDataFrame(
             [(d, rows[d]["clean_text"]) for d in rows],
             "doc_id long, clean string",
-        ).select("doc_id", tokens("clean").alias("t")).collect()
+        ).select("doc_id", F.expr(tokens("clean")).alias("t")).collect()
     }
     for d, toks in clean_toks.items():
         expect = list(toks)
@@ -318,7 +318,7 @@ def test_n_tokens_counts_the_redacted_stream(spark):
     for r in rows.values():
         clean_n = (
             spark.createDataFrame([(r["clean_text"],)], "t string")
-            .select(token_count("t").alias("n"))
+            .select(F.expr(token_count("t")).alias("n"))
             .first()
             .n
         )
@@ -390,6 +390,47 @@ def test_commit_deduped_batch_end_to_end(spark, tmp_path):
     r3 = commit_deduped_batch(b2, sink, threshold=0.25)
     assert r3["n_committed"] == 0 and r3["version"] == 2
     assert r3["n_exact_dup"] >= 2  # 10 and 12's canonical both already in
+
+
+def test_commit_deduped_batch_loses_to_a_racing_ingest(spark, tmp_path,
+                                                      monkeypatch):
+    """An ingest that commits between this batch's verdict read and its
+    commit wins the version slot: this batch raises ConcurrentWriteError
+    instead of landing a doc that is a near-duplicate of the racer's."""
+    from youtube_api_data_etl_automation_spark import corpus
+    from youtube_api_data_etl_automation_spark.operators import dedup
+    from youtube_api_data_etl_automation_spark.operators.versioned import (
+        ConcurrentWriteError,
+        read_appended,
+    )
+
+    sink = str(tmp_path / "corpus_sink")
+    corpus.commit_deduped_batch(spark.createDataFrame(
+        [(1, "completely separate committed content here now")],
+        "doc_id long, text string"), sink, threshold=0.25)
+    racer = spark.createDataFrame(
+        [(20, "one two three four five six seven eight nine")],
+        "doc_id long, text string")
+    mine = spark.createDataFrame(
+        [(30, "one two three four five six seven eight NINE ten")],
+        "doc_id long, text string")
+
+    judge = dedup.dedup_against_index
+    raced = []
+
+    def judge_then_race(*args, **kwargs):
+        verdicts = judge(*args, **kwargs)
+        if not raced:  # the racer's own commit must not race again
+            raced.append(True)
+            corpus.commit_deduped_batch(racer, sink, threshold=0.25)
+        return verdicts
+
+    monkeypatch.setattr(dedup, "dedup_against_index", judge_then_race)
+    with pytest.raises(ConcurrentWriteError):
+        corpus.commit_deduped_batch(mine, sink, threshold=0.25)
+    assert raced
+    landed = {r.doc_id for r in read_appended(spark, sink).collect()}
+    assert landed == {1, 20}
 
 
 def test_commit_deduped_batch_rejects_index_column_clash(spark, tmp_path):

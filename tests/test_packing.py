@@ -19,7 +19,7 @@ SHARDS = 8
 
 def _packed(spark):
     docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", F.size(tokens("text")).cast("long").alias("n_tokens")
+        "doc_id", F.size(F.expr(tokens("text"))).cast("long").alias("n_tokens")
     )
     return pack_sequences(docs, budget=BUDGET, n_shards=SHARDS)
 
@@ -43,7 +43,7 @@ def test_packing_matches_python_reference(spark):
 def test_packing_is_deterministic_across_partitionings(spark):
     a = {(r.doc_id): (r.shard, r.token_start) for r in _packed(spark).collect()}
     docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", F.size(tokens("text")).cast("long").alias("n_tokens")
+        "doc_id", F.size(F.expr(tokens("text"))).cast("long").alias("n_tokens")
     ).repartition(7)
     b = {
         (r.doc_id): (r.shard, r.token_start)

@@ -101,7 +101,7 @@ def test_learned_logit_reduces_to_fixed_form(spark):
     )
     out = df.select(
         F.abs(
-            learned_logit_t("tok", fixed, 0.0) - clf_logit_t("tok")
+            learned_logit_t("tok", fixed, 0.0) - F.expr(clf_logit_t("tok"))
         ).alias("d")
     ).agg(F.max("d").alias("m")).first()
     assert out.m < 1e-12

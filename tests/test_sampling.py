@@ -15,11 +15,11 @@ from youtube_api_data_etl_automation_spark.operators.sampling import (
 
 
 def test_stable_uniform_range_and_determinism(spark):
-    df = spark.range(0, 5000).select(stable_uniform("id").alias("u"))
+    df = spark.range(0, 5000).select(F.expr(stable_uniform("id")).alias("u"))
     row = df.agg(F.min("u"), F.max("u"), F.mean("u")).first()
     assert 0 < row[0] and row[1] <= 1.0
     assert 0.45 < row[2] < 0.55  # uniform mean ≈ 0.5
-    again = spark.range(0, 5000).select(stable_uniform("id").alias("u"))
+    again = spark.range(0, 5000).select(F.expr(stable_uniform("id")).alias("u"))
     assert df.exceptAll(again).count() == 0
 
 
@@ -93,10 +93,10 @@ def test_nonpositive_weights_never_beat_positive(spark):
 def test_key_monotone_in_weight_for_same_u(spark):
     """u fixed ⇒ key strictly increases with weight (ln(u)/w → 0)."""
     df = spark.createDataFrame([(7,)], "id long").select(
-        aes_log_key(F.col("id"), F.lit(1.0)).alias("k1"),
-        aes_log_key(F.col("id"), F.lit(5.0)).alias("k5"),
-        aes_log_key(F.col("id"), F.lit(50.0)).alias("k50"),
-        aes_log_key(F.col("id"), F.lit(0.0)).alias("k0"),
+        aes_log_key("id", F.lit(1.0)).alias("k1"),
+        aes_log_key("id", F.lit(5.0)).alias("k5"),
+        aes_log_key("id", F.lit(50.0)).alias("k50"),
+        aes_log_key("id", F.lit(0.0)).alias("k0"),
     )
     r = df.first()
     assert r["k1"] < r["k5"] < r["k50"] < 0

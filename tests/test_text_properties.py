@@ -9,6 +9,7 @@ import re
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.functions.text import (
     doc_fingerprint,
@@ -70,9 +71,9 @@ def test_tokens_and_shingles_match_python(spark, batch):
         r["i"]: (list(r["tok"]), list(r["sh"]), int(r["n"]))
         for r in df.select(
             "i",
-            tokens("text").alias("tok"),
-            word_shingles_t(tokens("text"), 3).alias("sh"),
-            token_count("text").alias("n"),
+            F.expr(tokens("text")).alias("tok"),
+            F.expr(word_shingles_t(tokens("text"), 3)).alias("sh"),
+            F.expr(token_count("text")).alias("n"),
         ).collect()
     }
     for i, s in enumerate(batch):
@@ -107,10 +108,10 @@ def test_clf_logit_matches_python(spark, batch):
 
     df = spark.createDataFrame(
         pd.DataFrame({"i": range(len(batch)), "text": batch}), "i long, text string"
-    ).select("i", tokens("text").alias("tok"))
+    ).select("i", F.expr(tokens("text")).alias("tok"))
     got = {
         r["i"]: r["z"]
-        for r in df.select("i", clf_logit_t("tok").alias("z")).collect()
+        for r in df.select("i", F.expr(clf_logit_t("tok")).alias("z")).collect()
     }
     for i, s in enumerate(batch):
         assert got[i] == py_logit(s), (s, got[i], py_logit(s))
@@ -130,7 +131,7 @@ def test_fingerprint_is_normalization_invariant(spark, s):
         pd.DataFrame({"i": range(len(variants)), "text": variants}),
         "i long, text string",
     )
-    fps = [r["fp"] for r in df.select(doc_fingerprint("text").alias("fp"), "i")
+    fps = [r["fp"] for r in df.select(F.expr(doc_fingerprint("text")).alias("fp"), "i")
            .orderBy("i").collect()]
     assert len(set(fps)) == 1, (s, fps)
     expected = hashlib.md5(py_normalize(s).encode()).hexdigest()
@@ -159,7 +160,7 @@ def test_token_entropy_hand_computed_and_edges(spark):
     got = {
         r["doc_id"]: r["h"]
         for r in df.select(
-            "doc_id", token_entropy_t("tok").alias("h")
+            "doc_id", F.expr(token_entropy_t("tok")).alias("h")
         ).collect()
     }
     assert got[1] == pytest.approx(
@@ -174,8 +175,8 @@ def test_token_entropy_hand_computed_and_edges(spark):
 
     pair = df.filter(F.col("doc_id").isin(1, 2)).select(
         "doc_id",
-        dup_token_fraction_t("tok").alias("d"),
-        token_entropy_t("tok").alias("h"),
+        F.expr(dup_token_fraction_t("tok")).alias("d"),
+        F.expr(token_entropy_t("tok")).alias("h"),
     ).collect()
     d = {r["doc_id"]: (r["d"], r["h"]) for r in pair}
     assert d[1][0] == d[2][0] and d[1][1] < d[2][1]
@@ -202,8 +203,8 @@ def test_dup_ngram_fraction_hand_computed(spark):
         r["doc_id"]: (r["b"], r["u"])
         for r in df.select(
             "doc_id",
-            dup_ngram_fraction_t("tok", n=2).alias("b"),
-            dup_token_fraction_t("tok").alias("u"),
+            F.expr(dup_ngram_fraction_t("tok", n=2)).alias("b"),
+            F.expr(dup_token_fraction_t("tok")).alias("u"),
         ).collect()
     }
     # doc 1: 5 bigrams, 'buy now' appears twice -> 1 - 4/5 = 0.2; the

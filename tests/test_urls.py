@@ -1,4 +1,4 @@
-"""URL Column functions (functions/urls.py) against the stdlib
+"""URL SQL builders (functions/urls.py) against the stdlib
 urllib.parse reference and hand-picked registrable-domain cases."""
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ CASES = [
 def _run(spark, expr):
     df = spark.createDataFrame([(i, u) for i, u in enumerate(CASES)],
                                "i long, url string")
-    rows = df.select("i", expr(F.col("url")).alias("v")) \
+    rows = df.select("i", F.expr(expr("url")).alias("v")) \
         .orderBy("i").collect()
     return [r["v"] for r in rows]
 
@@ -94,7 +94,7 @@ def test_feeds_domain_capping(spark):
         ["a.example.com"] * 5 + ["b.example.com"] * 3
         + ["other.co.uk"] * 4)]
     df = spark.createDataFrame(rows, "doc_id long, url string") \
-        .withColumn("domain", U.registrable_domain(F.col("url")))
+        .withColumn("domain", F.expr(U.registrable_domain("url")))
     capped = cap_per_group(df, group_col="domain", id_col="doc_id",
                            cap=2)
     counts = {r["domain"]: r["n"] for r in
@@ -108,7 +108,7 @@ def test_host_suffixes_label_aligned(spark):
         [(1, "https://a.b.example.com/x"), (2, "https://example.com"),
          (3, "not a url")], "i long, url string")
     rows = {r["i"]: r["s"] for r in df.select(
-        "i", U.host_suffixes(F.col("url")).alias("s")).collect()}
+        "i", F.expr(U.host_suffixes("url")).alias("s")).collect()}
     assert set(rows[1]) == {"com", "example.com", "b.example.com",
                             "a.b.example.com"}
     assert set(rows[2]) == {"com", "example.com"}
@@ -170,7 +170,7 @@ def test_registrable_domain_psl_differs_from_heuristic(spark):
     psl = spark.createDataFrame([(r,) for r in PSL_RULES],
                                 "rule string")
     out = U.registrable_domain_psl(
-        df.withColumn("heur", U.registrable_domain(F.col("url"))), psl
+        df.withColumn("heur", F.expr(U.registrable_domain("url"))), psl
     ).collect()
     heur = {r["doc_id"]: r["heur"] for r in out}
     exact = {r["doc_id"]: r["registrable_domain_psl"] for r in out}
@@ -222,7 +222,7 @@ def test_url_normalize_canonicalization(spark):
     df = spark.createDataFrame([(k, v[0]) for k, v in cases.items()],
                                "i long, url string")
     got = {r["i"]: r["c"] for r in df.select(
-        "i", U.url_normalize(F.col("url")).alias("c")).collect()}
+        "i", F.expr(U.url_normalize("url")).alias("c")).collect()}
     for k, (_, want) in cases.items():
         assert got[k] == want, (k, cases[k][0], got[k])
     # the dedup win: the two crawl variants above collapse to one key
@@ -333,9 +333,38 @@ def test_url_normalize_idempotent(spark):
                 + (f"?{q}" if q else "") + frag))
     urls += [(900, "not a url"), (901, None), (902, "")]
     df = spark.createDataFrame(urls, "i long, url string")
-    once = df.select("i", U.url_normalize(F.col("url")).alias("c1"))
+    once = df.select("i", F.expr(U.url_normalize("url")).alias("c1"))
     twice = once.select(
-        "i", "c1", U.url_normalize(F.col("c1")).alias("c2"))
+        "i", "c1", F.expr(U.url_normalize("c1")).alias("c2"))
     bad = [(r["i"], r["c1"], r["c2"]) for r in twice.collect()
            if r["c1"] != r["c2"]]
     assert not bad, bad[:5]
+
+
+def test_url_normalize_binds_per_plan_and_passes_through(spark):
+    """One parsed url_normalize expression bound in two different plans
+    and in both arms of one union resolves against each plan's own input;
+    schemeless and bracketed-IPv6 URLs pass through unchanged."""
+    rows = [
+        ("https://A.example.com:443/p?utm_source=x&b=2&a=1#f",),
+        ("http://site.org:80/",),
+        ("not a url",),
+        ("http://[::1]:8080/x",),
+    ]
+    d1 = spark.createDataFrame(rows, "u string")
+    d2 = spark.createDataFrame([(r[0].upper(),) for r in rows], "u string")
+    norm = F.expr(U.url_normalize("u"))
+    out1 = [r[0] for r in d1.select(norm.alias("c")).collect()]
+    out2 = [r[0] for r in d2.select(norm.alias("c")).collect()]
+    assert out1 == ["https://a.example.com/p?a=1&b=2", "http://site.org/",
+                    "not a url", "http://[::1]:8080/x"]
+    assert out2 == ["https://a.example.com/P?A=1&B=2&UTM_SOURCE=X",
+                    "http://site.org/",
+                    "NOT A URL", "HTTP://[::1]:8080/X"]
+    both = d1.select(norm.alias("c")).unionAll(d2.select(norm.alias("c")))
+    assert sorted(r[0] for r in both.collect()) == sorted(out1 + out2)
+    edge = spark.createDataFrame(
+        [("HTTPS://User:p@Host.Example.COM./a/b?z=1&fbclid=t&y=2#frag",),
+         ("",), (None,)], "u string")
+    assert [r[0] for r in edge.select(norm).collect()] == [
+        "https://host.example.com/a/b?y=2&z=1", "", None]

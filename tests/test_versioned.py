@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.versioned import (
     ConcurrentWriteError,
+    append_versioned,
     commit_version,
     current_version,
     incremental_state_versioned,
@@ -23,6 +24,12 @@ from youtube_api_data_etl_automation_spark.operators.versioned import (
 
 def _df(spark, pairs):
     return spark.createDataFrame(pairs, "k string, v long")
+
+
+def _append(spark, pairs, base, **kw):
+    """Keyed append of (k, v) pairs on the sink's current snapshot."""
+    return append_versioned(_df(spark, pairs), base,
+                            current_version(spark, base), key="k", **kw)
 
 
 def _fold(delta, base, keys, sum_cols, batch_id):
@@ -410,14 +417,13 @@ def test_incremental_agg_versioned_crash_pre_marker_refolds_once(spark, tmp_path
 
 def test_append_versioned_accumulates_and_is_idempotent(spark, tmp_path):
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         current_version,
         read_appended,
     )
 
     base = str(tmp_path / "sink")
-    n1 = append_versioned(_df(spark, [("a", 1), ("b", 2)]), base, key="k")
-    n2 = append_versioned(_df(spark, [("b", 99), ("c", 3)]), base, key="k")
+    _, n1 = _append(spark, [("a", 1), ("b", 2)], base)
+    _, n2 = _append(spark, [("b", 99), ("c", 3)], base)
     assert (n1, n2) == (2, 1)  # 'b' already landed → filtered at write
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {("a", 1), ("b", 2), ("c", 3)}
@@ -426,21 +432,20 @@ def test_append_versioned_accumulates_and_is_idempotent(spark, tmp_path):
     # version, and no new (empty) batch dir left behind
     v_before = current_version(spark, base)
     dirs_before = sorted(os.listdir(os.path.join(base, "batches")))
-    assert append_versioned(_df(spark, [("a", 1)]), base, key="k") == 0
+    assert _append(spark, [("a", 1)], base) == (v_before, 0)
     assert current_version(spark, base) == v_before
     assert sorted(os.listdir(os.path.join(base, "batches"))) == dirs_before
 
 
 def test_append_versioned_reader_snapshot_survives_append(spark, tmp_path):
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         read_appended,
     )
 
     base = str(tmp_path / "sink")
-    append_versioned(_df(spark, [("a", 1)]), base, key="k")
+    _append(spark, [("a", 1)], base)
     old_reader = read_appended(spark, base)  # resolved manifest v1
-    append_versioned(_df(spark, [("b", 2)]), base, key="k")
+    _append(spark, [("b", 2)], base)
     assert {(r.k, r.v) for r in old_reader.collect()} == {("a", 1)}
     assert {(r.k, r.v) for r in read_appended(spark, base).collect()} == {
         ("a", 1),
@@ -452,18 +457,17 @@ def test_append_versioned_crashed_batch_is_invisible(spark, tmp_path):
     """A batch dir written by a crashed append (no manifest commit) is
     invisible to readers and reclaimed by the retry."""
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         read_appended,
     )
 
     base = str(tmp_path / "sink")
-    append_versioned(_df(spark, [("a", 1)]), base, key="k")
+    _append(spark, [("a", 1)], base)
     # fake crash: batch b=2 written, version dir v=2 never committed
     _df(spark, [("ORPHAN", 9)]).write.parquet(f"{base}/batches/b=000000002")
     assert {(r.k, r.v) for r in read_appended(spark, base).collect()} == {
         ("a", 1)
     }
-    append_versioned(_df(spark, [("b", 2)]), base, key="k")
+    _append(spark, [("b", 2)], base)
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {("a", 1), ("b", 2)}  # orphan reclaimed, not resurrected
 
@@ -472,15 +476,13 @@ def test_append_versioned_gc_keeps_current_manifest_batches(spark, tmp_path):
     """GC drops old manifests but every batch the CURRENT manifest lists
     stays readable — the full accumulated history survives."""
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         list_versions,
         read_appended,
     )
 
     base = str(tmp_path / "sink")
     for i in range(5):
-        append_versioned(_df(spark, [(f"k{i}", i)]), base, key="k",
-                         keep_versions=2)
+        _append(spark, [(f"k{i}", i)], base, keep_versions=2)
     assert [v for v, ok in list_versions(spark, base) if ok] == [4, 5]
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {(f"k{i}", i) for i in range(5)}
@@ -580,19 +582,18 @@ def test_racing_appends_loser_cleans_batch_debris(spark, tmp_path, monkeypatch):
     and a key-based retry lands the delta exactly once."""
     import youtube_api_data_etl_automation_spark.operators.versioned as V
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         read_appended,
     )
 
     base = str(tmp_path / "ap")
-    append_versioned(_df(spark, [("a", 1)]), base, key="k")
+    _append(spark, [("a", 1)], base)
 
     _race_once(
         monkeypatch, V,
-        lambda: append_versioned(_df(spark, [("z", 99)]), base, key="k"),
+        lambda: _append(spark, [("z", 99)], base),
     )
     with pytest.raises(V.ConcurrentWriteError):
-        append_versioned(_df(spark, [("b", 2)]), base, key="k")
+        _append(spark, [("b", 2)], base)
 
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {("a", 1), ("z", 99)}
@@ -601,7 +602,7 @@ def test_racing_appends_loser_cleans_batch_debris(spark, tmp_path, monkeypatch):
     assert _staging_children(base) == []
 
     monkeypatch.undo()
-    assert append_versioned(_df(spark, [("b", 2)]), base, key="k") == 1
+    assert _append(spark, [("b", 2)], base)[1] == 1
     got = {(r.k, r.v) for r in read_appended(spark, base).collect()}
     assert got == {("a", 1), ("z", 99), ("b", 2)}
 
@@ -649,7 +650,6 @@ def test_model_based_random_op_sequences(spark, tmp_path):
     import random
 
     from youtube_api_data_etl_automation_spark.operators.versioned import (
-        append_versioned,
         commit_version,
         merge_upsert_versioned,
         read_appended,
@@ -717,7 +717,7 @@ def test_model_based_random_op_sequences(spark, tmp_path):
             rows = [
                 (f"k{rng.randrange(8)}", rng.randrange(100)) for _ in range(3)
             ]
-            append_versioned(_df(spark, rows), abase, key="k")
+            _append(spark, rows, abase)
             for k, v in rows:
                 amodel.setdefault(k, v)  # first landing wins, replays no-op
             got = {r.k for r in read_appended(spark, abase).collect()}

@@ -56,7 +56,7 @@ def test_from_counts_matches_full_scan(spark):
     from pyspark.sql import functions as F
 
     counts = (
-        docs.select(F.explode_outer(tokens("text")).alias("term"))
+        docs.select(F.explode_outer(F.expr(tokens("text"))).alias("term"))
         .filter(F.col("term").isNotNull())
         .groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     )

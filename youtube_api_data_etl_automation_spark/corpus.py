@@ -333,7 +333,7 @@ def curate_corpus(
             from .functions.urls import registrable_domain
 
             base = base.withColumn(
-                "__domain", registrable_domain("__url"))
+                "__domain", F.expr(registrable_domain("__url")))
         extra_cols = ["__domain"]
     if carry_lang:
         extra_cols = extra_cols + ["__lang"]
@@ -387,9 +387,9 @@ def curate_corpus(
     toks = base.select(
         "doc_id", "text", redact_pii(F.col("text")).alias("clean_text"),
         *extra_cols
-    ).withColumn("tok", tokens("text"))
+    ).withColumn("tok", F.expr(tokens("text")))
     if bpe_merges is None:
-        n_tokens_expr = token_count("clean_text")
+        n_tokens_expr = F.expr(token_count("clean_text"))
     else:
         if len(bpe_merges) > _MAX_INLINE_BPE_MERGES:
             # Fail explicitly at the API edge: past this depth the inlined
@@ -405,13 +405,11 @@ def curate_corpus(
                 "counts instead."
             )
         from .operators.bpe import bpe_encode_t
-        from .functions.text import token_count_t
 
-        n_tokens_expr = token_count_t(
-            bpe_encode_t(tokens("clean_text"), bpe_merges)
-        )
+        encoded = bpe_encode_t(F.expr(tokens("clean_text")), bpe_merges)
+        n_tokens_expr = F.coalesce(F.size(encoded), F.lit(0)).cast("int")
     if nl_funnel:
-        lang_expr = lang_id_t("tok")
+        lang_expr = F.expr(lang_id_t("tok"))
     elif carry_lang:
         lang_expr = F.coalesce(F.col("__lang"), F.lit("und"))
     else:
@@ -422,9 +420,9 @@ def curate_corpus(
         "doc_id",
         lang_expr.alias("lang"),
         n_tokens_expr.alias("n_tokens"),
-        quality_score_t("text", "tok").alias("quality"),
+        F.expr(f"{quality_score_t('text', 'tok')} AS quality"),
         "clean_text",
-        doc_fingerprint("text").alias("fingerprint"),
+        F.expr(f"{doc_fingerprint('text')} AS fingerprint"),
         *[c for c in extra_cols if c != "__lang"],
     )
     funnel_pred = (
@@ -463,7 +461,7 @@ def curate_corpus(
         ref = ppl_ref.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
-        ).withColumn("tok", tokens("text"))
+        ).withColumn("tok", F.expr(tokens("text")))
         lm = train_bigram_lm(ref, k=0.5, tok_col="tok")
         sc = score_docs(
             survivors.select("doc_id",
@@ -542,7 +540,8 @@ def curate_corpus(
             cond = F.when(F.col("lang") == lang, buckets)
             thr = cond if thr is None else thr.when(F.col("lang") == lang, buckets)
         thr = (thr.otherwise(256) if thr is not None else F.lit(256))
-        survivors = survivors.filter(md5_bucket("doc_id", salt="corpus:") < thr)
+        survivors = survivors.filter(
+            F.expr(md5_bucket("doc_id", salt="corpus:")) < thr)
         survivors = checkpoint("stratified_sample", survivors)
 
     # 5b: optional DSIR importance selection toward a target corpus.
@@ -828,11 +827,17 @@ def commit_deduped_batch(
     Returns a report dict: n_in, n_within_exact (dropped as within-batch
     copies), n_exact_dup / n_near_dup (dropped against committed state),
     n_committed (rows actually appended — 0 on a full-duplicate or
-    replayed batch), version (current sink version after the call). The
-    counts are O(1) driver scalars off one verdict aggregate; nothing
-    O(batch) collects. Concurrency: append_versioned's CAS protocol
-    applies — on ConcurrentWriteError, retry; the fingerprint state is
-    re-read fresh and the id-keyed anti-join keeps replays exactly-once.
+    replayed batch), version (the version this call committed, or the
+    snapshot it read when it committed nothing). The counts are O(1)
+    driver scalars off one verdict aggregate; nothing O(batch) collects.
+
+    Concurrency: the snapshot is resolved ONCE; the verdicts, the id-keyed
+    anti-join and the commit (versioned.append_versioned →
+    commit_manifest) all use it, so
+    an ingest that commits in between makes this call lose with
+    ConcurrentWriteError instead of landing docs judged against a state
+    that no longer exists. On ConcurrentWriteError, retry: the retry
+    judges against the racer's docs too.
     """
     from .operators.dedup import corpus_dedup_index, dedup_against_index
     from .operators.versioned import (
@@ -875,9 +880,9 @@ def commit_deduped_batch(
         n_within = n_in - survivor_idx.count()
 
         sig_cols = [f"m{i}" for i in range(num_hashes)]
-        have_state = current_version(spark, base_path) is not None
-        if have_state:
-            committed_index = read_appended(spark, base_path).select(
+        snapshot = current_version(spark, base_path)
+        if snapshot is not None:
+            committed_index = read_appended(spark, base_path, snapshot).select(
                 "doc_id", "fingerprint", *sig_cols
             )
             survivors_docs = new_docs.join(
@@ -915,16 +920,16 @@ def commit_deduped_batch(
             .join(F.broadcast(keep_ids.alias("kp")), F.col("i.doc_id") == F.col("kp.doc_id"))
             .select("d.*", "i.fingerprint", *[f"i.{c}" for c in sig_cols])
         )
-        n_committed = append_versioned(
-            rows, base_path, key=id_col, keep_versions=keep_versions
-        )
+        version, n_committed = append_versioned(
+            rows, base_path, snapshot, key=id_col,
+            keep_versions=keep_versions)
         return {
             "n_in": n_in,
             "n_within_exact": n_within,
             "n_exact_dup": counts.get("exact_dup", 0),
             "n_near_dup": counts.get("near_dup", 0),
             "n_committed": n_committed,
-            "version": current_version(spark, base_path),
+            "version": version,
         }
     finally:
         if verdicts is not None:

@@ -1,7 +1,10 @@
-"""Engine scalar-function library — pure Column expressions, zero Python UDFs.
+"""Engine scalar-function library — built-in expressions, zero Python UDFs.
 
 Every function here compiles to built-in Catalyst expressions so the whole
 transform surface stays inside whole-stage codegen (SURVEY.md §2.4, §7.3).
+The text, URL and hashing builders (text.py, urls.py, hashing.py) take and
+return Spark SQL text, parsed once per use with ``F.expr``/``selectExpr``;
+the rest return Columns.
 """
 
 from .durations import iso8601_duration_seconds

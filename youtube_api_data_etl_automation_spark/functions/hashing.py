@@ -17,15 +17,13 @@ operator must pick its own distinct salt.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .colcache import name_memo
+from .text import sql_str
 
 
-@name_memo
-def md5_bucket(col: Column | str, salt: str = "") -> Column:
-    """256-way content-stable bucket of ``salt ++ str(col)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    keyed = c.cast("string") if not salt else F.concat(F.lit(salt), c.cast("string"))
-    return F.conv(F.substring(F.md5(keyed), 1, 2), 16, 10).cast("int")
+def md5_bucket(col: str, salt: str = "") -> str:
+    """SQL text of the 256-way content-stable bucket of ``salt ++
+    str(col)`` (``col`` is SQL text too: a column name or an expression)."""
+    keyed = f"CAST({col} AS STRING)"
+    if salt:
+        keyed = f"concat({sql_str(salt)}, {keyed})"
+    return f"CAST(conv(substring(md5({keyed}), 1, 2), 16, 10) AS INT)"

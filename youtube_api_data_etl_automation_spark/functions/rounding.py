@@ -21,3 +21,9 @@ def round6(col: Column) -> Column:
 def sql_round6(expr: str) -> str:
     """DuckDB mirror of :func:`round6`."""
     return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
+
+
+def spark_round6(expr: str) -> str:
+    """Spark-SQL text of :func:`round6` (D-suffixed literals: a bare
+    ``1000000.0`` parses as DECIMAL and changes the arithmetic)."""
+    return f"floor(({expr}) * 1000000.0D + 0.5D) / 1000000.0D"

@@ -1,13 +1,14 @@
-"""URL analysis as pure Column expressions — the curation pipeline's
+"""URL analysis as SQL expression builders — the curation pipeline's
 provenance axis.
 
 Web-corpus curation is organized by WHERE a document came from: domain
 frequency caps (operators/capping.py), per-domain quality priors,
 blocklist filtering, and source-stratified sampling all key on the
 registrable domain. This module extracts those keys JVM-side
-(regexp/split Column math — zero Python in the hot path, the same
-posture as functions/text.py) and keeps every expression replayable in
-ANSI SQL so the DuckDB oracle can re-derive it.
+(regexp/split SQL builders — zero Python in the hot path, the same
+posture and the same SQL-text-in, SQL-text-out contract as
+functions/text.py) and keeps every expression replayable in ANSI SQL so
+the DuckDB oracle can re-derive it.
 
 ``registrable_domain`` uses a HEURISTIC public-suffix rule: the full
 Public Suffix List is a living database (thousands of entries,
@@ -20,10 +21,7 @@ the full PSL as a broadcast join if exactness matters for a corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .colcache import name_memo
+from .text import sql_str_array
 
 # scheme://[userinfo@]host[:port]/...  — host stops at : / ? #
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/@?#]*@)?([^/:?#]+)"
@@ -45,61 +43,49 @@ TWO_LABEL_SUFFIXES = (
 )
 
 
-@name_memo
-def url_scheme(url: Column | str) -> Column:
+def url_scheme(url: str) -> str:
     """Lower-cased scheme, empty string for schemeless input."""
-    return F.lower(F.regexp_extract(url, _SCHEME_RE, 1))
+    return f"lower(regexp_extract({url}, r'{_SCHEME_RE}', 1))"
 
 
-@name_memo
-def url_host(url: Column | str) -> Column:
+def url_host(url: str) -> str:
     """Lower-cased hostname: userinfo and port stripped, one trailing
     dot removed (``example.com.`` is the same authority). Empty string
     when the input has no ``scheme://`` authority at all."""
-    host = F.lower(F.regexp_extract(url, _HOST_RE, 1))
-    return F.regexp_replace(host, r"\.$", "")
+    host = f"lower(regexp_extract({url}, r'{_HOST_RE}', 1))"
+    return rf"regexp_replace({host}, r'\.$', '')"
 
 
-@name_memo
-def url_path(url: Column | str) -> Column:
+def url_path(url: str) -> str:
     """The path component (query/fragment excluded); empty for bare
     authority URLs."""
-    return F.regexp_extract(url, _PATH_RE, 1)
+    return f"regexp_extract({url}, r'{_PATH_RE}', 1)"
 
 
-@name_memo
-def url_tld(url: Column | str) -> Column:
+def url_tld(url: str) -> str:
     """Last host label (``uk``, ``com``); empty when there is no dot
     (bare hostnames, IPv4 literals return their last octet — filter
     those upstream if it matters)."""
     host = url_host(url)
-    return F.when(host.contains("."),
-                  F.element_at(F.split(host, r"\."), -1)) \
-        .otherwise(F.lit(""))
+    return (f"CASE WHEN contains({host}, '.') "
+            rf"THEN element_at(split({host}, r'\.'), -1) ELSE '' END")
 
 
-@name_memo
-def registrable_domain(url: Column | str) -> Column:
+def registrable_domain(url: str) -> str:
     """The owner-registerable domain: last two host labels, or three
     when the last two form a known two-label public suffix
     (``a.b.co.uk`` → ``b.co.uk``). Hosts without a dot (and empty
     hosts) pass through unchanged."""
     host = url_host(url)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    last2 = F.concat_ws(".", F.element_at(labels, -2),
-                        F.element_at(labels, -1))
-    last3 = F.concat_ws(".", F.element_at(labels, -3),
-                        F.element_at(labels, -2),
-                        F.element_at(labels, -1))
-    # one array literal (F.lit on the tuple) instead of 46 element
-    # round-trips — r14 construct-latency trim, same literal tree
-    is_ccsld = F.array_contains(F.lit(list(TWO_LABEL_SUFFIXES)), last2)
-    return (
-        F.when(n <= 1, host)
-        .when((n >= 3) & is_ccsld, last3)
-        .otherwise(last2)
-    )
+    labels = rf"split({host}, r'\.')"
+    last2 = (f"concat_ws('.', element_at({labels}, -2), "
+             f"element_at({labels}, -1))")
+    last3 = (f"concat_ws('.', element_at({labels}, -3), "
+             f"element_at({labels}, -2), element_at({labels}, -1))")
+    return (f"CASE WHEN size({labels}) <= 1 THEN {host} "
+            f"WHEN size({labels}) >= 3 AND array_contains("
+            f"{sql_str_array(TWO_LABEL_SUFFIXES)}, {last2}) THEN {last3} "
+            f"ELSE {last2} END")
 
 
 # query parameters that carry tracking state, not content identity —
@@ -115,11 +101,11 @@ TRACKING_PARAMS = (
 # the fragment ('/#/route?tab=1') is NOT a query (r12 review fix)
 _QUERY_RE = r"^[^#?]*\?([^#]*)"
 _AUTHORITY_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]*)"
+_PORT_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/@?#]*@)?[^/:?#]+:(\d+)"
 _PORT_DEFAULTS = (("http", "80"), ("https", "443"))
 
 
-@name_memo
-def url_normalize(url: Column | str) -> Column:
+def url_normalize(url: str) -> str:
     """Canonical URL for URL-keyed dedup: lower-cased scheme and host
     (path case preserved — it is significant), userinfo kept out of the
     host (it stays in the original column; the canonical form drops
@@ -128,7 +114,7 @@ def url_normalize(url: Column | str) -> Column:
     prefix plus the exact :data:`TRACKING_PARAMS` set), remaining
     parameters SORTED bytewise, ``?`` dropped when the query empties,
     and a bare-authority empty path canonicalized to ``/``. Everything
-    is Column math (split/filter/array_sort/concat) — zero Python —
+    is SQL array math (split/filter/array_sort/concat) — zero Python —
     and each step is replayable in ANSI SQL for the oracle.
 
     Two crawls of ``HTTP://Site.com/a?utm_source=x&b=2&a=1#frag`` and
@@ -141,38 +127,30 @@ def url_normalize(url: Column | str) -> Column:
     scheme = url_scheme(url)
     host = url_host(url)
     path = url_path(url)
-    query = F.regexp_extract(url, _QUERY_RE, 1)
-    port = F.regexp_extract(
-        url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/@?#]*@)?[^/:?#]+:(\d+)",
-        1)
-    keep_port = port != ""
-    for sch, dflt in _PORT_DEFAULTS:
-        keep_port = keep_port & ~((scheme == sch) & (port == dflt))
-    params = F.filter(
-        F.split(query, "&"),
-        # array_contains on one array literal replaces the former
-        # F.exists equality scan (r14 construct-latency trim —
-        # identical semantics: the probe value is never NULL, it comes
-        # from split); the prefix set keeps exists+startswith
-        lambda p: (p != "") & ~F.array_contains(
-            F.lit(list(TRACKING_PARAMS)), F.split(p, "=")[0]
-        ) & ~F.exists(
-            F.lit(list(TRACKING_PARAM_PREFIXES)),
-            lambda t: F.split(p, "=")[0].startswith(t),
-        ),
-    )
-    canon_query = F.concat_ws("&", F.array_sort(params))
-    canon = F.concat(
-        scheme, F.lit("://"), host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        F.when(path == "", F.lit("/")).otherwise(path),
-        F.when(canon_query != "",
-               F.concat(F.lit("?"), canon_query)).otherwise(F.lit("")),
-    )
-    url_col = url if isinstance(url, Column) else F.col(url)
-    authority = F.regexp_extract(url, _AUTHORITY_RE, 1)
-    return F.when((host == "") | authority.contains("["), url_col) \
-        .otherwise(canon)
+    query = f"regexp_extract({url}, r'{_QUERY_RE}', 1)"
+    port = f"regexp_extract({url}, r'{_PORT_RE}', 1)"
+    keep_port = f"{port} != ''" + "".join(
+        f" AND NOT ({scheme} = '{sch}' AND {port} = '{dflt}')"
+        for sch, dflt in _PORT_DEFAULTS)
+    # the probe value is never NULL (it comes from split), so
+    # array_contains on one array literal is an exact membership test;
+    # the prefix set keeps exists + startswith
+    key = "split(p, '=')[0]"
+    params = (
+        f"filter(split({query}, '&'), p -> p != '' AND NOT array_contains("
+        f"{sql_str_array(TRACKING_PARAMS)}, {key}) AND NOT exists("
+        f"{sql_str_array(TRACKING_PARAM_PREFIXES)}, "
+        f"t -> startswith({key}, t)))")
+    canon_query = f"concat_ws('&', array_sort({params}))"
+    canon = (
+        f"concat({scheme}, '://', {host}, "
+        f"CASE WHEN {keep_port} THEN concat(':', {port}) ELSE '' END, "
+        f"CASE WHEN {path} = '' THEN '/' ELSE {path} END, "
+        f"CASE WHEN {canon_query} != '' THEN concat('?', {canon_query}) "
+        "ELSE '' END)")
+    authority = f"regexp_extract({url}, r'{_AUTHORITY_RE}', 1)"
+    return (f"CASE WHEN {host} = '' OR contains({authority}, '[') "
+            f"THEN {url} ELSE {canon} END")
 
 
 # hosts deeper than this many labels still match a blocklist entry on
@@ -181,8 +159,7 @@ def url_normalize(url: Column | str) -> Column:
 _MAX_SUFFIX_LABELS = 8
 
 
-@name_memo
-def host_suffixes(url: Column | str) -> Column:
+def host_suffixes(url: str) -> str:
     """All label-aligned suffixes of the URL's host, shortest first
     (``a.b.example.com`` → [com, example.com, b.example.com,
     a.b.example.com]) — the match keys a domain blocklist joins on.
@@ -190,12 +167,10 @@ def host_suffixes(url: Column | str) -> Column:
     ``notexample.com`` never matches a blocklist entry ``example.com``.
     Bounded at 8 labels; empty hosts yield an empty array."""
     host = url_host(url)
-    return F.when(host == "", F.array().cast("array<string>")).otherwise(
-        F.array_distinct(F.array(
-            *[F.substring_index(host, ".", -k)
-              for k in range(1, _MAX_SUFFIX_LABELS + 1)]
-        ))
-    )
+    sufs = ", ".join(f"substring_index({host}, '.', -{k})"
+                     for k in range(1, _MAX_SUFFIX_LABELS + 1))
+    return (f"CASE WHEN {host} = '' THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE array_distinct(array({sufs})) END")
 
 
 def registrable_domain_psl(df, psl, url_col: str = "url",
@@ -253,10 +228,10 @@ def registrable_domain_psl(df, psl, url_col: str = "url",
             _F.collect_list("key"), _F.collect_list("flags")
         ).alias("_psl"))
 
-    host = url_host(_F.col(url_col))
+    host = _F.expr(url_host(url_col))
     labels = _F.split(host, r"\.")
     n_labels = _F.size(labels)
-    sufs = host_suffixes(_F.col(url_col))  # entry i (1-based): i labels
+    sufs = _F.expr(host_suffixes(url_col))  # entry i (1-based): i labels
     cand = _F.transform(
         sufs,
         lambda s, i: _F.struct(

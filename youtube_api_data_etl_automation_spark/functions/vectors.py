@@ -16,6 +16,9 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .rounding import spark_round6
+from .text import sql_ident
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -53,18 +56,14 @@ def sql_cosine6(a: str, b: str) -> str:
     construction (guide §7.3). The ann/ivf/semantic oracle rows pin the
     values."""
 
-    def q(n: str) -> str:
-        return "`" + n.replace("`", "``") + "`"
-
     def vd(n: str) -> str:
-        return f"transform({q(n)}, x -> CAST(x AS DOUBLE))"
+        return f"transform({sql_ident(n)}, x -> CAST(x AS DOUBLE))"
 
     dot = (f"aggregate(zip_with({vd(a)}, {vd(b)}, (x, y) -> x * y), "
            "0.0D, (acc, v) -> acc + v)")
     na = f"sqrt(aggregate({vd(a)}, 0.0D, (acc, v) -> acc + v * v))"
     nb = f"sqrt(aggregate({vd(b)}, 0.0D, (acc, v) -> acc + v * v))"
-    cos = f"({dot}) / nullif({na} * {nb}, 0.0D)"
-    return f"floor(({cos}) * 1000000.0D + 0.5D) / 1000000.0D"
+    return spark_round6(f"({dot}) / nullif({na} * {nb}, 0.0D)")
 
 
 def sql_double_array(values) -> str:
@@ -74,10 +73,18 @@ def sql_double_array(values) -> str:
     driver round-trips to build its lambdas; one parsed SQL string
     costs one). Raises on non-finite values (no SQL literal spells
     NaN/Inf — use the Column form's fallback)."""
-    vals = [float(v) for v in values]
-    if not all(math.isfinite(v) for v in vals):
-        raise ValueError("sql_double_array: non-finite value")
-    return "array(" + ",".join(f"{v!r}D" for v in vals) + ")"
+    return "array(" + ",".join(sql_double(v) for v in values) + ")"
+
+
+def sql_double(value: float) -> str:
+    """A Spark SQL DOUBLE literal (``…D``): the JVM parses Python's
+    shortest round-trip ``repr`` back to the same bits, where a bare
+    ``0.5`` would parse as DECIMAL. Raises on non-finite values (no SQL
+    literal spells NaN/Inf)."""
+    v = float(value)
+    if not math.isfinite(v):
+        raise ValueError(f"sql_double: non-finite value {v}")
+    return f"{v!r}D"
 
 
 def _as_double(arr: Column) -> Column:

@@ -62,7 +62,7 @@ def chunk_documents(
         ),
     )
     return (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__ck_toks"))
+        df.select(F.col(id_col), F.expr(f"{tokens(text_col)} AS __ck_toks"))
         .select(F.col(id_col), F.explode(chunks).alias("c"))
         .select(
             id_col, "c.chunk_idx", "c.start_token", "c.n_tokens", "c.chunk"

@@ -33,16 +33,12 @@ def _assign_expr(cents: dict[int, list[float]], vec_col: str,
     (cosine, −cluster_id) tie-break are expression-identical — the
     kmeans_embeddings oracle unrolls all three rounds and value-checks
     the result."""
-    from .similarity import _nearest_centroid_struct
+    from .similarity import _nearest_cluster
 
     cids = sorted(cents)
-    best = _nearest_centroid_struct(vec_col, [cents[c] for c in cids])
-    cid_arr = F.array(*[F.lit(int(c)) for c in cids]).cast(f"array<{id_dt}>")
-    return F.struct(
-        F.element_at(cid_arr, (F.lit(1) - best["nj"]).cast("int"))
-        .alias("cluster_id"),
-        best["s"].alias("s"),
-    )
+    cluster, score = _nearest_cluster(
+        vec_col, cids, [cents[c] for c in cids], id_dt)
+    return F.expr(f"named_struct('cluster_id', {cluster}, 's', {score})")
 
 
 def kmeans_lloyd(spark: SparkSession, corpus: DataFrame, init_centroids: DataFrame,
@@ -166,17 +162,15 @@ def _occupancy_counts(corpus: DataFrame, cids: list, cvs: list,
     vectors) [pinned in tests/test_profile.py]. The centroid list is
     collected once by the caller, so :func:`embedding_drift` runs the
     O(k) control-plane job once for its two occupancy sides."""
-    from .similarity import _nearest_centroid_struct
+    from .similarity import _nearest_cluster
 
     if not cids:
         return corpus.filter(F.lit(False)).select(
             F.lit(None).cast(id_dt).alias("cluster_id"),
             F.lit(0).cast("long").alias("n"))
-    cid_arr = F.array(*[F.lit(c) for c in cids]).cast(f"array<{id_dt}>")
-    best = _nearest_centroid_struct(vec_col, cvs)
-    cluster = F.element_at(cid_arr, (F.lit(1) - best["nj"]).cast("int"))
+    cluster, _ = _nearest_cluster(vec_col, cids, cvs, id_dt)
     return (
-        corpus.select(cluster.alias("cluster_id"))
+        corpus.selectExpr(f"{cluster} AS cluster_id")
         .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )

@@ -86,7 +86,7 @@ def lang_from_path(path: str | Column) -> Column:
             .when(base == "cmakelists.txt", F.lit("cmake")))
     m = F.create_map(*[F.lit(x) for kv in EXT_LANG.items()
                        for x in kv])
-    return expr.otherwise(m.getItem(ext))
+    return expr.otherwise(m[ext])
 
 
 def code_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -60,11 +60,11 @@ def word_ngrams(
     """
     from ..functions.text import word_shingles_t
 
-    grams = word_shingles_t(F.col("__ng_toks"), n)
+    grams = F.expr(word_shingles_t("__ng_toks", n))
     if unique:
         grams = F.array_distinct(grams)
     return (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__ng_toks"))
+        df.select(F.col(id_col), F.expr(f"{tokens(text_col)} AS __ng_toks"))
         .select(F.col(id_col), F.explode(grams).alias("g"))
     )
 

@@ -32,7 +32,7 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     """Group exact-content duplicates: one row per distinct normalized text,
     with the canonical (minimum) id and the copy count."""
     return (
-        docs.select(F.col(id_col), doc_fingerprint(text_col).alias("fingerprint"))
+        docs.selectExpr(id_col, f"{doc_fingerprint(text_col)} AS fingerprint")
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("canonical_id"),
@@ -56,8 +56,8 @@ def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     Outer generate infers no filter; the null row per empty doc is dropped
     after the generate, where it's nearly free."""
     return (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("tok"))
-        .select("doc_id", word_shingles_t("tok", k).alias("shingles"))
+        docs.selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS tok")
+        .selectExpr("doc_id", f"{word_shingles_t('tok', k)} AS shingles")
         .select("doc_id", F.explode_outer("shingles").alias("shingle"))
         .filter(F.col("shingle").isNotNull())
         .distinct()
@@ -330,14 +330,14 @@ def corpus_dedup_index(
     out NULL), and no pre-distinct is needed because MIN is insensitive
     to duplicate shingles — so the only exchange is the map-side-combined
     signature groupBy itself, one combined row per doc per partition."""
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        doc_fingerprint(text_col).alias("fingerprint"),
-        tokens(text_col).alias("__tok"),
-    ).select(
+    sh = docs.selectExpr(
+        f"{id_col} AS doc_id",
+        f"{doc_fingerprint(text_col)} AS fingerprint",
+        f"{tokens(text_col)} AS __tok",
+    ).selectExpr(
         "doc_id",
         "fingerprint",
-        F.explode_outer(word_shingles_t("__tok", k)).alias("shingle"),
+        f"explode_outer({word_shingles_t('__tok', k)}) AS shingle",
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"s{i}|"), F.col("shingle")))).alias(f"m{i}")

@@ -71,7 +71,7 @@ def diversity_sample(
 
     pref: Column = (
         F.col(score_col).cast("double") if score_col is not None
-        else stable_uniform(id_col, salt)
+        else F.expr(stable_uniform(id_col, salt))
     )
     w = Window.partitionBy("cluster_id").orderBy(F.desc("_pref"), F.col(id_col))
     ranked = assigned.withColumn("_pref", pref).withColumn(

@@ -20,7 +20,7 @@ Spark shape — the three stages mirror the paper's linear-scan design:
    ratio. Output is a B-row relation — O(B) driver bytes, the "hashed
    generative model" the paper keeps in memory.
 2. ``dsir_log_weights``: λ enters the plan as a LITERAL B-element array
-   (the pq_encode trick), so per-doc scoring is a pure map-side Column
+   (the pq_encode trick), so per-doc scoring is a pure map-side SQL
    expression — tokens → bucket → element_at(λ) → DECIMAL(18,6) fold.
    NO join, NO shuffle, NO Python: at 100 TB this is one linear scan.
 3. ``gumbel_select``: sampling without replacement ∝ exp(log_w) via the
@@ -36,12 +36,13 @@ the tfidf/PMI/PSI/A-ES oracle rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket
 from ..functions.rounding import round6
 from ..functions.text import tokens
+from ..functions.vectors import sql_double_array
 from .sampling import stable_uniform
 
 DSIR_SALT = "dsir:"       # token → bucket (distinct from every other salt)
@@ -52,8 +53,8 @@ def _token_buckets(df: DataFrame, text_col: str, salt: str) -> DataFrame:
     """(bucket, c) token counts — explode is unavoidable for the count
     aggregate, but only (bucket) int rows shuffle, never text."""
     return (
-        df.select(F.explode(tokens(text_col)).alias("_t"))
-        .select(md5_bucket(F.col("_t"), salt=salt).alias("bucket"))
+        df.selectExpr(f"explode({tokens(text_col)}) AS _t")
+        .selectExpr(f"{md5_bucket('_t', salt=salt)} AS bucket")
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -109,43 +110,18 @@ def collect_logratios(lam: DataFrame, buckets: int = 256) -> list[float]:
     return [got[i] for i in range(buckets)]
 
 
-def dsir_log_weight_expr(text_col: str | Column, lambdas: list[float], *,
-                         salt: str = DSIR_SALT) -> Column:
-    """Per-row importance log-weight as a pure Column expression: each
-    token's λ looked up from the literal bucket array and folded in
-    DECIMAL(18,6) (exact, order-free — matches the oracle's grouped SUM).
-    Empty/NULL text scores 0.0.
-
-    Memoized on (text column name, λ values, salt) — r14: the 256-
-    literal array + fold tree is a pure function of those scalars, so
-    repeated constructs reuse one tree (functions/colcache.py; only
-    the expression is cached, never data)."""
-    if isinstance(text_col, str):
-        from ..functions.colcache import memo_call
-
-        return memo_call(
-            "dsir.log_weight_expr",
-            (text_col, tuple(float(v) for v in lambdas), salt),
-            lambda: _dsir_log_weight_build(text_col, lambdas, salt))
-    return _dsir_log_weight_build(text_col, lambdas, salt)
-
-
-def _dsir_log_weight_build(text_col: str | Column, lambdas: list[float],
-                           salt: str) -> Column:
-    # one 256-element array literal (r14: one py4j round-trip instead
-    # of ~520 — the F.lit(list) form builds the same literal tree)
-    lam_arr = F.lit([float(v) for v in lambdas])
-    terms = F.transform(
-        tokens(text_col),
-        lambda t: F.element_at(lam_arr, md5_bucket(t, salt=salt) + 1).cast(
-            "decimal(18,6)"
-        ),
-    )
-    return F.aggregate(
-        terms,
-        F.lit(0).cast("decimal(28,6)"),
-        lambda acc, v: (acc + v).cast("decimal(28,6)"),
-    ).cast("double")
+def dsir_log_weight_expr(text_col: str, lambdas: list[float], *,
+                         salt: str = DSIR_SALT) -> str:
+    """SQL text of the per-row importance log-weight: each token's λ
+    looked up from the literal bucket array and folded in DECIMAL(18,6)
+    (exact, order-free — matches the oracle's grouped SUM). Empty/NULL
+    text scores 0.0. One parsed string: the 256-literal array and the
+    fold cost one parse to build, not py4j calls per node."""
+    lam_arr = sql_double_array(lambdas)
+    terms = (f"transform({tokens(text_col)}, t -> CAST(element_at("
+             f"{lam_arr}, {md5_bucket('t', salt=salt)} + 1) AS DECIMAL(18,6)))")
+    return (f"CAST(aggregate({terms}, CAST(0 AS DECIMAL(28,6)), "
+            "(acc, v) -> CAST(acc + v AS DECIMAL(28,6))) AS DOUBLE)")
 
 
 def dsir_log_weights(docs: DataFrame, lambdas: list[float], *,
@@ -153,7 +129,7 @@ def dsir_log_weights(docs: DataFrame, lambdas: list[float], *,
     """docs + a ``log_w`` column — map-only (no exchange/join/Python in the
     plan; pinned in tests/test_dsir.py)."""
     return docs.withColumn(
-        "log_w", dsir_log_weight_expr(text_col, lambdas, salt=salt)
+        "log_w", F.expr(dsir_log_weight_expr(text_col, lambdas, salt=salt))
     )
 
 
@@ -164,7 +140,7 @@ def gumbel_select(weighted: DataFrame, n: int, *, id_col: str = "doc_id",
     ln(u)/w key rewritten in log space so weights never exponentiate),
     u content-stable from 52 md5 bits of the salted id. Global top-n =
     TakeOrdered, no full sort; ``rank`` is the draw order."""
-    u = stable_uniform(id_col, salt=salt)
+    u = F.expr(stable_uniform(id_col, salt=salt))
     key = round6(F.col("log_w") - F.log(-F.log(u)))
     ranked = (
         weighted.withColumn("key", key)

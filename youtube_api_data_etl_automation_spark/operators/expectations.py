@@ -34,10 +34,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import sql_ident
+
 
 def _ref(name: str) -> Column:
     """Verbatim column reference (dotted names stay literal)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(sql_ident(name))
 
 
 @dataclass(frozen=True)

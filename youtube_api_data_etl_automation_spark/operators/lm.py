@@ -40,7 +40,7 @@ def _tok_bigrams(docs: DataFrame, id_col: str, text_col: str,
     if tok_col is not None:
         toks = docs.select(F.col(id_col), F.col(tok_col).alias("tok"))
     else:
-        toks = docs.select(F.col(id_col), tokens(text_col).alias("tok"))
+        toks = docs.select(F.col(id_col), F.expr(f"{tokens(text_col)} AS tok"))
     return toks.select(
         id_col, F.explode(adjacent_pairs_t("tok")).alias("p")
     ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -57,7 +57,7 @@ def train_bigram_lm(ref_docs: DataFrame, *, text_col: str = "text",
     bg = _tok_bigrams(ref_docs, id_col, text_col, tok_col)
     c_ab = bg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
     uni_tok = (
-        F.col(tok_col) if tok_col is not None else tokens(text_col)
+        F.col(tok_col) if tok_col is not None else F.expr(tokens(text_col))
     )
     uni = (
         ref_docs.select(F.explode(uni_tok).alias("a"))

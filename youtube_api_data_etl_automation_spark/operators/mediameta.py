@@ -47,8 +47,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..functions.colcache import name_memo
 
 VIDEO_META_SCHEMA = (
     "doc_id bigint, brand string, duration_sec double, n_tracks int, "
@@ -1879,7 +1879,7 @@ def audio_tags(blobs: DataFrame, errors: str = "raise") -> DataFrame:
 
 def sniff_format(blobs: DataFrame,
                  payload_col: str = "payload") -> DataFrame:
-    """Pure-Column magic-byte sniffer over a mixed payload table (r12):
+    """Pure-SQL magic-byte sniffer over a mixed payload table (r12):
     adds ``sniff_family`` / ``sniff_format`` so a heterogeneous crawl
     partition routes to the right decoder family (triage_decode_images,
     decode_audio/audio_subband_features, video_meta, archive_members,
@@ -1903,67 +1903,60 @@ def sniff_format(blobs: DataFrame,
     comment lines); guessing would misroute ordinary text/JSON.
     Those formats route by extension/Content-Type, which crawl
     pipelines carry anyway (see code_quality.lang_from_path)."""
-    fmt, family = _sniff_frags(payload_col)
-    out = blobs.withColumn("sniff_format", fmt)
-    return out.withColumn("sniff_family", family)
+    fmt, family = _sniff_sql(payload_col)
+    out = blobs.withColumn("sniff_format", F.expr(fmt))
+    return out.withColumn("sniff_family", F.expr(family))
 
 
-@name_memo
-def _sniff_frags(payload_col: str):
-    """(format, family) dispatch Columns of :func:`sniff_format`,
-    memoized per payload column name (r14 construct-latency trim —
-    the ~30-branch magic CASE was ~3k py4j round-trips per build;
-    see functions/colcache.py). Expression-identical to the former
-    inline build; the codec_sniff oracle section pins the routing."""
-    from pyspark.sql import Column, functions as F
+def _sniff_sql(payload_col: str) -> tuple[str, str]:
+    """(format, family) dispatch SQL of :func:`sniff_format`: one parsed
+    string each, where the ~30-branch magic CASE built through the Column
+    API cost ~3k py4j round-trips. The codec_sniff oracle section pins
+    the routing."""
 
-    p = F.col(payload_col)
+    def magic(off: int, sig: bytes) -> str:
+        return (f"substring({payload_col}, {off + 1}, {len(sig)})"
+                f" = X'{sig.hex().upper()}'")
 
-    def magic(off: int, sig: bytes) -> Column:
-        return F.substring(p, off + 1, len(sig)) == F.lit(
-            bytearray(sig))
+    def any_magic(*sigs: bytes) -> str:
+        return " OR ".join(magic(0, sig) for sig in sigs)
+
+    def byte_at(pos: int) -> str:
+        return f"substring({payload_col}, {pos}, 1)"
 
     riff = magic(0, b"RIFF")
-    fmt = (
+    arms = (
         # tar first: its magic sits at offset 257, so a tar whose first
         # member NAME starts with a weak 2-3 byte ASCII magic (BM, P6,
         # ID3, GIF89a) would otherwise sniff as that format (r12 review
         # fix); nothing else carries 'ustar' at 257
-        F.when(magic(257, b"ustar"), F.lit("tar"))
-        .when(magic(0, b"\x89PNG\r\n\x1a\n"), F.lit("png"))
-        .when(magic(0, b"\xff\xd8"), F.lit("jpeg"))
-        .when(magic(0, b"GIF87a") | magic(0, b"GIF89a"), F.lit("gif"))
-        .when(riff & magic(8, b"WEBP"), F.lit("webp"))
-        .when(magic(0, b"II*\x00") | magic(0, b"MM\x00*"),
-              F.lit("tiff"))
-        .when(magic(0, b"\x97JB2\r\n\x1a\n"), F.lit("jbig2"))
-        .when(magic(0, b"BM"), F.lit("bmp"))
-        .when(magic(0, b"P4") | magic(0, b"P5") | magic(0, b"P6"),
-              F.lit("pnm"))
-        .when(riff & magic(8, b"WAVE"), F.lit("wav"))
-        .when(magic(0, b"fLaC"), F.lit("flac"))
-        .when(magic(0, b"ID3"), F.lit("mp3"))
-        .when(
-            (F.substring(p, 1, 1) == F.lit(bytearray(b"\xff")))
-            & (F.substring(p, 2, 1) >= F.lit(bytearray(b"\xe0"))),
-            F.lit("mp3"))
-        .when(magic(0, b"OggS"), F.lit("ogg"))
-        .when(magic(4, b"ftyp"), F.lit("mp4"))
-        .when(magic(0, b"\x1a\x45\xdf\xa3"), F.lit("mkv"))
-        .when(riff & magic(8, b"AVI "), F.lit("avi"))
-        .when(magic(0, b"\x1f\x8b"), F.lit("gzip"))
-        .when(
-            magic(0, b"BZh")
-            & (F.substring(p, 4, 1) >= F.lit(bytearray(b"1")))
-            & (F.substring(p, 4, 1) <= F.lit(bytearray(b"9"))),
-            F.lit("bzip2"))
-        .when(magic(0, b"\xfd7zXZ\x00"), F.lit("xz"))
-        .when(magic(0, b"PK\x03\x04") | magic(0, b"PK\x05\x06"),
-              F.lit("zip"))
-        .when(magic(0, b"WARC/"), F.lit("warc"))
-        .when(magic(0, b"%PDF-"), F.lit("pdf"))
-        .when(magic(0, b"{\\rtf"), F.lit("rtf"))
+        (magic(257, b"ustar"), "tar"),
+        (magic(0, b"\x89PNG\r\n\x1a\n"), "png"),
+        (magic(0, b"\xff\xd8"), "jpeg"),
+        (any_magic(b"GIF87a", b"GIF89a"), "gif"),
+        (f"{riff} AND {magic(8, b'WEBP')}", "webp"),
+        (any_magic(b"II*\x00", b"MM\x00*"), "tiff"),
+        (magic(0, b"\x97JB2\r\n\x1a\n"), "jbig2"),
+        (magic(0, b"BM"), "bmp"),
+        (any_magic(b"P4", b"P5", b"P6"), "pnm"),
+        (f"{riff} AND {magic(8, b'WAVE')}", "wav"),
+        (magic(0, b"fLaC"), "flac"),
+        (magic(0, b"ID3"), "mp3"),
+        (f"{byte_at(1)} = X'FF' AND {byte_at(2)} >= X'E0'", "mp3"),
+        (magic(0, b"OggS"), "ogg"),
+        (magic(4, b"ftyp"), "mp4"),
+        (magic(0, b"\x1a\x45\xdf\xa3"), "mkv"),
+        (f"{riff} AND {magic(8, b'AVI ')}", "avi"),
+        (magic(0, b"\x1f\x8b"), "gzip"),
+        (f"{magic(0, b'BZh')} AND {byte_at(4)} >= X'31'"
+         f" AND {byte_at(4)} <= X'39'", "bzip2"),
+        (magic(0, b"\xfd7zXZ\x00"), "xz"),
+        (any_magic(b"PK\x03\x04", b"PK\x05\x06"), "zip"),
+        (magic(0, b"WARC/"), "warc"),
+        (magic(0, b"%PDF-"), "pdf"),
+        (magic(0, b"{\\rtf"), "rtf"),
     )
+    fmt = "CASE " + " ".join(f"WHEN {c} THEN '{f}'" for c, f in arms) + " END"
     family_of = {
         "image": ("png", "jpeg", "gif", "webp", "tiff", "jbig2", "bmp",
                   "pnm"),
@@ -1972,10 +1965,7 @@ def _sniff_frags(payload_col: str):
         "archive": ("gzip", "zip", "tar", "warc", "bzip2", "xz"),
         "document": ("pdf", "rtf"),
     }
-    fam = F.lit("unknown")
-    family = None
-    for name, members in family_of.items():
-        cond = F.col("sniff_format").isin(*members)
-        family = F.when(cond, name) if family is None \
-            else family.when(cond, name)
-    return fmt, family.otherwise(fam)
+    family = "CASE " + " ".join(
+        f"WHEN sniff_format IN ({', '.join(map(repr, members))}) THEN '{name}'"
+        for name, members in family_of.items()) + " ELSE 'unknown' END"
+    return fmt, family

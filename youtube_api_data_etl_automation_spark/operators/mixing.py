@@ -96,9 +96,8 @@ def apply_mixture(
     ).drop("__mix_src")
     whole = F.floor("rate").cast("int")
     frac = F.col("rate") - whole
-    bucket = md5_bucket(
-        F.coalesce(F.col(id_col).cast("string"), F.lit("__null_id__")), salt="mix"
-    )
+    bucket = F.expr(md5_bucket(
+        f"coalesce(CAST({id_col} AS STRING), '__null_id__')", salt="mix"))
     extra = (bucket < frac * 256).cast("int")
     n_copies = (whole + extra).alias("n_copies")
     return (

@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round6
+from ..functions.rounding import round6, spark_round6
+from ..functions.text import sql_ident
 from ..functions.vectors import lit_double_array, sql_double_array
 from .similarity import _rank_topk, _rename_query
 
@@ -63,17 +64,6 @@ def _subvec(vec_col: str | F.Column, s: int, dsub: int) -> F.Column:
 # the ann_topk pq_adc oracle and the numpy differentials in tests/test_pq.
 
 
-def _qn(name: str) -> str:
-    """Backtick-quote a column name for SQL text."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _round6_sql(x: str) -> str:
-    """Spark-SQL text of functions.rounding.round6 (D-suffixed literals —
-    plain decimals would parse as DECIMAL and change the expression)."""
-    return f"floor(({x}) * 1000000.0D + 0.5D) / 1000000.0D"
-
-
 def _subvec_sql(vec_sql: str, s: int, dsub: int) -> str:
     return (f"transform(slice({vec_sql}, {s * dsub + 1}, {dsub}), "
             "x -> CAST(x AS DOUBLE))")
@@ -90,7 +80,7 @@ def _cc_sql(cv: list[float]) -> str:
 
 
 def _assign_score_sql(xs_sql: str, cv: list[float]) -> str:
-    return _round6_sql(f"{_dot_sql(xs_sql, cv)} - 0.5D * {_cc_sql(cv)}")
+    return spark_round6(f"{_dot_sql(xs_sql, cv)} - 0.5D * {_cc_sql(cv)}")
 
 
 def _argmax_sql(scores: list[str]) -> str:
@@ -103,7 +93,7 @@ def _codes_sql(vec_name: str, codebooks: Codebooks) -> str:
     """The whole pq_encode ``codes`` array as one SQL string."""
     m, k = len(codebooks), len(codebooks[0])
     dsub = len(codebooks[0][0])
-    v = _qn(vec_name)
+    v = sql_ident(vec_name)
     return "array(" + ",".join(
         _argmax_sql([
             _assign_score_sql(_subvec_sql(v, s, dsub), codebooks[s][j])
@@ -240,18 +230,18 @@ def _adc_cosine(codebooks: Codebooks) -> F.Column:
         dots = "array(" + ",".join(_dot_sql(qs, cv) for cv in cb) + ")"
         ccs = "array(" + ",".join(_cc_sql(cv) for cv in cb) + ")"
         adc_terms.append(
-            "CAST(" + _round6_sql(f"element_at({dots}, {code_s} + 1)")
+            "CAST(" + spark_round6(f"element_at({dots}, {code_s} + 1)")
             + " AS DECIMAL(18,6))"
         )
         n2_terms.append(
-            "CAST(" + _round6_sql(f"element_at({ccs}, {code_s} + 1)")
+            "CAST(" + spark_round6(f"element_at({ccs}, {code_s} + 1)")
             + " AS DECIMAL(18,6))"
         )
     adc = "CAST(" + " + ".join(adc_terms) + " AS DOUBLE)"
     n2 = "CAST(" + " + ".join(n2_terms) + " AS DOUBLE)"
     qq = ("aggregate(transform(query_vec, x -> CAST(x AS DOUBLE)), "
           "0.0D, (acc, v) -> acc + v * v)")
-    return F.expr(_round6_sql(
+    return F.expr(spark_round6(
         f"{adc} / nullif(sqrt({qq}) * sqrt({n2}), 0.0D)"))
 
 

@@ -50,8 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.colcache import memo_call
-from ..functions.rounding import round6
+from ..functions.rounding import round6, spark_round6
+from ..functions.text import sql_ident, sql_str
+from ..functions.vectors import sql_double
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL = (T.FloatType, T.DoubleType)
@@ -66,7 +67,7 @@ def _ref(name: str) -> Column:
     dotted or otherwise exotic column names (flattened JSON ingest), which
     bare F.col/df[...] would parse as nested-field access. Backtick
     quoting (with `` escaping) makes the reference verbatim."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(sql_ident(name))
 
 
 def _resolve_cols(
@@ -86,10 +87,10 @@ def _stats_aggs(
     names: Sequence[str],
     exact_distinct: bool,
     timestamp_format: str,
-) -> list[Column]:
-    """The per-column stats block as aggregate columns (``__n_rows`` +
-    ``__p{i}__*`` per profiled column) — the shared core of
-    :func:`column_stats` and :func:`fused_profile`.
+) -> list[tuple[str, str]]:
+    """The per-column stats block as (alias, SQL aggregate) pairs
+    (``__n_rows`` + ``__p{i}__*`` per profiled column) — the shared core
+    of :func:`column_stats` and :func:`fused_profile`.
 
     In exact mode the distinct counts are OMITTED here — they go in their
     own aggregate (see :func:`_merge_nd`): a
@@ -102,72 +103,70 @@ def _stats_aggs(
     5×N sort is gone at any scale. Approx mode keeps the HLL sketches in
     this same aggregate: no Expand exists there, so the single-scan fused
     form is strictly better."""
-    # memoized on the scalar signature (r14 construct-latency trim —
-    # functions/colcache.py): the profile family builds this ~7-agg-per-
-    # column block for every profile/drift construct; a fresh list is
-    # returned because fused_profile appends to it
-    sig = (tuple(names),
-           tuple(fields[c].simpleString() for c in names),
-           exact_distinct, timestamp_format)
-    return list(memo_call("profile._stats_aggs", sig,
-                          lambda: _stats_aggs_build(
-                              fields, names, exact_distinct,
-                              timestamp_format)))
-
-
-def _stats_aggs_build(
-    fields: dict[str, T.DataType],
-    names: Sequence[str],
-    exact_distinct: bool,
-    timestamp_format: str,
-) -> tuple[Column, ...]:
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n_rows")]
+    fmt = sql_str(timestamp_format)
+    aggs = [("__n_rows", "count(1)")]
     for i, c in enumerate(names):
         dt = fields[c]
-        col = _ref(c)  # verbatim name; internal agg aliases are positional
-        aggs.append(F.count(col).alias(f"__p{i}__nn"))
+        col = sql_ident(c)  # verbatim name; internal agg aliases are positional
+        aggs.append((f"__p{i}__nn", f"count({col})"))
         if not exact_distinct:
-            aggs.append(
-                F.approx_count_distinct(col).cast("long").alias(f"__p{i}__nd")
-            )
+            aggs.append((f"__p{i}__nd",
+                         f"CAST(approx_count_distinct({col}) AS BIGINT)"))
         if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            mn = F.date_format(F.min(col), timestamp_format)
-            mx = F.date_format(F.max(col), timestamp_format)
+            mn = f"date_format(min({col}), {fmt})"
+            mx = f"date_format(max({col}), {fmt})"
         elif isinstance(dt, _FRACTIONAL):
-            mn = F.min(col).cast("decimal(24,6)").cast("string")
-            mx = F.max(col).cast("decimal(24,6)").cast("string")
+            mn = f"CAST(CAST(min({col}) AS DECIMAL(24,6)) AS STRING)"
+            mx = f"CAST(CAST(max({col}) AS DECIMAL(24,6)) AS STRING)"
         elif isinstance(
             dt, _INTEGRAL + (T.StringType, T.DateType, T.BooleanType, T.DecimalType)
         ):
-            mn = F.min(col).cast("string")
-            mx = F.max(col).cast("string")
+            mn = f"CAST(min({col}) AS STRING)"
+            mx = f"CAST(max({col}) AS STRING)"
         else:  # arrays/structs/maps/binary: no portable rendering
-            mn = _null_of("string")
-            mx = _null_of("string")
-        aggs.append(mn.alias(f"__p{i}__min"))
-        aggs.append(mx.alias(f"__p{i}__max"))
+            mn = mx = "CAST(NULL AS STRING)"
+        aggs.append((f"__p{i}__min", mn))
+        aggs.append((f"__p{i}__max", mx))
         if _is_numeric(dt):
-            avg = F.when(
-                F.count(col) > 0,
-                round6(
-                    F.sum(col.cast("decimal(24,6)")).cast("double") / F.count(col)
-                ),
-            )
+            avg = _decimal_mean(col)
         else:
-            avg = _null_of("double")
-        aggs.append(avg.alias(f"__p{i}__avg"))
+            avg = "CAST(NULL AS DOUBLE)"
+        aggs.append((f"__p{i}__avg", avg))
         if isinstance(dt, T.StringType):
-            alen = F.when(
-                F.count(col) > 0,
-                round6(
-                    F.sum(F.length(col).cast("decimal(24,6)")).cast("double")
-                    / F.count(col)
-                ),
-            )
+            alen = _decimal_mean(f"length({col})", col)
         else:
-            alen = _null_of("double")
-        aggs.append(alen.alias(f"__p{i}__len"))
-    return tuple(aggs)
+            alen = "CAST(NULL AS DOUBLE)"
+        aggs.append((f"__p{i}__len", alen))
+    return aggs
+
+
+def _decimal_mean(x: str, col: str | None = None) -> str:
+    """round6 of the decimal-exact mean of ``x`` over the non-NULL rows of
+    ``col`` (default ``x``); NULL when there are none."""
+    n = f"count({col or x})"
+    return (f"CASE WHEN {n} > 0 THEN " + spark_round6(
+        f"CAST(sum(CAST({x} AS DECIMAL(24,6))) AS DOUBLE) / {n}") + " END")
+
+
+def _agg_row(df: DataFrame, aggs: Sequence[tuple[str, str]],
+             extra: Sequence[Column] = (),
+             group: Column | None = None) -> DataFrame:
+    """One aggregate of ``df`` (global, or by ``group``) over the (alias,
+    SQL) pairs plus any Column aggregates in ``extra``, one output column
+    per alias. The SQL block parses as ONE named_struct — three py4j
+    calls whatever its width — and the projection that flattens it
+    collapses back into the aggregate during optimization."""
+    block = [F.expr(f"{_named_struct(aggs)} AS __agg")] if aggs else []
+    gd = df.groupBy(group) if group is not None else df.groupBy()
+    row = gd.agg(*block, *extra)
+    return row.selectExpr(*["__agg.*" if c == "__agg" else c
+                            for c in row.columns])
+
+
+def _named_struct(fields: Sequence[tuple[str, str]]) -> str:
+    """``named_struct`` SQL of (name, SQL value) pairs."""
+    return "named_struct(" + ", ".join(
+        f"{sql_str(n)}, {v}" for n, v in fields) + ")"
 
 
 def _merge_nd(
@@ -196,32 +195,33 @@ def _merge_nd(
     must live on this side for the same reason (e.g. ``fused_profile``'s
     ``unique`` expectation, whose violation count is
     ``count - count_distinct``)."""
-    nd_aggs = memo_call(
-        "profile._merge_nd.nd", tuple(names),
-        lambda: tuple(
-            F.count_distinct(_ref(c)).cast("long").alias(f"__p{i}__nd")
-            for i, c in enumerate(names)
-        ))
-    nd_row = df.agg(*nd_aggs, *extra)
+    nd_row = _agg_row(df, [
+        (f"__p{i}__nd", f"CAST(count(DISTINCT {sql_ident(c)}) AS BIGINT)")
+        for i, c in enumerate(names)
+    ], extra)
     both = row.unionByName(nd_row, allowMissingColumns=True)
-    fold = memo_call(
-        "profile._merge_nd.fold", tuple(both.columns),
-        lambda: tuple(F.max(c).alias(c) for c in both.columns))
-    return both.agg(*fold)
+    return both.selectExpr(*[f"max({c}) AS {c}" for c in both.columns])
 
 
-def _stat_struct_fields(i: int, c: str, dt: T.DataType) -> dict[str, Column]:
+def _stat_struct_fields(i: int, c: str, dt: T.DataType) -> dict[str, str]:
     return {
-        "column_name": F.lit(c),
-        "dtype": F.lit(dt.simpleString()),
-        "n_rows": F.col("__n_rows"),
-        "n_nulls": F.col("__n_rows") - F.col(f"__p{i}__nn"),
-        "n_distinct": F.col(f"__p{i}__nd"),
-        "min_value": F.col(f"__p{i}__min"),
-        "max_value": F.col(f"__p{i}__max"),
-        "avg_value": F.col(f"__p{i}__avg"),
-        "avg_len": F.col(f"__p{i}__len"),
+        "column_name": sql_str(c),
+        "dtype": sql_str(dt.simpleString()),
+        "n_rows": "__n_rows",
+        "n_nulls": f"__n_rows - __p{i}__nn",
+        "n_distinct": f"__p{i}__nd",
+        "min_value": f"__p{i}__min",
+        "max_value": f"__p{i}__max",
+        "avg_value": f"__p{i}__avg",
+        "avg_len": f"__p{i}__len",
     }
+
+
+def _inline(structs: Sequence[dict[str, str]]) -> str:
+    """SQL text exploding one row into one row per struct (field name →
+    SQL value): the driver-free unpivot of a 1-row aggregate."""
+    return "inline(array(" + ", ".join(
+        _named_struct(st.items()) for st in structs) + "))"
 
 
 def column_stats(
@@ -249,22 +249,12 @@ def column_stats(
     string length) for string columns; both decimal-exact then round6.
     """
     fields, names = _resolve_cols(df, cols)
-    row = df.agg(*_stats_aggs(fields, names, exact_distinct, timestamp_format))
+    row = _agg_row(df, _stats_aggs(fields, names, exact_distinct,
+                                   timestamp_format))
     if exact_distinct:
         row = _merge_nd(df, row, names)
-    sig = (tuple(names),
-           tuple(fields[c].simpleString() for c in names))
-    unpivot = memo_call(
-        "profile.column_stats.unpivot", sig,
-        lambda: F.inline(F.array(*[
-            F.struct(*[
-                col.alias(name)
-                for name, col in
-                _stat_struct_fields(i, c, fields[c]).items()
-            ])
-            for i, c in enumerate(names)
-        ])))
-    return row.select(unpivot)
+    return row.selectExpr(_inline([
+        _stat_struct_fields(i, c, fields[c]) for i, c in enumerate(names)]))
 
 
 def numeric_histogram(
@@ -288,32 +278,27 @@ def numeric_histogram(
         raise ValueError(f"bins must be positive, got {bins}")
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi})")
-    width = (float(hi) - float(lo)) / bins
-
-    def _frags() -> tuple[Column, ...]:
-        x = _ref(col).cast("double")
-        b = F.floor((x - F.lit(float(lo))) / F.lit(width)).cast("int")
-        b = F.least(F.greatest(b, F.lit(0)), F.lit(bins - 1))
-        return (
-            x.isNotNull() & ~F.isnan(x),
-            b.alias("bucket"),
-            F.count(F.lit(1)).alias("bucket_n"),
-            (F.lit(float(lo)) + F.col("bucket") * F.lit(width))
-            .alias("bucket_lo"),
-            (F.lit(float(lo)) + (F.col("bucket") + 1) * F.lit(width))
-            .alias("bucket_hi"),
-        )
-
-    keep, bucket, n, b_lo, b_hi = memo_call(
-        "profile.numeric_histogram",
-        (col, float(lo), float(hi), int(bins)), _frags)
+    x, bucket = _bucket_sql(col, float(lo), float(hi), int(bins))
+    width = sql_double((float(hi) - float(lo)) / bins)
+    lo_s = sql_double(float(lo))
     return (
-        df.filter(keep)
-        .select(bucket)
+        df.filter(f"{x} IS NOT NULL AND NOT isnan({x})")
+        .selectExpr(f"{bucket} AS bucket")
         .groupBy("bucket")
-        .agg(n)
-        .select("bucket", b_lo, b_hi, "bucket_n")
+        .agg(F.expr("count(1) AS bucket_n"))
+        .selectExpr("bucket", f"{lo_s} + bucket * {width} AS bucket_lo",
+                    f"{lo_s} + (bucket + 1) * {width} AS bucket_hi",
+                    "bucket_n")
     )
+
+
+def _bucket_sql(col: str, lo: float, hi: float, bins: int) -> tuple[str, str]:
+    """(value, clamped bucket) SQL of a fixed histogram grid over ``col``:
+    ``floor((x - lo) / width)`` clamped into [0, bins)."""
+    x = f"CAST({sql_ident(col)} AS DOUBLE)"
+    width = sql_double((hi - lo) / bins)
+    b = f"CAST(floor(({x} - {sql_double(lo)}) / {width}) AS INT)"
+    return x, f"least(greatest({b}, 0), {bins - 1})"
 
 
 def top_values(df: DataFrame, col: str, k: int = 10) -> DataFrame:
@@ -365,35 +350,10 @@ _WIDE_FIELDS: tuple[tuple[str, str], ...] = (
 )
 
 
-_TYPED_NULLS: dict[tuple[int, str], Column] = {}
-
-
-def _null_of(t: str) -> Column:
-    """``lit(NULL) CAST t`` with the Column cached per SparkContext —
-    the profiler's wide unpivots NULL-pad ~20 fields per section struct
-    and build dozens of structs per plan, so the two py4j round-trips
-    per pad (lit + cast) were most of the profile family's
-    plan-construction latency (guide §7.3). A Column is an immutable
-    expression wrapper, safe to reuse across plans; the alias is still
-    applied per use (fresh Alias per field). Keyed by the live
-    SparkContext id so a restarted JVM cannot serve stale references."""
-    from pyspark import SparkContext
-
-    key = (id(SparkContext._active_spark_context), t)
-    col = _TYPED_NULLS.get(key)
-    if col is None:
-        col = F.lit(None).cast(t)
-        _TYPED_NULLS[key] = col
-    return col
-
-
-def _wide_struct(given: dict[str, Column]) -> Column:
-    return F.struct(
-        *[
-            (given[n] if n in given else _null_of(t)).alias(n)
-            for n, t in _WIDE_FIELDS
-        ]
-    )
+def _wide_struct(given: dict[str, str]) -> dict[str, str]:
+    """The wide profiler row: ``given`` SQL values, NULL-padded per field."""
+    return {n: given.get(n, f"CAST(NULL AS {t.upper()})")
+            for n, t in _WIDE_FIELDS}
 
 
 def fused_profile(
@@ -453,26 +413,19 @@ def fused_profile(
         if not hi > lo:
             raise ValueError(f"need hi > lo, got [{lo}, {hi})")
     aggs = _stats_aggs(fields, names, exact_distinct, timestamp_format)
+    main: list[Column] = []
     side: list[Column] = []  # distinct-involving aggs: see _merge_nd
     for j, c in enumerate(checks):
         va = violation_agg(c).cast("long").alias(f"__c{j}")
-        (side if c.kind == "unique" else aggs).append(va)
+        (side if c.kind == "unique" else main).append(va)
     for j, (col, lo, hi, bins) in enumerate(hists):
-        x = _ref(col).cast("double")
-        width = (hi - lo) / bins
-        b = F.floor((x - F.lit(lo)) / F.lit(width)).cast("int")
-        b = F.least(F.greatest(b, F.lit(0)), F.lit(bins - 1))
-        valid = x.isNotNull() & ~F.isnan(x)
+        x, b = _bucket_sql(col, lo, hi, bins)
         for i in range(bins):
             # coalesce: SUM over zero rows is NULL, but an empty bucket is 0
-            aggs.append(
-                F.coalesce(
-                    F.sum(F.when(valid & (b == i), 1).otherwise(0)), F.lit(0)
-                )
-                .cast("long")
-                .alias(f"__h{j}_{i}")
-            )
-    row = df.agg(*aggs)
+            aggs.append((f"__h{j}_{i}", (
+                f"CAST(coalesce(sum(CASE WHEN {x} IS NOT NULL AND NOT isnan({x})"
+                f" AND {b} = {i} THEN 1 ELSE 0 END), 0) AS BIGINT)")))
+    row = _agg_row(df, aggs, main)
     if exact_distinct:
         row = _merge_nd(df, row, names, extra=side)
     elif side:
@@ -481,57 +434,34 @@ def fused_profile(
         # or it would drag the whole agg onto the sorted Expand path.
         row = _merge_nd(df, row, [], extra=side)
 
-    def _structs() -> Column:
-        structs = [
-            _wide_struct(
-                {"section": F.lit("stats"),
-                 **_stat_struct_fields(i, c, fields[c])}
-            )
-            for i, c in enumerate(names)
-        ]
-        for j, c in enumerate(checks):
-            structs.append(
-                _wide_struct(
-                    {
-                        "section": F.lit("checks"),
-                        "column_name": F.lit(c.column),
-                        "n_rows": F.col("__n_rows"),
-                        "check": F.lit(c.name),
-                        "n_violations": F.col(f"__c{j}"),
-                        "passed": F.col(f"__c{j}") == 0,
-                    }
-                )
-            )
-        for j, (col, lo, hi, bins) in enumerate(hists):
-            width = (hi - lo) / bins
-            for i in range(bins):
-                structs.append(
-                    _wide_struct(
-                        {
-                            "section": F.lit("hist"),
-                            "column_name": F.lit(col),
-                            "bucket": F.lit(i),
-                            "bucket_lo": F.lit(lo + i * width),
-                            "bucket_hi": F.lit(lo + (i + 1) * width),
-                            "bucket_n": F.col(f"__h{j}_{i}"),
-                        }
-                    )
-                )
-        return F.inline(F.array(*structs))
-
-    # the wide unpivot is a pure function of the profiled signature,
-    # the check (name, column) list, and the hist grid (r14 memo —
-    # ~40 wide structs × ~20 padded fields each rebuilt per construct)
-    unpivot = memo_call(
-        "profile.fused_profile.unpivot",
-        (tuple(names),
-         tuple(fields[c].simpleString() for c in names),
-         tuple((c.name, c.column) for c in checks),
-         tuple(hists)),
-        _structs)
-    out = row.select(unpivot)
+    structs = [
+        _wide_struct({"section": "'stats'",
+                      **_stat_struct_fields(i, c, fields[c])})
+        for i, c in enumerate(names)
+    ]
+    for j, c in enumerate(checks):
+        structs.append(_wide_struct({
+            "section": "'checks'",
+            "column_name": sql_str(c.column),
+            "n_rows": "__n_rows",
+            "check": sql_str(c.name),
+            "n_violations": f"__c{j}",
+            "passed": f"__c{j} = 0",
+        }))
+    for j, (col, lo, hi, bins) in enumerate(hists):
+        width = (hi - lo) / bins
+        for i in range(bins):
+            structs.append(_wide_struct({
+                "section": "'hist'",
+                "column_name": sql_str(col),
+                "bucket": str(i),
+                "bucket_lo": sql_double(lo + i * width),
+                "bucket_hi": sql_double(lo + (i + 1) * width),
+                "bucket_n": f"__h{j}_{i}",
+            }))
     # Empty buckets are ABSENT, matching numeric_histogram's groupBy shape.
-    return out.filter((F.col("section") != "hist") | (F.col("bucket_n") > 0))
+    return row.selectExpr(_inline(structs)).filter(
+        "section != 'hist' OR bucket_n > 0")
 
 
 def profile_drift(
@@ -666,83 +596,45 @@ def histogram_drift(
     second time (the first version of this operator did exactly that —
     two extra scans of the tables that built them).
     """
-    # every Column tree below is a pure function of (psi_threshold,
-    # epsilon) over fixed names — memoized per process (r15 construct
-    # trim: the drift row evaluates this operator twice per construct,
-    # ~1.7k py4j round-trips of identical trees; see colcache.py)
-    p_sel, c_sel, mid_sel, aggs, final = memo_call(
-        "profile.histogram_drift.frags",
-        (float(psi_threshold), float(epsilon)),
-        lambda: _hist_drift_frags(float(psi_threshold), float(epsilon)))
-    p = prev.select(*p_sel)
-    c = cur.select(*c_sel)
+    # every step is SQL text over fixed names: one parsed string per
+    # column (the drift row evaluates this operator twice per construct)
+    side = ("bucket", "bucket_lo AS _{0}_lo", "bucket_hi AS _{0}_hi",
+            "bucket_n AS _{0}_n")
+    p = prev.selectExpr(*[f.format("p") for f in side])
+    c = cur.selectExpr(*[f.format("c") for f in side])
     j = c.join(p, "bucket", "full_outer")
-    return j.select(*mid_sel).agg(*aggs).select(*final)
-
-
-def _hist_drift_frags(psi_threshold: float, epsilon: float) -> tuple:
-    """Column fragments of :func:`histogram_drift` — expression-
-    identical to the former inline builds (the drift oracle rows pin
-    the values)."""
-    p_sel = (
-        F.col("bucket"),
-        F.col("bucket_lo").alias("_p_lo"),
-        F.col("bucket_hi").alias("_p_hi"),
-        F.col("bucket_n").alias("_p_n"),
-    )
-    c_sel = (
-        F.col("bucket"),
-        F.col("bucket_lo").alias("_c_lo"),
-        F.col("bucket_hi").alias("_c_hi"),
-        F.col("bucket_n").alias("_c_n"),
-    )
-    grid_ok = (
-        F.col("_p_lo").isNull()
-        | F.col("_c_lo").isNull()
-        | ((F.col("_p_lo") == F.col("_c_lo")) & (F.col("_p_hi") == F.col("_c_hi")))
-    )
-    pn = F.coalesce(F.col("_p_n"), F.lit(0)).cast("double")
-    cn = F.coalesce(F.col("_c_n"), F.lit(0)).cast("double")
+    grid_ok = ("_p_lo IS NULL OR _c_lo IS NULL"
+               " OR (_p_lo = _c_lo AND _p_hi = _c_hi)")
+    pn = "CAST(coalesce(_p_n, 0) AS DOUBLE)"
+    cn = "CAST(coalesce(_c_n, 0) AS DOUBLE)"
     # Totals via an unpartitioned window over the ≤bins-row join, NOT a
     # separate aggregate cross-joined back: that second shape executes the
     # join lineage — histogram builds AND their source scans — twice. The
     # single-partition window is trivial at ≤bins rows and keeps each
     # histogram side at exactly one source scan.
-    w = Window.partitionBy(F.lit(1))
-    tp, tc = F.sum(pn).over(w), F.sum(cn).over(w)
+    tp = f"sum({pn}) OVER (PARTITION BY 1)"
+    tc = f"sum({cn}) OVER (PARTITION BY 1)"
+    eps = sql_double(float(epsilon))
     # probability mass per bucket, epsilon-smoothed; an EMPTY relation on
     # either side (total 0) yields epsilon everywhere => psi 0, not NaN
-    pp = F.greatest(
-        F.when(tp > 0, pn / tp).otherwise(F.lit(0.0)), F.lit(float(epsilon))
-    )
-    pc = F.greatest(
-        F.when(tc > 0, cn / tc).otherwise(F.lit(0.0)), F.lit(float(epsilon))
-    )
+    pp = f"greatest(CASE WHEN {tp} > 0 THEN {pn} / {tp} ELSE 0.0D END, {eps})"
+    pc = f"greatest(CASE WHEN {tc} > 0 THEN {cn} / {tc} ELSE 0.0D END, {eps})"
     # the guard rides the summed term (not a separate pass, and not
     # prunable): any mismatched-grid bucket fails the job with the message
-    term = F.when(grid_ok, (pc - pp) * F.log(pc / pp)).otherwise(
-        F.raise_error(
-            F.lit(
-                "histogram grids disagree; build both histograms with "
-                "the same (lo, hi, bins)"
-            )
-        ).cast("double")
+    term = (f"CASE WHEN {grid_ok} THEN ({pc} - {pp}) * ln({pc} / {pp}) "
+            "ELSE CAST(raise_error('histogram grids disagree; build both "
+            "histograms with the same (lo, hi, bins)') AS DOUBLE) END")
+    return j.selectExpr(
+        f"{term} AS _t", f"{tp} AS _tp", f"{tc} AS _tc",
+    ).selectExpr(
+        "coalesce(sum(_t), 0.0D) AS psi",
+        "CAST(count(1) AS BIGINT) AS n_buckets",
+        "CAST(coalesce(max(_tp), 0.0D) AS BIGINT) AS prev_total",
+        "CAST(coalesce(max(_tc), 0.0D) AS BIGINT) AS cur_total",
+    ).selectExpr(
+        f"{spark_round6('psi')} AS psi", "n_buckets", "prev_total",
+        "cur_total", f"psi > {sql_double(float(psi_threshold))} AS flagged",
     )
-    mid_sel = (term.alias("_t"), tp.alias("_tp"), tc.alias("_tc"))
-    aggs = (
-        F.coalesce(F.sum("_t"), F.lit(0.0)).alias("psi"),
-        F.count(F.lit(1)).cast("long").alias("n_buckets"),
-        F.coalesce(F.max("_tp"), F.lit(0.0)).cast("long").alias("prev_total"),
-        F.coalesce(F.max("_tc"), F.lit(0.0)).cast("long").alias("cur_total"),
-    )
-    final = (
-        round6(F.col("psi")).alias("psi"),
-        F.col("n_buckets"),
-        F.col("prev_total"),
-        F.col("cur_total"),
-        (F.col("psi") > F.lit(float(psi_threshold))).alias("flagged"),
-    )
-    return p_sel, c_sel, mid_sel, aggs, final
 
 
 # ---------------------------------------------------------------------------
@@ -821,95 +713,63 @@ def profile_state(
     when cardinality is not needed (``n_distinct`` derives as NULL).
     """
     fields, names = _resolve_cols(df, cols)
-    sig = (tuple(names),
-           tuple(fields[c].simpleString() for c in names),
-           track_distinct, int(lgk), timestamp_format,
-           batch_expr is not None)
-    aggs, unpivot = memo_call(
-        "profile.profile_state", sig,
-        lambda: _profile_state_frags(
-            fields, names, track_distinct, lgk, timestamp_format,
-            batch_expr is not None))
-    if batch_expr is not None:
-        row = df.groupBy(batch_expr.cast("string").alias("__batch")).agg(*aggs)
-    else:
-        row = df.agg(*aggs)
-    return row.select(unpivot)
-
-
-def _profile_state_frags(
-    fields: dict[str, T.DataType],
-    names: Sequence[str],
-    track_distinct: bool,
-    lgk: int,
-    timestamp_format: str,
-    batched: bool,
-) -> tuple:
-    """(agg columns, inline-unpivot Column) of :func:`profile_state` —
-    pure in the scalar signature, memoized by the caller (r14)."""
-    aggs: list[Column] = [F.count(F.lit(1)).cast("long").alias("__n_rows")]
+    aggs = [("__n_rows", "CAST(count(1) AS BIGINT)")]
+    null_dec = "CAST(NULL AS DECIMAL(38,6))"
     for i, c in enumerate(names):
         dt = fields[c]
-        col = _ref(c)
-        aggs.append(F.count(col).cast("long").alias(f"__s{i}__nn"))
+        col = sql_ident(c)
+        aggs.append((f"__s{i}__nn", f"CAST(count({col}) AS BIGINT)"))
         if _is_numeric(dt):
-            aggs.append(
-                F.sum(col.cast("decimal(24,6)"))
-                .cast("decimal(38,6)")
-                .alias(f"__s{i}__sum")
-            )
-            aggs.append(F.min(col).cast("decimal(38,6)").alias(f"__s{i}__mnn"))
-            aggs.append(F.max(col).cast("decimal(38,6)").alias(f"__s{i}__mxn"))
+            aggs += [
+                (f"__s{i}__sum", "CAST(sum(CAST(" + col
+                 + " AS DECIMAL(24,6))) AS DECIMAL(38,6))"),
+                (f"__s{i}__mnn", f"CAST(min({col}) AS DECIMAL(38,6))"),
+                (f"__s{i}__mxn", f"CAST(max({col}) AS DECIMAL(38,6))"),
+            ]
         else:
-            aggs.append(_null_of("decimal(38,6)").alias(f"__s{i}__sum"))
-            aggs.append(_null_of("decimal(38,6)").alias(f"__s{i}__mnn"))
-            aggs.append(_null_of("decimal(38,6)").alias(f"__s{i}__mxn"))
+            aggs += [(f"__s{i}__{k}", null_dec) for k in ("sum", "mnn", "mxn")]
         if isinstance(dt, T.StringType):
-            slen = (
-                F.sum(F.length(col).cast("decimal(24,6)"))
-                .cast("decimal(38,6)")
-                .alias(f"__s{i}__len")
-            )
+            slen = (f"CAST(sum(CAST(length({col}) AS DECIMAL(24,6)))"
+                    " AS DECIMAL(38,6))")
         else:
-            slen = _null_of("decimal(38,6)").alias(f"__s{i}__len")
-        aggs.append(slen)
+            slen = null_dec
+        aggs.append((f"__s{i}__len", slen))
         if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            mns = F.date_format(F.min(col), timestamp_format)
-            mxs = F.date_format(F.max(col), timestamp_format)
+            fmt = sql_str(timestamp_format)
+            mns = f"date_format(min({col}), {fmt})"
+            mxs = f"date_format(max({col}), {fmt})"
         elif isinstance(dt, (T.StringType, T.DateType, T.BooleanType)):
-            mns = F.min(col).cast("string")
-            mxs = F.max(col).cast("string")
+            mns = f"CAST(min({col}) AS STRING)"
+            mxs = f"CAST(max({col}) AS STRING)"
         else:
-            mns = _null_of("string")
-            mxs = _null_of("string")
-        aggs.append(mns.alias(f"__s{i}__mns"))
-        aggs.append(mxs.alias(f"__s{i}__mxs"))
+            mns = mxs = "CAST(NULL AS STRING)"
+        aggs.append((f"__s{i}__mns", mns))
+        aggs.append((f"__s{i}__mxs", mxs))
         if track_distinct:
-            sk = F.hll_sketch_agg(
-                F.when(col.isNotNull(), F.xxhash64(col)), F.lit(int(lgk))
-            )
+            sk = (f"hll_sketch_agg(CASE WHEN {col} IS NOT NULL "
+                  f"THEN xxhash64({col}) END, {int(lgk)})")
         else:
-            sk = _null_of("binary")
-        aggs.append(sk.alias(f"__s{i}__hll"))
-    batch_col = F.col("__batch") if batched else F.lit("all")
-    structs = [
-        F.struct(
-            batch_col.alias("batch_id"),
-            F.lit(c).alias("column_name"),
-            F.lit(fields[c].simpleString()).alias("dtype"),
-            F.col("__n_rows").alias("n_rows"),
-            F.col(f"__s{i}__nn").alias("n_nonnull"),
-            F.col(f"__s{i}__sum").alias("sum_value"),
-            F.col(f"__s{i}__len").alias("sum_len"),
-            F.col(f"__s{i}__mnn").alias("min_num"),
-            F.col(f"__s{i}__mxn").alias("max_num"),
-            F.col(f"__s{i}__mns").alias("min_str"),
-            F.col(f"__s{i}__mxs").alias("max_str"),
-            F.col(f"__s{i}__hll").alias("distinct_sketch"),
-        )
-        for i, c in enumerate(names)
-    ]
-    return tuple(aggs), F.inline(F.array(*structs))
+            sk = "CAST(NULL AS BINARY)"
+        aggs.append((f"__s{i}__hll", sk))
+    group = None
+    if batch_expr is not None:
+        group = batch_expr.cast("string").alias("__batch")
+    row = _agg_row(df, aggs, group=group)
+    batch = "__batch" if group is not None else "'all'"
+    return row.selectExpr(_inline([{
+        "batch_id": batch,
+        "column_name": sql_str(c),
+        "dtype": sql_str(fields[c].simpleString()),
+        "n_rows": "__n_rows",
+        "n_nonnull": f"__s{i}__nn",
+        "sum_value": f"__s{i}__sum",
+        "sum_len": f"__s{i}__len",
+        "min_num": f"__s{i}__mnn",
+        "max_num": f"__s{i}__mxn",
+        "min_str": f"__s{i}__mns",
+        "max_str": f"__s{i}__mxs",
+        "distinct_sketch": f"__s{i}__hll",
+    } for i, c in enumerate(names)]))
 
 
 def merge_profile_states(*states: DataFrame) -> DataFrame:

@@ -76,7 +76,7 @@ def gopher_flags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # not CSE'd by Catalyst (the functions/text.py PERF note), so every
     # rule below reads the same `_g_tok` column instead of re-running
     # lower+trim+regexp+split per expression (r12 review fix)
-    docs = docs.withColumn("_g_tok", tokens(text))
+    docs = docs.withColumn("_g_tok", F.expr(tokens(text_col)))
     tok = F.col("_g_tok")
     nw = F.size(tok)
     total_len = F.aggregate(
@@ -291,7 +291,7 @@ def gopher_repetition_flags(docs: DataFrame,
             "top_ngram_min_count must be an int >= 1 (it is "
             "interpolated into the gating expression)")
     text = F.col(text_col)
-    tok = tokens(text)
+    tok = F.expr(tokens(text_col))
     lines = F.filter(_lines(text), lambda ln: F.trim(ln) != "")
     paras = F.filter(
         F.split(F.coalesce(text, F.lit("")),

@@ -11,7 +11,7 @@ semantics) as DataFrame ops:
 - :func:`parse_robots` — per-host robots.txt payloads → one row per
   directive with RFC group structure recovered (consecutive
   ``User-agent`` lines share the following rules; comments stripped;
-  unknown lines ignored). Pure Column math over ``posexplode`` +
+  unknown lines ignored). Pure SQL-expression math over ``posexplode`` +
   windows — the only shuffle keys on ``host``.
 - :func:`filter_robots_allowed` — URL table × rules → allowed rows,
   with the full REP decision: the most specific matching agent group
@@ -39,13 +39,19 @@ pattern.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.colcache import name_memo
+from ..functions.text import sql_str
 
 _RULE_TYPES = ("user-agent", "allow", "disallow", "crawl-delay",
                "sitemap")
+_IS_UA = "key = 'user-agent'"
+# regex metacharacters a REP pattern must match literally
+_RX_META = r"([.\\+?(){}\[\]^$|])"
+# a Crawl-delay directive's value in seconds (NULL when unparseable)
+_DELAY = ("CASE WHEN rule_type = 'crawl-delay' THEN try_cast(value AS DOUBLE)"
+          " END AS delay")
 
 
 def parse_robots(df: DataFrame, host_col: str = "host",
@@ -71,178 +77,112 @@ def parse_robots(df: DataFrame, host_col: str = "host",
     payloads (r12 review fix); the emitted rules are the union, so
     pick one capture per host upstream (as
     :func:`warc_robots_rules` does) when snapshot-exact semantics
-    matter. Identical duplicate payloads are deduplicated."""
-    is_binary = dict(df.dtypes)[payload_col] == "binary"
-    # every Column fragment is memoized per (column names, dtype) —
-    # r14 construct-latency trim: two parses per url_compliance
-    # construct rebuilt identical trees (functions/colcache.py)
-    (text, pos_line, key, value, key_filter, gid, is_ua, agents_agg,
-     rule_cols, sitemap_cols) = _parse_robots_frags(
-        host_col, payload_col, is_binary)
+    matter. Identical duplicate payloads are deduplicated.
+
+    Every projection is SQL text (``selectExpr``/string filters): one
+    parsed string per column instead of py4j round-trips per Column
+    node."""
+    text = payload_col
+    if dict(df.dtypes)[payload_col] == "binary":
+        text = f"decode({payload_col}, 'ISO-8859-1')"
+    # the BOM is U+FEFF on pre-decoded strings and the three-char
+    # ISO-8859-1 rendering of EF BB BF on decoded binary payloads
+    text = rf"regexp_replace({text}, r'^(\uFEFF|\u00EF\u00BB\u00BF)', '')"
     # identical duplicate payloads dedupe BEFORE the explode — one
     # shuffled row per capture, not per robots line (r12 review fix)
-    uniq = df.select(
-        F.col(host_col).alias("host"),
-        F.xxhash64(F.col(payload_col)).alias("src"),
-        text.alias("_text"),
+    uniq = df.selectExpr(
+        f"{host_col} AS host", f"xxhash64({payload_col}) AS src",
+        f"{text} AS _text",
     ).dropDuplicates(["host", "src"])
-    lines = uniq.select("host", "src", pos_line)
-    parsed = lines.select(
-        "host", "src", "pos", key, value,
-    ).filter(key_filter)
-    grouped = parsed.select("host", "src", "pos", "key", "value", gid)
+    lines = uniq.selectExpr(
+        "host", "src",
+        r"posexplode(split(_text, r'\r\n|\r|\n')) AS (pos, line)")
+    stripped = "trim(regexp_replace(line, r'#.*$', ''))"
+    parsed = lines.selectExpr(
+        "host", "src", "pos",
+        f"lower(trim(regexp_extract({stripped}, r'^([^:]*):', 1))) AS key",
+        f"trim(regexp_extract({stripped}, r'^[^:]*:(.*)$', 1)) AS value",
+    ).filter(f"key IN ({', '.join(map(sql_str, _RULE_TYPES))})")
+    w = "OVER (PARTITION BY host, src ORDER BY pos)"
+    new_group = f"{_IS_UA} AND NOT coalesce(lag({_IS_UA}) {w}, false)"
+    grouped = parsed.selectExpr(
+        "host", "src", "pos", "key", "value",
+        f"sum(CAST({new_group} AS INT)) {w} AS gid")
 
     agents = (
-        grouped.filter(is_ua)
+        grouped.filter(_IS_UA)
         .groupBy("host", "src", "gid")
-        .agg(agents_agg)
+        .agg(F.expr("collect_set(lower(value)) AS agents"))
     )
     rules = (
-        grouped.filter(~is_ua & (F.col("key") != "sitemap")
-                       & (F.col("gid") > 0))
+        grouped.filter(f"NOT ({_IS_UA}) AND key != 'sitemap' AND gid > 0")
         .join(agents, ["host", "src", "gid"])
-        .select(*rule_cols)
+        .selectExpr("host", "explode(agents) AS agent",
+                    "key AS rule_type", "value")
     )
-    sitemaps = grouped.filter(F.col("key") == "sitemap") \
-        .select(*sitemap_cols)
+    sitemaps = grouped.filter("key = 'sitemap'").selectExpr(
+        "host", "CAST(NULL AS STRING) AS agent", "'sitemap' AS rule_type",
+        "value")
     return rules.unionByName(sitemaps)
 
 
-@name_memo
-def _parse_robots_frags(host_col: str, payload_col: str,
-                        is_binary: bool) -> tuple:
-    """Every Column fragment of :func:`parse_robots`, memoized (r14 —
-    see functions/colcache.py). Expression-identical to the former
-    inline builds; the url_compliance_docs oracle row pins the
-    values."""
-    text = F.col(payload_col)
-    if is_binary:
-        text = F.decode(text, "ISO-8859-1")
-    # the BOM is U+FEFF on pre-decoded strings and the three-char
-    # ISO-8859-1 rendering of EF BB BF on decoded binary payloads
-    text = F.regexp_replace(
-        text, "^(\uFEFF|\u00EF\u00BB\u00BF)", "")
-    pos_line = F.posexplode(
-        F.split(F.col("_text"), r"\r\n|\r|\n")).alias("pos", "line")
-    stripped = F.trim(F.regexp_replace(F.col("line"), "#.*$", ""))
-    key = F.lower(F.trim(F.regexp_extract(stripped, "^([^:]*):", 1))) \
-        .alias("key")
-    value = F.trim(F.regexp_extract(stripped, "^[^:]*:(.*)$", 1)) \
-        .alias("value")
-    key_filter = F.col("key").isin(*_RULE_TYPES)
-    w = Window.partitionBy("host", "src").orderBy("pos")
-    is_ua = F.col("key") == "user-agent"
-    new_group = is_ua & ~F.coalesce(F.lag(is_ua).over(w), F.lit(False))
-    gid = F.sum(new_group.cast("int")).over(w).alias("gid")
-    agents_agg = F.collect_set(F.lower(F.col("value"))).alias("agents")
-    rule_cols = (
-        "host",
-        F.explode("agents").alias("agent"),
-        F.col("key").alias("rule_type"),
-        "value",
-    )
-    sitemap_cols = (
-        "host",
-        F.lit(None).cast("string").alias("agent"),
-        F.lit("sitemap").alias("rule_type"),
-        "value",
-    )
-    return (text, pos_line, key, value, key_filter, gid, is_ua,
-            agents_agg, rule_cols, sitemap_cols)
-
-
-def _rule_regex(value: Column) -> Column:
-    """REP pattern → anchored Java regex, as Column math: regex
+def _rule_regex(value: str) -> str:
+    """REP pattern → anchored Java regex, as SQL text: regex
     metacharacters escaped, ``*`` → ``.*``, a trailing ``$`` becomes
     the anchor (anywhere else ``$`` is literal)."""
-    ends_anchored = value.endswith("$")
-    body = F.when(ends_anchored,
-                  value.substr(F.lit(1), F.length(value) - 1)) \
-        .otherwise(value)
-    escaped = F.regexp_replace(
-        body, r"([.\\+?(){}\[\]^$|])", r"\\$1")
-    pattern = F.regexp_replace(escaped, r"\*", ".*")
-    return F.concat(F.lit("^"), pattern,
-                    F.when(ends_anchored, F.lit("$"))
-                    .otherwise(F.lit("")))
+    ends = f"endswith({value}, '$')"
+    body = (f"CASE WHEN {ends} THEN substr({value}, 1, length({value}) - 1)"
+            f" ELSE {value} END")
+    escaped = rf"regexp_replace({body}, r'{_RX_META}', r'\\$1')"
+    pattern = rf"regexp_replace({escaped}, r'\*', '.*')"
+    return f"concat('^', {pattern}, CASE WHEN {ends} THEN '$' ELSE '' END)"
 
 
-@name_memo
-def robots_match_target(url: Column | str) -> Column:
-    """The string REP rules match against: the URL's path (``/`` when
-    empty) plus the ``?query`` when present — fragments excluded."""
+def robots_match_target(url: str) -> str:
+    """SQL text of the string REP rules match against: the URL's path
+    (``/`` when empty) plus the ``?query`` when present — fragments
+    excluded."""
     from ..functions.urls import url_path
 
     path = url_path(url)
-    query = F.regexp_extract(url, r"^[^#?]*\?([^#]*)", 1)
-    return F.concat(
-        F.when(path == "", F.lit("/")).otherwise(path),
-        F.when(query != "", F.concat(F.lit("?"), query))
-        .otherwise(F.lit("")),
-    )
+    query = rf"regexp_extract({url}, r'^[^#?]*\?([^#]*)', 1)"
+    return (f"concat(CASE WHEN {path} = '' THEN '/' ELSE {path} END, "
+            f"CASE WHEN {query} != '' THEN concat('?', {query}) ELSE '' END)")
 
 
-@name_memo
-def _rep_decision(url_col: str, rset_col: str = "__rset") -> Column:
-    """The map-side REP verdict for one row: fold the row's governing
-    rule array (``rset_col``, default ``__rset``) tracking the longest
-    matching rule, allow winning exact ties; no match ⇒ allowed. Pure
-    function of the URL/rule-array column NAMES, so the (large) fold
-    tree builds once per process (r14 construct-latency memo — see
-    functions/colcache.py). The fold is order-independent (longest
-    match wins, allow wins exact ties regardless of visit order), so
-    callers may feed it any collect_list rule order — the r15 fused
-    two-agent evaluation relies on this."""
+def _rep_decision(url_col: str, rset_col: str = "__rset") -> str:
+    """SQL text of the map-side REP verdict for one row: fold the row's
+    governing rule array (``rset_col``, default ``__rset``) tracking the
+    longest matching rule, allow winning exact ties; no match ⇒
+    allowed. The fold is order-independent (longest match wins, allow
+    wins exact ties regardless of visit order), so callers may feed it
+    any collect_list rule order — the fused two-agent evaluation of
+    ``url_compliance_docs`` relies on this."""
     target = robots_match_target(url_col)
-    return F.aggregate(
-        F.coalesce(F.col(rset_col),
-                   F.array().cast(
-                       "array<struct<l:int,is_allow:boolean,rx:string>>")),
-        F.struct(F.lit(-1).alias("best"),
-                 F.lit(True).alias("allow")),
-        lambda acc, rule: F.when(
-            F.regexp_like(target, rule["rx"])
-            & ((rule["l"] > acc["best"])
-               | ((rule["l"] == acc["best"]) & rule["is_allow"]
-                  & ~acc["allow"])),
-            F.struct(rule["l"].alias("best"),
-                     rule["is_allow"].alias("allow")),
-        ).otherwise(acc),
-        lambda acc: acc["allow"],
-    )
-
-
-@name_memo
-def _rep_scoped_cols(agent_lc: str) -> tuple[Column, Column, Column]:
-    """(filter, specific, rule-struct) fragments of the rules-side
-    projection in :func:`filter_robots_allowed`, memoized per agent."""
-    flt = (F.col("agent").isin(agent_lc, "*")
-           & (F.col("rule_type") != "sitemap"))
-    specific = (F.col("agent") == agent_lc).alias("specific")
-    rule = F.when(
-        F.col("rule_type").isin("allow", "disallow")
-        & (F.col("value") != ""),
-        F.struct(
-            F.length("value").alias("l"),
-            (F.col("rule_type") == "allow").alias("is_allow"),
-            _rule_regex(F.col("value")).alias("rx"),
-        ),
-    ).alias("rule")
-    return flt, specific, rule
-
-
-@name_memo
-def _rep_per_host_cols() -> tuple[Column, Column, Column, Column]:
-    """The per-host rule-set aggregation fragments (agent-independent)."""
     return (
-        F.max(F.col("specific")).alias("has_named"),
-        F.collect_list(F.when(F.col("specific"), F.col("rule")))
-        .alias("spec_rules"),
-        F.collect_list(F.when(~F.col("specific"), F.col("rule")))
-        .alias("star_rules"),
-        F.when(F.col("has_named"), F.col("spec_rules"))
-        .otherwise(F.col("star_rules")).alias("__rset"),
-    )
+        f"aggregate(coalesce({rset_col}, CAST(array() AS "
+        "ARRAY<STRUCT<l: INT, is_allow: BOOLEAN, rx: STRING>>)), "
+        "named_struct('best', -1, 'allow', true), "
+        f"(acc, rule) -> CASE WHEN regexp_like({target}, rule.rx) "
+        "AND (rule.l > acc.best OR (rule.l = acc.best AND rule.is_allow "
+        "AND NOT acc.allow)) "
+        "THEN named_struct('best', rule.l, 'allow', rule.is_allow) "
+        "ELSE acc END, acc -> acc.allow)")
+
+
+def _agent_scope(agent_lc: str) -> tuple[str, str]:
+    """(filter, ``specific`` column) SQL of one agent's rules-side
+    projection: its own rows and the ``*`` group's, non-sitemap."""
+    agent = sql_str(agent_lc)
+    return (f"agent IN ({agent}, '*') AND rule_type != 'sitemap'",
+            f"agent = {agent} AS specific")
+
+
+# one allow/disallow rule as (pattern length, is_allow, compiled regex)
+_RULE_STRUCT = (
+    "CASE WHEN rule_type IN ('allow', 'disallow') AND value != '' "
+    "THEN named_struct('l', length(value), 'is_allow', rule_type = 'allow', "
+    f"'rx', {_rule_regex('value')}) END AS rule")
 
 
 def filter_robots_allowed(urls: DataFrame, rules: DataFrame,
@@ -262,38 +202,33 @@ def filter_robots_allowed(urls: DataFrame, rules: DataFrame,
     rule — no corpus shuffle, no pair blowup."""
     from ..functions.urls import url_host
 
-    agent_lc = agent.lower()
-    # every Column fragment below is memoized per (agent, url column
-    # NAME) — r14: three REP evaluations per url_compliance construct
-    # were rebuilding ~6k py4j round-trips of identical trees
-    flt, specific, rule = _rep_scoped_cols(agent_lc)
-    scoped = rules.filter(flt).select("host", specific, rule)
+    flt, specific = _agent_scope(agent.lower())
+    scoped = rules.filter(flt).selectExpr("host", specific, _RULE_STRUCT)
     # group exclusivity is judged on ANY named-group directive — an
     # empty-value Disallow or a crawl-delay-only named group still
     # shadows the * group (RFC 9309; r12 review fix — size(spec_rules)
     # alone would leak * rules into such groups)
-    has_named, spec_rules, star_rules, rset = _rep_per_host_cols()
     per_host = scoped.groupBy("host").agg(
-        has_named, spec_rules, star_rules,
-    ).select(
-        "host",
-        # '__'-prefixed like the host keys: a caller URL table owning a
-        # plain 'rset' column must survive the join + drop (r13 ADVICE)
-        rset,
+        F.expr("max(specific) AS has_named"),
+        F.expr("collect_list(CASE WHEN specific THEN rule END) AS spec_rules"),
+        F.expr("collect_list(CASE WHEN NOT specific THEN rule END)"
+               " AS star_rules"),
+    ).selectExpr(
+        # the rules-side key is renamed before the join: drop("host") by
+        # NAME after an equi-join would also remove a caller-owned 'host'
+        # column from the URL table (r12 review fix); '__'-prefixed so a
+        # caller URL table owning a plain 'rset' column survives the
+        # join + drop (r13 ADVICE)
+        "host AS __rules_host",
+        "CASE WHEN has_named THEN spec_rules ELSE star_rules END AS __rset",
     )
-
-    # the rules-side key is renamed before the join: drop("host") by
-    # NAME after an equi-join would also remove a caller-owned 'host'
-    # column from the URL table (r12 review fix)
-    per_host = per_host.withColumnRenamed("host", "__rules_host")
-    with_host = urls.withColumn("__rhost", url_host(url_col))
+    with_host = urls.withColumn("__rhost", F.expr(url_host(url_col)))
     joined = with_host.join(
-        per_host, with_host["__rhost"] == per_host["__rules_host"],
-        "left",
+        per_host, F.expr("__rhost = __rules_host"), "left",
     ).drop("__rules_host")
     # fold: track the longest matching rule; allow wins exact ties
-    out = joined.withColumn("__allowed", _rep_decision(url_col))
-    keep = ~F.col("__allowed") if keep_disallowed else F.col("__allowed")
+    out = joined.withColumn("__allowed", F.expr(_rep_decision(url_col)))
+    keep = "NOT __allowed" if keep_disallowed else "__allowed"
     return out.filter(keep).drop("__rhost", "__rset", "__allowed")
 
 
@@ -306,39 +241,18 @@ def robots_crawl_delays(rules: DataFrame,
     group's delay must not leak in); ``*`` applies only to hosts with
     no named group. Unparseable delays drop; hosts whose governing
     group sets no delay emit no row."""
-    # fragments memoized per agent (r14 construct-latency trim —
-    # four evaluations per url_compliance construct)
-    flt, specific, delay, aggs, pick = _delay_frags(agent.lower())
-    scoped = rules.filter(flt).select("host", specific, delay)
+    flt, specific = _agent_scope(agent.lower())
+    scoped = rules.filter(flt).selectExpr("host", specific, _DELAY)
     return (
         scoped.groupBy("host")
-        .agg(*aggs)
-        .select("host", pick)
-        .filter(F.col("crawl_delay_sec").isNotNull())
+        .agg(F.expr("max(specific) AS has_named"),
+             F.expr("max(CASE WHEN specific THEN delay END) AS named_delay"),
+             F.expr("max(CASE WHEN NOT specific THEN delay END)"
+                    " AS star_delay"))
+        .selectExpr("host", "CASE WHEN has_named THEN named_delay"
+                    " ELSE star_delay END AS crawl_delay_sec")
+        .filter("crawl_delay_sec IS NOT NULL")
     )
-
-
-@name_memo
-def _delay_frags(agent_lc: str) -> tuple:
-    """Column fragments of :func:`robots_crawl_delays`, memoized —
-    expression-identical to the former inline builds."""
-    flt = (F.col("agent").isin(agent_lc, "*")
-           & (F.col("rule_type") != "sitemap"))
-    specific = (F.col("agent") == agent_lc).alias("specific")
-    delay = F.when(
-        F.col("rule_type") == "crawl-delay",
-        F.col("value").try_cast("double"),
-    ).alias("delay")
-    aggs = (
-        F.max(F.col("specific")).alias("has_named"),
-        F.max(F.when(F.col("specific"), F.col("delay")))
-        .alias("named_delay"),
-        F.max(F.when(~F.col("specific"), F.col("delay")))
-        .alias("star_delay"),
-    )
-    pick = F.when(F.col("has_named"), F.col("named_delay")) \
-        .otherwise(F.col("star_delay")).alias("crawl_delay_sec")
-    return flt, specific, delay, aggs, pick
 
 
 def robots_sitemaps(rules: DataFrame) -> DataFrame:
@@ -354,12 +268,12 @@ _XML_ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
                  ("&apos;", "'"), ("&amp;", "&"))  # &amp; LAST
 
 
-def _xml_unescape(col: Column) -> Column:
+def _xml_unescape(text: str) -> str:
     # sitemap <loc> values escape the five XML entities; &amp; must be
     # decoded last so '&amp;lt;' round-trips as '&lt;'
     for ent, ch in _XML_ENTITIES:
-        col = F.replace(col, F.lit(ent), F.lit(ch))
-    return col
+        text = f"replace({text}, {sql_str(ent)}, {sql_str(ch)})"
+    return text
 
 
 def parse_sitemaps(df: DataFrame, host_col: str = "host",
@@ -369,7 +283,7 @@ def parse_sitemaps(df: DataFrame, host_col: str = "host",
     robots ``Sitemap:`` pointer to the URL inventory it names.
 
     ``kind`` is ``urlset`` (leaf sitemap) or ``sitemapindex`` (its
-    entries are further sitemap URLs). Parsing is pure Column math:
+    entries are further sitemap URLs). Parsing is pure SQL string math:
     the document splits on ``</url>``/``</sitemap>`` block ends, each
     block yields its ``<loc>`` (XML entities decoded — ``&amp;`` is
     ubiquitous in real sitemap URLs) and optional ``<lastmod>``.
@@ -378,39 +292,21 @@ def parse_sitemaps(df: DataFrame, host_col: str = "host",
     it would not be for general XML; payloads without a recognizable
     root element yield no rows. Map-only — the explode stays in the
     source partition."""
-    is_binary = dict(df.dtypes)[payload_col] == "binary"
-    kind, block, url, lastmod = _parse_sitemaps_frags(
-        host_col, payload_col, is_binary)
+    text = payload_col
+    if dict(df.dtypes)[payload_col] == "binary":
+        text = f"decode({payload_col}, 'ISO-8859-1')"
+    loc = r"regexp_extract(block, r'<loc>\s*([^<]*?)\s*</loc>', 1)"
+    lastmod = r"regexp_extract(block, r'<lastmod>\s*([^<]*?)\s*</lastmod>', 1)"
     return (
-        df.select(F.col(host_col).alias("host"), kind, block)
-        .filter(F.col("kind").isNotNull())
-        .select("host", "kind", url, lastmod)
-        .filter(F.col("url") != "")
-    )
-
-
-@name_memo
-def _parse_sitemaps_frags(host_col: str, payload_col: str,
-                          is_binary: bool) -> tuple:
-    """Column fragments of :func:`parse_sitemaps`, memoized (r14) —
-    expression-identical to the former inline builds."""
-    text = F.col(payload_col)
-    if is_binary:
-        text = F.decode(text, "ISO-8859-1")
-    kind = (
-        F.when(text.contains("<sitemapindex"), F.lit("sitemapindex"))
-        .when(text.contains("<urlset"), F.lit("urlset"))
-    ).alias("kind")
-    block = F.explode(
-        F.split(text, "</url>|</sitemap>")).alias("block")
-    loc = F.regexp_extract(F.col("block"),
-                           r"<loc>\s*([^<]*?)\s*</loc>", 1)
-    lastmod = F.regexp_extract(F.col("block"),
-                               r"<lastmod>\s*([^<]*?)\s*</lastmod>", 1)
-    return (
-        kind, block,
-        _xml_unescape(loc).alias("url"),
-        F.when(lastmod != "", lastmod).alias("lastmod"),
+        df.selectExpr(
+            f"{host_col} AS host",
+            f"CASE WHEN contains({text}, '<sitemapindex') THEN 'sitemapindex'"
+            f" WHEN contains({text}, '<urlset') THEN 'urlset' END AS kind",
+            f"explode(split({text}, '</url>|</sitemap>')) AS block")
+        .filter("kind IS NOT NULL")
+        .selectExpr("host", "kind", f"{_xml_unescape(loc)} AS url",
+                    f"CASE WHEN {lastmod} != '' THEN {lastmod} END AS lastmod")
+        .filter("url != ''")
     )
 
 
@@ -434,11 +330,11 @@ def warc_robots_rules(blobs: DataFrame) -> DataFrame:
         recs.filter(
             (F.col("warc_type") == "response")
             & F.col("http_status").between(200, 299)
-            & (url_path("target_uri") == "/robots.txt")
+            & F.expr(f"{url_path('target_uri')} = '/robots.txt'")
             & F.col("body").isNotNull()
         )
         .select(
-            url_host("target_uri").alias("host"),
+            F.expr(f"{url_host('target_uri')} AS host"),
             F.col("body").alias("payload"),
             F.struct("doc_id", "record_idx").alias("ord"),
         )
@@ -485,14 +381,13 @@ def crawl_frontier(rules: DataFrame, sitemap_fetches: DataFrame, *,
     from ..functions.urls import url_host, url_normalize
 
     pointers = robots_sitemaps(rules).withColumn(
-        "__smu", url_normalize("sitemap_url"))
+        "__smu", F.expr(url_normalize("sitemap_url")))
     # the fetch table's URL column is fixed at 'url' per the documented
     # (url, payload) contract; url_col names only the SEEN table's
     # column (r13 review fix — applying url_col here made a seen table
     # with a non-'url' column impossible to subtract)
-    fetched = sitemap_fetches.select(
-        url_normalize("url").alias("__smu"),
-        F.col(payload_col).alias("__payload"),
+    fetched = sitemap_fetches.selectExpr(
+        f"{url_normalize('url')} AS __smu", f"{payload_col} AS __payload",
     ).dropDuplicates(["__smu"])
 
     def _parse(ptrs: DataFrame) -> DataFrame:
@@ -514,17 +409,17 @@ def crawl_frontier(rules: DataFrame, sitemap_fetches: DataFrame, *,
     # URLs, resolved against the same fetch table (deeper nesting is
     # out of the sitemaps.org contract for a single index file)
     leaf = first.filter(F.col("kind") == "urlset")
-    idx = first.filter(F.col("kind") == "sitemapindex").select(
-        "host", url_normalize("url").alias("__smu")
+    idx = first.filter("kind = 'sitemapindex'").selectExpr(
+        "host", f"{url_normalize('url')} AS __smu"
     ).dropDuplicates(["host", "__smu"])
     second = _parse(idx).filter(F.col("kind") == "urlset")
-    urls = leaf.unionByName(second).select(
-        url_normalize("url").alias("url"), "lastmod")
+    urls = leaf.unionByName(second).selectExpr(
+        f"{url_normalize('url')} AS url", "lastmod")
 
     allowed = filter_robots_allowed(urls, rules, agent=agent)
     if seen is not None:
-        seen_urls = seen.select(
-            url_normalize(url_col).alias("url")).distinct()
+        seen_urls = seen.selectExpr(
+            f"{url_normalize(url_col)} AS url").distinct()
         allowed = allowed.join(seen_urls, "url", "left_anti")
     # host-keyed left join of the agent's governing Crawl-delay: the
     # delays relation is rules-sized (≤1 row per host) — broadcast
@@ -534,7 +429,7 @@ def crawl_frontier(rules: DataFrame, sitemap_fetches: DataFrame, *,
     return (
         allowed.groupBy("url")
         .agg(F.max("lastmod").alias("lastmod"))
-        .select(url_host("url").alias("host"), "url", "lastmod")
+        .selectExpr(f"{url_host('url')} AS host", "url", "lastmod")
         .join(F.broadcast(delays), "host", "left")
     )
 

@@ -24,25 +24,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.colcache import name_memo
+from ..functions.text import sql_str
 
 # 2^53 — doubles represent every integer below this exactly; using the
 # first 13 hex chars (52 bits) of md5 keeps u uniform and exact.
 _U_DENOM = float(1 << 52)
 
 
-@name_memo
-def stable_uniform(col: Column | str, salt: str = "aes:") -> Column:
-    """Content-stable u ∈ (0,1]: 52 md5 bits of (salt ++ id), +1 to avoid
-    u=0 (which would give key=0 regardless of weight)."""
-    c = F.col(col) if isinstance(col, str) else col
-    bits = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 13), 16, 10
-    ).cast("double")
-    return (bits + F.lit(1.0)) / F.lit(_U_DENOM)
+def stable_uniform(col: str, salt: str = "aes:") -> str:
+    """SQL text of the content-stable u ∈ (0,1]: 52 md5 bits of (salt ++
+    id), +1 to avoid u=0 (which would give key=0 regardless of weight)."""
+    keyed = f"concat({sql_str(salt)}, CAST({col} AS STRING))"
+    bits = f"CAST(conv(substring(md5({keyed}), 1, 13), 16, 10) AS DOUBLE)"
+    return f"({bits} + 1.0D) / {_U_DENOM!r}D"
 
 
-def aes_log_key(id_col: Column | str, weight: Column, salt: str = "aes:") -> Column:
+def aes_log_key(id_col: str, weight: Column, salt: str = "aes:") -> Column:
     """ln(u)/w — the A-ES sampling key in log form (exp is strictly
     increasing, so ordering by ln(u)/w desc == ordering by the textbook
     key u^(1/w) desc). The log form has no underflow at any weight
@@ -50,7 +47,7 @@ def aes_log_key(id_col: Column | str, weight: Column, salt: str = "aes:") -> Col
     (exp(ln(u)/0.001) ≈ e^-2400) — ln(u) ∈ [-36, 0], so the
     quotient stays a normal double for any w > 1e-300. Non-positive
     weights map to -inf (always last)."""
-    u = stable_uniform(id_col, salt)
+    u = F.expr(stable_uniform(id_col, salt))
     return F.when(weight > 0, F.log(u) / weight).otherwise(
         F.lit(float("-inf"))
     )
@@ -113,9 +110,8 @@ def grouped_split(df: DataFrame, *, group_col: str,
     # LAST split — which is the eval split by default (r12 review fix);
     # the shared md5_bucket primitive keeps the bucketing idiom single-
     # sourced with every other sampler and the DuckDB oracles.
-    bucket = md5_bucket(
-        F.coalesce(F.col(group_col).cast("string"), F.lit("")),
-        salt=salt)
+    bucket = F.expr(md5_bucket(
+        f"coalesce(CAST({group_col} AS STRING), '')", salt=salt))
     # cumulative 256-bucket thresholds; the LAST split absorbs the
     # rounding remainder so every bucket maps somewhere
     names = list(fractions)

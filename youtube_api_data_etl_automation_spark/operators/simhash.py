@@ -62,7 +62,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     # — plain explode infers a size()>0 filter that Catalyst pushes below the
     # repartition, duplicating the tokenize tree in a pre-exchange Filter.
     toks = (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode_outer(tokens(text_col)).alias("tok"))
+        docs.selectExpr(f"{id_col} AS doc_id", f"explode_outer({tokens(text_col)}) AS tok")
         .filter("tok IS NOT NULL")
         .distinct()
     )

@@ -20,8 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.rounding import round6
-from ..functions.vectors import cosine_similarity, sql_cosine6
+from ..functions.rounding import round6, spark_round6
+from ..functions.text import sql_ident, sql_str
+from ..functions.vectors import cosine_similarity, sql_cosine6, sql_double_array
 from .versioned import (
     commit_manifest,
     current_version,
@@ -104,93 +105,40 @@ def sign_lsh_topk(corpus: DataFrame, queries: DataFrame, top_k: int = 3, bits: i
     return _rank_topk(scored, top_k)
 
 
-def name_memo_values(fn):
-    """Value-keyed memo for the literal-centroid scorer (r14): the
-    expression is a pure function of (vec_col, centroid values); the
-    values are driver-side floats, so freezing them into a tuple key
-    lets repeated constructs (bench min-of-3, the ivf/sampling/drift
-    section passes) reuse one parsed tree instead of re-formatting and
-    re-parsing the m*k*d-literal SQL string every time. Only the
-    EXPRESSION is cached — never data or results."""
-    import functools
-
-    from ..functions.colcache import memo_call
-
-    @functools.wraps(fn)
-    def wrapped(vec_col, cvs):
-        if not isinstance(vec_col, str):
-            return fn(vec_col, cvs)
-        key = (vec_col, tuple(tuple(float(x) for x in cv) for cv in cvs))
-        return memo_call("similarity._nearest_centroid_struct", key,
-                         lambda: fn(vec_col, cvs))
-    return wrapped
-
-
-@name_memo_values
-def _nearest_centroid_struct(vec_col: str | F.Column,
-                             cvs: list[list[float]]) -> F.Column:
-    """``struct(s: double, nj: int)`` of the nearest centroid among the
-    literal vectors ``cvs`` (in list order): ``s`` = round6 cosine to the
-    winner, ``nj`` = −(winning list index). The argmax is ``array_max``
-    over k score structs — struct ordering puts a NULL score below every
-    real one and breaks score ties toward the larger ``nj``, i.e. the
-    LOWER index — exactly the (cosine, −cluster_id) ``max_by`` ordering
-    the former broadcast-join assignment used, including the
-    all-scores-NULL edge (zero-norm vector → lowest index wins).
+def _nearest_cluster(vec_col: str, cids: list, cvs: list[list[float]],
+                     id_dt: str) -> tuple[str, str]:
+    """(cluster id, round6 cosine) SQL text of each row's nearest centroid
+    among the literal vectors ``cvs`` with ids ``cids`` (typed ``id_dt``).
+    The argmax is ``array_max`` over k ``(s, nj)`` score structs, ``nj``
+    = −(list index) — struct ordering puts a NULL score below every real
+    one and breaks score ties toward the larger ``nj``, i.e. the LOWER
+    index — exactly the (cosine, −cluster_id) ``max_by`` ordering the
+    former broadcast-join assignment used, including the all-scores-NULL
+    edge (zero-norm vector → lowest index wins).
 
     The row's own ‖v‖ is bound ONCE via a 1-element transform (the CSE
     rule functions/vectors.py documents: higher-order lambdas are
     interpreted with no CSE, so the O(d) norm fold would otherwise
-    re-run per centroid).
-
-    Built as ONE parsed SQL string when the vector is named by a
-    column name (every current caller): each Column higher-order
-    function costs ~13 driver round-trips to build its lambdas, and
-    the k-score tree holds ~3k of them — seconds of pure
-    plan-construction latency per assignment (guide §7.3). The
-    Column fallback below is the same expression tree, kept for
-    Column-typed callers."""
-    from ..functions.vectors import (
-        dot_product,
-        l2_norm,
-        lit_double_array,
-        sql_double_array,
-    )
-
-    if isinstance(vec_col, str):
-        v = "`" + vec_col.replace("`", "``") + "`"
-        vd = f"transform({v}, x -> CAST(x AS DOUBLE))"
-        norm = f"sqrt(aggregate({vd}, 0.0D, (acc, v) -> acc + v * v))"
-        structs = []
-        for j, cv in enumerate(cvs):
-            arr = sql_double_array(cv)
-            dot = (f"aggregate(zip_with({vd}, {arr}, (a, b) -> a * b), "
-                   "0.0D, (acc, v) -> acc + v)")
-            cnorm = (f"sqrt(aggregate({arr}, 0.0D, "
-                     "(acc, v) -> acc + v * v))")
-            score = (f"floor((({dot}) / nullif(nv * {cnorm}, 0.0D))"
-                     " * 1000000.0D + 0.5D) / 1000000.0D")
-            structs.append(f"named_struct('s', {score}, 'nj', {-j})")
-        return F.expr(
-            f"element_at(transform(array({norm}), "
+    re-run per centroid). One parsed string: each Column higher-order
+    function costs ~13 driver round-trips to build its lambdas, and the
+    k-score tree holds ~3k of them (guide §7.3)."""
+    vd = f"transform({sql_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
+    norm = f"sqrt(aggregate({vd}, 0.0D, (acc, v) -> acc + v * v))"
+    structs = []
+    for j, cv in enumerate(cvs):
+        arr = sql_double_array(cv)
+        dot = (f"aggregate(zip_with({vd}, {arr}, (a, b) -> a * b), "
+               "0.0D, (acc, v) -> acc + v)")
+        cnorm = f"sqrt(aggregate({arr}, 0.0D, (acc, v) -> acc + v * v))"
+        score = spark_round6(f"({dot}) / nullif(nv * {cnorm}, 0.0D)")
+        structs.append(f"named_struct('s', {score}, 'nj', {-j})")
+    best = (f"element_at(transform(array({norm}), "
             f"nv -> array_max(array({','.join(structs)}))), 1)")
-
-    vec = vec_col
-
-    def pick(nv: F.Column) -> F.Column:
-        return F.array_max(F.array(*[
-            F.struct(
-                round6(
-                    dot_product(vec, lit_double_array(cv))
-                    / F.nullif(nv * l2_norm(lit_double_array(cv)),
-                               F.lit(0.0))
-                ).alias("s"),
-                F.lit(-j).alias("nj"),
-            )
-            for j, cv in enumerate(cvs)
-        ]))
-
-    return F.element_at(F.transform(F.array(l2_norm(vec)), pick), 1)
+    ids = ", ".join(sql_str(c) if isinstance(c, str) else str(int(c))
+                    for c in cids)
+    cluster = (f"element_at(CAST(array({ids}) AS ARRAY<{id_dt}>), "
+               f"CAST(1 - {best}.nj AS INT))")
+    return cluster, f"{best}.s"
 
 
 def _collect_centroids(centroids: DataFrame, id_col: str,
@@ -213,7 +161,7 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
     """IVF cluster assignment: nearest centroid by cosine (deterministic
     tie-break on centroid id). r14: the centroid relation is an O(k)
     control-plane collect folded into k LITERAL score expressions
-    (:func:`_nearest_centroid_struct`) — the assignment is a pure
+    (:func:`_nearest_cluster`) — the assignment is a pure
     map-side projection with NO join and NO exchange [pinned in
     tests/test_scale_plans.py]. The former shape broadcast-joined the
     centroids and re-aggregated with ``groupBy(id).max_by``: the k
@@ -235,10 +183,8 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
         return corpus.filter(F.lit(False)).select(
             id_col, *payload,
             F.lit(None).cast(id_dt).alias("cluster_id"))
-    cid_arr = F.array(*[F.lit(c) for c in cids]).cast(f"array<{id_dt}>")
-    best = _nearest_centroid_struct(vec_col, cvs)
-    cluster = F.element_at(cid_arr, (F.lit(1) - best["nj"]).cast("int"))
-    return corpus.select(id_col, *payload, cluster.alias("cluster_id"))
+    cluster, _ = _nearest_cluster(vec_col, cids, cvs, id_dt)
+    return corpus.select(id_col, *payload, F.expr(f"{cluster} AS cluster_id"))
 
 
 def probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int = 1,

@@ -40,9 +40,9 @@ def kgram_occurrences(docs: DataFrame, *, id_col: str = "doc_id",
     The hash is the full md5 hex of the space-joined window — engine-
     portable (DuckDB reproduces it verbatim) and long enough that
     collisions are ignorable at corpus scale."""
-    toks = docs.select(F.col(id_col), tokens(text_col).alias("tok"))
+    toks = docs.select(F.col(id_col), F.expr(f"{tokens(text_col)} AS tok"))
     grams = toks.select(
-        id_col, F.posexplode(word_shingles_t("tok", k)).alias("pos0", "gram")
+        id_col, F.expr(f"posexplode({word_shingles_t('tok', k)}) AS (pos0, gram)")
     )
     return grams.select(
         id_col,

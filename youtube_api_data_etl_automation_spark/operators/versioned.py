@@ -332,14 +332,16 @@ def read_manifest(spark: SparkSession, base_path: str,
     return json.loads(data.decode("utf-8"))["batches"]
 
 
-def read_appended(spark: SparkSession, base_path: str) -> DataFrame:
+def read_appended(spark: SparkSession, base_path: str,
+                  version: int | None = None) -> DataFrame:
     """Snapshot read of a versioned-APPEND sink: resolve the committed
-    manifest once, scan exactly the batch directories it lists. A batch
-    mid-write (or from a crashed append) is listed by no manifest and is
-    invisible — the append-side twin of read_current's guarantee."""
-    return spark.read.parquet(
-        *read_manifest(spark, base_path, _committed(spark, base_path))
-    )
+    manifest once (``version``, default the current one), scan exactly
+    the batch directories it lists. A batch mid-write (or from a crashed
+    append) is listed by no manifest and is invisible — the append-side
+    twin of read_current's guarantee."""
+    if version is None:
+        version = _committed(spark, base_path)
+    return spark.read.parquet(*read_manifest(spark, base_path, version))
 
 
 def resolve_version_pair(
@@ -588,8 +590,9 @@ def commit_manifest(batch: DataFrame, base_path: str, snapshot: int | None,
     return v, n
 
 
-def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
-                     keep_versions: int = 2) -> int:
+def append_versioned(delta: DataFrame, base_path: str, snapshot: int | None,
+                     key: str | None = None,
+                     keep_versions: int = 2) -> tuple[int | None, int]:
     """Reader-safe idempotent APPEND. The overwrite-shaped versioned ops
     rewrite the full state per commit; an incremental sink can't afford
     that, and a plain ``mode("append")`` exposes racing readers to a
@@ -597,10 +600,12 @@ def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
     immutable batch directory, and a new version commits a MANIFEST =
     previous manifest + the new batch (:func:`commit_manifest`).
 
-    With ``key``, re-applies append_delta's idempotence protocol against
-    the snapshot it reads (anti-join at write time), so retries and
-    replayed batches land exactly once. Returns rows actually appended
-    (0 ⇒ no new version committed, no batch dir left). Raises
+    ``snapshot`` is the committed version the caller read its inputs from
+    (None for a fresh sink; :func:`current_version`). With ``key``,
+    re-applies append_delta's idempotence protocol against that snapshot
+    (anti-join at write time), so retries and replayed batches land
+    exactly once. Returns ``(version, rows)`` as :func:`commit_manifest`
+    does (0 rows ⇒ no new version committed, no batch dir left). Raises
     :class:`ConcurrentWriteError` (cleaning its own batch + staging
     debris) if a racing append wins the slot — the loser's delta is NOT
     lost semantically: retry on the fresh snapshot and the key-based
@@ -611,13 +616,12 @@ def append_versioned(delta: DataFrame, base_path: str, key: str | None = None,
     too. A losing/crashed writer's orphan batch dir is unlisted by every
     manifest, hence invisible forever (:func:`gc_batches` reclaims it)."""
     spark = delta.sparkSession
-    snapshot = current_version(spark, base_path)
     listed = ([] if snapshot is None
               else read_manifest(spark, base_path, snapshot))
     if key is not None and listed:
         delta = select_new(delta, spark.read.parquet(*listed), key)
     return commit_manifest(delta, base_path, snapshot, listed=listed,
-                           keep_versions=keep_versions)[1]
+                           keep_versions=keep_versions)
 
 
 def gc_batches(spark: SparkSession, base_path: str, *,

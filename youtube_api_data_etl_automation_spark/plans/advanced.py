@@ -1091,8 +1091,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True).filter(
         F.col("doc_id") % 3 == 0
     )
-    toks = docs.select(
-        "doc_id", F.explode_outer(tokens("text")).alias("term")
+    toks = docs.selectExpr(
+        "doc_id", f"explode_outer({tokens('text')}) AS term"
     ).filter(F.col("term").isNotNull())
     # Persist: tf feeds BOTH the df reduction and the scoring join — without
     # it the tokenize+aggregate pipeline runs twice.

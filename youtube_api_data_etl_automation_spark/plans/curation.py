@@ -370,14 +370,14 @@ def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.packing import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    with_tokens = docs.select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
+    with_tokens = docs.selectExpr(
+        "doc_id", f"{token_count('text')} AS n_tokens")
     packed = pack_sequences(
         with_tokens,
         budget=_PACK_BUDGET,
         n_shards=_PACK_SHARDS,
-        shard_expr=(md5_bucket("doc_id", salt="packshard") % _PACK_SHARDS).cast("int"),
+        shard_expr=F.expr(
+            f"CAST({md5_bucket('doc_id', salt='packshard')} % {_PACK_SHARDS} AS INT)"),
         order_expr=F.md5(F.concat(F.lit("packorder"), F.col("doc_id").cast("string"))),
     )
     return packed.select(
@@ -750,7 +750,7 @@ def sampling_audits(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # Unsalted bucket: pinned by the oracle text (see functions/hashing.py
     # on why COMPOSING operators must salt instead).
-    bucket = md5_bucket("doc_id")
+    bucket = F.expr(md5_bucket("doc_id"))
 
     split = (
         F.when(bucket < 230, "train").when(bucket < 243, "val").otherwise("test")

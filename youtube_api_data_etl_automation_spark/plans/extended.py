@@ -13,7 +13,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round6
+from ..functions.rounding import spark_round6
 from ..functions.text import EN_STOPWORDS
 from ..operators.multimodal import attach_binary, frame_features
 from ..operators.simhash import N_BITS, simhash_pairs
@@ -524,7 +524,8 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = simhash_pairs(docs, max_hamming=1)
     cc = connected_components(pairs)
-    quality = docs.select("doc_id", round6(quality_score("text")).alias("q"))
+    quality = docs.selectExpr(
+        "doc_id", f"{spark_round6(quality_score('text'))} AS q")
     j = cc.join(quality, "doc_id")
     best = j.groupBy("canonical_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),

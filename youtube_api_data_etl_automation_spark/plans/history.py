@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.colcache import name_memo
 from ..operators.capping import cap_per_group
 from ..operators.scd import scd2_history
 from ..operators.substring import repeated_span_profile
@@ -302,10 +301,10 @@ def lang_cap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("?lang="), F.coalesce(F.col("lang"), F.lit("-")),
     )
     with_url = docs.select(did.alias("doc_id"), url.alias("url"))
-    parsed = with_url.select(
-        url_host("url").alias("host"),
-        registrable_domain("url").alias("dom"),
-        url_tld("url").alias("tld"),
+    parsed = with_url.selectExpr(
+        f"{url_host('url')} AS host",
+        f"{registrable_domain('url')} AS dom",
+        f"{url_tld('url')} AS tld",
     )
     domain_section = parsed.groupBy("dom", "tld").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -576,216 +575,122 @@ SELECT * FROM frontier_section
 
 
 
-@name_memo
-def _uc_psl_url():
-    """The psl section's minted URL tree (r14 construct memo — all
-    fragments below are pure functions of fixed column names; see
-    functions/colcache.py). Expression-identical to the former inline
-    builds; the url_compliance_docs oracle hash pins the values."""
-    did = F.col("doc_id")
-    return F.concat(
-        F.lit("https://"),
-        F.when(did % 2 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.col("source"), F.lit(".example"),
-        F.when(did % 3 == 0, F.lit(".org"))
-        .when(did % 3 == 1, F.lit(".com")).otherwise(F.lit(".co.uk")),
-        F.lit("/d/"), did.cast("string"),
-    )
+# The url_compliance_docs fixture and section fragments below are SQL
+# text over fixed column names: each is one parse (three py4j calls) where
+# the same tree built through the Column API costs about ten per node. The
+# url_compliance_docs oracle hash pins the values.
+_UC_PSL_URL = (
+    "concat('https://', CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END, "
+    "source, '.example', CASE WHEN doc_id % 3 = 0 THEN '.org' "
+    "WHEN doc_id % 3 = 1 THEN '.com' ELSE '.co.uk' END, "
+    "'/d/', CAST(doc_id AS STRING))")
+_UC_CANON_URL = (
+    "concat('https://', "
+    "CASE WHEN doc_id % 5 = 0 THEN upper(source) ELSE source END, "
+    "'.example.com', CASE WHEN doc_id % 4 = 0 THEN ':443' "
+    "WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END, "
+    "'/P/', CAST(doc_id AS STRING), "
+    "CASE WHEN doc_id % 3 = 0 THEN concat('?utm_source=x&b=', "
+    "CAST(doc_id % 7 AS STRING), '&a=1') "
+    "WHEN doc_id % 3 = 1 THEN concat('?a=1&b=', CAST(doc_id % 7 AS STRING)) "
+    "ELSE '' END, CASE WHEN doc_id % 2 = 0 THEN '#frag' ELSE '' END)")
+# the robots section's path shapes
+_UC_RB_PATH = (
+    "CASE WHEN doc_id % 5 = 0 THEN '/p0' WHEN doc_id % 5 = 1 THEN '/p1/x' "
+    "WHEN doc_id % 5 = 2 THEN '/p1/ok.html' WHEN doc_id % 5 = 3 "
+    "THEN '/p2/doc' ELSE '/file.pdf' END")
+_UC_CANON_KEY = (
+    "concat_ws('|', CAST(doc_id % 3 AS STRING), CAST(doc_id % 4 AS STRING))"
+    " AS key")
+_UC_PSL_KEY = ("concat_ws('|', coalesce(registrable_domain_psl, '-'), "
+               "heur_dom) AS key")
 
 
-@name_memo
-def _uc_canon_url():
-    """The canon section's minted URL tree (r14 construct memo)."""
-    did = F.col("doc_id")
-    return F.concat(
-        F.lit("https://"),
-        F.when(did % 5 == 0, F.upper(F.col("source")))
-        .otherwise(F.col("source")),
-        F.lit(".example.com"),
-        F.when(did % 4 == 0, F.lit(":443"))
-        .when(did % 4 == 1, F.lit(":8080")).otherwise(F.lit("")),
-        F.lit("/P/"), did.cast("string"),
-        F.when(did % 3 == 0,
-               F.concat(F.lit("?utm_source=x&b="),
-                        (did % 7).cast("string"), F.lit("&a=1")))
-        .when(did % 3 == 1,
-              F.concat(F.lit("?a=1&b="), (did % 7).cast("string")))
-        .otherwise(F.lit("")),
-        F.when(did % 2 == 0, F.lit("#frag")).otherwise(F.lit("")),
-    )
+def _uc_fp_aggs(val_col: str) -> list:
+    """(n_docs, n_kept, kept_fp) aggregate triple over a distinct-value
+    fingerprint column — the psl/canon section rollup."""
+    return [
+        F.expr("CAST(count(1) AS BIGINT) AS n_docs"),
+        F.expr(f"CAST(count(DISTINCT {val_col}) AS BIGINT) AS n_kept"),
+        F.expr(f"md5(concat_ws(',', array_sort(collect_set({val_col}))))"
+               " AS kept_fp"),
+    ]
 
 
-@name_memo
-def _uc_rb_path():
-    """The robots section's path shapes (r14 construct memo)."""
-    did = F.col("doc_id")
-    return (
-        F.when(did % 5 == 0, F.lit("/p0"))
-        .when(did % 5 == 1, F.lit("/p1/x"))
-        .when(did % 5 == 2, F.lit("/p1/ok.html"))
-        .when(did % 5 == 3, F.lit("/p2/doc"))
-        .otherwise(F.lit("/file.pdf"))
-    )
-
-
-@name_memo
-def _uc_frontier_frags(n_sm: int):
-    """The frontier section's fixture trees (r14 construct memo):
-    (host, entry pair concat, sitemapindex entries, per-host delay)."""
-    did = F.col("doc_id")
-    host_c = F.concat(F.col("source"), F.lit(".example.com"))
-    m5 = (did % 5).cast("int")
+def _uc_frontier_frags(n_sm: int) -> tuple[str, ...]:
+    """The frontier section's fixture SQL: (host, base URL, urlset
+    entries, sitemapindex entries, per-host delay)."""
+    host_c = "concat(source, '.example.com')"
+    m5 = "CAST(doc_id % 5 AS INT)"
+    did = "CAST(doc_id AS STRING)"
     fr_path = (
-        F.when(m5 == 0, F.concat(F.lit("/p0/d"), did.cast("string")))
-        .when(m5 == 1, F.concat(F.lit("/p1/x"), did.cast("string")))
-        .when(m5 == 2, F.concat(F.lit("/p1/ok"), did.cast("string")))
-        .when(m5 == 3, F.concat(F.lit("/p2/d"), did.cast("string")))
-        .otherwise(F.concat(F.lit("/d"), did.cast("string"),
-                            F.lit(".pdf")))
-    )
-    base_url = F.concat(F.lit("https://"), host_c, fr_path)
-    loc1 = F.when(m5 == 3, F.concat(base_url, F.lit("?b=2&amp;a=1"))) \
-        .otherwise(base_url)
-    fr_lastmod = F.when(did % 4 == 0,
-                        F.concat(F.lit("d"), did.cast("string")))
-    entry1 = F.concat(
-        F.lit("<url><loc>"), loc1, F.lit("</loc>"),
-        F.coalesce(
-            F.concat(F.lit("<lastmod>"), fr_lastmod,
-                     F.lit("</lastmod>")),
-            F.lit("")),
-        F.lit("</url>"))
-    entry2 = F.when(
-        (m5 != 3) & (did % 2 == 0),
-        F.concat(F.lit("<url><loc>"), base_url,
-                 F.lit("?utm_source=x</loc></url>"))
-    ).otherwise(F.lit(""))
-    idx_entries = F.concat_ws("", F.array(*[
-        F.concat(F.lit("<sitemap><loc>https://"), F.col("host"),
-                 F.lit(f"/sm{k}.xml</loc></sitemap>"))
-        for k in range(n_sm)
-    ]))
-    fr_delay = (F.length(F.col("host")) % 3 + 2).cast("long")
-    return (host_c, base_url, F.concat(entry1, entry2), idx_entries,
+        f"CASE WHEN {m5} = 0 THEN concat('/p0/d', {did}) "
+        f"WHEN {m5} = 1 THEN concat('/p1/x', {did}) "
+        f"WHEN {m5} = 2 THEN concat('/p1/ok', {did}) "
+        f"WHEN {m5} = 3 THEN concat('/p2/d', {did}) "
+        f"ELSE concat('/d', {did}, '.pdf') END")
+    base_url = f"concat('https://', {host_c}, {fr_path})"
+    loc1 = (f"CASE WHEN {m5} = 3 THEN concat({base_url}, '?b=2&amp;a=1') "
+            f"ELSE {base_url} END")
+    fr_lastmod = f"CASE WHEN doc_id % 4 = 0 THEN concat('d', {did}) END"
+    entry1 = (f"concat('<url><loc>', {loc1}, '</loc>', coalesce(concat("
+              f"'<lastmod>', {fr_lastmod}, '</lastmod>'), ''), '</url>')")
+    entry2 = (f"CASE WHEN {m5} != 3 AND doc_id % 2 = 0 THEN concat("
+              f"'<url><loc>', {base_url}, '?utm_source=x</loc></url>') "
+              "ELSE '' END")
+    idx_entries = "concat_ws('', array(" + ", ".join(
+        f"concat('<sitemap><loc>https://', host, '/sm{k}.xml</loc></sitemap>')"
+        for k in range(n_sm)) + "))"
+    fr_delay = "CAST(length(host) % 3 + 2 AS BIGINT)"
+    return (host_c, base_url, f"concat({entry1}, {entry2})", idx_entries,
             fr_delay)
 
 
-@name_memo
-def _uc_fp_agg_cols(val_col: str) -> tuple:
-    """(n_docs, n_kept, kept_fp) aggregate triple over a distinct-value
-    fingerprint column — the psl/canon section rollup (r15 construct
-    memo; expression-identical to the former inline builds)."""
-    return (
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.countDistinct(val_col).cast("long").alias("n_kept"),
-        F.md5(F.concat_ws(",", F.array_sort(F.collect_set(val_col))))
-        .alias("kept_fp"),
-    )
-
-
-@name_memo
-def _uc_psl_key():
-    """The psl section's group key (r15 construct memo)."""
-    return F.concat_ws(
-        "|",
-        F.coalesce(F.col("registrable_domain_psl"), F.lit("-")),
-        F.col("heur_dom"),
-    ).alias("key")
-
-
-@name_memo
-def _uc_canon_key():
-    """The canon section's group key (r15 construct memo)."""
-    did = F.col("doc_id")
-    return F.concat_ws(
-        "|", (did % 3).cast("string"), (did % 4).cast("string"),
-    ).alias("key")
-
-
-@name_memo
-def _uc_robots_cols() -> tuple:
-    """The fused two-agent robots section's Column bundles (r15):
-    (per-host agg triple, per-host select triple, decision explode,
-    group-agg triple, final select). Expression-identical to the
-    per-arm builds they replace; the oracle's hand-derived outcomes
-    pin the values."""
-    from ..operators.robots import _rep_decision
-
-    per_host_aggs = (
-        F.collect_list(
-            F.when(F.col("__ag") == "*", F.col("rule"))).alias("__star"),
-        F.max(F.col("__ag") == "trainingbot").alias("__has_bot"),
-        F.collect_list(
-            F.when(F.col("__ag") == "trainingbot", F.col("rule")))
-        .alias("__bot_rules"),
-    )
-    per_host_sel = (
-        F.col("host").alias("__rules_host"),
-        F.col("__star").alias("__rset"),
-        F.when(F.col("__has_bot"), F.col("__bot_rules"))
-        .otherwise(F.col("__star")).alias("__rset_bot"),
-    )
-    dec = F.explode(F.array(
-        F.struct(F.lit("*").alias("agent"),
-                 _rep_decision("url").alias("kept")),
-        F.struct(F.lit("trainingbot").alias("agent"),
-                 _rep_decision("url", "__rset_bot").alias("kept")),
-    )).alias("__d")
-    group_aggs = (
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("kept"), 1).otherwise(0))
-        .cast("long").alias("n_kept"),
-        F.md5(F.concat_ws(",", F.transform(
-            F.array_sort(F.collect_list(
-                F.when(F.col("kept"), F.col("doc_id")))),
-            lambda x: x.cast("string"),
-        ))).alias("kept_fp"),
-    )
-    final_sel = (
-        F.lit("robots").alias("section"),
-        F.concat_ws("|", F.col("uhost"), F.col("agent")).alias("key"),
-    )
-    return per_host_aggs, per_host_sel, dec, group_aggs, final_sel
+# The fused two-agent robots section: per-host governing rule arrays for
+# '*' and 'trainingbot' ('trainingbot' rows govern when any exist, else
+# '*'), then both REP verdicts exploded to (agent, kept) rows. The fold
+# is operators/robots.py's own; the oracle's hand-derived outcomes pin
+# the values.
+_UC_RB_HOST_AGGS = (
+    "collect_list(CASE WHEN __ag = '*' THEN rule END) AS __star",
+    "max(__ag = 'trainingbot') AS __has_bot",
+    "collect_list(CASE WHEN __ag = 'trainingbot' THEN rule END) AS __bot_rules",
+)
+_UC_RB_HOST_SEL = (
+    "host AS __rules_host",
+    "__star AS __rset",
+    "CASE WHEN __has_bot THEN __bot_rules ELSE __star END AS __rset_bot",
+)
+_UC_RB_GROUP_AGGS = (
+    "CAST(count(1) AS BIGINT) AS n_docs",
+    "CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept",
+    "md5(concat_ws(',', transform(array_sort(collect_list("
+    "CASE WHEN kept THEN doc_id END)), x -> CAST(x AS STRING)))) AS kept_fp",
+)
 
 
 _UC_DELAY_AGENTS = ("*", "trainingbot", "otherbot")
 
 
-@name_memo
-def _uc_delay_cols() -> tuple:
-    """The fused three-agent delays section's Column bundles (r15):
-    one groupBy over the parsed rules computes every agent's governing
-    delay (named group wins even when it sets none — the * value must
-    not leak through group exclusivity), then an explode emits one row
-    per (host, agent) with a delay. Expression-identical semantics to
-    three robots_crawl_delays arms; the oracle hand-derives the
-    values."""
-    delay = F.when(
-        F.col("rule_type") == "crawl-delay",
-        F.col("value").try_cast("double"),
-    )
+def _uc_delay_sql() -> tuple[list[str], str]:
+    """The fused three-agent delays section: one groupBy over the parsed
+    rules computes every agent's governing delay (named group wins even
+    when it sets none — the * value must not leak through group
+    exclusivity), then an explode emits one row per (host, agent).
+    Same semantics as three robots_crawl_delays arms; the oracle
+    hand-derives the values. Returns (aggregates, explode)."""
+    delay = ("CASE WHEN rule_type = 'crawl-delay' "
+             "THEN try_cast(value AS DOUBLE) END")
     aggs = []
     picks = []
     for i, a in enumerate(_UC_DELAY_AGENTS):
-        is_a = F.col("agent") == a
-        aggs.append(F.max(is_a).alias(f"__has{i}"))
-        aggs.append(F.max(F.when(is_a, delay)).alias(f"__d{i}"))
+        aggs.append(f"max(agent = '{a}') AS __has{i}")
+        aggs.append(f"max(CASE WHEN agent = '{a}' THEN {delay} END) AS __d{i}")
         # agent's governing delay: its own group's when one exists
         # (judged on ANY directive), else the * group's
-        own = F.when(F.col(f"__has{i}"), F.col(f"__d{i}")) \
-            .otherwise(F.col("__d0"))
-        picks.append(F.struct(
-            F.lit(a).alias("agent"), own.alias("crawl_delay_sec")))
-    exploded = F.explode(F.array(*picks)).alias("__p")
-    final_sel = (
-        F.lit("delays").alias("section"),
-        F.concat_ws("|", F.col("host"), F.col("__p.agent")).alias("key"),
-        F.lit(1).cast("long").alias("n_docs"),
-        F.col("__p.crawl_delay_sec").cast("long").alias("n_kept"),
-        F.md5(F.col("__p.crawl_delay_sec").cast("long").cast("string"))
-        .alias("kept_fp"),
-    )
-    return tuple(aggs), exploded, final_sel
+        picks.append(f"named_struct('agent', '{a}', 'crawl_delay_sec', "
+                     f"CASE WHEN __has{i} THEN __d{i} ELSE __d0 END)")
+    return aggs, f"explode(array({', '.join(picks)})) AS __p"
 
 
 @query("url_compliance_docs", oracle=_URL_COMPLIANCE_ORACLE)
@@ -837,21 +742,18 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle).
     from ..functions.urls import registrable_domain_psl, url_host
 
-    psl_url = _uc_psl_url()
     psl_rules = spark.createDataFrame(
         [(r,) for r in _PSL_RULES], "rule string")
     # r15: one wide second select replaces the two withColumns (each a
-    # full analysis pass), and keeps the host/heur_dom trees building
-    # over the NAME 'url' so they hit the module memos; the group/agg/
-    # select trees are module memos too (guide §7.3)
+    # full analysis pass)
     psl_parsed = registrable_domain_psl(
-        docs.select(did.alias("doc_id"), psl_url.alias("url"))
-        .select("doc_id", "url", url_host("url").alias("host"),
-                registrable_domain("url").alias("heur_dom")),
+        docs.selectExpr("doc_id", f"{_UC_PSL_URL} AS url")
+        .selectExpr("doc_id", "url", f"{url_host('url')} AS host",
+                    f"{registrable_domain('url')} AS heur_dom"),
         psl_rules,
     )
-    psl_section = psl_parsed.groupBy(_uc_psl_key()).agg(
-        *_uc_fp_agg_cols("host"),
+    psl_section = psl_parsed.groupBy(F.expr(_UC_PSL_KEY)).agg(
+        *_uc_fp_aggs("host"),
     ).select(
         F.lit("psl").alias("section"), "key",
         "n_docs", "n_kept", "kept_fp",
@@ -864,13 +766,10 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.urls import url_normalize
 
     canon_section = (
-        docs.select(did.alias("doc_id"),
-                    _uc_canon_url().alias("__cu"))
-        # normalize over the aliased NAME so the (large) canonical-form
-        # tree hits the module memo instead of rebuilding per construct
-        .select("doc_id", url_normalize("__cu").alias("canon"))
-        .groupBy(_uc_canon_key())
-        .agg(*_uc_fp_agg_cols("canon"))
+        docs.selectExpr("doc_id", f"{_UC_CANON_URL} AS __cu")
+        .selectExpr("doc_id", f"{url_normalize('__cu')} AS canon")
+        .groupBy(F.expr(_UC_CANON_KEY))
+        .agg(*_uc_fp_aggs("canon"))
         .select(F.lit("canon").alias("section"), "key",
                 "n_docs", "n_kept", "kept_fp")
     )
@@ -909,12 +808,10 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization (guide §2.4 remove shuffles outright; §5 reuse).
     robots_rules = parse_robots(
         hosts.withColumn("payload", F.lit(robots_txt))).persist()
-    rb_path = _uc_rb_path()
-    rb_urls = docs.select(
-        did.alias("doc_id"),
-        F.concat(F.lit("https://"), F.col("source"),
-                 F.lit(".example.com"), rb_path).alias("url"),
-        F.concat(F.col("source"), F.lit(".example.com")).alias("uhost"),
+    rb_urls = docs.selectExpr(
+        "doc_id",
+        f"concat('https://', source, '.example.com', {_UC_RB_PATH}) AS url",
+        "concat(source, '.example.com') AS uhost",
     )
 
     # r15: BOTH agent arms in one pass — the per-host governing rule
@@ -928,27 +825,28 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the group-exclusivity rule ('trainingbot' rows govern when any
     # exist, else '*') are the operator's own fragments; outcomes are
     # pinned by the oracle's hand-derived per-path-shape values.
-    from ..operators.robots import _rep_scoped_cols
+    from ..operators.robots import _RULE_STRUCT, _rep_decision
 
-    _, _, _rb_rule = _rep_scoped_cols("*")
-    (rb_ph_aggs, rb_ph_sel, rb_dec_col, rb_group_aggs,
-     rb_final_sel) = _uc_robots_cols()
     rb_scoped = robots_rules.filter(
-        F.col("agent").isin("*", "trainingbot")
-        & (F.col("rule_type") != "sitemap")
-    ).select("host", F.col("agent").alias("__ag"), _rb_rule)
-    rb_per_host = rb_scoped.groupBy("host").agg(*rb_ph_aggs) \
-        .select(*rb_ph_sel)
+        "agent IN ('*', 'trainingbot') AND rule_type != 'sitemap'"
+    ).selectExpr("host", "agent AS __ag", _RULE_STRUCT)
+    rb_per_host = rb_scoped.groupBy("host") \
+        .agg(*[F.expr(a) for a in _UC_RB_HOST_AGGS]) \
+        .selectExpr(*_UC_RB_HOST_SEL)
     rb_dec = rb_urls.join(
-        rb_per_host, rb_urls["uhost"] == rb_per_host["__rules_host"],
-        "left",
-    ).select(
-        "doc_id", "uhost", rb_dec_col,
-    ).select("doc_id", "uhost", F.col("__d.agent").alias("agent"),
-             F.col("__d.kept").alias("kept"))
+        rb_per_host, F.expr("uhost = __rules_host"), "left",
+    ).selectExpr(
+        "doc_id", "uhost",
+        "explode(array("
+        f"named_struct('agent', '*', 'kept', {_rep_decision('url')}), "
+        "named_struct('agent', 'trainingbot', 'kept', "
+        f"{_rep_decision('url', '__rset_bot')}))) AS __d",
+    ).selectExpr("doc_id", "uhost", "__d.agent AS agent", "__d.kept AS kept")
     robots_section = rb_dec.groupBy("uhost", "agent") \
-        .agg(*rb_group_aggs) \
-        .select(*rb_final_sel, "n_docs", "n_kept", "kept_fp")
+        .agg(*[F.expr(a) for a in _UC_RB_GROUP_AGGS]) \
+        .selectExpr("'robots' AS section",
+                    "concat_ws('|', uhost, agent) AS key",
+                    "n_docs", "n_kept", "kept_fp")
     # delays section (r13): the governing Crawl-delay per agent arm
     # under the oracle — hand-derived (* -> 2, trainingbot -> its own
     # 7, otherbot -> NO row: its named group sets no delay and the *
@@ -957,13 +855,19 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted rules + an explode to (host, agent, delay) rows —
     # 3 scans + 3 aggs + 2 unions -> 1 scan + 1 agg (guide §2.4);
     # semantics pinned by the oracle's hand-derived values.
-    d_aggs, d_explode, d_final_sel = _uc_delay_cols()
+    d_aggs, d_explode = _uc_delay_sql()
     delays_section = (
-        robots_rules.filter(F.col("rule_type") != "sitemap")
-        .groupBy("host").agg(*d_aggs)
-        .select("host", d_explode)
-        .select(*d_final_sel)
-        .filter(F.col("n_kept").isNotNull())
+        robots_rules.filter("rule_type != 'sitemap'")
+        .groupBy("host").agg(*[F.expr(a) for a in d_aggs])
+        .selectExpr("host", d_explode)
+        .selectExpr(
+            "'delays' AS section",
+            "concat_ws('|', host, __p.agent) AS key",
+            "CAST(1 AS BIGINT) AS n_docs",
+            "CAST(__p.crawl_delay_sec AS BIGINT) AS n_kept",
+            "md5(CAST(CAST(__p.crawl_delay_sec AS BIGINT) AS STRING))"
+            " AS kept_fp")
+        .filter("n_kept IS NOT NULL")
     )
 
     # frontier section (r13): the provenance-complete seed-list
@@ -985,19 +889,18 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (host_c, base_url, entries, idx_entries,
      fr_delay) = _uc_frontier_frags(n_sm)
     urlsets = (
-        fr_docs.select(host_c.alias("host"),
-                    (did % n_sm).cast("int").alias("smk"),
-                    entries.alias("e"))
+        fr_docs.selectExpr(f"{host_c} AS host",
+                           f"CAST(doc_id % {n_sm} AS INT) AS smk",
+                           f"{entries} AS e")
         .groupBy("host", "smk")
         .agg(F.concat(F.lit("<urlset>"),
                       F.concat_ws("", F.collect_list("e")),
                       F.lit("</urlset>")).alias("payload"))
     )
-    fetches = fr_docs.select(host_c.alias("host")).distinct().select(
-        F.concat(F.lit("https://"), F.col("host"),
-                 F.lit("/smidx.xml")).alias("url"),
-        F.concat(F.lit("<sitemapindex>"), idx_entries,
-                 F.lit("</sitemapindex>")).alias("payload"),
+    fetches = fr_docs.selectExpr(f"{host_c} AS host").distinct().selectExpr(
+        "concat('https://', host, '/smidx.xml') AS url",
+        f"concat('<sitemapindex>', {idx_entries}, '</sitemapindex>')"
+        " AS payload",
     ).unionByName(urlsets.select(
         F.concat(F.lit("https://"), F.col("host"), F.lit("/sm"),
                  F.col("smk").cast("string"),
@@ -1020,13 +923,13 @@ def url_compliance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         hosts.withColumn(
             "payload",
             F.concat(F.lit(_pre), F.lit("Crawl-delay: "),
-                     fr_delay.cast("string"), F.lit("\n"),
+                     F.expr(f"CAST({fr_delay} AS STRING)"), F.lit("\n"),
                      F.lit(_post),
                      F.lit("\nSitemap: https://"), F.col("host"),
                      F.lit("/smidx.xml\n")))).persist()
-    seen = fr_docs.filter(did % 10 == 2).select(base_url.alias("url"))
+    seen = fr_docs.filter(did % 10 == 2).selectExpr(f"{base_url} AS url")
     frontier = crawl_frontier(fr_rules, fetches, seen=seen)
-    totals_f = fr_docs.groupBy(host_c.alias("host")).agg(
+    totals_f = fr_docs.groupBy(F.expr(f"{host_c} AS host")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"))
     fr_agg = frontier.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),

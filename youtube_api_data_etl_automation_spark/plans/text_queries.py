@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round6
+from ..functions.rounding import round6, spark_round6
 from ..functions.text import (
     EN_STOPWORDS,
     LANG_MARKERS,
@@ -109,7 +109,7 @@ def text_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents pass), plus (late r8) the unigram token ENTROPY — the
     distribution-aware repetition signal dup_token_frac can't see
     (functions/text.py::token_entropy_t; sorted-distinct fold so the
-    float order is engine-portable). All JVM-side Column expressions — regexp_count is
+    float order is engine-portable). All JVM-side expressions — regexp_count is
     codegen'd, no UDF anywhere."""
     from ..functions.text import (
         dup_ngram_fraction_t,
@@ -119,13 +119,13 @@ def text_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    toks = docs.select("doc_id", "text", tokens("text").alias("tok"))
+    toks = docs.selectExpr("doc_id", "text", f"{tokens('text')} AS tok")
     lower = F.lower(F.col("text"))
     return toks.select(
         "doc_id",
-        token_count_t("tok").alias("n_tokens"),
-        punct_count("text").alias("n_punct"),
-        stopword_count_t("tok").alias("n_stopwords"),
+        F.expr(f"{token_count_t('tok')} AS n_tokens"),
+        F.expr(f"{punct_count('text')} AS n_punct"),
+        F.expr(f"{stopword_count_t('tok')} AS n_stopwords"),
         F.coalesce(F.length("text"), F.lit(0)).cast("int").alias("n_chars_raw"),
         F.coalesce(F.regexp_count(lower, F.lit("[a-z0-9]+")), F.lit(0))
         .cast("int")
@@ -133,10 +133,11 @@ def text_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.regexp_count(lower, F.lit(_SUBWORD_PAT)), F.lit(0))
         .cast("int")
         .alias("n_subwords"),
-        round6(dup_token_fraction_t("tok")).alias("dup_token_frac"),
-        rolling_hash_t("tok").alias("rhash"),
-        round6(token_entropy_t("tok")).alias("token_entropy"),
-        round6(dup_ngram_fraction_t("tok", n=2)).alias("dup_bigram_frac"),
+        F.expr(f"{spark_round6(dup_token_fraction_t('tok'))} AS dup_token_frac"),
+        F.expr(f"{rolling_hash_t('tok')} AS rhash"),
+        F.expr(f"{spark_round6(token_entropy_t('tok'))} AS token_entropy"),
+        F.expr(f"{spark_round6(dup_ngram_fraction_t('tok', n=2))}"
+               " AS dup_bigram_frac"),
     )
 
 
@@ -272,7 +273,7 @@ def lang_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-deriving it per consumer would triple the dominant per-row cost.
     # persist(): the projection has >2 consumers (repo convention —
     # without it each branch re-scans and re-tokenizes the corpus).
-    toks = docs.select("doc_id", "text", tokens("text").alias("tok")).persist()
+    toks = docs.selectExpr("doc_id", "text", f"{tokens('text')} AS tok").persist()
     lm = train_bigram_lm(
         toks.filter(F.col("doc_id") % 11 == 0), k=0.5, tok_col="tok"
     )
@@ -281,11 +282,11 @@ def lang_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bigrams",
         round6(F.col("avg_logp")).alias("avg_logp"),
     )
-    main = toks.select(
+    main = toks.selectExpr(
         "doc_id",
-        lang_id_t("tok").alias("lang_guess"),
-        round6(quality_score_t("text", "tok")).alias("quality"),
-        round6(clf_logit_t("tok")).alias("clf_logit"),
+        f"{lang_id_t('tok')} AS lang_guess",
+        f"{spark_round6(quality_score_t('text', 'tok'))} AS quality",
+        f"{spark_round6(clf_logit_t('tok'))} AS clf_logit",
     )
     fin = main.join(lm_scores, "doc_id", "left").select(
         "doc_id",
@@ -582,12 +583,12 @@ def corpus_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import quality_score_t
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    toks = docs.select("doc_id", "text", tokens("text").alias("tok"))
-    feat = toks.select(
+    toks = docs.selectExpr("doc_id", "text", f"{tokens('text')} AS tok")
+    feat = toks.selectExpr(
         "doc_id",
-        lang_id_t("tok").alias("lang_guess"),
-        token_count_t("tok").cast("double").alias("nt"),
-        round6(quality_score_t("text", "tok")).alias("q"),
+        f"{lang_id_t('tok')} AS lang_guess",
+        f"CAST({token_count_t('tok')} AS DOUBLE) AS nt",
+        f"{spark_round6(quality_score_t('text', 'tok'))} AS q",
     )
     verdict = (
         F.when(F.col("nt") < 10, "too_short")
@@ -1333,9 +1334,8 @@ def bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_encode_corpus, train_merges
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    tok_docs = docs.select(
-        "doc_id", tokens(F.coalesce(F.col("text"), F.lit(""))).alias("tok")
-    )
+    tok_docs = docs.selectExpr(
+        "doc_id", tokens("coalesce(text, '')") + " AS tok")
     merges = train_merges(tok_docs, n_merges=_BPE_MERGES)
     enc = bpe_encode_corpus(tok_docs, merges)
     return enc.select(
@@ -1465,7 +1465,7 @@ def quality_clf_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     labeled = docs.select(
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-        tokens(F.coalesce(F.col("text"), F.lit(""))).alias("tok"),
+        F.expr(tokens("coalesce(text, '')") + " AS tok"),
     )
     model = train_quality_clf(
         labeled,
