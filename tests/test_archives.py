@@ -111,7 +111,7 @@ def test_archive_meta_probe(spark):
     rows = [(1, gz), (2, named.getvalue()), (3, _zip()), (4, _tar()),
             (5, warc_plain), (6, warc_gz), (7, b"RAR!junk"), (8, b"")]
     out = {r["doc_id"]: r for r in archives.archive_meta(
-        _blob_df(spark, rows), errors="quarantine").collect()}
+        _blob_df(spark, rows)).collect()}
     assert out[1]["format"] == "gzip"
     assert out[1]["uncompressed_hint"] == 600
     assert "mtime=123" in out[1]["detail"]
@@ -165,9 +165,6 @@ def test_warc_refusals(spark):
         _blob_df(spark, [(9, gzip.compress(payload))]),
         byte_budget=64).collect()[0]
     assert big["error_kind"] == "unsupported"
-    with pytest.raises(Exception, match="truncated|malformed"):
-        archives.warc_records(_blob_df(spark, [(1, payload[:-60])]),
-                              errors="raise").collect()
 
 
 def test_zip_members(spark):
@@ -254,8 +251,7 @@ def test_warc_to_documents_composition(spark):
     info = _warc_record("warcinfo", b"software: test\r\n")
     payload = info + ok + notfound + png
     rows = archives.warc_records(
-        _blob_df(spark, [(7, payload), (8, b"broken")]),
-        errors="quarantine").collect()
+        _blob_df(spark, [(7, payload), (8, b"broken")])).collect()
     by_uri = {r["target_uri"]: r for r in rows if r["doc_id"] == 7}
     assert [r["warc_type"] for r in rows if r["doc_id"] == 7] == \
         ["warcinfo", "response", "response", "response"]
@@ -375,8 +371,7 @@ def test_archive_to_decoders_composition(spark):
         payloads.filter("source = 'img/pic.png'")).collect()
     assert len(img_rows) == 1 and img_rows[0]["width"] == 6
     txt_rows = pdf_text(
-        payloads.filter("source = 'docs/a.pdf'"),
-        errors="quarantine").collect()
+        payloads.filter("source = 'docs/a.pdf'")).collect()
     assert txt_rows[0]["text"] == "doc inside a tarball"
     assert txt_rows[0]["source"] == "docs/a.pdf"  # passthrough
     # stable ids across re-ingestion
@@ -446,7 +441,7 @@ def test_bzip2_xz_archives(spark):
     bz_doc = _bz2.compress(body)
     xz_doc = _lzma.compress(body, format=_lzma.FORMAT_XZ)
     rows = {r["doc_id"]: r for r in A.archive_meta(_blob_df(spark, [
-        (1, bz_doc), (2, xz_doc)]), errors="quarantine").collect()}
+        (1, bz_doc), (2, xz_doc)])).collect()}
     assert rows[1]["format"] == "bzip2" and rows[1]["error"] is None
     assert rows[1]["detail"] == "level=9"
     assert rows[2]["format"] == "xz"

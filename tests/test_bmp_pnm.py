@@ -189,7 +189,7 @@ def test_decode_image_operator_new_formats(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in multimodal.decode_image(
-        df, errors="quarantine").collect()}
+        df).collect()}
     palarr = np.array(pal, dtype=np.float64)
     want_means = palarr[idx].reshape(-1, 3).mean(axis=0)
     for doc in (1, 2):

@@ -802,7 +802,7 @@ def test_tiff_page_images_bridge(spark):
         [(1, bytearray(_two_page_tiff(img0, img1))),
          (2, bytearray(b"II*\x00junk"))],
         "doc_id long, payload binary")
-    pages = tiff_page_images(blobs, errors="quarantine")
+    pages = tiff_page_images(blobs)
     rows = pages.collect()
     good = sorted((r["page_idx"] for r in rows if r["error"] is None))
     assert good == [0, 1]
@@ -818,8 +818,8 @@ def test_tiff_page_images_bridge(spark):
 
     # the page payloads feed decode_image directly
     decoded = decode_image(
-        pages.filter("payload IS NOT NULL").select("doc_id", "payload"),
-        errors="quarantine").collect()
+        pages.filter("payload IS NOT NULL").select("doc_id", "payload")
+    ).collect()
     assert len(decoded) == 2
     assert all(r["error"] is None and r["format"] == "ppm"
                for r in decoded)

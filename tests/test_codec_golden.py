@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 
 import duckdb
-import pytest
 
 from youtube_api_data_etl_automation_spark.plans.codec_check import (
     CODEC_FIXTURE_PATH,
@@ -184,15 +183,6 @@ def test_golden_regeneration_is_deterministic():
     for (cid, cf, cn, cp), (rid, rf, rn, rp) in zip(committed, rebuilt):
         assert (cid, cf, cn) == (rid, rf, rn)
         assert bytes(cp) == rp, f"payload drift for {cn}"
-
-
-def test_unknown_errors_mode_refuses():
-    with pytest.raises(ValueError, match="errors must be"):
-        from youtube_api_data_etl_automation_spark.operators.multimodal import (
-            _check_errors_mode,
-        )
-
-        _check_errors_mode("ignore")
 
 
 def test_codec_stats_from_foreign_cwd():

@@ -344,7 +344,7 @@ def test_decode_audio_and_probe_integration(spark):
     blobs = spark.createDataFrame(
         [(1, bytearray(payload))], "doc_id long, payload binary"
     )
-    row = multimodal.decode_audio(blobs, errors="quarantine").collect()[0]
+    row = multimodal.decode_audio(blobs).collect()[0]
     assert row.format == "flac" and row.error is None
     assert row.sample_rate == 16000 and row.n_channels == 2
     assert row.n_frames == 50

@@ -214,7 +214,7 @@ def test_gif_through_decode_image_and_quarantine(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in multimodal.decode_image(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].format == "gif" and rows[1].error is None
     assert (rows[1].mean_r, rows[1].mean_g, rows[1].mean_b) == (30.0, 45.0, 60.0)

@@ -155,14 +155,15 @@ def test_image_hashes_quarantine(spark):
          (3, bytearray(b"junk"))],
         "doc_id long, payload binary")
     rows = {r["doc_id"]: r for r in
-            IH.image_hashes(df, errors="quarantine").collect()}
+            IH.image_hashes(df).collect()}
     assert rows[1]["error"] is None and rows[1]["format"] == "png"
     assert rows[1]["width"] == 12 and rows[1]["height"] == 10
     assert isinstance(rows[1]["dhash"], int)
     assert rows[2]["error_kind"] == "corrupt"
+    assert rows[2]["error"] == "malformed PNG: truncated IHDR"
     assert rows[3]["error_kind"] == "unsupported"
-    with pytest.raises(Exception):
-        IH.image_hashes(df, errors="raise").collect()
+    assert rows[3]["error"].startswith("unknown image format (magic b'ju')")
+    assert rows[3]["dhash"] is None and rows[3]["format"] is None
 
 
 def test_pair_plan_has_no_nested_loop(spark):
@@ -183,7 +184,7 @@ def test_pixel_budget_probe_first(spark):
         [(1, bytearray(huge_header_only)), (2, bytearray(small))],
         "doc_id long, payload binary")
     rows = {r["doc_id"]: r for r in
-            IH.image_hashes(df, errors="quarantine").collect()}
+            IH.image_hashes(df).collect()}
     assert rows[1]["error_kind"] == "unsupported"
     assert "pixel hash budget" in rows[1]["error"]
     assert rows[2]["error"] is None
@@ -191,7 +192,7 @@ def test_pixel_budget_probe_first(spark):
     # truncated pixel data -> corrupt, proving the probe gate is what
     # refused above)
     rows2 = {r["doc_id"]: r for r in
-             IH.image_hashes(df, errors="quarantine",
+             IH.image_hashes(df,
                              max_pixels=None).collect()}
     assert rows2[1]["error_kind"] == "corrupt"
 
@@ -211,17 +212,19 @@ def test_image_thumbnails_exact_and_stable(spark):
          (3, bytearray(b"junk"))],
         "doc_id long, payload binary")
     rows = {r["doc_id"]: r for r in IH.image_thumbnails(
-        df, out_h=2, out_w=2, errors="quarantine").collect()}
+        df, out_h=2, out_w=2).collect()}
     want = bytes([10, 20, 30, 200, 100, 50, 0, 0, 0, 255, 255, 255])
     assert bytes(rows[1]["thumb"]) == want
     assert bytes(rows[2]["thumb"]) == want  # container-invariant
     assert rows[1]["thumb_w"] == 2 and rows[1]["thumb_h"] == 2
     assert rows[3]["error_kind"] == "unsupported"
+    # a refused image has no thumbnail, so no thumbnail grid either
+    assert rows[3]["thumb"] is None and rows[3]["thumb_w"] is None
     # budget probe-first
     huge = spark.createDataFrame(
         [(9, bytearray(b"P6\n60000 60000\n255\n"))],
         "doc_id long, payload binary")
-    r = IH.image_thumbnails(huge, errors="quarantine").collect()[0]
+    r = IH.image_thumbnails(huge).collect()[0]
     assert r["error_kind"] == "unsupported" and "budget" in r["error"]
     with pytest.raises(ValueError, match="256x256"):
         IH.image_thumbnails(df, out_h=0)

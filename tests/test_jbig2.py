@@ -264,7 +264,7 @@ def test_decode_image_routes_jbig2(spark):
                + _seg(1, 39, 1, _region(img)))
     rows = decode_image(spark.createDataFrame(
         [(1, bytearray(payload)), (2, bytearray(b"\x97JB2\r\n\x1a\n"))],
-        "doc_id long, payload binary"), errors="quarantine").collect()
+        "doc_id long, payload binary")).collect()
     by_id = {r["doc_id"]: r for r in rows}
     ok = by_id[1]
     assert ok["format"] == "jbig2" and ok["error"] is None

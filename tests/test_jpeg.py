@@ -437,7 +437,7 @@ def test_decode_image_spark_roundtrip_and_quarantine(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in multimodal.decode_image(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].format == "jpeg" and rows[1].error is None
     assert (rows[1].mean_r, rows[1].mean_g, rows[1].mean_b) == \
@@ -785,7 +785,7 @@ def test_malformed_payloads_quarantine_not_kill(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in multimodal.decode_image(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].error is None and rows[1].mean_r == 100.0
     assert rows[2].error_kind == "corrupt"

@@ -144,7 +144,7 @@ def test_latex_math_ignores_comment_dollars():
 def test_latex_to_documents_bridge_and_cli(spark, capsys):
     doc = _doc(b"Visible prose body that survives curation.")
     got = {r["doc_id"]: r for r in L.latex_text(
-        _blob_df(spark, [(41, doc), (42, b"junk")]), errors="quarantine"
+        _blob_df(spark, [(41, doc), (42, b"junk")])
     ).collect()}
     assert got[41]["error"] is None
     assert got[41]["text"] == "Visible prose body that survives curation."

@@ -91,8 +91,7 @@ def test_markdown_never_refuses_text():
 
 def test_markdown_to_documents_bridge(spark):
     got = {r["doc_id"]: r for r in M.markdown_text(
-        _blob_df(spark, [(61, b"# H\n\nBody prose."), (62, b"")]),
-        errors="quarantine").collect()}
+        _blob_df(spark, [(61, b"# H\n\nBody prose."), (62, b"")])).collect()}
     assert got[61]["error"] is None
     assert got[61]["text"] == "H\n\nBody prose."
     assert got[62]["error"] is not None and got[62]["text"] is None

@@ -154,7 +154,7 @@ def test_meta_ops_spark_and_quarantine(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.video_meta(
-        vids, errors="quarantine"
+        vids
     ).collect()}
     assert rows[1].brand == "isom" and rows[1].duration_sec == 4.0
     assert rows[1].n_video_tracks == 1 and rows[1].codecs == "avc1"
@@ -172,14 +172,14 @@ def test_meta_ops_spark_and_quarantine(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.image_meta(
-        imgs, errors="quarantine"
+        imgs
     ).collect()}
     assert (rows[1].format, rows[1].width, rows[1].height) == ("png", 3, 2)
     assert rows[2].error_kind == "unsupported"
+    assert rows[2].error.startswith("unknown image format")
     assert rows[3].error_kind == "corrupt"
-    # default mode still raises on the first bad payload
-    with pytest.raises(Exception, match="unknown image format|empty/NULL"):
-        mediameta.image_meta(imgs).collect()
+    assert rows[3].error == "empty/NULL image payload"
+    assert (rows[3].format, rows[3].width) == (None, None)
 
 
 def test_mp4_truncated_mvhd_is_corrupt(spark):
@@ -200,7 +200,7 @@ def test_mp4_truncated_mvhd_is_corrupt(spark):
     vids = spark.createDataFrame(
         [(1, bytearray(short_v0))], "doc_id long, payload binary"
     )
-    rows = mediameta.video_meta(vids, errors="quarantine").collect()
+    rows = mediameta.video_meta(vids).collect()
     assert rows[0].error_kind == "corrupt"
 
 
@@ -393,7 +393,7 @@ def test_audio_video_meta_spark_dispatch(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.audio_meta(
-        auds, errors="quarantine"
+        auds
     ).collect()}
     assert rows[1].format == "mp3" and rows[1].sample_rate == 44100
     assert rows[2].format == "wav" and rows[2].duration_sec == \
@@ -454,13 +454,10 @@ def test_triage_decode_images_routes_before_decoding(spark):
     assert rows[5].route == "decode_failed" and \
         rows[5].error_kind == "corrupt"
     assert (rows[5].width, rows[5].height) == (4, 2)  # probe survived
-
-    # raise mode surfaces the first routed-out payload as its exception
-    with pytest.raises(Exception, match="triage budget|no stdlib codec"):
-        mediameta.triage_decode_images(
-            blobs.filter("doc_id = 2"), max_pixels=1_000_000,
-            errors="raise",
-        ).collect()
+    # routed-out rows carry the router's own refusal text
+    assert rows[2].error == ("probed ppm 40000x30000 = 1200000000 px over "
+                             "the 1000000 px triage budget")
+    assert rows[3].error.startswith("probed webp 320x240: no stdlib codec")
 
 
 def test_triage_routes_vp8l_to_decode(spark):
@@ -601,7 +598,7 @@ def test_exif_absent_and_malformed(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.image_exif(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].orientation == 8 and rows[1].error is None
     assert rows[2].orientation is None and rows[2].error is None
@@ -734,7 +731,7 @@ def test_audio_tags_flac_and_wav(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.audio_tags(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].title == "Nocturne"
     assert rows[2].title == "Intro"
@@ -843,7 +840,7 @@ def test_avi_metadata_walk(spark):
                             h=360)))],
         "doc_id long, payload binary",
     )
-    row = mediameta.video_meta(vids, errors="quarantine").collect()[0]
+    row = mediameta.video_meta(vids).collect()[0]
     assert row.brand == "avi" and row.codecs == "H264"
     assert (row.width, row.height) == (640, 360)
 
@@ -1039,7 +1036,7 @@ def test_video_keyframe_features_operator(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in mediameta.video_keyframe_features(
-        df, errors="quarantine").collect()}
+        df).collect()}
     r1 = out[1]
     assert (r1["container"], r1["codec"], r1["format"]) == \
         ("avi", "mjpeg", "jpeg")
@@ -1055,10 +1052,10 @@ def test_video_keyframe_features_operator(spark):
     assert (r2["container"], r2["codec"], r2["format"]) == \
         ("gif", "gif", "gif")
     assert out[3]["error_kind"] == "unsupported"
+    assert "needs a codec library" in out[3]["error"]
     assert out[4]["error_kind"] == "corrupt"
-    # errors='raise' surfaces the first failure
-    with pytest.raises(Exception, match="codec|keyframe|container"):
-        mediameta.video_keyframe_features(df, errors="raise").collect()
+    assert out[4]["error"] == "unknown container for keyframe extraction"
+    assert out[4]["container"] is None and out[4]["mean_r"] is None
 
 
 def test_mp4_n_frames_from_stsz():
@@ -1122,7 +1119,7 @@ def test_apng_and_static_png_video_meta(spark):
     # the video_meta operator routes PNG payloads here
     df = spark.createDataFrame([(1, bytearray(_apng()))],
                                "doc_id long, payload binary")
-    r = mediameta.video_meta(df, errors="quarantine").collect()[0]
+    r = mediameta.video_meta(df).collect()[0]
     assert r["brand"] == "apng" and r["n_frames"] == 3
 
 
@@ -1194,7 +1191,7 @@ def test_strip_exif_jpeg_png_webp(spark):
          (4, bytearray(b"\x00junk"))],
         "doc_id long, payload binary")
     rows = {r["doc_id"]: r for r in
-            mediameta.strip_exif(df, errors="quarantine").collect()}
+            mediameta.strip_exif(df).collect()}
     for d, fmt, original in ((1, "jpeg", jpeg), (2, "png", png),
                              (3, "webp", webp)):
         row = rows[d]
@@ -1254,7 +1251,7 @@ def test_strip_exif_drops_png_and_webp_xmp(spark):
         [(1, bytearray(png)), (2, bytearray(webp))],
         "doc_id long, payload binary")
     rows = {r["doc_id"]: r for r in
-            mediameta.strip_exif(df, errors="quarantine").collect()}
+            mediameta.strip_exif(df).collect()}
 
     cleaned_png = bytes(rows[1]["payload"])
     assert rows[1]["removed_bytes"] > 0
@@ -1279,8 +1276,7 @@ def test_strip_exif_passthrough_formats(spark):
     bmp = _bmp24([[(1, 2, 3)]])
     row = mediameta.strip_exif(
         spark.createDataFrame([(1, bytearray(bmp))],
-                              "doc_id long, payload binary"),
-        errors="quarantine").collect()[0]
+                              "doc_id long, payload binary")).collect()[0]
     assert row["format"] == "bmp" and row["removed_bytes"] == 0
     assert bytes(row["payload"]) == bmp
 

@@ -328,7 +328,7 @@ def test_audio_subband_features_operator(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in multimodal.audio_subband_features(
-        df, errors="quarantine").collect()}
+        df).collect()}
     r1 = out[1]
     assert r1["format"] == "mp3-layer1"
     assert (r1["sample_rate"], r1["n_channels"]) == (32000, 2)
@@ -859,7 +859,7 @@ def test_l2_audio_subband_features_operator(spark):
     df = spark.createDataFrame([(1, bytearray(payload))],
                                "doc_id long, payload binary")
     r = multimodal.audio_subband_features(
-        df, errors="quarantine").collect()[0]
+        df).collect()[0]
     assert r["format"] == "mp3-layer2"
     assert (r["sample_rate"], r["n_channels"]) == (48000, 1)
     assert r["n_mpeg_frames"] == 2

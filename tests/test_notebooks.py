@@ -117,7 +117,7 @@ def test_ipynb_to_documents_bridge_and_cli(spark, capsys):
     nb = _nb4([{"cell_type": "markdown", "source": "Notebook prose."}],
               kernelspec={"language": "python"})
     got = {r["doc_id"]: r for r in N.ipynb_text(
-        _blob_df(spark, [(51, nb), (52, b"{bad")]), errors="quarantine"
+        _blob_df(spark, [(51, nb), (52, b"{bad")])
     ).collect()}
     assert got[51]["error"] is None
     assert got[51]["text"] == "Notebook prose."

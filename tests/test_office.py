@@ -150,12 +150,12 @@ def test_office_to_documents_kinds(spark):
     xl = _xlsx([b'<row><c t="inlineStr"><is><t>cell text</t></is></c>'
                 b"</row>"])
     got_p = {r["doc_id"]: r for r in archives.pptx_text(
-        _blob_df(spark, [(21, pp), (22, b"junk")]), errors="quarantine"
+        _blob_df(spark, [(21, pp), (22, b"junk")])
     ).collect()}
     assert got_p[21]["text"] == "Deck text body here"
     assert got_p[22]["error"] is not None and got_p[22]["text"] is None
     got_x = archives.xlsx_text(
-        _blob_df(spark, [(31, xl)]), errors="quarantine").collect()
+        _blob_df(spark, [(31, xl)])).collect()
     assert got_x[0]["error"] is None
     assert got_x[0]["text"] == "cell text"
 
@@ -224,7 +224,7 @@ def test_odf_budget_and_documents_bridge(spark):
     assert "budget" in row["error"]
     ok = _odf(b"<text:p>OpenDocument body text</text:p>")
     got = archives.odf_text(
-        _blob_df(spark, [(41, ok)]), errors="quarantine").collect()
+        _blob_df(spark, [(41, ok)])).collect()
     assert got[0]["error"] is None
     assert got[0]["text"] == "OpenDocument body text"
 
@@ -297,8 +297,7 @@ def test_epub_structure_errors_and_bridge(spark):
                b'media-type="image/png"/>')
     assert archives._epub_extract_text(ok, None) == (1, "body")
     got = archives.epub_text(
-        _blob_df(spark, [(51, _epub([b"<p>ebook body text</p>"]))]),
-        errors="quarantine").collect()
+        _blob_df(spark, [(51, _epub([b"<p>ebook body text</p>"]))])).collect()
     assert got[0]["error"] is None
     assert got[0]["text"] == "ebook body text"
 

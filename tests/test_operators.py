@@ -377,10 +377,21 @@ def test_decode_png_checks_sizes_before_allocating():
     deflate bomb behind a 4x3 header, are both refused with a DECODE_ERRORS
     class without allocating the declared size: the inflate is capped one
     byte past the header's size, and the pixel buffer is allocated only
-    after the inflated length matches."""
+    after the inflated length matches. Every other image decoder refuses
+    its oversized header the same way: BMP, PPM and TIFF declare 2^31
+    rows, GIF and both JPEG flavors 65535x65535 (16-bit dimensions), VP8L
+    its 14-bit maximum of 16384x16384 — the JPEG pair asked numpy for a
+    32 GiB plane / coefficient array before the frame-size check at SOF.
+    The decoder modules are imported up front: the first import of
+    mediameta (which the TIFF IFD walk loads lazily) allocates ~5 MB of
+    module state, once per process, not per payload."""
     import struct
     import tracemalloc
     import zlib
+
+    from youtube_api_data_etl_automation_spark.operators import (  # noqa: F401
+        gif, jpeg, mediameta, tiff, vp8l,
+    )
 
     ok = _png([[(1, 2, 3)] * 4] * 3)
     ihdr_at = ok.index(b"IHDR")
@@ -399,15 +410,58 @@ def test_decode_png_checks_sizes_before_allocating():
     bomb = with_chunk(ok, idat_at, b"IDAT",
                       zlib.compress(b"\x00" * (64 << 20), 9))
     assert len(bomb) < 100_000
-    for payload in (tall, bomb):
+
+    bmp = b"BM" + struct.pack("<IHHI", 70, 0, 0, 54) + struct.pack(
+        "<IiIHHIIiiII", 40, 1, 1 << 31, 1, 24, 0, 16, 0, 0, 0, 0) \
+        + b"\x00" * 16
+    ppm = b"P6\n1 2147483648\n255\n" + b"\x00" * 16
+    gif_ = b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0x80, 0, 0) \
+        + b"\x00\x00\x00\xff\xff\xff" \
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 65535, 65535, 0) \
+        + b"\x02\x02\x4c\x01\x00\x3b"
+    # width 1, 2^31 rows, one uncompressed 8-bit grey strip
+    tags = [(256, 4, 1), (257, 4, 1 << 31), (258, 3, 8), (259, 3, 1),
+            (262, 3, 1), (273, 4, 8), (277, 3, 1), (279, 4, 8)]
+    ifd = struct.pack("<H", len(tags)) + b"".join(
+        struct.pack("<HHII" if ft == 4 else "<HHIHH", tag, ft, 1,
+                    *((v,) if ft == 4 else (v, 0)))
+        for tag, ft, v in tags) + struct.pack("<I", 0)
+    tif = b"II*\x00" + struct.pack("<I", 16) + b"\x00" * 8 + ifd
+    chunk = b"\x2f" + struct.pack("<I", 16383 | 16383 << 14) + b"\x00" * 8
+    webp = b"RIFF" + struct.pack("<I", 12 + len(chunk)) + b"WEBPVP8L" \
+        + struct.pack("<I", len(chunk)) + chunk
+
+    def jpeg_(sof, spectral_end):
+        def seg(marker, body):
+            return bytes((0xFF, marker)) + struct.pack(">H", len(body) + 2) \
+                + body
+        dht = b"".join(seg(0xC4, bytes((tc,)) + bytes([1] + [0] * 15)
+                           + b"\x00") for tc in (0x00, 0x10))
+        return b"\xff\xd8" + seg(0xDB, b"\x00" + bytes([1] * 64)) \
+            + seg(sof, struct.pack(">BHHB", 8, 65535, 65535, 1)
+                  + b"\x01\x11\x00") + dht \
+            + seg(0xDA, b"\x01\x01\x00\x00" + bytes((spectral_end, 0))) \
+            + b"\x00" * 8 + b"\xff\xd9"
+
+    cases = [
+        (tall, "expected"), (bomb, "expected"),
+        (bmp, "BMP 1x2147483648 exceeds"),
+        (ppm, "buffer is smaller"),
+        (gif_, "GIF exceeds the pixel budget"),
+        (tif, "TIFF 1x2147483648 exceeds"),
+        (webp, "VP8L 16384x16384 exceeds"),
+        (jpeg_(0xC0, 63), "JPEG 65535x65535 exceeds"),
+        (jpeg_(0xC2, 0), "JPEG 65535x65535 exceeds"),
+    ]
+    for payload, match in cases:
         tracemalloc.start()
         try:
-            with pytest.raises(multimodal.DECODE_ERRORS, match="expected"):
+            with pytest.raises(multimodal.DECODE_ERRORS, match=match):
                 multimodal._decode_rgb(payload)
             _, peak = tracemalloc.get_traced_memory()
         finally:
             tracemalloc.stop()
-        assert peak < 4 << 20, peak
+        assert peak < 4 << 20, (match, peak)
 
 
 def test_decode_png_slow_filter_budget(spark):
@@ -449,23 +503,30 @@ def test_decode_png_slow_filter_budget(spark):
 
     # quarantine routing: unsupported (budget), not corrupt
     rows = multimodal.decode_image(
-        _blob_df(spark, payload), errors="quarantine", slow_filter_budget=1000
+        _blob_df(spark, payload), slow_filter_budget=1000
     ).collect()
     assert rows[0].error_kind == "unsupported"
     assert "byte budget" in rows[0].error
 
 
 def test_decode_compressed_formats_still_stubbed(spark):
-    """Lossy-VP8 WebP / TIFF / ... still need a codec library (absent
-    here) — the decoder raises the honest NotImplementedError, surfaced
-    through the Spark action. (Baseline JPEG and first-frame GIF decode
-    since r9, VP8L WebP since r10 — see tests/test_vp8l.py.)"""
+    """Lossy-VP8 WebP / JPEG 2000 / ... still need a codec library
+    (absent here) — the decoder raises the honest NotImplementedError,
+    which the Spark action returns as an 'unsupported' quarantine row.
+    (Baseline JPEG and first-frame GIF decode since r9, VP8L WebP since
+    r10 — see tests/test_vp8l.py.)"""
     webp_magic = b"RIFF\x00\x00\x00\x00WEBP" + b"\x00" * 24
-    with pytest.raises(Exception, match="codec library"):
-        multimodal.decode_image(_blob_df(spark, webp_magic)).collect()
     jp2_magic = b"\x00\x00\x00\x0cjP  \r\n\x87\n" + b"\x00" * 16
-    with pytest.raises(Exception, match="PIL|compressed"):
-        multimodal.decode_image(_blob_df(spark, jp2_magic)).collect()
+    rows = {r.doc_id: r for r in multimodal.decode_image(
+        spark.createDataFrame(
+            [(1, bytearray(webp_magic)), (2, bytearray(jp2_magic))],
+            "doc_id long, payload binary")).collect()}
+    assert rows[1].error_kind == "unsupported"
+    assert "pixels need a codec library" in rows[1].error
+    assert rows[2].error_kind == "unsupported"
+    assert rows[2].error.startswith("compressed/unknown image format")
+    assert "PIL" in rows[2].error
+    assert rows[1].format is None and rows[2].width is None
 
 
 def _wav(rate, frames, bits=16, fmt_code=1, pre_data_chunk=None,
@@ -711,7 +772,8 @@ def test_decode_wav_ima_adpcm_exact(spark):
 
 def test_decode_wav_corrupt_payloads_raise_typed_errors(spark):
     """Corrupt-but-well-framed WAVs must fail with the module's documented
-    error classes, not raw ZeroDivisionError/struct.error — and a
+    error classes, not raw ZeroDivisionError/struct.error (which would
+    kill the task instead of becoming a 'corrupt' quarantine row) — and a
     truncated data chunk must refuse rather than report level stats over
     the fragment."""
     import struct
@@ -720,31 +782,38 @@ def test_decode_wav_corrupt_payloads_raise_typed_errors(spark):
     # declared data size far beyond the actual bytes (truncated transfer)
     idx = ok.rindex(b"data")
     truncated = ok[: idx + 4] + struct.pack("<I", 100000) + ok[idx + 8 :]
-    with pytest.raises(Exception, match="truncated"):
-        multimodal.decode_audio(_blob_df(spark, truncated)).collect()
     # sample_rate = 0
     zero_rate = _wav(8000, [(1, 2)])
     fidx = zero_rate.index(b"fmt ")
     zero_rate = (
         zero_rate[: fidx + 12] + struct.pack("<I", 0) + zero_rate[fidx + 16 :]
     )
-    with pytest.raises(Exception, match="sample_rate=0"):
-        multimodal.decode_audio(_blob_df(spark, zero_rate)).collect()
     # fmt chunk shorter than the 16-byte PCM header
     short_fmt = (
         b"RIFF" + struct.pack("<I", 24) + b"WAVE"
         + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x01\x00"
         + b"data" + struct.pack("<I", 0)
     )
-    with pytest.raises(Exception, match="fmt chunk"):
-        multimodal.decode_audio(_blob_df(spark, short_fmt)).collect()
+    rows = {r.doc_id: r for r in multimodal.decode_audio(
+        spark.createDataFrame(
+            [(1, bytearray(truncated)), (2, bytearray(zero_rate)),
+             (3, bytearray(short_fmt))],
+            "doc_id long, payload binary")).collect()}
+    assert {r.error_kind for r in rows.values()} == {"corrupt"}
+    assert rows[1].error == ("malformed WAVE: chunk b'data' declares "
+                             "100000 bytes but only 4 remain (truncated "
+                             "payload)")
+    assert rows[2].error == "malformed WAVE: sample_rate=0"
+    assert rows[3].error == "malformed WAVE: fmt chunk is 4 bytes (<16)"
+    assert all(r.sample_rate is None and r.rms is None
+               for r in rows.values())
 
 
 def test_decode_quarantine_mode_yields_rows_not_task_failures(spark):
-    """errors='quarantine': one corrupt blob in a batch becomes a row
-    with the decoder's own error message (features NULL) while good
-    payloads decode normally — the 100 TB posture where a task failure
-    on row N of 10^12 is not acceptable. Default 'raise' is unchanged."""
+    """One corrupt blob in a batch becomes a row with the decoder's own
+    error message (features NULL) while good payloads decode normally —
+    the 100 TB posture where a task failure on row N of 10^12 is not
+    acceptable."""
     pixels = [[(1, 2, 3), (4, 5, 6)]]
     good_png = _png(pixels)
     blobs = spark.createDataFrame(
@@ -754,7 +823,7 @@ def test_decode_quarantine_mode_yields_rows_not_task_failures(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in
-            multimodal.decode_image(blobs, errors="quarantine").collect()}
+            multimodal.decode_image(blobs).collect()}
     assert rows[1].format == "png" and rows[1].error is None
     assert rows[4].format == "bmp" and rows[4].error is None
     assert rows[2].format is None and "codec library" in rows[2].error
@@ -766,11 +835,6 @@ def test_decode_quarantine_mode_yields_rows_not_task_failures(spark):
     assert rows[2].error_kind == "unsupported"
     assert rows[3].error_kind == "corrupt"
     assert rows[1].error_kind is None and rows[4].error_kind is None
-    # default mode still dies on the first bad payload
-    with pytest.raises(Exception, match="codec library|empty"):
-        multimodal.decode_image(blobs).collect()
-    with pytest.raises(ValueError, match="errors must be"):
-        multimodal.decode_image(blobs, errors="skip")
 
     wav = _wav(8000, [(100, -100)])
     ablobs = spark.createDataFrame(
@@ -778,7 +842,7 @@ def test_decode_quarantine_mode_yields_rows_not_task_failures(spark):
         "doc_id long, payload binary",
     )
     arows = {r.doc_id: r for r in
-             multimodal.decode_audio(ablobs, errors="quarantine").collect()}
+             multimodal.decode_audio(ablobs).collect()}
     assert arows[1].format == "wav" and arows[1].error is None
     assert arows[1].peak == 100 and arows[1].error_kind is None
     assert arows[2].format is None and "codec" in arows[2].error
@@ -850,15 +914,21 @@ def test_decode_wav_g711_ulaw_alaw_exact():
 
 
 def test_decode_wav_compressed_still_stubbed(spark):
-    """MS-ADPCM / MP3-in-WAV / non-RIFF payloads need a codec library
-    (absent here) — the honest NotImplementedError surfaces through the
-    Spark action. (Float PCM, 24/32-bit, G.711, and IMA ADPCM really
-    decode since r9 — see the tests above.)"""
+    """MP3-in-WAV / bare MPEG payloads need a codec library (absent
+    here) — the honest NotImplementedError comes back from the Spark
+    action as an 'unsupported' quarantine row. (Float PCM, 24/32-bit,
+    G.711, IMA and MS ADPCM really decode since r9 — see the tests
+    above.)"""
     mp3_wav = _wav(8000, [(1, 1)], fmt_code=85, bits=16)
-    with pytest.raises(Exception, match="variant not supported"):
-        multimodal.decode_audio(_blob_df(spark, mp3_wav)).collect()
-    with pytest.raises(Exception, match="codec"):
-        multimodal.decode_audio(_blob_df(spark, b"ID3\x04" + b"\x00" * 32)).collect()
+    rows = {r.doc_id: r for r in multimodal.decode_audio(
+        spark.createDataFrame(
+            [(1, bytearray(mp3_wav)),
+             (2, bytearray(b"ID3\x04" + b"\x00" * 32))],
+            "doc_id long, payload binary")).collect()}
+    assert {r.error_kind for r in rows.values()} == {"unsupported"}
+    assert rows[1].error.startswith("WAVE variant not supported (format=85")
+    assert "Layer II/III need a codec library" in rows[2].error
+    assert rows[1].format is None and rows[2].n_frames is None
 
 
 def test_exact_duplicates_groups_copies(spark):

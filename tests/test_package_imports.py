@@ -184,3 +184,40 @@ def test_no_module_imports_private_versioned_names():
                 ]
     assert not offenders, "private versioned.py names imported:\n" + \
         "\n".join(offenders)
+
+
+_TRIAGE_ROUTERS = {("operators/mediameta.py", "triage_decode_images"),
+                   ("operators/mediameta.py", "triage_decode_audio")}
+
+
+def test_one_quarantine_contract_for_payload_operators():
+    """Every payload operator returns its quarantine shape through the one
+    harness in operators/multimodal.py: no package function takes an
+    ``errors`` mode, and no other module turns DECODE_ERRORS into rows
+    itself — except the triage routers, whose route column records which
+    stage (probe or decode) refused."""
+    pkg_dir = os.path.join(ROOT, _PKG)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"),
+                                 recursive=True)):
+        rel = os.path.relpath(path, pkg_dir)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.Lambda)):
+                a = node.args
+                if any(p.arg == "errors" for p in
+                       a.posonlyargs + a.args + a.kwonlyargs):
+                    offenders.append(f"{rel}:{node.lineno} errors parameter")
+        if rel == os.path.join("operators", "multimodal.py"):
+            continue
+        for top in tree.body:
+            if (rel, getattr(top, "name", None)) in _TRIAGE_ROUTERS:
+                continue
+            for node in ast.walk(top):
+                if isinstance(node, ast.ExceptHandler) and node.type and \
+                        "DECODE_ERRORS" in _names(node.type):
+                    offenders.append(f"{rel}:{node.lineno} catches "
+                                     "DECODE_ERRORS")
+    assert not offenders, "second quarantine path:\n" + "\n".join(offenders)

@@ -431,12 +431,12 @@ def test_pdf_text_quarantine_rows(spark):
             (3, bytearray(b"%PDF-1.4 nothing"))]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in
-           P.pdf_text(df, errors="quarantine").collect()}
+           P.pdf_text(df).collect()}
     assert out[1]["text"] == "ok doc" and out[1]["error"] is None
     assert out[2]["error_kind"] == "unsupported"
     assert out[3]["error_kind"] == "corrupt"
     meta = {r["doc_id"]: r for r in
-            P.pdf_meta(df, errors="quarantine").collect()}
+            P.pdf_meta(df).collect()}
     assert meta[1]["n_pages"] == 1 and meta[1]["encrypted"] is False
     assert meta[2]["encrypted"] is True  # probe succeeds, no decrypt
     assert meta[3]["error_kind"] == "corrupt"
@@ -465,7 +465,7 @@ def test_pdf_to_documents_composition(spark):
     df = spark.createDataFrame(
         [(7, bytearray(doc)), (8, bytearray(b"broken"))],
         "doc_id long, payload binary")
-    extracted = P.pdf_text(df, errors="quarantine")
+    extracted = P.pdf_text(df)
     rows = {r["doc_id"]: r for r in extracted.collect()}
     assert rows[7]["text"].split("\f") == [
         "The quick brown fox jumps over the lazy dog today",
@@ -478,11 +478,13 @@ def test_pdf_to_documents_composition(spark):
     assert result["documents"].count() == 1
 
 
-def test_pdf_text_raise_mode_propagates(spark):
+def test_pdf_text_junk_payload_is_a_corrupt_row(spark):
     df = spark.createDataFrame([(1, bytearray(b"junk"))],
                                "doc_id long, payload binary")
-    with pytest.raises(Exception):
-        P.pdf_text(df, errors="raise").collect()
+    (row,) = P.pdf_text(df).collect()
+    assert row["error_kind"] == "corrupt"
+    assert row["error"] == "malformed PDF: missing %PDF- header"
+    assert row["format"] is None and row["text"] is None
 
 
 # ---------------------------------------------------------------------------

@@ -191,7 +191,7 @@ def test_spark_operator_and_payload_bridge(spark):
     blobs = spark.createDataFrame(
         [(1, bytearray(doc)), (2, bytearray(b"not a pdf"))],
         "doc_id long, payload binary")
-    images = P.pdf_images(blobs, errors="quarantine")
+    images = P.pdf_images(blobs)
     rows = images.collect()
     by_name = {r["name"]: r for r in rows if r["name"] is not None}
     assert by_name["Jpx"]["error_kind"] == "unsupported"
@@ -203,7 +203,7 @@ def test_spark_operator_and_payload_bridge(spark):
         [(i, r["payload"]) for i, r in enumerate(good)],
         "doc_id long, payload binary")
     decoded = {good[r["doc_id"]]["name"]: r for r in decode_image(
-        payloads, errors="quarantine").collect()}
+        payloads).collect()}
     ppm_row = decoded["Raw"]
     assert (ppm_row["width"], ppm_row["height"]) == (5, 4)
     assert ppm_row["mean_r"] == pytest.approx(px[:, :, 0].mean())
@@ -215,13 +215,19 @@ def test_spark_operator_and_payload_bridge(spark):
                                              abs=1e-6)
 
 
-def test_raise_mode_propagates_image_errors(spark):
+def test_refused_image_is_its_own_error_row(spark):
     doc = pdf_with_images([(b"Jpx", img_obj(
         b"/Width 2 /Height 2 /Filter /JPXDecode ", b"\x00"))])
     blobs = spark.createDataFrame([(1, bytearray(doc))],
                                   "doc_id long, payload binary")
-    with pytest.raises(Exception):
-        P.pdf_images(blobs, errors="raise").collect()
+    (row,) = P.pdf_images(blobs).collect()
+    # the item row keeps its position; only the image itself refused
+    assert (row["doc_id"], row["page_idx"], row["image_idx"],
+            row["name"]) == (1, 0, 0, "Jpx")
+    assert row["error_kind"] == "unsupported"
+    assert row["error"] == ("PDF image BitsPerComponent=None: only 8-bit "
+                            "samples are unpacked here")
+    assert row["payload"] is None
 
 
 def test_corpus_pdf_to_images_composition(spark):
@@ -247,7 +253,7 @@ def test_corpus_pdf_to_images_composition(spark):
         [(1, bytearray(doc_a)), (2, bytearray(doc_b)),
          (3, bytearray(b"broken"))],
         "doc_id long, payload binary")
-    extracted = P.pdf_images(blobs, errors="quarantine")
+    extracted = P.pdf_images(blobs)
     rows = extracted.collect()
     # refused image + broken doc quarantine; two good figures remain
     assert sorted(r["error_kind"] for r in rows if r["error"]) == \
@@ -258,7 +264,7 @@ def test_corpus_pdf_to_images_composition(spark):
     images = spark.createDataFrame(
         [(r["doc_id"], r["payload"]) for r in good],
         "doc_id long, payload binary")
-    hashes = image_hashes(images, errors="quarantine").collect()
+    hashes = image_hashes(images).collect()
     assert len({(h["dhash"], h["ahash"]) for h in hashes}) == 1
 
 

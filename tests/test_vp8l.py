@@ -585,7 +585,7 @@ def test_decode_rgb_routes_vp8l_and_quarantine(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in multimodal.decode_image(
-        blobs, errors="quarantine"
+        blobs
     ).collect()}
     assert rows[1].format == "webp" and rows[1].error is None
     assert (rows[1].width, rows[1].height) == (5, 3)

@@ -102,47 +102,33 @@ def _ops():
         )
 
     return {
-        "decode_image": lambda df: decode_image(
-            fam(df, "image"), errors="quarantine"),
-        "decode_audio": lambda df: decode_audio(
-            fam(df, "audio"), errors="quarantine"),
-        "image_meta": lambda df: image_meta(
-            fam(df, "image", "image_meta"), errors="quarantine"),
-        "video_meta": lambda df: video_meta(
-            fam(df, "video_meta"), errors="quarantine"),
-        "audio_meta": lambda df: audio_meta(
-            fam(df, "audio_meta"), errors="quarantine"),
+        "decode_image": lambda df: decode_image(fam(df, "image")),
+        "decode_audio": lambda df: decode_audio(fam(df, "audio")),
+        "image_meta": lambda df: image_meta(fam(df, "image", "image_meta")),
+        "video_meta": lambda df: video_meta(fam(df, "video_meta")),
+        "audio_meta": lambda df: audio_meta(fam(df, "audio_meta")),
         "triage_decode_images": lambda df: triage_decode_images(
             fam(df, "image", "image_meta")),
         "video_keyframe_features": lambda df: video_keyframe_features(
-            fam(df, "video_frame"), errors="quarantine"),
+            fam(df, "video_frame")),
         "audio_subband_features": lambda df: audio_subband_features(
-            fam(df, "audio_subband"), errors="quarantine"),
-        "pdf_text": lambda df: pdf_text(
-            fam(df, "document"), errors="quarantine"),
-        "pdf_meta": lambda df: pdf_meta(
-            fam(df, "document", "document_meta"), errors="quarantine"),
-        "image_hashes": lambda df: image_hashes(
-            fam(df, "image", "image_hash"), errors="quarantine"),
+            fam(df, "audio_subband")),
+        "pdf_text": lambda df: pdf_text(fam(df, "document")),
+        "pdf_meta": lambda df: pdf_meta(fam(df, "document", "document_meta")),
+        "image_hashes": lambda df: image_hashes(fam(df, "image", "image_hash")),
         "strip_exif": lambda df: strip_exif(
-            fam(df, "image_exif", "exif_strip"), errors="quarantine"),
-        "docx_text": lambda df: docx_text(
-            fam(df, "office"), errors="quarantine"),
-        "archive_members": lambda df: archive_members(
-            fam(df, "archive")),
+            fam(df, "image_exif", "exif_strip")),
+        "docx_text": lambda df: docx_text(fam(df, "office")),
+        "archive_members": lambda df: archive_members(fam(df, "archive")),
         # r12 additions (VERDICT r11 item 5): the remaining crawl-front
         # operators + the archive->decoder composition
-        "warc_records": lambda df: warc_records(
-            fam(df, "warc_records"), errors="quarantine"),
-        "subtitles_text": lambda df: subtitles_text(
-            fam(df, "subtitle"), errors="quarantine"),
+        "warc_records": lambda df: warc_records(fam(df, "warc_records")),
+        "subtitles_text": lambda df: subtitles_text(fam(df, "subtitle")),
         "members_to_decode": lambda df: decode_image(
             members_as_payloads(
-                archive_members(fam(df, "archive"))),
-            errors="quarantine"),
+                archive_members(fam(df, "archive")))),
         "pdf_images": lambda df: pdf_images(
-            fam(df, "document", "document_images"),
-            errors="quarantine"),
+            fam(df, "document", "document_images")),
     }
 
 

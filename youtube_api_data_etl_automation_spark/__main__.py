@@ -907,52 +907,41 @@ def _cmd_media(args: argparse.Namespace) -> int:
         return 1
     blobs = blobs.select("doc_id", "payload")
     ops = {
-        "probe": lambda b: mediameta.image_meta(b, errors="quarantine"),
-        "decode": lambda b: decode_image(b, errors="quarantine"),
-        "audio": lambda b: decode_audio(b, errors="quarantine"),
-        "audiometa": lambda b: mediameta.audio_meta(
-            b, errors="quarantine"),
-        "video": lambda b: mediameta.video_meta(b, errors="quarantine"),
+        "probe": mediameta.image_meta,
+        "decode": decode_image,
+        "audio": decode_audio,
+        "audiometa": mediameta.audio_meta,
+        "video": mediameta.video_meta,
         "triage": lambda b: mediameta.triage_decode_images(
             b, max_pixels=args.max_pixels),
-        "exif": lambda b: mediameta.image_exif(b, errors="quarantine"),
-        "tags": lambda b: mediameta.audio_tags(b, errors="quarantine"),
-        "audiotriage": lambda b: mediameta.triage_decode_audio(b),
-        "archive": lambda b: archives.archive_meta(
-            b, errors="quarantine"),
-        "warc": lambda b: archives.warc_records(b),
-        "keyframe": lambda b: mediameta.video_keyframe_features(
-            b, errors="quarantine"),
-        "subband": lambda b: audio_subband_features(
-            b, errors="quarantine"),
-        "pdftext": lambda b: pdf.pdf_text(b, errors="quarantine"),
-        "pdfmeta": lambda b: pdf.pdf_meta(b, errors="quarantine"),
-        "pdfimages": lambda b: pdf.pdf_images(b, errors="quarantine"),
-        "sniff": lambda b: mediameta.sniff_format(b),
-        "imagehash": lambda b: imagehash.image_hashes(
-            b, errors="quarantine"),
-        "members": lambda b: archives.archive_members(
-            b, errors="quarantine"),
-        "exifstrip": lambda b: mediameta.strip_exif(
-            b, errors="quarantine"),
-        "docxtext": lambda b: archives.docx_text(b, errors="quarantine"),
-        "pptxtext": lambda b: archives.pptx_text(b, errors="quarantine"),
-        "xlsxtext": lambda b: archives.xlsx_text(b, errors="quarantine"),
-        "odftext": lambda b: archives.odf_text(b, errors="quarantine"),
-        "epubtext": lambda b: archives.epub_text(b, errors="quarantine"),
-        "emltext": lambda b: mail.eml_text(b, errors="quarantine"),
-        "rtftext": lambda b: rtf.rtf_text(b, errors="quarantine"),
-        "latextext": lambda b: latex.latex_text(b, errors="quarantine"),
-        "mdtext": lambda b: markdown.markdown_text(
-            b, errors="quarantine"),
-        "ipynbtext": lambda b: notebooks.ipynb_text(
-            b, errors="quarantine"),
-        "mboxsplit": lambda b: mail.mbox_split(b),
-        "thumbnail": lambda b: imagehash.image_thumbnails(
-            b, errors="quarantine"),
-        "subtitles": lambda b: subtitles.subtitles_text(b),
-        "tiffpages": lambda b: tiff.tiff_page_images(
-            b, errors="quarantine"),
+        "exif": mediameta.image_exif,
+        "tags": mediameta.audio_tags,
+        "audiotriage": mediameta.triage_decode_audio,
+        "archive": archives.archive_meta,
+        "warc": archives.warc_records,
+        "keyframe": mediameta.video_keyframe_features,
+        "subband": audio_subband_features,
+        "pdftext": pdf.pdf_text,
+        "pdfmeta": pdf.pdf_meta,
+        "pdfimages": pdf.pdf_images,
+        "sniff": mediameta.sniff_format,
+        "imagehash": imagehash.image_hashes,
+        "members": archives.archive_members,
+        "exifstrip": mediameta.strip_exif,
+        "docxtext": archives.docx_text,
+        "pptxtext": archives.pptx_text,
+        "xlsxtext": archives.xlsx_text,
+        "odftext": archives.odf_text,
+        "epubtext": archives.epub_text,
+        "emltext": mail.eml_text,
+        "rtftext": rtf.rtf_text,
+        "latextext": latex.latex_text,
+        "mdtext": markdown.markdown_text,
+        "ipynbtext": notebooks.ipynb_text,
+        "mboxsplit": mail.mbox_split,
+        "thumbnail": imagehash.image_thumbnails,
+        "subtitles": subtitles.subtitles_text,
+        "tiffpages": tiff.tiff_page_images,
     }
     out = ops[args.op](blobs)
     if args.output:

@@ -655,7 +655,7 @@ def repo_archive_to_code_documents(
     from .operators.code_quality import lang_from_path, stack_filter
 
     members = archive_members(
-        blobs, errors="quarantine",
+        blobs,
         byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
     ).filter(
         F.col("error").isNull() & F.col("body").isNotNull()

@@ -6,10 +6,10 @@ A 100 TB web corpus arrives as archives: Common-Crawl-style WARC files
 and bare gzip documents. Before any text pipeline runs, the engine
 must (a) triage what an opaque payload IS without unpacking it, and
 (b) split the record containers into per-document rows. This module
-does both with the decode family's contract (Arrow-batched
-mapInPandas, ``errors='quarantine'`` one-bad-blob-is-a-row, explicit
-byte budgets so a zip/gzip bomb refuses instead of filling an
-executor):
+does both with the decode family's contract (the Arrow-batched
+:func:`.multimodal._quarantine_map` harness: one bad blob is a row
+with ``error`` / ``error_kind`` set, and explicit byte budgets make a
+zip/gzip bomb refuse instead of filling an executor):
 
 - ``archive_meta``: O(header / central-directory) probe — gzip member
   header (method, mtime, FNAME, ISIZE hint), zip end-of-central-
@@ -51,9 +51,7 @@ ingestion stage for file-drop corpora.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 # decompressed-output budgets: a 40-byte gzip bomb can declare
@@ -63,14 +61,14 @@ ARCHIVE_BYTE_BUDGET = 1 << 26  # 64 MiB decompressed per payload
 
 ARCHIVE_META_SCHEMA = (
     "doc_id bigint, format string, n_members int, "
-    "uncompressed_hint bigint, detail string"
+    "uncompressed_hint bigint, detail string, error string, error_kind string"
 )
 
 WARC_RECORDS_SCHEMA = (
     "doc_id bigint, record_idx int, warc_type string, target_uri string, "
     "warc_date string, content_type string, content_length bigint, "
     "http_status int, http_content_type string, body binary, "
-    "body_text string"
+    "body_text string, error string, error_kind string"
 )
 
 
@@ -312,7 +310,7 @@ def _parse_warc_meta(payload: bytes, budget: int | None) -> dict:
     }
 
 
-def archive_meta(blobs: DataFrame, errors: str = "raise",
+def archive_meta(blobs: DataFrame,
                  byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                  ) -> DataFrame:
     """Probe an archive payload without unpacking members: ``(doc_id,
@@ -322,13 +320,9 @@ def archive_meta(blobs: DataFrame, errors: str = "raise",
     member data by declared size, WARC counts records (decompressing
     .warc.gz under the budget — the one non-O(header) case, inherent
     to gzip). Unknown magic refuses 'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
-        payload = payload or b""
         if not payload:
             raise ValueError("empty/NULL archive payload")
         if payload[:4] == b"PK\x03\x04" or payload[:4] == b"PK\x05\x06":
@@ -364,19 +358,10 @@ def archive_meta(blobs: DataFrame, errors: str = "raise",
             "7z/rar/zstd need their libraries"
         )
 
-    schema = ARCHIVE_META_SCHEMA + ", error string, error_kind string" \
-        if quarantine else ARCHIVE_META_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one,
-            ("format", "n_members", "uncompressed_hint", "detail"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, one, ARCHIVE_META_SCHEMA)
 
 
-def warc_records(blobs: DataFrame, errors: str = "quarantine",
+def warc_records(blobs: DataFrame,
                  byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                  ) -> DataFrame:
     """Split WARC payloads (plain or .warc.gz incl. member-per-record)
@@ -384,96 +369,63 @@ def warc_records(blobs: DataFrame, errors: str = "quarantine",
     HTTP status line and Content-Type and carry the HTTP body bytes;
     other record types carry their raw content. Fan-out stays inside
     the partition (mapInPandas) — no shuffle."""
-    from .multimodal import (
-        DECODE_ERRORS,
-        _check_errors_mode,
-        _error_kind,
-        _error_text,
-    )
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-    cols = ("doc_id", "record_idx", "warc_type", "target_uri",
-            "warc_date", "content_type", "content_length",
-            "http_status", "http_content_type", "body", "body_text",
-            "error", "error_kind")
+    texty = ("text/html", "text/plain", "application/json",
+             "application/xhtml+xml", "text/xml")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {c: [] for c in cols}
+    def records(raw):
+        data = _gunzip_all(raw, byte_budget) \
+            if raw[:2] == b"\x1f\x8b" else raw
+        rows = []
+        for i, (h, content) in enumerate(_split_warc(data)):
+            status = hct = None
+            body = content
+            ctype = h.get("content-type", "")
+            if ctype.startswith("application/http"):
+                eol = content.find(b"\r\n")
+                parts = content[:eol].split(b" ", 2) if eol > 0 else []
+                if len(parts) >= 2 and parts[0][:5] == b"HTTP/":
+                    try:
+                        status = int(parts[1])
+                    except ValueError:
+                        status = None
+                hdr_end = content.find(b"\r\n\r\n")
+                if hdr_end >= 0:
+                    for line in content[:hdr_end].split(b"\r\n"):
+                        if line[:13].lower() == b"content-type:":
+                            hct = line[13:].strip().decode(
+                                "utf-8", "replace")
+                    body = content[hdr_end + 4 :]
+            # utf-8 text decoded HERE (replacement chars for malformed
+            # bytes) for texty responses: ANSI-mode F.decode throws on
+            # crawl garbage, a Python-side decode is total
+            text = None
+            if hct is not None:
+                if hct.split(";")[0].strip() in texty:
+                    text = body.decode("utf-8", "replace")
+            elif ctype.split(";")[0].strip() in texty:
+                # no HTTP envelope but a texty WARC content-type: the
+                # WET 'conversion' record shape (extracted text as
+                # text/plain record content)
+                text = body.decode("utf-8", "replace")
+            rows.append({
+                "record_idx": i, "warc_type": h.get("warc-type"),
+                "target_uri": h.get("warc-target-uri"),
+                "warc_date": h.get("warc-date"),
+                "content_type": ctype or None,
+                "content_length": int(h["content-length"]),
+                "http_status": status, "http_content_type": hct,
+                "body": body, "body_text": text,
+            })
+        return rows
 
-            def emit(doc_id, idx=None, wtype=None, uri=None, date=None,
-                     ctype=None, clen=None, status=None, hct=None,
-                     body=None, text=None, err=None, kind=None):
-                for c, v in zip(cols, (doc_id, idx, wtype, uri, date,
-                                       ctype, clen, status, hct, body,
-                                       text, err, kind)):
-                    out[c].append(v)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    data = _gunzip_all(raw, byte_budget) \
-                        if raw[:2] == b"\x1f\x8b" else raw
-                    records = _split_warc(data)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, err=_error_text(e), kind=_error_kind(e))
-                    continue
-                for i, (h, content) in enumerate(records):
-                    status = hct = None
-                    body = content
-                    ctype = h.get("content-type", "")
-                    if ctype.startswith("application/http"):
-                        eol = content.find(b"\r\n")
-                        parts = content[:eol].split(b" ", 2) \
-                            if eol > 0 else []
-                        if len(parts) >= 2 and parts[0][:5] == b"HTTP/":
-                            try:
-                                status = int(parts[1])
-                            except ValueError:
-                                status = None
-                        hdr_end = content.find(b"\r\n\r\n")
-                        if hdr_end >= 0:
-                            for line in content[:hdr_end].split(b"\r\n"):
-                                if line[:13].lower() == b"content-type:":
-                                    hct = line[13:].strip().decode(
-                                        "utf-8", "replace")
-                            body = content[hdr_end + 4 :]
-                    # utf-8 text decoded HERE (replacement chars for
-                    # malformed bytes) for texty responses: ANSI-mode
-                    # F.decode throws on crawl garbage, a Python-side
-                    # decode is total
-                    text = None
-                    texty = ("text/html", "text/plain",
-                             "application/json",
-                             "application/xhtml+xml", "text/xml")
-                    if hct is not None:
-                        if hct.split(";")[0].strip() in texty:
-                            text = body.decode("utf-8", "replace")
-                    elif ctype.split(";")[0].strip() in texty:
-                        # no HTTP envelope but a texty WARC content-type:
-                        # the WET 'conversion' record shape (extracted
-                        # text as text/plain record content)
-                        text = body.decode("utf-8", "replace")
-                    emit(doc_id, i, h.get("warc-type"),
-                         h.get("warc-target-uri"), h.get("warc-date"),
-                         ctype or None,
-                         int(h["content-length"]), status, hct,
-                         bytearray(body), text)
-            yield pd.DataFrame(
-                {c: pd.Series(v, dtype="object")
-                 for c, v in out.items()
-                 if quarantine or c not in ("error", "error_kind")}
-            )
-
-    schema = WARC_RECORDS_SCHEMA + ", error string, error_kind string" \
-        if quarantine else WARC_RECORDS_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, records, WARC_RECORDS_SCHEMA)
 
 
 ARCHIVE_MEMBERS_SCHEMA = (
-    "doc_id bigint, member_idx int, name string, size bigint, body binary"
+    "doc_id bigint, member_idx int, name string, size bigint, body binary, "
+    "error string, error_kind string"
 )
 
 
@@ -551,7 +503,7 @@ def _iter_archive_members(raw: bytes,
     )
 
 
-def archive_members(blobs: DataFrame, errors: str = "quarantine",
+def archive_members(blobs: DataFrame,
                     byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                     ) -> DataFrame:
     """Uniform member extraction over mixed zip / tar / gzip / .tar.gz
@@ -559,47 +511,15 @@ def archive_members(blobs: DataFrame, errors: str = "quarantine",
     body)``. The container fan-out stays inside the partition
     (mapInPandas) — no shuffle; feed the output to
     :func:`members_as_payloads` and any decoder takes it from there."""
-    from .multimodal import (
-        DECODE_ERRORS,
-        _check_errors_mode,
-        _error_kind,
-        _error_text,
-    )
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-    cols = ("doc_id", "member_idx", "name", "size", "body",
-            "error", "error_kind")
+    def members(raw):
+        return [{"member_idx": i, "name": name, "size": len(body),
+                 "body": body}
+                for i, (name, body) in enumerate(
+                    _iter_archive_members(raw, byte_budget))]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {c: [] for c in cols}
-
-            def emit(doc_id, idx=None, name=None, size=None, body=None,
-                     err=None, kind=None):
-                for c, v in zip(cols, (doc_id, idx, name, size, body,
-                                       err, kind)):
-                    out[c].append(v)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    members = _iter_archive_members(raw, byte_budget)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, err=_error_text(e), kind=_error_kind(e))
-                    continue
-                for i, (name, body) in enumerate(members):
-                    emit(doc_id, i, name, len(body), bytearray(body))
-            yield pd.DataFrame(
-                {c: pd.Series(v, dtype="object")
-                 for c, v in out.items()
-                 if quarantine or c not in ("error", "error_kind")}
-            )
-
-    schema = ARCHIVE_MEMBERS_SCHEMA + ", error string, error_kind string" \
-        if quarantine else ARCHIVE_MEMBERS_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, members, ARCHIVE_MEMBERS_SCHEMA)
 
 
 def members_as_payloads(members: DataFrame) -> DataFrame:
@@ -625,7 +545,7 @@ def members_as_payloads(members: DataFrame) -> DataFrame:
 
 DOCX_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_paragraphs int, n_chars int, "
-    "text string"
+    "text string, error string, error_kind string"
 )
 
 # minimal XML entity set WordprocessingML actually emits in w:t runs
@@ -685,7 +605,7 @@ def _docx_extract_text(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_paras, "".join(parts).strip()
 
 
-def docx_text(blobs: DataFrame, errors: str = "quarantine",
+def docx_text(blobs: DataFrame,
               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
               ) -> DataFrame:
     """REAL .docx text extraction over ``(doc_id, payload)`` — the
@@ -694,34 +614,23 @@ def docx_text(blobs: DataFrame, errors: str = "quarantine",
     One row per document: paragraph count, char count, text (paragraph
     breaks as newlines). Quarantine contract; legacy .doc refuses as
     'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         if not raw:
             raise ValueError("empty/NULL docx payload")
         n_paras, text = _docx_extract_text(raw, byte_budget)
         return {"format": "docx", "n_paragraphs": n_paras,
                 "n_chars": len(text), "text": text}
 
-    schema = DOCX_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else DOCX_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_paragraphs", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, DOCX_TEXT_SCHEMA)
 
 
 _OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
 PPTX_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_slides int, n_paragraphs int, "
-    "n_chars int, text string"
+    "n_chars int, text string, error string, error_kind string"
 )
 
 _AT_RE = None  # DrawingML run walk, compiled lazily like _WT_RE
@@ -814,7 +723,7 @@ def _pptx_extract_text(raw: bytes,
     return len(slides), n_paras, "\f".join(pages).strip("\f")
 
 
-def pptx_text(blobs: DataFrame, errors: str = "quarantine",
+def pptx_text(blobs: DataFrame,
               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
               ) -> DataFrame:
     """REAL .pptx text extraction over ``(doc_id, payload)`` (r14,
@@ -823,13 +732,9 @@ def pptx_text(blobs: DataFrame, errors: str = "quarantine",
     One row per document: slide/paragraph counts, char count, text
     (slides separated by form-feed, the pdf_text convention).
     Quarantine contract; legacy .ppt refuses as 'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         if not raw:
             raise ValueError("empty/NULL pptx payload")
         n_slides, n_paras, text = _pptx_extract_text(raw, byte_budget)
@@ -837,20 +742,12 @@ def pptx_text(blobs: DataFrame, errors: str = "quarantine",
                 "n_paragraphs": n_paras, "n_chars": len(text),
                 "text": text}
 
-    schema = PPTX_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else PPTX_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_slides", "n_paragraphs", "n_chars",
-                  "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, PPTX_TEXT_SCHEMA)
 
 
 XLSX_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_sheets int, n_cells int, "
-    "n_chars int, text string"
+    "n_chars int, text string, error string, error_kind string"
 )
 
 
@@ -958,7 +855,7 @@ def _xlsx_extract_text(raw: bytes,
     return len(sheets), n_cells, "\f".join(pages).strip("\f")
 
 
-def xlsx_text(blobs: DataFrame, errors: str = "quarantine",
+def xlsx_text(blobs: DataFrame,
               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
               ) -> DataFrame:
     """REAL .xlsx text extraction over ``(doc_id, payload)`` (r14,
@@ -968,32 +865,21 @@ def xlsx_text(blobs: DataFrame, errors: str = "quarantine",
     char count, text (cells tab-joined, rows newline-joined, sheets
     form-feed-joined). Quarantine contract; legacy .xls refuses as
     'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         if not raw:
             raise ValueError("empty/NULL xlsx payload")
         n_sheets, n_cells, text = _xlsx_extract_text(raw, byte_budget)
         return {"format": "xlsx", "n_sheets": n_sheets,
                 "n_cells": n_cells, "n_chars": len(text), "text": text}
 
-    schema = XLSX_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else XLSX_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_sheets", "n_cells", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, XLSX_TEXT_SCHEMA)
 
 
 ODF_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_paragraphs int, n_chars int, "
-    "text string"
+    "text string, error string, error_kind string"
 )
 
 _ODF_RES = None  # the ODF walk's regexes, compiled lazily
@@ -1097,7 +983,7 @@ def _odf_extract_text(raw: bytes,
     return kind, n_paras, text
 
 
-def odf_text(blobs: DataFrame, errors: str = "quarantine",
+def odf_text(blobs: DataFrame,
              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
              ) -> DataFrame:
     """REAL OpenDocument text extraction over ``(doc_id, payload)``
@@ -1107,32 +993,21 @@ def odf_text(blobs: DataFrame, errors: str = "quarantine",
     or ``odf`` when the mimetype member is absent), paragraph count,
     char count, text. Quarantine contract; legacy StarOffice binary
     payloads refuse via the OLE2 check."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         if not raw:
             raise ValueError("empty/NULL odf payload")
         kind, n_paras, text = _odf_extract_text(raw, byte_budget)
         return {"format": kind, "n_paragraphs": n_paras,
                 "n_chars": len(text), "text": text}
 
-    schema = ODF_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else ODF_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_paragraphs", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, ODF_TEXT_SCHEMA)
 
 
 EPUB_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_chapters int, n_chars int, "
-    "text string"
+    "text string, error string, error_kind string"
 )
 
 _EPUB_RES = None  # the EPUB walk's regexes, compiled lazily
@@ -1281,7 +1156,7 @@ def _epub_extract_text(raw: bytes,
     return len(chapters), "\f".join(chapters).strip("\f")
 
 
-def epub_text(blobs: DataFrame, errors: str = "quarantine",
+def epub_text(blobs: DataFrame,
               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
               ) -> DataFrame:
     """REAL EPUB text extraction over ``(doc_id, payload)`` (r14) —
@@ -1290,24 +1165,13 @@ def epub_text(blobs: DataFrame, errors: str = "quarantine",
     consolidated zip harness and budgets as the office trio. One row
     per book: chapter count, char count, text (chapters form-feed
     separated). Quarantine contract."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         if not raw:
             raise ValueError("empty/NULL epub payload")
         n_chapters, text = _epub_extract_text(raw, byte_budget)
         return {"format": "epub", "n_chapters": n_chapters,
                 "n_chars": len(text), "text": text}
 
-    schema = EPUB_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else EPUB_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_chapters", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, EPUB_TEXT_SCHEMA)

@@ -38,20 +38,14 @@ any hot LSH band — AQE skew-join splits it at runtime.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 IMAGE_HASH_SCHEMA = (
     "doc_id bigint, format string, width int, height int, "
-    "dhash bigint, ahash bigint"
-)
-IMAGE_HASH_QUARANTINE_SCHEMA = (
-    IMAGE_HASH_SCHEMA + ", error string, error_kind string"
+    "dhash bigint, ahash bigint, error string, error_kind string"
 )
 
 
@@ -106,7 +100,7 @@ def ahash64(rgb: np.ndarray) -> int:
 IMAGE_HASH_PIXEL_BUDGET = 4_000_000  # same default as triage
 
 
-def image_hashes(blobs: DataFrame, errors: str = "raise",
+def image_hashes(blobs: DataFrame,
                  max_pixels: int | None = IMAGE_HASH_PIXEL_BUDGET,
                  ) -> DataFrame:
     """Decode + hash in ONE pass over ``(doc_id, payload)``: per image
@@ -120,78 +114,32 @@ def image_hashes(blobs: DataFrame, errors: str = "raise",
     ``error_kind='unsupported'`` instead of tying up an executor; pass
     None to hash everything."""
     from .mediameta import _probe_image
-    from .multimodal import (
-        DECODE_ERRORS, _check_errors_mode, _decode_rgb, _error_kind,
-        _error_text,
-    )
+    from .multimodal import _decode_rgb, _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
+    def one(raw):
+        if max_pixels is not None:
+            _, pw, ph = _probe_image(raw)
+            if pw * ph > max_pixels:
+                raise NotImplementedError(
+                    f"image {pw}x{ph} exceeds the {max_pixels}-pixel hash "
+                    "budget; raise max_pixels (or pass None) to force the "
+                    "decode"
+                )
+        fmt, rgb = _decode_rgb(raw)
+        return {"format": fmt, "width": rgb.shape[1],
+                "height": rgb.shape[0], "dhash": dhash64(rgb),
+                "ahash": ahash64(rgb)}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fmts, ws, hs, dh, ah = [], [], [], [], [], []
-            errs, kinds = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload) if payload is not None else b""
-                    if max_pixels is not None:
-                        _, pw, ph = _probe_image(raw)
-                        if pw * ph > max_pixels:
-                            raise NotImplementedError(
-                                f"image {pw}x{ph} exceeds the "
-                                f"{max_pixels}-pixel hash budget; raise "
-                                "max_pixels (or pass None) to force the "
-                                "decode"
-                            )
-                    fmt, rgb = _decode_rgb(raw)
-                    d, a = dhash64(rgb), ahash64(rgb)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    ids.append(doc_id)
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    dh.append(None)
-                    ah.append(None)
-                    errs.append(_error_text(e))
-                    kinds.append(_error_kind(e))
-                    continue
-                ids.append(doc_id)
-                fmts.append(fmt)
-                hs.append(rgb.shape[0])
-                ws.append(rgb.shape[1])
-                dh.append(d)
-                ah.append(a)
-                errs.append(None)
-                kinds.append(None)
-            out = {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "format": pd.Series(fmts, dtype="object"),
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "dhash": pd.array(dh, dtype="Int64"),
-                "ahash": pd.array(ah, dtype="Int64"),
-            }
-            if quarantine:
-                out["error"] = pd.Series(errs, dtype="object")
-                out["error_kind"] = pd.Series(kinds, dtype="object")
-            yield pd.DataFrame(out)
-
-    schema = IMAGE_HASH_QUARANTINE_SCHEMA if quarantine \
-        else IMAGE_HASH_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, one, IMAGE_HASH_SCHEMA)
 
 
 THUMB_SCHEMA = (
     "doc_id bigint, format string, width int, height int, "
-    "thumb_w int, thumb_h int, thumb binary"
+    "thumb_w int, thumb_h int, thumb binary, error string, error_kind string"
 )
-THUMB_QUARANTINE_SCHEMA = THUMB_SCHEMA + ", error string, error_kind string"
 
 
 def image_thumbnails(blobs: DataFrame, out_h: int = 8, out_w: int = 8,
-                     errors: str = "raise",
                      max_pixels: int | None = IMAGE_HASH_PIXEL_BUDGET,
                      ) -> DataFrame:
     """Deterministic thumbnail extraction — the resize step of an image
@@ -201,77 +149,37 @@ def image_thumbnails(blobs: DataFrame, out_h: int = 8, out_w: int = 8,
     kernels, so the output bytes are bit-identical across machines),
     round half-up to uint8, and emit row-major RGB bytes
     (``out_h*out_w*3``). Probe-first pixel budget like
-    :func:`image_hashes`; quarantine contract like every payload op.
-    The thumbnail is the model-input proxy — downstream embedding or
-    pHash-style stages consume it without re-decoding the original."""
+    :func:`image_hashes`; quarantine contract like every payload op
+    (a refused image's ``thumb_w``/``thumb_h`` are NULL, like its other
+    feature columns). The thumbnail is the model-input proxy —
+    downstream embedding or pHash-style stages consume it without
+    re-decoding the original."""
     from .mediameta import _probe_image
-    from .multimodal import (
-        DECODE_ERRORS, _check_errors_mode, _decode_rgb, _error_kind,
-        _error_text,
-    )
+    from .multimodal import _decode_rgb, _quarantine_map
 
     if not (1 <= out_h <= 256 and 1 <= out_w <= 256):
         raise ValueError(
             f"thumbnail grid must be within 256x256, got {out_w}x{out_h}"
         )
-    quarantine = _check_errors_mode(errors)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fmts, ws, hs, thumbs = [], [], [], [], []
-            errs, kinds = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = bytes(payload) if payload is not None else b""
-                    if max_pixels is not None:
-                        _, pw, ph = _probe_image(raw)
-                        if pw * ph > max_pixels:
-                            raise NotImplementedError(
-                                f"image {pw}x{ph} exceeds the "
-                                f"{max_pixels}-pixel thumbnail budget; "
-                                "raise max_pixels (or pass None)"
-                            )
-                    fmt, rgb = _decode_rgb(raw)
-                    grid = np.stack(
-                        [_area_average(rgb[..., c].astype(np.float64),
-                                       out_h, out_w)
-                         for c in range(3)], axis=-1)
-                    thumb = np.floor(grid + 0.5).clip(0, 255) \
-                        .astype(np.uint8).tobytes()
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    ids.append(doc_id)
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    thumbs.append(None)
-                    errs.append(_error_text(e))
-                    kinds.append(_error_kind(e))
-                    continue
-                ids.append(doc_id)
-                fmts.append(fmt)
-                hs.append(rgb.shape[0])
-                ws.append(rgb.shape[1])
-                thumbs.append(bytearray(thumb))
-                errs.append(None)
-                kinds.append(None)
-            out = {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "format": pd.Series(fmts, dtype="object"),
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "thumb_w": pd.Series([out_w] * len(ids), dtype="int32"),
-                "thumb_h": pd.Series([out_h] * len(ids), dtype="int32"),
-                "thumb": pd.Series(thumbs, dtype="object"),
-            }
-            if quarantine:
-                out["error"] = pd.Series(errs, dtype="object")
-                out["error_kind"] = pd.Series(kinds, dtype="object")
-            yield pd.DataFrame(out)
+    def one(raw):
+        if max_pixels is not None:
+            _, pw, ph = _probe_image(raw)
+            if pw * ph > max_pixels:
+                raise NotImplementedError(
+                    f"image {pw}x{ph} exceeds the {max_pixels}-pixel "
+                    "thumbnail budget; raise max_pixels (or pass None)"
+                )
+        fmt, rgb = _decode_rgb(raw)
+        grid = np.stack(
+            [_area_average(rgb[..., c].astype(np.float64), out_h, out_w)
+             for c in range(3)], axis=-1)
+        return {"format": fmt, "width": rgb.shape[1],
+                "height": rgb.shape[0], "thumb_w": out_w, "thumb_h": out_h,
+                "thumb": np.floor(grid + 0.5).clip(0, 255)
+                .astype(np.uint8).tobytes()}
 
-    schema = THUMB_QUARANTINE_SCHEMA if quarantine else THUMB_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, one, THUMB_SCHEMA)
 
 
 def hash_bands(df: DataFrame, hash_col: str, n_bands: int) -> DataFrame:

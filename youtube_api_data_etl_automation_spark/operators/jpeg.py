@@ -26,9 +26,11 @@ honestly end-to-end — no codec library, no approximation of the spec:
   shift, clip/round to uint8, nearest-neighbor (pixel-replication)
   chroma upsampling, BT.601 YCbCr→RGB.
 
-Honest refusals (NotImplementedError → ``error_kind='unsupported'``
-under the quarantine path): arithmetic coding, lossless/differential/
-hierarchical SOFs, non-8-bit precision, plus scans whose entropy-coded byte count
+Honest refusals (NotImplementedError → a quarantine row with
+``error_kind='unsupported'``): arithmetic coding, lossless/differential/
+hierarchical SOFs, non-8-bit precision, frames that declare more than
+``multimodal.DECODE_PIXEL_BUDGET`` pixels (checked at the SOF, before
+any buffer is sized from the header), plus scans whose entropy-coded byte count
 exceeds ``JPEG_ENTROPY_BYTE_BUDGET`` — the bit-serial Huffman loop is
 the same inherently-sequential Python hot spot as the PNG Average/Paeth
 recurrence (see multimodal.PNG_SLOW_FILTER_BYTE_BUDGET), so the budget
@@ -49,6 +51,8 @@ without one.
 from __future__ import annotations
 
 import struct
+
+from .multimodal import DECODE_PIXEL_BUDGET
 
 # Per-image budget of entropy-coded scan bytes (post-destuffing input to
 # the bit-serial Huffman loop). 1 MB of scan data is roughly a couple of
@@ -255,6 +259,11 @@ def _parse_segments(payload: bytes, all_scans: bool = False):
             h, w = struct.unpack_from(">HH", body, 1)
             if h == 0 or w == 0:
                 raise ValueError(f"malformed JPEG: zero dimension ({w}x{h})")
+            if w * h > DECODE_PIXEL_BUDGET:
+                raise NotImplementedError(
+                    f"JPEG {w}x{h} exceeds the {DECODE_PIXEL_BUDGET}-pixel "
+                    "budget; route to a codec-library executor image"
+                )
             ncomp = body[5]
             if len(body) < 6 + 3 * ncomp:
                 raise ValueError("malformed JPEG: truncated SOF components")

@@ -62,7 +62,7 @@ from .archives import ARCHIVE_BYTE_BUDGET
 
 LATEX_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_dropped int, n_chars int, "
-    "text string"
+    "text string, error string, error_kind string"
 )
 
 # environments whose body is never visible text; math ones and drawing/
@@ -550,29 +550,18 @@ def _extract_latex(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_dropped, text
 
 
-def latex_text(blobs: DataFrame, errors: str = "quarantine",
+def latex_text(blobs: DataFrame,
                byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                ) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, n_dropped, n_chars,
     text[, error, error_kind])`` — LaTeX source to visible text (see
     module docstring for the subset contract). ``n_dropped`` counts
     the math/graphics segments removed."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         n_dropped, text = _extract_latex(raw, byte_budget)
         return {"format": "latex", "n_dropped": n_dropped,
                 "n_chars": len(text), "text": text}
 
-    schema = LATEX_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else LATEX_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_dropped", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, LATEX_TEXT_SCHEMA)

@@ -24,7 +24,6 @@ archives are the same ingestion stage for list/archive corpora
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .archives import ARCHIVE_BYTE_BUDGET
@@ -32,16 +31,13 @@ from .archives import ARCHIVE_BYTE_BUDGET
 EML_TEXT_SCHEMA = (
     "doc_id bigint, format string, subject string, sender string, "
     "recipient string, msg_date string, n_parts int, n_attachments "
-    "int, n_chars int, text string"
+    "int, n_chars int, text string, error string, error_kind string"
 )
 
 MBOX_SPLIT_SCHEMA = (
-    "doc_id bigint, msg_idx int, payload binary"
+    "doc_id bigint, msg_idx int, payload binary, "
+    "error string, error_kind string"
 )
-
-_EML_COLS = ("format", "subject", "sender", "recipient", "msg_date",
-             "n_parts", "n_attachments", "n_chars", "text")
-
 
 def _decode_part(part) -> str:
     payload = part.get_payload(decode=True)
@@ -139,7 +135,7 @@ def _extract_eml(raw: bytes, budget: int | None) -> dict:
     }
 
 
-def eml_text(blobs: DataFrame, errors: str = "quarantine",
+def eml_text(blobs: DataFrame,
              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
              ) -> DataFrame:
     """RFC 5322 / MIME message payloads → one row per message with
@@ -147,19 +143,12 @@ def eml_text(blobs: DataFrame, errors: str = "quarantine",
     text (module docstring has the part-selection rules). Quarantine
     contract: a payload with no parseable headers is 'corrupt'; a
     text bomb past ``byte_budget`` refuses as 'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
+    def one(raw):
+        return _extract_eml(raw, byte_budget)
 
-    def one(payload):
-        return _extract_eml(bytes(payload) if payload else b"",
-                            byte_budget)
-
-    schema = EML_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else EML_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(one, _EML_COLS, quarantine), schema)
+    return _quarantine_map(blobs, one, EML_TEXT_SCHEMA)
 
 
 def split_mbox(payload: bytes) -> list[bytes]:
@@ -191,42 +180,15 @@ def split_mbox(payload: bytes) -> list[bytes]:
     return msgs
 
 
-def mbox_split(blobs: DataFrame, errors: str = "quarantine",
-               ) -> DataFrame:
+def mbox_split(blobs: DataFrame) -> DataFrame:
     """mbox payload table → one row per contained message, each a
     standalone .eml payload (feed :func:`eml_text`): the warc_records
     shape for mail archives. One bad mailbox quarantines alone
     (``msg_idx`` NULL)."""
-    from .multimodal import DECODE_ERRORS, _check_errors_mode
-    from .multimodal import _error_kind, _error_text
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-    schema = MBOX_SPLIT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else MBOX_SPLIT_SCHEMA
+    def messages(raw):
+        return [{"msg_idx": i, "payload": m}
+                for i, m in enumerate(split_mbox(raw))]
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    msgs = split_mbox(
-                        bytes(payload) if payload is not None else b"")
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    out.append({"doc_id": doc_id, "msg_idx": None,
-                                "payload": None,
-                                "error": _error_text(e),
-                                "error_kind": _error_kind(e)})
-                    continue
-                for i, m in enumerate(msgs):
-                    row = {"doc_id": doc_id, "msg_idx": i,
-                           "payload": m}
-                    if quarantine:
-                        row.update(error=None, error_kind=None)
-                    out.append(row)
-            yield pd.DataFrame(
-                out, columns=[c.split()[0] for c in
-                              schema.split(", ")])
-
-    return blobs.mapInPandas(gen, schema)
+    return _quarantine_map(blobs, messages, MBOX_SPLIT_SCHEMA)

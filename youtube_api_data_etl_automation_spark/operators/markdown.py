@@ -58,7 +58,7 @@ from .archives import ARCHIVE_BYTE_BUDGET, _html_unescape
 
 MARKDOWN_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_headings int, n_code_blocks int, "
-    "n_links int, n_chars int, text string"
+    "n_links int, n_chars int, text string, error string, error_kind string"
 )
 
 _FENCE = re.compile(r"^( {0,3})(`{3,}|~{3,})\s*(\S*)")
@@ -226,28 +226,16 @@ def _extract_markdown(raw: bytes, budget: int | None) -> dict:
             "text": text}
 
 
-def markdown_text(blobs: DataFrame, errors: str = "quarantine",
+def markdown_text(blobs: DataFrame,
                   byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                   ) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, n_headings,
     n_code_blocks, n_links, n_chars, text[, error, error_kind])`` —
     Markdown flattened to plain prose with code blocks preserved
     (module docstring has the subset contract)."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         return _extract_markdown(raw, byte_budget)
 
-    schema = MARKDOWN_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else MARKDOWN_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_headings", "n_code_blocks", "n_links",
-                  "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, MARKDOWN_TEXT_SCHEMA)

@@ -34,18 +34,18 @@ That is pure struct parsing, which this module does for real:
   WebP EXIF) and embedded text tags (ID3v2.3/2.4, FLAC VORBIS_COMMENT,
   WAV LIST/INFO).
 
-All run as Arrow-batched ``mapInPandas`` with the same
-``errors='quarantine'`` contract as the decoders: one bad payload in
-10^12 is a row, not a task failure. Parsing cost is O(header bytes) per
-payload — there is no budget knob because there is no per-pixel loop.
+All run through the decoders' one harness
+(:func:`.multimodal._quarantine_map`, Arrow-batched ``mapInPandas``):
+one bad payload in 10^12 is a quarantine row with ``error`` /
+``error_kind`` set, not a task failure. Parsing cost is O(header bytes)
+per payload — there is no budget knob because there is no per-pixel
+loop.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,16 +53,13 @@ from pyspark.sql import functions as F
 VIDEO_META_SCHEMA = (
     "doc_id bigint, brand string, duration_sec double, n_tracks int, "
     "n_video_tracks int, n_audio_tracks int, n_frames bigint, "
-    "width int, height int, codecs string"
+    "width int, height int, codecs string, error string, error_kind string"
 )
-VIDEO_META_QUARANTINE_SCHEMA = VIDEO_META_SCHEMA + \
-    ", error string, error_kind string"
 
 IMAGE_META_SCHEMA = (
-    "doc_id bigint, format string, width int, height int"
+    "doc_id bigint, format string, width int, height int, "
+    "error string, error_kind string"
 )
-IMAGE_META_QUARANTINE_SCHEMA = IMAGE_META_SCHEMA + \
-    ", error string, error_kind string"
 
 
 def _boxes(payload: bytes, start: int, end: int):
@@ -276,10 +273,8 @@ def _probe_image(payload: bytes) -> tuple[str, int, int]:
 
 AUDIO_META_SCHEMA = (
     "doc_id bigint, format string, sample_rate int, n_channels int, "
-    "duration_sec double, detail string"
+    "duration_sec double, detail string, error string, error_kind string"
 )
-AUDIO_META_QUARANTINE_SCHEMA = AUDIO_META_SCHEMA + \
-    ", error string, error_kind string"
 
 # MPEG audio frame-header tables (ISO/IEC 11172-3 / 13818-3). Bitrate
 # kbps by (version-group, layer, index 1..14); index 0 is 'free format'
@@ -805,51 +800,12 @@ def _parse_mkv(payload: bytes) -> dict:
     return out
 
 
-def _quarantine_batches(rows_fn, columns, quarantine):
-    """Shared mapInPandas body: rows_fn(payload) -> dict of columns, or
-    raises; failures become quarantine rows when enabled."""
-    from .multimodal import DECODE_ERRORS, _error_kind, _error_text
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols: dict[str, list] = {c: [] for c in ("doc_id", *columns)}
-            if quarantine:
-                cols["error"] = []
-                cols["error_kind"] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                cols["doc_id"].append(doc_id)
-                try:
-                    vals = rows_fn(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    for c in columns:
-                        cols[c].append(None)
-                    cols["error"].append(_error_text(e))
-                    cols["error_kind"].append(_error_kind(e))
-                    continue
-                for c in columns:
-                    cols[c].append(vals[c])
-                if quarantine:
-                    cols["error"].append(None)
-                    cols["error_kind"].append(None)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in cols.items()}
-            )
-
-    return batches
-
-
-def video_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def video_meta(blobs: DataFrame) -> DataFrame:
     """Container metadata per video payload (see module docstring):
     ``(doc_id, brand, duration_sec, n_tracks, n_video_tracks,
     n_audio_tracks, width, height, codecs)``. Dispatches on magic:
     ISO-BMFF (ftyp) → box walk, EBML (Matroska/WebM) → element walk."""
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
         if not payload:
@@ -864,37 +820,22 @@ def video_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
             return _parse_apng_meta(payload)
         return _parse_mp4(payload)
 
-    schema = VIDEO_META_QUARANTINE_SCHEMA if quarantine else VIDEO_META_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one,
-            ("brand", "duration_sec", "n_tracks", "n_video_tracks",
-             "n_audio_tracks", "n_frames", "width", "height", "codecs"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, one, VIDEO_META_SCHEMA)
 
 
-def image_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def image_meta(blobs: DataFrame) -> DataFrame:
     """Header-only ``(doc_id, format, width, height)`` per image payload
     — incl. WebP, whose pixels the decode family cannot produce."""
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
         fmt, w, h = _probe_image(payload)
         return {"format": fmt, "width": w, "height": h}
 
-    schema = IMAGE_META_QUARANTINE_SCHEMA if quarantine else IMAGE_META_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(one, ("format", "width", "height"), quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, IMAGE_META_SCHEMA)
 
 
-def audio_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def audio_meta(blobs: DataFrame) -> DataFrame:
     """Header-only audio probe: ``(doc_id, format, sample_rate,
     n_channels, duration_sec, detail)`` for MP3 (ID3v2 skip + frame
     header + Xing/Info frame count, CBR estimate otherwise), FLAC
@@ -903,20 +844,9 @@ def audio_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
     not the decoder, is the operation that runs over every payload:
     O(header bytes), no budget knob because there is no per-sample
     loop."""
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    schema = AUDIO_META_QUARANTINE_SCHEMA if quarantine else AUDIO_META_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            _parse_audio_meta,
-            ("format", "sample_rate", "n_channels", "duration_sec",
-             "detail"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, _parse_audio_meta, AUDIO_META_SCHEMA)
 
 
 TRIAGE_DECODE_SCHEMA = (
@@ -938,7 +868,6 @@ def triage_decode_images(
     *,
     max_pixels: int = 4_000_000,
     decodable: frozenset[str] = DECODABLE_IMAGE_FORMATS,
-    errors: str = "quarantine",
 ) -> DataFrame:
     """Probe-then-decode router — the shape the decode path takes at
     100 TB: the O(header-bytes) :func:`_probe_image` runs FIRST, and only
@@ -962,73 +891,40 @@ def triage_decode_images(
     location; here a 100-megapixel bomb costs its header bytes only."""
     from .multimodal import (
         DECODE_ERRORS,
-        _check_errors_mode,
         _decode_rgb,
-        _error_kind,
-        _error_text,
+        _error_fields,
+        _quarantine_map,
     )
 
-    quarantine = _check_errors_mode(errors)
+    def one(raw):
+        try:
+            fmt, w, h = _probe_image(raw)
+        except DECODE_ERRORS as e:
+            return {"route": "probe_failed", **_error_fields(e)}
+        probed = {"format": fmt, "width": w, "height": h}
+        if fmt not in decodable or (
+            fmt == "webp" and raw[12:16] != b"VP8L"
+        ):
+            return {"route": "undecodable", **probed, **_error_fields(
+                NotImplementedError(
+                    f"probed {fmt} {w}x{h}: no stdlib codec — route to a "
+                    "codec-library executor image"))}
+        if w * h > max_pixels:
+            return {"route": "oversized", **probed, **_error_fields(
+                NotImplementedError(
+                    f"probed {fmt} {w}x{h} = {w * h} px over the "
+                    f"{max_pixels} px triage budget"))}
+        try:
+            dfmt, rgb = _decode_rgb(raw)
+        except DECODE_ERRORS as e:
+            return {"route": "decode_failed", **probed, **_error_fields(e)}
+        means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
+        return {"route": "decoded", "format": dfmt,
+                "width": rgb.shape[1], "height": rgb.shape[0],
+                "mean_r": float(means[0]), "mean_g": float(means[1]),
+                "mean_b": float(means[2])}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "route", "format", "width", "height",
-                    "mean_r", "mean_g", "mean_b", "error", "error_kind",
-                )
-            }
-
-            def emit(doc_id, route, fmt=None, w=None, h=None,
-                     means=(None, None, None), err=None, kind=None):
-                for k, v in zip(out, (doc_id, route, fmt, w, h,
-                                      *means, err, kind)):
-                    out[k].append(v)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    fmt, w, h = _probe_image(raw)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, "probe_failed", err=_error_text(e),
-                         kind=_error_kind(e))
-                    continue
-                if fmt not in decodable or (
-                    fmt == "webp" and raw[12:16] != b"VP8L"
-                ):
-                    e_msg = (f"probed {fmt} {w}x{h}: no stdlib codec — "
-                             "route to a codec-library executor image")
-                    if not quarantine:
-                        raise NotImplementedError(e_msg)
-                    emit(doc_id, "undecodable", fmt, w, h,
-                         err=e_msg, kind="unsupported")
-                    continue
-                if w * h > max_pixels:
-                    e_msg = (f"probed {fmt} {w}x{h} = {w * h} px over the "
-                             f"{max_pixels} px triage budget")
-                    if not quarantine:
-                        raise NotImplementedError(e_msg)
-                    emit(doc_id, "oversized", fmt, w, h,
-                         err=e_msg, kind="unsupported")
-                    continue
-                try:
-                    dfmt, rgb = _decode_rgb(raw)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, "decode_failed", fmt, w, h,
-                         err=_error_text(e), kind=_error_kind(e))
-                    continue
-                means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
-                emit(doc_id, "decoded", dfmt, rgb.shape[1], rgb.shape[0],
-                     tuple(float(m) for m in means))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
-
-    return blobs.mapInPandas(batches, TRIAGE_DECODE_SCHEMA)
+    return _quarantine_map(blobs, one, TRIAGE_DECODE_SCHEMA)
 
 
 TRIAGE_AUDIO_SCHEMA = (
@@ -1042,7 +938,6 @@ def triage_decode_audio(
     blobs: DataFrame,
     *,
     max_samples: int = 50_000_000,
-    errors: str = "quarantine",
 ) -> DataFrame:
     """Probe-first audio router — :func:`triage_decode_images`' twin.
     :func:`audio_meta`'s O(header) probe runs FIRST; only payloads whose
@@ -1062,108 +957,72 @@ def triage_decode_audio(
 
     from .multimodal import (
         DECODE_ERRORS,
-        _check_errors_mode,
         _decode_pcm,
-        _error_kind,
-        _error_text,
+        _error_fields,
+        _quarantine_map,
     )
     from .mpegaudio import decode_layer1, decode_layer2
 
-    quarantine = _check_errors_mode(errors)
+    def one(raw):
+        try:
+            probe = _parse_audio_meta(raw)
+        except DECODE_ERRORS as e:
+            return {"route": "probe_failed", **_error_fields(e)}
+        fmt = probe["format"]
+        rate = probe["sample_rate"]
+        nch = probe["n_channels"]
+        dur = probe["duration_sec"]
+        probed = {"format": fmt, "sample_rate": rate, "n_channels": nch,
+                  "probe_duration_sec": dur}
+        subband_layer = 0
+        if fmt == "mp3":
+            if probe["detail"].startswith("mpeg1-layer1"):
+                subband_layer = 1
+            elif probe["detail"].startswith("mpeg1-layer2"):
+                subband_layer = 2
+        if fmt not in ("wav", "flac") and not subband_layer:
+            return {"route": "undecodable", **probed, **_error_fields(
+                NotImplementedError(
+                    f"probed {fmt} ({probe['detail']}): no stdlib codec "
+                    "— route to a codec-library executor image"))}
+        probed_samples = dur * rate * nch
+        if probed_samples > max_samples:
+            return {"route": "oversized", **probed, **_error_fields(
+                NotImplementedError(
+                    f"probed {fmt} {dur:.1f}s x {rate}Hz x {nch}ch = "
+                    f"{probed_samples:.0f} samples over the {max_samples} "
+                    "triage budget"))}
+        try:
+            if subband_layer:
+                drate, sb = (decode_layer1 if subband_layer == 1
+                             else decode_layer2)(raw)
+                rows_per_frame = 12 if subband_layer == 1 else 36
+                return {"route": "subband",
+                        "format": f"mp3-layer{subband_layer}",
+                        "sample_rate": drate, "n_channels": sb.shape[1],
+                        "probe_duration_sec": dur,
+                        "n_frames": sb.shape[0] // rows_per_frame,
+                        "rms": float(np.sqrt(np.square(sb).mean()))
+                        if sb.size else 0.0}
+            drate, samples = _decode_pcm(raw)
+        except DECODE_ERRORS as e:
+            return {"route": "decode_failed", **probed, **_error_fields(e)}
+        flat = samples.astype(np.float64).reshape(-1)
+        return {"route": "decoded", "format": fmt, "sample_rate": drate,
+                "n_channels": samples.shape[1] if samples.ndim == 2 else 1,
+                "probe_duration_sec": dur, "n_frames": samples.shape[0],
+                "rms": float(np.sqrt(np.square(flat).mean()))
+                if flat.size else 0.0}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "route", "format", "sample_rate",
-                    "n_channels", "probe_duration_sec", "n_frames",
-                    "rms", "error", "error_kind",
-                )
-            }
-
-            def emit(doc_id, route, fmt=None, rate=None, nch=None,
-                     dur=None, n_frames=None, rms=None, err=None,
-                     kind=None):
-                for k, v in zip(out, (doc_id, route, fmt, rate, nch,
-                                      dur, n_frames, rms, err, kind)):
-                    out[k].append(v)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    probe = _parse_audio_meta(raw)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, "probe_failed", err=_error_text(e),
-                         kind=_error_kind(e))
-                    continue
-                fmt = probe["format"]
-                rate = probe["sample_rate"]
-                nch = probe["n_channels"]
-                dur = probe["duration_sec"]
-                subband_layer = 0
-                if fmt == "mp3":
-                    if probe["detail"].startswith("mpeg1-layer1"):
-                        subband_layer = 1
-                    elif probe["detail"].startswith("mpeg1-layer2"):
-                        subband_layer = 2
-                if fmt not in ("wav", "flac") and not subband_layer:
-                    e_msg = (f"probed {fmt} ({probe['detail']}): no "
-                             "stdlib codec — route to a codec-library "
-                             "executor image")
-                    if not quarantine:
-                        raise NotImplementedError(e_msg)
-                    emit(doc_id, "undecodable", fmt, rate, nch, dur,
-                         err=e_msg, kind="unsupported")
-                    continue
-                probed_samples = dur * rate * nch
-                if probed_samples > max_samples:
-                    e_msg = (f"probed {fmt} {dur:.1f}s x {rate}Hz x "
-                             f"{nch}ch = {probed_samples:.0f} samples "
-                             f"over the {max_samples} triage budget")
-                    if not quarantine:
-                        raise NotImplementedError(e_msg)
-                    emit(doc_id, "oversized", fmt, rate, nch, dur,
-                         err=e_msg, kind="unsupported")
-                    continue
-                try:
-                    if subband_layer:
-                        drate, sb = (decode_layer1 if subband_layer == 1
-                                     else decode_layer2)(raw)
-                        rms = float(np.sqrt(np.square(sb).mean()))                             if sb.size else 0.0
-                        rows_per_frame = 12 if subband_layer == 1 else 36
-                        emit(doc_id, "subband",
-                             f"mp3-layer{subband_layer}", drate,
-                             sb.shape[1], dur,
-                             sb.shape[0] // rows_per_frame, rms)
-                    else:
-                        drate, samples = _decode_pcm(raw)
-                        flat = samples.astype(np.float64).reshape(-1)
-                        rms = float(np.sqrt(np.square(flat).mean()))                             if flat.size else 0.0
-                        emit(doc_id, "decoded", fmt, drate,
-                             samples.shape[1] if samples.ndim == 2
-                             else 1,
-                             dur, samples.shape[0], rms)
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, "decode_failed", fmt, rate, nch, dur,
-                         err=_error_text(e), kind=_error_kind(e))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="object") for k, v in out.items()}
-            )
-
-    return blobs.mapInPandas(batches, TRIAGE_AUDIO_SCHEMA)
+    return _quarantine_map(blobs, one, TRIAGE_AUDIO_SCHEMA)
 
 
 VIDEO_KEYFRAME_SCHEMA = (
     "doc_id bigint, container string, codec string, frame_bytes int, "
     "format string, width int, height int, "
-    "mean_r double, mean_g double, mean_b double"
+    "mean_r double, mean_g double, mean_b double, "
+    "error string, error_kind string"
 )
-VIDEO_KEYFRAME_QUARANTINE_SCHEMA = VIDEO_KEYFRAME_SCHEMA + \
-    ", error string, error_kind string"
 
 
 def _jpeg_has_dht(blob: bytes) -> bool:
@@ -1286,8 +1145,7 @@ def extract_keyframe(payload: bytes) -> tuple[str, str, bytes]:
     raise ValueError("unknown container for keyframe extraction")
 
 
-def video_keyframe_features(blobs: DataFrame,
-                            errors: str = "raise") -> DataFrame:
+def video_keyframe_features(blobs: DataFrame) -> DataFrame:
     """First-keyframe pixel features per video payload: the
     ``extract_keyframe`` container walk feeds the in-repo image
     decoders (JPEG for AVI/MJPEG, LZW for GIF), yielding ``(doc_id,
@@ -1295,12 +1153,10 @@ def video_keyframe_features(blobs: DataFrame,
     — real video-frame feature extraction with no codec library.
     Same Arrow-batched mapInPandas + quarantine contract as the decode
     family; pixel budgets apply inside the image decoders."""
-    from .multimodal import _check_errors_mode, _decode_rgb
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _decode_rgb, _quarantine_map
 
     def one(payload):
-        container, codec, blob = extract_keyframe(payload or b"")
+        container, codec, blob = extract_keyframe(payload)
         fmt, rgb = _decode_rgb(blob)
         means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
         return {
@@ -1311,25 +1167,14 @@ def video_keyframe_features(blobs: DataFrame,
             "mean_b": float(means[2]),
         }
 
-    schema = VIDEO_KEYFRAME_QUARANTINE_SCHEMA if quarantine \
-        else VIDEO_KEYFRAME_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one,
-            ("container", "codec", "frame_bytes", "format", "width",
-             "height", "mean_r", "mean_g", "mean_b"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, one, VIDEO_KEYFRAME_SCHEMA)
 
 
 EXIF_SCHEMA = (
     "doc_id bigint, orientation int, exif_width int, exif_height int, "
     "datetime string, make string, model string, gps_lat double, "
-    "gps_lon double"
+    "gps_lon double, error string, error_kind string"
 )
-EXIF_QUARANTINE_SCHEMA = EXIF_SCHEMA + ", error string, error_kind string"
 
 # TIFF field types this reader needs (Exif 2.x / TIFF 6.0; 5=RATIONAL)
 _TIFF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1}
@@ -1523,7 +1368,7 @@ def _parse_exif(payload: bytes) -> dict:
     return out
 
 
-def image_exif(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def image_exif(blobs: DataFrame) -> DataFrame:
     """EXIF triage metadata per image payload: ``(doc_id, orientation,
     exif_width, exif_height, datetime, make, model)`` — the fields a
     corpus pipeline filters on (rotate-before-resize, camera/source
@@ -1531,32 +1376,20 @@ def image_exif(blobs: DataFrame, errors: str = "raise") -> DataFrame:
     Reads JPEG APP1, PNG ``eXIf``, and WebP ``EXIF`` containers;
     all-NULL row when the container carries no Exif; quarantine
     contract for broken TIFF structures; other formats 'unsupported'."""
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
         if not payload:
             raise ValueError("empty/NULL image payload")
         return _parse_exif(payload)
 
-    schema = EXIF_QUARANTINE_SCHEMA if quarantine else EXIF_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one,
-            ("orientation", "exif_width", "exif_height", "datetime",
-             "make", "model", "gps_lat", "gps_lon"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, one, EXIF_SCHEMA)
 
 
 EXIF_STRIP_SCHEMA = (
-    "doc_id bigint, format string, payload binary, removed_bytes int"
+    "doc_id bigint, format string, payload binary, removed_bytes int, "
+    "error string, error_kind string"
 )
-EXIF_STRIP_QUARANTINE_SCHEMA = EXIF_STRIP_SCHEMA + \
-    ", error string, error_kind string"
 
 
 def _strip_exif_bytes(payload: bytes) -> tuple[str, bytes]:
@@ -1649,7 +1482,7 @@ def _strip_exif_bytes(payload: bytes) -> tuple[str, bytes]:
     )
 
 
-def strip_exif(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def strip_exif(blobs: DataFrame) -> DataFrame:
     """Privacy scrub over image payloads: returns the payload with
     embedded EXIF/XMP metadata removed (pixel/entropy data untouched —
     the cleaned payload decodes to the SAME pixels) plus the byte count
@@ -1657,33 +1490,22 @@ def strip_exif(blobs: DataFrame, errors: str = "raise") -> DataFrame:
     dropped. Same Arrow-batched quarantine contract as the other
     payload ops; the PII twin of functions/pii.py on the multimodal
     side."""
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
         if not payload:
             raise ValueError("empty/NULL image payload")
-        raw = bytes(payload)
-        fmt, cleaned = _strip_exif_bytes(raw)
-        return {"format": fmt, "payload": bytearray(cleaned),
-                "removed_bytes": len(raw) - len(cleaned)}
+        fmt, cleaned = _strip_exif_bytes(payload)
+        return {"format": fmt, "payload": cleaned,
+                "removed_bytes": len(payload) - len(cleaned)}
 
-    schema = EXIF_STRIP_QUARANTINE_SCHEMA if quarantine \
-        else EXIF_STRIP_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "payload", "removed_bytes"), quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, EXIF_STRIP_SCHEMA)
 
 
 AUDIO_TAGS_SCHEMA = (
     "doc_id bigint, container string, title string, artist string, "
-    "album string"
+    "album string, error string, error_kind string"
 )
-AUDIO_TAGS_QUARANTINE_SCHEMA = AUDIO_TAGS_SCHEMA + \
-    ", error string, error_kind string"
 
 _ID3_TEXT_ENCODINGS = {0: "latin-1", 1: "utf-16", 2: "utf-16-be",
                        3: "utf-8"}
@@ -1855,26 +1677,15 @@ def _parse_audio_tags(payload: bytes) -> dict:
     )
 
 
-def audio_tags(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def audio_tags(blobs: DataFrame) -> DataFrame:
     """Embedded text tags per audio payload: ``(doc_id, container,
     title, artist, album)`` from ID3v2.3/2.4 (MP3), FLAC VORBIS_COMMENT,
     or a WAV LIST/INFO chunk — the provenance fields a corpus pipeline
     stratifies and dedups on. Untagged payloads yield all-NULL tag
     columns (not errors); O(header bytes), never touches audio data."""
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    schema = AUDIO_TAGS_QUARANTINE_SCHEMA if quarantine \
-        else AUDIO_TAGS_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            _parse_audio_tags,
-            ("container", "title", "artist", "album"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, _parse_audio_tags, AUDIO_TAGS_SCHEMA)
 
 
 def sniff_format(blobs: DataFrame,

@@ -28,8 +28,8 @@ operators/mpegaudio.py; ``audio_subband_features`` below) — no PCM
 synthesis without the unrecallable Table 3-B.3 window. Every
 remaining compressed format (arithmetic JPEG, lossy-VP8 WebP, Layer
 II/III, AAC) raises an explicit NotImplementedError from inside the
-same mapInPandas shape — or becomes a quarantine ROW under
-``errors='quarantine'``.
+same mapInPandas shape, where it becomes a quarantine ROW (see
+:func:`_quarantine_map`, the one harness every payload operator runs).
 """
 
 from __future__ import annotations
@@ -94,7 +94,8 @@ def frame_features(blobs: DataFrame, frame_bytes: int = 16) -> DataFrame:
 
 DECODE_SCHEMA = (
     "doc_id bigint, format string, width int, height int, "
-    "mean_r double, mean_g double, mean_b double"
+    "mean_r double, mean_g double, mean_b double, "
+    "error string, error_kind string"
 )
 
 
@@ -103,21 +104,21 @@ DECODE_SCHEMA = (
 # plain-Python loop at ~0.3 µs/byte). 2 MB ≈ 0.7 s worst-case Python per
 # image inside the Arrow batch — bounded enough for bulk thumbnail/tile
 # corpora, and any hi-res Paeth-heavy image beyond it raises
-# NotImplementedError (error_kind='unsupported' under errors='quarantine',
-# so the refusal is recoverable row-level data, never a hung executor).
+# NotImplementedError (a quarantine row with error_kind='unsupported', so
+# the refusal is recoverable row-level data, never a hung executor).
 # Pass slow_filter_budget=None to decode_image for unlimited (correctness
 # over latency), or a smaller budget for stricter per-image latency SLOs.
 # At 100 TB, route hi-res imagery through a codec library on the executors
 # and keep this stdlib path for environments without one.
 PNG_SLOW_FILTER_BYTE_BUDGET = 2_000_000
 
-# BMP's RLE8 output buffer is allocated from HEADER-declared dims
-# before the (small) escape stream proves them — without a cap, a
-# forged 2-gigapixel header is a memory bomb, not a decode (caught by
-# the r11 fuzz pass: 35 GB RSS from mutated headers). Uncompressed
-# paths are naturally bounded by the payload's own byte count, but get
-# the same cap for a uniform refusal.
-BMP_PIXEL_BUDGET = 1 << 24
+# Pixel budget shared by the decoders that size a buffer from header
+# dimensions (BMP, TIFF, JPEG): the check runs right after the header
+# parse, before any allocation, so a forged header that declares a
+# 2-gigapixel frame is an 'unsupported' refusal, not a memory bomb
+# (caught by the r11 fuzz pass: 35 GB RSS from mutated BMP headers).
+# 16 Mpx also keeps the worst numpy/PackBits path near ~1 s.
+DECODE_PIXEL_BUDGET = 1 << 24
 
 
 def _png_unfilter(raw: bytes, pos: int, h: int, stride: int, bpp: int,
@@ -487,9 +488,9 @@ def _decode_rgb(payload: bytes,
         top_down, hh = h < 0, abs(h)
         if w <= 0 or hh == 0:
             raise ValueError(f"malformed BMP: dimensions {w}x{h}")
-        if w * hh > BMP_PIXEL_BUDGET:
+        if w * hh > DECODE_PIXEL_BUDGET:
             raise NotImplementedError(
-                f"BMP {w}x{hh} exceeds the {BMP_PIXEL_BUDGET}-pixel "
+                f"BMP {w}x{hh} exceeds the {DECODE_PIXEL_BUDGET}-pixel "
                 "budget; route to a codec-library executor image"
             )
         if bpp == 24 and comp == 0:
@@ -612,8 +613,6 @@ def _decode_rgb(payload: bytes,
     )
 
 
-DECODE_QUARANTINE_SCHEMA = DECODE_SCHEMA + ", error string, error_kind string"
-
 # Exception classes a malformed blob may surface as. ValueError is the
 # decoders' declared signal; struct.error / KeyError / IndexError escape
 # from short reads or dangling table references in hand-rolled spec
@@ -653,151 +652,96 @@ def _error_text(e: Exception) -> str:
     return f"{type(e).__name__}: {e}"
 
 
-def _extract_rows_op(blobs, extract_fn, cols, schema,
-                     quarantine_schema, errors):
-    """Shared mapInPandas harness for one-payload -> many-row
-    extractors with the TWO-LEVEL quarantine contract (pdf_images,
-    tiff_page_images): a malformed CONTAINER yields one row with NULL
-    positional columns; a refused ITEM yields its own error row while
-    siblings extract. ``extract_fn(payload_bytes) -> list[dict]`` with
-    each dict carrying cols[1:] keys incl. error/error_kind. Factored
-    in r13 after the second copy of this machinery started drifting
-    (error-text divergence)."""
-    import pandas as pd
+def _error_fields(e: Exception) -> dict:
+    """The ``error`` / ``error_kind`` columns of one refused payload or
+    item."""
+    return {"error": _error_text(e), "error_kind": _error_kind(e)}
 
-    quarantine = _check_errors_mode(errors)
 
-    def batches(it):
+def _row_or_error(fn, *args) -> dict | list[dict]:
+    """``fn(*args)``, or the error fields of the DECODE_ERRORS it raised.
+    The payload level of :func:`_quarantine_map`, and the item level of
+    the two-level extractors (one refused PDF image or TIFF page is its
+    own row while its siblings extract)."""
+    try:
+        return fn(*args)
+    except DECODE_ERRORS as e:
+        return _error_fields(e)
+
+
+def _quarantine_map(blobs: DataFrame, fn, schema: str,
+                    carry: tuple[str, ...] = ()) -> DataFrame:
+    """The one harness every payload operator runs: ``fn(payload) ->
+    dict | list[dict]`` over the ``(doc_id, payload)`` rows of ``blobs``
+    in one Arrow-batched mapInPandas pass (no shuffle, nothing collected).
+
+    - a dict is one output row; a list is 0..N rows (archive members,
+      WARC records, PDF images, TIFF pages);
+    - a raised DECODE_ERRORS becomes ONE row with NULL feature columns and
+      the ``error`` / ``error_kind`` columns set (:func:`_error_text`,
+      :func:`_error_kind`) — one bad blob in 100 TB is a row, never a
+      task failure;
+    - ``schema`` is the operator's flat DDL schema (``doc_id`` first, the
+      two error columns last); a column a row dict leaves out is NULL, and
+      ``doc_id`` plus the ``carry`` input columns are copied onto every
+      row of their payload. A NULL payload reaches ``fn`` as ``b""``."""
+    cols = [f.split()[0] for f in schema.split(", ")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in it:
-            out = {c: [] for c in cols}
-
-            def emit(doc_id, row):
-                out["doc_id"].append(doc_id)
-                for c in cols[1:]:
-                    out[c].append(row.get(c))
-
-            for doc_id, payload in zip(batch["doc_id"],
-                                       batch["payload"]):
-                try:
-                    rows = extract_fn(
-                        bytes(payload) if payload is not None else b"")
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    emit(doc_id, {"error": _error_text(e),
-                                  "error_kind": _error_kind(e)})
-                    continue
-                for row in rows:
-                    if row["error"] is not None and not quarantine:
-                        # preserve the exception CLASS so callers can
-                        # route 'unsupported' (codec-library work)
-                        # apart from 'corrupt' (r12 review fix)
-                        exc = NotImplementedError \
-                            if row["error_kind"] == "unsupported" \
-                            else ValueError
-                        raise exc(row["error"])
-                    if row.get("payload") is not None:
-                        row = dict(row,
-                                   payload=bytearray(row["payload"]))
-                    emit(doc_id, row)
+            out: dict[str, list] = {c: [] for c in cols}
+            for doc_id, payload, *kept in zip(
+                    batch["doc_id"], batch["payload"],
+                    *(batch[c] for c in carry)):
+                fixed = {"doc_id": doc_id, **dict(zip(carry, kept))}
+                rows = _row_or_error(
+                    fn, bytes(payload) if payload is not None else b"")
+                for row in rows if isinstance(rows, list) else (rows,):
+                    row = {**row, **fixed}
+                    for c in cols:
+                        out[c].append(row.get(c))
             yield pd.DataFrame(
-                {c: pd.Series(v, dtype="object")
-                 for c, v in out.items()
-                 if quarantine or c not in ("error", "error_kind")})
+                {c: pd.Series(v, dtype="object") for c, v in out.items()})
 
-    return blobs.mapInPandas(
-        batches, quarantine_schema if quarantine else schema)
-
-
-def _check_errors_mode(errors: str) -> bool:
-    if errors not in ("raise", "quarantine"):
-        raise ValueError(
-            f"errors must be 'raise' or 'quarantine', got {errors!r}"
-        )
-    return errors == "quarantine"
+    return blobs.mapInPandas(batches, schema)
 
 
 def decode_image(
     blobs: DataFrame,
-    errors: str = "raise",
     slow_filter_budget: int | None = PNG_SLOW_FILTER_BYTE_BUDGET,
 ) -> DataFrame:
-    """REAL image decode for codec-free formats (24-bit BMP, binary P6
-    PPM, and — r7 — non-interlaced 8-bit greyscale/RGB/RGBA PNG via
-    stdlib zlib + scanline unfilter) — struct parsing + numpy pixel math
+    """REAL image decode for the codec-free formats (see
+    :func:`_decode_rgb` for the matrix: BMP, PNM, every PNG variant,
+    baseline and progressive Huffman JPEG, first-frame GIF, lossless
+    WebP, baseline TIFF, JBIG2) — struct parsing + numpy pixel math
     inside the same Arrow-batched mapInPandas shape as every other
     payload op. Output row per image: format, dimensions, per-channel
-    means (exact doubles). Arithmetic-coded JPEG and WebP still raise
-    NotImplementedError from the decoder (honest stub: a codec library
-    is required and absent here); every PNG spec variant decodes (r9).
+    means (exact doubles).
 
-    ``errors='quarantine'`` (r7, the repo's corrupt-input posture at
-    batch scale — one bad blob in 100 TB must not kill the job): decode
-    failures become ROWS instead of task failures; the schema gains an
-    ``error`` column (NULL on success, the decode error's message on
-    failure, feature columns NULL) so callers split with
-    ``filter(col('error').isNull())``, each failure attributed by the
-    decoder's own message — plus an ``error_kind`` column ('unsupported'
-    vs 'corrupt', see :func:`_error_kind`) so the two failure populations
-    route differently (arithmetic-coded JPEG and WebP are 'unsupported', not
-    broken; baseline AND progressive JPEG — the dominant web-corpus cases —
-    and first-frame GIF really decode since r9)."""
-    quarantine = _check_errors_mode(errors)
+    Decode failures are ROWS, not task failures (the repo's
+    corrupt-input posture at batch scale — one bad blob in 100 TB must
+    not kill the job): ``error`` carries the decoder's own message
+    (NULL on success, feature columns NULL on failure), so callers split
+    with ``filter(col('error').isNull())``, and ``error_kind``
+    ('unsupported' vs 'corrupt', see :func:`_error_kind`) routes the two
+    failure populations differently: arithmetic-coded JPEG and lossy
+    WebP are 'unsupported' (a codec library would decode them), not
+    broken."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fmts, ws, hs = [], [], [], []
-            mr, mg, mb, errs, kinds = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, rgb = _decode_rgb(
-                        bytes(payload) if payload is not None else b"",
-                        slow_filter_budget=slow_filter_budget,
-                    )
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    ids.append(doc_id)
-                    fmts.append(None)
-                    hs.append(None)
-                    ws.append(None)
-                    mr.append(None)
-                    mg.append(None)
-                    mb.append(None)
-                    errs.append(_error_text(e))
-                    kinds.append(_error_kind(e))
-                    continue
-                ids.append(doc_id)
-                fmts.append(fmt)
-                hs.append(rgb.shape[0])
-                ws.append(rgb.shape[1])
-                means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
-                mr.append(float(means[0]))
-                mg.append(float(means[1]))
-                mb.append(float(means[2]))
-                errs.append(None)
-                kinds.append(None)
-            out = {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "format": pd.Series(fmts, dtype="object"),
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "mean_r": pd.array(mr, dtype="Float64"),
-                "mean_g": pd.array(mg, dtype="Float64"),
-                "mean_b": pd.array(mb, dtype="Float64"),
-            }
-            if quarantine:
-                out["error"] = pd.Series(errs, dtype="object")
-                out["error_kind"] = pd.Series(kinds, dtype="object")
-            yield pd.DataFrame(out)
+    def one(payload: bytes) -> dict:
+        fmt, rgb = _decode_rgb(payload, slow_filter_budget=slow_filter_budget)
+        means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
+        return {"format": fmt, "width": rgb.shape[1],
+                "height": rgb.shape[0], "mean_r": float(means[0]),
+                "mean_g": float(means[1]), "mean_b": float(means[2])}
 
-    schema = DECODE_QUARANTINE_SCHEMA if quarantine else DECODE_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, one, DECODE_SCHEMA)
 
 
 AUDIO_SCHEMA = (
     "doc_id bigint, format string, sample_rate int, n_channels int, "
-    "n_frames bigint, duration_sec double, peak bigint, rms double"
+    "n_frames bigint, duration_sec double, peak bigint, rms double, "
+    "error string, error_kind string"
 )
 
 
@@ -1198,12 +1142,8 @@ def _exact_sumsq(s) -> int:
     )
 
 
-AUDIO_QUARANTINE_SCHEMA = AUDIO_SCHEMA + ", error string, error_kind string"
-
-
 def decode_audio(
     blobs: DataFrame,
-    errors: str = "raise",
     adpcm_sample_budget: int | None = ADPCM_SAMPLE_BUDGET,
 ) -> DataFrame:
     """REAL audio decode for RIFF/WAVE — integer PCM 8/16/24/32, IEEE
@@ -1217,90 +1157,36 @@ def decode_audio(
     (_exact_sumsq — a plain int64 (s*s).sum() silently wraps for 24/32-bit
     audio past ~131k frames), float formats accumulate in float64.
     MP3-in-WAV / unknown codecs raise NotImplementedError (honest
-    stub: a codec library is required and absent here).
-
-    ``errors='quarantine'``: decode failures become rows with ``error``
-    and ``error_kind`` columns instead of task failures — see
+    stub: a codec library is required and absent here), which becomes a
+    quarantine row with ``error`` and ``error_kind`` — see
     :func:`decode_image`."""
     import math
 
-    quarantine = _check_errors_mode(errors)
+    def one(raw: bytes) -> dict:
+        rate, s = _decode_pcm(raw, adpcm_sample_budget=adpcm_sample_budget)
+        n = s.size
+        if s.dtype.kind == "f":
+            peak = int(round(float(abs(s).max()))) if n else 0
+            rms = math.sqrt(float((s * s).sum()) / n) if n else 0.0
+        else:
+            peak = int(abs(s).max()) if n else 0
+            rms = math.sqrt(_exact_sumsq(s) / n) if n else 0.0
+        return {"format": "flac" if raw[:4] == b"fLaC" else "wav",
+                "sample_rate": rate, "n_channels": s.shape[1],
+                "n_frames": s.shape[0], "duration_sec": s.shape[0] / rate,
+                "peak": peak, "rms": rms}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = {
-                k: []
-                for k in ("ids", "fmts", "rates", "chs", "frames", "durs",
-                          "peaks", "rmss", "errs", "kinds")
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    rate, s = _decode_pcm(
-                        raw,
-                        adpcm_sample_budget=adpcm_sample_budget,
-                    )
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    vals = (None, None, None, None, None, None, None,
-                            _error_text(e), _error_kind(e))
-                else:
-                    n = s.size
-                    if s.dtype.kind == "f":
-                        peak = int(round(float(abs(s).max()))) if n else 0
-                        rms = (
-                            math.sqrt(float((s * s).sum()) / n) if n else 0.0
-                        )
-                    else:
-                        peak = int(abs(s).max()) if n else 0
-                        rms = math.sqrt(_exact_sumsq(s) / n) if n else 0.0
-                    vals = (
-                        "flac" if raw[:4] == b"fLaC" else "wav",
-                        rate, s.shape[1], s.shape[0],
-                        s.shape[0] / rate,
-                        peak,
-                        rms,
-                        None,
-                        None,
-                    )
-                cols["ids"].append(doc_id)
-                for k, v in zip(
-                    ("fmts", "rates", "chs", "frames", "durs", "peaks",
-                     "rmss", "errs", "kinds"),
-                    vals,
-                ):
-                    cols[k].append(v)
-            out = {
-                "doc_id": pd.Series(cols["ids"], dtype="int64"),
-                "format": pd.Series(cols["fmts"], dtype="object"),
-                "sample_rate": pd.array(cols["rates"], dtype="Int32"),
-                "n_channels": pd.array(cols["chs"], dtype="Int32"),
-                "n_frames": pd.array(cols["frames"], dtype="Int64"),
-                "duration_sec": pd.array(cols["durs"], dtype="Float64"),
-                "peak": pd.array(cols["peaks"], dtype="Int64"),
-                "rms": pd.array(cols["rmss"], dtype="Float64"),
-            }
-            if quarantine:
-                out["error"] = pd.Series(cols["errs"], dtype="object")
-                out["error_kind"] = pd.Series(cols["kinds"], dtype="object")
-            yield pd.DataFrame(out)
-
-    schema = AUDIO_QUARANTINE_SCHEMA if quarantine else AUDIO_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, one, AUDIO_SCHEMA)
 
 
 AUDIO_SUBBAND_SCHEMA = (
     "doc_id bigint, format string, sample_rate int, n_channels int, "
     "n_mpeg_frames int, duration_sec double, sb_peak double, "
-    "sb_rms double, sb_centroid double"
+    "sb_rms double, sb_centroid double, error string, error_kind string"
 )
-AUDIO_SUBBAND_QUARANTINE_SCHEMA = AUDIO_SUBBAND_SCHEMA + \
-    ", error string, error_kind string"
 
 
-def audio_subband_features(blobs: DataFrame,
-                           errors: str = "raise") -> DataFrame:
+def audio_subband_features(blobs: DataFrame) -> DataFrame:
     """MPEG-1 Layer I/II essence features, computed EXACTLY in the
     subband domain (operators/mpegaudio.py — requantized per ISO
     11172-3 §2.4.3.1/.2): per payload the frame count, duration (384
@@ -1313,13 +1199,10 @@ def audio_subband_features(blobs: DataFrame,
     quarantine contract as :func:`decode_audio`."""
     import numpy as np
 
-    from .mediameta import _quarantine_batches
     from .mpegaudio import decode_subbands
 
-    quarantine = _check_errors_mode(errors)
-
     def one(payload):
-        layer, rate, sb = decode_subbands(payload or b"")
+        layer, rate, sb = decode_subbands(payload)
         rows_per_frame = 12 if layer == 1 else 36
         n_frames = sb.shape[0] // rows_per_frame
         flat = sb.reshape(-1)
@@ -1344,14 +1227,4 @@ def audio_subband_features(blobs: DataFrame,
             "sb_centroid": centroid,
         }
 
-    schema = AUDIO_SUBBAND_QUARANTINE_SCHEMA if quarantine \
-        else AUDIO_SUBBAND_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one,
-            ("format", "sample_rate", "n_channels", "n_mpeg_frames",
-             "duration_sec", "sb_peak", "sb_rms", "sb_centroid"),
-            quarantine,
-        ),
-        schema,
-    )
+    return _quarantine_map(blobs, one, AUDIO_SUBBAND_SCHEMA)

@@ -52,7 +52,8 @@ _ANSI = re.compile(r"\x1b\[[0-9;?]*[A-Za-z]|\x1b\][^\x07\x1b]*"
 
 IPYNB_TEXT_SCHEMA = (
     "doc_id bigint, format string, language string, n_cells int, "
-    "n_code_cells int, n_md_cells int, n_chars int, text string"
+    "n_code_cells int, n_md_cells int, n_chars int, text string, "
+    "error string, error_kind string"
 )
 
 
@@ -196,28 +197,16 @@ def _extract_ipynb(raw: bytes, budget: int | None,
             "n_md_cells": n_md, "n_chars": len(text), "text": text}
 
 
-def ipynb_text(blobs: DataFrame, errors: str = "quarantine",
+def ipynb_text(blobs: DataFrame,
                byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                include_outputs: bool = False) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, language, n_cells,
     n_code_cells, n_md_cells, n_chars, text[, error, error_kind])`` —
     .ipynb JSON flattened to markdown-plus-fenced-code text (see
     module docstring for the container contract)."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         return _extract_ipynb(raw, byte_budget, include_outputs)
 
-    schema = IPYNB_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else IPYNB_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "language", "n_cells", "n_code_cells",
-                  "n_md_cells", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, IPYNB_TEXT_SCHEMA)

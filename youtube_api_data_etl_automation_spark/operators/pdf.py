@@ -54,9 +54,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Callable, Iterator
-
-import pandas as pd
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -1143,22 +1141,16 @@ def probe_pdf(payload: bytes) -> dict:
 
 PDF_TEXT_SCHEMA = (
     "doc_id bigint, format string, version string, n_pages int, "
-    "n_chars int, text string"
-)
-PDF_TEXT_QUARANTINE_SCHEMA = (
-    PDF_TEXT_SCHEMA + ", error string, error_kind string"
+    "n_chars int, text string, error string, error_kind string"
 )
 PDF_META_SCHEMA = (
     "doc_id bigint, format string, version string, n_objects int, "
     "n_pages int, encrypted boolean, title string, author string, "
-    "producer string"
-)
-PDF_META_QUARANTINE_SCHEMA = (
-    PDF_META_SCHEMA + ", error string, error_kind string"
+    "producer string, error string, error_kind string"
 )
 
 
-def pdf_text(blobs: DataFrame, errors: str = "raise",
+def pdf_text(blobs: DataFrame,
              inflate_budget: int | None = PDF_INFLATE_BUDGET,
              text_budget: int | None = PDF_TEXT_BUDGET) -> DataFrame:
     """REAL PDF text extraction over ``(doc_id, payload)`` — one row per
@@ -1172,132 +1164,32 @@ def pdf_text(blobs: DataFrame, errors: str = "raise",
     If the input carries a ``source`` string column it passes through
     unchanged — provenance (a crawl URI) rides along without a
     join-back shuffle."""
-    from .multimodal import (
-        DECODE_ERRORS, _check_errors_mode, _error_kind, _error_text,
-    )
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-    with_source = "source" in blobs.columns
+    def one(payload):
+        ver, n_pages, text = extract_pdf_text(
+            payload, inflate_budget=inflate_budget, text_budget=text_budget)
+        return {"format": "pdf", "version": ver, "n_pages": n_pages,
+                "n_chars": len(text), "text": text}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in it:
-            ids, vers, npages, nchars, texts = [], [], [], [], []
-            errs, kinds = [], []
-            for doc_id, payload in zip(pdf_batch["doc_id"],
-                                       pdf_batch["payload"]):
-                try:
-                    ver, np_, text = extract_pdf_text(
-                        bytes(payload) if payload is not None else b"",
-                        inflate_budget=inflate_budget,
-                        text_budget=text_budget,
-                    )
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    ids.append(doc_id)
-                    vers.append(None)
-                    npages.append(None)
-                    nchars.append(None)
-                    texts.append(None)
-                    errs.append(_error_text(e))
-                    kinds.append(_error_kind(e))
-                    continue
-                ids.append(doc_id)
-                vers.append(ver)
-                npages.append(np_)
-                nchars.append(len(text))
-                texts.append(text)
-                errs.append(None)
-                kinds.append(None)
-            out = {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "format": pd.Series(
-                    ["pdf" if v is not None else None for v in vers],
-                    dtype="object"),
-                "version": pd.Series(vers, dtype="object"),
-                "n_pages": pd.array(npages, dtype="Int32"),
-                "n_chars": pd.array(nchars, dtype="Int32"),
-                "text": pd.Series(texts, dtype="object"),
-            }
-            if with_source:
-                out["source"] = pd.Series(list(pdf_batch["source"]),
-                                          dtype="object")
-            if quarantine:
-                out["error"] = pd.Series(errs, dtype="object")
-                out["error_kind"] = pd.Series(kinds, dtype="object")
-            yield pd.DataFrame(out)
-
-    schema = PDF_TEXT_QUARANTINE_SCHEMA if quarantine else PDF_TEXT_SCHEMA
-    if with_source:
-        schema = schema.replace(
-            "text string", "text string, source string")
-    return blobs.mapInPandas(batches, schema)
+    if "source" not in blobs.columns:
+        return _quarantine_map(blobs, one, PDF_TEXT_SCHEMA)
+    return _quarantine_map(
+        blobs, one,
+        PDF_TEXT_SCHEMA.replace("text string", "text string, source string"),
+        carry=("source",))
 
 
-def pdf_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
+def pdf_meta(blobs: DataFrame) -> DataFrame:
     """Structural probe over ``(doc_id, payload)``: version, object and
     page counts, encryption flag — no stream decompression, so a probe
     over a crawl partition costs O(bytes scanned), never O(inflated)."""
-    from .multimodal import (
-        DECODE_ERRORS, _check_errors_mode, _error_kind, _error_text,
-    )
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
+    def one(payload):
+        return {"format": "pdf", **probe_pdf(payload)}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in it:
-            ids, vers, nobjs, npages, encs = [], [], [], [], []
-            titles, authors, producers = [], [], []
-            errs, kinds = [], []
-            for doc_id, payload in zip(pdf_batch["doc_id"],
-                                       pdf_batch["payload"]):
-                try:
-                    meta = probe_pdf(
-                        bytes(payload) if payload is not None else b"")
-                except DECODE_ERRORS as e:
-                    if not quarantine:
-                        raise
-                    ids.append(doc_id)
-                    vers.append(None)
-                    nobjs.append(None)
-                    npages.append(None)
-                    encs.append(None)
-                    titles.append(None)
-                    authors.append(None)
-                    producers.append(None)
-                    errs.append(_error_text(e))
-                    kinds.append(_error_kind(e))
-                    continue
-                ids.append(doc_id)
-                vers.append(meta["version"])
-                nobjs.append(meta["n_objects"])
-                npages.append(meta["n_pages"])
-                encs.append(meta["encrypted"])
-                titles.append(meta["title"])
-                authors.append(meta["author"])
-                producers.append(meta["producer"])
-                errs.append(None)
-                kinds.append(None)
-            out = {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "format": pd.Series(
-                    ["pdf" if v is not None else None for v in vers],
-                    dtype="object"),
-                "version": pd.Series(vers, dtype="object"),
-                "n_objects": pd.array(nobjs, dtype="Int32"),
-                "n_pages": pd.array(npages, dtype="Int32"),
-                "encrypted": pd.array(encs, dtype="boolean"),
-                "title": pd.Series(titles, dtype="object"),
-                "author": pd.Series(authors, dtype="object"),
-                "producer": pd.Series(producers, dtype="object"),
-            }
-            if quarantine:
-                out["error"] = pd.Series(errs, dtype="object")
-                out["error_kind"] = pd.Series(kinds, dtype="object")
-            yield pd.DataFrame(out)
-
-    schema = PDF_META_QUARANTINE_SCHEMA if quarantine else PDF_META_SCHEMA
-    return blobs.mapInPandas(batches, schema)
+    return _quarantine_map(blobs, one, PDF_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1306,10 +1198,8 @@ def pdf_meta(blobs: DataFrame, errors: str = "raise") -> DataFrame:
 
 PDF_IMAGES_SCHEMA = (
     "doc_id bigint, page_idx int, image_idx int, name string, "
-    "format string, width int, height int, payload binary"
-)
-PDF_IMAGES_QUARANTINE_SCHEMA = (
-    PDF_IMAGES_SCHEMA + ", error string, error_kind string"
+    "format string, width int, height int, payload binary, "
+    "error string, error_kind string"
 )
 
 _PDF_FORM_DEPTH = 8  # nested Form-XObject recursion cap
@@ -1650,7 +1540,7 @@ def extract_pdf_images(payload: bytes,
     ``{page_idx, image_idx, name, format, width, height, payload}`` on
     success, or ``{..., error, error_kind}`` when that single image
     refuses — one bad image never hides the document's other images."""
-    from .multimodal import DECODE_ERRORS, _error_kind, _error_text
+    from .multimodal import _row_or_error
 
     doc = _Doc(bytes(payload), inflate_budget)
     out: list[dict] = []
@@ -1685,25 +1575,22 @@ def extract_pdf_images(payload: bytes,
                 continue
             image_idx = per_page_count.get(page_idx, 0)
             per_page_count[page_idx] = image_idx + 1
-            row = {"page_idx": page_idx, "image_idx": image_idx,
-                   "name": name, "format": None, "width": None,
-                   "height": None, "payload": None,
-                   "error": None, "error_kind": None}
-            try:
-                fmt, w, h, data = _extract_one_image(doc, obj)
-            except DECODE_ERRORS as e:
-                row["error"] = _error_text(e)
-                row["error_kind"] = _error_kind(e)
-            else:
-                row.update(format=fmt, width=w, height=h, payload=data)
-            out.append(row)
+            out.append({
+                "page_idx": page_idx, "image_idx": image_idx,
+                "name": name, "format": None, "width": None,
+                "height": None, "payload": None,
+                "error": None, "error_kind": None,
+                **_row_or_error(lambda: dict(zip(
+                    ("format", "width", "height", "payload"),
+                    _extract_one_image(doc, obj)))),
+            })
 
     for page_idx, page in enumerate(doc.pages()):
         walk(page.get("__resources__"), page_idx, "", frozenset(), 0)
     return out
 
 
-def pdf_images(blobs: DataFrame, errors: str = "raise",
+def pdf_images(blobs: DataFrame,
                inflate_budget: int | None = PDF_INFLATE_BUDGET,
                ) -> DataFrame:
     """PDF payloads → one row per embedded image XObject, as a payload
@@ -1716,11 +1603,9 @@ def pdf_images(blobs: DataFrame, errors: str = "raise",
     NULL page_idx; a refused IMAGE (JPX/arithmetic-JBIG2, ImageMask,
     non-8-bit, exotic color space) yields its own error row while the
     document's other images still extract."""
-    from .multimodal import _extract_rows_op
+    from .multimodal import _quarantine_map
 
-    return _extract_rows_op(
+    return _quarantine_map(
         blobs,
         lambda p: extract_pdf_images(p, inflate_budget=inflate_budget),
-        ("doc_id", "page_idx", "image_idx", "name", "format",
-         "width", "height", "payload", "error", "error_kind"),
-        PDF_IMAGES_SCHEMA, PDF_IMAGES_QUARANTINE_SCHEMA, errors)
+        PDF_IMAGES_SCHEMA)

@@ -325,7 +325,7 @@ def warc_robots_rules(blobs: DataFrame) -> DataFrame:
 
     from .archives import warc_records
 
-    recs = warc_records(blobs, errors="quarantine")
+    recs = warc_records(blobs)
     robots = (
         recs.filter(
             (F.col("warc_type") == "response")

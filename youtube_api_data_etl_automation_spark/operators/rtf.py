@@ -41,7 +41,7 @@ from .archives import ARCHIVE_BYTE_BUDGET
 
 RTF_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_groups int, n_chars int, "
-    "text string"
+    "text string, error string, error_kind string"
 )
 
 # destinations whose content is never body text; \* marks any optional
@@ -230,7 +230,7 @@ def _extract_rtf(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_groups, text
 
 
-def rtf_text(blobs: DataFrame, errors: str = "quarantine",
+def rtf_text(blobs: DataFrame,
              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
              ) -> DataFrame:
     """REAL RTF text extraction over ``(doc_id, payload)`` — one row
@@ -238,22 +238,11 @@ def rtf_text(blobs: DataFrame, errors: str = "quarantine",
     contract; structurally broken payloads (no magic, unbalanced
     groups, bad escapes) are 'corrupt', oversized output refuses as
     'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
+    from .multimodal import _quarantine_map
 
-    quarantine = _check_errors_mode(errors)
-
-    def one(payload):
-        raw = bytes(payload) if payload else b""
+    def one(raw):
         n_groups, text = _extract_rtf(raw, byte_budget)
         return {"format": "rtf", "n_groups": n_groups,
                 "n_chars": len(text), "text": text}
 
-    schema = RTF_TEXT_SCHEMA + ", error string, error_kind string" \
-        if quarantine else RTF_TEXT_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_groups", "n_chars", "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, RTF_TEXT_SCHEMA)

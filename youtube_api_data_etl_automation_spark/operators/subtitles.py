@@ -12,27 +12,22 @@ emits one corpus-ready text row per payload with cue count and the
 spoken duration, so downstream stages can filter on caption density
 (auto-captions with second-long cues vs. full transcripts).
 
-Same contract as every payload operator: Arrow-batched mapInPandas,
-``errors='quarantine'``, total over crawl garbage (utf-8 replacement
-decode; a text file that is neither format refuses as 'unsupported',
-a structurally broken cue as 'corrupt').
+Same contract as every payload operator: Arrow-batched mapInPandas
+through the one quarantine harness, total over crawl garbage (utf-8
+replacement decode; a text file that is neither format becomes an
+'unsupported' quarantine row, a structurally broken cue a 'corrupt'
+one).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
 SUBTITLE_SCHEMA = (
     "doc_id bigint, format string, n_cues int, duration_sec double, "
-    "n_chars int, text string"
-)
-SUBTITLE_QUARANTINE_SCHEMA = (
-    SUBTITLE_SCHEMA + ", error string, error_kind string"
+    "n_chars int, text string, error string, error_kind string"
 )
 
 # SRT: 00:00:01,000  VTT: 00:00:01.000 (hours optional in VTT)
@@ -134,17 +129,14 @@ def parse_subtitles(payload: bytes,
     return fmt, len(cues), last_end, "\n".join(cues)
 
 
-def subtitles_text(blobs: DataFrame, errors: str = "quarantine",
+def subtitles_text(blobs: DataFrame,
                    cue_budget: int | None = SUBTITLE_CUE_BUDGET,
                    ) -> DataFrame:
     """SRT/WebVTT caption payloads → one text row each: format, cue
     count, spoken duration (max cue end), extracted text (one line per
     cue, styling tags stripped). Quarantine contract; TTML/SSA refuse
     as 'unsupported'."""
-    from .mediameta import _quarantine_batches
-    from .multimodal import _check_errors_mode
-
-    quarantine = _check_errors_mode(errors)
+    from .multimodal import _quarantine_map
 
     def one(payload):
         if not payload:
@@ -153,12 +145,4 @@ def subtitles_text(blobs: DataFrame, errors: str = "quarantine",
         return {"format": fmt, "n_cues": n_cues,
                 "duration_sec": dur, "n_chars": len(text), "text": text}
 
-    schema = SUBTITLE_QUARANTINE_SCHEMA if quarantine \
-        else SUBTITLE_SCHEMA
-    return blobs.mapInPandas(
-        _quarantine_batches(
-            one, ("format", "n_cues", "duration_sec", "n_chars",
-                  "text"),
-            quarantine),
-        schema,
-    )
+    return _quarantine_map(blobs, one, SUBTITLE_SCHEMA)

@@ -23,9 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-# ~0.1 µs/byte numpy path + per-strip Python for PackBits; 16 Mpx keeps
-# the worst case ~1 s. None disables.
-TIFF_PIXEL_BUDGET = 1 << 24
+from .multimodal import DECODE_PIXEL_BUDGET
 
 
 def _unpackbits(data: bytes, expected: int) -> bytes:
@@ -393,7 +391,7 @@ def _ifd_chain(payload: bytes, lt: str, stop_after: int | None = None,
 
 
 def decode_tiff(payload: bytes,
-                pixel_budget: int | None = TIFF_PIXEL_BUDGET,
+                pixel_budget: int | None = DECODE_PIXEL_BUDGET,
                 page: int = 0) -> np.ndarray:
     """Decode a baseline TIFF payload to an (h, w, 3) uint8 RGB array.
     ``page`` selects the IFD in the page chain (r13: multi-page TIFFs
@@ -640,15 +638,12 @@ def _decode_ifd(payload: bytes, lt: str, ifd0: int,
 
 TIFF_PAGES_SCHEMA = (
     "doc_id long, page_idx int, format string, width int, height int, "
-    "payload binary"
-)
-TIFF_PAGES_QUARANTINE_SCHEMA = (
-    TIFF_PAGES_SCHEMA + ", error string, error_kind string"
+    "payload binary, error string, error_kind string"
 )
 
 
 def extract_tiff_pages(payload: bytes,
-                       pixel_budget: int | None = TIFF_PIXEL_BUDGET,
+                       pixel_budget: int | None = DECODE_PIXEL_BUDGET,
                        ) -> list[dict]:
     """Every page of a (possibly multi-page) TIFF as a P6 PPM payload
     row dict; per-page failures — including bug-shaped ones, the full
@@ -656,49 +651,40 @@ def extract_tiff_pages(payload: bytes,
     pages still extract (the pdf_images two-level contract; r13 review
     fix: a narrower per-page catch let an IndexError discard healthy
     sibling pages). One chain walk; pages decode by IFD offset."""
-    from .multimodal import DECODE_ERRORS, _error_kind, _error_text
+    from .multimodal import _row_or_error
 
     payload = bytes(payload)
     if payload[:4] not in (b"II*\x00", b"MM\x00*"):
         raise ValueError("malformed TIFF: bad magic")
     lt = "<" if payload[:2] == b"II" else ">"
-    chain = _ifd_chain(payload, lt)  # raises on a malformed container
-    rows: list[dict] = []
-    for page, off in enumerate(chain):
-        row = {"page_idx": page, "format": None, "width": None,
-               "height": None, "payload": None, "error": None,
-               "error_kind": None}
-        try:
-            rgb = _decode_ifd(payload, lt, off, pixel_budget)
-        except DECODE_ERRORS as e:
-            row["error"] = _error_text(e)
-            row["error_kind"] = _error_kind(e)
-            rows.append(row)
-            continue
+
+    def page_row(off):
+        rgb = _decode_ifd(payload, lt, off, pixel_budget)
         h, w = rgb.shape[:2]
-        row.update(format="ppm", width=int(w), height=int(h),
-                   payload=b"P6\n%d %d\n255\n" % (w, h)
-                   + rgb.tobytes())
-        rows.append(row)
-    return rows
+        return {"format": "ppm", "width": int(w), "height": int(h),
+                "payload": b"P6\n%d %d\n255\n" % (w, h) + rgb.tobytes()}
+
+    chain = _ifd_chain(payload, lt)  # raises on a malformed container
+    return [{"page_idx": page, "format": None, "width": None,
+             "height": None, "payload": None, "error": None,
+             "error_kind": None, **_row_or_error(page_row, off)}
+            for page, off in enumerate(chain)]
 
 
-def tiff_page_images(blobs, errors: str = "raise",
-                     pixel_budget: int | None = TIFF_PIXEL_BUDGET):
+def tiff_page_images(blobs,
+                     pixel_budget: int | None = DECODE_PIXEL_BUDGET):
     """TIFF payload table → one row per PAGE, each a standalone P6 PPM
     the image pipeline decodes directly (multi-page TIFF is the normal
-    fax/scan-archive container). Two-level quarantine via the shared
-    harness (multimodal._extract_rows_op — r13 review consolidation
-    with pdf_images): a malformed CONTAINER yields one row with NULL
+    fax/scan-archive container). Two-level quarantine through the
+    shared harness (:func:`.multimodal._quarantine_map`, like
+    pdf_images): a malformed CONTAINER yields one row with NULL
     page_idx; a refused PAGE (unsupported compression, pixel budget)
     yields its own error row while sibling pages extract. Arrow-batched
     mapInPandas, no shuffle; the ``(doc_id, payload)`` columns feed
     decode_image / image_hashes directly."""
-    from .multimodal import _extract_rows_op
+    from .multimodal import _quarantine_map
 
-    return _extract_rows_op(
+    return _quarantine_map(
         blobs,
         lambda p: extract_tiff_pages(p, pixel_budget=pixel_budget),
-        ("doc_id", "page_idx", "format", "width", "height",
-         "payload", "error", "error_kind"),
-        TIFF_PAGES_SCHEMA, TIFF_PAGES_QUARANTINE_SCHEMA, errors)
+        TIFF_PAGES_SCHEMA)

@@ -26,8 +26,8 @@ Decoder scope (complete per spec):
 Scale posture: like operators/jpeg.py this is per-payload Python inside
 Arrow-batched ``mapInPandas`` with a pixel budget
 (``VP8L_PIXEL_BUDGET``) that routes oversized images to a recoverable
-NotImplementedError refusal ('unsupported' under errors='quarantine')
-instead of stalling an executor core. At 100 TB route bulk WebP through
+NotImplementedError refusal (a quarantine row with error_kind
+'unsupported') instead of stalling an executor core. At 100 TB route bulk WebP through
 a codec library on the executors; this path keeps environments without
 one correct.
 

@@ -190,7 +190,7 @@ def codec_stats(spark: SparkSession,
     parts: list[DataFrame] = []
 
     if "image" in by_family:
-        img = decode_image(by_family["image"], errors="quarantine").select(
+        img = decode_image(by_family["image"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             "width",
@@ -208,7 +208,7 @@ def codec_stats(spark: SparkSession,
         parts.append(img)
 
     if "audio" in by_family:
-        aud = decode_audio(by_family["audio"], errors="quarantine").select(
+        aud = decode_audio(by_family["audio"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -229,7 +229,7 @@ def codec_stats(spark: SparkSession,
         parts.append(aud)
 
     if "image_meta" in by_family:
-        imeta = image_meta(by_family["image_meta"], errors="quarantine").select(
+        imeta = image_meta(by_family["image_meta"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             "width",
@@ -240,7 +240,7 @@ def codec_stats(spark: SparkSession,
         parts.append(imeta)
 
     if "video_meta" in by_family:
-        vmeta = video_meta(by_family["video_meta"], errors="quarantine").select(
+        vmeta = video_meta(by_family["video_meta"]).select(
             "doc_id",
             F.col("brand").alias("fmt"),
             "width",
@@ -262,7 +262,7 @@ def codec_stats(spark: SparkSession,
         parts.append(vmeta)
 
     if "audio_meta" in by_family:
-        ameta = audio_meta(by_family["audio_meta"], errors="quarantine").select(
+        ameta = audio_meta(by_family["audio_meta"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -281,7 +281,7 @@ def codec_stats(spark: SparkSession,
         parts.append(ameta)
 
     if "image_exif" in by_family:
-        exif = image_exif(by_family["image_exif"], errors="quarantine").select(
+        exif = image_exif(by_family["image_exif"]).select(
             "doc_id",
             F.lit("exif").alias("fmt"),
             F.col("exif_width").alias("width"),
@@ -309,9 +309,7 @@ def codec_stats(spark: SparkSession,
         parts.append(exif)
 
     if "exif_strip" in by_family:
-        estrip = strip_exif(
-            by_family["exif_strip"], errors="quarantine"
-        ).select(
+        estrip = strip_exif(by_family["exif_strip"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -328,7 +326,7 @@ def codec_stats(spark: SparkSession,
         parts.append(estrip)
 
     if "audio_tags" in by_family:
-        tags = audio_tags(by_family["audio_tags"], errors="quarantine").select(
+        tags = audio_tags(by_family["audio_tags"]).select(
             "doc_id",
             F.col("container").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -346,9 +344,7 @@ def codec_stats(spark: SparkSession,
         parts.append(tags)
 
     if "video_frame" in by_family:
-        keyf = video_keyframe_features(
-            by_family["video_frame"], errors="quarantine"
-        ).select(
+        keyf = video_keyframe_features(by_family["video_frame"]).select(
             "doc_id",
             F.col("container").alias("fmt"),
             "width",
@@ -369,9 +365,7 @@ def codec_stats(spark: SparkSession,
         parts.append(keyf)
 
     if "audio_subband" in by_family:
-        sband = audio_subband_features(
-            by_family["audio_subband"], errors="quarantine"
-        ).select(
+        sband = audio_subband_features(by_family["audio_subband"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -393,9 +387,7 @@ def codec_stats(spark: SparkSession,
         parts.append(sband)
 
     if "archive" in by_family:
-        arch = archive_meta(
-            by_family["archive"], errors="quarantine"
-        ).select(
+        arch = archive_meta(by_family["archive"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -414,7 +406,7 @@ def codec_stats(spark: SparkSession,
         parts.append(arch)
 
     if "warc_records" in by_family:
-        wr = warc_records(by_family["warc_records"], errors="quarantine")
+        wr = warc_records(by_family["warc_records"])
         warcf = wr.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.concat_ws(
@@ -447,7 +439,7 @@ def codec_stats(spark: SparkSession,
         parts.append(warcf)
 
     if "document" in by_family:
-        doc = pdf_text(by_family["document"], errors="quarantine").select(
+        doc = pdf_text(by_family["document"]).select(
             "doc_id",
             "format",
             F.lit(None).cast("int").alias("width"),
@@ -467,9 +459,7 @@ def codec_stats(spark: SparkSession,
         parts.append(doc)
 
     if "document_meta" in by_family:
-        dmeta = pdf_meta(
-            by_family["document_meta"], errors="quarantine"
-        ).select(
+        dmeta = pdf_meta(by_family["document_meta"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -495,9 +485,7 @@ def codec_stats(spark: SparkSession,
         parts.append(dmeta)
 
     if "image_hash" in by_family:
-        ih = image_hashes(
-            by_family["image_hash"], errors="quarantine"
-        ).select(
+        ih = image_hashes(by_family["image_hash"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             "width",
@@ -515,7 +503,7 @@ def codec_stats(spark: SparkSession,
         parts.append(ih)
 
     if "office" in by_family:
-        office = docx_text(by_family["office"], errors="quarantine").select(
+        office = docx_text(by_family["office"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -533,9 +521,7 @@ def codec_stats(spark: SparkSession,
         parts.append(office)
 
     if "image_thumb" in by_family:
-        thumb = image_thumbnails(
-            by_family["image_thumb"], errors="quarantine"
-        ).select(
+        thumb = image_thumbnails(by_family["image_thumb"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             "width",
@@ -572,7 +558,7 @@ def codec_stats(spark: SparkSession,
         parts.append(subs)
 
     if "document_images" in by_family:
-        pimg = pdf_images(by_family["document_images"], errors="quarantine")
+        pimg = pdf_images(by_family["document_images"])
         folded = pimg.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.concat_ws("|", F.array_sort(F.collect_list(F.concat_ws(
@@ -614,8 +600,7 @@ def codec_stats(spark: SparkSession,
     if "office_pptx" in by_family:
         from ..operators.archives import pptx_text
 
-        ppt = pptx_text(by_family["office_pptx"],
-                        errors="quarantine").select(
+        ppt = pptx_text(by_family["office_pptx"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -636,8 +621,7 @@ def codec_stats(spark: SparkSession,
     if "office_xlsx" in by_family:
         from ..operators.archives import xlsx_text
 
-        xls = xlsx_text(by_family["office_xlsx"],
-                        errors="quarantine").select(
+        xls = xlsx_text(by_family["office_xlsx"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -658,8 +642,7 @@ def codec_stats(spark: SparkSession,
     if "office_odf" in by_family:
         from ..operators.archives import odf_text
 
-        odf = odf_text(by_family["office_odf"],
-                       errors="quarantine").select(
+        odf = odf_text(by_family["office_odf"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -679,8 +662,7 @@ def codec_stats(spark: SparkSession,
     if "document_epub" in by_family:
         from ..operators.archives import epub_text
 
-        epub = epub_text(by_family["document_epub"],
-                         errors="quarantine").select(
+        epub = epub_text(by_family["document_epub"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -700,8 +682,7 @@ def codec_stats(spark: SparkSession,
     if "mail_eml" in by_family:
         from ..operators.mail import eml_text
 
-        eml = eml_text(by_family["mail_eml"],
-                       errors="quarantine").select(
+        eml = eml_text(by_family["mail_eml"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -724,8 +705,7 @@ def codec_stats(spark: SparkSession,
     if "document_rtf" in by_family:
         from ..operators.rtf import rtf_text
 
-        rtfp = rtf_text(by_family["document_rtf"],
-                        errors="quarantine").select(
+        rtfp = rtf_text(by_family["document_rtf"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -745,8 +725,7 @@ def codec_stats(spark: SparkSession,
     if "document_latex" in by_family:
         from ..operators.latex import latex_text
 
-        ltx = latex_text(by_family["document_latex"],
-                         errors="quarantine").select(
+        ltx = latex_text(by_family["document_latex"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -766,8 +745,7 @@ def codec_stats(spark: SparkSession,
     if "document_ipynb" in by_family:
         from ..operators.notebooks import ipynb_text
 
-        ipy = ipynb_text(by_family["document_ipynb"],
-                         errors="quarantine").select(
+        ipy = ipynb_text(by_family["document_ipynb"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -790,8 +768,7 @@ def codec_stats(spark: SparkSession,
     if "document_markdown" in by_family:
         from ..operators.markdown import markdown_text
 
-        mdn = markdown_text(by_family["document_markdown"],
-                            errors="quarantine").select(
+        mdn = markdown_text(by_family["document_markdown"]).select(
             "doc_id",
             F.col("format").alias("fmt"),
             F.lit(None).cast("int").alias("width"),
@@ -813,8 +790,7 @@ def codec_stats(spark: SparkSession,
     if "image_pages" in by_family:
         from ..operators.tiff import tiff_page_images
 
-        tpg = tiff_page_images(by_family["image_pages"],
-                               errors="quarantine")
+        tpg = tiff_page_images(by_family["image_pages"])
         tfolded = tpg.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.concat_ws("|", F.array_sort(F.collect_list(F.concat_ws(
