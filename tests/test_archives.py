@@ -8,6 +8,7 @@ import io
 import struct
 import tarfile
 import zipfile
+import zlib
 
 import pytest
 
@@ -70,6 +71,24 @@ def _tar(members=(("x.txt", b"xx"), ("y.txt", b"y" * 600))):
             ti.size = len(data)
             tf.addfile(ti, io.BytesIO(data))
     return buf.getvalue()
+
+
+def _declaring(zip_payload: bytes, size: int) -> bytes:
+    """``zip_payload`` with its first central-directory entry forged to
+    declare ``size`` uncompressed bytes: a header-only zip bomb."""
+    eocd = zip_payload.rfind(b"PK\x05\x06")
+    (cd_off,) = struct.unpack_from("<I", zip_payload, eocd + 16)
+    out = bytearray(zip_payload)
+    struct.pack_into("<I", out, cd_off + 24, size)
+    return bytes(out)
+
+
+def _gzip_bomb() -> bytes:
+    """A ~64 KB gzip member that inflates to 65 MiB of zeros, one MiB
+    past the decompressed-byte budget."""
+    c = zlib.compressobj(9, zlib.DEFLATED, 31)
+    zeros = bytes(1 << 20)
+    return b"".join(c.compress(zeros) for _ in range(65)) + c.flush()
 
 
 def _blob_df(spark, rows):
@@ -161,9 +180,9 @@ def test_warc_refusals(spark):
     assert out[2]["error_kind"] == "corrupt"
     assert out[3]["error_kind"] == "corrupt"
     # decompressed-byte budget routes 'unsupported' pre-allocation
+    assert 65 << 20 > archives.DECODE_BYTE_BUDGET
     big = archives.warc_records(
-        _blob_df(spark, [(9, gzip.compress(payload))]),
-        byte_budget=64).collect()[0]
+        _blob_df(spark, [(9, _gzip_bomb())])).collect()[0]
     assert big["error_kind"] == "unsupported"
 
 
@@ -176,8 +195,8 @@ def test_zip_members(spark):
     assert bytes(rows[0]["body"]) == b"alpha"
     assert bytes(rows[1]["body"]) == b"\x00" * 100
     # declared-size budget refuses BEFORE inflating anything
-    out = archives.archive_members(_blob_df(spark, [(1, payload)]),
-                                   byte_budget=50).collect()[0]
+    forged = _declaring(payload, archives.DECODE_BYTE_BUDGET + 1)
+    out = archives.archive_members(_blob_df(spark, [(1, forged)])).collect()[0]
     assert out["error_kind"] == "unsupported"
     out = archives.archive_members(
         _blob_df(spark, [(1, b"PK\x03\x04garbage")])).collect()[0]
@@ -192,7 +211,7 @@ def test_zip_duplicate_member_names_keep_both_bodies(spark):
     rows = archives.archive_members(
         _blob_df(spark, [(1, payload)])).collect()
     assert [bytes(r["body"]) for r in rows] == [b"first", b"second"]
-    members = archives._iter_archive_members(payload, budget=None)
+    members = archives._iter_archive_members(payload)
     assert members == [("same.txt", b"first"), ("same.txt", b"second")]
 
 
@@ -336,9 +355,11 @@ def test_archive_members_budget_refuses_from_headers(spark):
         archive_members,
     )
 
-    big = _tar(members=(("big.bin", b"z" * 4096),))
-    rows = archive_members(_blob_df(spark, [(1, big)]),
-                           byte_budget=1000).collect()
+    # a header that declares one byte past the budget, no data behind it
+    ti = tarfile.TarInfo("big.bin")
+    ti.size = archives.DECODE_BYTE_BUDGET + 1
+    big = ti.tobuf(tarfile.USTAR_FORMAT) + bytes(1024)
+    rows = archive_members(_blob_df(spark, [(1, big)])).collect()
     assert rows[0]["error_kind"] == "unsupported"
     assert "budget" in rows[0]["error"]
 
@@ -419,14 +440,14 @@ def test_docx_text_extraction(spark):
 
 
 def test_docx_budget_refuses_from_central_directory(spark):
-    big = _docx(b"<w:p><w:r><w:t>" + b"x" * 5000 + b"</w:t></w:r></w:p>")
-    row = archives.docx_text(_blob_df(spark, [(1, big)]),
-                             byte_budget=100).collect()[0]
+    big = _declaring(_docx(b"<w:p><w:r><w:t>x</w:t></w:r></w:p>"),
+                     archives.DECODE_BYTE_BUDGET + 1)
+    row = archives.docx_text(_blob_df(spark, [(1, big)])).collect()[0]
     assert row["error_kind"] == "unsupported"
     assert "budget" in row["error"]
 
 
-def test_bzip2_xz_archives(spark):
+def test_bzip2_xz_archives(spark, monkeypatch):
     """late r14: the stdlib compressors beyond gzip — bare documents,
     tarballs, concatenated streams, budgets, refusal routing."""
     import bz2 as _bz2
@@ -456,20 +477,22 @@ def test_bzip2_xz_archives(spark):
     assert bytes(ms[(4, "x/b.txt")]["body"]) == b"beta"
     assert bytes(ms[(5, "")]["body"]) == body
     # concatenated streams (pbzip2 layout) decode whole
-    assert A._bunzip_all(bz_doc + bz_doc, None) == body + body
-    assert A._unxz_all(xz_doc + xz_doc, None) == body + body
+    assert A._decompress_all(bz_doc + bz_doc, "bzip2") == body + body
+    assert A._decompress_all(xz_doc + xz_doc, "xz") == body + body
     # budgets refuse BEFORE materializing
     import pytest as _pytest
 
-    with _pytest.raises(NotImplementedError, match="budget"):
-        A._bunzip_all(bz_doc, 16)
-    with _pytest.raises(NotImplementedError, match="budget"):
-        A._unxz_all(xz_doc, 16)
+    with monkeypatch.context() as m:
+        m.setattr(A, "DECODE_BYTE_BUDGET", 16)
+        with _pytest.raises(NotImplementedError, match="budget"):
+            A._decompress_all(bz_doc, "bzip2")
+        with _pytest.raises(NotImplementedError, match="budget"):
+            A._decompress_all(xz_doc, "xz")
     # truncation is malformed, not a crash
     with _pytest.raises(ValueError, match="truncated"):
-        A._bunzip_all(bz_doc[:-4], None)
+        A._decompress_all(bz_doc[:-4], "bzip2")
     with _pytest.raises(ValueError, match="truncated"):
-        A._unxz_all(xz_doc[:-4], None)
+        A._decompress_all(xz_doc[:-4], "xz")
     # sniff routes both (engine side)
     from youtube_api_data_etl_automation_spark.operators.mediameta \
         import sniff_format

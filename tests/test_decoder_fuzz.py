@@ -271,7 +271,7 @@ def test_fuzz_layer1(rng):
     _assert_contract(mpegaudio.decode_layer1, payloads, "layer1")
 
 
-def test_fuzz_archives(rng):
+def test_fuzz_archives(rng, monkeypatch):
     import sys
     sys.path.insert(0, "tests")
     import gzip as _gz
@@ -280,6 +280,7 @@ def test_fuzz_archives(rng):
 
     from youtube_api_data_etl_automation_spark.operators import archives
 
+    monkeypatch.setattr(archives, "DECODE_BYTE_BUDGET", 1 << 20)
     warc_plain, _ = _warc()
     warc_gz, _ = _warc(per_record_gzip=True)
     zipp = _zip()
@@ -293,7 +294,7 @@ def test_fuzz_archives(rng):
         if len(p) > 262 and p[257:262] == b"ustar":
             return archives._parse_tar_meta(p)
         if p[:5] == b"WARC/":
-            return archives._parse_warc_meta(p, 1 << 20)
+            return archives._parse_warc_meta(p)
         if p[:2] == b"\x1f\x8b":
             return archives._parse_gzip_header(p)
         raise NotImplementedError("unknown")
@@ -306,7 +307,7 @@ def test_fuzz_archives(rng):
     _assert_contract(meta_one, payloads, "archive_meta")
 
     def warc_one(p):
-        data = archives._gunzip_all(p, 1 << 20) \
+        data = archives._decompress_all(p, "gzip") \
             if p[:2] == b"\x1f\x8b" else p
         archives._split_warc(data)
 
@@ -317,7 +318,7 @@ def test_fuzz_archives(rng):
     )
 
 
-def test_fuzz_pdf(rng):
+def test_fuzz_pdf(rng, monkeypatch):
     import sys
     sys.path.insert(0, "tests")
     from test_pdf import mkpdf, one_page, stream_obj
@@ -341,10 +342,9 @@ def test_fuzz_pdf(rng):
         payloads += _mutations(rng, b, 150)
     payloads += [b"%PDF-" + g for g in _garbage(rng, 80, 300)]
     payloads += _garbage(rng, 40, 200)
-    _assert_contract(
-        lambda p: P.extract_pdf_text(p, inflate_budget=1 << 16,
-                                     text_budget=1 << 16),
-        payloads, "extract_pdf_text")
+    monkeypatch.setattr(P, "DECODE_BYTE_BUDGET", 1 << 16)
+    monkeypatch.setattr(P, "PDF_TEXT_BUDGET", 1 << 16)
+    _assert_contract(P.extract_pdf_text, payloads, "extract_pdf_text")
     _assert_contract(P.probe_pdf, payloads, "probe_pdf")
 
 
@@ -372,7 +372,7 @@ def test_fuzz_imagehash_and_strip(rng):
     _assert_contract(mediameta._strip_exif_bytes, payloads, "strip_exif")
 
 
-def test_fuzz_docx_and_members(rng):
+def test_fuzz_docx_and_members(rng, monkeypatch):
     import sys
     sys.path.insert(0, "tests")
     from test_archives import _docx, _tar, _zip
@@ -382,12 +382,10 @@ def test_fuzz_docx_and_members(rng):
     docx = _docx(b"<w:p><w:r><w:t>fuzz doc</w:t></w:r></w:p>")
     payloads = _mutations(rng, docx, 150) + _mutations(rng, _zip(), 100) \
         + _mutations(rng, _tar(), 100) + _garbage(rng, 60, 400)
-    _assert_contract(
-        lambda p: archives._docx_extract_text(p, 1 << 20),
-        payloads, "docx_text")
-    _assert_contract(
-        lambda p: archives._iter_archive_members(p, 1 << 20),
-        payloads, "archive_members")
+    monkeypatch.setattr(archives, "DECODE_BYTE_BUDGET", 1 << 20)
+    _assert_contract(archives._docx_extract_text, payloads, "docx_text")
+    _assert_contract(archives._iter_archive_members, payloads,
+                     "archive_members")
 
 
 def test_fuzz_layer2(rng):
@@ -454,7 +452,7 @@ def test_fuzz_ccitt(rng):
                      _garbage(rng, 80, 400), "ccitt-g3-norows")
 
 
-def test_fuzz_r14_document_extractors(rng):
+def test_fuzz_r14_document_extractors(rng, monkeypatch):
     """r14 extractors (jbig2 embedded+file, rtf, office/odf/epub zip
     walks, eml/mbox): arbitrary bytes map to DECODE_ERRORS or a clean
     result — never an unexpected exception class."""
@@ -468,6 +466,8 @@ def test_fuzz_r14_document_extractors(rng):
         rtf,
     )
 
+    for mod in (archives, latex, mail, markdown, notebooks, rtf):
+        monkeypatch.setattr(mod, "DECODE_BYTE_BUDGET", 1 << 20)
     import sys
     sys.path.insert(0, "tests")
     from test_jbig2 import _page_info, _region, _seg, _rand_img
@@ -484,31 +484,31 @@ def test_fuzz_r14_document_extractors(rng):
         (lambda b: jbig2.decode_jbig2(b), valid_jb),
         (lambda b: jbig2.decode_jbig2_file(b),
          b"\x97JB2\r\n\x1a\n\x03" + valid_jb),
-        (lambda b: rtf._extract_rtf(b, 1 << 20), valid_rtf),
-        (lambda b: archives._pptx_extract_text(b, 1 << 20),
+        (rtf._extract_rtf, valid_rtf),
+        (archives._pptx_extract_text,
          _pptx([b"<a:p><a:r><a:t>s</a:t></a:r></a:p>"])),
-        (lambda b: archives._xlsx_extract_text(b, 1 << 20),
+        (archives._xlsx_extract_text,
          _xlsx([b"<row><c><v>1</v></c></row>"])),
-        (lambda b: archives._odf_extract_text(b, 1 << 20),
+        (archives._odf_extract_text,
          _odf(b"<text:p>x</text:p>")),
-        (lambda b: archives._epub_extract_text(b, 1 << 20),
+        (archives._epub_extract_text,
          _epub([b"<p>x</p>"])),
-        (lambda b: mail._extract_eml(b, 1 << 20), _mime_alt()),
+        (mail._extract_eml, _mime_alt()),
         (lambda b: mail.split_mbox(b),
          b"From a@x Mon\nSubject: s\n\nbody\n"),
         # late r14: latex + ipynb extractors join the same gate
-        (lambda b: latex._extract_latex(b, 1 << 20),
+        (latex._extract_latex,
          b"\\documentclass{a}\n\\begin{document}\nx $m$ \\'e "
          b"\\begin{verbatim}v\\end{verbatim}\n\\end{document}\n"),
-        (lambda b: notebooks._extract_ipynb(b, 1 << 20, True),
+        (lambda b: notebooks._extract_ipynb(b, True),
          b'{"nbformat": 4, "cells": [{"cell_type": "code", '
          b'"source": "x", "outputs": [{"output_type": "stream", '
          b'"text": "y"}]}]}'),
-        (lambda b: markdown._extract_markdown(b, 1 << 20),
+        (markdown._extract_markdown,
          b"# T\n\n[a](b) `c` **d**\n```\ncode\n```\n"),
-        (lambda b: archives._bunzip_all(b, 1 << 20),
+        (lambda b: archives._decompress_all(b, "bzip2"),
          __import__("bz2").compress(b"fuzz body " * 20)),
-        (lambda b: archives._unxz_all(b, 1 << 20),
+        (lambda b: archives._decompress_all(b, "xz"),
          __import__("lzma").compress(
              b"fuzz body " * 20,
              format=__import__("lzma").FORMAT_XZ)),

@@ -11,10 +11,12 @@ from __future__ import annotations
 import json
 import math
 import re
+from unittest import mock
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from youtube_api_data_etl_automation_spark.operators import latex
 from youtube_api_data_etl_automation_spark.operators.latex import (
     _extract_latex,
 )
@@ -65,11 +67,11 @@ def latex_docs(draw):
 @given(markdown_docs())
 def test_markdown_invariants(raw):
     try:
-        r = _extract_markdown(raw, None)
+        r = _extract_markdown(raw)
     except OK:
         return
     # determinism
-    assert _extract_markdown(raw, None) == r
+    assert _extract_markdown(raw) == r
     # the no-expansion contract the budget math documents
     assert len(r["text"]) <= len(raw)
     assert r["n_chars"] == len(r["text"])
@@ -84,17 +86,18 @@ def test_markdown_invariants(raw):
 @given(latex_docs())
 def test_latex_invariants(raw):
     try:
-        nd, text = _extract_latex(raw, None)
+        nd, text = _extract_latex(raw)
     except OK:
         return
-    assert _extract_latex(raw, None) == (nd, text)
+    assert _extract_latex(raw) == (nd, text)
     assert len(text) <= len(raw)
     assert nd >= 0
     # a tighter budget can only flip success -> budget refusal, never
     # change the text (the gate is on OUTPUT size, checked en route)
     if text:
         try:
-            assert _extract_latex(raw, len(text))[1] == text
+            with mock.patch.object(latex, "DECODE_BYTE_BUDGET", len(text)):
+                assert _extract_latex(raw)[1] == text
         except NotImplementedError:
             # en-route counting may exceed the final normalized size
             pass
@@ -125,14 +128,14 @@ def notebooks_json(draw):
 @given(notebooks_json())
 def test_ipynb_invariants(raw):
     try:
-        r = _extract_ipynb(raw, None, True)
+        r = _extract_ipynb(raw, True)
     except OK:
         return
-    assert _extract_ipynb(raw, None, True) == r
+    assert _extract_ipynb(raw, True) == r
     assert r["n_cells"] == r["n_code_cells"] + r["n_md_cells"]
     assert r["n_chars"] == len(r["text"])
     # outputs-off text is never longer than outputs-on
-    off = _extract_ipynb(raw, None, False)
+    off = _extract_ipynb(raw, False)
     assert off["n_chars"] <= r["n_chars"]
     assert off["n_cells"] == r["n_cells"]
 

@@ -306,7 +306,7 @@ def test_bps8_and_explicit_rate_codes():
     assert rate == 44100
 
 
-def test_crc_and_malformed_refusals():
+def test_crc_and_malformed_refusals(monkeypatch):
     ch = [_wave(24, 800)]
     good = _flac(ch, sub_kw={"kind": "fixed", "order": 1})
     bad = bytearray(good)
@@ -328,8 +328,9 @@ def test_crc_and_malformed_refusals():
     with pytest.raises(ValueError, match="sample rate 0"):
         flac.decode_flac(_streaminfo(0, 1, 16, 24) +
                          _frame(0, [_wave(24, 800)], 16))
+    monkeypatch.setattr(flac, "DECODE_SAMPLE_BUDGET", 10)
     with pytest.raises(NotImplementedError, match="sample budget"):
-        flac.decode_flac(good, sample_budget=10)
+        flac.decode_flac(good)
 
 
 def test_decode_audio_and_probe_integration(spark):

@@ -185,7 +185,7 @@ def test_gif_local_palette_overrides_global():
     assert np.array_equal(got, _expected(idx, lpal))
 
 
-def test_gif_malformed_and_budget():
+def test_gif_malformed_and_budget(monkeypatch):
     idx = [[0, 1], [2, 3]]
     good = _gif(idx, PAL4)
     with pytest.raises(ValueError, match="signature"):
@@ -201,8 +201,9 @@ def test_gif_malformed_and_budget():
         gif.decode_gif(_gif(bad_idx, PAL4, min_code_size=3))
     rng = np.random.default_rng(9)
     big = rng.integers(0, 4, (40, 40)).tolist()
+    monkeypatch.setattr(gif, "GIF_PIXEL_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="pixel budget"):
-        gif.decode_gif(_gif(big, PAL4), pixel_budget=100)
+        gif.decode_gif(_gif(big, PAL4))
 
 
 def test_gif_through_decode_image_and_quarantine(spark):

@@ -211,7 +211,7 @@ def test_pdf_jbig2_page_size_mismatch_is_malformed():
     assert "JBIG2 page" in row["error"]
 
 
-def test_cumulative_region_budget():
+def test_cumulative_region_budget(monkeypatch):
     """r14 review fix: many just-under-budget regions must trip the
     CUMULATIVE pixel budget (checked from the declared sizes, before
     any decode) instead of accumulating decoded buffers."""
@@ -219,11 +219,12 @@ def test_cumulative_region_budget():
     base = _seg(0, 48, 1, _page_info(64, 64))
     body = b"".join(_seg(i + 1, 39, 1, _region(img))
                     for i in range(5))
+    monkeypatch.setattr(J, "JBIG2_PIXEL_BUDGET", 64 * 64 * 3)
     with pytest.raises(ValueError, match="cumulative"):
-        J.decode_jbig2(base + body, pixel_budget=64 * 64 * 3)
+        J.decode_jbig2(base + body)
     # under the cap the same shape composes fine
-    assert J.decode_jbig2(base + body,
-                          pixel_budget=64 * 64 * 6).shape == (64, 64)
+    monkeypatch.setattr(J, "JBIG2_PIXEL_BUDGET", 64 * 64 * 6)
+    assert J.decode_jbig2(base + body).shape == (64, 64)
 
 
 def test_standalone_file_organization():
@@ -272,3 +273,34 @@ def test_decode_image_routes_jbig2(spark):
     want_mean = float(((1 - img) * 255).mean())
     assert abs(ok["mean_r"] - want_mean) < 1e-6
     assert by_id[2]["error_kind"] == "corrupt"
+
+
+def test_standalone_file_probes_like_every_image(spark):
+    """A standalone JBIG2 file probes from its page-information segment,
+    so image_meta, the triage router and the probe-first image_hashes
+    take the files decode_image reads (the codec fixture's shape)."""
+    from youtube_api_data_etl_automation_spark.operators import (
+        imagehash,
+        mediameta,
+    )
+
+    magic = b"\x97JB2\r\n\x1a\n\x03"
+    img = _rand_img(random.Random(1313), 18, 41)
+    payload = (magic + _seg(0, 48, 1, _page_info(41, 18))
+               + _seg(1, 39, 1, _region(img)) + _seg(2, 51, 1, b""))
+    # a striped page of unknown height takes the regions' extent
+    striped = (magic + _seg(0, 48, 1, _page_info(41, 0xFFFFFFFF))
+               + _seg(1, 39, 1, _region(img)))
+    assert J.jbig2_file_size(striped) == (41, 18)
+    assert J.decode_jbig2_file(striped).shape == (18, 41)
+
+    df = spark.createDataFrame([(1, bytearray(payload))],
+                               "doc_id long, payload binary")
+    meta = mediameta.image_meta(df).collect()[0]
+    assert (meta["format"], meta["width"], meta["height"]) == \
+        ("jbig2", 41, 18)
+    tri = mediameta.triage_decode_images(df).collect()[0]
+    assert tri["route"] == "decoded" and tri["format"] == "jbig2"
+    hashed = imagehash.image_hashes(df).collect()[0]
+    assert hashed["error"] is None and hashed["format"] == "jbig2"
+    assert (hashed["width"], hashed["height"]) == (41, 18)

@@ -403,14 +403,14 @@ def test_corrupt_payloads_refuse_with_valueerror():
         jpeg.decode_baseline_jpeg(gutted)
 
 
-def test_entropy_budget_refusal():
+def test_entropy_budget_refusal(monkeypatch):
     img = _rng_image(16, 16, seed=7, grey=True)
     payload, *_ = _encode_jpeg(img)
+    # under the module budget it decodes
+    assert jpeg.decode_baseline_jpeg(payload).shape == (16, 16, 3)
+    monkeypatch.setattr(jpeg, "JPEG_ENTROPY_BYTE_BUDGET", 4)
     with pytest.raises(NotImplementedError, match="byte budget"):
-        jpeg.decode_baseline_jpeg(payload, entropy_budget=4)
-    # budget disabled decodes
-    assert jpeg.decode_baseline_jpeg(payload, entropy_budget=None) \
-        .shape == (16, 16, 3)
+        jpeg.decode_baseline_jpeg(payload)
 
 
 def test_decode_rgb_routes_jpeg():

@@ -47,7 +47,7 @@ We use \emph{scaled} attention with caf\'e and \c{c}a.""".replace(
 def test_latex_math_forms_and_typography():
     nd, text = L._extract_latex(_doc(
         rb"A \(x\) B \[ y \] C $$z$$ D `single' ``double'' -- ---"
-        rb" a~b & c"), None)
+        rb" a~b & c"))
     assert nd == 3
     # the alignment tab joins the surrounding spaces and the run
     # normalizes to one space — `&` is a soft separator in text form
@@ -60,19 +60,19 @@ def test_latex_skip_envs_nested_and_verbatim():
         b"\\begin{align}\n  x &= 1 \\\\\n  y &= 2\n\\end{align}\n"
         b"\\begin{tikzpicture}\\draw (0,0);\\end{tikzpicture}\n"
         b"\\begin{verbatim}\ndef f(x):\n    return x\n\\end{verbatim}\n"
-        b"after"), None)
+        b"after"))
     assert nd == 2
     # a blank line follows the verbatim block (its own trailing
     # newline plus the source's), like a rendered code block
     assert text == "before\n\ndef f(x):\n    return x\n\nafter"
     # minted consumes its {language} argument before raw mode
     nd, text = L._extract_latex(_doc(
-        b"\\begin{minted}{python}\nprint(1)\n\\end{minted}"), None)
+        b"\\begin{minted}{python}\nprint(1)\n\\end{minted}"))
     assert nd == 0 and text == "print(1)"
     # same-name nesting inside a skipped env resolves by depth count
     nd, text = L._extract_latex(_doc(
         b"x\\begin{comment}a\\begin{comment}b\\end{comment}c"
-        b"\\end{comment}y"), None)
+        b"\\end{comment}y"))
     assert nd == 1 and text == "xy"
 
 
@@ -80,7 +80,7 @@ def test_latex_commands_and_accents():
     nd, text = L._extract_latex(_doc(
         rb"\href{https://e.org}{the paper} \url{https://u.org}"
         rb" \textbf{bold} \item one \\ two \par three"
-        rb" na\"ive \'etude \`a \^o \~nata"), None)
+        rb" na\"ive \'etude \`a \^o \~nata"))
     assert nd == 0
     assert text == ("the paper https://u.org bold\n- one\ntwo\n\n"
                     "three naïve étude à ô ñata")
@@ -88,7 +88,7 @@ def test_latex_commands_and_accents():
 
 def test_latex_item_and_sections_start_lines():
     nd, text = L._extract_latex(_doc(
-        rb"\section*{A} body \subsection[short]{B} more"), None)
+        rb"\section*{A} body \subsection[short]{B} more"))
     assert text == "A body\nB more"
 
 
@@ -97,38 +97,39 @@ def test_latex_skip_arg_commands():
         rb"\includegraphics[width=2cm]{fig.png} x"
         rb" \newcommand{\foo}[1]{bar #1} y"
         rb" \setlength{\parskip}{2em} z"
-        rb" \def\brand{Acme} w"), None)
+        rb" \def\brand{Acme} w"))
     assert text == "x y z w"
 
 
-def test_latex_malformed_and_budget():
+def test_latex_malformed_and_budget(monkeypatch):
     with pytest.raises(ValueError, match="not a latex"):
-        L._extract_latex(b"hello", None)
+        L._extract_latex(b"hello")
     with pytest.raises(ValueError, match="preamble without"):
-        L._extract_latex(b"\\documentclass{a} x", None)
+        L._extract_latex(b"\\documentclass{a} x")
     with pytest.raises(ValueError, match="missing"):
         L._extract_latex(
-            b"\\documentclass{a}\\begin{document} x", None)
+            b"\\documentclass{a}\\begin{document} x")
     with pytest.raises(ValueError, match="unterminated math"):
-        L._extract_latex(_doc(b"a $x b"), None)
+        L._extract_latex(_doc(b"a $x b"))
     with pytest.raises(ValueError, match="unterminated environment"):
-        L._extract_latex(_doc(b"\\begin{equation} x"), None)
+        L._extract_latex(_doc(b"\\begin{equation} x"))
     with pytest.raises(ValueError, match="trailing backslash"):
         # a truncated body ending mid-escape hits the scanner before
         # the missing-terminator check
         L._extract_latex(
-            b"\\documentclass{a}\\begin{document}x\\", None)
+            b"\\documentclass{a}\\begin{document}x\\")
     with pytest.raises(ValueError, match="empty"):
-        L._extract_latex(b"", None)
+        L._extract_latex(b"")
+    monkeypatch.setattr(L, "DECODE_BYTE_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="budget"):
-        L._extract_latex(_doc(b"y" * 5000), 100)
+        L._extract_latex(_doc(b"y" * 5000))
 
 
 def test_latex_comments_strip_but_escaped_percent_stays():
     # a comment eats its newline (TeX joins the lines), so the
     # surviving text flows together
     nd, text = L._extract_latex(_doc(
-        b"keep % drop this\nnext 100\\% sure % more\nend"), None)
+        b"keep % drop this\nnext 100\\% sure % more\nend"))
     assert text == "keep next 100% sure end"
 
 
@@ -136,7 +137,7 @@ def test_latex_math_ignores_comment_dollars():
     # a % inside math comments out the rest of ITS line, so a $ after
     # it does not close the segment; the one on the next line does
     nd, text = L._extract_latex(_doc(
-        b"a $x % not-close $\n y$ b"), None)
+        b"a $x % not-close $\n y$ b"))
     assert nd == 1
     assert text == "a b"
 
@@ -171,28 +172,27 @@ def test_latex_review_fixes_r14():
     """The third-wave self-review findings, pinned (ADVICE r14)."""
     # 1: tabular column specs / minipage widths must not leak
     nd, text = L._extract_latex(_doc(
-        b"\\begin{tabular}{ll} a & b \\\\ c & d \\end{tabular}"), None)
+        b"\\begin{tabular}{ll} a & b \\\\ c & d \\end{tabular}"))
     assert text == "a b\nc d"
     nd, text = L._extract_latex(_doc(
         b"\\begin{minipage}[t]{0.5\\textwidth}inside"
-        b"\\end{minipage}"), None)
+        b"\\end{minipage}"))
     assert text == "inside"
     # 2: \url is verbatim-like — %/~ inside never interpreted
     nd, text = L._extract_latex(_doc(
-        b"see \\url{http://a.com/~u/x%7E} end"), None)
+        b"see \\url{http://a.com/~u/x%7E} end"))
     assert text == "see http://a.com/~u/x%7E end"
     # 3: a commented-out \end inside a dropped environment must not
     # terminate it (no math source may leak)
     nd, text = L._extract_latex(_doc(
         b"a\n\\begin{equation}\nx = 1 % \\end{equation}\ny = 2\n"
-        b"\\end{equation}\nb"), None)
+        b"\\end{equation}\nb"))
     assert nd == 1 and text == "a\n\nb"
     # 4: the body terminator is found by the scanner, not a textual
     # pre-slice — commented or verbatim-quoted \end{document} ignored
     nd, text = L._extract_latex(_doc(
-        b"hello % \\end{document}\nworld"), None)
+        b"hello % \\end{document}\nworld"))
     assert text == "hello world"
     nd, text = L._extract_latex(_doc(
-        b"\\begin{verbatim}\\end{document} shown\\end{verbatim} t"),
-        None)
+        b"\\begin{verbatim}\\end{document} shown\\end{verbatim} t"))
     assert text == "\\end{document} shown\nt"

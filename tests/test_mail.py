@@ -66,20 +66,21 @@ def test_eml_multipart_alternative_prefers_plain(spark):
 def test_eml_html_only_strips():
     raw = (b"Subject: h\r\nContent-Type: text/html; charset=utf-8\r\n"
            b"\r\n<html><body><p>only &#72;tml</p></body></html>")
-    row = M._extract_eml(raw, None)
+    row = M._extract_eml(raw)
     assert row["text"] == "only Html"
     # alternative with ONLY an html arm falls back to it
     alt = (b"Subject: h\r\n"
            b"Content-Type: multipart/alternative; boundary=B\r\n\r\n"
            b"--B\r\nContent-Type: text/html\r\n\r\n<p>alt html</p>\r\n"
            b"--B--\r\n")
-    assert M._extract_eml(alt, None)["text"] == "alt html"
+    assert M._extract_eml(alt)["text"] == "alt html"
 
 
-def test_eml_budget_refuses():
+def test_eml_budget_refuses(monkeypatch):
     raw = (b"Subject: big\r\n\r\n" + b"x" * 5000)
+    monkeypatch.setattr(M, "DECODE_BYTE_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="budget"):
-        M._extract_eml(raw, 100)
+        M._extract_eml(raw)
 
 
 def test_mbox_split_and_bridge(spark):

@@ -39,7 +39,7 @@ def test_markdown_block_constructs():
     r = M._extract_markdown(
         b"Head\n====\n\n> quote\n> > nested\n\n---\n\n"
         b"[ref]: https://def.org\n"
-        b"## Sub ##\nbody\n", None)
+        b"## Sub ##\nbody\n")
     assert r["text"] == "Head\n\nquote\nnested\n\nSub\nbody"
     # 'Head' stays a plain prose line (its setext underline drops);
     # only the ATX ## counts as a heading
@@ -50,14 +50,14 @@ def test_markdown_setext_vs_thematic():
     # --- under a paragraph is a setext underline (drops); --- after
     # a blank line is a thematic break (drops too) — but a ---
     # directly after a bullet stays a break, never list text
-    r = M._extract_markdown(b"para\n---\n\ntext\n\n---\nend", None)
+    r = M._extract_markdown(b"para\n---\n\ntext\n\n---\nend")
     assert r["text"] == "para\n\ntext\n\nend"
 
 
 def test_markdown_inline_passes():
     r = M._extract_markdown(
         b"***both*** __strong__ _em_ snake_case a_b_c "
-        b"<b>tag</b> &amp; <https://a.io> `x > y`", None)
+        b"<b>tag</b> &amp; <https://a.io> `x > y`")
     # tag markup strips but its inner text stays
     assert r["text"] == ("both strong em snake_case a_b_c "
                          "tag & https://a.io x > y")
@@ -66,27 +66,28 @@ def test_markdown_inline_passes():
 
 def test_markdown_fences():
     # unterminated fence: rest of input is code (CommonMark)
-    r = M._extract_markdown(b"a\n```\ncode **raw**\nmore", None)
+    r = M._extract_markdown(b"a\n```\ncode **raw**\nmore")
     assert r["text"] == "a\ncode **raw**\nmore"
     assert r["n_code_blocks"] == 1
     # a shorter closing fence does not close; a longer one does
     r = M._extract_markdown(
-        b"````\ncode\n```\nstill\n`````\nafter", None)
+        b"````\ncode\n```\nstill\n`````\nafter")
     assert r["text"] == "code\n```\nstill\nafter"
     # tilde fence with info string
-    r = M._extract_markdown(b"~~~text\n# not a heading\n~~~\n", None)
+    r = M._extract_markdown(b"~~~text\n# not a heading\n~~~\n")
     assert r["text"] == "# not a heading"
     assert r["n_headings"] == 0
 
 
-def test_markdown_never_refuses_text():
+def test_markdown_never_refuses_text(monkeypatch):
     # markdown has no invalid byte sequence: arbitrary bytes extract
-    r = M._extract_markdown(bytes(range(1, 256)), None)
+    r = M._extract_markdown(bytes(range(1, 256)))
     assert r["format"] == "markdown"
     with pytest.raises(ValueError, match="empty"):
-        M._extract_markdown(b"", None)
+        M._extract_markdown(b"")
+    monkeypatch.setattr(M, "DECODE_BYTE_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="budget"):
-        M._extract_markdown(b"x" * 500, 100)
+        M._extract_markdown(b"x" * 500)
 
 
 def test_markdown_to_documents_bridge(spark):
@@ -102,27 +103,27 @@ def test_markdown_review_fixes_r14():
     X = M._extract_markdown
     # 1: intraword __ never unwraps; space-delimited __x__ is strong
     # emphasis per CommonMark (unwraps); code-span dunders are safe
-    r = X(b"call `__init__` on my__var__x or __bold__", None)
+    r = X(b"call `__init__` on my__var__x or __bold__")
     assert r["text"] == "call __init__ on my__var__x or bold"
     # 2: fenced code inside a blockquote unquotes at the opener's
     # depth, stays raw, and counts
-    r = X(b"> ```python\n> x = '**a**'\n> ```\n", None)
+    r = X(b"> ```python\n> x = '**a**'\n> ```\n")
     assert r["text"] == "x = '**a**'" and r["n_code_blocks"] == 1
     # ... while '>' inside UNQUOTED code survives untouched
-    assert X(b"```\n> prompt\n```\n", None)["text"] == "> prompt"
+    assert X(b"```\n> prompt\n```\n")["text"] == "> prompt"
     # 3: CRLF normalizes; a thematic break with \r still drops
-    assert X(b"para\r\n\r\n***\r\nafter\r\n", None)["text"] \
+    assert X(b"para\r\n\r\n***\r\nafter\r\n")["text"] \
         == "para\n\nafter"
     # 4: code spans are literal — no tag strip, no link unwrap/count,
     # no entity decode inside
-    r = X(b"use `[a](b)` and `<br>` and `&amp;` here", None)
+    r = X(b"use `[a](b)` and `<br>` and `&amp;` here")
     assert r["text"] == "use [a](b) and <br> and &amp; here"
     assert r["n_links"] == 0
     # 5: only a strict ref def (optional QUOTED title) drops
     r = X(b"[note]: this stays as prose\n"
-          b"[ref]: https://real.def \"title\"\n", None)
+          b"[ref]: https://real.def \"title\"\n")
     assert r["text"] == "[note]: this stays as prose"
     # 6: indented code after a blank line stays raw
-    r = X(b"para\n\n    code with **stars** and [a](b)\n", None)
+    r = X(b"para\n\n    code with **stars** and [a](b)\n")
     assert r["text"] == "para\n\n    code with **stars** and [a](b)"
     assert r["n_links"] == 0

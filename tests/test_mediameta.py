@@ -438,7 +438,7 @@ def test_triage_decode_images_routes_before_decoding(spark):
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in mediameta.triage_decode_images(
-        blobs, max_pixels=1_000_000
+        blobs
     ).collect()}
     assert rows[1].route == "decoded" and rows[1].format == "png"
     assert (rows[1].mean_r, rows[1].mean_g, rows[1].mean_b) == \
@@ -455,8 +455,10 @@ def test_triage_decode_images_routes_before_decoding(spark):
         rows[5].error_kind == "corrupt"
     assert (rows[5].width, rows[5].height) == (4, 2)  # probe survived
     # routed-out rows carry the router's own refusal text
-    assert rows[2].error == ("probed ppm 40000x30000 = 1200000000 px over "
-                             "the 1000000 px triage budget")
+    assert rows[2].error == (
+        "probed ppm 40000x30000 exceeds the triage pixel budget "
+        "(1200000000 > 4000000); route the payload to a codec-library "
+        "executor")
     assert rows[3].error.startswith("probed webp 320x240: no stdlib codec")
 
 

@@ -12,6 +12,7 @@ requantization formula independently (encode: compress by
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -264,7 +265,7 @@ def test_id3v2_skip_and_trailing_id3v1():
     assert out.shape == (12, 1, 32)
 
 
-def test_refusals():
+def test_refusals(monkeypatch):
     g = _sine_groups(12, 1, _ALLOC_MIX, seed=5)
     good, _ = _frame_l1(g, alloc_bands=_ALLOC_MIX)
     # Layer III / II / reserved
@@ -298,8 +299,9 @@ def test_refusals():
         mpegaudio.decode_layer1(good[:-40])
     with pytest.raises(ValueError, match="no frame header|frame sync"):
         mpegaudio.decode_layer1(b"\x00\x11\x22\x33")
+    monkeypatch.setattr(mpegaudio, "MPEG_SAMPLE_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="sample budget"):
-        mpegaudio.decode_layer1(good, sample_budget=100)
+        mpegaudio.decode_layer1(good)
 
 
 def test_forbidden_scalefactor():
@@ -387,11 +389,13 @@ def test_triage_decode_audio_routes(spark):
     # unknown container = 'unsupported' (a codec library may read it),
     # matching _parse_audio_meta's routing
     assert out[5]["error_kind"] == "unsupported"
-    # budget: probe-declared duration routes out without decoding
+    # budget: probe-declared duration routes out without decoding — a
+    # data chunk forged to declare 4 GiB is ~2.1G samples at 8 kHz mono
+    forged = bytearray(wav)
+    struct.pack_into("<I", forged, wav.index(b"data") + 4, 0xFFFFFFFF)
     tiny = mediameta.triage_decode_audio(
-        spark.createDataFrame([(9, bytearray(wav))],
-                              "doc_id long, payload binary"),
-        max_samples=8).collect()[0]
+        spark.createDataFrame([(9, forged)],
+                              "doc_id long, payload binary")).collect()[0]
     assert tiny["route"] == "oversized"
     assert tiny["error_kind"] == "unsupported"
 
@@ -787,7 +791,7 @@ def test_l2_crc_protected_and_mismatch():
         mpegaudio.decode_layer2(bytes(bad))
 
 
-def test_l2_refusals_and_dispatch():
+def test_l2_refusals_and_dispatch(monkeypatch):
     table = _l2_table_rows(192, 1, 48000)
     g = _l2_sine(36, 1, _L2_ALLOC_A, table, seed=15)
     l2, _ = _frame_l2(g, rate=48000, bitrate=192, alloc_idx=_L2_ALLOC_A)
@@ -814,8 +818,10 @@ def test_l2_refusals_and_dispatch():
         mpegaudio.decode_layer2(bytes(ff))
     with pytest.raises(ValueError, match="truncated frame|exhausted"):
         mpegaudio.decode_layer2(l2[:-40])
-    with pytest.raises(NotImplementedError, match="sample budget"):
-        mpegaudio.decode_layer2(l2, sample_budget=100)
+    with monkeypatch.context() as m:
+        m.setattr(mpegaudio, "MPEG_SAMPLE_BUDGET", 100)
+        with pytest.raises(NotImplementedError, match="sample budget"):
+            mpegaudio.decode_layer2(l2)
     # MPEG-2.5 version bits (r13: MPEG-2 LSF itself decodes now)
     v2 = bytearray(l2)
     v2[1] = 0xE0 | (0 << 3) | (2 << 1) | 1

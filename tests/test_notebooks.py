@@ -53,9 +53,9 @@ def test_ipynb_outputs_opt_in():
         {"output_type": "stream", "text": "done\n"},
         {"output_type": "display_data", "data": {"image/png": "BB"}},
     ]}], language_info={"name": "python"})
-    off = N._extract_ipynb(nb, None, False)
+    off = N._extract_ipynb(nb, False)
     assert off["text"] == "```python\n1+1\n```"
-    on = N._extract_ipynb(nb, None, True)
+    on = N._extract_ipynb(nb, True)
     assert on["text"] == "```python\n1+1\n```\n\n2\n\ndone"
 
 
@@ -68,7 +68,7 @@ def test_ipynb_nbformat3_worksheets_and_heading():
             {"cell_type": "code", "input": "x = 1", "outputs": []},
         ]}],
     }).encode()
-    r = N._extract_ipynb(nb, None, False)
+    r = N._extract_ipynb(nb, False)
     assert r["language"] is None
     assert r["text"] == "## Section\n\n```code\nx = 1\n```"
     assert r["n_cells"] == 2
@@ -76,41 +76,41 @@ def test_ipynb_nbformat3_worksheets_and_heading():
 
 def test_ipynb_malformed_and_unsupported():
     with pytest.raises(ValueError, match="not JSON"):
-        N._extract_ipynb(b"{", None, False)
+        N._extract_ipynb(b"{", False)
     with pytest.raises(ValueError, match="top level"):
-        N._extract_ipynb(b"[1]", None, False)
+        N._extract_ipynb(b"[1]", False)
     with pytest.raises(ValueError, match="missing cells"):
-        N._extract_ipynb(b'{"nbformat": 4}', None, False)
+        N._extract_ipynb(b'{"nbformat": 4}', False)
     with pytest.raises(ValueError, match="missing worksheets"):
-        N._extract_ipynb(b'{"nbformat": 3}', None, False)
+        N._extract_ipynb(b'{"nbformat": 3}', False)
     with pytest.raises(NotImplementedError, match="unsupported"):
-        N._extract_ipynb(b'{"nbformat": 5, "cells": []}', None, False)
+        N._extract_ipynb(b'{"nbformat": 5, "cells": []}', False)
     with pytest.raises(ValueError, match="non-string source line"):
         N._extract_ipynb(
-            _nb4([{"cell_type": "markdown", "source": [1]}]),
-            None, False)
+            _nb4([{"cell_type": "markdown", "source": [1]}]), False)
     with pytest.raises(ValueError, match="cell is not"):
-        N._extract_ipynb(b'{"nbformat": 4, "cells": [7]}', None,
+        N._extract_ipynb(b'{"nbformat": 4, "cells": [7]}',
                          False)
     with pytest.raises(ValueError, match="empty"):
-        N._extract_ipynb(b"", None, False)
+        N._extract_ipynb(b"", False)
 
 
-def test_ipynb_budget():
+def test_ipynb_budget(monkeypatch):
     # the payload-size gate fires before json parsing; the emit-side
     # budget is defense-in-depth (flattened text is always smaller
     # than the JSON that carried it, so the input gate is the one
     # adversaries can reach)
     big = _nb4([{"cell_type": "markdown", "source": "x" * 500}])
+    monkeypatch.setattr(N, "DECODE_BYTE_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="payload exceeds"):
-        N._extract_ipynb(big, 100, False)
+        N._extract_ipynb(big, False)
 
 
 def test_ipynb_missing_nbformat_defaults_to_cells():
     # some exporters omit nbformat; a top-level cells list is v4
     nb = json.dumps({"cells": [
         {"cell_type": "markdown", "source": "hello"}]}).encode()
-    assert N._extract_ipynb(nb, None, False)["text"] == "hello"
+    assert N._extract_ipynb(nb, False)["text"] == "hello"
 
 
 def test_ipynb_to_documents_bridge_and_cli(spark, capsys):
@@ -142,5 +142,5 @@ def test_ipynb_output_ansi_stripped():
         {"output_type": "stream",
          "text": "\x1b[31mError\x1b[0m: bad\n50%\r"},
     ]}])
-    on = N._extract_ipynb(nb, None, True)
+    on = N._extract_ipynb(nb, True)
     assert on["text"].endswith("Error: bad\n50%")

@@ -11,7 +11,7 @@ import pytest
 
 from youtube_api_data_etl_automation_spark.operators import archives
 
-from tests.test_archives import _blob_df, _zip
+from tests.test_archives import _blob_df, _declaring, _zip
 
 
 def _ooxml_zip(members: dict[str, bytes]) -> bytes:
@@ -85,7 +85,7 @@ def test_pptx_slide_numeric_order():
         "ppt/slides/slide10.xml": b"<a:p><a:r><a:t>ten</a:t></a:r></a:p>",
         "ppt/slides/slide2.xml": b"<a:p><a:r><a:t>two</a:t></a:r></a:p>",
     })
-    n_slides, n_paras, text = archives._pptx_extract_text(raw, None)
+    n_slides, n_paras, text = archives._pptx_extract_text(raw)
     assert (n_slides, n_paras) == (2, 2)
     assert text == "two\ften"
 
@@ -127,21 +127,20 @@ def test_xlsx_no_shared_strings_and_bad_index():
     """A workbook without sharedStrings.xml works for numeric cells;
     an out-of-range shared index is malformed, not a crash."""
     raw = _xlsx([b'<row><c><v>3.5</v></c></row>'])
-    assert archives._xlsx_extract_text(raw, None) == (1, 1, "3.5")
+    assert archives._xlsx_extract_text(raw) == (1, 1, "3.5")
     bad = _xlsx([b'<row><c t="s"><v>9</v></c></row>'], shared=[])
     with pytest.raises(ValueError, match="out of range"):
-        archives._xlsx_extract_text(bad, None)
+        archives._xlsx_extract_text(bad)
 
 
 def test_office_budget_refuses_before_inflation(spark):
-    big = _pptx([b"<a:p><a:r><a:t>" + b"y" * 5000 + b"</a:t></a:r></a:p>"])
-    row = archives.pptx_text(_blob_df(spark, [(1, big)]),
-                             byte_budget=100).collect()[0]
+    over = archives.DECODE_BYTE_BUDGET + 1
+    big = _declaring(_pptx([b"<a:p><a:r><a:t>y</a:t></a:r></a:p>"]), over)
+    row = archives.pptx_text(_blob_df(spark, [(1, big)])).collect()[0]
     assert row["error_kind"] == "unsupported"
     assert "budget" in row["error"]
-    bigx = _xlsx([b"<row><c><v>" + b"9" * 5000 + b"</v></c></row>"])
-    rowx = archives.xlsx_text(_blob_df(spark, [(1, bigx)]),
-                              byte_budget=100).collect()[0]
+    bigx = _declaring(_xlsx([b"<row><c><v>9</v></c></row>"]), over)
+    rowx = archives.xlsx_text(_blob_df(spark, [(1, bigx)])).collect()[0]
     assert rowx["error_kind"] == "unsupported"
 
 
@@ -166,7 +165,7 @@ def test_xlsx_negative_shared_index_is_malformed():
     bad = _xlsx([b'<row><c t="s"><v>-1</v></c></row>'],
                 shared=[b"<t>only</t>"])
     with pytest.raises(ValueError, match="out of range"):
-        archives._xlsx_extract_text(bad, None)
+        archives._xlsx_extract_text(bad)
 
 
 def _odf(content_body: bytes, mimetype: bytes | None =
@@ -217,9 +216,9 @@ def test_odf_text_extraction(spark):
 
 
 def test_odf_budget_and_documents_bridge(spark):
-    big = _odf(b"<text:p>" + b"z" * 5000 + b"</text:p>")
-    row = archives.odf_text(_blob_df(spark, [(1, big)]),
-                            byte_budget=100).collect()[0]
+    big = _declaring(_odf(b"<text:p>z</text:p>"),
+                     archives.DECODE_BYTE_BUDGET + 1)
+    row = archives.odf_text(_blob_df(spark, [(1, big)])).collect()[0]
     assert row["error_kind"] == "unsupported"
     assert "budget" in row["error"]
     ok = _odf(b"<text:p>OpenDocument body text</text:p>")
@@ -289,37 +288,39 @@ def test_epub_structure_errors_and_bridge(spark):
                    manifest_extra=b'<item id="gone" href="no.xhtml" '
                    b'media-type="application/xhtml+xml"/>')
     with pytest.raises(ValueError, match="spine chapter"):
-        archives._epub_extract_text(broken, None)
+        archives._epub_extract_text(broken)
     # non-xhtml spine entries (covers, images) skip silently
     ok = _epub([b"<p>body</p>"],
                spine_extra=b'<itemref idref="img"/>',
                manifest_extra=b'<item id="img" href="cover.png" '
                b'media-type="image/png"/>')
-    assert archives._epub_extract_text(ok, None) == (1, "body")
+    assert archives._epub_extract_text(ok) == (1, "body")
     got = archives.epub_text(
         _blob_df(spark, [(51, _epub([b"<p>ebook body text</p>"]))])).collect()
     assert got[0]["error"] is None
     assert got[0]["text"] == "ebook body text"
 
 
-def test_odf_second_review_fixes():
+def test_odf_second_review_fixes(monkeypatch):
     """r14 review fixes: nested text:p keeps the outer tail, text:s
     run-length bombs refuse before allocation, surrogate numeric refs
     in epub/eml bodies become U+FFFD."""
     nested = _odf(
         b"<office:text><text:p>A <draw:frame><text:p>inner</text:p>"
         b"</draw:frame> B tail</text:p></office:text>")
-    kind, n_paras, text = archives._odf_extract_text(nested, None)
+    kind, n_paras, text = archives._odf_extract_text(nested)
     assert text == "A inner\nB tail"
     bomb = _odf(b'<office:text><text:p>x<text:s text:c="200000000"/>'
                 b"y</text:p></office:text>")
     with pytest.raises(ValueError, match="run-length"):
-        archives._odf_extract_text(bomb, 1 << 26)
+        archives._odf_extract_text(bomb)
     many = _odf(b"<office:text><text:p>"
                 + b'<text:s text:c="60000"/>' * 40
                 + b"</text:p></office:text>")
-    with pytest.raises(ValueError, match="cumulative"):
-        archives._odf_extract_text(many, 100_000)
+    with monkeypatch.context() as m:
+        m.setattr(archives, "DECODE_BYTE_BUDGET", 100_000)
+        with pytest.raises(ValueError, match="cumulative"):
+            archives._odf_extract_text(many)
     # surrogate numeric ref -> U+FFFD, encodable
     assert archives._html_unescape("&#55296;ok") == "�ok"
     assert archives._html_unescape("&#xD800;ok") == "�ok"
@@ -339,4 +340,4 @@ def test_epub_single_quoted_attributes():
         "ch.xhtml": b"<html><body><p>quoted body</p></body></html>",
     }
     raw = _ooxml_zip(members)
-    assert archives._epub_extract_text(raw, None) == (1, "quoted body")
+    assert archives._epub_extract_text(raw) == (1, "quoted body")

@@ -372,25 +372,42 @@ def test_decode_png_malformed_refuses_with_valueerror():
         )
 
 
+def _png_from_scanlines(w: int, h: int, scanlines: bytes) -> bytes:
+    """An 8-bit greyscale PNG around already-filtered ``scanlines`` (one
+    filter byte plus ``w`` samples per row), for sizes the pixel-list
+    builder :func:`_png` is too slow for."""
+    import struct
+    import zlib
+
+    def chunk(ctype, body):
+        return struct.pack(">I", len(body)) + ctype + body \
+            + struct.pack(">I", zlib.crc32(ctype + body))
+
+    return b"\x89PNG\r\n\x1a\n" \
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)) \
+        + chunk(b"IDAT", zlib.compress(scanlines, 9)) + chunk(b"IEND", b"")
+
+
 def test_decode_png_checks_sizes_before_allocating():
-    """A header that declares 2^31 rows over a few IDAT bytes, and a small
-    deflate bomb behind a 4x3 header, are both refused with a DECODE_ERRORS
-    class without allocating the declared size: the inflate is capped one
-    byte past the header's size, and the pixel buffer is allocated only
-    after the inflated length matches. Every other image decoder refuses
-    its oversized header the same way: BMP, PPM and TIFF declare 2^31
-    rows, GIF and both JPEG flavors 65535x65535 (16-bit dimensions), VP8L
-    its 14-bit maximum of 16384x16384 — the JPEG pair asked numpy for a
-    32 GiB plane / coefficient array before the frame-size check at SOF.
-    The decoder modules are imported up front: the first import of
-    mediameta (which the TIFF IFD walk loads lazily) allocates ~5 MB of
-    module state, once per process, not per payload."""
+    """A header that declares 2^31 rows over a few IDAT bytes, a 35 KB
+    6000x6000 greyscale PNG, and a small deflate bomb behind a 4x3
+    header are all refused with a DECODE_ERRORS class without allocating
+    the declared size: the pixel budget is checked against the header
+    before the inflate, the inflate is capped one byte past the header's
+    size, and the pixel buffer is allocated only after the inflated
+    length matches. Every other image decoder refuses its oversized
+    header the same way: BMP, PPM, TIFF and a standalone JBIG2 page
+    declare 2^31 rows, GIF and both JPEG flavors 65535x65535 (16-bit
+    dimensions), VP8L its 14-bit maximum of 16384x16384 — the JPEG pair
+    asked numpy for a 32 GiB plane / coefficient array before the
+    frame-size check at SOF. The decoder modules are imported up front,
+    so the peak measures the payload, not a first import."""
     import struct
     import tracemalloc
     import zlib
 
     from youtube_api_data_etl_automation_spark.operators import (  # noqa: F401
-        gif, jpeg, mediameta, tiff, vp8l,
+        gif, jbig2, jpeg, tiff, vp8l,
     )
 
     ok = _png([[(1, 2, 3)] * 4] * 3)
@@ -410,6 +427,8 @@ def test_decode_png_checks_sizes_before_allocating():
     bomb = with_chunk(ok, idat_at, b"IDAT",
                       zlib.compress(b"\x00" * (64 << 20), 9))
     assert len(bomb) < 100_000
+    wide = _png_from_scanlines(6000, 6000, bytes(6001 * 6000))
+    assert len(wide) < 40_000
 
     bmp = b"BM" + struct.pack("<IHHI", 70, 0, 0, 54) + struct.pack(
         "<IiIHHIIiiII", 40, 1, 1 << 31, 1, 24, 0, 16, 0, 0, 0, 0) \
@@ -427,6 +446,9 @@ def test_decode_png_checks_sizes_before_allocating():
                     *((v,) if ft == 4 else (v, 0)))
         for tag, ft, v in tags) + struct.pack("<I", 0)
     tif = b"II*\x00" + struct.pack("<I", 16) + b"\x00" * 8 + ifd
+    # sequential JBIG2 file holding one page-information segment
+    jb2 = b"\x97JB2\r\n\x1a\n\x03" + struct.pack(">IBBBI", 0, 48, 0, 1, 19) \
+        + struct.pack(">IIIIBH", 41, 1 << 31, 0, 0, 0, 0)
     chunk = b"\x2f" + struct.pack("<I", 16383 | 16383 << 14) + b"\x00" * 8
     webp = b"RIFF" + struct.pack("<I", 12 + len(chunk)) + b"WEBPVP8L" \
         + struct.pack("<I", len(chunk)) + chunk
@@ -444,11 +466,13 @@ def test_decode_png_checks_sizes_before_allocating():
             + b"\x00" * 8 + b"\xff\xd9"
 
     cases = [
-        (tall, "expected"), (bomb, "expected"),
+        (tall, "PNG 4x2147483648 exceeds"),
+        (wide, "PNG 6000x6000 exceeds"), (bomb, "expected"),
         (bmp, "BMP 1x2147483648 exceeds"),
         (ppm, "buffer is smaller"),
         (gif_, "GIF exceeds the pixel budget"),
         (tif, "TIFF 1x2147483648 exceeds"),
+        (jb2, "page 41x2147483648 exceeds"),
         (webp, "VP8L 16384x16384 exceeds"),
         (jpeg_(0xC0, 63), "JPEG 65535x65535 exceeds"),
         (jpeg_(0xC2, 0), "JPEG 65535x65535 exceeds"),
@@ -464,11 +488,11 @@ def test_decode_png_checks_sizes_before_allocating():
         assert peak < 4 << 20, (match, peak)
 
 
-def test_decode_png_slow_filter_budget(spark):
+def test_decode_png_slow_filter_budget(spark, monkeypatch):
     """The Average/Paeth recurrence is the one pure-Python loop in PNG
     decode; a wide wall-to-wall-Paeth image must (a) still decode
     byte-exactly under the default 2 MB budget in bounded time, (b)
-    refuse with NotImplementedError when it exceeds a caller budget, and
+    refuse with NotImplementedError when it exceeds the budget, and
     (c) land in quarantine as error_kind='unsupported' (recoverable — a
     codec library would decode it), not 'corrupt'."""
     import time
@@ -490,21 +514,21 @@ def test_decode_png_slow_filter_budget(spark):
     # "did not fall off a cliff" bound, not a throughput claim
     assert elapsed < 5.0
 
-    # budget exceeded -> honest refusal naming the knob
-    with pytest.raises(NotImplementedError, match="byte budget"):
-        multimodal._decode_rgb(payload, slow_filter_budget=1000)
-    # budget disabled -> decodes regardless
-    fmt2, rgb2 = multimodal._decode_rgb(payload, slow_filter_budget=None)
-    assert np.array_equal(rgb2, rgb)
-    # None/Sub/Up rows never charge the budget
-    cheap = _png(pixels[:2], filters=[1, 2])
-    fmt3, _ = multimodal._decode_rgb(cheap, slow_filter_budget=1)
-    assert fmt3 == "png"
+    with monkeypatch.context() as m:
+        # budget exceeded -> honest refusal naming the budget
+        m.setattr(multimodal, "PNG_SLOW_FILTER_BYTE_BUDGET", 1000)
+        with pytest.raises(NotImplementedError, match="byte budget"):
+            multimodal._decode_rgb(payload)
+        # None/Sub/Up rows never charge the budget
+        m.setattr(multimodal, "PNG_SLOW_FILTER_BYTE_BUDGET", 1)
+        cheap = _png(pixels[:2], filters=[1, 2])
+        fmt3, _ = multimodal._decode_rgb(cheap)
+        assert fmt3 == "png"
 
-    # quarantine routing: unsupported (budget), not corrupt
-    rows = multimodal.decode_image(
-        _blob_df(spark, payload), slow_filter_budget=1000
-    ).collect()
+    # quarantine routing: unsupported (budget), not corrupt — 2000x1001
+    # Paeth rows carry 2,002,000 filtered bytes, one row past the budget
+    over = _png_from_scanlines(2000, 1001, (b"\x04" + bytes(2000)) * 1001)
+    rows = multimodal.decode_image(_blob_df(spark, over)).collect()
     assert rows[0].error_kind == "unsupported"
     assert "byte budget" in rows[0].error
 
@@ -723,7 +747,7 @@ def test_decode_wav_float_pcm_scaled(spark):
         assert abs(r.rms - (sq / 4) ** 0.5) < 1e-6
 
 
-def test_decode_wav_ima_adpcm_exact(spark):
+def test_decode_wav_ima_adpcm_exact(spark, monkeypatch):
     """r9: IMA ADPCM decodes byte-exactly against an independent
     reference encoder's reconstruction — mono multi-block and stereo
     interleave; the fact chunk trims block padding; an oversized payload
@@ -760,8 +784,10 @@ def test_decode_wav_ima_adpcm_exact(spark):
     assert r.rms == (sq / 5) ** 0.5
 
     # budget refusal is recoverable 'unsupported'
-    with pytest.raises(NotImplementedError, match="sample budget"):
-        multimodal._decode_pcm(payload, adpcm_sample_budget=3)
+    with monkeypatch.context() as m:
+        m.setattr(multimodal, "DECODE_SAMPLE_BUDGET", 3)
+        with pytest.raises(NotImplementedError, match="sample budget"):
+            multimodal._decode_pcm(payload)
     # malformed block geometry is corrupt
     with pytest.raises(ValueError, match="block_align"):
         multimodal._decode_pcm(
@@ -1489,7 +1515,7 @@ def _ms_adpcm_encode(ch_samples, block_align, pred_idx=0):
     return bytes(data), expected
 
 
-def test_decode_wav_ms_adpcm_exact(spark):
+def test_decode_wav_ms_adpcm_exact(spark, monkeypatch):
     """r9: Microsoft ADPCM (format 2) decodes byte-exactly against an
     independent reference encoder — mono multi-block and stereo
     high-nibble-first interleave; malformed geometry refuses."""
@@ -1521,5 +1547,6 @@ def test_decode_wav_ms_adpcm_exact(spark):
             _wav(8000, [(0,)], fmt_code=2, bits=4, block_align=5,
                  raw_data=b"\x00" * 10)
         )
+    monkeypatch.setattr(multimodal, "DECODE_SAMPLE_BUDGET", 2)
     with pytest.raises(NotImplementedError, match="sample budget"):
-        multimodal._decode_pcm(payload, adpcm_sample_budget=2)
+        multimodal._decode_pcm(payload)

@@ -188,14 +188,23 @@ def test_no_module_imports_private_versioned_names():
 
 _TRIAGE_ROUTERS = {("operators/mediameta.py", "triage_decode_images"),
                    ("operators/mediameta.py", "triage_decode_audio")}
+# the sequence packer's token budget shapes output; it refuses no input
+_TOKEN_BUDGETS = {("operators/packing.py", "pack_sequences", "budget"),
+                  ("corpus.py", "curate_corpus", "pack_budget")}
+
+
+def _is_budget(arg: str) -> bool:
+    return arg in ("budget", "max_pixels", "max_samples") or \
+        arg.endswith("_budget")
 
 
 def test_one_quarantine_contract_for_payload_operators():
     """Every payload operator returns its quarantine shape through the one
     harness in operators/multimodal.py: no package function takes an
-    ``errors`` mode, and no other module turns DECODE_ERRORS into rows
-    itself — except the triage routers, whose route column records which
-    stage (probe or decode) refused."""
+    ``errors`` mode or a decode budget (budgets are module constants,
+    refused through ``multimodal.check_budget``), and no other module
+    turns DECODE_ERRORS into rows itself — except the triage routers,
+    whose route column records which stage (probe or decode) refused."""
     pkg_dir = os.path.join(ROOT, _PKG)
     offenders = []
     for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"),
@@ -207,9 +216,12 @@ def test_one_quarantine_contract_for_payload_operators():
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                  ast.Lambda)):
                 a = node.args
-                if any(p.arg == "errors" for p in
-                       a.posonlyargs + a.args + a.kwonlyargs):
-                    offenders.append(f"{rel}:{node.lineno} errors parameter")
+                for p in a.posonlyargs + a.args + a.kwonlyargs:
+                    key = (rel, getattr(node, "name", None), p.arg)
+                    if p.arg == "errors" or (
+                            _is_budget(p.arg) and key not in _TOKEN_BUDGETS):
+                        offenders.append(
+                            f"{rel}:{node.lineno} {p.arg} parameter")
         if rel == os.path.join("operators", "multimodal.py"):
             continue
         for top in tree.body:

@@ -379,22 +379,24 @@ def test_type0_without_tounicode_refuses():
         P.extract_pdf_text(doc)
 
 
-def test_inflate_budget_bounds_bombs():
+def test_inflate_budget_bounds_bombs(monkeypatch):
     bomb = zlib.compress(b"(A) Tj " * 200_000)
     doc = one_page(b"", filt=b"/Filter /FlateDecode ",
                    encode=lambda _: bomb)
-    with pytest.raises(NotImplementedError, match="inflate budget"):
-        P.extract_pdf_text(doc, inflate_budget=10_000)
-    # and the unlimited path really decodes it
-    _, _, text = P.extract_pdf_text(doc, inflate_budget=None,
-                                    text_budget=None)
+    with monkeypatch.context() as m:
+        m.setattr(P, "DECODE_BYTE_BUDGET", 10_000)
+        with pytest.raises(NotImplementedError, match="inflate budget"):
+            P.extract_pdf_text(doc)
+    # and under the module budgets it really decodes
+    _, _, text = P.extract_pdf_text(doc)
     assert text == "A" * 200_000
 
 
-def test_text_budget_bounds_output():
+def test_text_budget_bounds_output(monkeypatch):
     doc = one_page(b"BT " + b"(spam) Tj " * 1000 + b"ET")
+    monkeypatch.setattr(P, "PDF_TEXT_BUDGET", 100)
     with pytest.raises(NotImplementedError, match="text budget"):
-        P.extract_pdf_text(doc, text_budget=100)
+        P.extract_pdf_text(doc)
 
 
 def test_corrupt_inputs_raise_valueerror():
@@ -491,7 +493,9 @@ def test_pdf_text_junk_payload_is_a_corrupt_row(spark):
 # fuzz — quarantine never crashes, errors route to the two kinds
 # ---------------------------------------------------------------------------
 
-def test_fuzz_mutations_always_quarantine():
+def test_fuzz_mutations_always_quarantine(monkeypatch):
+    monkeypatch.setattr(P, "DECODE_BYTE_BUDGET", 1 << 16)
+    monkeypatch.setattr(P, "PDF_TEXT_BUDGET", 1 << 16)
     base = one_page(b"BT /F1 12 Tf (fuzz me) Tj [(a) -300 (b)] TJ ET")
     rng = random.Random(0xBDF)
     from youtube_api_data_etl_automation_spark.operators.multimodal import (
@@ -502,8 +506,7 @@ def test_fuzz_mutations_always_quarantine():
         for _ in range(rng.randint(1, 8)):
             buf[rng.randrange(len(buf))] = rng.randrange(256)
         try:
-            P.extract_pdf_text(bytes(buf), inflate_budget=1 << 16,
-                               text_budget=1 << 16)
+            P.extract_pdf_text(bytes(buf))
         except DECODE_ERRORS:
             pass  # any member class is a valid quarantine row
     for _ in range(100):

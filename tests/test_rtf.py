@@ -41,24 +41,26 @@ def test_rtf_uc_scoping_and_specials():
     # as ONE fallback); group close restores the outer \uc1
     doc = (b"{\\rtf1{\\uc2 A\\u8364 x\\'75B}\\u8364?C"
            b" \\{literal\\} \\\\ back \\~nb\\endash}")
-    n_groups, text = R._extract_rtf(doc, None)
+    n_groups, text = R._extract_rtf(doc)
     assert text == ("A€B€C {literal} \\ back  nb–")
     assert n_groups == 2
 
 
-def test_rtf_structure_and_budget():
+def test_rtf_structure_and_budget(monkeypatch):
     with pytest.raises(ValueError, match="magic"):
-        R._extract_rtf(b"plain", None)
+        R._extract_rtf(b"plain")
     with pytest.raises(ValueError, match="unbalanced group close"):
-        R._extract_rtf(rb"{\rtf1 }}", None)
+        R._extract_rtf(rb"{\rtf1 }}")
     with pytest.raises(ValueError, match="nesting too deep"):
-        R._extract_rtf(b"{\\rtf1 " + b"{" * 5000, None)
+        R._extract_rtf(b"{\\rtf1 " + b"{" * 5000)
     with pytest.raises(ValueError, match="hex escape"):
-        R._extract_rtf(rb"{\rtf1 \'zz}", None)
-    with pytest.raises(NotImplementedError, match="budget"):
-        R._extract_rtf(b"{\\rtf1 " + b"y" * 5000 + b"}", 100)
+        R._extract_rtf(rb"{\rtf1 \'zz}")
+    with monkeypatch.context() as m:
+        m.setattr(R, "DECODE_BYTE_BUDGET", 100)
+        with pytest.raises(NotImplementedError, match="budget"):
+            R._extract_rtf(b"{\\rtf1 " + b"y" * 5000 + b"}")
     # newline bytes are structure, not text; \<newline> IS \par
-    assert R._extract_rtf(b"{\\rtf1 a\r\nb\\\nc}", None)[1] == "ab\nc"
+    assert R._extract_rtf(b"{\\rtf1 a\r\nb\\\nc}")[1] == "ab\nc"
 
 
 def test_rtf_second_review_fixes():
@@ -68,16 +70,16 @@ def test_rtf_second_review_fixes():
     boundaries."""
     # \u-10240 would be U+D800 (lone surrogate) — must become U+FFFD
     # and the result must stay UTF-8-encodable
-    _, text = R._extract_rtf(b"{\\rtf1 \\u-10240?x}", None)
+    _, text = R._extract_rtf(b"{\\rtf1 \\u-10240?x}")
     assert text == "�x"
     text.encode("utf-8")  # must not raise
     # \bin4 consumes its 4 raw bytes even when they contain } and backslash
     _, text = R._extract_rtf(
-        b"{\\rtf1 {\\pict\\bin4 \x7d\x5c\x01\x02 x}done}", None)
+        b"{\\rtf1 {\\pict\\bin4 \x7d\x5c\x01\x02 x}done}")
     assert text == "x done" or text == "xdone" or "done" in text
     # a control word is ONE fallback character
-    _, text = R._extract_rtf(b"{\\rtf1 \\u8364\\tab after}", None)
+    _, text = R._extract_rtf(b"{\\rtf1 \\u8364\\tab after}")
     assert text == "€after"
     # pending fallback cleared at group close: A is real text
-    _, text = R._extract_rtf(b"{\\rtf1 {\\uc1\\u8364}ABC}", None)
+    _, text = R._extract_rtf(b"{\\rtf1 {\\uc1\\u8364}ABC}")
     assert text == "€ABC"

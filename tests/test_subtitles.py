@@ -79,7 +79,7 @@ def test_vtt_header_metadata_lines_are_skipped():
     assert (fmt, n, dur, text) == ("vtt", 1, 2.0, "Hi")
 
 
-def test_refusals():
+def test_refusals(monkeypatch):
     with pytest.raises(NotImplementedError, match="neither WebVTT"):
         S.parse_subtitles(b"just some plain text\nwith lines\n")
     bad_order = (b"1\n00:00:05,000 --> 00:00:01,000\nbackwards\n")
@@ -90,8 +90,9 @@ def test_refusals():
         S.parse_subtitles(missing_timing)
     many = b"WEBVTT\n\n" + b"".join(
         b"00:00:01.000 --> 00:00:02.000\ncue\n\n" for _ in range(30))
+    monkeypatch.setattr(S, "SUBTITLE_CUE_BUDGET", 10)
     with pytest.raises(NotImplementedError, match="cue budget"):
-        S.parse_subtitles(many, cue_budget=10)
+        S.parse_subtitles(many)
 
 
 def test_spark_quarantine(spark):

@@ -266,7 +266,7 @@ def test_multi_strip_and_packbits():
     assert (out == rgba[:, :, :3]).all()
 
 
-def test_refusals_and_malformed():
+def test_refusals_and_malformed(monkeypatch):
     g = _img(4, 4, seed=6, grey=True)
     # rewrite compression tag to old-style JPEG (6, withdrawn by TIFF
     # Tech Note 2): unsupported, not corrupt (LZW 5 / deflate 8/32946
@@ -282,8 +282,10 @@ def test_refusals_and_malformed():
         tiff.decode_tiff(b"II+\x00" + b"\x00" * 16)
     with pytest.raises(ValueError, match="strip out of bounds|short strip"):
         tiff.decode_tiff(_tiff_image(g)[:-6])
-    with pytest.raises(NotImplementedError, match="pixel budget"):
-        tiff.decode_tiff(_tiff_image(g), pixel_budget=8)
+    with monkeypatch.context() as m:
+        m.setattr(tiff, "DECODE_PIXEL_BUDGET", 8)
+        with pytest.raises(NotImplementedError, match="pixel budget"):
+            tiff.decode_tiff(_tiff_image(g))
     # truncated PackBits refuses as corrupt
     pb = _tiff_image(np.repeat(_img(1, 9, seed=7), 4, axis=0),
                      packbits=True)

@@ -552,7 +552,7 @@ def test_meta_prefix_groups():
     assert (vp8l.decode_webp_lossless(payload) == img).all()
 
 
-def test_container_and_refusals():
+def test_container_and_refusals(monkeypatch):
     img = _rgba(2, 2, seed=12)
     payload = _encode_vp8l(img)
     with pytest.raises(NotImplementedError, match="codec library"):
@@ -566,8 +566,9 @@ def test_container_and_refusals():
     with pytest.raises(ValueError, match="bitstream exhausted|invalid"):
         chunk = _encode_vp8l(img, riff=False)
         vp8l.decode_vp8l(chunk[:6])
+    monkeypatch.setattr(vp8l, "VP8L_PIXEL_BUDGET", 3)
     with pytest.raises(NotImplementedError, match="pixel budget"):
-        vp8l.decode_vp8l(_encode_vp8l(img, riff=False), pixel_budget=3)
+        vp8l.decode_vp8l(_encode_vp8l(img, riff=False))
 
 
 def test_decode_rgb_routes_vp8l_and_quarantine(spark):

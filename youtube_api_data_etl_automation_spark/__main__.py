@@ -912,8 +912,7 @@ def _cmd_media(args: argparse.Namespace) -> int:
         "audio": decode_audio,
         "audiometa": mediameta.audio_meta,
         "video": mediameta.video_meta,
-        "triage": lambda b: mediameta.triage_decode_images(
-            b, max_pixels=args.max_pixels),
+        "triage": mediameta.triage_decode_images,
         "exif": mediameta.image_exif,
         "tags": mediameta.audio_tags,
         "audiotriage": mediameta.triage_decode_audio,
@@ -1011,8 +1010,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     med.add_argument("--output", default=None,
                      help="write the per-payload result parquet here")
-    med.add_argument("--max-pixels", type=int, default=4_000_000,
-                     help="triage pixel budget (default 4 Mpx)")
     med.set_defaults(fn=_cmd_media)
 
     etl = sub.add_parser("etl", help="one incremental ETL run (the reference's daily job)")

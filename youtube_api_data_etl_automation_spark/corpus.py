@@ -627,7 +627,6 @@ def repo_archive_to_code_documents(
     strip_components: int = 1,
     min_chars: int = 1,
     apply_filter: bool = True,
-    byte_budget: int | None = None,
 ) -> DataFrame:
     """Repository archive payloads (the tarball/zip a code host
     serves per repo — The-Stack-style ingestion) → ``documents``-
@@ -651,13 +650,10 @@ def repo_archive_to_code_documents(
     math — no shuffle anywhere."""
     import pandas as pd
 
-    from .operators.archives import ARCHIVE_BYTE_BUDGET, archive_members
+    from .operators.archives import archive_members
     from .operators.code_quality import lang_from_path, stack_filter
 
-    members = archive_members(
-        blobs,
-        byte_budget=byte_budget or ARCHIVE_BYTE_BUDGET,
-    ).filter(
+    members = archive_members(blobs).filter(
         F.col("error").isNull() & F.col("body").isNotNull()
         & (F.col("size") > 0)
     )

@@ -8,8 +8,9 @@ must (a) triage what an opaque payload IS without unpacking it, and
 (b) split the record containers into per-document rows. This module
 does both with the decode family's contract (the Arrow-batched
 :func:`.multimodal._quarantine_map` harness: one bad blob is a row
-with ``error`` / ``error_kind`` set, and explicit byte budgets make a
-zip/gzip bomb refuse instead of filling an executor):
+with ``error`` / ``error_kind`` set, and the decompressed-byte budget
+``multimodal.DECODE_BYTE_BUDGET`` makes a zip/gzip bomb refuse instead
+of filling an executor):
 
 - ``archive_meta``: O(header / central-directory) probe — gzip member
   header (method, mtime, FNAME, ISIZE hint), zip end-of-central-
@@ -54,10 +55,7 @@ import struct
 
 from pyspark.sql import DataFrame
 
-# decompressed-output budgets: a 40-byte gzip bomb can declare
-# gigabytes; the budget refuses (recoverable 'unsupported') instead of
-# allocating. Raise per-call for trusted corpora.
-ARCHIVE_BYTE_BUDGET = 1 << 26  # 64 MiB decompressed per payload
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 ARCHIVE_META_SCHEMA = (
     "doc_id bigint, format string, n_members int, "
@@ -72,96 +70,40 @@ WARC_RECORDS_SCHEMA = (
 )
 
 
-def _gunzip_all(payload: bytes, budget: int | None) -> bytes:
-    """Decompress ALL concatenated gzip members (the .warc.gz layout),
-    budget-capped."""
+def _decompress_all(payload: bytes, kind: str) -> bytes:
+    """Decompress ALL concatenated gzip members / bzip2 / xz streams
+    (the .warc.gz member-per-record layout; pbzip2 and block-parallel
+    compressors emit the others), capped at DECODE_BYTE_BUDGET via the
+    decompressor's max_length so a bomb never materializes past the
+    budget. bz2 and lzma are stdlib (late r14); xz is FORMAT_XZ only —
+    the raw-.lzma legacy format has no reliable magic and keeps
+    refusing."""
+    import bz2
+    import lzma
     import zlib
 
+    magic, new, error = {
+        "gzip": (b"\x1f\x8b", lambda: zlib.decompressobj(wbits=31),
+                 zlib.error),
+        "bzip2": (b"BZh", bz2.BZ2Decompressor, OSError),
+        "xz": (b"\xfd7zXZ\x00",
+               lambda: lzma.LZMADecompressor(format=lzma.FORMAT_XZ),
+               lzma.LZMAError),
+    }[kind]
     out = bytearray()
     rest = payload
-    while rest[:2] == b"\x1f\x8b":
-        d = zlib.decompressobj(wbits=31)  # gzip wrapper
+    while rest.startswith(magic):
+        d = new()
         try:
-            if budget is not None:
-                chunk = d.decompress(rest, budget + 1 - len(out))
-            else:
-                chunk = d.decompress(rest)
-        except zlib.error as e:
-            raise ValueError(f"malformed gzip stream: {e}") from None
-        out += chunk
-        if budget is not None and len(out) > budget:
-            raise NotImplementedError(
-                f"gzip output exceeds the {budget}-byte budget; raise "
-                "the budget or split the archive upstream"
-            )
+            out += d.decompress(rest, DECODE_BYTE_BUDGET + 1 - len(out))
+        except error as e:
+            raise ValueError(f"malformed {kind} stream: {e}") from None
+        check_budget(f"{kind} output", len(out), DECODE_BYTE_BUDGET, "byte")
         if not d.eof:
-            raise ValueError("malformed gzip stream: truncated member")
+            raise ValueError(f"malformed {kind} stream: truncated")
         rest = d.unused_data
     if rest and not out:
-        raise ValueError("malformed gzip stream: no gzip magic")
-    return bytes(out)
-
-
-def _bunzip_all(payload: bytes, budget: int | None) -> bytes:
-    """Decompress ALL concatenated bzip2 streams (pbzip2 and
-    block-parallel compressors emit them), budget-capped via the
-    decompressor's max_length so a bomb never materializes past the
-    budget (late r14 — bz2 is stdlib, same discipline as gzip)."""
-    import bz2
-
-    out = bytearray()
-    rest = payload
-    while rest[:3] == b"BZh":
-        d = bz2.BZ2Decompressor()
-        try:
-            if budget is not None:
-                chunk = d.decompress(rest, budget + 1 - len(out))
-            else:
-                chunk = d.decompress(rest)
-        except OSError as e:
-            raise ValueError(f"malformed bzip2 stream: {e}") from None
-        out += chunk
-        if budget is not None and len(out) > budget:
-            raise NotImplementedError(
-                f"bzip2 output exceeds the {budget}-byte budget; "
-                "raise the budget or split the archive upstream"
-            )
-        if not d.eof:
-            raise ValueError("malformed bzip2 stream: truncated")
-        rest = d.unused_data
-    if rest and not out:
-        raise ValueError("malformed bzip2 stream: no BZh magic")
-    return bytes(out)
-
-
-def _unxz_all(payload: bytes, budget: int | None) -> bytes:
-    """Decompress ALL concatenated xz streams, budget-capped (late
-    r14 — lzma is stdlib; FORMAT_XZ only, the raw-.lzma legacy format
-    has no reliable magic and keeps refusing)."""
-    import lzma
-
-    out = bytearray()
-    rest = payload
-    while rest[:6] == b"\xfd7zXZ\x00":
-        d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-        try:
-            if budget is not None:
-                chunk = d.decompress(rest, budget + 1 - len(out))
-            else:
-                chunk = d.decompress(rest)
-        except lzma.LZMAError as e:
-            raise ValueError(f"malformed xz stream: {e}") from None
-        out += chunk
-        if budget is not None and len(out) > budget:
-            raise NotImplementedError(
-                f"xz output exceeds the {budget}-byte budget; raise "
-                "the budget or split the archive upstream"
-            )
-        if not d.eof:
-            raise ValueError("malformed xz stream: truncated")
-        rest = d.unused_data
-    if rest and not out:
-        raise ValueError("malformed xz stream: no xz magic")
+        raise ValueError(f"malformed {kind} stream: no {kind} magic")
     return bytes(out)
 
 
@@ -298,8 +240,8 @@ def _split_warc(data: bytes) -> list[tuple[dict, bytes]]:
     return out
 
 
-def _parse_warc_meta(payload: bytes, budget: int | None) -> dict:
-    data = _gunzip_all(payload, budget) \
+def _parse_warc_meta(payload: bytes) -> dict:
+    data = _decompress_all(payload, "gzip") \
         if payload[:2] == b"\x1f\x8b" else payload
     records = _split_warc(data)
     h0 = records[0][0]
@@ -310,9 +252,7 @@ def _parse_warc_meta(payload: bytes, budget: int | None) -> dict:
     }
 
 
-def archive_meta(blobs: DataFrame,
-                 byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                 ) -> DataFrame:
+def archive_meta(blobs: DataFrame) -> DataFrame:
     """Probe an archive payload without unpacking members: ``(doc_id,
     format, n_members, uncompressed_hint, detail)``. gzip is O(header)
     (member count unknowable without a scan → NULL; ISIZE hint from
@@ -320,8 +260,6 @@ def archive_meta(blobs: DataFrame,
     member data by declared size, WARC counts records (decompressing
     .warc.gz under the budget — the one non-O(header) case, inherent
     to gzip). Unknown magic refuses 'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(payload):
         if not payload:
             raise ValueError("empty/NULL archive payload")
@@ -330,7 +268,7 @@ def archive_meta(blobs: DataFrame,
         if len(payload) > 257 + 5 and payload[257:262] == b"ustar":
             return _parse_tar_meta(payload)
         if payload[:5] == b"WARC/":
-            return _parse_warc_meta(payload, byte_budget)
+            return _parse_warc_meta(payload)
         if payload[:2] == b"\x1f\x8b":
             # a gzip whose first member opens a WARC is a .warc.gz
             import zlib
@@ -340,7 +278,7 @@ def archive_meta(blobs: DataFrame,
             except zlib.error as e:
                 raise ValueError(f"malformed gzip stream: {e}") from None
             if head[:5] == b"WARC/":
-                return _parse_warc_meta(payload, byte_budget)
+                return _parse_warc_meta(payload)
             return _parse_gzip_header(payload)
         if payload[:3] == b"BZh" and payload[3:4].isdigit():
             # O(header): bzip2 carries no size or name in-band
@@ -361,21 +299,17 @@ def archive_meta(blobs: DataFrame,
     return _quarantine_map(blobs, one, ARCHIVE_META_SCHEMA)
 
 
-def warc_records(blobs: DataFrame,
-                 byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                 ) -> DataFrame:
+def warc_records(blobs: DataFrame) -> DataFrame:
     """Split WARC payloads (plain or .warc.gz incl. member-per-record)
     into one row per record. Response records additionally parse the
     HTTP status line and Content-Type and carry the HTTP body bytes;
     other record types carry their raw content. Fan-out stays inside
     the partition (mapInPandas) — no shuffle."""
-    from .multimodal import _quarantine_map
-
     texty = ("text/html", "text/plain", "application/json",
              "application/xhtml+xml", "text/xml")
 
     def records(raw):
-        data = _gunzip_all(raw, byte_budget) \
+        data = _decompress_all(raw, "gzip") \
             if raw[:2] == b"\x1f\x8b" else raw
         rows = []
         for i, (h, content) in enumerate(_split_warc(data)):
@@ -429,8 +363,7 @@ ARCHIVE_MEMBERS_SCHEMA = (
 )
 
 
-def _iter_archive_members(raw: bytes,
-                          budget: int | None) -> list[tuple[str, bytes]]:
+def _iter_archive_members(raw: bytes) -> list[tuple[str, bytes]]:
     """(name, body) for every member of one archive payload — format
     dispatched on magic: zip (stdlib zipfile, central-directory size
     probe BEFORE inflation), tar (stdlib tarfile over USTAR/GNU),
@@ -444,12 +377,7 @@ def _iter_archive_members(raw: bytes,
     import zipfile
 
     def check(total: int) -> int:
-        if budget is not None and total > budget:
-            raise NotImplementedError(
-                f"archive declares {total} bytes over the "
-                f"{budget}-byte budget; raise byte_budget (or pass "
-                "None) to force the unpack"
-            )
+        check_budget("archive", total, DECODE_BYTE_BUDGET, "declared byte")
         return total
 
     def walk_tar(data: bytes) -> list[tuple[str, bytes]]:
@@ -481,19 +409,19 @@ def _iter_archive_members(raw: bytes,
             raise ValueError(f"malformed zip: {e}") from None
     if raw[:2] == b"\x1f\x8b":
         hdr = _parse_gzip_header(raw)
-        data = _gunzip_all(raw, budget)
+        data = _decompress_all(raw, "gzip")
         if len(data) >= 512 and data[257:262] == b"ustar":
             return walk_tar(data)
         return [(hdr.get("name") or "", data)]
     if len(raw) >= 512 and raw[257:262] == b"ustar":
         return walk_tar(raw)
     if raw[:3] == b"BZh" and raw[3:4].isdigit():
-        data = _bunzip_all(raw, budget)
+        data = _decompress_all(raw, "bzip2")
         if len(data) >= 512 and data[257:262] == b"ustar":
             return walk_tar(data)
         return [("", data)]  # bare .bz2 document (no name in-band)
     if raw[:6] == b"\xfd7zXZ\x00":
-        data = _unxz_all(raw, budget)
+        data = _decompress_all(raw, "xz")
         if len(data) >= 512 and data[257:262] == b"ustar":
             return walk_tar(data)
         return [("", data)]  # bare .xz document (no name in-band)
@@ -503,21 +431,17 @@ def _iter_archive_members(raw: bytes,
     )
 
 
-def archive_members(blobs: DataFrame,
-                    byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                    ) -> DataFrame:
+def archive_members(blobs: DataFrame) -> DataFrame:
     """Uniform member extraction over mixed zip / tar / gzip / .tar.gz
     payloads: one row per member ``(doc_id, member_idx, name, size,
     body)``. The container fan-out stays inside the partition
     (mapInPandas) — no shuffle; feed the output to
     :func:`members_as_payloads` and any decoder takes it from there."""
-    from .multimodal import _quarantine_map
-
     def members(raw):
         return [{"member_idx": i, "name": name, "size": len(body),
                  "body": body}
                 for i, (name, body) in enumerate(
-                    _iter_archive_members(raw, byte_budget))]
+                    _iter_archive_members(raw))]
 
     return _quarantine_map(blobs, members, ARCHIVE_MEMBERS_SCHEMA)
 
@@ -555,7 +479,7 @@ _XML_ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
 _WT_RE = None  # compiled lazily (module import stays cheap)
 
 
-def _docx_extract_text(raw: bytes, budget: int | None) -> tuple[int, str]:
+def _docx_extract_text(raw: bytes) -> tuple[int, str]:
     """(n_paragraphs, text) from one OOXML word-processing payload.
 
     A .docx is a zip whose ``word/document.xml`` holds the body as
@@ -578,7 +502,7 @@ def _docx_extract_text(raw: bytes, budget: int | None) -> tuple[int, str]:
     # container checks shared with pptx/xlsx (r14 consolidation —
     # _office_zip is the one OOXML container harness, so the three
     # paths cannot drift)
-    zf = _office_zip(raw, budget, "docx", "doc")
+    zf = _office_zip(raw, "docx", "doc")
     try:
         xml = zf.read("word/document.xml")
     except KeyError:
@@ -605,21 +529,17 @@ def _docx_extract_text(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_paras, "".join(parts).strip()
 
 
-def docx_text(blobs: DataFrame,
-              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-              ) -> DataFrame:
+def docx_text(blobs: DataFrame) -> DataFrame:
     """REAL .docx text extraction over ``(doc_id, payload)`` — the
     office-format twin of :func:`operators.pdf.pdf_text`, composed from
     the zip machinery already here plus a WordprocessingML run walk.
     One row per document: paragraph count, char count, text (paragraph
     breaks as newlines). Quarantine contract; legacy .doc refuses as
     'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
         if not raw:
             raise ValueError("empty/NULL docx payload")
-        n_paras, text = _docx_extract_text(raw, byte_budget)
+        n_paras, text = _docx_extract_text(raw)
         return {"format": "docx", "n_paragraphs": n_paras,
                 "n_chars": len(text), "text": text}
 
@@ -643,8 +563,7 @@ def _xml_unescape(text: str) -> str:
     return text
 
 
-def _office_zip(raw: bytes, budget: int | None, kind: str,
-                legacy: str):
+def _office_zip(raw: bytes, kind: str, legacy: str):
     """Shared OOXML container checks: OLE2 legacy refusal, zip magic,
     declared-size budget (enforced BEFORE any inflation — the same
     zip-bomb posture as every archive op here). Returns the ZipFile."""
@@ -659,20 +578,15 @@ def _office_zip(raw: bytes, budget: int | None, kind: str,
         )
     if raw[:4] not in (b"PK\x03\x04", b"PK\x05\x06"):
         raise ValueError(f"malformed {kind}: not a zip container")
-    meta = _parse_zip_meta(raw)
-    if budget is not None and meta["uncompressed_hint"] > budget:
-        raise NotImplementedError(
-            f"{kind} declares {meta['uncompressed_hint']} bytes over "
-            f"the {budget}-byte budget"
-        )
+    check_budget(kind, _parse_zip_meta(raw)["uncompressed_hint"],
+                 DECODE_BYTE_BUDGET, "declared byte")
     try:
         return zipfile.ZipFile(io.BytesIO(raw))
     except Exception as e:
         raise ValueError(f"malformed {kind}: {e}") from None
 
 
-def _pptx_extract_text(raw: bytes,
-                       budget: int | None) -> tuple[int, int, str]:
+def _pptx_extract_text(raw: bytes) -> tuple[int, int, str]:
     """(n_slides, n_paragraphs, text) from one OOXML presentation.
 
     A .pptx is a zip whose ``ppt/slides/slideN.xml`` parts hold the
@@ -693,7 +607,7 @@ def _pptx_extract_text(raw: bytes,
             rb"<a:t(?:\s[^>]*)?>(.*?)</a:t>|</a:p>|<a:br\s*/?>",
             _re.DOTALL,
         )
-    zf = _office_zip(raw, budget, "pptx", "ppt")
+    zf = _office_zip(raw, "pptx", "ppt")
     slide_re = _re.compile(r"^ppt/slides/slide(\d+)\.xml$")
     slides = sorted(
         (int(m.group(1)), n)
@@ -723,21 +637,17 @@ def _pptx_extract_text(raw: bytes,
     return len(slides), n_paras, "\f".join(pages).strip("\f")
 
 
-def pptx_text(blobs: DataFrame,
-              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-              ) -> DataFrame:
+def pptx_text(blobs: DataFrame) -> DataFrame:
     """REAL .pptx text extraction over ``(doc_id, payload)`` (r14,
     VERDICT r13 item 4) — the presentation twin of :func:`docx_text`,
     composed from the same zip machinery plus a DrawingML run walk.
     One row per document: slide/paragraph counts, char count, text
     (slides separated by form-feed, the pdf_text convention).
     Quarantine contract; legacy .ppt refuses as 'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
         if not raw:
             raise ValueError("empty/NULL pptx payload")
-        n_slides, n_paras, text = _pptx_extract_text(raw, byte_budget)
+        n_slides, n_paras, text = _pptx_extract_text(raw)
         return {"format": "pptx", "n_slides": n_slides,
                 "n_paragraphs": n_paras, "n_chars": len(text),
                 "text": text}
@@ -785,8 +695,7 @@ def _xlsx_cell_text(attrs: str, inner: bytes, shared: list[str],
     return _xml_unescape(v)
 
 
-def _xlsx_extract_text(raw: bytes,
-                       budget: int | None) -> tuple[int, int, str]:
+def _xlsx_extract_text(raw: bytes) -> tuple[int, int, str]:
     """(n_sheets, n_cells, text) from one OOXML workbook.
 
     A .xlsx is a zip: ``xl/sharedStrings.xml`` interns the string pool
@@ -814,7 +723,7 @@ def _xlsx_extract_text(raw: bytes,
         )
     si_re, st_re, sheet_re, row_re, c_re, t_re, v_re = _XLSX_RES
 
-    zf = _office_zip(raw, budget, "xlsx", "xls")
+    zf = _office_zip(raw, "xlsx", "xls")
     names = zf.namelist()
     shared: list[str] = []
     if "xl/sharedStrings.xml" in names:
@@ -855,9 +764,7 @@ def _xlsx_extract_text(raw: bytes,
     return len(sheets), n_cells, "\f".join(pages).strip("\f")
 
 
-def xlsx_text(blobs: DataFrame,
-              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-              ) -> DataFrame:
+def xlsx_text(blobs: DataFrame) -> DataFrame:
     """REAL .xlsx text extraction over ``(doc_id, payload)`` (r14,
     VERDICT r13 item 4) — the spreadsheet twin of :func:`docx_text`:
     shared-string pool + per-sheet cell walk through the same zip
@@ -865,12 +772,10 @@ def xlsx_text(blobs: DataFrame,
     char count, text (cells tab-joined, rows newline-joined, sheets
     form-feed-joined). Quarantine contract; legacy .xls refuses as
     'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
         if not raw:
             raise ValueError("empty/NULL xlsx payload")
-        n_sheets, n_cells, text = _xlsx_extract_text(raw, byte_budget)
+        n_sheets, n_cells, text = _xlsx_extract_text(raw)
         return {"format": "xlsx", "n_sheets": n_sheets,
                 "n_cells": n_cells, "n_chars": len(text), "text": text}
 
@@ -891,8 +796,7 @@ _ODF_MIME_KINDS = (
 )
 
 
-def _odf_extract_text(raw: bytes,
-                      budget: int | None) -> tuple[str, int, str]:
+def _odf_extract_text(raw: bytes) -> tuple[str, int, str]:
     """(kind, n_paragraphs, text) from one OpenDocument payload.
 
     An ODF file (odt/odp/ods — LibreOffice/OpenOffice, common in any
@@ -923,7 +827,7 @@ def _odf_extract_text(raw: bytes,
         )
     pclose_re, tab_re, br_re, sp_re, tag_re = _ODF_RES
 
-    zf = _office_zip(raw, budget, "odf", "sxw")
+    zf = _office_zip(raw, "odf", "sxw")
     kind = "odf"
     names = zf.namelist()
     if "mimetype" in names:
@@ -964,7 +868,7 @@ def _odf_extract_text(raw: bytes,
         nonlocal sp_total
         n = int(sm.group(1) or b"1")
         sp_total += n
-        if n > 65535 or (budget is not None and sp_total > budget):
+        if n > 65535 or sp_total > DECODE_BYTE_BUDGET:
             raise ValueError(
                 f"malformed odf: text:s run-length {n} "
                 f"(cumulative {sp_total})")
@@ -977,15 +881,11 @@ def _odf_extract_text(raw: bytes,
     # each rendered line, drop empty ones
     lines = [ln.strip() for ln in text.split("\n")]
     text = "\n".join(ln for ln in lines if ln)
-    if budget is not None and len(text) > budget:
-        raise NotImplementedError(
-            f"odf text exceeds the {budget}-byte budget")
+    check_budget("odf text", len(text), DECODE_BYTE_BUDGET, "byte")
     return kind, n_paras, text
 
 
-def odf_text(blobs: DataFrame,
-             byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-             ) -> DataFrame:
+def odf_text(blobs: DataFrame) -> DataFrame:
     """REAL OpenDocument text extraction over ``(doc_id, payload)``
     (r14) — odt/odp/ods through one walk: the LibreOffice twin of the
     OOXML trio, through the same consolidated container harness and
@@ -993,12 +893,10 @@ def odf_text(blobs: DataFrame,
     or ``odf`` when the mimetype member is absent), paragraph count,
     char count, text. Quarantine contract; legacy StarOffice binary
     payloads refuse via the OLE2 check."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
         if not raw:
             raise ValueError("empty/NULL odf payload")
-        kind, n_paras, text = _odf_extract_text(raw, byte_budget)
+        kind, n_paras, text = _odf_extract_text(raw)
         return {"format": kind, "n_paragraphs": n_paras,
                 "n_chars": len(text), "text": text}
 
@@ -1076,8 +974,7 @@ def _strip_xhtml_text(xml: bytes) -> str:
     return nl_re.sub("\n", sp_re.sub(" ", text)).strip()
 
 
-def _epub_extract_text(raw: bytes,
-                       budget: int | None) -> tuple[int, str]:
+def _epub_extract_text(raw: bytes) -> tuple[int, str]:
     """(n_chapters, text) from one EPUB payload.
 
     An EPUB is a zip: ``META-INF/container.xml`` names the OPF package
@@ -1110,7 +1007,7 @@ def _epub_extract_text(raw: bytes,
         )
     root_re, item_re, spine_re, attr_re = _EPUB_RES
 
-    zf = _office_zip(raw, budget, "epub", "lit")
+    zf = _office_zip(raw, "epub", "lit")
     names = set(zf.namelist())
     if "META-INF/container.xml" not in names:
         raise ValueError("malformed epub: no META-INF/container.xml")
@@ -1156,21 +1053,17 @@ def _epub_extract_text(raw: bytes,
     return len(chapters), "\f".join(chapters).strip("\f")
 
 
-def epub_text(blobs: DataFrame,
-              byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-              ) -> DataFrame:
+def epub_text(blobs: DataFrame) -> DataFrame:
     """REAL EPUB text extraction over ``(doc_id, payload)`` (r14) —
     the ebook slice of a document crawl: container → OPF manifest →
     spine-ordered XHTML chapters → visible text, through the same
     consolidated zip harness and budgets as the office trio. One row
     per book: chapter count, char count, text (chapters form-feed
     separated). Quarantine contract."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
         if not raw:
             raise ValueError("empty/NULL epub payload")
-        n_chapters, text = _epub_extract_text(raw, byte_budget)
+        n_chapters, text = _epub_extract_text(raw)
         return {"format": "epub", "n_chapters": n_chapters,
                 "n_chars": len(text), "text": text}
 

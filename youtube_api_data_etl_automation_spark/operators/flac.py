@@ -23,21 +23,18 @@ Decoder scope (complete for spec-conforming streams):
 - Stereo decorrelation and the frame CRC-16 over the whole frame.
 
 Scale posture: per-payload Python inside Arrow-batched ``mapInPandas``
-with a sample budget (``FLAC_SAMPLE_BUDGET``) routing oversized payloads
-to a recoverable NotImplementedError refusal, like the ADPCM/JPEG/VP8L
-budgets. Verified in tests/test_flac.py against an independent in-repo
-encoder (byte-exact samples across subframe types, stereo modes, Rice
-partitions) and the codec golden row.
+with a sample budget (``multimodal.DECODE_SAMPLE_BUDGET``, shared with
+ADPCM) routing oversized payloads to a recoverable NotImplementedError
+refusal, like the JPEG/VP8L budgets. Verified in tests/test_flac.py
+against an independent in-repo encoder (byte-exact samples across
+subframe types, stereo modes, Rice partitions) and the codec golden row.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-# Per-payload decoded-sample budget for the per-residual Python loop
-# (~0.5 µs/sample). 2M samples ≈ 1 s worst case; beyond it the decoder
-# refuses recoverably. None disables.
-FLAC_SAMPLE_BUDGET = 2_000_000
+from .multimodal import DECODE_SAMPLE_BUDGET, check_budget
 
 _FIXED_COEFS = {
     0: (),
@@ -214,9 +211,7 @@ _RATE_CODES = {
 _BPS_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
-def decode_flac(payload: bytes,
-                sample_budget: int | None = FLAC_SAMPLE_BUDGET,
-                ) -> tuple[int, np.ndarray]:
+def decode_flac(payload: bytes) -> tuple[int, np.ndarray]:
     """(sample_rate, samples[frames, channels] int32) for a FLAC stream.
     CRC-8 (frame header) and CRC-16 (whole frame) are verified; a
     mismatch refuses as corrupt."""
@@ -257,13 +252,9 @@ def decode_flac(payload: bytes,
     if si["rate"] == 0:
         # rate 0 is spec-invalid; downstream duration math divides by it
         raise ValueError("malformed FLAC: STREAMINFO sample rate 0")
-    if sample_budget is not None and \
-            si["total"] * si["channels"] > sample_budget:
-        raise NotImplementedError(
-            f"FLAC with {si['total']} frames x {si['channels']} channels "
-            f"exceeds the {sample_budget}-sample budget of the stdlib "
-            "decoder; raise sample_budget or route to a codec library"
-        )
+    check_budget(f"FLAC with {si['total']} frames x {si['channels']} "
+                 "channels", si["total"] * si["channels"],
+                 DECODE_SAMPLE_BUDGET, "sample")
 
     channels_out: list[list[int]] = [[] for _ in range(si["channels"])]
     decoded = 0

@@ -30,8 +30,10 @@ from __future__ import annotations
 
 import struct
 
+from .multimodal import check_budget
+
 # ~0.8 µs/pixel of Python in the LZW loop: 2M pixels ≈ 1.6 s worst case
-# per image inside the Arrow batch. Same knob semantics as
+# per image inside the Arrow batch. Same refusal as
 # multimodal.PNG_SLOW_FILTER_BYTE_BUDGET.
 GIF_PIXEL_BUDGET = 2_000_000
 
@@ -122,7 +124,7 @@ def _sub_blocks(payload: bytes, pos: int) -> tuple[bytes, int]:
         pos += size
 
 
-def decode_gif(payload: bytes, pixel_budget: int | None = GIF_PIXEL_BUDGET):
+def decode_gif(payload: bytes):
     """Decode the first frame of a GIF87a/89a payload to an HxWx3 uint8
     RGB array. See the module docstring for the supported subset and
     refusal contract."""
@@ -179,12 +181,7 @@ def decode_gif(payload: bytes, pixel_budget: int | None = GIF_PIXEL_BUDGET):
             raise ValueError(
                 "malformed GIF: image without a global or local color table"
             )
-        if pixel_budget is not None and w * h > pixel_budget:
-            raise NotImplementedError(
-                f"GIF exceeds the pixel budget ({w * h} > {pixel_budget}): "
-                "bulk hi-res decode needs a codec library; raise "
-                "pixel_budget (or pass None) to force the pure-Python path"
-            )
+        check_budget("GIF", w * h, GIF_PIXEL_BUDGET, "pixel")
         if pos >= n:
             raise ValueError("malformed GIF: missing LZW min code size")
         min_code = payload[pos]

@@ -97,34 +97,23 @@ def ahash64(rgb: np.ndarray) -> int:
     return _bits_to_i64(grid > grid.mean())
 
 
-IMAGE_HASH_PIXEL_BUDGET = 4_000_000  # same default as triage
-
-
-def image_hashes(blobs: DataFrame,
-                 max_pixels: int | None = IMAGE_HASH_PIXEL_BUDGET,
-                 ) -> DataFrame:
+def image_hashes(blobs: DataFrame) -> DataFrame:
     """Decode + hash in ONE pass over ``(doc_id, payload)``: per image
     the 64-bit dHash and aHash plus dimensions. Same quarantine
     contract as :func:`operators.multimodal.decode_image` (whose
     decoder this calls — every format it decodes, hashes).
 
-    ``max_pixels``: probe-first budget (the triage_decode_images
-    posture) — the header is read BEFORE any pixel decodes, so an
-    oversized image costs O(header) and routes to
-    ``error_kind='unsupported'`` instead of tying up an executor; pass
-    None to hash everything."""
-    from .mediameta import _probe_image
-    from .multimodal import _decode_rgb, _quarantine_map
+    Probe-first ``mediameta.PROBE_PIXEL_BUDGET`` (the
+    triage_decode_images posture): the header is read BEFORE any pixel
+    decodes, so an oversized image costs O(header) and routes to
+    ``error_kind='unsupported'`` instead of tying up an executor."""
+    from .mediameta import PROBE_PIXEL_BUDGET, _probe_image
+    from .multimodal import _decode_rgb, _quarantine_map, check_budget
 
     def one(raw):
-        if max_pixels is not None:
-            _, pw, ph = _probe_image(raw)
-            if pw * ph > max_pixels:
-                raise NotImplementedError(
-                    f"image {pw}x{ph} exceeds the {max_pixels}-pixel hash "
-                    "budget; raise max_pixels (or pass None) to force the "
-                    "decode"
-                )
+        _, pw, ph = _probe_image(raw)
+        check_budget(f"image {pw}x{ph}", pw * ph, PROBE_PIXEL_BUDGET,
+                     "pixel hash")
         fmt, rgb = _decode_rgb(raw)
         return {"format": fmt, "width": rgb.shape[1],
                 "height": rgb.shape[0], "dhash": dhash64(rgb),
@@ -139,9 +128,8 @@ THUMB_SCHEMA = (
 )
 
 
-def image_thumbnails(blobs: DataFrame, out_h: int = 8, out_w: int = 8,
-                     max_pixels: int | None = IMAGE_HASH_PIXEL_BUDGET,
-                     ) -> DataFrame:
+def image_thumbnails(blobs: DataFrame, out_h: int = 8,
+                     out_w: int = 8) -> DataFrame:
     """Deterministic thumbnail extraction — the resize step of an image
     training pipeline: decode via the full format matrix, exact
     area-average to ``out_h × out_w`` (the same box partition the
@@ -154,8 +142,8 @@ def image_thumbnails(blobs: DataFrame, out_h: int = 8, out_w: int = 8,
     feature columns). The thumbnail is the model-input proxy —
     downstream embedding or pHash-style stages consume it without
     re-decoding the original."""
-    from .mediameta import _probe_image
-    from .multimodal import _decode_rgb, _quarantine_map
+    from .mediameta import PROBE_PIXEL_BUDGET, _probe_image
+    from .multimodal import _decode_rgb, _quarantine_map, check_budget
 
     if not (1 <= out_h <= 256 and 1 <= out_w <= 256):
         raise ValueError(
@@ -163,13 +151,9 @@ def image_thumbnails(blobs: DataFrame, out_h: int = 8, out_w: int = 8,
         )
 
     def one(raw):
-        if max_pixels is not None:
-            _, pw, ph = _probe_image(raw)
-            if pw * ph > max_pixels:
-                raise NotImplementedError(
-                    f"image {pw}x{ph} exceeds the {max_pixels}-pixel "
-                    "thumbnail budget; raise max_pixels (or pass None)"
-                )
+        _, pw, ph = _probe_image(raw)
+        check_budget(f"image {pw}x{ph}", pw * ph, PROBE_PIXEL_BUDGET,
+                     "pixel thumbnail")
         fmt, rgb = _decode_rgb(raw)
         grid = np.stack(
             [_area_average(rgb[..., c].astype(np.float64), out_h, out_w)

@@ -132,9 +132,7 @@ def parse_jbig2_segments(data: bytes) -> list[dict]:
     return out
 
 
-def _decode_generic_region(d: bytes,
-                           pixel_budget: int) -> tuple[int, int, int,
-                                                       np.ndarray]:
+def _decode_generic_region(d: bytes) -> tuple[int, int, int, np.ndarray]:
     """Generic region segment data → ``(x, y, comb_op, bitmap)``.
     Region segment info (§7.4.1, 17 bytes) + generic region flags
     (§7.4.6.2); only ``MMR=1`` decodes (T.6 via ccitt.decode_g4)."""
@@ -157,14 +155,14 @@ def _decode_generic_region(d: bytes,
         raise ValueError("malformed JBIG2: TPGDON set on an MMR region")
     if w <= 0 or h <= 0:
         raise ValueError(f"malformed JBIG2: region size {w}x{h}")
-    if w * h > pixel_budget:
+    if w * h > JBIG2_PIXEL_BUDGET:
         raise ValueError(
             f"malformed JBIG2: region {w}x{h} exceeds the pixel budget")
     return x, y, comb, decode_g4(d[18:], w, h)
 
 
-def decode_jbig2(data: bytes, globals_data: bytes | None = None, *,
-                 pixel_budget: int = JBIG2_PIXEL_BUDGET) -> np.ndarray:
+def decode_jbig2(data: bytes,
+                 globals_data: bytes | None = None) -> np.ndarray:
     """Decode an embedded JBIG2 stream (PDF ``JBIG2Decode`` payload,
     plus the optional ``JBIG2Globals`` shared segments) to a
     ``(page_h, page_w)`` uint8 bilevel array, 1 = black.
@@ -208,12 +206,11 @@ def decode_jbig2(data: bytes, globals_data: bytes | None = None, *,
             d = s["data"]
             if len(d) >= 8:
                 decoded_px += _u32(d, 0) * _u32(d, 4)
-                if decoded_px > pixel_budget:
+                if decoded_px > JBIG2_PIXEL_BUDGET:
                     raise ValueError(
                         f"malformed JBIG2: cumulative region pixels "
                         f"{decoded_px} exceed the budget")
-            regions.append(_decode_generic_region(s["data"],
-                                                  pixel_budget))
+            regions.append(_decode_generic_region(s["data"]))
         elif t in (_SEG_END_OF_PAGE, _SEG_END_OF_STRIPE,
                    _SEG_END_OF_FILE, _SEG_EXTENSION, _SEG_PROFILES):
             continue
@@ -238,7 +235,7 @@ def decode_jbig2(data: bytes, globals_data: bytes | None = None, *,
     if page_h is None:
         page_h = max((y + bm.shape[0] for _, y, _, bm in regions),
                      default=0)
-    if page_w * max(page_h, 1) > pixel_budget:
+    if page_w * max(page_h, 1) > JBIG2_PIXEL_BUDGET:
         raise ValueError(
             f"malformed JBIG2: page {page_w}x{page_h} exceeds the "
             "pixel budget")
@@ -269,18 +266,15 @@ def decode_jbig2(data: bytes, globals_data: bytes | None = None, *,
 JBIG2_FILE_MAGIC = b"\x97JB2\r\n\x1a\n"
 
 
-def decode_jbig2_file(data: bytes, *,
-                      pixel_budget: int = JBIG2_PIXEL_BUDGET
-                      ) -> np.ndarray:
-    """Standalone JBIG2 file (T.88 Annex D file organization) → the
-    first page's bilevel array, 1 = black. File header: the 8-byte
-    magic, one flags byte (bit 0: 1 = sequential organization, 0 =
-    random access; bit 1: 1 = number of pages unknown), and a 4-byte
-    page count when known. Sequential organization interleaves
-    segment headers with their data — exactly the embedded walk
-    :func:`decode_jbig2` already implements; random-access files
-    (ALL headers first, data after) refuse as unsupported rather
-    than misparse."""
+def _file_stream(data: bytes) -> bytes:
+    """The segment stream of a standalone JBIG2 file (T.88 Annex D file
+    organization). File header: the 8-byte magic, one flags byte (bit
+    0: 1 = sequential organization, 0 = random access; bit 1: 1 =
+    number of pages unknown), and a 4-byte page count when known.
+    Sequential organization interleaves segment headers with their
+    data — exactly the embedded walk :func:`decode_jbig2` already
+    implements; random-access files (ALL headers first, data after)
+    refuse as unsupported rather than misparse."""
     data = bytes(data)
     if data[:8] != JBIG2_FILE_MAGIC:
         raise ValueError("malformed JBIG2 file: bad magic")
@@ -298,4 +292,28 @@ def decode_jbig2_file(data: bytes, *,
             "JBIG2 random-access file organization (all segment "
             "headers before any data) is not supported; sequential "
             "files decode")
-    return decode_jbig2(data[o:], pixel_budget=pixel_budget)
+    return data[o:]
+
+
+def decode_jbig2_file(data: bytes) -> np.ndarray:
+    """Standalone JBIG2 file → the first page's bilevel array, 1 =
+    black (see :func:`_file_stream` for the organizations that
+    decode)."""
+    return decode_jbig2(_file_stream(data))
+
+
+def jbig2_file_size(data: bytes) -> tuple[int, int]:
+    """``(width, height)`` of a standalone JBIG2 file's page from its
+    segment headers alone — the image probe's view, no region decodes.
+    A striped page of unknown height takes the regions' extent, as
+    :func:`decode_jbig2` does."""
+    segs = parse_jbig2_segments(_file_stream(data))
+    info = [s["data"] for s in segs if s["type"] == _SEG_PAGE_INFO]
+    if not info or len(info[0]) < 19:
+        raise ValueError("malformed JBIG2: no page information segment")
+    w, h = _u32(info[0], 0), _u32(info[0], 4)
+    if h == _UNKNOWN_LENGTH:
+        h = max((_u32(s["data"], 12) + _u32(s["data"], 4) for s in segs
+                 if s["type"] in _SEG_GENERIC_IMMEDIATE
+                 and len(s["data"]) >= 16), default=0)
+    return w, h

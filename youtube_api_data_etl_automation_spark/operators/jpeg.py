@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import struct
 
-from .multimodal import DECODE_PIXEL_BUDGET
+from .multimodal import DECODE_PIXEL_BUDGET, check_budget
 
 # Per-image budget of entropy-coded scan bytes (post-destuffing input to
 # the bit-serial Huffman loop). 1 MB of scan data is roughly a couple of
@@ -259,11 +259,7 @@ def _parse_segments(payload: bytes, all_scans: bool = False):
             h, w = struct.unpack_from(">HH", body, 1)
             if h == 0 or w == 0:
                 raise ValueError(f"malformed JPEG: zero dimension ({w}x{h})")
-            if w * h > DECODE_PIXEL_BUDGET:
-                raise NotImplementedError(
-                    f"JPEG {w}x{h} exceeds the {DECODE_PIXEL_BUDGET}-pixel "
-                    "budget; route to a codec-library executor image"
-                )
+            check_budget(f"JPEG {w}x{h}", w * h, DECODE_PIXEL_BUDGET, "pixel")
             ncomp = body[5]
             if len(body) < 6 + 3 * ncomp:
                 raise ValueError("malformed JPEG: truncated SOF components")
@@ -346,10 +342,7 @@ def _destuff(payload: bytes, start: int):
     return bytes(out), restarts, pos
 
 
-def decode_baseline_jpeg(
-    payload: bytes,
-    entropy_budget: int | None = JPEG_ENTROPY_BYTE_BUDGET,
-):
+def decode_baseline_jpeg(payload: bytes):
     """Decode a Huffman JPEG — baseline, extended-sequential, or
     progressive (dispatched on the SOF marker) — to an HxWx3 uint8 RGB
     array (greyscale replicated across channels). See the module
@@ -358,15 +351,10 @@ def decode_baseline_jpeg(
 
     qtables, htables, frame, restart_interval, scan = _parse_segments(payload)
     if frame.get("progressive"):
-        return _decode_progressive(payload, entropy_budget)
+        return _decode_progressive(payload)
     data, restart_offsets, _ = _destuff(payload, scan["data_at"])
-    if entropy_budget is not None and len(data) > entropy_budget:
-        raise NotImplementedError(
-            f"JPEG exceeds the entropy-coded byte budget ({len(data)} > "
-            f"{entropy_budget}): bulk hi-res decode needs a codec "
-            "library; raise entropy_budget (or pass None) to force the "
-            "pure-Python path"
-        )
+    check_budget("JPEG", len(data), JPEG_ENTROPY_BYTE_BUDGET,
+                 "entropy-coded byte")
 
     comps = frame["comps"]
     sel_by_cid = {s["cs"]: s for s in scan["sel"]}
@@ -516,10 +504,7 @@ def _finish(planes, comps, hmax, vmax, h_img, w_img):
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-def _decode_progressive(
-    payload: bytes,
-    entropy_budget: int | None = JPEG_ENTROPY_BYTE_BUDGET,
-):
+def _decode_progressive(payload: bytes):
     """Progressive (SOF2) Huffman JPEG decode — T.81 Annex G: per-scan
     spectral selection (Ss..Se bands, DC and AC split) AND successive
     approximation (Ah/Al bit-plane refinement, incl. the G.1.2.3 AC
@@ -532,13 +517,7 @@ def _decode_progressive(
 
     qtables, _, frame, _, scans = _parse_segments(payload, all_scans=True)
     total = sum(len(sc["data"]) for sc in scans)
-    if entropy_budget is not None and total > entropy_budget:
-        raise NotImplementedError(
-            f"JPEG exceeds the entropy-coded byte budget ({total} > "
-            f"{entropy_budget}): bulk hi-res decode needs a codec "
-            "library; raise entropy_budget (or pass None) to force the "
-            "pure-Python path"
-        )
+    check_budget("JPEG", total, JPEG_ENTROPY_BYTE_BUDGET, "entropy-coded byte")
     comps = frame["comps"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)

@@ -58,7 +58,7 @@ import unicodedata
 
 from pyspark.sql import DataFrame
 
-from .archives import ARCHIVE_BYTE_BUDGET
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 LATEX_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_dropped int, n_chars int, "
@@ -269,7 +269,7 @@ def _read_word(s: str, i: int) -> tuple[str, int]:
     return word, j
 
 
-def _extract_latex(raw: bytes, budget: int | None) -> tuple[int, str]:
+def _extract_latex(raw: bytes) -> tuple[int, str]:
     """(n_dropped, text) from one LaTeX payload — module docstring has
     the subset contract."""
     if not raw:
@@ -304,9 +304,7 @@ def _extract_latex(raw: bytes, budget: int | None) -> tuple[int, str]:
         if not t:
             return
         out_len += len(t)
-        if budget is not None and out_len > budget:
-            raise NotImplementedError(
-                f"latex text exceeds the {budget}-byte budget")
+        check_budget("latex text", out_len, DECODE_BYTE_BUDGET, "byte")
         if raw:
             if buf:
                 pieces.append((False, "".join(buf)))
@@ -550,17 +548,13 @@ def _extract_latex(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_dropped, text
 
 
-def latex_text(blobs: DataFrame,
-               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-               ) -> DataFrame:
+def latex_text(blobs: DataFrame) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, n_dropped, n_chars,
     text[, error, error_kind])`` — LaTeX source to visible text (see
     module docstring for the subset contract). ``n_dropped`` counts
     the math/graphics segments removed."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
-        n_dropped, text = _extract_latex(raw, byte_budget)
+        n_dropped, text = _extract_latex(raw)
         return {"format": "latex", "n_dropped": n_dropped,
                 "n_chars": len(text), "text": text}
 

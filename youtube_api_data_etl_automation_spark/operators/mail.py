@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .archives import ARCHIVE_BYTE_BUDGET
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 EML_TEXT_SCHEMA = (
     "doc_id bigint, format string, subject string, sender string, "
@@ -50,7 +50,7 @@ def _decode_part(part) -> str:
         return payload.decode("utf-8", "replace")
 
 
-def _extract_eml(raw: bytes, budget: int | None) -> dict:
+def _extract_eml(raw: bytes) -> dict:
     """One RFC 5322 message → the eml_text row dict."""
     import email
     import email.policy
@@ -114,9 +114,7 @@ def _extract_eml(raw: bytes, budget: int | None) -> dict:
             body = _strip_xhtml_text(body.encode("utf-8"))
         body = body.strip()
         total += len(body)
-        if budget is not None and total > budget:
-            raise NotImplementedError(
-                f"eml decoded text exceeds the {budget}-byte budget")
+        check_budget("eml decoded text", total, DECODE_BYTE_BUDGET, "byte")
         if body:
             texts.append(body)
 
@@ -135,20 +133,13 @@ def _extract_eml(raw: bytes, budget: int | None) -> dict:
     }
 
 
-def eml_text(blobs: DataFrame,
-             byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-             ) -> DataFrame:
+def eml_text(blobs: DataFrame) -> DataFrame:
     """RFC 5322 / MIME message payloads → one row per message with
     decoded headers (RFC 2047 encoded-words handled) and visible body
     text (module docstring has the part-selection rules). Quarantine
     contract: a payload with no parseable headers is 'corrupt'; a
-    text bomb past ``byte_budget`` refuses as 'unsupported'."""
-    from .multimodal import _quarantine_map
-
-    def one(raw):
-        return _extract_eml(raw, byte_budget)
-
-    return _quarantine_map(blobs, one, EML_TEXT_SCHEMA)
+    text bomb past ``DECODE_BYTE_BUDGET`` refuses as 'unsupported'."""
+    return _quarantine_map(blobs, _extract_eml, EML_TEXT_SCHEMA)
 
 
 def split_mbox(payload: bytes) -> list[bytes]:
@@ -185,8 +176,6 @@ def mbox_split(blobs: DataFrame) -> DataFrame:
     standalone .eml payload (feed :func:`eml_text`): the warc_records
     shape for mail archives. One bad mailbox quarantines alone
     (``msg_idx`` NULL)."""
-    from .multimodal import _quarantine_map
-
     def messages(raw):
         return [{"msg_idx": i, "payload": m}
                 for i, m in enumerate(split_mbox(raw))]

@@ -54,7 +54,8 @@ import re
 
 from pyspark.sql import DataFrame
 
-from .archives import ARCHIVE_BYTE_BUDGET, _html_unescape
+from .archives import _html_unescape
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 MARKDOWN_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_headings int, n_code_blocks int, "
@@ -121,12 +122,10 @@ def _inline(line: str, counts: dict) -> str:
     return _MASK.sub(lambda m: spans[int(m.group(1))], line)
 
 
-def _extract_markdown(raw: bytes, budget: int | None) -> dict:
+def _extract_markdown(raw: bytes) -> dict:
     if not raw:
         raise ValueError("empty/NULL markdown payload")
-    if budget is not None and len(raw) > budget:
-        raise NotImplementedError(
-            f"markdown payload exceeds the {budget}-byte budget")
+    check_budget("markdown payload", len(raw), DECODE_BYTE_BUDGET, "byte")
     # CRLF/CR normalize to \n (Windows-authored markdown is the
     # common case in crawls — r14 review fix: stray \r polluted every
     # line and broke $-anchored block regexes); NULs scrub so the
@@ -226,16 +225,9 @@ def _extract_markdown(raw: bytes, budget: int | None) -> dict:
             "text": text}
 
 
-def markdown_text(blobs: DataFrame,
-                  byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-                  ) -> DataFrame:
+def markdown_text(blobs: DataFrame) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, n_headings,
     n_code_blocks, n_links, n_chars, text[, error, error_kind])`` —
     Markdown flattened to plain prose with code blocks preserved
     (module docstring has the subset contract)."""
-    from .multimodal import _quarantine_map
-
-    def one(raw):
-        return _extract_markdown(raw, byte_budget)
-
-    return _quarantine_map(blobs, one, MARKDOWN_TEXT_SCHEMA)
+    return _quarantine_map(blobs, _extract_markdown, MARKDOWN_TEXT_SCHEMA)

@@ -49,6 +49,8 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tiff import _tiff_ifd_entries
+
 
 VIDEO_META_SCHEMA = (
     "doc_id bigint, brand string, duration_sec double, n_tracks int, "
@@ -265,9 +267,13 @@ def _probe_image(payload: bytes) -> tuple[str, int, int]:
             h = int.from_bytes(payload[27:30], "little") + 1
             return "webp", w, h
         raise ValueError(f"malformed WebP: unknown chunk {kind!r}")
+    if payload[:8] == b"\x97JB2\r\n\x1a\n":
+        from .jbig2 import jbig2_file_size
+
+        return ("jbig2", *jbig2_file_size(payload))
     raise NotImplementedError(
         f"unknown image format (magic {payload[:2]!r}); header probing "
-        "covers PNG/JPEG/GIF/BMP/PPM/WebP/TIFF"
+        "covers PNG/JPEG/GIF/BMP/PPM/WebP/TIFF/JBIG2"
     )
 
 
@@ -859,30 +865,35 @@ TRIAGE_DECODE_SCHEMA = (
 #: qualifies only in its VP8L (lossless) flavor — the router peeks the
 #: chunk fourcc, so lossy VP8/VP8X still route 'undecodable' pre-decode.
 DECODABLE_IMAGE_FORMATS = frozenset(
-    {"png", "jpeg", "gif", "bmp", "ppm", "pgm", "pbm", "webp", "tiff"}
+    {"png", "jpeg", "gif", "bmp", "ppm", "pgm", "pbm", "webp", "tiff",
+     "jbig2"}
 )
 
+# Probed pixels an image may declare before the probe-first operators
+# (triage_decode_images, imagehash.image_hashes/image_thumbnails) route
+# it out without decoding: 4 Mpx keeps every stdlib decoder near ~1 s.
+PROBE_PIXEL_BUDGET = 4_000_000
 
-def triage_decode_images(
-    blobs: DataFrame,
-    *,
-    max_pixels: int = 4_000_000,
-    decodable: frozenset[str] = DECODABLE_IMAGE_FORMATS,
-) -> DataFrame:
+# Probed samples (duration x rate x channels) for triage_decode_audio:
+# 50M ≈ 9.5 min of 44.1 kHz stereo.
+PROBE_SAMPLE_BUDGET = 50_000_000
+
+
+def triage_decode_images(blobs: DataFrame) -> DataFrame:
     """Probe-then-decode router — the shape the decode path takes at
     100 TB: the O(header-bytes) :func:`_probe_image` runs FIRST, and only
     payloads whose probed format is decodable and whose probed pixel
-    count fits ``max_pixels`` ever reach the per-pixel decoder. Oversized
-    or codec-needing payloads are routed out with their probed
+    count fits ``PROBE_PIXEL_BUDGET`` ever reach the per-pixel decoder.
+    Oversized or codec-needing payloads are routed out with their probed
     format/dimensions intact (that is the triage report: 'route this
-    slice to executors with a codec library / raise the budget'), and a
+    slice to executors with a codec library'), and a
     blob that fails its header probe never touches the decode loop at
     all. One fused mapInPandas pass — probe and decode share the Arrow
     batch, the payload bytes are scanned once and never joined/shuffled.
 
     Routes: ``decoded`` (features present), ``oversized`` (probed dims
-    exceed ``max_pixels``; error_kind='unsupported' — recoverable by
-    budget), ``undecodable`` (probed fine, no stdlib codec;
+    exceed ``PROBE_PIXEL_BUDGET``; error_kind='unsupported'),
+    ``undecodable`` (probed fine, no stdlib codec;
     'unsupported'), ``probe_failed`` (header unparseable; kind from the
     probe), ``decode_failed`` (probe passed, pixel data broken).
 
@@ -894,6 +905,7 @@ def triage_decode_images(
         _decode_rgb,
         _error_fields,
         _quarantine_map,
+        check_budget,
     )
 
     def one(raw):
@@ -902,18 +914,18 @@ def triage_decode_images(
         except DECODE_ERRORS as e:
             return {"route": "probe_failed", **_error_fields(e)}
         probed = {"format": fmt, "width": w, "height": h}
-        if fmt not in decodable or (
+        if fmt not in DECODABLE_IMAGE_FORMATS or (
             fmt == "webp" and raw[12:16] != b"VP8L"
         ):
             return {"route": "undecodable", **probed, **_error_fields(
                 NotImplementedError(
                     f"probed {fmt} {w}x{h}: no stdlib codec — route to a "
                     "codec-library executor image"))}
-        if w * h > max_pixels:
-            return {"route": "oversized", **probed, **_error_fields(
-                NotImplementedError(
-                    f"probed {fmt} {w}x{h} = {w * h} px over the "
-                    f"{max_pixels} px triage budget"))}
+        try:
+            check_budget(f"probed {fmt} {w}x{h}", w * h,
+                         PROBE_PIXEL_BUDGET, "triage pixel")
+        except NotImplementedError as e:
+            return {"route": "oversized", **probed, **_error_fields(e)}
         try:
             dfmt, rgb = _decode_rgb(raw)
         except DECODE_ERRORS as e:
@@ -934,15 +946,11 @@ TRIAGE_AUDIO_SCHEMA = (
 )
 
 
-def triage_decode_audio(
-    blobs: DataFrame,
-    *,
-    max_samples: int = 50_000_000,
-) -> DataFrame:
+def triage_decode_audio(blobs: DataFrame) -> DataFrame:
     """Probe-first audio router — :func:`triage_decode_images`' twin.
     :func:`audio_meta`'s O(header) probe runs FIRST; only payloads whose
     probed format has an in-repo decoder and whose probed sample count
-    (duration x rate x channels) fits ``max_samples`` reach a
+    (duration x rate x channels) fits ``PROBE_SAMPLE_BUDGET`` reach a
     per-sample loop — a forged month-long FLAC costs its STREAMINFO
     bytes, never a decode. One fused mapInPandas pass.
 
@@ -960,6 +968,7 @@ def triage_decode_audio(
         _decode_pcm,
         _error_fields,
         _quarantine_map,
+        check_budget,
     )
     from .mpegaudio import decode_layer1, decode_layer2
 
@@ -985,13 +994,12 @@ def triage_decode_audio(
                 NotImplementedError(
                     f"probed {fmt} ({probe['detail']}): no stdlib codec "
                     "— route to a codec-library executor image"))}
-        probed_samples = dur * rate * nch
-        if probed_samples > max_samples:
-            return {"route": "oversized", **probed, **_error_fields(
-                NotImplementedError(
-                    f"probed {fmt} {dur:.1f}s x {rate}Hz x {nch}ch = "
-                    f"{probed_samples:.0f} samples over the {max_samples} "
-                    "triage budget"))}
+        try:
+            check_budget(f"probed {fmt} {dur:.1f}s x {rate}Hz x {nch}ch",
+                         dur * rate * nch, PROBE_SAMPLE_BUDGET,
+                         "triage sample")
+        except NotImplementedError as e:
+            return {"route": "oversized", **probed, **_error_fields(e)}
         try:
             if subband_layer:
                 drate, sb = (decode_layer1 if subband_layer == 1
@@ -1175,39 +1183,6 @@ EXIF_SCHEMA = (
     "datetime string, make string, model string, gps_lat double, "
     "gps_lon double, error string, error_kind string"
 )
-
-# TIFF field types this reader needs (Exif 2.x / TIFF 6.0; 5=RATIONAL)
-_TIFF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1}
-
-
-def _tiff_ifd_entries(payload: bytes, tiff0: int, ifd_off: int, lt: str):
-    """Yield (tag, field_type, count, value_bytes) for one IFD; values
-    ≤4 bytes are inline, larger ones live at a u32 offset from the TIFF
-    header. Bounds-checked — truncation refuses (ValueError)."""
-    at = tiff0 + ifd_off
-    if at + 2 > len(payload):
-        raise ValueError("malformed EXIF: truncated IFD count")
-    (n,) = struct.unpack_from(lt + "H", payload, at)
-    at += 2
-    if at + 12 * n > len(payload):
-        raise ValueError("malformed EXIF: truncated IFD entries")
-    for i in range(n):
-        tag, ftype = struct.unpack_from(lt + "HH", payload, at + 12 * i)
-        (count,) = struct.unpack_from(lt + "I", payload, at + 12 * i + 4)
-        size = _TIFF_TYPE_SIZES.get(ftype, 0) * count
-        if size and size <= 4:
-            vb = payload[at + 12 * i + 8 : at + 12 * i + 8 + size]
-        elif size:
-            (off,) = struct.unpack_from(lt + "I", payload, at + 12 * i + 8)
-            if tiff0 + off + size > len(payload):
-                raise ValueError(
-                    f"malformed EXIF: tag 0x{tag:04x} value out of bounds"
-                )
-            vb = payload[tiff0 + off : tiff0 + off + size]
-        else:
-            vb = b""  # type this reader doesn't decode (RATIONAL etc.)
-        yield tag, ftype, count, vb
-
 
 def _tiff_scalar(vb: bytes, ftype: int, lt: str):
     if ftype == 3:

@@ -68,8 +68,10 @@ from __future__ import annotations
 
 import numpy as np
 
+from .multimodal import check_budget
+
 # frames x 384 samples x channels; 16M samples ~ 6 min stereo @44.1k,
-# a few seconds of pure-Python bit reading worst case. None disables.
+# a few seconds of pure-Python bit reading worst case.
 MPEG_SAMPLE_BUDGET = 1 << 24
 
 _L1_BITRATES = (32, 64, 96, 128, 160, 192, 224, 256,
@@ -223,9 +225,7 @@ def _l2_dequant(v: int, steps: int, sf: float) -> float:
     return sf * c_const * (c / half + d_const)
 
 
-def decode_layer2(payload: bytes,
-                  sample_budget: int | None = MPEG_SAMPLE_BUDGET,
-                  ) -> tuple[int, np.ndarray]:
+def decode_layer2(payload: bytes) -> tuple[int, np.ndarray]:
     """``(sample_rate, subbands[groups, channels, 32])`` for an MPEG-1
     Layer II stream — groups = 36 x n_frames (12 granules x 3 samples);
     each group row holds one requantized sample per subband (float64,
@@ -305,13 +305,8 @@ def decode_layer2(payload: bytes,
         frame_len = 144 * bitrate_kbps * 1000 // frame_rate + padding
         if frame_len < 4 or pos + frame_len > n:
             raise ValueError("malformed MPEG audio: truncated frame")
-        if sample_budget is not None and \
-                (len(frames) + 1) * 36 * 32 * nch > sample_budget:
-            raise NotImplementedError(
-                f"MPEG stream exceeds the {sample_budget}-sample budget "
-                "of the stdlib decoder; raise sample_budget or route to "
-                "a codec library"
-            )
+        check_budget("MPEG stream", (len(frames) + 1) * 36 * 32 * nch,
+                     MPEG_SAMPLE_BUDGET, "sample")
 
         data_start = pos + 6 if protected else pos + 4
         br = _BitReader(payload, data_start * 8, (pos + frame_len) * 8)
@@ -444,18 +439,16 @@ def probe_layer(payload: bytes) -> int:
     return 4 - layer_code
 
 
-def decode_subbands(payload: bytes,
-                    sample_budget: int | None = MPEG_SAMPLE_BUDGET,
-                    ) -> tuple[int, int, np.ndarray]:
+def decode_subbands(payload: bytes) -> tuple[int, int, np.ndarray]:
     """``(layer, sample_rate, subbands)`` — dispatch by the first frame
     header: Layer I and II decode exactly; Layer III refuses with the
     honest Huffman-table stub message."""
     layer = probe_layer(bytes(payload))
     if layer == 1:
-        rate, sb = decode_layer1(payload, sample_budget)
+        rate, sb = decode_layer1(payload)
         return 1, rate, sb
     if layer == 2:
-        rate, sb = decode_layer2(payload, sample_budget)
+        rate, sb = decode_layer2(payload)
         return 2, rate, sb
     raise NotImplementedError(
         "MPEG-1 Layer III (34 Huffman tables) needs tabulated spec "
@@ -464,9 +457,7 @@ def decode_subbands(payload: bytes,
     )
 
 
-def decode_layer1(payload: bytes,
-                  sample_budget: int | None = MPEG_SAMPLE_BUDGET,
-                  ) -> tuple[int, np.ndarray]:
+def decode_layer1(payload: bytes) -> tuple[int, np.ndarray]:
     """``(sample_rate, subbands[groups, channels, 32])`` for an MPEG-1
     Layer I stream — groups = 12 x n_frames; each group row holds one
     requantized sample per subband (float64, exact per §2.4.3.1).
@@ -544,13 +535,8 @@ def decode_layer1(payload: bytes,
         frame_len = slots * 4
         if frame_len < 4 or pos + frame_len > n:
             raise ValueError("malformed MPEG audio: truncated frame")
-        if sample_budget is not None and \
-                (len(frames) + 1) * 12 * 32 * nch > sample_budget:
-            raise NotImplementedError(
-                f"MPEG stream exceeds the {sample_budget}-sample budget "
-                "of the stdlib decoder; raise sample_budget or route to "
-                "a codec library"
-            )
+        check_budget("MPEG stream", (len(frames) + 1) * 12 * 32 * nch,
+                     MPEG_SAMPLE_BUDGET, "sample")
 
         data_start = pos + 6 if protected else pos + 4
         br = _BitReader(payload, data_start * 8, (pos + frame_len) * 8)

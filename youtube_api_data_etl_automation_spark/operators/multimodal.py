@@ -106,23 +106,32 @@ DECODE_SCHEMA = (
 # corpora, and any hi-res Paeth-heavy image beyond it raises
 # NotImplementedError (a quarantine row with error_kind='unsupported', so
 # the refusal is recoverable row-level data, never a hung executor).
-# Pass slow_filter_budget=None to decode_image for unlimited (correctness
-# over latency), or a smaller budget for stricter per-image latency SLOs.
 # At 100 TB, route hi-res imagery through a codec library on the executors
 # and keep this stdlib path for environments without one.
 PNG_SLOW_FILTER_BYTE_BUDGET = 2_000_000
 
 # Pixel budget shared by the decoders that size a buffer from header
-# dimensions (BMP, TIFF, JPEG): the check runs right after the header
+# dimensions (BMP, PNG, TIFF, JPEG): the check runs right after the header
 # parse, before any allocation, so a forged header that declares a
 # 2-gigapixel frame is an 'unsupported' refusal, not a memory bomb
 # (caught by the r11 fuzz pass: 35 GB RSS from mutated BMP headers).
 # 16 Mpx also keeps the worst numpy/PackBits path near ~1 s.
 DECODE_PIXEL_BUDGET = 1 << 24
 
+# Decompressed bytes per payload, shared by every inflating reader
+# (archives, office/EPUB zips, PDF streams) and the text extractors'
+# output caps: a 40-byte gzip bomb can declare gigabytes, and the cap
+# refuses it at O(budget) memory.
+DECODE_BYTE_BUDGET = 1 << 26
+
+# Decoded samples per payload for the per-sample Python loops (FLAC
+# residuals, IMA/MS ADPCM nibbles; ~0.5 µs/sample each): 2M samples
+# ≈ 45 s of 44.1 kHz mono ≈ ~1 s of Python.
+DECODE_SAMPLE_BUDGET = 2_000_000
+
 
 def _png_unfilter(raw: bytes, pos: int, h: int, stride: int, bpp: int,
-                  slow_filter_budget: int | None, slow_bytes: int):
+                  slow_bytes: int):
     """Reverse PNG scanline filtering (spec §9: None/Sub/Up/Average/Paeth)
     for ONE pass of ``h`` rows of ``stride`` filtered bytes starting at
     ``pos`` in the decompressed stream (Adam7 images call this once per
@@ -134,8 +143,7 @@ def _png_unfilter(raw: bytes, pos: int, h: int, stride: int, bpp: int,
     spec's mod-256; stride is always a multiple of bpp for depth ≥ 8 and
     bpp is 1 below that); Average/Paeth are true recurrences
     (rec[x] needs rec[x-bpp]) and run a plain-Python byte loop over list
-    ints, charged against ``slow_filter_budget`` (see
-    PNG_SLOW_FILTER_BYTE_BUDGET above).
+    ints, charged against PNG_SLOW_FILTER_BYTE_BUDGET (see above).
 
     Why no numpy recurrence: the mod-256 + floor/branch nonlinearity
     kills every exact vectorization. A per-pixel numpy loop over
@@ -174,15 +182,8 @@ def _png_unfilter(raw: bytes, pos: int, h: int, stride: int, bpp: int,
             ).reshape(stride)
         elif ft in (1, 3, 4):  # Sub fallback / Average / Paeth
             slow_bytes += stride
-            if slow_filter_budget is not None and \
-                    slow_bytes > slow_filter_budget:
-                raise NotImplementedError(
-                    f"PNG exceeds the Average/Paeth byte budget "
-                    f"({slow_bytes} > {slow_filter_budget}): hi-res "
-                    "slow-filter images need a codec library; raise "
-                    "slow_filter_budget (or pass None) to force the "
-                    "pure-Python path"
-                )
+            check_budget("PNG", slow_bytes, PNG_SLOW_FILTER_BYTE_BUDGET,
+                         "Average/Paeth byte")
             lv = line.tolist()
             pv = prior.tolist()
             rec = [0] * stride
@@ -247,8 +248,7 @@ def _png_pass_samples(rows, w, ch, depth):
     return vals.astype(np.uint8).reshape(h, w, 1)
 
 
-def _decode_png(payload: bytes,
-                slow_filter_budget: int | None = PNG_SLOW_FILTER_BYTE_BUDGET):
+def _decode_png(payload: bytes):
     """Pure-stdlib PNG decode (zlib inflate + scanline unfilter), r9:
     the FULL spec variant matrix — greyscale (1/2/4/8/16-bit), truecolor
     (8/16), palette (1/2/4/8 + PLTE), grey+alpha and RGBA (8/16), both
@@ -258,7 +258,7 @@ def _decode_png(payload: bytes,
     tRNS is ignored for the same reason. Structurally broken files —
     including spec-illegal depth/color combos and out-of-range palette
     indices — raise ValueError (refuse-rather-than-misreport); the only
-    NotImplementedError left is the Average/Paeth byte budget
+    NotImplementedErrors left are the pixel and Average/Paeth byte budgets
     (recoverable 'unsupported'). Returns an HxWx3 RGB uint8 array."""
     import struct
     import sys
@@ -305,6 +305,7 @@ def _decode_png(payload: bytes,
         )
     if interlace not in (0, 1):
         raise ValueError(f"malformed PNG: interlace method {interlace}")
+    check_budget(f"PNG {w}x{h}", w * h, DECODE_PIXEL_BUDGET, "pixel")
     if color == 3:
         if plte is None or len(plte) % 3 or not plte:
             raise ValueError("malformed PNG: palette image without a "
@@ -333,8 +334,8 @@ def _decode_png(payload: bytes,
         if pw and ph:
             expected += ph * (stride_of(pw) + 1)
     # Check sizes before allocating: the inflate stops one byte past what
-    # the header declares (a deflate bomb expands no further), and the pixel
-    # buffer is allocated only once the stream matches the header exactly.
+    # the header declares (an in-budget header caps a deflate bomb), and the
+    # pixel buffer is allocated only once the stream matches it exactly.
     try:
         raw = zlib.decompressobj().decompress(
             bytes(idat), min(expected + 1, sys.maxsize))
@@ -351,8 +352,7 @@ def _decode_png(payload: bytes,
         if not pw or not ph:
             continue
         rows, rpos, slow = _png_unfilter(
-            raw, rpos, ph, stride_of(pw), bpp, slow_filter_budget, slow
-        )
+            raw, rpos, ph, stride_of(pw), bpp, slow)
         samples[y0::dy, x0::dx, :] = _png_pass_samples(rows, pw, ch, depth)
 
     if color == 3:
@@ -444,8 +444,7 @@ def _bmp_rle8(data: bytes, w: int, h: int):
     raise ValueError("malformed BMP: RLE8 ended without end-of-bitmap")
 
 
-def _decode_rgb(payload: bytes,
-                slow_filter_budget: int | None = PNG_SLOW_FILTER_BYTE_BUDGET):
+def _decode_rgb(payload: bytes):
     """Decode one image payload to (format, HxWx3 RGB array).
 
     Pure stdlib+numpy decoders for the formats that need no codec
@@ -488,11 +487,7 @@ def _decode_rgb(payload: bytes,
         top_down, hh = h < 0, abs(h)
         if w <= 0 or hh == 0:
             raise ValueError(f"malformed BMP: dimensions {w}x{h}")
-        if w * hh > DECODE_PIXEL_BUDGET:
-            raise NotImplementedError(
-                f"BMP {w}x{hh} exceeds the {DECODE_PIXEL_BUDGET}-pixel "
-                "budget; route to a codec-library executor image"
-            )
+        check_budget(f"BMP {w}x{hh}", w * hh, DECODE_PIXEL_BUDGET, "pixel")
         if bpp == 24 and comp == 0:
             stride = (w * 3 + 3) & ~3
             arr = np.frombuffer(
@@ -573,9 +568,7 @@ def _decode_rgb(payload: bytes,
         grey = np.where(bits == 1, 0, 255).astype(np.uint8)
         return "pbm", np.repeat(grey[:, :, None], 3, axis=2)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png", _decode_png(
-            payload, slow_filter_budget=slow_filter_budget
-        )
+        return "png", _decode_png(payload)
     if payload[:2] == b"\xff\xd8":
         from .jpeg import decode_baseline_jpeg
 
@@ -626,6 +619,21 @@ import struct as _struct  # noqa: E402  (scoped: only for .error)
 DECODE_ERRORS = (
     ValueError, NotImplementedError, _struct.error, KeyError, IndexError,
 )
+
+
+def check_budget(what: str, used: int, limit: int, unit: str) -> None:
+    """The one decode-budget refusal. ``used`` is a payload's declared or
+    running cost in ``unit``s (pixels, samples, bytes, chars, cues) and
+    ``limit`` the decoder's module constant, read at call time. Over the
+    limit raises NotImplementedError — a quarantine row with
+    error_kind='unsupported' — before the decoder allocates for, or
+    loops over, more than the budget; a codec-library executor can take
+    the payload from there."""
+    if used > limit:
+        raise NotImplementedError(
+            f"{what} exceeds the {unit} budget ({used} > {limit}); route "
+            "the payload to a codec-library executor"
+        )
 
 
 def _error_kind(e: Exception) -> str:
@@ -706,10 +714,7 @@ def _quarantine_map(blobs: DataFrame, fn, schema: str,
     return blobs.mapInPandas(batches, schema)
 
 
-def decode_image(
-    blobs: DataFrame,
-    slow_filter_budget: int | None = PNG_SLOW_FILTER_BYTE_BUDGET,
-) -> DataFrame:
+def decode_image(blobs: DataFrame) -> DataFrame:
     """REAL image decode for the codec-free formats (see
     :func:`_decode_rgb` for the matrix: BMP, PNM, every PNG variant,
     baseline and progressive Huffman JPEG, first-frame GIF, lossless
@@ -729,7 +734,7 @@ def decode_image(
     broken."""
 
     def one(payload: bytes) -> dict:
-        fmt, rgb = _decode_rgb(payload, slow_filter_budget=slow_filter_budget)
+        fmt, rgb = _decode_rgb(payload)
         means = rgb.reshape(-1, 3).mean(axis=0, dtype="float64")
         return {"format": fmt, "width": rgb.shape[1],
                 "height": rgb.shape[0], "mean_r": float(means[0]),
@@ -745,12 +750,6 @@ AUDIO_SCHEMA = (
 )
 
 
-# IMA ADPCM decode is a per-nibble Python recurrence (like the PNG
-# Average/Paeth loop) at ~0.5 µs/sample; the budget bounds per-payload
-# latency with the same recoverable-refusal contract. 2M samples ≈ 45 s
-# of 44.1 kHz mono ≈ ~1 s of Python.
-ADPCM_SAMPLE_BUDGET = 2_000_000
-
 _IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
 _IMA_STEPS = [
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
@@ -763,8 +762,7 @@ _IMA_STEPS = [
 ]
 
 
-def _ima_adpcm_decode(data: bytes, n_ch: int, block_align: int,
-                      sample_budget: int | None):
+def _ima_adpcm_decode(data: bytes, n_ch: int, block_align: int):
     """IMA/DVI ADPCM (WAVE format 0x11) nibble decode: per block and
     channel a 4-byte header (predictor int16, step index, reserved)
     emits the first sample, then 4-bit deltas in 4-byte-per-channel
@@ -779,13 +777,8 @@ def _ima_adpcm_decode(data: bytes, n_ch: int, block_align: int,
         (min(block_align, len(data) - off) - 4 * n_ch) * 2
         for off in range(0, len(data), block_align)
     )
-    if sample_budget is not None and total_nibbles > sample_budget:
-        raise NotImplementedError(
-            f"ADPCM payload exceeds the sample budget ({total_nibbles} > "
-            f"{sample_budget}): bulk audio decode needs a codec library; "
-            "raise adpcm_sample_budget (or pass None) to force the "
-            "pure-Python path"
-        )
+    check_budget("ADPCM payload", total_nibbles, DECODE_SAMPLE_BUDGET,
+                 "sample")
     steps, itab = _IMA_STEPS, _IMA_INDEX
     chans: list[list[int]] = [[] for _ in range(n_ch)]
     for off in range(0, len(data), block_align):
@@ -875,8 +868,7 @@ _MS_ADAPT = [230, 230, 230, 230, 307, 409, 512, 614,
              768, 614, 512, 409, 307, 230, 230, 230]
 
 
-def _ms_adpcm_decode(data: bytes, n_ch: int, block_align: int,
-                     sample_budget: int | None):
+def _ms_adpcm_decode(data: bytes, n_ch: int, block_align: int):
     """Microsoft ADPCM (WAVE format 2): per block and channel a 7-byte
     header (predictor index, initial delta, two seed samples), then
     4-bit codes (high nibble first, channel-interleaved per frame).
@@ -895,13 +887,8 @@ def _ms_adpcm_decode(data: bytes, n_ch: int, block_align: int,
         max(0, min(block_align, len(data) - off) - 7 * n_ch) * 2
         for off in range(0, len(data), block_align)
     )
-    if sample_budget is not None and total_nibbles > sample_budget:
-        raise NotImplementedError(
-            f"ADPCM payload exceeds the sample budget ({total_nibbles} > "
-            f"{sample_budget}): bulk audio decode needs a codec library; "
-            "raise adpcm_sample_budget (or pass None) to force the "
-            "pure-Python path"
-        )
+    check_budget("ADPCM payload", total_nibbles, DECODE_SAMPLE_BUDGET,
+                 "sample")
     chans: list[list[int]] = [[] for _ in range(n_ch)]
     for off in range(0, len(data), block_align):
         block = data[off : off + block_align]
@@ -942,8 +929,7 @@ def _ms_adpcm_decode(data: bytes, n_ch: int, block_align: int,
     ) if n_frames else np.zeros((0, n_ch), dtype=np.int64)
 
 
-def _decode_pcm(payload: bytes,
-                adpcm_sample_budget: int | None = ADPCM_SAMPLE_BUDGET):
+def _decode_pcm(payload: bytes):
     """Decode one RIFF/WAVE payload to (sample_rate, samples array shaped
     (frames, channels)).
 
@@ -962,7 +948,7 @@ def _decode_pcm(payload: bytes,
       array);
     - format 0x11 IMA ADPCM and format 2 Microsoft ADPCM (4-bit) —
       exact integer nibble recurrences, int16-range samples, capped by
-      ``adpcm_sample_budget``;
+      DECODE_SAMPLE_BUDGET;
     - formats 6/7 G.711 A-law/µ-law — 256-entry LUT expand.
 
     MP3-in-WAV / unknown formats raise NotImplementedError
@@ -1046,9 +1032,7 @@ def _decode_pcm(payload: bytes,
             raise NotImplementedError(
                 f"MS-ADPCM at {bits} bits/sample not supported (spec is 4)"
             )
-        samples = _ms_adpcm_decode(
-            data, n_ch, block_align, adpcm_sample_budget
-        )
+        samples = _ms_adpcm_decode(data, n_ch, block_align)
         if fact is not None and fact < samples.shape[0]:
             samples = samples[:fact]
         return int(rate), samples
@@ -1058,9 +1042,7 @@ def _decode_pcm(payload: bytes,
             raise NotImplementedError(
                 f"ADPCM at {bits} bits/sample not supported (IMA is 4)"
             )
-        samples = _ima_adpcm_decode(
-            data, n_ch, block_align, adpcm_sample_budget
-        )
+        samples = _ima_adpcm_decode(data, n_ch, block_align)
         if fact is not None and fact < samples.shape[0]:
             samples = samples[:fact]
         return int(rate), samples
@@ -1142,10 +1124,7 @@ def _exact_sumsq(s) -> int:
     )
 
 
-def decode_audio(
-    blobs: DataFrame,
-    adpcm_sample_budget: int | None = ADPCM_SAMPLE_BUDGET,
-) -> DataFrame:
+def decode_audio(blobs: DataFrame) -> DataFrame:
     """REAL audio decode for RIFF/WAVE — integer PCM 8/16/24/32, IEEE
     float 32/64 (scaled to the int16 grid, see _decode_pcm), G.711
     A-law/µ-law, and IMA + Microsoft ADPCM (r9 completes the matrix) —
@@ -1163,7 +1142,7 @@ def decode_audio(
     import math
 
     def one(raw: bytes) -> dict:
-        rate, s = _decode_pcm(raw, adpcm_sample_budget=adpcm_sample_budget)
+        rate, s = _decode_pcm(raw)
         n = s.size
         if s.dtype.kind == "f":
             peak = int(round(float(abs(s).max()))) if n else 0

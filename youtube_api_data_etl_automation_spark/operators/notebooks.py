@@ -43,7 +43,7 @@ import re
 
 from pyspark.sql import DataFrame
 
-from .archives import ARCHIVE_BYTE_BUDGET
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 # CSI escape sequences (colored tracebacks, progress bars) are pure
 # noise in flattened outputs — stripped before the text joins the doc
@@ -101,13 +101,10 @@ def _output_text(out: dict) -> str:
     return ""
 
 
-def _extract_ipynb(raw: bytes, budget: int | None,
-                   include_outputs: bool) -> dict:
+def _extract_ipynb(raw: bytes, include_outputs: bool) -> dict:
     if not raw:
         raise ValueError("empty/NULL ipynb payload")
-    if budget is not None and len(raw) > budget:
-        raise NotImplementedError(
-            f"ipynb payload exceeds the {budget}-byte budget")
+    check_budget("ipynb payload", len(raw), DECODE_BYTE_BUDGET, "byte")
     try:
         nb = json.loads(raw.decode("utf-8", errors="replace"))
     except json.JSONDecodeError as e:
@@ -158,9 +155,7 @@ def _extract_ipynb(raw: bytes, budget: int | None,
             return
         parts.append(t)
         out_len += len(t)
-        if budget is not None and out_len > budget:
-            raise NotImplementedError(
-                f"ipynb text exceeds the {budget}-byte budget")
+        check_budget("ipynb text", out_len, DECODE_BYTE_BUDGET, "byte")
 
     for cell in cells:
         if not isinstance(cell, dict):
@@ -198,15 +193,12 @@ def _extract_ipynb(raw: bytes, budget: int | None,
 
 
 def ipynb_text(blobs: DataFrame,
-               byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
                include_outputs: bool = False) -> DataFrame:
     """``(doc_id, payload)`` → ``(doc_id, format, language, n_cells,
     n_code_cells, n_md_cells, n_chars, text[, error, error_kind])`` —
     .ipynb JSON flattened to markdown-plus-fenced-code text (see
     module docstring for the container contract)."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
-        return _extract_ipynb(raw, byte_budget, include_outputs)
+        return _extract_ipynb(raw, include_outputs)
 
     return _quarantine_map(blobs, one, IPYNB_TEXT_SCHEMA)

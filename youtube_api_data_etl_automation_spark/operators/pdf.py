@@ -58,6 +58,13 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from .multimodal import (
+    DECODE_BYTE_BUDGET,
+    _quarantine_map,
+    _row_or_error,
+    check_budget,
+)
+
 # ---------------------------------------------------------------------------
 # object-syntax parser
 # ---------------------------------------------------------------------------
@@ -324,7 +331,7 @@ _UNSUPPORTED_FILTERS = {
 }
 
 
-def _lzw_decode_pdf(data: bytes, budget: int | None) -> bytes:
+def _lzw_decode_pdf(data: bytes) -> bytes:
     """PDF LZWDecode — the TIFF 6.0 machine (MSB-first, 9-bit start,
     early change; operators/tiff.py `_lzw_decode` documents the variant
     vs GIF) but with a byte BUDGET instead of an exact expected length:
@@ -367,12 +374,7 @@ def _lzw_decode_pdf(data: bytes, budget: int | None) -> bytes:
         else:
             raise ValueError(f"malformed PDF: LZW code {code} out of range")
         out += entry
-        if budget is not None and len(out) > budget:
-            raise NotImplementedError(
-                f"PDF stream exceeds the inflate budget ({len(out)} > "
-                f"{budget} bytes): raise inflate_budget (or pass None) "
-                "to force the decode"
-            )
+        check_budget("PDF stream", len(out), DECODE_BYTE_BUDGET, "inflate")
         if prev is not None and len(table) < 4096:
             table.append(prev + entry[:1])
         if len(table) == (1 << width) - 1 and width < 12:
@@ -380,19 +382,13 @@ def _lzw_decode_pdf(data: bytes, budget: int | None) -> bytes:
         prev = entry
 
 
-def _flate_decode(data: bytes, budget: int | None) -> bytes:
+def _flate_decode(data: bytes) -> bytes:
     d = zlib.decompressobj()
     try:
-        if budget is None:
-            return d.decompress(data)
-        out = d.decompress(data, budget + 1)
+        out = d.decompress(data, DECODE_BYTE_BUDGET + 1)
     except zlib.error as e:
         raise ValueError(f"malformed PDF: bad Flate stream ({e})")
-    if len(out) > budget:
-        raise NotImplementedError(
-            f"PDF stream exceeds the inflate budget (> {budget} bytes): "
-            "raise inflate_budget (or pass None) to force the decode"
-        )
+    check_budget("PDF stream", len(out), DECODE_BYTE_BUDGET, "inflate")
     return out
 
 
@@ -517,8 +513,7 @@ def _as_list(v) -> list:
     return v if isinstance(v, list) else [v]
 
 
-def _decode_stream(sdict: dict, raw: bytes, resolve,
-                   budget: int | None) -> bytes:
+def _decode_stream(sdict: dict, raw: bytes, resolve) -> bytes:
     """Apply the /Filter chain (with /DecodeParms) to one stream."""
     filters = [str(f) for f in _as_list(resolve(sdict.get("Filter")))]
     parms = _as_list(resolve(sdict.get("DecodeParms",
@@ -528,14 +523,14 @@ def _decode_stream(sdict: dict, raw: bytes, resolve,
         p = resolve(parms[i]) if i < len(parms) else None
         p = p if isinstance(p, dict) else {}
         if name in ("FlateDecode", "Fl"):
-            data = _flate_decode(data, budget)
+            data = _flate_decode(data)
         elif name in ("LZWDecode", "LZW"):
             if resolve(p.get("EarlyChange", 1)) != 1:
                 raise NotImplementedError(
                     "PDF LZWDecode EarlyChange=0 streams are not "
                     "supported (nonstandard late-change variant)"
                 )
-            data = _lzw_decode_pdf(data, budget)
+            data = _lzw_decode_pdf(data)
         elif name in ("ASCIIHexDecode", "AHx"):
             data = _ascii_hex_decode(data)
         elif name in ("ASCII85Decode", "A85"):
@@ -585,11 +580,10 @@ class _Doc:
     wins (incremental-update semantics). Object-stream members fill in
     numbers with no standalone definition."""
 
-    def __init__(self, buf: bytes, budget: int | None):
+    def __init__(self, buf: bytes):
         if not buf.startswith(b"%PDF-"):
             raise ValueError("malformed PDF: missing %PDF- header")
         self.buf = buf
-        self.budget = budget
         self.version = buf[5:8].decode("latin-1", "replace")
         self.objects: dict[int, object] = {}
         self.trailers: list[dict] = []
@@ -604,11 +598,7 @@ class _Doc:
         n_seen = 0
         for m in _OBJ_RE.finditer(self.buf):
             n_seen += 1
-            if n_seen > PDF_MAX_OBJECTS:
-                raise NotImplementedError(
-                    f"PDF exceeds the object budget (> {PDF_MAX_OBJECTS} "
-                    "objects); raise PDF_MAX_OBJECTS to force the parse"
-                )
+            check_budget("PDF", n_seen, PDF_MAX_OBJECTS, "object")
             num = int(m.group(1))
             p = _Parser(self.buf, m.end())
             try:
@@ -682,14 +672,10 @@ class _Doc:
         v = self.resolve(v)
         if not (isinstance(v, tuple) and v[0] == "stream"):
             raise ValueError("malformed PDF: expected a stream object")
-        data = _decode_stream(v[1], v[2], self.resolve, self.budget)
+        data = _decode_stream(v[1], v[2], self.resolve)
         self._inflated += len(data)
-        if self.budget is not None and self._inflated > self.budget:
-            raise NotImplementedError(
-                f"PDF exceeds the cumulative inflate budget "
-                f"({self._inflated} > {self.budget} bytes): raise "
-                "inflate_budget (or pass None) to force the decode"
-            )
+        check_budget("PDF", self._inflated, DECODE_BYTE_BUDGET,
+                     "cumulative inflate")
         return data
 
     # -- object streams ----------------------------------------------------
@@ -903,7 +889,7 @@ def _skip_inline_image(p: _Parser) -> None:
 
 
 def _extract_page_text(doc: _Doc, content: bytes, resources: dict,
-                       text_budget: int | None, depth: int = 0) -> str:
+                       depth: int = 0) -> str:
     """Run the text-relevant subset of the content-stream operator set."""
     if depth > 8:
         raise ValueError("malformed PDF: Form XObject nesting too deep")
@@ -934,11 +920,7 @@ def _extract_page_text(doc: _Doc, content: bytes, resources: dict,
         if not s:
             return
         total += len(s)
-        if text_budget is not None and total > text_budget:
-            raise NotImplementedError(
-                f"PDF exceeds the text budget (> {text_budget} chars): "
-                "raise text_budget (or pass None) to force the extract"
-            )
+        check_budget("PDF", total, PDF_TEXT_BUDGET, "text")
         out.append(s)
         line_len = 0 if s.endswith("\n") else line_len + len(s)
 
@@ -1013,7 +995,7 @@ def _extract_page_text(doc: _Doc, content: bytes, resources: dict,
                     emit(_extract_page_text(
                         doc, doc.stream_data(xo),
                         xres if isinstance(xres, dict) else resources,
-                        text_budget, depth + 1,
+                        depth + 1,
                     ))
         operands = []
     return "".join(out)
@@ -1023,17 +1005,13 @@ def _extract_page_text(doc: _Doc, content: bytes, resources: dict,
 # top-level per-payload entry points
 # ---------------------------------------------------------------------------
 
-PDF_INFLATE_BUDGET = 64 << 20  # decompressed bytes per document
-PDF_TEXT_BUDGET = 16 << 20     # extracted chars per document
+PDF_TEXT_BUDGET = 16 << 20  # extracted chars per document
 
 
-def extract_pdf_text(payload: bytes,
-                     inflate_budget: int | None = PDF_INFLATE_BUDGET,
-                     text_budget: int | None = PDF_TEXT_BUDGET,
-                     ) -> tuple[str, int, str]:
+def extract_pdf_text(payload: bytes) -> tuple[str, int, str]:
     """(version, n_pages, text) for one PDF payload. Pages join on
     ``\\f`` (the pdftotext convention); per-page text is stripped."""
-    doc = _Doc(bytes(payload), inflate_budget)
+    doc = _Doc(bytes(payload))
     pages = doc.pages()
     texts = []
     for page in pages:
@@ -1043,7 +1021,7 @@ def extract_pdf_text(payload: bytes,
             chunks.append(doc.stream_data(c))
         content = b"\n".join(chunks)
         texts.append(_extract_page_text(
-            doc, content, page["__resources__"], text_budget).strip())
+            doc, content, page["__resources__"]).strip())
     return doc.version, len(pages), "\f".join(texts)
 
 
@@ -1074,11 +1052,7 @@ def probe_pdf(payload: bytes) -> dict:
     objects: dict[int, tuple[int, int]] = {}
     for m in _OBJ_RE.finditer(buf):
         n_objects += 1
-        if n_objects > PDF_MAX_OBJECTS:
-            raise NotImplementedError(
-                f"PDF exceeds the object budget (> {PDF_MAX_OBJECTS} "
-                "objects)"
-            )
+        check_budget("PDF", n_objects, PDF_MAX_OBJECTS, "object")
         objects[int(m.group(1))] = (m.start(), m.end())
     if not objects:
         raise ValueError("malformed PDF: no objects found")
@@ -1150,9 +1124,7 @@ PDF_META_SCHEMA = (
 )
 
 
-def pdf_text(blobs: DataFrame,
-             inflate_budget: int | None = PDF_INFLATE_BUDGET,
-             text_budget: int | None = PDF_TEXT_BUDGET) -> DataFrame:
+def pdf_text(blobs: DataFrame) -> DataFrame:
     """REAL PDF text extraction over ``(doc_id, payload)`` — one row per
     document: version, page count, extracted text (pages joined on
     ``\\f``). Same Arrow-batched mapInPandas + quarantine contract as
@@ -1164,11 +1136,8 @@ def pdf_text(blobs: DataFrame,
     If the input carries a ``source`` string column it passes through
     unchanged — provenance (a crawl URI) rides along without a
     join-back shuffle."""
-    from .multimodal import _quarantine_map
-
     def one(payload):
-        ver, n_pages, text = extract_pdf_text(
-            payload, inflate_budget=inflate_budget, text_budget=text_budget)
+        ver, n_pages, text = extract_pdf_text(payload)
         return {"format": "pdf", "version": ver, "n_pages": n_pages,
                 "n_chars": len(text), "text": text}
 
@@ -1184,8 +1153,6 @@ def pdf_meta(blobs: DataFrame) -> DataFrame:
     """Structural probe over ``(doc_id, payload)``: version, object and
     page counts, encryption flag — no stream decompression, so a probe
     over a crawl partition costs O(bytes scanned), never O(inflated)."""
-    from .multimodal import _quarantine_map
-
     def one(payload):
         return {"format": "pdf", **probe_pdf(payload)}
 
@@ -1304,7 +1271,7 @@ def _bilevel_image_setup(doc: "_Doc", sdict, raw, filters,
         sub = dict(sdict)
         sub[_Name("Filter")] = [_Name(f) for f in filters[:-1]]
         sub[_Name("DecodeParms")] = parms_list[: len(filters) - 1]
-        data = _decode_stream(sub, raw, doc.resolve, doc.budget)
+        data = _decode_stream(sub, raw, doc.resolve)
     else:
         data = raw
     parm = None
@@ -1398,7 +1365,7 @@ def _extract_one_image(doc: "_Doc", obj) -> tuple[str, int, int, bytes]:
             parms = _as_list(doc.resolve(
                 sdict.get("DecodeParms", sdict.get("DP"))))
             sub[_Name("DecodeParms")] = parms[: len(filters) - 1]
-            data = _decode_stream(sub, raw, doc.resolve, doc.budget)
+            data = _decode_stream(sub, raw, doc.resolve)
         else:
             data = raw
         return "jpeg", w, h, data
@@ -1532,17 +1499,13 @@ def _extract_one_image(doc: "_Doc", obj) -> tuple[str, int, int, bytes]:
     return fmt, w, h, payload
 
 
-def extract_pdf_images(payload: bytes,
-                       inflate_budget: int | None = PDF_INFLATE_BUDGET,
-                       ) -> list[dict]:
+def extract_pdf_images(payload: bytes) -> list[dict]:
     """All image XObjects of one PDF, page order, Form XObjects walked
     recursively (cycle-guarded). One dict per image encountered:
     ``{page_idx, image_idx, name, format, width, height, payload}`` on
     success, or ``{..., error, error_kind}`` when that single image
     refuses — one bad image never hides the document's other images."""
-    from .multimodal import _row_or_error
-
-    doc = _Doc(bytes(payload), inflate_budget)
+    doc = _Doc(bytes(payload))
     out: list[dict] = []
     per_page_count: dict[int, int] = {}
 
@@ -1590,9 +1553,7 @@ def extract_pdf_images(payload: bytes,
     return out
 
 
-def pdf_images(blobs: DataFrame,
-               inflate_budget: int | None = PDF_INFLATE_BUDGET,
-               ) -> DataFrame:
+def pdf_images(blobs: DataFrame) -> DataFrame:
     """PDF payloads → one row per embedded image XObject, as a payload
     the image pipeline decodes directly: DCTDecode streams pass through
     as standalone JPEGs, fully-decodable chains unpack to P5/P6 PNM,
@@ -1603,9 +1564,4 @@ def pdf_images(blobs: DataFrame,
     NULL page_idx; a refused IMAGE (JPX/arithmetic-JBIG2, ImageMask,
     non-8-bit, exotic color space) yields its own error row while the
     document's other images still extract."""
-    from .multimodal import _quarantine_map
-
-    return _quarantine_map(
-        blobs,
-        lambda p: extract_pdf_images(p, inflate_budget=inflate_budget),
-        PDF_IMAGES_SCHEMA)
+    return _quarantine_map(blobs, extract_pdf_images, PDF_IMAGES_SCHEMA)

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .archives import ARCHIVE_BYTE_BUDGET
+from .multimodal import DECODE_BYTE_BUDGET, _quarantine_map, check_budget
 
 RTF_TEXT_SCHEMA = (
     "doc_id bigint, format string, n_groups int, n_chars int, "
@@ -64,7 +64,7 @@ _CHAR_WORDS = {
 }
 
 
-def _extract_rtf(raw: bytes, budget: int | None) -> tuple[int, str]:
+def _extract_rtf(raw: bytes) -> tuple[int, str]:
     """(n_groups, text) from one RTF payload — module docstring has
     the subset contract."""
     if not raw:
@@ -86,9 +86,7 @@ def _extract_rtf(raw: bytes, budget: int | None) -> tuple[int, str]:
             return
         out.append(s)
         out_len += len(s)
-        if budget is not None and out_len > budget:
-            raise NotImplementedError(
-                f"rtf text exceeds the {budget}-byte budget")
+        check_budget("rtf text", out_len, DECODE_BYTE_BUDGET, "byte")
 
     while i < n:
         c = raw[i]
@@ -230,18 +228,14 @@ def _extract_rtf(raw: bytes, budget: int | None) -> tuple[int, str]:
     return n_groups, text
 
 
-def rtf_text(blobs: DataFrame,
-             byte_budget: int | None = ARCHIVE_BYTE_BUDGET,
-             ) -> DataFrame:
+def rtf_text(blobs: DataFrame) -> DataFrame:
     """REAL RTF text extraction over ``(doc_id, payload)`` — one row
     per document: group count, char count, visible text. Quarantine
     contract; structurally broken payloads (no magic, unbalanced
     groups, bad escapes) are 'corrupt', oversized output refuses as
     'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(raw):
-        n_groups, text = _extract_rtf(raw, byte_budget)
+        n_groups, text = _extract_rtf(raw)
         return {"format": "rtf", "n_groups": n_groups,
                 "n_chars": len(text), "text": text}
 

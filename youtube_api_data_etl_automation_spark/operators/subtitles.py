@@ -25,6 +25,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from .multimodal import _quarantine_map, check_budget
+
 SUBTITLE_SCHEMA = (
     "doc_id bigint, format string, n_cues int, duration_sec double, "
     "n_chars int, text string, error string, error_kind string"
@@ -44,9 +46,7 @@ def _ts_seconds(m: re.Match, base: int) -> float:
             + int(m.group(base + 2)) + int(m.group(base + 3)) / 1000.0)
 
 
-def parse_subtitles(payload: bytes,
-                    cue_budget: int | None = SUBTITLE_CUE_BUDGET,
-                    ) -> tuple[str, int, float, str]:
+def parse_subtitles(payload: bytes) -> tuple[str, int, float, str]:
     """(format, n_cues, duration_sec, text) for one SRT/VTT payload."""
     raw = bytes(payload)
     if raw[:3] == b"\xef\xbb\xbf":  # UTF-8 BOM (common in SRT)
@@ -121,27 +121,20 @@ def parse_subtitles(payload: bytes,
             i += 1
         if block:
             cues.append(" ".join(block))
-        if cue_budget is not None and len(cues) > cue_budget:
-            raise NotImplementedError(
-                f"subtitle payload exceeds the {cue_budget}-cue budget; "
-                "raise cue_budget (or pass None)"
-            )
+        check_budget("subtitle payload", len(cues), SUBTITLE_CUE_BUDGET,
+                     "cue")
     return fmt, len(cues), last_end, "\n".join(cues)
 
 
-def subtitles_text(blobs: DataFrame,
-                   cue_budget: int | None = SUBTITLE_CUE_BUDGET,
-                   ) -> DataFrame:
+def subtitles_text(blobs: DataFrame) -> DataFrame:
     """SRT/WebVTT caption payloads → one text row each: format, cue
     count, spoken duration (max cue end), extracted text (one line per
     cue, styling tags stripped). Quarantine contract; TTML/SSA refuse
     as 'unsupported'."""
-    from .multimodal import _quarantine_map
-
     def one(payload):
         if not payload:
             raise ValueError("empty/NULL subtitle payload")
-        fmt, n_cues, dur, text = parse_subtitles(payload, cue_budget)
+        fmt, n_cues, dur, text = parse_subtitles(payload)
         return {"format": fmt, "n_cues": n_cues,
                 "duration_sec": dur, "n_chars": len(text), "text": text}
 

@@ -1,7 +1,8 @@
-"""Baseline TIFF decoder (r10) — reuses the EXIF TIFF-IFD reader.
+"""Baseline TIFF decoder (r10) and the TIFF-IFD reader it shares with
+the EXIF probe.
 
 TIFF 6.0's baseline profile is plain struct parsing over the same IFD
-machinery operators/mediameta.py already walks for EXIF: strip-based
+machinery operators/mediameta.py walks for EXIF: strip-based
 storage with four self-contained compressions — none (1), LZW (5,
 the dominant archival-scan compression; MSB-first early-change variant,
 see ``_lzw_decode``), deflate (8 and the old 32946 code, stdlib zlib
@@ -21,9 +22,43 @@ family's recoverable-refusal contract.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
-from .multimodal import DECODE_PIXEL_BUDGET
+from .multimodal import DECODE_PIXEL_BUDGET, check_budget
+
+# TIFF field types this reader needs (Exif 2.x / TIFF 6.0; 5=RATIONAL)
+_TIFF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1}
+
+
+def _tiff_ifd_entries(payload: bytes, tiff0: int, ifd_off: int, lt: str):
+    """Yield (tag, field_type, count, value_bytes) for one IFD; values
+    ≤4 bytes are inline, larger ones live at a u32 offset from the TIFF
+    header. Bounds-checked — truncation refuses (ValueError)."""
+    at = tiff0 + ifd_off
+    if at + 2 > len(payload):
+        raise ValueError("malformed EXIF: truncated IFD count")
+    (n,) = struct.unpack_from(lt + "H", payload, at)
+    at += 2
+    if at + 12 * n > len(payload):
+        raise ValueError("malformed EXIF: truncated IFD entries")
+    for i in range(n):
+        tag, ftype = struct.unpack_from(lt + "HH", payload, at + 12 * i)
+        (count,) = struct.unpack_from(lt + "I", payload, at + 12 * i + 4)
+        size = _TIFF_TYPE_SIZES.get(ftype, 0) * count
+        if size and size <= 4:
+            vb = payload[at + 12 * i + 8 : at + 12 * i + 8 + size]
+        elif size:
+            (off,) = struct.unpack_from(lt + "I", payload, at + 12 * i + 8)
+            if tiff0 + off + size > len(payload):
+                raise ValueError(
+                    f"malformed EXIF: tag 0x{tag:04x} value out of bounds"
+                )
+            vb = payload[tiff0 + off : tiff0 + off + size]
+        else:
+            vb = b""  # type this reader doesn't decode (RATIONAL etc.)
+        yield tag, ftype, count, vb
 
 
 def _unpackbits(data: bytes, expected: int) -> bytes:
@@ -129,8 +164,6 @@ def _tag_values(vb: bytes, ftype: int, count: int, lt: str) -> list[int]:
     fmt = {1: "B", 3: "H", 4: "I"}.get(ftype)
     if fmt is None:
         raise ValueError(f"malformed TIFF: field type {ftype} for array")
-    import struct
-
     return list(struct.unpack_from(lt + fmt * count, vb, 0))
 
 
@@ -362,8 +395,6 @@ def _ifd_chain(payload: bytes, lt: str, stop_after: int | None = None,
     walking it would flip previously-decodable payloads to corrupt).
     ``max_pages`` bounds a pathological chain with an honest refusal,
     never a silent truncation."""
-    import struct
-
     (off,) = struct.unpack_from(lt + "I", payload, 4)
     offs: list[int] = []
     seen: set[int] = set()
@@ -390,9 +421,7 @@ def _ifd_chain(payload: bytes, lt: str, stop_after: int | None = None,
     return offs
 
 
-def decode_tiff(payload: bytes,
-                pixel_budget: int | None = DECODE_PIXEL_BUDGET,
-                page: int = 0) -> np.ndarray:
+def decode_tiff(payload: bytes, page: int = 0) -> np.ndarray:
     """Decode a baseline TIFF payload to an (h, w, 3) uint8 RGB array.
     ``page`` selects the IFD in the page chain (r13: multi-page TIFFs
     are the normal container for scanned/fax documents — enumerate
@@ -407,18 +436,13 @@ def decode_tiff(payload: bytes,
     if page >= len(chain):
         raise ValueError(
             f"malformed TIFF: page {page} of a {len(chain)}-page file")
-    return _decode_ifd(payload, lt, chain[page], pixel_budget)
+    return _decode_ifd(payload, lt, chain[page])
 
 
-def _decode_ifd(payload: bytes, lt: str, ifd0: int,
-                pixel_budget: int | None) -> np.ndarray:
+def _decode_ifd(payload: bytes, lt: str, ifd0: int) -> np.ndarray:
     """Decode ONE IFD's image (the body shared by the page-selected
     public API and the multi-page extractor, which walks the chain
     once and decodes by offset — O(pages), r13 review fix)."""
-    import struct
-
-    from .mediameta import _tiff_ifd_entries
-
     tags: dict[int, tuple[int, int, bytes]] = {}
     for tag, ftype, count, vb in _tiff_ifd_entries(payload, 0, ifd0, lt):
         tags[tag] = (ftype, count, vb)
@@ -439,11 +463,7 @@ def _decode_ifd(payload: bytes, lt: str, ifd0: int,
     h = scalar(257)
     if w == 0 or h == 0:
         raise ValueError(f"malformed TIFF: zero dimension ({w}x{h})")
-    if pixel_budget is not None and w * h > pixel_budget:
-        raise NotImplementedError(
-            f"TIFF {w}x{h} exceeds the {pixel_budget}-pixel budget; "
-            "raise pixel_budget or route to a codec library"
-        )
+    check_budget(f"TIFF {w}x{h}", w * h, DECODE_PIXEL_BUDGET, "pixel")
     compression = scalar(259, default=1)
     # FillOrder 2 is handled on the CCITT path (derived bit reversal);
     # for every other compression the bit order changes the entropy
@@ -642,9 +662,7 @@ TIFF_PAGES_SCHEMA = (
 )
 
 
-def extract_tiff_pages(payload: bytes,
-                       pixel_budget: int | None = DECODE_PIXEL_BUDGET,
-                       ) -> list[dict]:
+def extract_tiff_pages(payload: bytes) -> list[dict]:
     """Every page of a (possibly multi-page) TIFF as a P6 PPM payload
     row dict; per-page failures — including bug-shaped ones, the full
     DECODE_ERRORS set — yield their own error rows while the other
@@ -659,7 +677,7 @@ def extract_tiff_pages(payload: bytes,
     lt = "<" if payload[:2] == b"II" else ">"
 
     def page_row(off):
-        rgb = _decode_ifd(payload, lt, off, pixel_budget)
+        rgb = _decode_ifd(payload, lt, off)
         h, w = rgb.shape[:2]
         return {"format": "ppm", "width": int(w), "height": int(h),
                 "payload": b"P6\n%d %d\n255\n" % (w, h) + rgb.tobytes()}
@@ -671,8 +689,7 @@ def extract_tiff_pages(payload: bytes,
             for page, off in enumerate(chain)]
 
 
-def tiff_page_images(blobs,
-                     pixel_budget: int | None = DECODE_PIXEL_BUDGET):
+def tiff_page_images(blobs):
     """TIFF payload table → one row per PAGE, each a standalone P6 PPM
     the image pipeline decodes directly (multi-page TIFF is the normal
     fax/scan-archive container). Two-level quarantine through the
@@ -684,7 +701,4 @@ def tiff_page_images(blobs,
     decode_image / image_hashes directly."""
     from .multimodal import _quarantine_map
 
-    return _quarantine_map(
-        blobs,
-        lambda p: extract_tiff_pages(p, pixel_budget=pixel_budget),
-        TIFF_PAGES_SCHEMA)
+    return _quarantine_map(blobs, extract_tiff_pages, TIFF_PAGES_SCHEMA)

@@ -43,9 +43,11 @@ import struct
 
 import numpy as np
 
+from .multimodal import check_budget
+
 # Per-image pixel budget for the per-pixel Python LZ77 loop (~1 µs/px).
 # 4 Mpx ≈ 4 s worst case per payload — bounded; beyond it the decoder
-# refuses recoverably rather than stalling a core. None disables.
+# refuses recoverably rather than stalling a core.
 VP8L_PIXEL_BUDGET = 1 << 22
 
 # Code-length symbols are transmitted in this fixed permutation so the
@@ -495,8 +497,7 @@ def _palette_width_bits(size: int) -> int:
     return 0
 
 
-def decode_vp8l(chunk: bytes,
-                pixel_budget: int | None = VP8L_PIXEL_BUDGET) -> np.ndarray:
+def decode_vp8l(chunk: bytes) -> np.ndarray:
     """Decode a VP8L chunk payload (starting at the 0x2F signature) to an
     (h, w, 4) uint8 RGBA array."""
     if not chunk or chunk[0] != 0x2F:
@@ -507,12 +508,7 @@ def decode_vp8l(chunk: bytes,
     br.read(1)  # alpha-is-used hint
     if br.read(3) != 0:
         raise ValueError("malformed VP8L: unknown version")
-    if pixel_budget is not None and w * h > pixel_budget:
-        raise NotImplementedError(
-            f"VP8L {w}x{h} exceeds the {pixel_budget}-pixel budget of the "
-            "stdlib per-pixel decoder; raise pixel_budget or route to a "
-            "codec library"
-        )
+    check_budget(f"VP8L {w}x{h}", w * h, VP8L_PIXEL_BUDGET, "pixel")
 
     # transforms, read order retained for reverse application
     transforms = []
@@ -569,9 +565,7 @@ def decode_vp8l(chunk: bytes,
     return rgba
 
 
-def decode_webp_lossless(payload: bytes,
-                         pixel_budget: int | None = VP8L_PIXEL_BUDGET,
-                         ) -> np.ndarray:
+def decode_webp_lossless(payload: bytes) -> np.ndarray:
     """Decode a RIFF/WEBP container holding a VP8L chunk. Lossy VP8 (and
     VP8X-wrapped streams) still refuse — only the lossless bitstream is
     self-contained enough to decode without a codec library.
@@ -599,4 +593,4 @@ def decode_webp_lossless(payload: bytes,
     chunk = payload[20 : 20 + clen]
     if len(chunk) < clen:
         raise ValueError("malformed WebP: truncated VP8L chunk")
-    return decode_vp8l(chunk, pixel_budget=pixel_budget)
+    return decode_vp8l(chunk)
