@@ -3,6 +3,8 @@ idempotent re-run, dimension overwrite."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from youtube_api_data_etl_automation_spark.operators.incremental import (
@@ -14,6 +16,20 @@ from youtube_api_data_etl_automation_spark.operators.incremental import (
 
 def _orders(spark, lo, hi):
     return spark.range(lo, hi).select(F.col("id").alias("videoId"), (F.col("id") * 2).alias("views"))
+
+
+def _sink_state(spark, sink, key):
+    """(rows, distinct keys counting NULL as one, .parquet files) of a sink."""
+    df = spark.read.parquet(sink)
+    files = [f for _, _, fs in os.walk(sink) for f in fs if f.endswith(".parquet")]
+    return df.count(), df.select(key).distinct().count(), len(files)
+
+
+def _assert_zero_row_rerun(before, after):
+    """A zero-row append leaves rows and keys as they were and, because
+    the write still runs, adds at most one (schema-only) part file."""
+    assert after[:2] == before[:2]
+    assert before[2] <= after[2] <= before[2] + 1
 
 
 def test_select_new_is_anti_join(spark):
@@ -43,10 +59,10 @@ def test_append_delta_idempotent(spark, tmp_path):
     assert append_delta(_orders(spark, 0, 800), sink, "videoId") == 300
     assert spark.read.parquet(sink).count() == 800
     # exact re-run: no-op (idempotent under at-least-once retries)
+    before = _sink_state(spark, sink, "videoId")
+    assert before[:2] == (800, 800)
     assert append_delta(_orders(spark, 0, 800), sink, "videoId") == 0
-    df = spark.read.parquet(sink)
-    assert df.count() == 800
-    assert df.groupBy("videoId").count().filter("count > 1").count() == 0
+    _assert_zero_row_rerun(before, _sink_state(spark, sink, "videoId"))
 
 
 def test_overwrite_dim(spark, tmp_path):
@@ -118,7 +134,8 @@ def test_null_key_append_stays_idempotent(spark, tmp_path):
     sink = str(tmp_path / "null_sink")
     delta = spark.createDataFrame([("k1", 1), (None, 2)], "key string, v int")
     assert append_delta(delta, sink, "key") == 2
+    before = _sink_state(spark, sink, "key")
+    assert before[:2] == (2, 2)
     # retry of the identical delta: both keys (incl. NULL) already present
     assert append_delta(delta, sink, "key") == 0
-    rows = spark.read.parquet(sink).collect()
-    assert len(rows) == 2
+    _assert_zero_row_rerun(before, _sink_state(spark, sink, "key"))

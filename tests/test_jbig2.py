@@ -158,9 +158,9 @@ def test_malformed_is_loud():
     # no page info at all
     with pytest.raises(ValueError, match="no page information"):
         J.decode_jbig2(_seg(1, 39, 1, _region(img)))
-    # page/pixel budget
+    # an over-budget region is well formed: it refuses as unsupported
     huge = struct.pack(">IIII", 1 << 16, 1 << 16, 0, 0) + b"\x00\x01"
-    with pytest.raises(ValueError, match="budget"):
+    with pytest.raises(NotImplementedError, match="budget"):
         J.decode_jbig2(base + _seg(1, 39, 1, huge))
 
 
@@ -220,11 +220,25 @@ def test_cumulative_region_budget(monkeypatch):
     body = b"".join(_seg(i + 1, 39, 1, _region(img))
                     for i in range(5))
     monkeypatch.setattr(J, "JBIG2_PIXEL_BUDGET", 64 * 64 * 3)
-    with pytest.raises(ValueError, match="cumulative"):
+    with pytest.raises(NotImplementedError, match="cumulative"):
         J.decode_jbig2(base + body)
     # under the cap the same shape composes fine
     monkeypatch.setattr(J, "JBIG2_PIXEL_BUDGET", 64 * 64 * 6)
     assert J.decode_jbig2(base + body).shape == (64, 64)
+
+
+def test_over_budget_page_is_unsupported():
+    """A well-formed page over the pixel budget (41 x 2^31 declared in its
+    page-information segment) refuses before allocating, and quarantines
+    as 'unsupported' like every other decoder's budget refusal."""
+    from youtube_api_data_etl_automation_spark.operators.multimodal import (
+        _error_kind,
+    )
+
+    page = _seg(0, 48, 1, _page_info(41, 1 << 31)) + _seg(1, 49, 1, b"")
+    with pytest.raises(NotImplementedError, match="budget") as e:
+        J.decode_jbig2(page)
+    assert _error_kind(e.value) == "unsupported"
 
 
 def test_standalone_file_organization():

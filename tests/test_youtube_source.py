@@ -9,8 +9,10 @@ import pytest
 from youtube_api_data_etl_automation_spark.pipeline import register_source, run_etl
 from youtube_api_data_etl_automation_spark.sources.youtube_api import (
     API_PAGE_SIZE,
+    CHANNELS_SCHEMA,
     FakeTransport,
     YouTubeReader,
+    lookup_channels,
 )
 
 
@@ -215,6 +217,56 @@ def test_etl_counts_candidates_after_distinct(spark, tmp_path):
     assert sink.count() == sink.select("videoId").distinct().count() == 120
 
 
+def _spark_channels(spark, channel_ids: list[str], **opts: str) -> list[tuple]:
+    """The channels table as a Spark read of the source returns it."""
+    register_source(spark)
+    reader = (spark.read.format("youtube_api").option("table", "channels")
+              .option("channel_ids", ",".join(channel_ids)))
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    return sorted(tuple(r) for r in reader.load().collect())
+
+
+def test_channel_stats_holds_the_looked_up_rows(spark, tmp_path):
+    """The driver-side lookup writes one dimension row per returned
+    channel, field for field what a Spark read of the channels table
+    gives; a channel listed twice is looked up, and written, twice."""
+    wh = str(tmp_path / "warehouse")
+    for ids in (["UC0", "UC1", "UC2"], ["UC0", "UC0"]):
+        c = run_etl(spark, ids, wh, seed=5)
+        dim = spark.read.parquet(f"{wh}/channel_stats")
+        assert dim.columns == CHANNELS_SCHEMA.names
+        got = sorted(tuple(r) for r in dim.collect())
+        assert c["channels"] == len(got) == len(ids)
+        assert got == _spark_channels(spark, ids, seed="5")
+    assert [r[0] for r in got] == ["UC0", "UC0"]
+
+
+def test_etl_with_no_channels(spark, tmp_path):
+    """No channels: nothing is fetched or loaded, and channel_stats is an
+    empty table with the channel schema's columns."""
+    wh = str(tmp_path / "warehouse")
+    c = run_etl(spark, [], wh)
+    assert c["channels"] == c["candidate_ids"] == c["loaded"] == 0
+    dim = spark.read.parquet(f"{wh}/channel_stats")
+    assert dim.columns == CHANNELS_SCHEMA.names
+    assert dim.count() == 0
+
+
+def test_etl_retries_the_driver_lookup(spark, tmp_path):
+    """With the flaky transport every call fails twice first, the channel
+    lookup on the driver included; its retries recover and the run loads
+    every video of every channel."""
+    flaky = {"transport": "flaky", "retry_base_ms": "1"}
+    assert (sorted(lookup_channels({"channel_ids": "UC0,UC1", **flaky}))
+            == _spark_channels(spark, ["UC0", "UC1"]))
+    wh = str(tmp_path / "warehouse")
+    c = run_etl(spark, ["UC0", "UC1"], wh, transport="flaky")
+    assert c["channels"] == 2
+    assert c["candidate_ids"] == c["new_videos"] == c["loaded"] == 240
+    assert spark.read.parquet(f"{wh}/video_stats").count() == 240
+
+
 def _etl_jobs(spark, group: str, *args) -> tuple[dict[str, int], int]:
     sc = spark.sparkContext
     sc.setJobGroup(group, "run_etl job-count pin")
@@ -230,14 +282,17 @@ def test_etl_job_count(spark, tmp_path):
     """Spark jobs per run_etl call, counted from its job group: a fresh
     warehouse, an incremental day (which also reads the sink's keys), and
     a replay that stops at the empty-delta gate after the staging write.
-    The candidate and delta counts are observed on that write, so neither
-    runs a job of its own."""
+    The channel lookup runs on the driver, so no job runs before the
+    staging write's plan reads the sink's schema. The candidate and delta
+    counts are observed on the staging write and the loaded count on the
+    append, which is one job plus its key broadcast (and the sink's schema
+    read); the dimension overwrite is one job over a local relation."""
     wh = str(tmp_path / "warehouse")
     first, first_jobs = _etl_jobs(spark, "etl_pin_first", ["UC0", "UC1"], wh)
     day, day_jobs = _etl_jobs(spark, "etl_pin_day", ["UC2"], wh)
     replay, replay_jobs = _etl_jobs(spark, "etl_pin_replay", ["UC2"], wh)
     assert (first["loaded"], day["loaded"], replay["loaded"]) == (240, 120, 0)
-    assert (first_jobs, day_jobs, replay_jobs) == (10, 13, 7)
+    assert (first_jobs, day_jobs, replay_jobs) == (5, 8, 5)
 
 
 def test_etl_grows_with_new_channel(spark, tmp_path):

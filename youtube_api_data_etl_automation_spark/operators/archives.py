@@ -867,11 +867,11 @@ def _odf_extract_text(raw: bytes) -> tuple[str, int, str]:
         # cumulatively, BEFORE any allocation
         nonlocal sp_total
         n = int(sm.group(1) or b"1")
+        if n > 65535:
+            raise ValueError(f"malformed odf: text:s run-length {n}")
         sp_total += n
-        if n > 65535 or sp_total > DECODE_BYTE_BUDGET:
-            raise ValueError(
-                f"malformed odf: text:s run-length {n} "
-                f"(cumulative {sp_total})")
+        check_budget("odf cumulative text:s run-lengths", sp_total,
+                     DECODE_BYTE_BUDGET, "byte")
         return b" " * n
 
     body = sp_re.sub(_spaces, body)

@@ -18,7 +18,7 @@ Spark-first restatement (SURVEY.md §2.3 J1, §2.2 P5, §7.1 item 5):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -66,9 +66,19 @@ def append_delta(delta: DataFrame, sink_path: str, key: str) -> int:
     failure this can be less than the incoming delta, and callers must report
     THIS count, not the pre-filter one.
 
-    The count comes from materializing the filtered delta (localCheckpoint)
-    before the write: counting after the append would re-run the anti-join
-    against the sink it just extended and see 0.
+    One write job: the count is an Observation on the append write itself
+    (as in ``versioned.commit_manifest``), so the delta's source, transform
+    and the anti-join run once, inside that job. The write never anti-joins
+    against its own output, for two reasons: the sink-key side is
+    ``F.broadcast``, so it is fully built before any write task starts, and
+    the file list of ``spark.read.parquet(sink_path)`` is fixed when that
+    DataFrame is created.
+
+    An append whose rows have all landed already still runs the write, and
+    Spark commits a schema-only part file for it (one file per zero-row
+    append; the same write creates the sink if it did not exist). Callers
+    that can know the delta is empty beforehand skip the call, as
+    ``run_etl``'s empty-delta gate does.
 
     Parquet-dir sink for the engine's own state; `jdbc.append_delta_jdbc`
     is the same protocol over a database sink.
@@ -77,11 +87,10 @@ def append_delta(delta: DataFrame, sink_path: str, key: str) -> int:
     if sink_exists(spark, sink_path):
         existing = spark.read.parquet(sink_path)
         delta = select_new(delta, existing, key)
-    delta = delta.localCheckpoint()
-    n = delta.count()
-    if n > 0:
-        delta.write.mode("append").parquet(sink_path)
-    return n
+    obs = Observation()
+    delta.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "append").parquet(sink_path)
+    return obs.get["n"]
 
 
 def overwrite_dim(dim: DataFrame, sink_path: str) -> None:

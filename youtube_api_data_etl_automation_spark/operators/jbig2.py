@@ -24,8 +24,10 @@ Refusals stay honest (mirror-bug policy, quarantined as
 'unsupported'): arithmetic-coded regions (``MMR=0`` — the MQ-coder's
 47-row tabulated Qe table is a separate recall surface), symbol
 dictionaries / text regions (arithmetic integer decoding), halftone /
-pattern / refinement segments, custom tables, and the
-unknown-data-length escape. Structural damage (truncated headers,
+pattern / refinement segments, custom tables, the
+unknown-data-length escape, and pages or regions over
+``JBIG2_PIXEL_BUDGET`` (refused through ``multimodal.check_budget``
+before anything allocates). Structural damage (truncated headers,
 regions outside the page, overrunning data lengths) raises
 ``ValueError`` → 'malformed'.
 
@@ -46,6 +48,8 @@ ladder (SURVEY §7) past pdf.py's r13 JBIG2 refusal rows.
 from __future__ import annotations
 
 import numpy as np
+
+from .multimodal import check_budget
 
 # T.88 §7.3 segment types
 _SEG_SYMBOL_DICT = 0
@@ -155,9 +159,7 @@ def _decode_generic_region(d: bytes) -> tuple[int, int, int, np.ndarray]:
         raise ValueError("malformed JBIG2: TPGDON set on an MMR region")
     if w <= 0 or h <= 0:
         raise ValueError(f"malformed JBIG2: region size {w}x{h}")
-    if w * h > JBIG2_PIXEL_BUDGET:
-        raise ValueError(
-            f"malformed JBIG2: region {w}x{h} exceeds the pixel budget")
+    check_budget(f"JBIG2 region {w}x{h}", w * h, JBIG2_PIXEL_BUDGET, "pixel")
     return x, y, comb, decode_g4(d[18:], w, h)
 
 
@@ -206,10 +208,8 @@ def decode_jbig2(data: bytes,
             d = s["data"]
             if len(d) >= 8:
                 decoded_px += _u32(d, 0) * _u32(d, 4)
-                if decoded_px > JBIG2_PIXEL_BUDGET:
-                    raise ValueError(
-                        f"malformed JBIG2: cumulative region pixels "
-                        f"{decoded_px} exceed the budget")
+                check_budget("JBIG2 cumulative regions", decoded_px,
+                             JBIG2_PIXEL_BUDGET, "pixel")
             regions.append(_decode_generic_region(s["data"]))
         elif t in (_SEG_END_OF_PAGE, _SEG_END_OF_STRIPE,
                    _SEG_END_OF_FILE, _SEG_EXTENSION, _SEG_PROFILES):
@@ -235,10 +235,8 @@ def decode_jbig2(data: bytes,
     if page_h is None:
         page_h = max((y + bm.shape[0] for _, y, _, bm in regions),
                      default=0)
-    if page_w * max(page_h, 1) > JBIG2_PIXEL_BUDGET:
-        raise ValueError(
-            f"malformed JBIG2: page {page_w}x{page_h} exceeds the "
-            "pixel budget")
+    check_budget(f"JBIG2 page {page_w}x{page_h}", page_w * max(page_h, 1),
+                 JBIG2_PIXEL_BUDGET, "pixel")
     page = np.full((page_h, page_w), default_px, dtype=np.uint8)
     for x, y, comb, bm in regions:
         rh, rw = bm.shape

@@ -21,7 +21,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from .incremental import select_new
 
@@ -78,7 +79,12 @@ def append_delta_jdbc(delta: DataFrame, url: str, table: str, key: str,
     at :194, made retry-safe): anti-join the incoming delta against the
     CURRENT sink keys (key-only pushdown read), append only the new rows.
     Returns rows actually written (same contract as the parquet
-    ``append_delta``)."""
+    ``append_delta``), counted by an Observation on the append write, so
+    the delta is computed once, inside that write. The key side is
+    ``F.broadcast``: the key read finishes and its table is built before
+    any insert task starts, so the write never anti-joins against rows it
+    inserted itself. A delta whose rows have all landed still runs the
+    (empty) insert."""
     spark = delta.sparkSession
     if jdbc_table_exists(spark, url, table, driver):
         # .select(key) — the JDBC source pushes the projection down as a
@@ -86,18 +92,17 @@ def append_delta_jdbc(delta: DataFrame, url: str, table: str, key: str,
         # would hit dialect identifier-folding, e.g. Derby uppercasing).
         existing_keys = _read_table(spark, url, table, driver).select(key)
         delta = select_new(delta, existing_keys, key)
-    delta = delta.localCheckpoint()
-    n = delta.count()
-    if n > 0:
-        (
-            delta.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .option("driver", driver)
-            .mode("append")
-            .save()
-        )
-    return n
+    obs = Observation()
+    (
+        delta.observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.format("jdbc")
+        .option("url", url)
+        .option("dbtable", table)
+        .option("driver", driver)
+        .mode("append")
+        .save()
+    )
+    return obs.get["n"]
 
 
 def overwrite_dim_jdbc(dim: DataFrame, url: str, table: str,

@@ -6,16 +6,17 @@ Flow parity (SURVEY.md §3.1):
   P5 empty gate → E3 video extract → T transform block → L1 append →
   L2 dimension overwrite.
 
-Differences by design: every stage is a lazy DataFrame plan; the only eager
-points are (a) snapshotting the channel rows and collecting their
-*playlist* ids for source control — the reference's own driver-side step
-(P3, :149), bounded by channel count, whose length is also the channel
-count — (b) staging the delta *video* ids to parquet (the reference
-collects these to the driver, :160; at backfill scale that list is
-unbounded, so here it never leaves the executors), (c) the idempotent
-append and (d) the dimension overwrite. The candidate and delta counts are
-``observe()`` points on the staging write, not jobs of their own, and the
-empty-delta gate reads the delta count after that write.
+Differences by design: every stage is a lazy DataFrame plan except the
+channel lookup, which runs on the driver as the reference's own P3 step
+(:146-149): its rows are bounded by the channel count, and the one list
+gives the playlist ids, the channel count and the dimension rows. The
+eager points are (a) staging the delta *video* ids to parquet (the
+reference collects these to the driver, :160; at backfill scale that list
+is unbounded, so here it never leaves the executors), (b) the idempotent
+append and (c) the dimension overwrite. The candidate and delta counts are
+``observe()`` points on the staging write and the loaded count one on the
+append, not jobs of their own; the empty-delta gate reads the delta count
+after the staging write.
 State lives in partitioned Parquet, not JDBC; the append re-checks keys at
 write time so retries are idempotent (SURVEY.md §7.4 item 2).
 """
@@ -24,11 +25,13 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .operators.incremental import append_delta, overwrite_dim, select_new, sink_exists
-from .sources.youtube_api import YouTubeDataSource
+from .sources.youtube_api import CHANNELS_SCHEMA, YouTubeDataSource, lookup_channels
 from .transforms import enrich_videos
 
 
@@ -86,22 +89,21 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
     opts = {"transport": transport, "seed": str(seed)}
     counts: dict[str, int] = {}
 
-    # E1 — channel dimension (always rebuilt, :146/:198). localCheckpoint:
-    # the relation is consumed twice (the playlist-id collect and the L2
-    # dimension overwrite) and each ACTION would otherwise re-fetch from
-    # the API — double quota burn, and two fetches of a non-snapshot
-    # source can disagree, so the ids collected, the count reported, and
-    # the rows written could come from different snapshots (r6 review).
-    # One fetch, one snapshot; the count is the collect's length.
-    channels = _read(
-        spark, "channels", channel_ids=",".join(channel_ids), **opts
-    ).localCheckpoint()
+    # E1 — channel dimension (always rebuilt, :146/:198), looked up on the
+    # driver. One fetch gives the playlist ids, the count and the rows the
+    # L2 overwrite writes, so all three come from one API snapshot and no
+    # Spark job runs for them. The rows become a local relation through
+    # Arrow: a list of Python rows would be reserialized by a Python map
+    # and cost a Python worker task at write time.
+    rows = lookup_channels({"channel_ids": ",".join(channel_ids), **opts})
+    channels = pa.Table.from_pylist(
+        [dict(zip(CHANNELS_SCHEMA.names, row)) for row in rows],
+        schema=to_arrow_schema(CHANNELS_SCHEMA))
+    playlist_ids = channels.column("playlistId").to_pylist()
+    counts["channels"] = channels.num_rows
 
-    # E2 — playlist scan; playlist ids are source control (P3 — the one
-    # sanctioned driver-side collect). The scan packs playlists into at
-    # most one partition per task slot (see sources/youtube_api.py).
-    playlist_ids = [r.playlistId for r in channels.select("playlistId").collect()]
-    counts["channels"] = len(playlist_ids)
+    # E2 — playlist scan. The scan packs playlists into at most one
+    # partition per task slot (see sources/youtube_api.py).
     items = _read(spark, "playlist_items", playlist_ids=",".join(playlist_ids),
                   slots=str(spark.sparkContext.defaultParallelism), **opts)
     candidate_ids, candidates_obs = _observed(
@@ -138,11 +140,13 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
         videos_raw = _read(spark, "videos", video_ids_path=ids_dir, **opts)
         # T — the 11→19 column transform block (:171-190), one Project
         video_stats = enrich_videos(videos_raw)
-        # L1 — idempotent delta append (:194). 'loaded' is what the append
+        # L1 — idempotent delta append (:194), one write job that runs the
+        # video fetch and the transform. 'loaded' is what the append
         # ACTUALLY wrote: on a retry after partial failure the write-time
         # re-filter drops already-landed keys, so new_videos would overstate.
         counts["loaded"] = append_delta(video_stats, video_sink, "videoId")
 
     # L2 — dimension overwrite on BOTH branches (:196-198)
-    overwrite_dim(channels, os.path.join(warehouse, "channel_stats"))
+    overwrite_dim(spark.createDataFrame(channels, CHANNELS_SCHEMA),
+                  os.path.join(warehouse, "channel_stats"))
     return counts

@@ -34,6 +34,10 @@ Usage::
     spark.read.format("youtube_api").option("table", "videos")
          .option("transport", "fake").option("video_ids", "v1,v2").load()
 
+The ``channels`` table is small (one row per channel), so ``run_etl``
+runs it on the driver through :func:`lookup_channels`, the same reader
+code without a Spark read.
+
 Options: ``table`` (channels | playlist_items | videos), ``transport``,
 ``seed``; ``channel_ids``; ``playlist_ids`` and ``slots`` (the most
 playlist partitions to plan, normally the session's default parallelism);
@@ -616,6 +620,18 @@ class YouTubeReader(DataSourceReader):
                 st.get("favoriteCount"),
                 item["contentDetails"].get("duration"),
             )
+
+
+def lookup_channels(options: dict) -> list[tuple]:
+    """The ``channels`` table's rows, fetched in the calling process by the
+    reader's own S1 code: its 50-id partitions, transport stack (retries
+    included) and field mapping. ``pipeline.run_etl`` looks channels up on
+    the driver this way, the reference's own P3 step
+    (fetch_youtube_data.py:146-149): the rows are bounded by the channel
+    count, and one list serves the playlist ids, the channel count and the
+    dimension write, so all three come from one fetch."""
+    reader = YouTubeReader({**options, "table": "channels"})
+    return [row for part in reader.partitions() for row in reader.read(part)]
 
 
 class YouTubeDataSource(DataSource):
